@@ -35,7 +35,17 @@ import tables  # noqa: E402
 
 WORKLOADS = ("etl", "query_mix")
 QUERY_SF = 0.002   # query_mix table scale: lineitem has 12,000 rows
-CORES = 4
+# Two Spark task threads, and two JIT and two GC threads, on a 4-vCPU
+# host: with a task thread per vCPU, the JVM's own threads oversubscribe
+# the host, and any other load on it shows in every timing.
+CORES = 2
+# Only the C1 JIT compiler. Every query_mix pass loads about 450 newly
+# generated classes, and C2 spent 14-20 s of CPU per 10 s pass compiling
+# them, which kept the JVM near the host's four vCPUs: two busy-loop
+# processes beside a run then slowed it by 60%. With C1 only, JIT time
+# falls to about 2 s per pass, the same busy loops cost nothing
+# measurable, and the passes start out warm.
+JVM_FLAGS = ["-XX:TieredStopAtLevel=1", "-XX:CICompilerCount=2", "-XX:ParallelGCThreads=2"]
 JVM_HEAP = "3g"
 JVM_TIMEOUT_S = 165
 ADD_OPENS = [
@@ -122,21 +132,29 @@ def check_oracle(work, data, keys):
 
 def e2e_metrics(r, workload):
     """End-to-end metrics from the harness result."""
-    ops = r["ops"]
-    passes = sorted({o["pass"] for o in ops})
-    query = [o["s"] for o in ops if o["kind"] == "query"]
-    if workload == "etl":  # commits per second of full load
-        loads = [o for o in ops if o["name"] == "full_load"]
-        items, item_s = sum(o["items"] for o in loads), sum(o["s"] for o in loads)
-    else:  # keys per second
-        items, item_s = len(query), sum(query)
-    return {
-        "setup_s": statistics.median(r["setup_s"]),
-        "wall_s": statistics.median(sum(o["s"] for o in ops if o["pass"] == p) for p in passes),
-        "throughput": items / item_s,
+    by_pass = {}
+    for o in r["ops"]:
+        by_pass.setdefault(o["pass"], []).append(o)
+
+    def throughput(ops):
+        if workload == "etl":  # commits per second of full load
+            loads = [o for o in ops if o["name"] == "full_load"]
+            return sum(o["items"] for o in loads) / sum(o["s"] for o in loads)
+        keys = [o["s"] for o in ops if o["kind"] == "query"]
+        return len(keys) / sum(keys)  # keys per second
+
+    def geomean(ops):
         # the operations differ in cost by 10x, so a geometric mean
         # moves with all of them; their median jumps between neighbours
-        "query_geomean_s": math.exp(statistics.fmean(math.log(x) for x in query)),
+        return math.exp(statistics.fmean(math.log(o["s"]) for o in ops if o["kind"] == "query"))
+
+    # each time metric is the median over the run's passes
+    passes = list(by_pass.values())
+    return {
+        "setup_s": statistics.median(r["setup_s"]),
+        "wall_s": statistics.median(sum(o["s"] for o in ops) for ops in passes),
+        "throughput": statistics.median(throughput(ops) for ops in passes),
+        "query_geomean_s": statistics.median(geomean(ops) for ops in passes),
         "heap_live_mb": statistics.median(r["heap_mb"]),
     }
 
@@ -175,7 +193,7 @@ def main():
     result = os.path.join(work, "result.json")
     env = {**os.environ, "LC_ALL": "C.UTF-8", "LANG": "C.UTF-8", "TMPDIR": os.path.join(work, "tmp"),
            "SPARK_LOCAL_DIRS": os.path.join(work, "spark-local")}
-    cmd = (["java", f"-Xmx{JVM_HEAP}", "-Dfile.encoding=UTF-8", "-Dsun.jnu.encoding=UTF-8",
+    cmd = (["java", f"-Xmx{JVM_HEAP}"] + JVM_FLAGS + ["-Dfile.encoding=UTF-8", "-Dsun.jnu.encoding=UTF-8",
             f"-Djava.io.tmpdir={work}/tmp", f"-Dderby.system.home={work}",
             f"-Dderby.stream.error.file={work}/derby.log"]
            + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
@@ -219,7 +237,7 @@ def main():
               "metrics": {k: v["value"] for k, v in metrics.items()},
               "attempted": attempted, "failed": len(failures),
               "ops": [[o["pass"], o["name"], o["kind"], o["s"]] for o in r["ops"]],
-              "spans_file": r.get("spans_file")}
+              "spans_file": r.get("spans_file"), "pass_counters": r["pass_counters"]}
     with open(os.path.join(pb, "log.jsonl"), "a") as f:
         f.write(json.dumps(record) + "\n")
     # keep the result and spans; drop the run's table outputs and scratch

@@ -36,6 +36,7 @@ object Harness {
 
   private val ops = mutable.ArrayBuffer.empty[Op]
   private val heapMb = mutable.ArrayBuffer.empty[Double] // post-GC samples of timed passes
+  private val passCounters = mutable.ArrayBuffer.empty[Seq[Double]] // counters() deltas per timed pass
   private var timing = false
   private val failures = mutable.ArrayBuffer.empty[String]
   private val layers = mutable.LinkedHashMap.empty[String, Double]
@@ -50,7 +51,7 @@ object Harness {
     var spark: SparkSession = null
     // set-up is repeated and its median reported: the first session in
     // a JVM also pays class loading, the later ones do not
-    for (_ <- 0 until 3) {
+    for (_ <- 0 until 5) {
       if (spark != null) spark.stop()
       val t0 = System.nanoTime()
       spark = session(a("work"), a("cores").toInt)
@@ -72,9 +73,11 @@ object Harness {
     timing = true
     for (p <- 1 to passes) {
       val ps = System.nanoTime()
+      val c0 = counters()
       tracer.begin(p)
       w.timedPass(p)
       tracer.end()
+      passCounters += counters().zip(c0).map { case (b, a) => b - a }
       gc()
       System.err.println(f"[perfbench] pass $p: ${(System.nanoTime() - ps) / 1e9}%.1fs")
     }
@@ -86,6 +89,7 @@ object Harness {
       // the traced pass time; against the untraced runs' wall_s it
       // gives the tracing overhead
       layers("trace.wall_s") = median((1 to passes).map(i => ops.filter(_.pass == i).map(_.seconds).sum))
+      for ((name, i) <- counterNames.zipWithIndex) layers(name) = median(passCounters.map(_(i)).toSeq)
     }
     writeResult(a("result"), setups.toSeq, tracer)
     spark.stop()
@@ -148,6 +152,26 @@ object Harness {
       busy = now - last > 25
       last = now
     }
+  }
+
+  val counterNames: Seq[String] = Seq("jvm.cpu_s", "jvm.jit_s", "jvm.gc_s", "jvm.classes_loaded", "host.steal_s")
+
+  /** Running totals of: seconds of CPU used by this JVM, of JIT
+    * compilation and of GC; classes loaded (Spark's generated code
+    * among them); and seconds of CPU the hypervisor took from this
+    * machine's vCPUs (the `steal` column of /proc/stat, in 1/100 s; 0
+    * where there is none). The last moves wall time without being the
+    * program's cost, so it goes to the run log, not to the metrics. */
+  def counters(): Seq[Double] = {
+    val cpu = ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean].getProcessCpuTime / 1e9
+    val jit = ManagementFactory.getCompilationMXBean.getTotalCompilationTime / 1e3
+    val gcS = ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum / 1e3
+    val stat = Paths.get("/proc/stat")
+    val steal =
+      if (!Files.isReadable(stat)) 0.0
+      else Files.readAllLines(stat).get(0).trim.split("\\s+").lift(8).fold(0.0)(_.toDouble / 100)
+    Seq(cpu, jit, gcS, ManagementFactory.getClassLoadingMXBean.getTotalLoadedClassCount.toDouble, steal)
   }
 
   def check(ok: Boolean, what: => String): Unit = {
@@ -250,7 +274,7 @@ object Harness {
     "queries.execution_s", "queries.tasks", "queries.task_s", "queries.busy_ratio",
     "queries.tasks_per_job", "queries.shuffle_read_bytes", "queries.shuffle_write_bytes",
     "queries.spill_bytes", "plans.shared.builds", "plans.shared.build_s",
-    "trace.wall_s")
+    "trace.wall_s") ++ counterNames.filter(_.startsWith("jvm."))
 
   private def writeResult(path: String, setups: Seq[Double], tr: Tracer): Unit = {
     val spansFile = path.stripSuffix(".json") + ".spans.jsonl"
@@ -260,6 +284,7 @@ object Harness {
       "ops" -> ops.map(o => Json.obj("pass" -> o.pass, "name" -> o.name, "kind" -> o.kind,
         "s" -> o.seconds, "ok" -> o.ok, "items" -> o.items)),
       "heap_mb" -> heapMb,
+      "pass_counters" -> passCounters.map(c => counterNames.zip(c).toMap),
       "attempted" -> attempted,
       "failures" -> failures,
       "layers" -> (if (tr.enabled) layerNames.map(n => n -> layers.getOrElse(n, 0.0)).toMap
