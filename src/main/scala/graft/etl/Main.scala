@@ -1,7 +1,6 @@
 package graft.etl
 
 import java.nio.file.Paths
-import org.apache.spark.sql.SparkSession
 
 /** CLI entry point mirroring the reference's interface (main.rs:5,
   * analyzer.rs:32-62): a user of `git-log-to-sqlite <root> --database
@@ -66,14 +65,7 @@ object Main {
     // like the reference; with one, --max-depth caps the recursion
     if (recursive && !maxDepthSet) maxDepth = Int.MaxValue
 
-    val spark = SparkSession.builder()
-      .master(s"local[$threads]")
-      .appName("graft-git-etl")
-      .config("spark.sql.shuffle.partitions", threads)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(threads, "spark.app.name" -> "graft-git-etl")
 
     // analyzer.rs:53-54, 137-144 parity: explicit --config fails loudly
     // when missing; no --config picks up ./config.toml if present

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.LongType
   * or per-session via [[TopKPerGroup.ensureStrategy]]).
   *
   * WHY a custom operator — measured against what Spark actually
-  * plans (TopKProbe, 4.8M rows): since 3.5 the rank-filter form gets
+  * plans (a stage-level probe over 4.8M rows): since 3.5 the rank-filter form gets
   * `WindowGroupLimit(Partial)` below the exchange, so SHUFFLE VOLUME
   * is already pruned (both forms moved the identical 113,995 records
   * on the supplier grouping). What the built-in still pays is a FULL

@@ -125,13 +125,9 @@ object ClusterOps {
       .localCheckpoint(true)
     if (localFinishEdges > 0 && cur.count() <= localFinishEdges)
       return localFinish(cur)
-    // diagnostic: GRAFT_CC_VERBOSE=true logs per-round edge counts
-    val verbose = sys.env.get("GRAFT_CC_VERBOSE").contains("true")
-    if (verbose) println(s"[cc] round 0: ${cur.count()} edges (normalized)")
     var converged = isStarForest(cur)
     var it = 0
     while (!converged && it < maxIter) {
-      val tRound = System.nanoTime()
       // large-star: every node u connects its strictly-larger
       // neighbors to the minimum of its closed neighborhood. The
       // per-node minimum is a plain hash-agg (bounded state), joined
@@ -173,9 +169,6 @@ object ClusterOps {
       // each round contracts the set geometrically — re-check the cap
       // (count is free: `next` is checkpoint-materialized) before
       // paying another distributed round or even the star-test job
-      if (verbose)
-        println(f"[cc] round ${it + 1}: ${cur.count()} edges, " +
-          f"${(System.nanoTime() - tRound) / 1e9}%.2fs")
       if (localFinishEdges > 0 && cur.count() <= localFinishEdges)
         return localFinish(cur)
       converged = isStarForest(cur)

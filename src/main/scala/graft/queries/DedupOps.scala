@@ -9,9 +9,12 @@ import org.apache.spark.sql.functions._
   * - [[HashFamily.Md5]] (default): engine-portable — the DuckDB oracle
   *   reproduces every signature bit-for-bit. The correctness path.
   * - [[HashFamily.Xxh64]]: one 64-bit xxhash64 call where md5 needs a
-  *   digest + hex decode — measured ~3.5× cheaper hashing (HashBench:
-  *   minhash cold 1.63s md5 vs 0.46s xxh64 at sf0.1), and the win
-  *   grows with corpus size since hashing is the only per-token term.
+  *   digest + hex decode — measured ~3.5× cheaper hashing (a hashing
+  *   micro-benchmark: minhash cold 1.63s md5 vs 0.46s xxh64 at sf0.1),
+  *   and the win grows with corpus size since hashing is the only
+  *   per-token term. A/B it end to end with
+  *   `SPARK_GRAFT_CONF=spark.graft.hashFamily=xxh64 runMain graft.Bench
+  *   q_minhash --reps 3`.
   *   Not DuckDB-reproducible, so not for oracle runs.
   *
   * Selected per-session via `spark.conf.set("spark.graft.hashFamily",

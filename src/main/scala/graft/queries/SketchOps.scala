@@ -256,8 +256,8 @@ object SketchOps {
     * minhash stance — DedupOps.signatures): one md5 yields TWO 60-bit
     * hex windows (chars 1-15 and 17-31), so lanes 2j/2j+1 share the
     * seeded digest `"j:gram"` and the per-gram hashing cost is
-    * depth/2 digests, not depth. Measured NEUTRAL at sf0.1 (TimeOne
-    * warm ~1.8-2.1s both ways — the pass is explode/agg-bound at this
+    * depth/2 digests, not depth. Measured NEUTRAL at sf0.1 (warm
+    * reps ~1.8-2.1s both ways — the pass is explode/agg-bound at this
     * gram length); kept because digest cost scales with gram bytes
     * while the agg does not, and the md5-count discipline matches the
     * minhash family's A/B-measured stance. Windows of one md5 are

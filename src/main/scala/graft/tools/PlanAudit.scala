@@ -183,13 +183,11 @@ object PlanAudit {
     */
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val cpus = if (args.length > 1) args(1) else "4"
+    val cpus = if (args.length > 1) args(1).toInt else 4
     val parts = if (args.length > 2) args(2) else "4"
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.local(cpus,
+      "spark.sql.shuffle.partitions" -> parts,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     spark.sparkContext.setLogLevel("ERROR")
     val audit = auditPlans(spark, sfDir)
     audit.cartesian.foreach(n => println(s"FLAG $n: CartesianProduct"))
