@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * would port 1:1.
   *
   * All inputs are the ETL output tables (read from `tablesDir` as
-  * written by [[GitEtl.run]]).
+  * written by [[GitEtl.write]]).
   */
 object GitAnalytics {
 

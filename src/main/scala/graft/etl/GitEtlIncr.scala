@@ -1,6 +1,6 @@
 package graft.etl
 
-import java.nio.file.{Path, Paths}
+import java.nio.file.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Sinks
@@ -14,28 +14,35 @@ import graft.sources.Sinks
   *
   * Mechanics: each run records every repo's HEAD in a `state`
   * snapshot table; the next run reads that frontier and extracts only
-  * `old-head..HEAD` per repo ([[GitLogSource.extractRepoSince]] — a
-  * repo whose head is unchanged launches NO `git log` at all).
+  * `old-head..HEAD` per repo ([[GitLogSource.extractRepo]] with
+  * `since` — a repo whose head is unchanged runs its validating
+  * `rev-parse` and remote-url lookup but NO `git log`). The extraction
+  * pipeline, repo dimension and report pass are [[GitEtl]]'s own.
   * Batches land through the snapshot-versioned manifest-log tables
   * ([[Sinks.writeSnapshot]] append mode), so:
   *
   *  - readers always see a complete committed version, never a
-  *    half-written batch (the manifest rename is the commit point);
+  *    half-written batch (the manifest link is the commit point);
   *  - every historical version stays readable (time travel) until a
   *    retention job prunes manifests;
   *  - a force-pushed / gc'd repo (mode "rewind") falls back to full
   *    extraction, and the append path's anti-join against the
   *    already-committed (repository_id, commit_hash) set keeps the
-  *    table exactly-once — re-covered, never doubled. The same
-  *    anti-join makes a crashed-and-rerun batch safe.
+  *    table exactly-once — re-covered, never doubled. Each table is
+  *    anti-joined against ITS OWN committed keys, so a rerun after a
+  *    crash between two table commits (logs committed, the rest not)
+  *    finishes the batch — IncrementalEtlSpec "crash after the logs
+  *    commit" checks the result equals a full rebuild.
   *
   * Scale shape: extraction cost is git-side O(new commits) per repo;
   * the Spark-side anti-join is O(batch + committed-index scan) — the
   * q_dedup_incr_idx contract (scan an index fraction of corpus bytes
   * per increment, never re-derive it). Repo ids are STABLE across
   * runs (previous ids preserved via the state table; new repos take
-  * ids after the previous maximum) — a full rebuild renumbers by
-  * (name, path) rank, an incremental deployment must not.
+  * ids after the largest id ever given) — a full rebuild renumbers by
+  * (name, path) rank, an incremental deployment must not. The state
+  * keeps a repo that is gone or fails validation, with its id and last
+  * head, so its id is never reused and its history never re-appended.
   *
   * Table layout under `dir` (all snapshot-versioned,
   * [[Sinks.readSnapshot]] to read):
@@ -44,7 +51,8 @@ import graft.sources.Sinks
   *   dir/changed_files   append per run
   *   dir/repositories    overwritten per run (current dimension)
   *   dir/state           overwritten per run (repo_id, name, path,
-  *                       url, head — the next run's frontier)
+  *                       url, head — the next run's frontier; every
+  *                       repo ever given an id)
   * }}}
   */
 object GitEtlIncr {
@@ -62,86 +70,50 @@ object GitEtlIncr {
       dir: String,
       config: EtlConfig = EtlConfig(),
       maxDepth: Int = 1): IncrReport = {
-    import spark.implicits._
+    def committed(t: String) = Sinks.snapshotVersions(s"$dir/$t").nonEmpty
 
-    val (candidates, _) =
-      GitLogSource.scanDirectories(root, maxDepth, config.ignoredRepositories)
-
-    val prevState: Option[DataFrame] =
-      if (Sinks.snapshotVersions(s"$dir/state").nonEmpty)
-        Some(Sinks.readSnapshot(spark, s"$dir/state"))
-      else None
+    val prevState =
+      if (committed("state")) Some(Sinks.readSnapshot(spark, s"$dir/state")) else None
     // the frontier is O(repos) — the same order as the driver-side
-    // work-list itself, so a collected map (broadcast inside the task
-    // closure) is the right transport
+    // work-list itself, so a collected map is the right transport
     val prevHeads: Map[String, String] = prevState
       .map(_.select("path", "head").collect()
         .flatMap(r => Option(r.getString(1)).map(r.getString(0) -> _)).toMap)
       .getOrElse(Map.empty)
 
-    val work = candidates.map(_.toString)
-    val events = spark.createDataset(work)
-      .repartition(math.max(1, work.size))
-      .mapPartitions(_.flatMap(p =>
-        GitLogSource.extractRepoSince(Paths.get(p), prevHeads.get(p))))
-      .toDF()
-      .persist()
+    val (events, _) = GitEtl.extract(spark, root, config, maxDepth, shardsPerRepo = 1, prevHeads)
+    val repoDim = GitEtl.repoDim(events, prevState)
+    val (logsAll, filesAll) = GitEtl.normalizedTables(events, repoDim, config.authorMap)
 
-    // --- repositories dimension with STABLE ids ---
-    val repoEvents = events.filter(col("kind") === "repo")
-      .select(col("repo_name").as("name"), col("repo_path").as("path"),
-        col("repo_url").as("url"), col("head"), col("mode"))
-    val (kept, fresh, maxPrevId) = prevState match {
-      case Some(st) =>
-        val ids = st.select(col("path").as("p_path"), col("repo_id").as("p_id"))
-        val joined = repoEvents
-          .join(broadcast(ids), col("path") === col("p_path"), "left")
-          .drop("p_path")
-        val mx = st.agg(max("repo_id")).collect()(0).getLong(0)
-        (joined.filter(col("p_id").isNotNull),
-          joined.filter(col("p_id").isNull), mx)
-      case None =>
-        (repoEvents.withColumn("p_id", lit(null).cast("long")).limit(0),
-          repoEvents.withColumn("p_id", lit(null).cast("long")), 0L)
+    // exactly-once append: each table drops the (repository_id,
+    // commit_hash) keys IT already committed — the rewind/replay guard,
+    // and what lets a rerun finish a batch a crash left half-committed
+    def append(df: DataFrame, t: String): Long = {
+      val batch =
+        if (!committed(t)) df
+        else df.join(Sinks.readSnapshot(spark, s"$dir/$t").select("repository_id", "commit_hash"),
+          Seq("repository_id", "commit_hash"), "left_anti")
+      Sinks.writeSnapshot(batch, s"$dir/$t", overwrite = false)
     }
-    // new repos rank AFTER the previous maximum — the global window
-    // runs over the new-repo slice only (bounded by the work-list,
-    // which is already driver-sized; same stance as GitEtl's repoDim)
-    val freshW = org.apache.spark.sql.expressions.Window.orderBy("name", "path")
-    val repoDim = kept.withColumn("repo_id", col("p_id"))
-      .unionByName(fresh.withColumn("repo_id",
-        lit(maxPrevId) + dense_rank().over(freshW).cast("long")))
-      .select("repo_id", "name", "path", "url", "head", "mode")
-
-    // --- batch normalization + exactly-once append ---
-    val (logsAll, filesAll) =
-      GitEtl.normalizedTables(events, repoDim, config.authorMap)
-    val known: Option[DataFrame] =
-      if (Sinks.snapshotVersions(s"$dir/logs").nonEmpty)
-        Some(Sinks.readSnapshot(spark, s"$dir/logs")
-          .select("repository_id", "commit_hash"))
-      else None
-    def dedupe(df: DataFrame): DataFrame = known match {
-      // drops commits already committed: the rewind/replay guard
-      case Some(k) => df.join(k, Seq("repository_id", "commit_hash"), "left_anti")
-      case None    => df
-    }
-    val logsBatch = dedupe(logsAll)
-    val filesBatch = dedupe(filesAll)
-
-    val logsV = Sinks.writeSnapshot(logsBatch, s"$dir/logs", overwrite = false)
-    Sinks.writeSnapshot(filesBatch, s"$dir/changed_files", overwrite = false)
+    val logsV = append(logsAll, "logs")
+    val filesV = append(filesAll, "changed_files")
     Sinks.writeSnapshot(repoDim.select("repo_id", "name", "url"),
       s"$dir/repositories", overwrite = true)
-    Sinks.writeSnapshot(repoDim.select("repo_id", "name", "path", "url", "head"),
-      s"$dir/state", overwrite = true)
+    // state keeps every repo ever given an id: a repo that is gone or
+    // failed validation this run keeps its id and last head
+    val stateCols = Seq("repo_id", "name", "path", "url", "head").map(col)
+    val current = repoDim.select(stateCols: _*)
+    val state = prevState.fold(current)(st => current.unionByName(
+      st.join(repoDim.select("path"), Seq("path"), "left_anti").select(stateCols: _*)))
+    Sinks.writeSnapshot(state, s"$dir/state", overwrite = true)
 
-    val modes = repoEvents.select("path", "mode").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    val failed = events.filter(col("kind") === "error")
-      .select("repo_path", "error").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    val rep = IncrReport(logsV, modes, logsBatch.count(), filesBatch.count(), failed)
+    val groups = GitEtl.summarize(events)
+    def of(kind: String) = groups.filter(_.kind == kind)
+    val rep = IncrReport(logsV,
+      modes = of("repo").map(g => g.path -> g.mode).toMap,
+      batchLogs = Sinks.readSnapshotAdded(spark, s"$dir/logs", logsV).count(),
+      batchFiles = Sinks.readSnapshotAdded(spark, s"$dir/changed_files", filesV).count(),
+      failed = of("error").map(g => g.path -> g.error).toMap)
     events.unpersist()
     rep
   }

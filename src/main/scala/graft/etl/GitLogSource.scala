@@ -1,8 +1,10 @@
 package graft.etl
 
-import java.io.{BufferedInputStream, ByteArrayOutputStream, File, InputStream}
+import java.io.{BufferedInputStream, BufferedReader, BufferedWriter, ByteArrayOutputStream, File,
+  IOException, InputStream, InputStreamReader, OutputStream, OutputStreamWriter}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
+import java.util.concurrent.TimeUnit
 import scala.jdk.CollectionConverters._
 import scala.sys.process._
 import scala.util.Try
@@ -44,10 +46,9 @@ final case class ExtractEvent(
     repo_url: String,
     error: String,
     commit: CommitRow,
-    // incremental-extraction metadata, set on kind="repo" events of the
-    // since-snapshot path only (GitEtlIncr): the repo's HEAD at
-    // extraction time (the next run's frontier) and how this run
-    // extracted it — full | since | noop | rewind
+    // set on kind="repo" events: the repo's HEAD at extraction time
+    // (an incremental run's next frontier) and how this run extracted
+    // it — full | since | noop | rewind
     head: String = null,
     mode: String = null)
 
@@ -161,151 +162,92 @@ object GitLogSource {
     raw.replace("git@github.com:", "https://github.com/")
   }
 
-  /** The one git-log command both extraction paths share.
+  /** `git log` arguments shared by the plain and the sharded walk.
     *
     * `-z` NUL-separates commits and NUL-terminates every numstat path
     * (renames arrive as an empty path slot followed by two standalone
     * old/new path tokens — no " => " munging to disambiguate); `%x00`
     * makes every header field its own NUL token. core.quotePath=false
-    * keeps non-ASCII paths raw (with -z git never quotes, but the
-    * config also covers the `git config` subprocess family).
+    * (set by [[GitProcess]]) keeps non-ASCII paths raw.
     */
-  private def logCommand: Seq[String] = Seq(
-    "git", "-c", "diff.ignoreSubmodules=all", "-c", "core.quotePath=false", "log",
+  private val logArgs: Seq[String] = Seq(
     "-z", "--no-merges", "--date-order", "--numstat",
     "--find-renames=100%", "--find-copies=100%",
     "--pretty=format:%x01%H%x00%P%x00%an%x00%ae%x00%ct%x00%s")
 
-  /** Cheap repo validation for the report pass: confirms the path is a
-    * git repository with a resolvable HEAD without reading any history.
+  /** Cheap repo validation: confirms the path is a git repository with
+    * a resolvable HEAD without reading any history. Right(head hash) —
+    * the `rev-parse` that validates is also the one that reads the
+    * head — or Left(reason).
     */
-  def validateRepo(path: Path): Option[String] = {
+  def validateRepo(path: Path): Either[String, String] =
     // .git may be a directory or a file (worktree/submodule checkouts)
     if (!(Files.exists(path.resolve(".git")) || isBareRepo(path)))
-      Some(s"not a git repository: $path")
-    else {
-      val ok = Try(Process(Seq("git", "rev-parse", "--verify", "HEAD"), path.toFile).!!).isSuccess
-      if (ok) None else Some(s"cannot resolve HEAD in $path")
-    }
-  }
+      Left(s"not a git repository: $path")
+    else
+      Try(Process(Seq("git", "rev-parse", "--verify", "HEAD"), path.toFile).!!.trim).toOption
+        .filter(_.nonEmpty).toRight(s"cannot resolve HEAD in $path")
 
-  /** Stream one repository's commits WITHOUT materializing the whole
-    * history: the raw `git log -z` byte stream is consumed token by
-    * token through a lazy iterator, so executor memory per repo is
-    * O(one commit), not O(history) — the reference holds the entire
-    * repo in a Vec (repository.rs:114,185), which SURVEY.md §4 flags as
-    * its OOM risk at scale; this is the Spark-side fix.
-    *
-    * A nonzero git exit status becomes a LOUD exception at end of
-    * stream (raised from the consuming task) instead of silently
-    * truncating the repo's commits while the report lists it as
-    * analyzed.
-    */
-  def streamRepo(path: Path): Iterator[CommitRow] =
-    streamRepo(path, path.getFileName.toString, remoteUrl(path.toFile))
+  /** Is `old` an ancestor of `head`? False on a force-pushed/rewritten
+    * history AND on an unknown object (gc'd old head). */
+  private def isAncestor(path: Path, old: String, head: String): Boolean =
+    Try(Process(Seq("git", "merge-base", "--is-ancestor", old, head),
+      path.toFile).!(ProcessLogger(_ => (), _ => ()))).toOption.contains(0)
 
   /** Validate + extract one repository as a lazy event stream — the
     * whole per-repo subprocess budget (rev-parse validation, remote-url
     * lookup, git log) runs HERE, inside the executor task, so the
     * driver's prep per repo is O(1) (a directory listing entry) even on
-    * a 100k-repo work-list.
+    * a 100k-repo work-list. Executor memory per repo is O(one commit):
+    * the `git log -z` byte stream is parsed token by token (the
+    * reference holds the whole history in a Vec, repository.rs:114,185
+    * — SURVEY.md §4's OOM risk).
+    *
+    * `since` is the head a previous run recorded (the incremental ETL,
+    * [[GitEtlIncr]]; the reference re-runs full history every time,
+    * analyzer.rs:301):
+    *
+    *  - None                              → mode "full": whole history;
+    *  - the current head                  → mode "noop": zero commits,
+    *    no `git log`;
+    *  - an ancestor of the current head   → mode "since": exactly
+    *    `old..head` — cost proportional to NEW commits;
+    *  - anything else (force push, gc'd)  → mode "rewind": whole history
+    *    again; the append's anti-join against the committed keys
+    *    re-covers the repo, never doubles it.
+    *
+    * `shards > 1` is the giant-repo straggler mitigation: shard `shard`
+    * extracts only the commits whose hash falls in its slice, so one
+    * huge history spreads over several tasks. Only shard 0 emits the
+    * "repo" / "error" event (one dimension row per repo); every shard
+    * validates (a rev-parse is cheap next to its slice).
+    *
+    * The "repo" event carries the head (the next run's frontier) and
+    * the mode taken.
     */
-  def extractRepo(path: Path): Iterator[ExtractEvent] = {
+  def extractRepo(path: Path, since: Option[String] = None,
+                  shard: Int = 0, shards: Int = 1): Iterator[ExtractEvent] = {
     val name = path.getFileName.toString
+    def lead(ev: => ExtractEvent) = if (shard == 0) Iterator.single(ev) else Iterator.empty
     validateRepo(path) match {
-      case Some(err) =>
-        Iterator.single(ExtractEvent("error", name, path.toString, null, err, null))
-      case None =>
+      case Left(err) => lead(ExtractEvent("error", name, path.toString, null, err, null))
+      case Right(head) =>
         val url = remoteUrl(path.toFile)
-        Iterator.single(ExtractEvent("repo", name, path.toString, url, null, null)) ++
-          streamRepo(path, name, url).map(c =>
-            ExtractEvent("commit", name, path.toString, url, null, c))
+        val mode = since match {
+          case None                                     => "full"
+          case Some(old) if old == head                 => "noop"
+          case Some(old) if isAncestor(path, old, head) => "since"
+          case Some(_)                                  => "rewind"
+        }
+        val rev = if (mode == "since") s"${since.get}..$head" else head
+        def commits =
+          if (mode == "noop") Iterator.empty
+          else if (shards <= 1) streamLog(path, name, url, rev)
+          else streamShard(path, name, url, rev, shard, shards)
+        lead(ExtractEvent("repo", name, path.toString, url, null, null, head, mode)) ++
+          commits.map(c => ExtractEvent("commit", name, path.toString, url, null, c))
     }
   }
-
-  /** The repo's current HEAD hash, or None when unresolvable. */
-  def headHash(path: Path): Option[String] =
-    Try(Process(Seq("git", "rev-parse", "--verify", "HEAD"), path.toFile).!!.trim)
-      .toOption.filter(_.nonEmpty)
-
-  /** Is `old` an ancestor of HEAD? False on a force-pushed/rewritten
-    * history AND on an unknown object (gc'd old head) — both fall back
-    * to full extraction in [[extractRepoSince]]. */
-  private def isAncestor(path: Path, old: String): Boolean =
-    Try(Process(Seq("git", "merge-base", "--is-ancestor", old, "HEAD"),
-      path.toFile).!(ProcessLogger(_ => (), _ => ()))).toOption.contains(0)
-
-  /** Incremental variant of [[extractRepo]] — the since-snapshot ETL's
-    * per-repo extraction (the reference re-runs full history every
-    * time, analyzer.rs:301; a real deployment re-extracts daily and
-    * must touch only new commits). Given the repo's head recorded by
-    * the PREVIOUS run:
-    *
-    *  - no previous head (new repo)          → mode "full": whole history;
-    *  - previous head == current HEAD        → mode "noop": zero commits,
-    *    no `git log` subprocess at all;
-    *  - previous head is an ancestor of HEAD → mode "since": exactly
-    *    `git log old..HEAD` — cost proportional to NEW commits;
-    *  - previous head missing / not an ancestor (force push, gc)
-    *                                         → mode "rewind": full
-    *    history again — the append path's anti-join against the
-    *    already-committed (repository_id, commit_hash) set deduplicates
-    *    (GitEtlIncr), so a rewound repo is re-covered, never doubled.
-    *
-    * The kind="repo" event carries the CURRENT head (the next run's
-    * frontier) and the mode taken.
-    */
-  def extractRepoSince(path: Path, prevHead: Option[String]): Iterator[ExtractEvent] = {
-    val name = path.getFileName.toString
-    validateRepo(path) match {
-      case Some(err) =>
-        Iterator.single(ExtractEvent("error", name, path.toString, null, err, null))
-      case None =>
-        val url = remoteUrl(path.toFile)
-        val head = headHash(path).orNull
-        val mode = prevHead match {
-          case None                               => "full"
-          case Some(old) if old == head           => "noop"
-          case Some(old) if isAncestor(path, old) => "since"
-          case Some(_)                            => "rewind"
-        }
-        val repoEv = Iterator.single(
-          ExtractEvent("repo", name, path.toString, url, null, null, head, mode))
-        val commits = mode match {
-          case "noop"  => Iterator.empty[CommitRow]
-          case "since" => streamRepo(path, name, url, Seq(s"${prevHead.get}..HEAD"))
-          case _       => streamRepo(path, name, url)
-        }
-        repoEv ++ commits.map(c =>
-          ExtractEvent("commit", name, path.toString, url, null, c))
-    }
-  }
-
-  /** Sharded variant of [[extractRepo]] — the giant-repo straggler
-    * mitigation: shard `sh` of `shards` extracts only the commits whose
-    * hash falls in its slice, so one huge history spreads over several
-    * tasks instead of serializing into one. The "repo" / "error"
-    * events are emitted by shard 0 only (one dimension row per repo);
-    * every shard still validates (a rev-parse is cheap next to its
-    * extraction slice).
-    */
-  def extractRepoShard(path: Path, sh: Int, shards: Int): Iterator[ExtractEvent] =
-    if (shards <= 1) extractRepo(path)
-    else {
-      val name = path.getFileName.toString
-      validateRepo(path) match {
-        case Some(err) =>
-          if (sh == 0) Iterator.single(ExtractEvent("error", name, path.toString, null, err, null))
-          else Iterator.empty
-        case None =>
-          val url = remoteUrl(path.toFile)
-          val head =
-            if (sh == 0) Iterator.single(ExtractEvent("repo", name, path.toString, url, null, null))
-            else Iterator.empty
-          head ++ streamRepoShard(path, name, url, sh, shards).map(c =>
-            ExtractEvent("commit", name, path.toString, url, null, c))
-      }
-    }
 
   /** A commit's shard: uniform from its leading hash bits — no global
     * index pass needed, every shard streams the (cheap, diff-free)
@@ -314,42 +256,79 @@ object GitLogSource {
   private[etl] def shardOf(hash: String, shards: Int): Int =
     (java.lang.Long.parseLong(hash.substring(0, 8), 16) % shards).toInt
 
+  /** One git subprocess in `dir`. Stderr is drained concurrently (a
+    * chatty git would otherwise block on a full pipe) into a bounded
+    * tail, so a failure names its cause, not just its exit code.
+    */
+  private final class GitProcess(dir: Path, sub: String, args: Seq[String]) {
+    private val proc = new java.lang.ProcessBuilder(
+      (Seq("git", "-c", "diff.ignoreSubmodules=all", "-c", "core.quotePath=false", sub) ++
+        args): _*).directory(dir.toFile).start()
+    private val tail = new StringBuilder
+    private val drainer = new Thread(() => {
+      val r = new BufferedReader(new InputStreamReader(proc.getErrorStream, UTF_8))
+      try {
+        var line = r.readLine()
+        while (line != null) {
+          tail.synchronized { if (tail.length < 4096) tail.append(line).append('\n') }
+          line = r.readLine()
+        }
+      } catch { case _: IOException => () } // stream closed by a kill
+    }, s"git-$sub-stderr-${dir.getFileName}")
+    drainer.setDaemon(true)
+    drainer.start()
+
+    def stdout: InputStream = proc.getInputStream
+    def stdin: OutputStream = proc.getOutputStream
+
+    /** Waits for the exit — at most `waitS` seconds when positive, then
+      * kills — and throws on a nonzero status. */
+    def check(waitS: Long = 0L): Unit = {
+      val code =
+        if (waitS <= 0) proc.waitFor()
+        else if (proc.waitFor(waitS, TimeUnit.SECONDS)) proc.exitValue()
+        else { proc.destroyForcibly(); -1 }
+      if (code != 0) {
+        drainer.join(1000)
+        throw new RuntimeException(
+          s"git $sub exited with $code in $dir: ${tail.synchronized(tail.toString).trim}")
+      }
+    }
+  }
+
+  /** `git log` over `rev`. A nonzero exit becomes a LOUD exception at
+    * end of stream (raised from the consuming task) instead of silently
+    * truncating the repo's commits while the report lists it as analyzed.
+    */
+  private def streamLog(path: Path, name: String, url: String, rev: String): Iterator[CommitRow] = {
+    val log = new GitProcess(path, "log", logArgs ++ Seq(rev, "--"))
+    log.stdin.close()
+    parseTokens(nulTokens(new BufferedInputStream(log.stdout), onEof = () => log.check()),
+      name, path.toString, url)
+  }
+
   /** Pipe `git rev-list` (metadata-only walk) through a shard filter
     * into `git log --stdin --no-walk=unsorted`, which diffs ONLY the
     * fed commits — output bytes are the same -z grammar parseTokens
     * already handles (verified against git 2.x).
     */
-  private def streamRepoShard(
-      path: Path, name: String, url: String, sh: Int, shards: Int): Iterator[CommitRow] = {
-    val revPb = new java.lang.ProcessBuilder("git", "rev-list", "--no-merges", "HEAD")
-    revPb.directory(path.toFile)
-    revPb.redirectError(java.lang.ProcessBuilder.Redirect.DISCARD)
-    val revProc = revPb.start()
-    revProc.getOutputStream.close()
-    val revIn = new java.io.BufferedReader(
-      new java.io.InputStreamReader(revProc.getInputStream, UTF_8))
+  private def streamShard(path: Path, name: String, url: String, rev: String,
+                          shard: Int, shards: Int): Iterator[CommitRow] = {
+    val revList = new GitProcess(path, "rev-list", Seq("--no-merges", rev, "--"))
+    revList.stdin.close()
+    val revIn = new BufferedReader(new InputStreamReader(revList.stdout, UTF_8))
+    def owned(h: String) = h.length >= 8 && shardOf(h, shards) == shard
 
     // Find the first owned hash BEFORE starting git log: `git log
     // --stdin` with empty stdin falls back to HEAD (verified), so an
     // empty shard must never launch the log process at all — it would
     // re-emit the entire history.
-    var first: String = null
-    var line = revIn.readLine()
-    while (first == null && line != null) {
-      if (line.length >= 8 && shardOf(line, shards) == sh) first = line
-      else line = revIn.readLine()
-    }
-    if (first == null) {
-      val rc = revProc.waitFor()
-      if (rc != 0) throw new RuntimeException(s"git rev-list exited with $rc in $path")
-      Iterator.empty
-    } else {
-      val logPb = new java.lang.ProcessBuilder(
-        (logCommand.filterNot(_ == "--date-order") ++ Seq("--no-walk=unsorted", "--stdin")): _*)
-      logPb.directory(path.toFile)
-      logPb.redirectError(java.lang.ProcessBuilder.Redirect.DISCARD)
-      val logProc = logPb.start()
-
+    var first = revIn.readLine()
+    while (first != null && !owned(first)) first = revIn.readLine()
+    if (first == null) { revList.check(); Iterator.empty }
+    else {
+      val log = new GitProcess(path, "log",
+        logArgs.filterNot(_ == "--date-order") ++ Seq("--no-walk=unsorted", "--stdin"))
       // feeder: stream rev-list -> shard filter -> log stdin; a thread
       // so both pipes flow without buffering the history anywhere. If
       // git log dies mid-stream the writes hit EPIPE — swallow it (the
@@ -357,71 +336,31 @@ object GitLogSource {
       // feeding.
       val firstHash = first
       val feeder = new Thread(() => {
-        val out = new java.io.BufferedWriter(
-          new java.io.OutputStreamWriter(logProc.getOutputStream, UTF_8))
+        val out = new BufferedWriter(new OutputStreamWriter(log.stdin, UTF_8))
         try {
-          out.write(firstHash); out.write('\n')
-          var l = revIn.readLine()
-          while (l != null) {
-            if (l.length >= 8 && shardOf(l, shards) == sh) {
-              out.write(l); out.write('\n')
-            }
-            l = revIn.readLine()
+          var h = firstHash
+          while (h != null) {
+            if (owned(h)) { out.write(h); out.write('\n') }
+            h = revIn.readLine()
           }
-        } catch { case _: java.io.IOException => () } // EPIPE: log died
+        } catch { case _: IOException => () } // EPIPE: log died
         finally Try(out.close())
-      }, s"git-shard-feeder-$name-$sh")
+      }, s"git-shard-feeder-$name-$shard")
       feeder.setDaemon(true)
       feeder.start()
 
-      val tokens = nulTokens(new BufferedInputStream(logProc.getInputStream), onEof = () => {
-        // log's stdout hit EOF, so logProc is exiting — but rev-list
-        // may be wedged writing to a pipe nobody drains anymore (the
-        // feeder dies on EPIPE when log aborts mid-stream). A plain
-        // waitFor() would hang the task forever; bound it and kill.
-        val lc = logProc.waitFor()
-        val rc =
-          if (revProc.waitFor(10, java.util.concurrent.TimeUnit.SECONDS)) revProc.exitValue()
-          else { revProc.destroyForcibly(); -1 }
-        if (rc != 0 || lc != 0)
-          throw new RuntimeException(
-            s"sharded git extraction failed in $path (rev-list=$rc, log=$lc)")
+      val tokens = nulTokens(new BufferedInputStream(log.stdout), onEof = () => {
+        // log's stdout hit EOF, so log is exiting — but rev-list may be
+        // wedged writing to a pipe nobody drains anymore (the feeder
+        // stops on EPIPE when log aborts mid-stream): a plain wait
+        // could hang the task forever, so bound it and kill. A log
+        // failure is the cause to report.
+        val logDone = Try(log.check())
+        val revDone = Try(revList.check(waitS = 10))
+        logDone.flatMap(_ => revDone).get
       })
       parseTokens(tokens, name, path.toString, url)
     }
-  }
-
-  private def streamRepo(path: Path, name: String, url: String,
-                         range: Seq[String] = Nil): Iterator[CommitRow] = {
-    // `range` appends a rev range (e.g. "old..HEAD") to the shared log
-    // command — empty means the default HEAD walk
-    val pb = new java.lang.ProcessBuilder((logCommand ++ range): _*)
-    pb.directory(path.toFile)
-    val proc = pb.start()
-    proc.getOutputStream.close()
-    // stderr must be drained concurrently or a chatty git blocks on a
-    // full pipe; keep a bounded tail for the failure message
-    val stderrTail = new StringBuilder
-    val drainer = new Thread(() => {
-      val r = new java.io.BufferedReader(
-        new java.io.InputStreamReader(proc.getErrorStream, UTF_8))
-      var line = r.readLine()
-      while (line != null) {
-        stderrTail.synchronized {
-          if (stderrTail.length < 4096) stderrTail.append(line).append('\n')
-        }
-        line = r.readLine()
-      }
-    }, s"git-stderr-$name")
-    drainer.setDaemon(true)
-    drainer.start()
-    val tokens = nulTokens(new BufferedInputStream(proc.getInputStream), onEof = () => {
-      val code = proc.waitFor()
-      if (code != 0)
-        throw new RuntimeException(
-          s"git log exited with $code in $path: ${stderrTail.synchronized(stderrTail.toString).trim}")
-    })
-    parseTokens(tokens, name, path.toString, url)
   }
 
   /** Lazy NUL-token reader over a raw byte stream. Tokens are UTF-8

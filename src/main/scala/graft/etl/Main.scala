@@ -21,8 +21,8 @@ object Main {
     if (args.isEmpty) {
       System.err.println(
         "usage: graft.etl.Main <root> --out <dir> [--config <toml>] " +
-          "[--max-depth N] [--recursive] [--shards N] [--num-threads N] " +
-          "[--incremental] [--clear]\n" +
+          "[--max-depth N] [--recursive] [--num-threads N] " +
+          "([--shards N] [--clear] | --incremental)\n" +
           "       (--database is accepted as an alias for --out, matching the reference CLI;\n" +
           "        --incremental appends only new commits since the last run's recorded\n" +
           "        heads to snapshot-versioned tables under --out)")
@@ -34,7 +34,7 @@ object Main {
     var maxDepth = 1
     var maxDepthSet = false
     var recursive = false
-    var shards = 1 // >1 spreads giant repos over several tasks
+    var shards: Option[Int] = None // >1 spreads giant repos over several tasks
     var threads = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
     var incremental = false
     var clear = false
@@ -54,12 +54,18 @@ object Main {
         case "--config"      => configPath = Some(value("--config")); i += 2
         case "--max-depth"   => maxDepth = value("--max-depth").toInt; maxDepthSet = true; i += 2
         case "--recursive"   => recursive = true; i += 1 // analyzer.rs:32-62 parity
-        case "--shards"      => shards = value("--shards").toInt; i += 2
+        case "--shards"      => shards = Some(value("--shards").toInt); i += 2
         case "--num-threads" => threads = value("--num-threads").toInt; i += 2
         case "--incremental" => incremental = true; i += 1 // since-snapshot mode
         case "--clear"       => clear = true; i += 1 // parquet overwrite is implicit
         case other => System.err.println(s"unknown arg: $other"); sys.exit(2)
       }
+    }
+    // the incremental run extracts each repo in one task and appends
+    // to versioned tables: neither flag has a meaning there
+    if (incremental && (shards.nonEmpty || clear)) {
+      System.err.println("--incremental takes neither --shards nor --clear")
+      sys.exit(2)
     }
     // --recursive without an explicit --max-depth means "no bound",
     // like the reference; with one, --max-depth caps the recursion
@@ -88,7 +94,7 @@ object Main {
       return
     }
 
-    val tables = GitEtl.dataframes(spark, root, config, maxDepth, shards)
+    val tables = GitEtl.dataframes(spark, root, config, maxDepth, shards.getOrElse(1))
     // Live progress during the long pole (the reference's per-repo
     // bars, analyzer.rs:282): one Spark task = one (repo, shard), so
     // the extraction job's task-end stream IS per-repo completion.

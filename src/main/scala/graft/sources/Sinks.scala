@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.nio.file.{FileAlreadyExistsException, Files, Paths}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -225,16 +226,17 @@ object Sinks {
   //
   // The structural core of Delta's _delta_log (see the Delta note in
   // the object scaladoc), built from the two primitives every
-  // filesystem gives us: immutable data files + an atomic manifest
-  // rename. Layout:
+  // filesystem gives us: immutable data files + an atomic,
+  // no-replace manifest link. Layout:
   //
   //   <dir>/data/v<N>/part-*.parquet   immutable, never rewritten
   //   <dir>/_manifests/v<N>.manifest   newline list of the version's
   //                                    data files (absolute paths)
   //
   // A write stages its parquet under data/v<N>/ first, then COMMITS
-  // by moving the manifest into _manifests/ with ATOMIC_MOVE: readers
-  // resolve versions from the manifest directory only, so a crashed
+  // by hard-linking the manifest into _manifests/ (atomic, and it
+  // fails rather than replace a committed version): readers resolve
+  // versions from the manifest directory only, so a crashed
   // or in-flight write (data files without a manifest) is invisible —
   // snapshot isolation for a single writer, and readers never see a
   // torn version. "append" manifests carry the previous version's
@@ -246,14 +248,14 @@ object Sinks {
   // read one small file, then open only the named data files — no
   // eventually-consistent directory listing of the data itself.
 
-  private def manifestDir(dir: String) = java.nio.file.Paths.get(dir, "_manifests")
+  private def manifestDir(dir: String) = Paths.get(dir, "_manifests")
 
   /** Committed versions, ascending (empty if the table doesn't exist). */
   def snapshotVersions(dir: String): Seq[Long] = {
     val md = manifestDir(dir)
-    if (!java.nio.file.Files.isDirectory(md)) Seq.empty
+    if (!Files.isDirectory(md)) Seq.empty
     else {
-      val s = java.nio.file.Files.list(md)
+      val s = Files.list(md)
       try s.iterator().asScala
         .map(_.getFileName.toString)
         .filter(n => n.startsWith("v") && n.endsWith(".manifest"))
@@ -263,33 +265,53 @@ object Sinks {
     }
   }
 
-  /** Write `df` as the next version of the snapshot table at `dir`;
-    * returns the committed version. `overwrite = false` appends: the
-    * new manifest names the previous version's files too.
+  private def manifest(dir: String, v: Long) = manifestDir(dir).resolve(s"v$v.manifest")
+
+  private def manifestFiles(dir: String, v: Long): Seq[String] =
+    Files.readAllLines(manifest(dir, v)).asScala.toSeq.filter(_.nonEmpty)
+
+  /** The one stage-and-commit step of both snapshot writers: stage
+    * `df` under data/v<v> (restaging whatever an uncommitted earlier
+    * attempt left there), then commit manifest v<v>, naming
+    * `carryFrom`'s files plus the new ones. The commit point is a hard
+    * link of the fully written manifest into place — atomic, and
+    * unlike a rename (which on POSIX silently replaces its target) it
+    * FAILS when v<v> exists, so a committed version is never replaced.
+    * Returns false when v<v> was already committed.
     */
-  def writeSnapshot(df: DataFrame, dir: String,
-                    overwrite: Boolean = true): Long = {
-    val versions = snapshotVersions(dir)
-    val next = versions.lastOption.getOrElse(0L) + 1L
-    val dataDir = java.nio.file.Paths.get(dir, "data", s"v$next")
-    df.write.mode(SaveMode.ErrorIfExists).parquet(dataDir.toString)
+  private def stageAndCommit(df: DataFrame, dir: String, v: Long, carryFrom: Option[Long]): Boolean = {
+    val dataDir = Paths.get(dir, "data", s"v$v")
+    df.write.mode(SaveMode.Overwrite).parquet(dataDir.toString)
     val newFiles = {
-      val s = java.nio.file.Files.list(dataDir)
+      val s = Files.list(dataDir)
       try s.iterator().asScala
         .map(_.toAbsolutePath.toString)
         .filter(_.endsWith(".parquet"))
         .toSeq.sorted
       finally s.close()
     }
-    val carried =
-      if (overwrite || versions.isEmpty) Seq.empty
-      else java.nio.file.Files.readAllLines(
-        manifestDir(dir).resolve(s"v${versions.last}.manifest")).asScala.toSeq
-    java.nio.file.Files.createDirectories(manifestDir(dir))
-    val tmp = manifestDir(dir).resolve(s".v$next.manifest.tmp")
-    java.nio.file.Files.writeString(tmp, (carried ++ newFiles).mkString("\n"))
-    java.nio.file.Files.move(tmp, manifestDir(dir).resolve(s"v$next.manifest"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE) // the commit point
+    val carried = carryFrom.map(manifestFiles(dir, _)).getOrElse(Seq.empty)
+    Files.createDirectories(manifestDir(dir))
+    val tmp = manifestDir(dir).resolve(s".v$v.${java.util.UUID.randomUUID}.tmp")
+    try {
+      Files.writeString(tmp, (carried ++ newFiles).mkString("\n"))
+      Files.createLink(manifest(dir, v), tmp) // the commit point
+      true
+    } catch { case _: FileAlreadyExistsException => false }
+    finally Files.deleteIfExists(tmp)
+  }
+
+  /** Write `df` as the next version of the snapshot table at `dir`;
+    * returns the committed version. `overwrite = false` appends: the
+    * new manifest names the previous version's files too. Throws if
+    * another writer committed that version first.
+    */
+  def writeSnapshot(df: DataFrame, dir: String,
+                    overwrite: Boolean = true): Long = {
+    val last = snapshotVersions(dir).lastOption
+    val next = last.getOrElse(0L) + 1L
+    if (!stageAndCommit(df, dir, next, if (overwrite) None else last))
+      throw new IllegalStateException(s"snapshot version $next at $dir was committed by another writer")
     next
   }
 
@@ -298,10 +320,8 @@ object Sinks {
     * at-least-once batch replay to EXACTLY-ONCE file output: the
     * snapshot version is pinned to `batchId + 1`, so a batch replayed
     * after a crash-restart finds its manifest already committed and
-    * becomes a no-op (returns false) instead of double-appending.
-    * A torn earlier attempt (data staged, no manifest) is restaged
-    * with overwrite and only becomes visible at the manifest rename —
-    * the same commit point as [[writeSnapshot]]. Batches append:
+    * becomes a no-op (returns false) instead of double-appending; so
+    * does a commit that loses a race for its version. Batches append:
     * version N's manifest carries version N−1's files.
     *
     * Wire-up: `ds.writeStream.foreachBatch((df, id) =>
@@ -311,32 +331,16 @@ object Sinks {
   def writeSnapshotBatch(df: DataFrame, dir: String, batchId: Long): Boolean = {
     val v = batchId + 1L
     val committed = snapshotVersions(dir)
-    if (committed.contains(v)) return false // replayed batch: no-op
-    val dataDir = java.nio.file.Paths.get(dir, "data", s"v$v")
-    df.write.mode(SaveMode.Overwrite).parquet(dataDir.toString)
-    val newFiles = {
-      val s = java.nio.file.Files.list(dataDir)
-      try s.iterator().asScala
-        .map(_.toAbsolutePath.toString)
-        .filter(_.endsWith(".parquet"))
-        .toSeq.sorted
-      finally s.close()
-    }
-    val carried =
-      if (!committed.contains(v - 1)) Seq.empty
-      else java.nio.file.Files.readAllLines(
-        manifestDir(dir).resolve(s"v${v - 1}.manifest")).asScala.toSeq
-    java.nio.file.Files.createDirectories(manifestDir(dir))
-    val tmp = manifestDir(dir).resolve(s".v$v.manifest.tmp")
-    java.nio.file.Files.writeString(tmp, (carried ++ newFiles).mkString("\n"))
-    try {
-      java.nio.file.Files.move(tmp, manifestDir(dir).resolve(s"v$v.manifest"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      true
-    } catch { // lost a commit race: the other writer's manifest stands
-      case _: java.nio.file.FileAlreadyExistsException =>
-        java.nio.file.Files.deleteIfExists(tmp); false
-    }
+    !committed.contains(v) && // replayed batch: no-op
+      stageAndCommit(df, dir, v, Some(v - 1).filter(committed.contains))
+  }
+
+  /** The rows version `v` itself wrote: its own data files, without
+    * the ones an append carried over from earlier versions.
+    */
+  def readSnapshotAdded(spark: SparkSession, dir: String, v: Long): DataFrame = {
+    val own = Paths.get(dir, "data", s"v$v").toAbsolutePath.toString + java.io.File.separator
+    spark.read.parquet(manifestFiles(dir, v).filter(_.startsWith(own)): _*)
   }
 
   /** Read a committed version (default: latest) — time travel is
@@ -351,9 +355,6 @@ object Sinks {
     val v = if (version < 0) versions.last else version
     require(versions.contains(v),
       s"version $v not committed at $dir (have ${versions.mkString(",")})")
-    val files = java.nio.file.Files.readAllLines(
-      manifestDir(dir).resolve(s"v$v.manifest")).asScala.toSeq
-      .filter(_.nonEmpty)
-    spark.read.parquet(files: _*)
+    spark.read.parquet(manifestFiles(dir, v): _*)
   }
 }

@@ -109,6 +109,64 @@ class GitEtlSpec extends AnyFunSuite {
     assert(report.failed.keySet.map(p => java.nio.file.Paths.get(p).getFileName.toString) == Set("data"))
   }
 
+  test("report: every field equals the tables' own value, in at most 3 jobs") {
+    import org.apache.spark.sql.functions.{coalesce, col, count, lit}
+    val t = GitEtl.dataframes(spark, root, config, maxDepth = 1)
+    t("events").foreach(_ => ()) // extraction runs before the report, as in Main
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val rep = try GitEtl.report(t) finally {
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get <= 3, s"report ran ${jobs.get} jobs")
+    assert(rep.analyzed ==
+      t("repositories").select("name").collect().map(_.getString(0)).toSeq.sorted)
+    assert(rep.ignored == t("ignored").collect().map(_.getString(0)).toSeq)
+    assert(rep.failed ==
+      t("failures").collect().map(r => r.getString(0) -> r.getString(1)).toMap)
+    assert(rep.nLogs == t("logs").count())
+    assert(rep.nChangedFiles == t("changed_files").count())
+    val perRepo = t("logs").groupBy("repository_id").agg(count(lit(1)).as("n"))
+      .join(t("repositories"), col("repository_id") === col("repo_id"), "right")
+      .select(col("name"), coalesce(col("n"), lit(0L)), col("repo_id"))
+      .collect().sortBy(r => (r.getString(0), r.getLong(2)))
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq
+    assert(rep.commitsPerRepo == perRepo)
+    assert(perRepo == Seq("repo1" -> 7L, "repo2" -> 2L))
+    t("events").unpersist()
+  }
+
+  test("sharded extraction names git's stderr when rev-list fails") {
+    val r = Files.createTempDirectory("etl-corrupt")
+    val repo = Files.createDirectory(r.resolve("corrupt"))
+    git(repo, "init", "-q", "-b", "main")
+    git(repo, "config", "user.email", "c@x.io")
+    git(repo, "config", "user.name", "C")
+    Files.writeString(repo.resolve("a.txt"), "a\n")
+    git(repo, "add", ".")
+    commit(repo, "root", date = "2024-07-01T00:00:00Z")
+    val rootHash = git(repo, "rev-parse", "HEAD").trim
+    Files.writeString(repo.resolve("a.txt"), "b\n")
+    git(repo, "add", ".")
+    commit(repo, "tip", date = "2024-07-02T00:00:00Z")
+    // HEAD still resolves (validation passes) but the walk cannot read
+    // the root commit
+    Files.delete(repo.resolve(".git/objects").resolve(rootHash.take(2)).resolve(rootHash.drop(2)))
+    val err = intercept[RuntimeException] {
+      (0 until 2).foreach(sh => GitLogSource.extractRepo(repo, shard = sh, shards = 2).foreach(_ => ()))
+    }
+    assert(err.getMessage.contains("git rev-list exited with"), err.getMessage)
+    assert(err.getMessage.contains(rootHash), err.getMessage)
+  }
+
   test("repositories: deterministic ids, URL rewrite, no-remote sentinel") {
     val repos = tables("repositories").collect()
       .map(r => (r.getAs[Long]("repo_id"), r.getAs[String]("name"), r.getAs[String]("url")))
@@ -338,7 +396,7 @@ class GitEtlSpec extends AnyFunSuite {
     val (cands, _) = GitLogSource.scanDirectories(r, Int.MaxValue, Nil)
     val names = cands.map(_.getFileName.toString)
     assert(names.contains("wt"), s"worktree checkout not detected: $names")
-    assert(GitLogSource.validateRepo(group.resolve("wt")).isEmpty)
+    assert(GitLogSource.validateRepo(group.resolve("wt")).isRight)
     val evs = GitLogSource.extractRepo(group.resolve("wt")).toVector
     assert(evs.count(_.kind == "commit") == 1)
   }
@@ -367,12 +425,12 @@ class GitEtlSpec extends AnyFunSuite {
     assert(plain.size == 3000)
     val shards = 3
     val sharded = (0 until shards).flatMap(sh =>
-      GitLogSource.extractRepoShard(repo, sh, shards).filter(_.kind == "commit")
+      GitLogSource.extractRepo(repo, shard = sh, shards = shards).filter(_.kind == "commit")
         .map(_.commit.commit_hash)).toSet
     assert(sharded == plain, "sharded union must equal the full walk")
     // shard slices are disjoint by construction (hash-partitioned)
     val sizes = (0 until shards).map(sh =>
-      GitLogSource.extractRepoShard(repo, sh, shards).count(_.kind == "commit"))
+      GitLogSource.extractRepo(repo, shard = sh, shards = shards).count(_.kind == "commit"))
     assert(sizes.sum == 3000 && sizes.forall(_ > 0), sizes.toString)
   }
 

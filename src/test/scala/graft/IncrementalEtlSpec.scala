@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 import scala.sys.process._
-import graft.etl.{EtlConfig, GitEtl, GitEtlIncr, GitLogSource}
+import graft.etl.{EtlConfig, GitEtl, GitEtlIncr}
 import graft.sources.Sinks
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -152,7 +152,81 @@ class IncrementalEtlSpec extends AnyFunSuite {
       .map(r2 => r2.getAs[String]("name") -> r2.getAs[String]("head")).toMap
     assert(heads.keySet == Set("mrepo", "zrepo", "arepo"))
     heads.values.foreach(h => assert(h != null && h.length == 40))
-    assert(heads("mrepo") ==
-      GitLogSource.headHash(root.resolve("mrepo")).get)
+    assert(heads("mrepo") == git(root.resolve("mrepo"), "rev-parse", "HEAD").trim)
+  }
+
+  private def lastVersion(dir: String, t: String) = Sinks.snapshotVersions(s"$dir/$t").last
+
+  test("crash after the logs commit: the rerun finishes the batch, logs and changed_files equal a full rebuild") {
+    val root = Files.createTempDirectory("incr-crash")
+    val dir = Files.createTempDirectory("incr-crash-tables").toString
+    val repo1 = initRepo(root, "repo1")
+    addCommit(repo1, "a.txt", "one\n", "C1", "2024-04-01T00:00:00Z")
+    val repo2 = initRepo(root, "repo2")
+    addCommit(repo2, "r.txt", "r\n", "R1", "2024-04-02T00:00:00Z")
+    GitEtlIncr.run(spark, root, dir)
+    // 2 new commits touching 3 files
+    Files.writeString(repo1.resolve("c.txt"), "c\n")
+    addCommit(repo1, "d.txt", "d\n", "C2", "2024-04-03T00:00:00Z")
+    addCommit(repo1, "a.txt", "one\ntwo\n", "C3", "2024-04-04T00:00:00Z")
+    GitEtlIncr.run(spark, root, dir)
+    // what a crash right after the logs commit leaves: the other
+    // tables' data staged, their manifests never committed
+    for (t <- Seq("changed_files", "repositories", "state"))
+      Files.delete(java.nio.file.Paths.get(dir, t, "_manifests", s"v${lastVersion(dir, t)}.manifest"))
+    assert(Sinks.readSnapshot(spark, s"$dir/changed_files").count() == 2)
+
+    val r = GitEtlIncr.run(spark, root, dir)
+    assert(r.batchLogs == 0, "the logs batch was already committed")
+    assert(r.batchFiles == 3, s"the rerun must commit the 3 missing files, got ${r.batchFiles}")
+    val full = GitEtl.dataframes(spark, root, EtlConfig(), maxDepth = 1)
+    assert(logsKey(Sinks.readSnapshot(spark, s"$dir/logs")) == logsKey(full("logs")))
+    assert(filesKey(Sinks.readSnapshot(spark, s"$dir/changed_files")) ==
+      filesKey(full("changed_files")))
+    assert(Sinks.readSnapshot(spark, s"$dir/changed_files").count() == full("changed_files").count())
+    full("events").unpersist()
+  }
+
+  private def idsByName(dir: String) = Sinks.readSnapshot(spark, s"$dir/repositories").collect()
+    .map(r => r.getAs[String]("name") -> r.getAs[Long]("repo_id")).toMap
+
+  test("a deleted repo's id is never given to a new repo") {
+    val root = Files.createTempDirectory("incr-retire")
+    val dir = Files.createTempDirectory("incr-retire-tables").toString
+    addCommit(initRepo(root, "a"), "a.txt", "a\n", "A1", "2024-05-01T00:00:00Z")
+    addCommit(initRepo(root, "b"), "b.txt", "b\n", "B1", "2024-05-02T00:00:00Z")
+    GitEtlIncr.run(spark, root, dir)
+    assert(idsByName(dir) == Map("a" -> 1L, "b" -> 2L))
+    Process(Seq("rm", "-rf", root.resolve("b").toString)).!!
+    GitEtlIncr.run(spark, root, dir)
+    assert(idsByName(dir) == Map("a" -> 1L), "repositories is the current set")
+    addCommit(initRepo(root, "c"), "c.txt", "c\n", "C1", "2024-05-03T00:00:00Z")
+    GitEtlIncr.run(spark, root, dir)
+    assert(idsByName(dir) == Map("a" -> 1L, "c" -> 3L))
+    val byId = Sinks.readSnapshot(spark, s"$dir/logs").collect()
+      .groupBy(_.getAs[Long]("repository_id")).view
+      .mapValues(_.map(_.getAs[String]("message")).toSet).toMap
+    assert(byId == Map(1L -> Set("A1"), 2L -> Set("B1"), 3L -> Set("C1")), byId.toString)
+  }
+
+  test("a repo that fails validation once keeps its id and head") {
+    val root = Files.createTempDirectory("incr-flaky")
+    val dir = Files.createTempDirectory("incr-flaky-tables").toString
+    Seq("a", "b", "c").zipWithIndex.foreach { case (n, i) =>
+      addCommit(initRepo(root, n), s"$n.txt", s"$n\n", s"${n.toUpperCase}1", s"2024-06-0${i + 1}T00:00:00Z")
+    }
+    GitEtlIncr.run(spark, root, dir)
+    assert(idsByName(dir) == Map("a" -> 1L, "b" -> 2L, "c" -> 3L))
+    val gitDir = root.resolve("b").resolve(".git")
+    val away = root.resolve("b").resolve("git-away")
+    Files.move(gitDir, away)
+    val r2 = GitEtlIncr.run(spark, root, dir)
+    assert(r2.failed.keySet == Set(root.resolve("b").toString))
+    Files.move(away, gitDir)
+    val r3 = GitEtlIncr.run(spark, root, dir)
+    assert(r3.modes(root.resolve("b").toString) == "noop", r3.modes.toString)
+    assert(r3.batchLogs == 0, s"b's history must not be re-appended: ${r3.batchLogs}")
+    assert(idsByName(dir) == Map("a" -> 1L, "b" -> 2L, "c" -> 3L))
+    assert(Sinks.readSnapshot(spark, s"$dir/logs").count() == 3)
   }
 }

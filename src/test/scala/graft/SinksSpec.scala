@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import graft.sources.Sinks
 import graft.plans.SkewJoin
 import org.apache.spark.sql.functions._
@@ -216,5 +217,37 @@ class SinksSpec extends AnyFunSuite {
     assert(Sinks.snapshotVersions(dir) == Seq(1L, 2L, 3L))
     assert(Sinks.readSnapshot(spark, dir).count() == 3)
     intercept[IllegalArgumentException](Sinks.readSnapshot(spark, dir, 99L))
+  }
+
+  test("snapshot commit never replaces a committed manifest (lost race raises / returns false)") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("snap-race").toString + "/tbl"
+    Sinks.writeSnapshot(Seq(1L, 2L).toDF("id"), dir)
+    // a rival writer commits version `v` while this writer is staging
+    // it: the rival's manifest appears during the staging job itself
+    def rivalCommits(v: Long) = {
+      val target = s"$dir/_manifests/v$v.manifest"
+      udf { (id: Long) =>
+        scala.util.Try(Files.write(java.nio.file.Paths.get(target), "rival-file.parquet".getBytes,
+          java.nio.file.StandardOpenOption.CREATE_NEW))
+        id
+      }.asNondeterministic()
+    }
+    def bytes(v: Long) = Files.readAllBytes(java.nio.file.Paths.get(dir, "_manifests", s"v$v.manifest")).toSeq
+
+    intercept[IllegalStateException] {
+      Sinks.writeSnapshot(Seq(3L).toDF("id").select(rivalCommits(2)($"id").as("id")), dir)
+    }
+    assert(bytes(2) == "rival-file.parquet".getBytes.toSeq, "version 2 was replaced")
+
+    assert(!Sinks.writeSnapshotBatch(
+      Seq(4L).toDF("id").select(rivalCommits(3)($"id").as("id")), dir, batchId = 2L))
+    assert(bytes(3) == "rival-file.parquet".getBytes.toSeq, "version 3 was replaced")
+    assert(Sinks.snapshotVersions(dir) == Seq(1L, 2L, 3L))
+    // the losing attempts leave no temporary manifest behind
+    val left = Files.list(java.nio.file.Paths.get(dir, "_manifests"))
+    try assert(left.iterator().asScala.map(_.getFileName.toString).toSet ==
+      Set("v1.manifest", "v2.manifest", "v3.manifest"))
+    finally left.close()
   }
 }
