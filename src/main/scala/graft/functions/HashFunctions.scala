@@ -81,10 +81,12 @@ object Md5WindowU {
   * for the digest-reuse sites (signaturesMd5 materializes 4 md5 hex
   * columns and reads two 15-char windows from each; recomputing the
   * digest per window would double the md5 calls the reuse exists to
-  * halve). Precondition: input is lowercase-hex at least off+len−1
-  * chars (every call site feeds an md5() column); equality with
-  * `conv(substring(h, off, len), 16, 10) :: long` on such inputs is
-  * pinned by [[graft.HashKernelSpec]].
+  * halve). Registered as a session SQL function, so any SQL text can
+  * call it: hex digits parse in either case, and a string shorter
+  * than the window's last byte (off+len−1) yields NULL instead of a
+  * read past its end. Equality with
+  * `conv(substring(h, off, len), 16, 10) :: long` on hex input that
+  * covers the window is pinned by [[graft.HashKernelSpec]].
   */
 case class HexWindowU(child: Expression, off: Int, len: Int)
     extends UnaryExpression {
@@ -96,12 +98,16 @@ case class HexWindowU(child: Expression, off: Int, len: Int)
   override def prettyName: String = "hex_window_u"
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(input: Any): Any =
-    HexWindowU.window(input.asInstanceOf[UTF8String], off, len)
+  override protected def nullSafeEval(input: Any): Any = {
+    val s = input.asInstanceOf[UTF8String]
+    if (s.numBytes < off + len - 1) null else HexWindowU.window(s, off, len)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = graft.functions.HexWindowU.window($c, $off, $len);")
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""if ($c.numBytes() < ${off + len - 1}) { ${ev.isNull} = true; }
+         |else { ${ev.value} = graft.functions.HexWindowU.window($c, $off, $len); }"""
+        .stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -109,14 +115,14 @@ case class HexWindowU(child: Expression, off: Int, len: Int)
 
 object HexWindowU {
   /** Static kernel: parse hex chars [off, off+len−1] (1-based) of an
-    * ASCII lowercase-hex string as a long. */
+    * ASCII hex string of at least off+len−1 bytes as a long. */
   def window(s: UTF8String, off: Int, len: Int): Long = {
     var v = 0L
     var i = off - 1
     val end = i + len
     while (i < end) {
       val c = s.getByte(i)
-      v = (v << 4) | (if (c <= '9') c - '0' else c - 'a' + 10).toLong
+      v = (v << 4) | (if (c <= '9') c - '0' else (c | 0x20) - 'a' + 10).toLong
       i += 1
     }
     v

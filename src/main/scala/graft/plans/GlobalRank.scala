@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Exact global `row_number` without the single-partition WindowExec.
@@ -16,18 +15,16 @@ import org.apache.spark.sql.functions._
   *   1. `repartitionByRange` on the sort key — a sampled range
   *      exchange, every partition holds a contiguous, disjoint key
   *      range, partition id ascending with the key order;
-  *   2. a per-partition ordinal: the default (round-12 `monoid`)
-  *      impl sorts WITHIN partitions and stamps
+  *   2. a per-partition ordinal: sort WITHIN partitions and stamp
   *      `monotonically_increasing_id` (pid<<33 | local index — zero
-  *      further movement); the `window` impl instead pays a second
-  *      (pid-hash) exchange for a pid-partitioned `row_number`;
+  *      further movement);
   *   3. per-partition row counts rolled into cumulative offsets with a
   *      broadcast inequality self-join over the O(P) count table (no
   *      window at all, so the audit rule below has nothing to
   *      allowlist here), added to the local numbers.
   *
   * The range-partitioned table feeds both the count aggregate and the
-  * ranking window, and RangePartitioner boundaries are SAMPLED — two
+  * rank projection, and RangePartitioner boundaries are SAMPLED — two
   * independently planned instances of the exchange sample different
   * boundaries (ReuseExchange does not dedup across AQE query stages
   * here; observed at sf0.1: ranks off by ±4), which would make the
@@ -35,13 +32,12 @@ import org.apache.spark.sql.functions._
   * `localCheckpoint`'d — the repo's standing rule for twice-referenced
   * nondeterministic state (see retentionOf, q_dsir): ONE RDD instance
   * means ONE boundary set, and pid↔offset stay consistent by
-  * construction. Cost at scale: the range exchange, the checkpoint
-  * write (executor-local, parallel), and the window's hash-by-pid
-  * exchange (P keys over P reducers, per-task work O(n/P) per hashed
-  * group) plus the O(P) offset table; every stage is fully parallel,
-  * no task ever sees more than a partition. Rank values are a pure
-  * function of the data (partition placement only shifts work between
-  * the local row_number and the offset), so oracle parity is
+  * construction. Cost at scale: the range exchange, the local sort,
+  * the checkpoint write (executor-local, parallel) and the O(P)
+  * offset table; every stage is fully parallel, no task ever sees
+  * more than a partition. Rank values are a pure function of the data
+  * (partition placement only shifts work between the local index and
+  * the offset), so oracle parity is
   * unaffected: callers keep their existing `row_number()`-based DuckDB
   * SQL.
   *
@@ -56,65 +52,14 @@ object GlobalRank {
     * callers mirror DuckDB `NULLS FIRST` explicitly where it
     * matters, as with the previous window form).
     *
-    * AUDIT HOOK: the checkpoint goes through [[Ckpt.maybe]]
-    * (`spark.graft.checkpoint=false` disables it), because the eager
-    * localCheckpoint truncates lineage to a LogicalRDD — any plan
-    * inspection of a caller's query is then BLIND to everything
-    * upstream of the rank — and materializing it runs a real job at
-    * plan-construction time. PlanAudit disables checkpointing for its
-    * planning pass. EXECUTING with the flag off is incorrect by
-    * construction HERE specifically: the un-checkpointed range
-    * exchange is referenced twice (counts + ranking) and
-    * RangePartitioner samples boundaries per planned instance, so
-    * pid↔offset consistency is lost (the exact ±4-ranks bug this
-    * checkpoint fixes). Audit-only.
-    */
-  def globalRowNumber(df: DataFrame, rankCol: String, sortCols: Column*): DataFrame =
-    df.sparkSession.conf.get("spark.graft.globalRank.impl", "monoid") match {
-      case "window" => windowImpl(df, rankCol, sortCols: _*)
-      case _ => oneExchange(df, rankCol, sortCols: _*)
-    }
-
-  /** The round-11 implementation (conf
-    * `spark.graft.globalRank.impl=window`): range exchange, then a
-    * SECOND (pid-hash) exchange for the per-partition row_number
-    * window. Superseded as default by [[oneExchange]] in round 12 —
-    * A/B probe at 8× sf0.1 data: q_quantiles_exact 3.36→1.87 s
-    * (1.80×), q_rank_global parity (2.31 vs 2.22 s), everything else
-    * within the documented ±20% VM noise; at 100 TB the saved
-    * exchange is a full corpus pass. Kept selectable for A/B and as
-    * the fallback should an engine change ever break the
-    * mono-id-over-sort contract the spec pins.
-    */
-  private def windowImpl(df: DataFrame, rankCol: String, sortCols: Column*): DataFrame = {
-    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val ranged = df
-      .repartitionByRange(parts, sortCols: _*)
-      .withColumn("__grank_pid", spark_partition_id())
-      .transform(Ckpt.maybe)
-    val counts = ranged.groupBy(col("__grank_pid")).agg(count(lit(1)).as("__grank_c"))
-    val offsets = counts.as("a")
-      .join(broadcast(counts.as("b")),
-        col("b.__grank_pid") < col("a.__grank_pid"), "left")
-      .groupBy(col("a.__grank_pid").as("__grank_pid"))
-      .agg(coalesce(sum(col("b.__grank_c")), lit(0L)).as("__grank_off"))
-    ranged
-      .join(broadcast(offsets), "__grank_pid")
-      .withColumn(rankCol,
-        row_number().over(
-          Window.partitionBy(col("__grank_pid")).orderBy(sortCols: _*))
-          .cast("long") + col("__grank_off"))
-      .drop("__grank_pid", "__grank_off")
-  }
-
-  /** ONE-exchange variant (round 12, closing the round-11 deferred
-    * item): range exchange + LOCAL sort + `monotonically_increasing_id`
-    * instead of the second (pid-hash) exchange the window form pays.
-    * mono-id encodes (partition id << 33) | record index in the
-    * task's row order, which AFTER sortWithinPartitions IS the local
-    * sort rank — so decomposing the id recovers pid and local index
-    * without moving a byte, and the broadcast O(P) offset join turns
-    * them into the global rank.
+    * ONE exchange (round 12): mono-id encodes (partition id << 33) |
+    * record index in the task's row order, which AFTER
+    * sortWithinPartitions IS the local sort rank — so decomposing the
+    * id recovers pid and local index without moving a byte, and the
+    * broadcast O(P) offset join turns them into the global rank (the
+    * round-11 form paid a second, pid-hash exchange for a
+    * pid-partitioned `row_number`; A/B at 8× sf0.1 data:
+    * q_quantiles_exact 3.36→1.87 s).
     *
     * The named risk — the optimizer reordering the nondeterministic
     * id projection BELOW the sort, which would stamp pre-sort row
@@ -124,8 +69,16 @@ object GlobalRank {
     * where any reorder breaks rank values. The checkpoint then
     * freezes the ids (mono-id is nondeterministic across
     * recomputation; the twice-referenced rule applies doubly).
+    *
+    * AUDIT HOOK: the checkpoint goes through [[Ckpt.maybe]], because
+    * the eager localCheckpoint truncates lineage to a LogicalRDD —
+    * any plan inspection of a caller's query is then BLIND to
+    * everything upstream of the rank. Under
+    * `spark.graft.ckptCapture=true` the pre-checkpoint segment (the
+    * caller's upstream plus the range exchange and sort) is queued
+    * for [[Ckpt.drainCaptured]], which is what PlanAudit scans.
     */
-  private def oneExchange(df: DataFrame, rankCol: String, sortCols: Column*): DataFrame = {
+  def globalRowNumber(df: DataFrame, rankCol: String, sortCols: Column*): DataFrame = {
     val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val mask = (1L << 33) - 1
     val ranged = df

@@ -356,11 +356,12 @@ object GraphOps {
     val e0 = csPairs(s, d)
     val sym = e0.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(e0.select(col("b").as("src"), col("a").as("dst")))
-    // FORCED co-partitioned mode pins hashpartitioning(src) BEFORE the
-    // checkpoint so every level's frontier join finds the edge side
-    // already exchanged (localCheckpoint preserves partitioning)
-    val edgesD0 = (if (forced.contains(true)) sym.repartition(col("src")) else sym)
-      .transform(graft.plans.Ckpt.maybe)
+    // FORCED co-partitioned mode lays the edges out on src AT the
+    // checkpoint, so every level's frontier join finds the edge side
+    // already exchanged
+    val edgesD0 =
+      if (forced.contains(true)) graft.plans.Ckpt.maybePartitioned(sym, "src")
+      else graft.plans.Ckpt.maybe(sym)
     val nodes = edgesD0.select(col("src").as("node")).distinct().transform(graft.plans.Ckpt.maybe)
     // size-gated switch (round 12): BFS frontiers are worst-case
     // O(nodes), so the node count is the right gate. When AUTO flips
@@ -369,7 +370,7 @@ object GraphOps {
     // levels; the same exchange the forced key pays up front).
     val copart = forced.getOrElse(graft.plans.StateJoin.copartFor(nodes))
     val edgesD = if (copart && !forced.contains(true))
-      edgesD0.repartition(col("src")).transform(graft.plans.Ckpt.maybePartitioned)
+      graft.plans.Ckpt.maybePartitioned(edgesD0, "src")
     else edgesD0
     var visited = nodes.filter(
         col("node").startsWith("s") &&
@@ -485,11 +486,10 @@ object GraphOps {
     * [[graft.plans.Ckpt.maybe]] is the same persist-once contract
     * with the session's lifetime as the retention policy.
     *
-    * Bypassed (recompute per key) under the audit axes: with
-    * `spark.graft.ckptCapture` every key must capture its OWN full
+    * Bypassed (recompute per key) under the audit axis
+    * `spark.graft.ckptCapture`: every key must capture its OWN full
     * pre-checkpoint segment chain — a cache hit would leave PlanAudit
-    * blind to the subtree for keys 2..n; with
-    * `spark.graft.checkpoint=false` nothing may pin state at all.
+    * blind to the subtree for keys 2..n.
     */
   private[graft] object SharedGraph {
     /** Test hook: drop cached artifacts so a spec pinning the
@@ -520,7 +520,8 @@ object GraphOps {
           e0.select(col("a").as("src"), col("b").as("dst"))
             .unionAll(e0.select(col("b").as("src"), col("a").as("dst")))
             .withColumn("deg", count(lit(1)).over(
-              org.apache.spark.sql.expressions.Window.partitionBy("src"))))
+              org.apache.spark.sql.expressions.Window.partitionBy("src"))),
+          "src")
       }
 
     /** The DIRECTED degree-windowed edge table (src, dst, deg) over
@@ -531,7 +532,8 @@ object GraphOps {
         graft.plans.Ckpt.maybePartitioned(
           csPairs(s, d).select(col("a").as("src"), col("b").as("dst"))
             .withColumn("deg", count(lit(1)).over(
-              org.apache.spark.sql.expressions.Window.partitionBy("src"))))
+              org.apache.spark.sql.expressions.Window.partitionBy("src"))),
+          "src")
       }
 
     /** The materialized final (node, label) LPA table over
@@ -591,7 +593,7 @@ object GraphOps {
     val sym = e.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
       .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
-      .transform(graft.plans.Ckpt.maybePartitioned)
+      .transform(graft.plans.Ckpt.maybePartitioned(_, "src"))
     val deg = sym.select(col("src").as("node"), col("deg")).dropDuplicates("node")
     val o = sym.join(
         broadcast(deg.select(col("node").as("dn"), col("deg").as("ddeg"))),
@@ -602,7 +604,7 @@ object GraphOps {
       // maybePartitioned: o inherits sym's hashpartitioning(src);
       // keeping it recorded lets the wedge self-join plan without
       // re-exchanging either side (both read the same layout)
-      .transform(graft.plans.Ckpt.maybePartitioned)
+      .transform(graft.plans.Ckpt.maybePartitioned(_, "src"))
     val e1 = o.select(col("src").as("u"), col("dst").as("v"), col("ddeg").as("dv"))
     val e2 = o.select(col("src").as("u2"), col("dst").as("w"), col("ddeg").as("dw"))
     val wedges = e1.join(e2, col("u") === col("u2") &&
@@ -839,8 +841,7 @@ object GraphOps {
     // iteration's shuffle-hash join moves only the label table.
     labels = labels.transform(graft.plans.Ckpt.maybe)
     val copart = graft.plans.StateJoin.copartFor(labels)
-    val symJ = if (copart) sym.repartition(col("src"))
-      .transform(graft.plans.Ckpt.maybePartitioned) else sym
+    val symJ = if (copart) graft.plans.Ckpt.maybePartitioned(sym, "src") else sym
     (1 to iters).foreach { _ =>
       labels = symJ.join(graft.plans.StateJoin.side(labels, copart),
           symJ("src") === labels("node"))
@@ -966,7 +967,7 @@ object GraphOps {
     val sym = e.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
       .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
-      .transform(graft.plans.Ckpt.maybePartitioned)
+      .transform(graft.plans.Ckpt.maybePartitioned(_, "src"))
     val deg = sym.select(col("src").as("node"), col("deg")).dropDuplicates("node")
     val nByDeg = deg.groupBy("deg").agg(count(lit(1)).as("n_nodes"))
     val knn = sym.join(
@@ -1037,12 +1038,10 @@ object GraphOps {
     // stores for a mutual-reinforcement kernel; broadcast mode reads
     // the single checkpointed edge set as before.
     val copart = graft.plans.StateJoin.copartFor(nodes)
-    val edgesBySrc = if (copart)
-      edgesD.repartition(col("src"))
-        .transform(graft.plans.Ckpt.maybePartitioned) else edgesD
-    val edgesByDst = if (copart)
-      edgesD.repartition(col("dst"))
-        .transform(graft.plans.Ckpt.maybePartitioned) else edgesD
+    val edgesBySrc =
+      if (copart) graft.plans.Ckpt.maybePartitioned(edgesD, "src") else edgesD
+    val edgesByDst =
+      if (copart) graft.plans.Ckpt.maybePartitioned(edgesD, "dst") else edgesD
     var hub = nodes.select(col("node"), lit(1000000L).as("hub_fp"))
       .transform(graft.plans.Ckpt.maybe)
     var auth: DataFrame = null

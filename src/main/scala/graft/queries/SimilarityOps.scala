@@ -47,10 +47,10 @@ object SimilarityOps {
     * IVF-bucketed form ([[ivfCandidates]] with K = max(16, √n) cells
     * — the standard IVF scaling, n²·nprobe/K expected pairs) feeding
     * the identical exact-scoring top-k + mutuality machinery — brute
-    * force as baseline, bucketed as the scale path.
-    * `spark.graft.knnMode=exact|ivf` forces a side (specs pin both
-    * plan shapes); `auto` (default) counts the already-checkpointed
-    * quantized corpus — a cached-partition scan, not a recompute.
+    * force as baseline, bucketed as the scale path. The gate counts
+    * the already-checkpointed quantized corpus — a cached-partition
+    * scan, not a recompute; KnnGateSpec pins both plan shapes (limit
+    * 0 takes the IVF route at test scale).
     */
   def q_knn_graph(s: SparkSession, d: String, k: Int = 4): DataFrame = {
     VectorFunctions.register(s)
@@ -67,18 +67,10 @@ object SimilarityOps {
           // sq_l2's array<double> input type with exact integer values
           v => floor(v.cast("double") * 1e6 + 0.5).cast("double")).as("q"))
       .transform(graft.plans.Ckpt.maybe) // read twice: scan + broadcast sides
-    // counted at most ONCE per call (ADVICE r14: with
-    // spark.graft.checkpoint=false the count is a full corpus
-    // recompute, so the auto branch must not count for the gate and
-    // again for kCells): exact mode never forces it, ivf/auto-above
-    // force it exactly once and reuse it for the cell derivation
-    lazy val n = x.count()
-    val exact = s.conf.get("spark.graft.knnMode", "auto") match {
-      case "exact" => true
-      case "ivf"   => false
-      case _ =>
-        n <= s.conf.get("spark.graft.knnExactLimit", "65536").toLong
-    }
+    // counted ONCE per call: the gate and the IVF cell derivation
+    // share the count
+    val n = x.count()
+    val exact = n <= s.conf.get("spark.graft.knnExactLimit", "65536").toLong
     val pairs =
       if (exact)
         x.select(col("vec_id").as("va"), col("q").as("qa"))
@@ -1025,13 +1017,12 @@ object SimilarityOps {
     * implemented): on THIS corpus the 31-word shared vocabulary makes
     * every term's posting list O(corpus), so the unbounded term
     * self-join is structurally quadratic. Above
-    * `spark.graft.sparseExactLimit` (or with
-    * `spark.graft.sparseMode=prefix`) candidate generation switches
+    * `spark.graft.sparseExactLimit` candidate generation switches
     * to the AllPairs prefix filter in Bayardo's ORIGINAL setting
     * (Bayardo et al., WWW 2007 — weighted cosine over TF-IDF
     * vectors): order terms globally rarest-first (df asc), keep each
     * doc's prefix = the positions whose SUFFIX L2 norm still reaches
-    * `spark.graft.sparseTau` (Cauchy-Schwarz: if every shared term
+    * the threshold tau = 0.5 (Cauchy-Schwarz: if every shared term
     * lies in a doc's sub-threshold suffix, the pair's cosine is below
     * tau — so joining prefix terms against full posting lists loses
     * NO pair at or above the threshold), then score candidates with
@@ -1070,15 +1061,8 @@ object SimilarityOps {
       .transform(graft.plans.Ckpt.maybe)
     val norms = wfp.groupBy("doc_id").agg(sum(col("w") * col("w")).as("n2"))
       .transform(graft.plans.Ckpt.maybe) // 3 consumers: finish a/b + prefix bound
-    // counted at most once (the knnExactLimit convention): forced
-    // modes never trigger the job
-    lazy val n = norms.count()
-    val exact = s.conf.get("spark.graft.sparseMode", "auto") match {
-      case "allpairs" => true
-      case "prefix"   => false
-      case _ =>
-        n <= s.conf.get("spark.graft.sparseExactLimit", "65536").toLong
-    }
+    val exact =
+      norms.count() <= s.conf.get("spark.graft.sparseExactLimit", "65536").toLong
     if (exact) {
       val dots = wfp.select(col("doc_id").as("doc_a"), col("term"), col("w").as("wa"))
         .join(wfp.select(col("doc_id").as("doc_b"), col("term"), col("w").as("wb")),
@@ -1088,7 +1072,7 @@ object SimilarityOps {
         .agg(sum(col("wa") * col("wb")).as("dot_fp"))
       sparseFinish(dots, norms, topN)
     } else {
-      val tau = s.conf.get("spark.graft.sparseTau", "0.5").toDouble
+      val tau = 0.5
       val cand = sparseCandidates(wfp, df, norms, tau)
       val dots = cand
         .join(wfp.select(col("doc_id").as("doc_a"), col("term"), col("w").as("wa")),

@@ -28,9 +28,9 @@ import org.apache.spark.sql.execution.SparkPlan
   * eager, so "planning" a checkpointing key executes its checkpoint
   * jobs (and any constructor-side model collects) — the audit runs
   * real (small) jobs at sf0.001; it is not execution-free, and never
-  * was. (The alternative — `spark.graft.checkpoint=false` — is
-  * execution-free per site but re-computes un-truncated lineage in
-  * every constructor collect; the 236-key audit never finishes.)
+  * was. (Skipping the checkpoints instead would be execution-free
+  * per site but re-computes un-truncated lineage in every constructor
+  * collect; measured, the 236-key audit never finished that way.)
   *
   * One implementation, two entry points: [[auditPlans]] is called by
   * the main() below and by PlanAuditSpec, so the tool and the test

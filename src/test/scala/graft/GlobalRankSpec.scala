@@ -122,50 +122,53 @@ class GlobalRankSpec extends AnyFunSuite {
       "unbounded-fact window wrongly accepted via the dim side's limit")
   }
 
-  test("one-exchange impl: values match the window impl and the naive window; sort sits beneath the id projection") {
+  /** Runs `body` under `spark.graft.ckptCapture=true` and returns the
+    * pre-checkpoint plan segments its checkpoints captured. */
+  private def captured(body: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    graft.plans.Ckpt.drainCaptured()
+    spark.conf.set("spark.graft.ckptCapture", "true")
+    try body
+    finally spark.conf.unset("spark.graft.ckptCapture")
+    graft.plans.Ckpt.drainCaptured()
+  }
+
+  test("one-exchange impl: values match the naive window, sort under mono-id") {
     import org.apache.spark.sql.expressions.Window
     val df = sampleDf
     val naive = df.withColumn("rn",
       row_number().over(Window.orderBy(col("v"), col("id"))).cast("long"))
-    spark.conf.set("spark.graft.globalRank.impl", "monoid")
-    try {
-      val mono = globalRowNumber(df, "rn", col("v"), col("id"))
-      assert(mono.exceptAll(naive).isEmpty && naive.exceptAll(mono).isEmpty,
-        "monoid rank mismatch vs naive global window (asc)")
-      val monoDesc = globalRowNumber(df, "rn", col("v").desc, col("id"))
-      val naiveDesc = df.withColumn("rn",
-        row_number().over(Window.orderBy(col("v").desc, col("id"))).cast("long"))
-      assert(monoDesc.exceptAll(naiveDesc).isEmpty && naiveDesc.exceptAll(monoDesc).isEmpty,
-        "monoid rank mismatch vs naive global window (desc)")
-      assert(graft.tools.PlanAudit.unpartitionedWindows(
-        mono.queryExecution.sparkPlan) == 0)
-      // empty input stays safe
-      assert(globalRowNumber(df.filter(lit(false)), "rn", col("v"), col("id"))
-        .count() == 0L)
-      // the named risk: the nondeterministic mono-id projection must
-      // evaluate ABOVE the local sort — plan under checkpoint-off so
-      // the subtree is visible, and assert every MonotonicallyIncreasingID
-      // projection has a SortExec descendant
-      spark.conf.set("spark.graft.checkpoint", "false")
-      try {
-        import org.apache.spark.sql.execution.{ProjectExec, SortExec, SparkPlan}
-        val plan = globalRowNumber(df, "rn", col("v"), col("id"))
-          .queryExecution.sparkPlan
-        val projs = plan.collect {
-          case p: ProjectExec if p.projectList.exists(_.find(
-            _.isInstanceOf[org.apache.spark.sql.catalyst.expressions
-              .MonotonicallyIncreasingID]).isDefined) => p
-        }
-        assert(projs.nonEmpty, s"no mono-id projection found:\n$plan")
-        projs.foreach { p =>
-          assert(p.exists { case _: SortExec => true; case _ => false },
-            s"mono-id projection has NO sort beneath it (stamps pre-sort order):\n$p")
-        }
-      } finally spark.conf.unset("spark.graft.checkpoint")
-    } finally spark.conf.unset("spark.graft.globalRank.impl")
+    val mono = globalRowNumber(df, "rn", col("v"), col("id"))
+    assert(mono.exceptAll(naive).isEmpty && naive.exceptAll(mono).isEmpty,
+      "monoid rank mismatch vs naive global window (asc)")
+    val monoDesc = globalRowNumber(df, "rn", col("v").desc, col("id"))
+    val naiveDesc = df.withColumn("rn",
+      row_number().over(Window.orderBy(col("v").desc, col("id"))).cast("long"))
+    assert(monoDesc.exceptAll(naiveDesc).isEmpty && naiveDesc.exceptAll(monoDesc).isEmpty,
+      "monoid rank mismatch vs naive global window (desc)")
+    assert(graft.tools.PlanAudit.unpartitionedWindows(
+      mono.queryExecution.sparkPlan) == 0)
+    // empty input stays safe
+    assert(globalRowNumber(df.filter(lit(false)), "rn", col("v"), col("id"))
+      .count() == 0L)
+    // the named risk: the nondeterministic mono-id projection must
+    // evaluate ABOVE the local sort — the captured pre-checkpoint
+    // segment shows the subtree, and every MonotonicallyIncreasingID
+    // projection in it must have a SortExec descendant
+    import org.apache.spark.sql.execution.{ProjectExec, SortExec}
+    val segs = captured(globalRowNumber(df, "rn", col("v"), col("id")))
+    val projs = segs.flatMap(_.collect {
+      case p: ProjectExec if p.projectList.exists(_.find(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.expressions
+          .MonotonicallyIncreasingID]).isDefined) => p
+    })
+    assert(projs.nonEmpty, s"no mono-id projection found:\n${segs.mkString("\n")}")
+    projs.foreach { p =>
+      assert(p.exists { case _: SortExec => true; case _ => false },
+        s"mono-id projection has NO sort beneath it (stamps pre-sort order):\n$p")
+    }
   }
 
-  test("audit hook: spark.graft.checkpoint=false exposes the plan beneath GlobalRank") {
+  test("audit hook: ckptCapture exposes the plan beneath GlobalRank") {
     import org.apache.spark.sql.expressions.Window
     // a scale-killer UPSTREAM of the rank: running sum over an
     // unpartitioned window feeding globalRowNumber
@@ -179,12 +182,8 @@ class GlobalRankSpec extends AnyFunSuite {
       .queryExecution.sparkPlan
     assert(graft.tools.PlanAudit.unpartitionedWindows(hidden) == 0,
       "checkpointed lineage unexpectedly kept the upstream window visible")
-    spark.conf.set("spark.graft.checkpoint", "false")
-    try {
-      val seen = globalRowNumber(bad, "rn", col("v"), col("id"))
-        .queryExecution.sparkPlan
-      assert(graft.tools.PlanAudit.unpartitionedWindows(seen) > 0,
-        "audit-mode planning failed to expose the upstream global window")
-    } finally spark.conf.unset("spark.graft.checkpoint")
+    val segs = captured(globalRowNumber(bad, "rn", col("v"), col("id")))
+    assert(segs.map(graft.tools.PlanAudit.unpartitionedWindows).sum > 0,
+      "audit-mode capture failed to expose the upstream global window")
   }
 }

@@ -65,6 +65,38 @@ class HashKernelSpec extends AnyFunSuite {
     }
   }
 
+  test("hex_window_u: uppercase parses like conv, short input is NULL (both eval paths)") {
+    // SQL-callable on any string: uppercase and mixed-case hex must
+    // parse as conv does, and a string ending before the window's last
+    // byte must yield NULL, never a read past its end
+    val full = Seq("0123456789ABCDEF0123456789abcdef", "DEADBEEFdeadbeefCAFEBABE00FF00FF")
+    val short = Seq("", "A", "abc", "0123456789ABCDE")
+    // repartition(1) keeps the projection out of ConvertToLocalRelation,
+    // which would evaluate it at optimize time
+    def run(codegen: Boolean) = {
+      spark.conf.set("spark.sql.codegen.wholeStage", codegen.toString)
+      spark.conf.set("spark.sql.codegen.factoryMode",
+        if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
+      try (full ++ short).toDF("h").repartition(1)
+        .select(col("h"),
+          HashFunctions.hexWindowU(col("h"), 2, 15).as("kernel"),
+          conv(substring(col("h"), 2, 15), 16, 10).cast("long").as("conv"))
+        .collect()
+      finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
+    for (codegen <- Seq(false, true); r <- run(codegen)) {
+      val h = r.getString(0)
+      if (full.contains(h))
+        assert(!r.isNullAt(1) && r.getLong(1) == r.getLong(2),
+          s"codegen=$codegen '$h': kernel=${r.get(1)} conv=${r.get(2)}")
+      else
+        assert(r.isNullAt(1), s"codegen=$codegen short '$h' read past its end: ${r.get(1)}")
+    }
+  }
+
   test("NULL input propagates NULL, matching md5(NULL)") {
     val r = Seq[Option[String]](None, Some("x")).toDF("t")
       .select(HashFunctions.md5WindowU(col("t"), 1, 15).as("k"))

@@ -69,7 +69,8 @@ class KnnGateSpec extends AnyFunSuite {
     }
     assert(countIn(plans, "BroadcastNestedLoopJoin") >= 1,
       "below-gate auto mode lost its exact corpus-broadcast candidate pass")
-    val forced = withConf("spark.graft.knnMode" -> "exact") {
+    // a limit above any corpus forces the exact route
+    val forced = withConf("spark.graft.knnExactLimit" -> Long.MaxValue.toString) {
       graft.queries.SimilarityOps.q_knn_graph(spark, sf).collect()
     }
     assert(auto.nonEmpty && auto.sameElements(forced),
@@ -99,10 +100,10 @@ class KnnGateSpec extends AnyFunSuite {
       .q_knn_graph_ivf(spark, sf, kCells = derivedK).collect()
     assert(gated.sameElements(ivf),
       "above-gate route must BE the IVF candidate generator + the same top-k tail")
-    // forced-ivf mode takes the same route regardless of the limit
-    val forced = withConf("spark.graft.knnMode" -> "ivf") {
+    // the gate is n <= limit: one row over the limit already takes IVF
+    val justOver = withConf("spark.graft.knnExactLimit" -> (n - 1).toString) {
       graft.queries.SimilarityOps.q_knn_graph(spark, sf).collect()
     }
-    assert(forced.sameElements(ivf), "knnMode=ivf must force the IVF route")
+    assert(justOver.sameElements(ivf), "limit n-1 must take the IVF route")
   }
 }

@@ -4,10 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The SharedState artifact cache's contract is audit-critical: a
   * cache hit under `spark.graft.ckptCapture` would leave PlanAudit
-  * blind to the shared subtree for every consumer after the first,
-  * and a hit under `spark.graft.checkpoint=false` would pin state on
-  * an axis that promises not to. Pin both bypasses, the hit path,
-  * and the test-reset hook.
+  * blind to the shared subtree for every consumer after the first.
+  * Pin the bypass, the hit path, and the test-reset hook
+  * (ConcurrencySpec pins the one-build-per-key contract).
   */
 class SharedStateSpec extends AnyFunSuite {
   import TestSpark._
@@ -26,19 +25,16 @@ class SharedStateSpec extends AnyFunSuite {
     assert(!(c eq a), "different name must build its own artifact")
   }
 
-  test("ckptCapture and checkpoint=false both bypass the cache (audit axes)") {
+  test("ckptCapture bypasses the cache (audit axis)") {
     graft.plans.SharedState.reset()
     val warm = graft.plans.SharedState.cached(spark, "spec.x", "/d")(build("warm"))
-    for (conf <- Seq("spark.graft.ckptCapture" -> "true",
-        "spark.graft.checkpoint" -> "false")) {
-      spark.conf.set(conf._1, conf._2)
-      try {
-        val fresh = graft.plans.SharedState.cached(spark, "spec.x", "/d")(build("f"))
-        assert(!(fresh eq warm), s"cache hit under audit axis ${conf._1}")
-        val fresh2 = graft.plans.SharedState.cached(spark, "spec.x", "/d")(build("f2"))
-        assert(!(fresh2 eq fresh), s"memoized under audit axis ${conf._1}")
-      } finally spark.conf.unset(conf._1)
-    }
+    spark.conf.set("spark.graft.ckptCapture", "true")
+    try {
+      val fresh = graft.plans.SharedState.cached(spark, "spec.x", "/d")(build("f"))
+      assert(!(fresh eq warm), "cache hit under the audit axis")
+      val fresh2 = graft.plans.SharedState.cached(spark, "spec.x", "/d")(build("f2"))
+      assert(!(fresh2 eq fresh), "memoized under the audit axis")
+    } finally spark.conf.unset("spark.graft.ckptCapture")
     // the warm entry is untouched by the bypassed calls
     val again = graft.plans.SharedState.cached(spark, "spec.x", "/d")(build("z"))
     assert(again eq warm, "bypass must not evict or replace cached entries")

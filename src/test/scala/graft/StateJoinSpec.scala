@@ -47,13 +47,7 @@ class StateJoinSpec extends AnyFunSuite {
   private def countIn(plans: Seq[String], needle: String): Int =
     plans.map(needle.r.findAllIn(_).size).sum
 
-  test("copartForCount obeys forced modes without evaluating the count") {
-    withConf("spark.graft.graphJoinMode" -> "broadcast") {
-      assert(!graft.plans.StateJoin.copartForCount(spark, sys.error("counted!")))
-    }
-    withConf("spark.graft.graphJoinMode" -> "copart") {
-      assert(graft.plans.StateJoin.copartForCount(spark, sys.error("counted!")))
-    }
+  test("copartForCount follows spark.graft.broadcastNodesLimit") {
     assert(!graft.plans.StateJoin.copartForCount(spark, 10L))
     withConf("spark.graft.broadcastNodesLimit" -> "5") {
       assert(graft.plans.StateJoin.copartForCount(spark, 10L))
