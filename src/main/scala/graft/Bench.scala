@@ -128,7 +128,7 @@ object Bench {
     // "reruns" field so the artifact itself marks which numbers are
     // min-of-2 steady-state rather than cold single shots (ADVICE r13)
     val reruns = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    val results = a.keys.getOrElse(registry.keys.toSeq.sorted).map { name =>
+    val results = a.keys.getOrElse(SparkEntry.keys.map(_.name)).map { name =>
       val fn = registry(name)
       // SharedState keyset size before the cold run: if the cold run
       // BUILT new shared artifacts, a warm re-run reads them for free

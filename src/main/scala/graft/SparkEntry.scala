@@ -3,5906 +3,38 @@ package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import graft.queries.{BpeOps, ClusterOps, DedupOps, EmbedOps, GraphOps, KMeansOps, Multimodal, RankOps, Relational, SampleOps, SimilarityOps, SketchOps, TextOps, TimeSeries, UnigramOps, Windows}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Each key in [[queries]] is an operator from SURVEY.md §2's
-  * inventory; [[oracleSql]] carries the DuckDB-dialect equivalent the
-  * driver runs over the same parquet tables. Keys absent from
-  * [[oracleSql]] are the ⊘-marked ones (no DuckDB-expressible oracle)
-  * and get a rows-only check.
+/** The query registry: every key's Spark function and the DuckDB
+  * oracle SQL its result is checked against, over the same parquet
+  * tables. Each key is one [[SparkEntry.Key]] record, registered in the
+  * `keys` of the `graft.queries` object whose function it calls.
   */
 object SparkEntry {
+
+  /** One query key: its Spark function and its DuckDB-dialect oracle
+    * SQL, whose column names and types match the Spark output
+    * (counts/epochs as BIGINT, doubles rounded identically).
+    */
+  final case class Key(name: String, run: (SparkSession, String) => DataFrame, oracle: String)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.q_agg_hash(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // §2.1/2.2 scans, projections, filters
-    "q_scan_project" -> (Relational.q_scan_project _),
-    "q_filter_pred"  -> (Relational.q_filter_pred _),
-    "q_filter_isin"  -> (Relational.q_filter_isin _),
-    // §2.3 joins
-    "q_join_inner"     -> (Relational.q_join_inner _),
-    "q_join_broadcast" -> (Relational.q_join_broadcast _),
-    "q_join_lookup"    -> (Relational.q_join_lookup _),
-    "q_join_semi"      -> (Relational.q_join_semi _),
-    "q_join_anti"      -> (Relational.q_join_anti _),
-    "q_join_range"     -> (Relational.q_join_range _),
-    "q_join_range_binned" -> (Relational.q_join_range_binned _),
-    "q_join_outer"     -> (Relational.q_join_outer _),
-    "q_join_skew"      -> (Relational.q_join_skew _),
-    "q_skew_stats"     -> (Relational.q_skew_stats _),
-    "q_join_asof"      -> (Windows.q_join_asof _),
-    "q_join_asof_tol"  -> ((s, d) => Windows.q_join_asof_tol(s, d)),
-    "q_sql_report"     -> (Relational.q_sql_report _),
-    // §2.4 aggregations
-    "q_agg_hash"     -> (Relational.q_agg_hash _),
-    "q_agg_count"    -> (Relational.q_agg_count _),
-    "q_agg_distinct" -> (Relational.q_agg_distinct _),
-    "q_agg_approx"   -> (Relational.q_agg_approx _),
-    "q_sketch_merge" -> (SketchOps.q_sketch_merge _),
-    "q_sketch_exact" -> (SketchOps.q_sketch_exact _),
-    "q_sketch_kmv"   -> (SketchOps.q_sketch_kmv _),
-    "q_heavyhitters" -> ((s, d) => SketchOps.q_heavyhitters(s, d)),
-    "q_ngram_cms"    -> ((s, d) => SketchOps.q_ngram_cms(s, d)),
-    "q_approx_pct"   -> (SketchOps.q_approx_pct _),
-    "q_agg_rollup"   -> (Relational.q_agg_rollup _),
-    "q_agg_groupset" -> (Relational.q_agg_groupset _),
-    "q_percentile"   -> (Relational.q_percentile _),
-    "q_array_fn"     -> (Relational.q_array_fn _),
-    "q_null_fn"      -> (Relational.q_null_fn _),
-    "q_pivot"        -> (Relational.q_pivot _),
-    "q_unpivot"      -> (Relational.q_unpivot _),
-    "q_regexp_fn"    -> (Relational.q_regexp_fn _),
-    "q_cond_agg"     -> (Relational.q_cond_agg _),
-    "q_stats_agg"    -> (Relational.q_stats_agg _),
-    "q_bit_fn"       -> (Relational.q_bit_fn _),
-    "q_having"       -> (Relational.q_having _),
-    "q_subquery"     -> (Relational.q_subquery _),
-    "q_sim_ivf"      -> (SimilarityOps.q_sim_ivf _),
-    "q_ivf_balance"  -> ((s, d) => SimilarityOps.q_ivf_balance(s, d)),
-    "q_select_mmr"   -> ((s, d) => SimilarityOps.q_select_mmr(s, d)),
-    "q_agg_cube"     -> (Relational.q_agg_cube _),
-    // §2.6 sorts / top-k
-    "q_sort" -> (Relational.q_sort _),
-    "q_topk" -> (Relational.q_topk _),
-    "q_topk_group" -> ((s, d) => Relational.q_topk_group(s, d)),
-    // §2.7 set ops / dedup
-    "q_union"     -> (Relational.q_union _),
-    "q_intersect" -> (Relational.q_intersect _),
-    "q_except"    -> (Relational.q_except _),
-    "q_dedup"     -> (Relational.q_dedup _),
-    // §2.8 generators
-    "q_explode" -> (Relational.q_explode _),
-    // §2.9 scalar functions
-    "q_string_fn" -> (Relational.q_string_fn _),
-    "q_date_fn"   -> (Relational.q_date_fn _),
-    "q_date_fn2"  -> (Relational.q_date_fn2 _),
-    "q_math_fn"   -> (Relational.q_math_fn _),
-    "q_json_fn"   -> (Relational.q_json_fn _),
-    // §2.5 windows
-    "q_window_rank"    -> (Windows.q_window_rank _),
-    "q_window_lag"     -> (Windows.q_window_lag _),
-    "q_window_running" -> (Windows.q_window_running _),
-    "q_scd2"           -> (Windows.q_scd2 _),
-    "q_scd2_lookup"    -> (Windows.q_scd2_lookup _),
-    "q_transitions"    -> (TimeSeries.q_transitions _),
-    "q_spikes"         -> ((s, d) => TimeSeries.q_spikes(s, d)),
-    "q_rfm"            -> (TimeSeries.q_rfm _),
-    "q_window_dist"    -> (Windows.q_window_dist _),
-    "q_window_range"   -> (Relational.q_window_range _),
-    "q_string_agg"     -> (Relational.q_string_agg _),
-    // §2.10 time windows
-    "q_time_tumble"  -> (TimeSeries.q_time_tumble _),
-    "q_time_slide"   -> (TimeSeries.q_time_slide _),
-    "q_time_session" -> (TimeSeries.q_time_session _),
-    "q_retention"    -> (TimeSeries.q_retention _),
-    "q_funnel"       -> (TimeSeries.q_funnel _),
-    "q_outliers"     -> (TimeSeries.q_outliers _),
-    "q_value_hist"   -> ((s, d) => TimeSeries.q_value_hist(s, d)),
-    "q_ohlc"         -> (TimeSeries.q_ohlc _),
-    // round-9 (official) time-series additions
-    "q_trend"        -> (TimeSeries.q_trend _),
-    "q_acf"          -> ((s, d) => TimeSeries.q_acf(s, d)),
-    "q_seasonality"  -> (TimeSeries.q_seasonality _),
-    "q_concurrency"  -> (TimeSeries.q_concurrency _),
-    "q_ewma"         -> ((s, d) => TimeSeries.q_ewma(s, d)),
-    "q_join_overlap" -> (TimeSeries.q_join_overlap _),
-    "q_ab_test"      -> (TimeSeries.q_ab_test _),
-    "q_burstiness"   -> (TimeSeries.q_burstiness _),
-    "q_gap_stats"    -> (TimeSeries.q_gap_stats _),
-    "q_winsorize"    -> (TimeSeries.q_winsorize _),
-    "q_cusum"        -> (TimeSeries.q_cusum _),
-    "q_mk_trend"     -> (TimeSeries.q_mk_trend _),
-    "q_benford"      -> (TimeSeries.q_benford _),
-    "q_ltv"          -> (TimeSeries.q_ltv _),
-    "q_survival"     -> (TimeSeries.q_survival _),
-    "q_decompose"    -> (TimeSeries.q_decompose _),
-    "q_bootstrap"    -> ((s, d) => TimeSeries.q_bootstrap(s, d)),
-    "q_forecast"     -> ((s, d) => TimeSeries.q_forecast(s, d)),
-    "q_spearman"     -> (TimeSeries.q_spearman _),
-    "q_attribution"  -> (TimeSeries.q_attribution _),
-    "q_session_paths" -> ((s, d) => TimeSeries.q_session_paths(s, d)),
-    "q_basket"       -> (TimeSeries.q_basket _),
-    // §2.11 text analysis
-    "q_text_stats"   -> (TextOps.q_text_stats _),
-    "q_tokens"       -> (TextOps.q_tokens _),
-    "q_lang_id"      -> (TextOps.q_lang_id _),
-    "q_text_quality" -> (TextOps.q_text_quality _),
-    "q_fingerprint"  -> (TextOps.q_fingerprint _),
-    "q_corpus_diff"  -> (TextOps.q_corpus_diff _),
-    "q_text_clean"   -> (TextOps.q_text_clean _),
-    "q_blocklist"    -> (TextOps.q_blocklist _),
-    "q_corpus_report" -> (TextOps.q_corpus_report _),
-    // the round-9 q_corpus_slice_* bisect keys are RETIRED (round 11):
-    // the driver-side q_corpus_report hash-fail they localized has
-    // been green for two consecutive driver rounds (r9, r10); the
-    // per-doc dump keys stay as user-facing readouts
-    "q_corpus_dump_toks"     -> (TextOps.q_corpus_dump_toks _),
-    "q_corpus_dump_q"        -> (TextOps.q_corpus_dump_q _),
-    // round 11: exact distributed ranking family over plans/GlobalRank
-    "q_rank_global" -> (RankOps.q_rank_global _),
-    "q_rank_strat"  -> (RankOps.q_rank_strat _),
-    "q_quantile_norm" -> (RankOps.q_quantile_norm _),
-    "q_sample_systematic" -> ((s, d) => RankOps.q_sample_systematic(s, d)),
-    "q_quantiles_exact" -> (RankOps.q_quantiles_exact _),
-    "q_repetition"   -> (TextOps.q_repetition _),
-    "q_ngram_novelty" -> (TextOps.q_ngram_novelty _),
-    "q_quality_classifier" -> (TextOps.q_quality_classifier _),
-    "q_dedup_incr"   -> (TextOps.q_dedup_incr _),
-    "q_dedup_incr_idx" -> (TextOps.q_dedup_incr_idx _),
-    "q_dedup_bloom"  -> (TextOps.q_dedup_bloom _),
-    "q_lm_score"     -> (TextOps.q_lm_score _),
-    "q_lm_bigram"    -> (TextOps.q_lm_bigram _),
-    "q_lm_backoff"   -> (TextOps.q_lm_backoff _),
-    "q_ccnet_split"  -> (TextOps.q_ccnet_split _),
-    "q_mix_lm"       -> (TextOps.q_mix_lm _),
-    "q_minkprob"     -> ((s, d) => TextOps.q_minkprob(s, d)),
-    "q_quality_ablation" -> (TextOps.q_quality_ablation _),
-    "q_collocations" -> ((s, d) => TextOps.q_collocations(s, d)),
-    "q_bm25"         -> ((s, d) => TextOps.q_bm25(s, d)),
-    "q_rrf"          -> ((s, d) => TextOps.q_rrf(s, d)),
-    "q_rbo"          -> ((s, d) => TextOps.q_rbo(s, d)),
-    "q_ece"          -> (TextOps.q_ece _),
-    "q_ndcg"         -> ((s, d) => TextOps.q_ndcg(s, d)),
-    "q_pbm"          -> ((s, d) => TextOps.q_pbm(s, d)),
-    "q_map"          -> ((s, d) => TextOps.q_map(s, d)),
-    "q_hill"         -> ((s, d) => TextOps.q_hill(s, d)),
-    "q_zipf"         -> ((s, d) => TextOps.q_zipf(s, d)),
-    "q_chi2"         -> (TextOps.q_chi2 _),
-    "q_lorenz"       -> (TextOps.q_lorenz _),
-    "q_ks"           -> (TextOps.q_ks _),
-    "q_mannwhitney"  -> (TextOps.q_mannwhitney _),
-    "q_welch"        -> (TextOps.q_welch _),
-    "q_kruskal"      -> (TextOps.q_kruskal _),
-    "q_distinct_n"   -> ((s, d) => TextOps.q_distinct_n(s, d)),
-    "q_readability"  -> (TextOps.q_readability _),
-    "q_heaps"        -> (TextOps.q_heaps _),
-    "q_novelty"      -> (TextOps.q_novelty _),
-    "q_drift_psi"    -> ((s, d) => TextOps.q_drift_psi(s, d)),
-    "q_langid_eval"  -> (TextOps.q_langid_eval _),
-    "q_profile"      -> (TextOps.q_profile _),
-    "q_text_normalize" -> (TextOps.q_text_normalize _),
-    "q_pii"          -> (TextOps.q_pii _),
-    "q_tfidf"        -> ((s, d) => TextOps.q_tfidf(s, d)),
-    "q_vocab"        -> ((s, d) => TextOps.q_vocab(s, d)),
-    "q_bpe"          -> ((s, d) => TextOps.q_bpe(s, d)),
-    "q_entropy"      -> (TextOps.q_entropy _),
-    "q_bpe_train"    -> ((s, d) => BpeOps.q_bpe_train(s, d)),
-    "q_bpe_encode"   -> ((s, d) => BpeOps.q_bpe_encode(s, d)),
-    "q_unigram_train"  -> ((s, d) => UnigramOps.q_unigram_train(s, d)),
-    "q_unigram_encode" -> ((s, d) => UnigramOps.q_unigram_encode(s, d)),
-    "q_unigram_prune"  -> ((s, d) => UnigramOps.q_unigram_prune(s, d)),
-    "q_tok_fertility" -> ((s, d) => BpeOps.q_tok_fertility(s, d)),
-    "q_bpe_sweep"    -> ((s, d) => BpeOps.q_bpe_sweep(s, d)),
-    "q_pagerank"     -> ((s, d) => GraphOps.q_pagerank(s, d)),
-    "q_pagerank_copart" -> ((s, d) => GraphOps.q_pagerank_copart(s, d)),
-    "q_pagerank_dir" -> ((s, d) => GraphOps.q_pagerank_directed(s, d)),
-    "q_graph_hops"   -> ((s, d) => GraphOps.q_graph_hops(s, d)),
-    "q_graph_hops_copart" -> ((s, d) => GraphOps.q_graph_hops_copart(s, d)),
-    "q_pagerank_seed" -> ((s, d) => GraphOps.q_pagerank_seeded(s, d)),
-    "q_graph_triangles" -> ((s, d) => GraphOps.q_graph_triangles(s, d)),
-    "q_graph_degree"    -> (GraphOps.q_graph_degree _),
-    "q_graph_hits"      -> ((s, d) => GraphOps.q_graph_hits(s, d)),
-    "q_graph_jaccard" -> ((s, d) => GraphOps.q_graph_jaccard(s, d)),
-    "q_graph_adamic" -> ((s, d) => GraphOps.q_graph_adamic(s, d)),
-    "q_graph_lpa" -> ((s, d) => GraphOps.q_graph_lpa(s, d)),
-    "q_graph_modularity" -> ((s, d) => GraphOps.q_graph_modularity(s, d)),
-    "q_graph_kcore" -> ((s, d) => GraphOps.q_graph_kcore(s, d)),
-    // §2.11 dedup family
-    "q_minhash"       -> (DedupOps.q_minhash _),
-    "q_dedup_minhash" -> (DedupOps.q_dedup_minhash _),
-    "q_dedup_savings" -> (DedupOps.q_dedup_savings _),
-    "q_minhash_calib" -> (DedupOps.q_minhash_calib _),
-    "q_dedup_agreement" -> (DedupOps.q_dedup_agreement _),
-    "q_source_overlap"  -> ((s, d) => DedupOps.q_source_overlap(s, d)),
-    "q_cdc_chunks"      -> ((s, d) => DedupOps.q_cdc_chunks(s, d)),
-    "q_cdc_savings"     -> ((s, d) => DedupOps.q_cdc_savings(s, d)),
-    "q_substr_runs"  -> ((s, d) => DedupOps.q_substr_runs(s, d)),
-    "q_ngram_jaccard" -> (DedupOps.q_ngram_jaccard _),
-    "q_containment"   -> (DedupOps.q_containment _),
-    "q_simhash"       -> (DedupOps.q_simhash _),
-    "q_dedup_simhash" -> ((s, d) => DedupOps.q_dedup_simhash(s, d)),
-    "q_dup_clusters"  -> (ClusterOps.q_dup_clusters _),
-    "q_dedup_resolve" -> (ClusterOps.q_dedup_resolve _),
-    "q_dedup_priority" -> (ClusterOps.q_dedup_priority _),
-    "q_contamination" -> (DedupOps.q_contamination _),
-    "q_contamination_fuzzy" -> (DedupOps.q_contamination_fuzzy _),
-    "q_winnow"        -> ((s, d) => DedupOps.q_winnow(s, d)),
-    "q_overlap"       -> ((s, d) => DedupOps.q_overlap(s, d)),
-    "q_dedup_block"   -> ((s, d) => DedupOps.q_dedup_block(s, d)),
-    "q_dedup_substr"  -> ((s, d) => DedupOps.q_dedup_substr(s, d)),
-    "q_dedup_sorted"  -> ((s, d) => DedupOps.q_dedup_sorted(s, d)),
-    "q_dedup_allpairs" -> (DedupOps.q_dedup_allpairs _),
-    "q_boilerplate"   -> ((s, d) => DedupOps.q_boilerplate(s, d)),
-    // §2.11 similarity search
-    "q_sim_topk"    -> (SimilarityOps.q_sim_topk _),
-    "q_knn_graph"   -> ((s, d) => SimilarityOps.q_knn_graph(s, d)),
-    "q_knn_graph_ivf" -> ((s, d) => SimilarityOps.q_knn_graph_ivf(s, d)),
-    "q_hard_negatives" -> (SimilarityOps.q_hard_negatives _),
-    "q_dedup_embed" -> (SimilarityOps.q_dedup_embed _),
-    "q_sim_lsh"     -> (SimilarityOps.q_sim_lsh _),
-    "q_sim_pq"      -> (SimilarityOps.q_sim_pq _),
-    "q_sim_ivfpq"   -> (SimilarityOps.q_sim_ivfpq _),
-    "q_pq_error"    -> (SimilarityOps.q_pq_error _),
-    "q_sim_recall"  -> (SimilarityOps.q_sim_recall _),
-    "q_dim_recall"  -> ((s, d) => SimilarityOps.q_dim_recall(s, d)),
-    "q_sim_sparse"  -> ((s, d) => SimilarityOps.q_sim_sparse(s, d)),
-    "q_dedup_semantic" -> ((s, d) => SimilarityOps.q_dedup_semantic(s, d)),
-    // §2.11 training-data selection (deterministic hash sampling)
-    "q_sample_hash"      -> (SampleOps.q_sample_hash _),
-    "q_sample_weighted"  -> (SampleOps.q_sample_weighted _),
-    "q_sample_balance"   -> (SampleOps.q_sample_balance _),
-    "q_sample_stratified" -> ((s, d) => SampleOps.q_sample_stratified(s, d)),
-    "q_chunk"            -> (SampleOps.q_chunk _),
-    "q_quality_gate"     -> (SampleOps.q_quality_gate _),
-    "q_split"            -> (SampleOps.q_split _),
-    "q_split_leakage"    -> (SampleOps.q_split_leakage _),
-    "q_split_group"      -> (SampleOps.q_split_group _),
-    "q_mix_budget"       -> ((s, d) => SampleOps.q_mix_budget(s, d)),
-    "q_mix_temp"         -> ((s, d) => SampleOps.q_mix_temp(s, d)),
-    "q_mix_epoch"        -> ((s, d) => SampleOps.q_mix_epoch(s, d)),
-    "q_shuffle_shards"   -> ((s, d) => SampleOps.q_shuffle_shards(s, d)),
-    "q_shard_quality"    -> ((s, d) => SampleOps.q_shard_quality(s, d)),
-    "q_dp_hist"          -> ((s, d) => SampleOps.q_dp_hist(s, d)),
-    "q_kanon"            -> ((s, d) => SampleOps.q_kanon(s, d)),
-    "q_ldiversity"       -> ((s, d) => SampleOps.q_ldiversity(s, d)),
-    "q_tcloseness"       -> ((s, d) => SampleOps.q_tcloseness(s, d)),
-    "q_dp_quantile"      -> ((s, d) => SampleOps.q_dp_quantile(s, d)),
-    "q_dp_topk"          -> ((s, d) => SampleOps.q_dp_topk(s, d)),
-    "q_sample_es"        -> ((s, d) => SampleOps.q_sample_es(s, d)),
-    "q_shard_manifest"   -> ((s, d) => SampleOps.q_shard_manifest(s, d)),
-    "q_zorder"           -> ((s, d) => SampleOps.q_zorder(s, d)),
-    "q_dsir"             -> (SampleOps.q_dsir _),
-    "q_length_buckets"   -> (SampleOps.q_length_buckets _),
-    "q_curriculum"       -> ((s, d) => SampleOps.q_curriculum(s, d)),
-    "q_sample_reservoir" -> ((s, d) => SampleOps.q_sample_reservoir(s, d)),
-    "q_pipeline_prep"    -> (SampleOps.q_pipeline_prep _),
-    "q_pack_sequences"   -> ((s, d) => SampleOps.q_pack_sequences(s, d)),
-    // §2.11 embedding utilities
-    "q_embed_stats"    -> (EmbedOps.q_embed_stats _),
-    "q_embed_quant"    -> (EmbedOps.q_embed_quant _),
-    "q_embed_calib"    -> (EmbedOps.q_embed_calib _),
-    "q_embed_drift"    -> (EmbedOps.q_embed_drift _),
-    "q_embed_cov"      -> (EmbedOps.q_embed_cov _),
-    "q_pca_power"      -> ((s, d) => EmbedOps.q_pca_power(s, d)),
-    "q_pca_project"    -> (EmbedOps.q_pca_project _),
-    "q_embed_outliers" -> ((s, d) => EmbedOps.q_embed_outliers(s, d)),
-    "q_embed_rp"       -> (EmbedOps.q_embed_rp _),
-    "q_embed_centroid" -> ((s, d) => EmbedOps.q_embed_centroid(s, d)),
-    "q_embed_train"    -> ((s, d) => KMeansOps.q_embed_train(s, d)),
-    "q_silhouette"     -> ((s, d) => KMeansOps.q_silhouette(s, d)),
-    "q_prune_proto"    -> ((s, d) => KMeansOps.q_prune_proto(s, d)),
-    "q_kcenter"        -> ((s, d) => EmbedOps.q_kcenter(s, d)),
-    // §2.11 multimodal plumbing (⊘ — stubbed codec, rows-only check)
-    "q_media_features" -> (Multimodal.mediaFeaturesFlat _),
-    "q_media_frames"   -> ((s, d) => Multimodal.q_media_frames(s, d)),
-    "q_media_resize"   -> ((s, d) => Multimodal.resizeMeta(s, d)),
-    "q_media_decode"   -> ((s, d) => Multimodal.q_media_decode(s, d)),
-    "q_media_audio"    -> ((s, d) => Multimodal.q_media_audio(s, d)),
-    "q_media_phash"    -> ((s, d) => Multimodal.q_media_phash(s, d)),
-    "q_media_dedup"    -> ((s, d) => Multimodal.q_media_dedup(s, d)),
-    "q_media_frame_meta" -> ((s, d) => Multimodal.q_media_frame_meta(s, d)),
-  )
-
-  /** DuckDB CTE block `w,h,v,s` computing the 63-bit SimHash per
-    * document — bit b of the simhash = bit b%4 of hex nibble b/4 of
-    * md5(word), identical in both engines. Shared by the q_simhash /
-    * q_dedup_simhash / q_dup_clusters oracles.
-    */
-  private def duckSimhashCtes: String = {
-    val votes = (0 until 63).map { b =>
-      s"  sum(CASE WHEN (((strpos('0123456789abcdef', substr(hx,${b / 4 + 1},1)) - 1) >> ${b % 4}) & 1) = 1 THEN 1 ELSE -1 END) AS v$b"
-    }.mkString(",\n")
-    val bits = (0 until 63).map(b => s"(CASE WHEN v$b > 0 THEN ${1L << b} ELSE 0 END)").mkString(" + ")
-    s"""w AS (SELECT DISTINCT doc_id, unnest(string_split(text,' ')) AS word FROM documents),
-       |h AS (SELECT doc_id, substr(md5(word),1,16) AS hx FROM w),
-       |v AS (SELECT doc_id,
-       |$votes
-       |FROM h GROUP BY doc_id),
-       |s AS (SELECT doc_id, CAST($bits AS BIGINT) AS simhash FROM v)""".stripMargin
+  /** Every family's keys, sorted by name; a name registered twice fails here. */
+  val keys: Seq[Key] = {
+    val all = Seq(BpeOps.keys, ClusterOps.keys, DedupOps.keys, EmbedOps.keys,
+      GraphOps.keys, KMeansOps.keys, Multimodal.keys, RankOps.keys,
+      Relational.keys, SampleOps.keys, SimilarityOps.keys, SketchOps.keys,
+      TextOps.keys, TimeSeries.keys, UnigramOps.keys, Windows.keys).flatten
+    val dups = all.groupBy(_.name).collect { case (n, ks) if ks.size > 1 => n }
+    require(dups.isEmpty, s"query keys registered twice: ${dups.toSeq.sorted.mkString(", ")}")
+    all.sortBy(_.name)
   }
 
-  /** The k-means kernel's DuckDB CTE chain (v, c0, then s/a/pe/m/c per
-    * iteration, ending in c`iters`): bounded window vec_id < 256,
-    * first-8-by-id init, ordered-fold M-step rounded to 6 and cast
-    * REAL so both engines carry bit-identical centroids. Shared by the
-    * q_embed_train and q_silhouette oracles so the evaluated model
-    * cannot drift from the trained one.
-    */
-  private def duckKmeansCtes(iters: Int): String = {
-    val stepCtes = (1 to iters).map { i =>
-      val prev = if (i == 1) "c0" else s"c${i - 1}"
-      s"""s$i AS (SELECT v.vec_id, c.cent_id, list_cosine_similarity(v.e, c.cv) AS c
-         |  FROM v, $prev c),
-         |a$i AS (SELECT vec_id, cent_id AS cell FROM (
-         |    SELECT vec_id, cent_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, cent_id) AS rn
-         |    FROM s$i) WHERE rn = 1),
-         |pe$i AS (SELECT a.cell, v.vec_id,
-         |    CAST(generate_subscripts(v.e,1) - 1 AS BIGINT) AS dim, unnest(v.e) AS val
-         |  FROM a$i a JOIN v USING (vec_id)),
-         |m$i AS (SELECT cell, dim,
-         |    CAST(round(list_sum(list(val ORDER BY vec_id)) / count(*), 6) AS REAL) AS m
-         |  FROM pe$i GROUP BY cell, dim),
-         |c$i AS (SELECT cell AS cent_id, list(m::DOUBLE ORDER BY dim) AS cv
-         |  FROM m$i GROUP BY cell)""".stripMargin
-    }.mkString(",\n")
-    s"""v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings WHERE vec_id < 256),
-       |c0 AS (SELECT vec_id AS cent_id, embedding::DOUBLE[] AS cv FROM embeddings WHERE vec_id < 8),
-       |$stepCtes""".stripMargin
-  }
+  /** Each key's Spark function, by name. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    keys.map(k => k.name -> k.run).toMap
 
-  /** The integer power-iteration CTE chain (xq quantized vectors,
-    * covariance cells → mu → symmetric mat, it0..it`iters` iterations
-    * ending with x`iters`'s max) — shared by the q_pca_power and
-    * q_pca_project oracles. w$k is referenced twice (x$k and it$k)
-    * and the chain nests K deep: without AS MATERIALIZED, inlined-CTE
-    * re-evaluation makes the plan 2^K copies of the whole prefix
-    * (measured: the sf0.01 oracle never finished). MATERIALIZED pins
-    * the evaluate-once semantics the Spark side gets from
-    * localCheckpoint.
-    */
-  private def duckPcaCtes(iters: Int): String = {
-    val steps = (1 to iters).map { k =>
-      val prev = s"it${k - 1}"
-      s"""w$k AS MATERIALIZED (
-         |  SELECT m.i AS dim, CAST(sum(m.m * v.v) AS BIGINT) AS w
-         |  FROM mat m JOIN $prev v ON m.j = v.dim GROUP BY 1),
-         |x$k AS (SELECT CAST(max(abs(w)) AS BIGINT) AS mx FROM w$k),
-         |it$k AS (SELECT dim, CASE WHEN mx > 0 THEN
-         |    (CASE WHEN w >= 0 THEN (w * 100000) // mx
-         |     ELSE -(((-w) * 100000) // mx) END)
-         |  ELSE 0 END AS v FROM w$k, x$k)""".stripMargin
-    }.mkString(",\n")
-    s"""x0 AS (SELECT vec_id,
-       |    CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS d,
-       |    unnest(embedding::DOUBLE[]) AS v
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |xq AS (SELECT vec_id, d, CAST(floor(v * 1e6 + 0.5) AS BIGINT) AS q
-       |       FROM x0),
-       |cells AS (SELECT a.d AS i, b.d AS j, CAST(count(*) AS BIGINT) AS n,
-       |    CAST(sum(a.q * b.q) AS BIGINT) AS s_ij
-       |  FROM xq a JOIN xq b ON a.vec_id = b.vec_id AND a.d <= b.d
-       |  GROUP BY 1, 2),
-       |dvs AS (SELECT d, CAST(sum(q) AS BIGINT) AS s FROM xq GROUP BY 1),
-       |mu AS (SELECT c.i, c.j,
-       |    CAST(CASE WHEN CAST(c.n AS HUGEINT) * c.s_ij - CAST(di.s AS HUGEINT) * dj.s >= 0
-       |      THEN (CAST(c.n AS HUGEINT) * c.s_ij - CAST(di.s AS HUGEINT) * dj.s)
-       |           // (CAST(c.n AS HUGEINT) * c.n * 1000000)
-       |      ELSE -((CAST(di.s AS HUGEINT) * dj.s - CAST(c.n AS HUGEINT) * c.s_ij)
-       |             // (CAST(c.n AS HUGEINT) * c.n * 1000000))
-       |    END AS BIGINT) AS m
-       |  FROM cells c JOIN dvs di ON c.i = di.d JOIN dvs dj ON c.j = dj.d),
-       |mat AS MATERIALIZED (SELECT i, j, m FROM mu
-       |        UNION ALL SELECT j, i, m FROM mu WHERE i <> j),
-       |it0 AS (SELECT DISTINCT i AS dim, CAST(100000 AS BIGINT) AS v
-       |        FROM mat),
-       |$steps""".stripMargin
-  }
-
-  /** The stupid-backoff CTE chain ending in `per` (one row per scored
-    * doc: doc_id, n_trigrams, n_tri, n_bi, n_uni, sum_score_fp) —
-    * shared by the q_lm_backoff / q_mix_lm / q_minkprob oracles so
-    * every consumer reads exactly the scored table. `posFilter`
-    * selects the scored population (held-out half for the LM evals,
-    * every doc for membership inference).
-    */
-  private def duckBackoffCtes(posFilter: String = "doc_id % 2 = 1"): String =
-    s"""t AS (SELECT doc_id, string_split(text, ' ') AS w
-      |           FROM documents WHERE text IS NOT NULL),
-      |u AS (SELECT unnest(w) AS tok FROM t WHERE doc_id % 2 = 0),
-      |c1 AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM u GROUP BY 1),
-      |nt AS (SELECT CAST(count(*) AS BIGINT) AS n_train FROM u),
-      |c2 AS (SELECT bg, CAST(count(*) AS BIGINT) AS c FROM
-      |  (SELECT unnest([array_to_string(w[i:i+1], ' ') for i in range(1, len(w))]) AS bg
-      |   FROM t WHERE doc_id % 2 = 0 AND len(w) >= 2) GROUP BY 1),
-      |c3 AS (SELECT tg, CAST(count(*) AS BIGINT) AS c FROM
-      |  (SELECT unnest([array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]) AS tg
-      |   FROM t WHERE doc_id % 2 = 0 AND len(w) >= 3) GROUP BY 1),
-      |p AS (SELECT doc_id,
-      |    unnest([w[i] for i in range(1, len(w)-1)]) AS w1,
-      |    unnest([w[i+1] for i in range(1, len(w)-1)]) AS w2,
-      |    unnest([w[i+2] for i in range(1, len(w)-1)]) AS w3
-      |  FROM t WHERE ($posFilter) AND len(w) >= 3),
-      |sc AS (SELECT p.doc_id, t3.c AS c123, b12.c AS c12, b23.c AS c23,
-      |    u2.c AS cw2, u3.c AS cw3, nt.n_train
-      |  FROM p
-      |  LEFT JOIN c3 t3 ON t3.tg = p.w1 || ' ' || p.w2 || ' ' || p.w3
-      |  LEFT JOIN c2 b12 ON b12.bg = p.w1 || ' ' || p.w2
-      |  LEFT JOIN c2 b23 ON b23.bg = p.w2 || ' ' || p.w3
-      |  LEFT JOIN c1 u2 ON u2.tok = p.w2
-      |  LEFT JOIN c1 u3 ON u3.tok = p.w3
-      |  CROSS JOIN nt),
-      |per AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_trigrams,
-      |    CAST(sum(CASE WHEN c123 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_tri,
-      |    CAST(sum(CASE WHEN c123 IS NULL AND c23 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_bi,
-      |    CAST(sum(CASE WHEN c123 IS NULL AND c23 IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_uni,
-      |    CAST(sum(CASE WHEN c123 IS NOT NULL THEN (c123 * 1000000000) // c12
-      |      WHEN c23 IS NOT NULL THEN (2 * c23 * 1000000000) // (5 * cw2)
-      |      ELSE (4 * coalesce(cw3, 0) * 1000000000) // (25 * n_train) END) AS BIGINT) AS sum_score_fp
-      |  FROM sc GROUP BY 1)""".stripMargin
-
-  /** Integer value of the first `chars` hex chars of md5(doc_id) in
-    * DuckDB SQL — mirrors SampleOps.hashDraw (Spark `conv`) nibble for
-    * nibble.
-    */
-  /** The weighted quality score in DuckDB SQL — mirrors
-    * TextOps.qualityScore EXACTLY, including the empty-text guard
-    * (null text stays null via null arithmetic). One source for every
-    * oracle that emits or filters on the score (q_text_quality,
-    * q_pipeline_prep, q_sample_weighted), so a formula tweak cannot
-    * drift the copies apart.
-    */
-  private def duckQualityScore: String =
-    """round(0.4 * (CAST(len(list_filter(string_split(text,' '), w -> w IN ('the','a','of','and'))) AS DOUBLE)
-      |               / len(string_split(text,' ')))
-      |      + 0.3 * least(CAST(len(string_split(text,' ')) AS DOUBLE) / 100.0, 1.0)
-      |      + 0.3 * (1.0 - CASE WHEN length(text) = 0 THEN 0.0 ELSE
-      |               CAST(length(text) - length(regexp_replace(text, '[.,;:!?''"()\[\]{}-]', '', 'g')) AS DOUBLE)
-      |               / length(text) END), 10)""".stripMargin
-
-  /** The BM25 scoring pipeline as a reusable CTE chain ending in
-    * `agg(query_id, doc_id, score_fp)` — one source of truth for the
-    * four oracles that rank by it (q_bm25, q_rrf, q_rbo, q_ndcg), so
-    * a scoring tweak in one cannot silently desync the other three
-    * (the duckQualityScore stance). Lucene idf ln((N+1)/(df+0.5)) at
-    * k1=1.2/b=0.75 cleared to the exact integer identity by
-    * multiplying through by 10*S; tf-part quantized ×1e6
-    * round-half-up; score = exact long sum of the products.
-    */
-  private def duckBm25Ctes: String =
-    """t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-      |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-      |       FROM t WHERE len(term) > 0 GROUP BY 1, 2),
-      |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-      |df AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-      |tot AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM documents) AS n_docs,
-      |               (SELECT CAST(sum(tf) AS BIGINT) FROM tf) AS s_tok),
-      |q AS (SELECT doc_id AS query_id, term FROM tf WHERE doc_id < 10),
-      |sc AS (SELECT q.query_id, tf.doc_id,
-      |         CAST(round(ln(CAST(2*n_docs + 2 AS DOUBLE) /
-      |           CAST(2*df.df + 1 AS DOUBLE)) * 1e9) AS BIGINT)
-      |         * ((2 * 22 * tf.tf * s_tok * 1000000 +
-      |             (10 * s_tok * tf.tf + 3 * s_tok + 9 * dl.dl * n_docs))
-      |            // (2 * (10 * s_tok * tf.tf + 3 * s_tok + 9 * dl.dl * n_docs))) AS c
-      |       FROM q JOIN tf USING (term) JOIN df USING (term)
-      |            JOIN dl ON tf.doc_id = dl.doc_id, tot),
-      |agg AS (SELECT query_id, doc_id, CAST(sum(c) AS BIGINT) AS score_fp
-      |        FROM sc GROUP BY 1, 2)""".stripMargin
-
-  /** The winnowing fingerprint table as a reusable CTE chain ending in
-    * `wfp(doc_id, pos, fp)` — shared by the q_winnow and q_overlap
-    * oracles so the selection logic cannot drift between them. Mirrors
-    * DedupOps.winnowFps: word 4-grams (whole-text fallback under 4
-    * words, NULL docs contribute nothing), hash60 per gram, windows of
-    * 4, leftmost-min selection, 0-based gram positions.
-    */
-  private lazy val duckWinnowFps: String = {
-    val h60 = duckHexValue("md5(x)", 1, 15)
-    s"""t AS (
-       |  SELECT doc_id, CASE WHEN len(w) >= 4
-       |    THEN [array_to_string(w[i:i+3], ' ') for i in range(1, len(w)-2)]
-       |    ELSE [text] END AS gs
-       |  FROM (SELECT doc_id, text, string_split(text, ' ') AS w FROM documents
-       |        WHERE text IS NOT NULL)),
-       |h AS (SELECT doc_id, [$h60 for x in gs] AS hs FROM t),
-       |wdw AS (SELECT doc_id, hs,
-       |        unnest(range(0, greatest(len(hs) - 3, 1))) AS j FROM h),
-       |sel AS (SELECT doc_id,
-       |         CAST(j + list_position(hs[j+1 : j+4], list_min(hs[j+1 : j+4])) - 1
-       |              AS BIGINT) AS pos,
-       |         list_min(hs[j+1 : j+4]) AS fp
-       |        FROM wdw),
-       |wfp AS (SELECT DISTINCT doc_id, pos, fp FROM sel)""".stripMargin
-  }
-
-  /** Full WITH-RECURSIVE body replaying [[graft.queries.UnigramOps]]'
-    * hard-EM unigram trainer: candidate seeding, seed scores, and per
-    * EM round a forward-Viterbi recursive CTE (dp$k — one row per
-    * word carrying the growing best[] list), the backward extraction
-    * (ex$k — piece lengths appended last-first, the enc = score·8+len
-    * argmax with positive-mod length recovery), segmentation usage,
-    * and the add-one-smoothed rescore. Shared by the q_unigram_train
-    * and q_unigram_encode oracles; every fan-out CTE is pinned
-    * AS MATERIALIZED (the q_pca_power inlined-CTE lesson). `sub17`
-    * replaces the lateral range() DuckDB 1.0 rejects inside a
-    * recursive step; its upper bound is DERIVED from the corpus
-    * (max word length, floor 16 — ADVICE r13: the former fixed 1..16
-    * range silently skipped substrings starting past position 16 and
-    * pieces past the 16th on any corpus with longer words, diverging
-    * from the unbounded Spark side via a puzzling hash mismatch
-    * instead of loudly), guarded per-use by length predicates.
-    */
-  private def duckUnigramCtes(topM: Int, rounds: Int = 2): String = {
-    val BIGNEG = "CAST(-1000000000000000 AS BIGINT)"
-    def emRound(k: Int, vv: String): String =
-      s"""dp$k AS (
-         |  SELECT word, n, ps, ss, [CAST(0 AS BIGINT)] AS bests, 0 AS j
-         |  FROM w, $vv
-         |  UNION ALL
-         |  SELECT word, n, ps, ss, list_append(bests,
-         |    list_max(list_transform([1,2,3,4], l -> CASE WHEN j + 1 - l >= 0
-         |      THEN bests[j + 2 - l] +
-         |        coalesce(ss[list_position(ps, substr(word, j + 2 - l, l))], $BIGNEG)
-         |      END))), j + 1
-         |  FROM dp$k WHERE j < length(word)),
-         |dpf$k AS MATERIALIZED (SELECT word, n, ps, ss, bests FROM dp$k
-         |  WHERE j = length(word)),
-         |obj$k AS (SELECT CAST(sum(n * bests[length(word) + 1]) AS BIGINT) AS obj
-         |  FROM dpf$k),
-         |ex$k AS (
-         |  SELECT word, n, ps, ss, bests, CAST([] AS BIGINT[]) AS lens,
-         |    length(word) AS j
-         |  FROM dpf$k
-         |  UNION ALL
-         |  SELECT word, n, ps, ss, bests, list_append(lens, ((m % 8) + 8) % 8),
-         |    j - (((m % 8) + 8) % 8)
-         |  FROM (SELECT *, list_max(list_transform([1,2,3,4], l -> CASE WHEN l <= j
-         |          THEN (bests[j + 1 - l] +
-         |            coalesce(ss[list_position(ps, substr(word, j + 1 - l, l))],
-         |              $BIGNEG)) * 8 + l END)) AS m
-         |        FROM ex$k WHERE j > 0)),
-         |seg$k AS MATERIALIZED (
-         |  SELECT word, n, substr(word,
-         |      length(word) - CAST(list_sum(lens[1:CAST(g.k AS INT)]) AS BIGINT) + 1,
-         |      lens[CAST(g.k AS INT)]) AS piece
-         |  FROM (SELECT word, n, lens FROM ex$k WHERE j = 0), sub17 g
-         |  WHERE g.k <= len(lens)),
-         |usage$k AS MATERIALIZED (
-         |  SELECT v.piece, CAST(coalesce(sum(s.n), 0) AS BIGINT) AS u
-         |  FROM vocab v LEFT JOIN seg$k s ON v.piece = s.piece GROUP BY 1),
-         |tot$k AS (SELECT CAST(sum(u) AS BIGINT) AS t, CAST(count(*) AS BIGINT) AS v
-         |  FROM usage$k),
-         |sc$k AS MATERIALIZED (
-         |  SELECT piece, u,
-         |    CAST(round(ln(CAST(u + 1 AS DOUBLE) / (t + v)) * 1e9) AS BIGINT) AS score
-         |  FROM usage$k, tot$k),
-         |vv$k AS MATERIALIZED (SELECT list(piece ORDER BY piece) AS ps,
-         |  list(score ORDER BY piece) AS ss FROM sc$k)""".stripMargin
-    s"""w AS MATERIALIZED (SELECT word, CAST(count(*) AS BIGINT) AS n FROM (
-       |    SELECT unnest(string_split(text, ' ')) AS word FROM documents
-       |    WHERE text IS NOT NULL) WHERE length(word) > 0 GROUP BY 1),
-       |sub17 AS (SELECT unnest(range(1,
-       |    greatest(17, (SELECT max(length(word)) + 1 FROM w)))) AS k),
-       |cand AS MATERIALIZED (
-       |  SELECT substr(word, CAST(s.k AS INT), CAST(ls.l AS INT)) AS piece,
-       |    CAST(sum(n) AS BIGINT) AS f
-       |  FROM w, sub17 s, (SELECT unnest([1,2,3,4]) AS l) ls
-       |  WHERE s.k + ls.l - 1 <= length(word)
-       |  GROUP BY 1),
-       |vocab AS MATERIALIZED (
-       |  SELECT piece FROM cand WHERE length(piece) = 1
-       |  UNION ALL
-       |  SELECT piece FROM (SELECT piece FROM cand WHERE length(piece) > 1
-       |                     ORDER BY f DESC, piece LIMIT $topM)),
-       |ftot AS (SELECT CAST(sum(f) AS BIGINT) AS ft FROM cand JOIN vocab USING (piece)),
-       |sc0 AS MATERIALIZED (
-       |  SELECT piece, CAST(round(ln(CAST(f AS DOUBLE) / ft) * 1e9) AS BIGINT) AS score
-       |  FROM cand JOIN vocab USING (piece), ftot),
-       |vv0 AS MATERIALIZED (SELECT list(piece ORDER BY piece) AS ps,
-       |  list(score ORDER BY piece) AS ss FROM sc0),
-       |${(1 to rounds).map(k => emRound(k, s"vv${k - 1}")).mkString(",\n")}"""
-      .stripMargin
-  }
-
-  /** Generated-SQL replay of [[graft.queries.SimilarityOps
-    * .q_select_mmr]]'s greedy chain: rel scores once, then k CTE
-    * steps s1..sK, each picking the (score_fp DESC, vec_id) argmax
-    * over the not-yet-selected candidates with max-sim-to-selected
-    * spelled as greatest() over one correlated scalar subquery per
-    * prior one-row step. Every step AS MATERIALIZED (DuckDB re-inlines
-    * CTEs per reference — an unmaterialized s1 would re-run inside
-    * every later step's subqueries multiplicatively).
-    */
-  private def duckMmrSql(k: Int): String = {
-    def fpcos(a: String, b: String) =
-      s"CAST(floor(list_cosine_similarity($a::DOUBLE[], $b::DOUBLE[]) * 1e6 + 0.5) AS BIGINT)"
-    val steps = (1 to k).map { i =>
-      if (i == 1)
-        s"""s1 AS MATERIALIZED (
-           |  SELECT vec_id, rel_fp, CAST(NULL AS BIGINT) AS maxsim_fp,
-           |    rel_fp AS score_fp, embedding
-           |  FROM rel ORDER BY rel_fp DESC, vec_id LIMIT 1)""".stripMargin
-      else {
-        val subs = (1 until i).map(j =>
-          s"(SELECT ${fpcos("r.embedding", "s.embedding")} FROM s$j s)")
-        val ms =
-          if (subs.length == 1) subs.head
-          else s"greatest(${subs.mkString(", ")})"
-        val excl = (1 until i).map(j => s"SELECT vec_id FROM s$j")
-          .mkString(" UNION ALL ")
-        s"""s$i AS MATERIALIZED (
-           |  SELECT vec_id, rel_fp, maxsim_fp, rel_fp - maxsim_fp AS score_fp,
-           |    embedding
-           |  FROM (SELECT r.vec_id, r.rel_fp, r.embedding, $ms AS maxsim_fp
-           |        FROM rel r WHERE r.vec_id NOT IN ($excl))
-           |  ORDER BY score_fp DESC, vec_id LIMIT 1)""".stripMargin
-      }
-    }
-    val unions = (1 to k).map(i =>
-      s"SELECT CAST($i AS BIGINT) AS rank, vec_id, rel_fp, maxsim_fp, score_fp FROM s$i")
-      .mkString("\n  UNION ALL ")
-    s"""WITH q AS (SELECT embedding AS qv FROM embeddings
-       |  WHERE vec_id = 0 AND embedding IS NOT NULL AND len(embedding) > 0),
-       |rel AS MATERIALIZED (
-       |  SELECT c.vec_id, ${fpcos("c.embedding", "q.qv")} AS rel_fp, c.embedding
-       |  FROM embeddings c, q
-       |  WHERE c.vec_id > 0 AND c.embedding IS NOT NULL AND len(c.embedding) > 0),
-       |${steps.mkString(",\n")}
-       |SELECT * FROM (
-       |  $unions)
-       |ORDER BY rank""".stripMargin
-  }
-
-  /** Full WITH-body CTE chain deriving the BPE merge tables m1..mK
-    * (pat, mrg, cnt) plus rewritten vocabs v0..vK from the documents
-    * corpus — shared by the q_bpe_train, q_bpe_encode, q_tok_fertility
-    * and q_bpe_sweep oracles so the fit the encoder applies is BY
-    * CONSTRUCTION the fit the trainer reports. v0/m_i/v_i are pinned
-    * AS MATERIALIZED (the q_pca_power inlined-CTE lesson): each m_i is
-    * referenced by v_i AND by every downstream scalar subquery
-    * (q_bpe_sweep's checkpoint columns reference m_1 four times), and
-    * DuckDB re-inlines an unmaterialized CTE per reference — the whole
-    * training prefix would re-evaluate multiplicatively.
-    */
-  private def duckBpeTrainCtes(merges: Int): String = {
-    val steps = (1 to merges).map { i =>
-      val prev = if (i == 1) "v0" else s"v${i - 1}"
-      s"""p$i AS (SELECT pat, CAST(sum(n) AS BIGINT) AS cnt FROM (
-         |    SELECT n, unnest(list_transform(range(1, len(syms)), j ->
-         |      '<' || syms[j] || '><' || syms[j + 1] || '>')) AS pat
-         |    FROM (SELECT n, string_split(substr(r, 2, length(r) - 2), '><') AS syms
-         |          FROM $prev)) GROUP BY pat),
-         |m$i AS MATERIALIZED (SELECT pat, replace(pat, '><', '') AS mrg, cnt
-         |        FROM p$i ORDER BY cnt DESC, pat LIMIT 1),
-         |v$i AS MATERIALIZED (SELECT n, replace(v.r, m.pat, m.mrg) AS r FROM $prev v, m$i m)"""
-        .stripMargin
-    }.mkString(",\n")
-    s"""w AS (SELECT word, count(*) AS n FROM (
-       |    SELECT unnest(string_split(text, ' ')) AS word FROM documents
-       |    WHERE text IS NOT NULL)
-       |  WHERE length(word) > 1 GROUP BY 1),
-       |v0 AS MATERIALIZED (SELECT n, '<' || array_to_string(string_split(word, ''), '><') || '>' AS r
-       |       FROM w),
-       |$steps""".stripMargin
-  }
-
-  private def duckHashDraw(chars: Int): String = {
-    val h = s"substr(md5(CAST(doc_id AS VARCHAR)),1,$chars)"
-    (1 to chars).map { i =>
-      val weight = 1L << (4 * (chars - i))
-      s"(strpos('0123456789abcdef', substr($h,$i,1)) - 1) * $weight"
-    }.mkString("(", " + ", ")")
-  }
-
-  /** Hex-window→BIGINT nibble arithmetic over a hex string expression
-    * `h`, reading `chars` nibbles starting at 1-based `from` (same
-    * per-nibble form as [[duckHashDraw]]).
-    */
-  private def duckHexValue(h: String, from: Int, chars: Int): String =
-    (0 until chars).map { i =>
-      val weight = 1L << (4 * (chars - 1 - i))
-      s"(strpos('0123456789abcdef', substr($h,${from + i},1)) - 1) * $weight"
-    }.mkString("(", " + ", ")")
-
-  /** MinHash function i over a `shingles` list column, mirroring
-    * DedupOps.signatures' digest reuse: seeded digest (i+1)/2, 60-bit
-    * hex window at char 1 (odd i) or 17 (even i), list_min.
-    */
-  private def duckMinhash(i: Int): String = {
-    val seed = (i + 1) / 2
-    val off = if (i % 2 == 1) 1 else 17
-    s"list_min(list_transform([md5('$seed:' || x) for x in shingles], " +
-      s"h -> ${duckHexValue("h", off, 15)}))"
-  }
-
-  /** DuckDB-dialect oracle SQL, one per oracle-checkable query key.
-    * Column names and types are aligned with the Spark outputs
-    * (counts/epochs as BIGINT, doubles rounded identically).
-    */
-  private lazy val oracleSqlBase: Map[String, String] = Map(
-    "q_scan_project" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag
-        |FROM lineitem WHERE l_quantity > 30
-        |ORDER BY l_orderkey, l_linenumber, l_quantity, l_returnflag""".stripMargin,
-    "q_filter_pred" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_discount, l_returnflag
-        |FROM lineitem
-        |WHERE l_quantity >= 45 AND l_discount < 0.05 AND l_returnflag <> 'A'
-        |ORDER BY l_orderkey, l_linenumber, l_quantity, l_discount, l_returnflag""".stripMargin,
-    "q_filter_isin" ->
-      """SELECT c_custkey, c_name, c_mktsegment, c_nationkey FROM customer
-        |WHERE c_mktsegment IN ('BUILDING','MACHINERY') AND c_nationkey NOT IN (3,7)
-        |ORDER BY c_custkey""".stripMargin,
-    "q_join_inner" ->
-      """SELECT c_mktsegment, count(*) AS n_orders, CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))),2) AS DOUBLE) AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q_join_broadcast" ->
-      """SELECT p_brand, count(*) AS n_items,
-        |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))),2) AS DOUBLE) AS net_revenue
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-    "q_join_lookup" ->
-      """SELECT c_custkey, c_mktsegment,
-        |  CASE c_mktsegment WHEN 'BUILDING' THEN 'construction'
-        |    WHEN 'AUTOMOBILE' THEN 'vehicles'
-        |    WHEN 'MACHINERY' THEN 'industrial' ELSE 'other' END AS tier
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q_join_semi" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "q_join_anti" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus = 'P')
-        |ORDER BY c_custkey""".stripMargin,
-    "q_join_range" ->
-      """SELECT tier, count(*) AS n, CAST(round(sum(CAST(value AS DECIMAL(18,2))),2) AS DOUBLE) AS sum_value
-        |FROM events JOIN (VALUES ('low',0.0,50.0),('mid',50.0,200.0),('high',200.0,1000.0))
-        |  AS t(tier,lo,hi) ON value >= lo AND value < hi
-        |GROUP BY tier ORDER BY tier""".stripMargin,
-    // binned rewrite must be result-identical to the plain range join
-    "q_join_range_binned" ->
-      """SELECT tier, count(*) AS n, CAST(round(sum(CAST(value AS DECIMAL(18,2))),2) AS DOUBLE) AS sum_value
-        |FROM events JOIN (VALUES ('low',0.0,50.0),('mid',50.0,200.0),('high',200.0,1000.0))
-        |  AS t(tier,lo,hi) ON value >= lo AND value < hi
-        |GROUP BY tier ORDER BY tier""".stripMargin,
-    "q_agg_hash" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(round(sum(CAST(l_quantity AS DECIMAL(18,2))),2) AS DOUBLE) AS sum_qty,
-        |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2))),2) AS DOUBLE) AS sum_base_price,
-        |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))),2) AS DOUBLE) AS sum_disc_price,
-        |  round(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*), 4) AS avg_qty,
-        |  round(CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) / count(*), 4) AS avg_disc,
-        |  count(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_agg_count" -> "SELECT count(*) AS n_rows FROM lineitem",
-    "q_join_outer" ->
-      """WITH oagg AS (SELECT o_custkey, count(*) AS n_orders FROM orders
-        |  WHERE o_orderstatus = 'P' AND o_totalprice > 200000 GROUP BY o_custkey),
-        |rich AS (SELECT c_custkey, c_name FROM customer WHERE c_acctbal > 9000)
-        |SELECT coalesce(c_custkey, o_custkey) AS custkey, c_name, n_orders
-        |FROM rich FULL OUTER JOIN oagg ON c_custkey = o_custkey
-        |ORDER BY custkey""".stripMargin,
-    // the salted join must be RESULT-identical to the plain join — the
-    // salt is a physical rewrite, so the oracle doesn't mention it
-    "q_join_skew" ->
-      """SELECT o_orderkey, o_custkey, c_name, o_totalprice
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_window_range" ->
-      """SELECT o_custkey, o_orderkey,
-        |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-        |    PARTITION BY o_custkey ORDER BY o_orderdate
-        |    RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW), 2) AS DOUBLE)
-        |    AS trailing_30d
-        |FROM orders
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q_string_agg" ->
-      """SELECT o_orderpriority,
-        |  string_agg(DISTINCT o_orderstatus, ',' ORDER BY o_orderstatus) AS statuses,
-        |  count(DISTINCT o_orderstatus) AS n_statuses
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q_agg_distinct" ->
-      """SELECT count(DISTINCT l_partkey) AS n_parts,
-        |  count(DISTINCT l_suppkey) AS n_supps,
-        |  count(DISTINCT l_orderkey) AS n_orders
-        |FROM lineitem""".stripMargin,
-    // HLL bound-check oracles (round 11): the sketch estimate itself
-    // is engine-specific, so the verified surface is exact counts plus
-    // booleans the SPARK side computes from the estimate — a hash
-    // match proves the rsd=1% estimate landed within +-5 % (and, for
-    // q_sketch_merge's global row, that union-of-partials tracks the
-    // single-pass rebuild within 2%). A sketch regression flips a
-    // boolean and reds the row.
-    "q_agg_approx" ->
-      """SELECT count(DISTINCT l_partkey) AS exact_parts,
-        |  count(DISTINCT l_orderkey) AS exact_orders,
-        |  TRUE AS parts_within_5pct, TRUE AS orders_within_5pct
-        |FROM lineitem""".stripMargin,
-    "q_sketch_merge" ->
-      """WITH pn AS (
-        |  SELECT CAST(c_nationkey AS BIGINT) AS c_nationkey,
-        |    count(DISTINCT c_custkey) AS exact_distinct
-        |  FROM customer GROUP BY 1)
-        |SELECT c_nationkey, exact_distinct,
-        |  TRUE AS est_within_5pct, TRUE AS merge_tracks_rebuild FROM pn
-        |UNION ALL
-        |SELECT -1, CAST(sum(exact_distinct) AS BIGINT), TRUE, TRUE FROM pn
-        |ORDER BY c_nationkey""".stripMargin,
-    // the hash-verifiable half of the sketch family
-    "q_sketch_exact" ->
-      """WITH pn AS (
-        |  SELECT CAST(c_nationkey AS BIGINT) AS c_nationkey,
-        |    count(DISTINCT c_custkey) AS exact_distinct
-        |  FROM customer GROUP BY 1)
-        |SELECT c_nationkey, exact_distinct FROM pn
-        |UNION ALL
-        |SELECT -1, CAST(sum(exact_distinct) AS BIGINT) FROM pn
-        |ORDER BY c_nationkey""".stripMargin,
-    // histogram-sketch percentiles: 64 mergeable bin counts +
-    // deterministic linear interpolation, so the whole estimate chain
-    // is hash-verified (unlike t-digest/KLL)
-    "q_approx_pct" ->
-      """WITH b AS (
-        |  SELECT least(CAST(floor(CAST(l_extendedprice AS DOUBLE) / 1718.75) AS BIGINT), 63) AS bin
-        |  FROM lineitem),
-        |h AS (SELECT bin, count(*) AS n FROM b GROUP BY 1),
-        |c AS (SELECT bin, n, sum(n) OVER (ORDER BY bin) AS cum,
-        |             sum(n) OVER () AS total FROM h),
-        |p AS (SELECT CAST(unnest([0.5, 0.95, 0.99]) AS DOUBLE) AS p)
-        |SELECT p, round(bin * 1718.75 +
-        |         1718.75 * (p * total - (cum - n)) / n, 4) AS approx_value
-        |FROM p JOIN c ON c.cum >= p.p * c.total AND c.cum - c.n < p.p * c.total
-        |ORDER BY p""".stripMargin,
-    // KMV sketch: fully deterministic, so unlike HLL the whole
-    // build→merge→estimate pipeline is hash-verified. The rank window
-    // Count-Min Sketch over trigrams: the lane hash is the shared
-    // 60-bit md5 window, so DuckDB rebuilds every (lane, bucket)
-    // counter bit-for-bit — sketch build, point estimates, and the
-    // one-sided error column are all hash-verified longs.
-    "q_ngram_cms" -> {
-      val (depth, width, topK) = (4, 1024, 20)
-      s"""WITH w0 AS (SELECT list_filter(string_split(text, ' '), x -> x <> '') AS w
-         |            FROM documents WHERE text IS NOT NULL),
-         |g AS (SELECT unnest(list_transform(range(1, len(w) - 1),
-         |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS gram
-         |      FROM w0),
-         |lanes AS (SELECT unnest(range(0, $depth)) AS j),
-         |gb AS (SELECT g.gram, l.j,
-         |         substr(md5(CAST(l.j // 2 AS VARCHAR) || ':' || g.gram),
-         |                CASE WHEN l.j % 2 = 0 THEN 1 ELSE 17 END, 15) AS h
-         |       FROM g, lanes l),
-         |sketch AS (SELECT j AS lane, ${duckHexValue("h", 1, 15)} % $width AS bucket,
-         |         CAST(count(*) AS BIGINT) AS counter
-         |       FROM gb GROUP BY 1, 2),
-         |exact AS (SELECT gram, CAST(count(*) AS BIGINT) AS cnt FROM g
-         |       GROUP BY 1 ORDER BY cnt DESC, gram LIMIT $topK),
-         |pr AS (SELECT e.gram, e.cnt, l.j,
-         |         ${duckHexValue(s"substr(md5(CAST(l.j // 2 AS VARCHAR) || ':' || e.gram), CASE WHEN l.j % 2 = 0 THEN 1 ELSE 17 END, 15)", 1, 15)} % $width AS bucket
-         |       FROM exact e, lanes l),
-         |est AS (SELECT pr.gram, pr.cnt, min(s.counter) AS cms_est
-         |       FROM pr JOIN sketch s ON s.lane = pr.j AND s.bucket = pr.bucket
-         |       GROUP BY 1, 2)
-         |SELECT row_number() OVER (ORDER BY cnt DESC, gram) AS rank,
-         |  gram, cnt, cms_est, cms_est - cnt AS cms_err
-         |FROM est ORDER BY rank""".stripMargin
-    },
-    // Misra-Gries band check: the oracle computes the EXACT side
-    // (counts, total, threshold, share) and literal TRUE guarantee
-    // booleans - MG's estimate is partition-order-dependent but the
-    // retention + band facts are theorems, deterministic under any
-    // partitioning; a broken sketch merge flips them (q_agg_approx
-    // band-check stance)
-    "q_heavyhitters" ->
-      """WITH ch AS (SELECT unnest(string_split_regex(text, '')) AS c
-        |            FROM documents WHERE text IS NOT NULL),
-        |c2 AS (SELECT c FROM ch WHERE c <> ''),
-        |e AS (SELECT c, CAST(count(*) AS BIGINT) AS n_exact
-        |      FROM c2 GROUP BY 1),
-        |t AS (SELECT CAST(sum(n_exact) AS BIGINT) AS n_total FROM e)
-        |SELECT c, n_exact, n_total,
-        |  (2 * n_exact * 1000000 + n_total) // (2 * n_total) AS share_fp,
-        |  TRUE AS in_sketch, TRUE AS within_band
-        |FROM e, t WHERE n_exact * 17 > n_total ORDER BY c""".stripMargin,
-    // reproduces KmvAggregator's k smallest distinct 60-bit hashes.
-    "q_sketch_kmv" ->
-      s"""WITH h AS (
-         |  SELECT c_nationkey, ${duckHexValue("m", 1, 15)} AS hv
-         |  FROM (SELECT c_nationkey,
-         |          md5('kmv:' || CAST(c_custkey AS VARCHAR)) AS m
-         |        FROM customer)),
-         |pn AS (
-         |  SELECT CAST(c_nationkey AS BIGINT) AS c_nationkey, hv,
-         |         row_number() OVER (PARTITION BY c_nationkey ORDER BY hv) AS rn
-         |  FROM (SELECT DISTINCT c_nationkey, hv FROM h)),
-         |gl AS (
-         |  SELECT CAST(-1 AS BIGINT) AS c_nationkey, hv,
-         |         row_number() OVER (ORDER BY hv) AS rn
-         |  FROM (SELECT DISTINCT hv FROM h)),
-         |agg AS (
-         |  SELECT c_nationkey,
-         |    CAST(count(*) FILTER (WHERE rn <= 32) AS BIGINT) AS n_kept,
-         |    max(hv) FILTER (WHERE rn <= 32) AS kth_min
-         |  FROM (SELECT * FROM pn UNION ALL SELECT * FROM gl) GROUP BY 1)
-         |SELECT c_nationkey, n_kept, kth_min,
-         |  CASE WHEN n_kept < 32 THEN CAST(n_kept AS DOUBLE)
-         |       ELSE round(31.0 * 1152921504606846976.0 / kth_min, 4) END
-         |    AS approx_distinct
-         |FROM agg ORDER BY c_nationkey""".stripMargin,
-    "q_agg_rollup" ->
-      """SELECT coalesce(o_orderstatus,'ALL') AS status,
-        |  coalesce(o_orderpriority,'ALL') AS priority,
-        |  count(*) AS n, CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))),2) AS DOUBLE) AS total
-        |FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-        |ORDER BY status, priority""".stripMargin,
-    "q_agg_groupset" ->
-      """SELECT coalesce(o_orderstatus, 'ALL') AS status,
-        |  coalesce(o_orderpriority, 'ALL') AS priority,
-        |  count(*) AS n,
-        |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))),2) AS DOUBLE) AS total
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
-        |ORDER BY status, priority""".stripMargin,
-    "q_regexp_fn" ->
-      """SELECT doc_id,
-        |  regexp_extract(source, 'src(\d+)', 1) AS src_num,
-        |  regexp_matches(text, '\bspark\b') AS mentions_spark,
-        |  len(regexp_extract_all(text, '\btable\b')) AS n_table
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_cond_agg" ->
-      """SELECT o_orderpriority,
-        |  count(*) FILTER (WHERE o_totalprice > 250000.0) AS n_big,
-        |  bool_and(o_totalprice > 1000.0) AS all_over_1k,
-        |  arg_max(o_orderkey, CAST(CAST(o_totalprice AS DECIMAL(18,2))*100 AS BIGINT)*10000000 + o_orderkey) AS top_order,
-        |  arg_min(o_orderkey, CAST(CAST(o_totalprice AS DECIMAL(18,2))*100 AS BIGINT)*10000000 + o_orderkey) AS bottom_order
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    // exact integer moments (2-decimal values → exact fixed-point
-    // longs; sums associative in any order), closed forms on exact
-    // integers, double arithmetic only in the final sqrt/divide —
-    // mirrors Relational.q_stats_agg op for op. The builtin
-    // stddev_samp/var_samp/corr merge float partials whose tails are
-    // summation-order-dependent in BOTH engines.
-    "q_stats_agg" ->
-      """WITH f AS (
-        |  SELECT l_returnflag,
-        |    CAST(round(l_quantity * 100) AS BIGINT) AS x,
-        |    CAST(round(l_extendedprice * 100) AS BIGINT) AS y,
-        |    CAST(round(l_discount * 100) AS BIGINT) AS dsc,
-        |    CAST(round(l_tax * 100) AS BIGINT) AS tax
-        |  FROM lineitem),
-        |a AS (
-        |  SELECT l_returnflag, count(*) AS n,
-        |    sum(x) AS sx, sum(x*x) AS sxx, sum(y) AS sy, sum(y*y) AS syy,
-        |    sum(x*y) AS sxy, sum(dsc) AS sd, sum(dsc*dsc) AS sdd, sum(tax) AS st
-        |  FROM f GROUP BY 1)
-        |SELECT l_returnflag,
-        |  round(sqrt(CAST(n*sxx - sx*sx AS DOUBLE) / (n*(n-1))) / 100.0, 4) AS sd_qty,
-        |  round(CAST(n*sdd - sd*sd AS DOUBLE) / (n*(n-1)) / 1e4, 6) AS var_disc,
-        |  round(CAST(n*sxy - sx*sy AS DOUBLE)
-        |        / (sqrt(CAST(n*sxx - sx*sx AS DOUBLE)) * sqrt(CAST(n*syy - sy*sy AS DOUBLE))), 4) AS qty_price_corr,
-        |  round(CAST(st AS DOUBLE) / n / 100.0, 6) AS avg_tax
-        |FROM a ORDER BY l_returnflag""".stripMargin,
-    "q_bit_fn" ->
-      """SELECT o_orderkey,
-        |  o_orderkey & 255 AS low_byte,
-        |  o_orderkey | 16 AS with_flag,
-        |  xor(o_orderkey, o_custkey) AS xored,
-        |  o_orderkey << 2 AS shifted
-        |FROM orders WHERE o_orderkey < 500 ORDER BY o_orderkey""".stripMargin,
-    "q_having" ->
-      """SELECT o_custkey, count(*) AS n_orders,
-        |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))),2) AS DOUBLE) AS spend
-        |FROM orders GROUP BY o_custkey HAVING count(*) >= 12
-        |ORDER BY o_custkey""".stripMargin,
-    // scalar mean as exact fixed-point sum / count (mirrors the Spark
-    // side; avg(double) would be summation-order-dependent)
-    "q_subquery" ->
-      """SELECT o_orderkey,
-        |  round(o_totalprice /
-        |    (SELECT CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-        |       / count(*) / 100.0 FROM orders), 6) AS rel_price
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_pivot" ->
-      """SELECT o_orderpriority,
-        |  count(*) FILTER (WHERE o_orderstatus = 'F') AS f_cnt,
-        |  count(*) FILTER (WHERE o_orderstatus = 'O') AS o_cnt,
-        |  count(*) FILTER (WHERE o_orderstatus = 'P') AS p_cnt
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q_unpivot" ->
-      """SELECT * FROM (
-        |  SELECT p_partkey, 'p_size' AS metric, CAST(p_size AS DOUBLE) AS val FROM part
-        |  UNION ALL
-        |  SELECT p_partkey, 'p_retailprice' AS metric, p_retailprice AS val FROM part)
-        |ORDER BY p_partkey, metric""".stripMargin,
-    "q_null_fn" ->
-      """SELECT o_orderkey,
-        |  nullif(o_orderstatus, 'P') AS status_or_null,
-        |  coalesce(nullif(o_orderstatus, 'P'), '(pending)') AS status_filled,
-        |  nullif(o_orderstatus, 'P') IS NULL AS was_pending,
-        |  CASE WHEN o_totalprice > 250000.0 THEN 'high'
-        |       WHEN o_totalprice > 100000.0 THEN 'mid'
-        |       ELSE 'low' END AS price_band
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_percentile" ->
-      """SELECT o_orderstatus,
-        |  round(quantile_cont(o_totalprice, 0.5), 4) AS median_price,
-        |  round(quantile_cont(o_totalprice, 0.9), 4) AS p90_price,
-        |  count(*) AS n
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q_array_fn" ->
-      """SELECT doc_id,
-        |  len(string_split(text, ' ')) AS n_words,
-        |  array_to_string(list_slice(list_sort(list_distinct(string_split(text, ' '))), 1, 5), ' ') AS first5_sorted,
-        |  list_contains(string_split(text, ' '), 'the') AS has_the,
-        |  string_split(text, ' ')[-1] AS last_word,
-        |  list_aggregate(string_split(text, ' '), 'max') AS max_word
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_agg_cube" ->
-      """SELECT coalesce(l_returnflag,'ALL') AS returnflag,
-        |  coalesce(l_linestatus,'ALL') AS linestatus,
-        |  count(*) AS n, CAST(round(sum(CAST(l_quantity AS DECIMAL(18,2))),2) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-        |ORDER BY returnflag, linestatus""".stripMargin,
-    "q_sort" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey""".stripMargin,
-    "q_topk" ->
-      """SELECT c_custkey, c_name, c_acctbal FROM customer
-        |ORDER BY c_acctbal DESC, c_custkey LIMIT 10""".stripMargin,
-    "q_union" ->
-      """SELECT * FROM (
-        |  SELECT o_orderkey, 'f_status' AS src FROM orders WHERE o_orderstatus = 'F'
-        |  UNION ALL
-        |  SELECT o_orderkey, 'big_ticket' AS src FROM orders WHERE o_totalprice > 400000.0)
-        |ORDER BY o_orderkey, src""".stripMargin,
-    "q_intersect" ->
-      """SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-        |INTERSECT
-        |SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
-        |ORDER BY o_custkey""".stripMargin,
-    "q_except" ->
-      """SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-        |EXCEPT
-        |SELECT o_custkey FROM orders WHERE o_orderstatus = 'P'
-        |ORDER BY o_custkey""".stripMargin,
-    "q_dedup" ->
-      """SELECT lang, source, min(doc_id) AS doc_id, count(*) AS n_dups
-        |FROM documents GROUP BY lang, source ORDER BY lang, source""".stripMargin,
-    "q_explode" ->
-      """SELECT doc_id,
-        |  CAST(generate_subscripts(string_split(text,' '),1) - 1 AS INT) AS pos,
-        |  unnest(string_split(text,' ')) AS word
-        |FROM documents WHERE doc_id < 50 ORDER BY doc_id, pos""".stripMargin,
-    "q_string_fn" ->
-      """SELECT doc_id, upper(substring(text,1,12)) AS prefix_u,
-        |  regexp_replace(source, '^src', 'source-') AS src_renamed,
-        |  concat_ws('|', lang, source) AS tag,
-        |  string_split(text,' ')[1] AS first_word,
-        |  length(text) AS len
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_date_fn" ->
-      """SELECT o_orderkey,
-        |  CAST(year(o_orderdate) AS BIGINT) AS yr,
-        |  CAST(month(o_orderdate) AS BIGINT) AS mo,
-        |  CAST(day(o_orderdate) AS BIGINT) AS dom,
-        |  CAST(date_part('epoch', date_trunc('month', o_orderdate)) AS BIGINT) AS month_start_epoch,
-        |  CAST(datediff('day', TIMESTAMP '1995-01-01 00:00:00', o_orderdate) AS BIGINT) AS days_since_95
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_date_fn2" ->
-      """SELECT o_orderkey,
-        |  CAST(o_orderdate + INTERVAL 3 MONTH AS DATE) AS plus3m,
-        |  last_day(CAST(o_orderdate AS DATE)) AS month_end,
-        |  CAST(quarter(o_orderdate) AS BIGINT) AS qtr,
-        |  CAST(dayofyear(o_orderdate) AS BIGINT) AS doy,
-        |  CAST(weekofyear(o_orderdate) AS BIGINT) AS iso_week
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_math_fn" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CAST(round(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))), 2) AS DOUBLE) AS net,
-        |  CAST(ceil(l_quantity) AS BIGINT) AS qty_ceil,
-        |  CAST(floor(l_tax * 100) AS BIGINT) AS tax_pct,
-        |  round(sqrt(l_extendedprice), 4) AS price_sqrt,
-        |  abs(l_discount - 0.05) AS disc_dev,
-        |  l_orderkey % 7 AS key_mod7
-        |FROM lineitem WHERE l_orderkey < 100
-        |ORDER BY l_orderkey, l_linenumber, net, qty_ceil, tax_pct, price_sqrt""".stripMargin,
-    "q_json_fn" ->
-      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-        |FROM events WHERE CAST(json_extract_string(props, '$.k') AS BIGINT) > 50
-        |ORDER BY event_id""".stripMargin,
-    "q_window_rank" ->
-      """SELECT * FROM (
-        |  SELECT c_nationkey, c_custkey, c_acctbal,
-        |    row_number() OVER (PARTITION BY c_nationkey
-        |      ORDER BY c_acctbal DESC, c_custkey) AS rn
-        |  FROM customer)
-        |WHERE rn <= 3 ORDER BY c_nationkey, rn""".stripMargin,
-    // the custom bounded-heap operator must equal the declarative
-    // rank-filter, rank column included
-    "q_topk_group" ->
-      """SELECT * FROM (
-        |  SELECT c_nationkey, c_custkey, c_acctbal,
-        |    CAST(row_number() OVER (PARTITION BY c_nationkey
-        |      ORDER BY c_acctbal DESC, c_custkey) AS BIGINT) AS rank
-        |  FROM customer)
-        |WHERE rank <= 3 ORDER BY c_nationkey, rank""".stripMargin,
-    "q_window_lag" ->
-      """SELECT user_id, event_id,
-        |  (epoch_us(ts) // 1000000)
-        |    - lag(epoch_us(ts) // 1000000, 1) OVER (
-        |        PARTITION BY user_id
-        |        ORDER BY epoch_us(ts) // 1000000, event_id) AS gap_s
-        |FROM events ORDER BY user_id, event_id""".stripMargin,
-    "q_window_dist" ->
-      """SELECT c_nationkey, c_custkey,
-        |  ntile(4) OVER w AS quartile,
-        |  round(percent_rank() OVER w, 10) AS pct_rank,
-        |  round(cume_dist() OVER w, 10) AS cume,
-        |  lead(c_custkey, 1) OVER w AS next_cust
-        |FROM customer
-        |WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal ASC, c_custkey)
-        |ORDER BY c_nationkey, c_custkey""".stripMargin,
-    "q_window_running" ->
-      """SELECT o_custkey, o_orderkey,
-        |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (PARTITION BY o_custkey
-        |    ORDER BY o_orderdate, o_orderkey
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS DOUBLE) AS running_total
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-    // SCD type-2: consecutive-run collapse via lag, then version /
-    // validity intervals via row_number + lead over the change rows;
-    // integral epoch-day pair (div 86400 <-> // 86400000000)
-    "q_scd2" ->
-      """WITH st AS (SELECT o_custkey,
-        |         epoch_us(o_orderdate) // 86400000000 AS day,
-        |         o_orderkey, o_orderstatus AS status FROM orders),
-        |ch AS (SELECT *, lag(status) OVER
-        |         (PARTITION BY o_custkey ORDER BY day, o_orderkey) AS prev
-        |       FROM st),
-        |f AS (SELECT o_custkey, day, o_orderkey, status FROM ch
-        |      WHERE prev IS NULL OR prev <> status)
-        |SELECT o_custkey,
-        |  CAST(row_number() OVER w AS BIGINT) AS version,
-        |  status,
-        |  day AS valid_from_day,
-        |  lead(day) OVER w AS valid_to_day,
-        |  CAST(CASE WHEN lead(day) OVER w IS NULL THEN 1 ELSE 0 END AS BIGINT)
-        |    AS is_current
-        |FROM f
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY day, o_orderkey)
-        |ORDER BY o_custkey, version""".stripMargin,
-    // point-in-time SCD-2 lookup: equi join on customer + interval
-    // residual; exactly one version matches per order
-    "q_scd2_lookup" ->
-      """WITH st AS (SELECT o_custkey,
-        |         epoch_us(o_orderdate) // 86400000000 AS day,
-        |         o_orderkey, o_orderstatus AS status FROM orders),
-        |ch AS (SELECT *, lag(status) OVER
-        |         (PARTITION BY o_custkey ORDER BY day, o_orderkey) AS prev
-        |       FROM st),
-        |f AS (SELECT o_custkey, day, o_orderkey, status FROM ch
-        |      WHERE prev IS NULL OR prev <> status),
-        |dim AS (SELECT o_custkey,
-        |    CAST(row_number() OVER w AS BIGINT) AS version, status,
-        |    day AS valid_from_day, lead(day) OVER w AS valid_to_day
-        |  FROM f
-        |  WINDOW w AS (PARTITION BY o_custkey ORDER BY day, o_orderkey)),
-        |fact AS (SELECT o_orderkey, o_custkey,
-        |    epoch_us(o_orderdate) // 86400000000 AS day FROM orders)
-        |SELECT fact.o_orderkey, fact.o_custkey, fact.day,
-        |  dim.version, dim.status
-        |FROM fact JOIN dim ON fact.o_custkey = dim.o_custkey
-        |  AND fact.day >= dim.valid_from_day
-        |  AND (dim.valid_to_day IS NULL OR fact.day < dim.valid_to_day)
-        |ORDER BY fact.o_orderkey""".stripMargin,
-    // first-order Markov transition matrix over the per-user ordered
-    // event stream; probabilities x1e6 round-half-up per prev row
-    "q_transitions" ->
-      """WITH o AS (SELECT user_id, event_id, event_type,
-        |         epoch_us(ts) // 1000000 AS es FROM events),
-        |p AS (SELECT event_type AS next_type,
-        |        lag(event_type) OVER
-        |          (PARTITION BY user_id ORDER BY es, event_id) AS prev_type
-        |      FROM o),
-        |c AS (SELECT prev_type, next_type, CAST(count(*) AS BIGINT) AS n
-        |      FROM p WHERE prev_type IS NOT NULL GROUP BY 1, 2),
-        |t AS (SELECT *, CAST(sum(n) OVER (PARTITION BY prev_type) AS BIGINT) AS tot
-        |      FROM c)
-        |SELECT prev_type, next_type, n,
-        |  (2 * n * 1000000 + tot) // (2 * tot) AS p_fp
-        |FROM t ORDER BY prev_type, next_type""".stripMargin,
-    // RFM: per-user purchase recency/frequency/cents with position
-    // quintiles from row_number ((rn-1)*5 // n + 1 — not ntile, whose
-    // remainder rule is engine lore), user-id tie-breaks throughout
-    "q_rfm" ->
-      """WITH p AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
-        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        |       FROM events WHERE event_type = 'purchase' AND value IS NOT NULL),
-        |per AS (SELECT user_id, max(day) AS last_day,
-        |          CAST(count(*) AS BIGINT) AS frequency,
-        |          CAST(sum(cents) AS BIGINT) AS monetary_c
-        |        FROM p GROUP BY 1),
-        |g AS (SELECT max(last_day) AS gmax, CAST(count(*) AS BIGINT) AS n_users
-        |      FROM per),
-        |b AS (SELECT user_id, gmax - last_day AS recency_days, frequency,
-        |        monetary_c, n_users FROM per, g),
-        |r AS (SELECT *,
-        |        CAST(row_number() OVER (ORDER BY recency_days ASC, user_id) AS BIGINT) AS rn_r,
-        |        CAST(row_number() OVER (ORDER BY frequency ASC, user_id) AS BIGINT) AS rn_f,
-        |        CAST(row_number() OVER (ORDER BY monetary_c ASC, user_id) AS BIGINT) AS rn_m
-        |      FROM b),
-        |sc AS (SELECT user_id, recency_days, frequency, monetary_c,
-        |         6 - (((rn_r - 1) * 5) // n_users + 1) AS r_score,
-        |         ((rn_f - 1) * 5) // n_users + 1 AS f_score,
-        |         ((rn_m - 1) * 5) // n_users + 1 AS m_score
-        |       FROM r)
-        |SELECT user_id, recency_days, frequency, monetary_c,
-        |  r_score, f_score, m_score,
-        |  r_score * 100 + f_score * 10 + m_score AS rfm_code
-        |FROM sc ORDER BY user_id""".stripMargin,
-    // 3-sigma hourly spike flags by integer cross-multiplication:
-    // (w*n-S)^2 > 9(w*Q-S^2), upward-only, 12-hour warm-up
-    "q_spikes" ->
-      """WITH h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-        |         CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2),
-        |w AS (SELECT event_type, hr, n,
-        |        CAST(count(*) OVER tw AS BIGINT) AS w,
-        |        CAST(sum(n) OVER tw AS BIGINT) AS s,
-        |        CAST(sum(n*n) OVER tw AS BIGINT) AS q
-        |      FROM h
-        |      WINDOW tw AS (PARTITION BY event_type ORDER BY hr
-        |        ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING))
-        |SELECT event_type, hr, n, w,
-        |  (w >= 12 AND (w*n - s)*(w*n - s) > 9*(w*q - s*s) AND n*w > s)
-        |    AS is_spike
-        |FROM w ORDER BY event_type, hr""".stripMargin,
-    // OLS daily-count trend over the dense day spine: exact integer
-    // moments, slope/intercept/r2 as one mirrored round(double,6)
-    // each (the q_zipf stance)
-    "q_trend" ->
-      """WITH dc AS (SELECT epoch_us(ts) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS y FROM events GROUP BY 1),
-        |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM dc),
-        |xy AS (SELECT CAST(s.day - b.d0 AS BIGINT) AS x,
-        |         CAST(coalesce(dc.y, 0) AS BIGINT) AS y
-        |       FROM (SELECT unnest(generate_series(d0, d1)) AS day FROM b) s
-        |       JOIN b ON TRUE LEFT JOIN dc ON s.day = dc.day),
-        |a AS (SELECT CAST(count(*) AS BIGINT) AS n_days,
-        |        CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |        CAST(sum(x*y) AS BIGINT) AS sxy,
-        |        CAST(sum(x*x) AS BIGINT) AS sxx,
-        |        CAST(sum(y*y) AS BIGINT) AS syy FROM xy)
-        |SELECT n_days, sx, sy, sxy, sxx, syy,
-        |  CASE WHEN n_days*sxx - sx*sx = 0 THEN NULL ELSE
-        |    round(CAST(n_days*sxy - sx*sy AS DOUBLE) /
-        |          CAST(n_days*sxx - sx*sx AS DOUBLE), 6) END AS slope,
-        |  CASE WHEN n_days*sxx - sx*sx = 0 THEN NULL ELSE
-        |    round(CAST(sy*sxx - sx*sxy AS DOUBLE) /
-        |          CAST(n_days*sxx - sx*sx AS DOUBLE), 6) END AS intercept,
-        |  CASE WHEN n_days*sxx - sx*sx = 0 OR n_days*syy - sy*sy = 0
-        |  THEN NULL ELSE
-        |    round(CAST(n_days*sxy - sx*sy AS DOUBLE) *
-        |          CAST(n_days*sxy - sx*sy AS DOUBLE) /
-        |          (CAST(n_days*sxx - sx*sx AS DOUBLE) *
-        |           CAST(n_days*syy - sy*sy AS DOUBLE)), 6) END AS r2
-        |FROM a""".stripMargin,
-    // hourly-count autocorrelation at lags 1..6 over the dense hour
-    // spine: mean cleared by x n^2, integer num/den, sign-separated
-    // x1e6 fixed point (Spark div truncates, DuckDB // floors — the
-    // division only ever sees non-negative operands)
-    "q_acf" ->
-      """WITH hc AS (SELECT epoch_us(ts) // 3600000000 AS hr,
-        |         CAST(count(*) AS BIGINT) AS y FROM events GROUP BY 1),
-        |b AS (SELECT min(hr) AS h0, max(hr) AS h1 FROM hc),
-        |dense AS (SELECT s.hr, CAST(coalesce(hc.y, 0) AS BIGINT) AS y
-        |          FROM (SELECT unnest(generate_series(h0, h1)) AS hr FROM b) s
-        |          LEFT JOIN hc ON s.hr = hc.hr),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |          CAST(sum(y) AS BIGINT) AS s FROM dense),
-        |lg AS (SELECT unnest(generate_series(1, 6)) AS "lag"),
-        |pl AS (SELECT lg."lag", CAST(count(*) AS BIGINT) AS n_pairs,
-        |         CAST(sum((t.n*a.y - t.s) * (t.n*bb.y - t.s)) AS BIGINT) AS num
-        |       FROM lg JOIN dense a ON TRUE
-        |       JOIN dense bb ON bb.hr = a.hr + lg."lag", tot t
-        |       GROUP BY 1),
-        |den AS (SELECT CAST(sum((t.n*y - t.s)*(t.n*y - t.s)) AS BIGINT) AS den
-        |        FROM dense, tot t)
-        |SELECT pl."lag" AS "lag", pl.n_pairs, pl.num, den.den,
-        |  (CASE WHEN pl.num < 0 THEN -1 ELSE 1 END) *
-        |    ((2*abs(pl.num)*1000000 + den.den) // (2*den.den)) AS acf_fp
-        |FROM pl, den ORDER BY "lag"""".stripMargin,
-    // dow x hod seasonality: arithmetic dow from the epoch day
-    // ((day+4) mod 7, Sunday=0 — engine calendar functions disagree
-    // on numbering), dense 168-cell spine, x1e6 lift vs uniform
-    "q_seasonality" ->
-      """WITH c AS (SELECT ((epoch_us(ts) // 86400000000) + 4) % 7 AS dow,
-        |         (epoch_us(ts) // 3600000000) % 24 AS hod,
-        |         CAST(count(*) AS BIGINT) AS n_events
-        |       FROM events GROUP BY 1, 2),
-        |spine AS (SELECT d.dow, h.hod
-        |          FROM (SELECT unnest(generate_series(0, 6)) AS dow) d,
-        |               (SELECT unnest(generate_series(0, 23)) AS hod) h),
-        |tot AS (SELECT CAST(sum(n_events) AS BIGINT) AS tot FROM c)
-        |SELECT s.dow, s.hod,
-        |  CAST(coalesce(c.n_events, 0) AS BIGINT) AS n_events,
-        |  (2 * 168 * coalesce(c.n_events, 0) * 1000000 + t.tot)
-        |    // (2 * t.tot) AS lift_fp
-        |FROM spine s LEFT JOIN c ON s.dow = c.dow AND s.hod = c.hod, tot t
-        |ORDER BY s.dow, s.hod""".stripMargin,
-    // peak concurrent sessions per day: sweep-line over the session
-    // intervals (q_time_session's gaps-and-islands construction),
-    // ends before starts at equal t (half-open intervals), hourly
-    // carry partials + in-hour prefix sums
-    "q_concurrency" ->
-      """WITH ev AS (SELECT user_id, epoch_us(ts) AS eus FROM events),
-        |m AS (SELECT user_id, eus,
-        |  CASE WHEN lag(eus) OVER w IS NULL
-        |       OR eus - lag(eus) OVER w >= 1800000000 THEN 1 ELSE 0 END AS new_sess
-        |  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY eus)),
-        |g AS (SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY eus
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess FROM m),
-        |sessn AS (SELECT min(eus) AS s_us, max(eus) + 1800000000 AS e_us
-        |          FROM g GROUP BY user_id, sess),
-        |deltas AS (SELECT s_us AS t, CAST(1 AS BIGINT) AS delta FROM sessn
-        |           UNION ALL
-        |           SELECT e_us AS t, CAST(-1 AS BIGINT) AS delta FROM sessn),
-        |carry AS (SELECT hr, CAST(sum(d_h) OVER (ORDER BY hr
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |            - d_h AS BIGINT) AS carry
-        |          FROM (SELECT t // 3600000000 AS hr,
-        |                  CAST(sum(delta) AS BIGINT) AS d_h
-        |                FROM deltas GROUP BY 1)),
-        |run AS (SELECT d.t, d.delta,
-        |          c.carry + CAST(sum(d.delta) OVER (PARTITION BY d.t // 3600000000
-        |            ORDER BY d.t, d.delta
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |            AS open
-        |        FROM deltas d JOIN carry c ON d.t // 3600000000 = c.hr)
-        |SELECT t // 86400000000 AS day, CAST(count(*) AS BIGINT) AS n_changes,
-        |  max(open) AS peak
-        |FROM run GROUP BY 1 ORDER BY day""".stripMargin,
-    // EWMA (alpha=1/2, w=20 truncation): power-of-two weights make
-    // the smoothing exact integer arithmetic; renormalized by the
-    // actual weight total at the series-start warm-up
-    "q_ewma" ->
-      """WITH hc AS (SELECT epoch_us(ts) // 3600000000 AS hr,
-        |         CAST(count(*) AS BIGINT) AS y FROM events GROUP BY 1),
-        |b AS (SELECT min(hr) AS h0, max(hr) AS h1 FROM hc),
-        |dense AS (SELECT s.hr, CAST(coalesce(hc.y, 0) AS BIGINT) AS y
-        |          FROM (SELECT unnest(generate_series(h0, h1)) AS hr FROM b) s
-        |          LEFT JOIN hc ON s.hr = hc.hr),
-        |offs AS (SELECT o AS off,
-        |           CAST(1 AS BIGINT) << CAST(19 - o AS INT) AS wt
-        |         FROM (SELECT unnest(generate_series(0, 19)) AS o)),
-        |c AS (SELECT d.hr + o.off AS t, d.y, o.wt FROM dense d, offs o),
-        |a AS (SELECT c.t, CAST(sum(c.y * c.wt) AS BIGINT) AS num,
-        |        CAST(sum(c.wt) AS BIGINT) AS den
-        |      FROM c JOIN dense dd ON c.t = dd.hr GROUP BY 1)
-        |SELECT a.t AS hr, d.y, (2 * num * 1000000 + den) // (2 * den) AS ewma_fp
-        |FROM a JOIN dense d ON a.t = d.hr ORDER BY hr""".stripMargin,
-    // interval-overlap self-join over the session table: hour-binned
-    // (the range-binned idiom on a self-join), each pair credited
-    // once in the bin holding its overlap start; half-open overlap
-    "q_join_overlap" ->
-      """WITH ev AS (SELECT user_id, epoch_us(ts) AS eus FROM events),
-        |m AS (SELECT user_id, eus,
-        |  CASE WHEN lag(eus) OVER w IS NULL
-        |       OR eus - lag(eus) OVER w >= 1800000000 THEN 1 ELSE 0 END AS new_sess
-        |  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY eus)),
-        |g AS (SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY eus
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess FROM m),
-        |sessn AS (SELECT user_id, min(eus) AS s_us, max(eus) + 1800000000 AS e_us
-        |          FROM g GROUP BY user_id, sess),
-        |bn AS (SELECT user_id, s_us, e_us,
-        |         unnest(generate_series(s_us // 3600000000,
-        |                               (e_us - 1) // 3600000000)) AS hr
-        |       FROM sessn),
-        |p AS (SELECT x.user_id AS user_a, y.user_id AS user_b,
-        |        least(x.e_us, y.e_us) - greatest(x.s_us, y.s_us) AS ov
-        |      FROM bn x JOIN bn y ON x.hr = y.hr
-        |        AND x.user_id < y.user_id
-        |        AND x.s_us < y.e_us AND y.s_us < x.e_us
-        |      WHERE x.hr = greatest(x.s_us, y.s_us) // 3600000000)
-        |SELECT user_a, user_b, CAST(count(*) AS BIGINT) AS n_overlaps,
-        |  CAST(sum(ov) AS BIGINT) AS total_overlap_us
-        |FROM p GROUP BY 1, 2 ORDER BY user_a, user_b""".stripMargin,
-    // two-proportion A/B z-test: exact integer counts/rates, pooled z
-    // pre-cleared to (x_a*n_b - x_b*n_a)*sqrt(n/(n_a*n_b*x*(n-x))) as
-    // the one mirrored round(double,6); degenerate splits -> NULL z
-    "q_ab_test" ->
-      """WITH per AS (SELECT user_id,
-        |         max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
-        |       FROM events GROUP BY 1),
-        |c AS (SELECT
-        |  CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-        |  CAST(sum(CASE WHEN user_id % 2 = 0 THEN conv ELSE 0 END) AS BIGINT) AS x_a,
-        |  CAST(sum(CASE WHEN user_id % 2 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-        |  CAST(sum(CASE WHEN user_id % 2 <> 0 THEN conv ELSE 0 END) AS BIGINT) AS x_b
-        |  FROM per)
-        |SELECT n_a, x_a, n_b, x_b,
-        |  CASE WHEN n_a = 0 THEN NULL ELSE
-        |    (2 * x_a * 1000000 + n_a) // (2 * n_a) END AS rate_a_fp,
-        |  CASE WHEN n_b = 0 THEN NULL ELSE
-        |    (2 * x_b * 1000000 + n_b) // (2 * n_b) END AS rate_b_fp,
-        |  CASE WHEN n_a = 0 OR n_b = 0 OR x_a + x_b = 0 OR
-        |    x_a + x_b = n_a + n_b THEN NULL ELSE
-        |    round(CAST(x_a*n_b - x_b*n_a AS DOUBLE) *
-        |      sqrt(CAST(n_a + n_b AS DOUBLE) /
-        |        (CAST(n_a AS DOUBLE) * n_b * (x_a + x_b) *
-        |         (n_a + n_b - x_a - x_b))), 6) END AS z
-        |FROM c""".stripMargin,
-    // cohort LTV: retention's cohort definition + exact integer cents,
-    // dense age spine, per-cohort cumulative, sign-separated div
-    "q_ltv" ->
-      """WITH ev AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
-        |         event_type, value FROM events),
-        |coh AS (SELECT user_id, min(day) AS cohort_day FROM ev GROUP BY 1),
-        |sz AS (SELECT cohort_day, CAST(count(*) AS BIGINT) AS n_cohort
-        |       FROM coh GROUP BY 1),
-        |dm AS (SELECT max(day) AS d1 FROM ev),
-        |rev AS (SELECT c.cohort_day, e.day - c.cohort_day AS age,
-        |         CAST(sum(CAST(CAST(e.value AS DECIMAL(18,2)) * 100 AS BIGINT))
-        |           AS BIGINT) AS rev_c
-        |       FROM ev e JOIN coh c ON e.user_id = c.user_id
-        |       WHERE e.event_type = 'purchase' AND e.value IS NOT NULL
-        |       GROUP BY 1, 2),
-        |sp AS (SELECT sz.cohort_day, sz.n_cohort,
-        |         unnest(generate_series(0, dm.d1 - sz.cohort_day)) AS age
-        |       FROM sz, dm),
-        |j AS (SELECT sp.cohort_day, sp.age, sp.n_cohort,
-        |        CAST(coalesce(rev.rev_c, 0) AS BIGINT) AS rev_c
-        |      FROM sp LEFT JOIN rev ON sp.cohort_day = rev.cohort_day
-        |        AND sp.age = rev.age),
-        |cc AS (SELECT *, CAST(sum(rev_c) OVER (PARTITION BY cohort_day
-        |         ORDER BY age ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |         AS BIGINT) AS cum_rev_c FROM j)
-        |SELECT cohort_day, age, n_cohort, rev_c, cum_rev_c,
-        |  CASE WHEN cum_rev_c >= 0
-        |       THEN (2 * cum_rev_c + n_cohort) // (2 * n_cohort)
-        |       ELSE -((2 * abs(cum_rev_c) + n_cohort) // (2 * n_cohort)) END
-        |    AS ltv_c
-        |FROM cc ORDER BY cohort_day, age""".stripMargin,
-    // Kaplan-Meier: quantized-ln product via cumulative long sum,
-    // final-lifetime S = 0 emitted directly instead of ln(0)
-    "q_survival" ->
-      """WITH lf AS (SELECT user_id, max(d) - min(d) AS t
-        |       FROM (SELECT user_id, epoch_us(ts) // 86400000000 AS d
-        |             FROM events) GROUP BY 1),
-        |dd AS (SELECT t, CAST(count(*) AS BIGINT) AS d FROM lf GROUP BY 1),
-        |tt AS (SELECT CAST(sum(d) AS BIGINT) AS n_users FROM dd),
-        |rk AS (SELECT t, d, n_users -
-        |         (CAST(sum(d) OVER (ORDER BY t
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |            AS BIGINT) - d) AS n_risk
-        |       FROM dd, tt),
-        |lq AS (SELECT t, d, n_risk,
-        |        CASE WHEN n_risk > d THEN
-        |          CAST(round(ln(CAST(n_risk - d AS DOUBLE) / n_risk) * 1e9)
-        |            AS BIGINT) ELSE 0 END AS lq
-        |      FROM rk),
-        |cl AS (SELECT *, CAST(sum(lq) OVER (ORDER BY t
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |         AS BIGINT) AS cum_lq FROM lq)
-        |SELECT t AS t_days, n_risk, d,
-        |  CASE WHEN n_risk = d THEN 0 ELSE
-        |    CAST(round(exp(CAST(cum_lq AS DOUBLE) / 1e9) * 1e6) AS BIGINT) END
-        |    AS km_fp
-        |FROM cl ORDER BY t_days""".stripMargin,
-    // additive decomposition: full-window 25h MA trend, exact x1e6
-    // detrending, sign-separated per-hod seasonal mean
-    "q_decompose" ->
-      """WITH hc AS (SELECT epoch_us(ts) // 3600000000 AS hr,
-        |         CAST(count(*) AS BIGINT) AS y FROM events GROUP BY 1),
-        |b AS (SELECT min(hr) AS h0, max(hr) AS h1 FROM hc),
-        |dense AS (SELECT s.hr, CAST(coalesce(hc.y, 0) AS BIGINT) AS y
-        |          FROM (SELECT unnest(generate_series(h0, h1)) AS hr FROM b) s
-        |          LEFT JOIN hc ON s.hr = hc.hr),
-        |ma AS (SELECT hr, y, CAST(count(*) OVER wd AS BIGINT) AS w_n,
-        |         CAST(sum(y) OVER wd AS BIGINT) AS w_s
-        |       FROM dense WINDOW wd AS (ORDER BY hr
-        |         ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
-        |dt AS (SELECT hr, y,
-        |         CASE WHEN w_n = 25 THEN (2 * w_s * 1000000 + 25) // 50 END
-        |           AS trend_fp,
-        |         y * 1000000 - CASE WHEN w_n = 25
-        |           THEN (2 * w_s * 1000000 + 25) // 50 END AS det_fp
-        |       FROM ma),
-        |se AS (SELECT hod, CASE WHEN sd >= 0 THEN (2*sd + nd) // (2*nd)
-        |         ELSE -((2*abs(sd) + nd) // (2*nd)) END AS seasonal_fp
-        |       FROM (SELECT hr % 24 AS hod, CAST(sum(det_fp) AS BIGINT) AS sd,
-        |               CAST(count(*) AS BIGINT) AS nd
-        |             FROM dt WHERE det_fp IS NOT NULL GROUP BY 1))
-        |SELECT dt.hr, dt.y, dt.trend_fp,
-        |  CASE WHEN dt.det_fp IS NOT NULL THEN se.seasonal_fp END AS seasonal_fp,
-        |  dt.det_fp - se.seasonal_fp AS resid_fp
-        |FROM dt JOIN se ON dt.hr % 24 = se.hod
-        |ORDER BY dt.hr""".stripMargin,
-    // Seasonal-naive MASE backtest on the dense per-type hour spine;
-    // the MASE double fraction cleared by cross-multiplication into
-    // the (2a+d) // 2d round-half-up fixed point
-    "q_forecast" ->
-      """WITH hc AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-        |         CAST(count(*) AS BIGINT) AS y FROM events GROUP BY 1, 2),
-        |b AS (SELECT min(hr) AS h0, max(hr) AS h1 FROM hc),
-        |dense AS (SELECT t.event_type, s.hr, b.h1,
-        |            CAST(coalesce(hc.y, 0) AS BIGINT) AS y
-        |          FROM (SELECT DISTINCT event_type FROM hc) t
-        |          CROSS JOIN b
-        |          CROSS JOIN (SELECT unnest(generate_series(
-        |            (SELECT h0 FROM b), (SELECT h1 FROM b))) AS hr) s
-        |          LEFT JOIN hc ON hc.event_type = t.event_type
-        |                      AND hc.hr = s.hr),
-        |l AS (SELECT event_type, hr, h1, y,
-        |        abs(y - lag(y, 24) OVER w) AS nav,
-        |        abs(y - lag(y, 1) OVER w) AS stp,
-        |        hr > h1 - 48 AS is_test
-        |      FROM dense WINDOW w AS (PARTITION BY event_type ORDER BY hr)),
-        |a AS (SELECT event_type,
-        |        CAST(count(CASE WHEN is_test AND nav IS NOT NULL
-        |                   THEN 1 END) AS BIGINT) AS n_test,
-        |        CAST(sum(CASE WHEN is_test THEN nav END) AS BIGINT) AS e_sum,
-        |        CAST(count(CASE WHEN NOT is_test AND stp IS NOT NULL
-        |                   THEN 1 END) AS BIGINT) AS n_train,
-        |        CAST(sum(CASE WHEN NOT is_test THEN stp END) AS BIGINT)
-        |          AS d_sum
-        |      FROM l GROUP BY 1)
-        |SELECT event_type, n_test, e_sum, n_train, d_sum,
-        |  CASE WHEN d_sum > 0
-        |    THEN (2 * e_sum * n_train * 1000000 + n_test * d_sum)
-        |         // (2 * n_test * d_sum) END AS mase_fp
-        |FROM a ORDER BY event_type""".stripMargin,
-    // Spearman with average ranks kept integral (2r = 2·min_rank +
-    // tie_count − 1) and CENTERED (x = 2r − (n+1)) so every moment
-    // stays under n³ — rho is the one mirrored double expression
-    "q_spearman" ->
-      """WITH ev AS (SELECT event_type,
-        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v,
-        |         (epoch_us(ts) // 3600000000) % 24 AS hod
-        |       FROM events WHERE value IS NOT NULL),
-        |r AS (SELECT event_type,
-        |        count(*) OVER (PARTITION BY event_type) AS n,
-        |        rank() OVER (PARTITION BY event_type ORDER BY v) AS fa,
-        |        count(*) OVER (PARTITION BY event_type, v) AS ca,
-        |        rank() OVER (PARTITION BY event_type ORDER BY hod) AS fb,
-        |        count(*) OVER (PARTITION BY event_type, hod) AS cb
-        |      FROM ev),
-        |x AS (SELECT event_type, n,
-        |        2 * fa + ca - 1 - (n + 1) AS xa,
-        |        2 * fb + cb - 1 - (n + 1) AS xb FROM r),
-        |a AS (SELECT event_type, CAST(max(n) AS BIGINT) AS n,
-        |        CAST(sum(xa * xb) AS BIGINT) AS sxy,
-        |        CAST(sum(xa * xa) AS BIGINT) AS sxx,
-        |        CAST(sum(xb * xb) AS BIGINT) AS syy
-        |      FROM x GROUP BY 1)
-        |SELECT event_type, n, sxy, sxx, syy,
-        |  CASE WHEN sxx > 0 AND syy > 0
-        |    THEN round(sxy / (sqrt(sxx) * sqrt(syy)), 6) END AS rho
-        |FROM a ORDER BY event_type""".stripMargin,
-    // Poisson bootstrap: replicate weights from the shared md5-nibble
-    // 52-bit uniform against ⌊CDF_Poisson(1)·2^52⌋ integer thresholds —
-    // both engines compare identical longs, so every weight matches
-    // bit-for-bit; sums re-cast to BIGINT (DuckDB sum(BIGINT) widens
-    // to HUGEINT — the q_corpus_report lesson).
-    "q_bootstrap" -> {
-      val h = "md5(CAST(event_id AS VARCHAR) || ':' || CAST(rep AS VARCHAR))"
-      val u = duckHexValue(h, 1, 13)
-      val ts = Seq(1656781714176974L, 3313563428353948L, 4141954285442435L,
-        4418084571138597L, 4487117142562638L, 4500923656847446L,
-        4503224742561580L, 4503553469092171L)
-      val caseCnt = ts.zipWithIndex.map { case (t, k) =>
-        s"WHEN $u < $t THEN $k" }.mkString("CASE ", " ", " ELSE 8 END")
-      s"""WITH base AS (SELECT event_type, event_id,
-        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        |       FROM events WHERE value IS NOT NULL),
-        |r AS (SELECT base.*, rep FROM base
-        |      CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS rep)),
-        |w AS (SELECT event_type, rep, cents,
-        |        CAST($caseCnt AS BIGINT) AS cnt FROM r),
-        |bm AS (SELECT event_type, rep,
-        |         CAST(sum(cnt * cents) AS BIGINT) AS num,
-        |         CAST(sum(cnt) AS BIGINT) AS den
-        |       FROM w GROUP BY 1, 2),
-        |mm AS (SELECT event_type, rep,
-        |         (2 * num * 10000 + den) // (2 * den) AS m_fp
-        |       FROM bm WHERE den > 0),
-        |rk AS (SELECT event_type, m_fp,
-        |         row_number() OVER (PARTITION BY event_type
-        |           ORDER BY m_fp, rep) AS rn,
-        |         count(*) OVER (PARTITION BY event_type) AS nb
-        |       FROM mm),
-        |ci AS (SELECT event_type,
-        |         max(CASE WHEN rn = 2 THEN m_fp END) AS boot_lo_fp,
-        |         max(CASE WHEN rn = nb - 1 THEN m_fp END) AS boot_hi_fp
-        |       FROM rk GROUP BY 1),
-        |f AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |        CAST(sum(cents) AS BIGINT) AS s FROM base GROUP BY 1)
-        |SELECT f.event_type, f.n, (2 * s * 10000 + n) // (2 * n) AS mean_fp,
-        |  ci.boot_lo_fp, ci.boot_hi_fp
-        |FROM f LEFT JOIN ci ON f.event_type = ci.event_type
-        |ORDER BY f.event_type""".stripMargin
-    },
-    // Attribution oracle: the O(purchases × touches-per-user)
-    // inequality join + row_number form — correct and simple at oracle
-    // scale; the Spark side is the one-exchange windowed form.
-    "q_attribution" ->
-      """WITH ev AS (SELECT user_id, event_id, event_type,
-        |         epoch_us(ts) AS tu,
-        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        |       FROM events),
-        |p AS (SELECT user_id, event_id, tu, cents FROM ev
-        |      WHERE event_type = 'purchase'),
-        |t AS (SELECT user_id, event_id, tu, event_type FROM ev
-        |      WHERE event_type IN ('signup', 'view', 'click')),
-        |pair AS (SELECT p.event_id AS pid, t.event_type, t.tu,
-        |           t.event_id AS tid
-        |         FROM p JOIN t ON p.user_id = t.user_id
-        |          AND (t.tu < p.tu OR (t.tu = p.tu AND t.event_id < p.event_id))),
-        |rk AS (SELECT pid, event_type,
-        |         row_number() OVER (PARTITION BY pid ORDER BY tu, tid) AS rf,
-        |         row_number() OVER (PARTITION BY pid
-        |           ORDER BY tu DESC, tid DESC) AS rl
-        |       FROM pair),
-        |fst AS (SELECT pid, event_type FROM rk WHERE rf = 1),
-        |lst AS (SELECT pid, event_type FROM rk WHERE rl = 1),
-        |m AS (SELECT 'first' AS model,
-        |        coalesce(fst.event_type, '(none)') AS touch_type, p.cents
-        |      FROM p LEFT JOIN fst ON fst.pid = p.event_id
-        |      UNION ALL
-        |      SELECT 'last', coalesce(lst.event_type, '(none)'), p.cents
-        |      FROM p LEFT JOIN lst ON lst.pid = p.event_id)
-        |SELECT model, touch_type, CAST(count(*) AS BIGINT) AS n_conv,
-        |  CAST(sum(cents) AS BIGINT) AS revenue_cents
-        |FROM m GROUP BY model, touch_type
-        |ORDER BY model, touch_type""".stripMargin,
-    // Basket mining over sessions: same sessionization CTE as
-    // q_session_paths; pairs via DISTINCT (sess, type) self-join
-    // (quadratic is fine at oracle scale — the Spark side builds
-    // pairs row-locally from the sorted basket array)
-    "q_basket" ->
-      """WITH ev AS (SELECT user_id, event_id, event_type,
-        |         epoch_us(ts) AS tu FROM events),
-        |g AS (SELECT *, CASE WHEN lag(tu) OVER w IS NULL
-        |           OR tu - lag(tu) OVER w > 1800000000 THEN 1 ELSE 0 END
-        |         AS new_s
-        |      FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY tu, event_id)),
-        |s AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id
-        |        ORDER BY tu, event_id ROWS UNBOUNDED PRECEDING) AS sess_id
-        |      FROM g),
-        |bt AS (SELECT DISTINCT user_id, sess_id, event_type FROM s),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_sessions
-        |        FROM (SELECT DISTINCT user_id, sess_id FROM s)),
-        |sg AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_t
-        |       FROM bt GROUP BY 1),
-        |pr AS (SELECT x.event_type AS a, y.event_type AS b,
-        |         CAST(count(*) AS BIGINT) AS n_ab
-        |       FROM bt x JOIN bt y ON x.user_id = y.user_id
-        |         AND x.sess_id = y.sess_id AND x.event_type < y.event_type
-        |       GROUP BY 1, 2)
-        |SELECT pr.a, pr.b, pr.n_ab, sa.n_t AS n_a, sb.n_t AS n_b,
-        |  tot.n_sessions,
-        |  (2 * pr.n_ab * 1000000 + tot.n_sessions)
-        |    // (2 * tot.n_sessions) AS support_fp,
-        |  (2 * pr.n_ab * tot.n_sessions * 1000000 + sa.n_t * sb.n_t)
-        |    // (2 * sa.n_t * sb.n_t) AS lift_fp
-        |FROM pr JOIN sg sa ON pr.a = sa.event_type
-        |        JOIN sg sb ON pr.b = sb.event_type, tot
-        |ORDER BY pr.a, pr.b""".stripMargin,
-    // Session paths: 30-min-gap sessionization via the lag-flag cumsum
-    // (engine-neutral, unlike session_window's internal ids); in-path
-    // order pinned by ORDER BY inside string_agg ↔ array_sort structs.
-    "q_session_paths" ->
-      """WITH ev AS (SELECT user_id, event_id, event_type,
-        |         epoch_us(ts) AS tu FROM events),
-        |g AS (SELECT *, CASE WHEN lag(tu) OVER w IS NULL
-        |           OR tu - lag(tu) OVER w > 1800000000 THEN 1 ELSE 0 END
-        |         AS new_s
-        |      FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY tu, event_id)),
-        |s AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id
-        |        ORDER BY tu, event_id ROWS UNBOUNDED PRECEDING) AS sess_id
-        |      FROM g),
-        |p AS (SELECT string_agg(event_type, '>' ORDER BY tu, event_id) AS path
-        |      FROM s GROUP BY user_id, sess_id),
-        |c AS (SELECT path, CAST(count(*) AS BIGINT) AS n_sessions
-        |      FROM p GROUP BY path),
-        |r AS (SELECT CAST(row_number() OVER (ORDER BY n_sessions DESC, path)
-        |         AS BIGINT) AS rn, path, n_sessions FROM c)
-        |SELECT rn, path, n_sessions FROM r WHERE rn <= 20
-        |ORDER BY rn""".stripMargin,
-    // CUSUM via the max-prefix identity S_t = P_t - min prefix; mean
-    // cleared by x n (the q_acf trick); 5-sigma decision integer-only
-    // via cusum^2 > 25(nQ - S^2)
-    "q_cusum" ->
-      """WITH hc AS (SELECT epoch_us(ts) // 3600000000 AS hr,
-        |         CAST(count(*) AS BIGINT) AS y FROM events GROUP BY 1),
-        |b AS (SELECT min(hr) AS h0, max(hr) AS h1 FROM hc),
-        |dense AS (SELECT s.hr, CAST(coalesce(hc.y, 0) AS BIGINT) AS y
-        |          FROM (SELECT unnest(generate_series(h0, h1)) AS hr FROM b) s
-        |          LEFT JOIN hc ON s.hr = hc.hr),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |          CAST(sum(y) AS BIGINT) AS s,
-        |          CAST(sum(y*y) AS BIGINT) AS q FROM dense),
-        |pp AS (SELECT hr, y, n, s, q,
-        |         CAST(sum(n*y - s) OVER (ORDER BY hr
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |           AS BIGINT) AS p
-        |       FROM dense, tot),
-        |m AS (SELECT hr, y, n, s, q, p,
-        |        min(p) OVER (ORDER BY hr
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mn,
-        |        max(p) OVER (ORDER BY hr
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mx
-        |      FROM pp)
-        |SELECT hr, y, p - mn AS cusum_up, mx - p AS cusum_dn,
-        |  (p - mn)*(p - mn) > 25*(n*q - s*s) AS up_flag,
-        |  (mx - p)*(mx - p) > 25*(n*q - s*s) AS dn_flag
-        |FROM m ORDER BY hr""".stripMargin,
-    // Mann-Kendall: exact pair-sign sum over the dense day spine,
-    // tie-corrected var x18, continuity-corrected z as the one
-    // mirrored round(double,6)
-    "q_mk_trend" ->
-      """WITH dc AS (SELECT epoch_us(ts) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS y FROM events GROUP BY 1),
-        |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM dc),
-        |dense AS (SELECT s.day, CAST(coalesce(dc.y, 0) AS BIGINT) AS y
-        |          FROM (SELECT unnest(generate_series(d0, d1)) AS day FROM b) s
-        |          LEFT JOIN dc ON s.day = dc.day),
-        |sp AS (SELECT CAST(coalesce(sum(CASE WHEN bj.y > ai.y THEN 1
-        |                 WHEN bj.y < ai.y THEN -1 ELSE 0 END), 0) AS BIGINT)
-        |         AS s_mk
-        |       FROM dense ai JOIN dense bj ON ai.day < bj.day),
-        |ti AS (SELECT CAST(sum(t) AS BIGINT) AS n_days,
-        |         CAST(sum(t*(t-1)*(2*t+5)) AS BIGINT) AS t18
-        |       FROM (SELECT y, CAST(count(*) AS BIGINT) AS t
-        |             FROM dense GROUP BY 1))
-        |SELECT ti.n_days, sp.s_mk,
-        |  ti.n_days*(ti.n_days-1)*(2*ti.n_days+5) - ti.t18 AS var18,
-        |  CASE WHEN ti.n_days*(ti.n_days-1)*(2*ti.n_days+5) - ti.t18 <= 0
-        |       THEN NULL
-        |       WHEN sp.s_mk > 0 THEN round((sp.s_mk - 1) * sqrt(18.0 /
-        |         (ti.n_days*(ti.n_days-1)*(2*ti.n_days+5) - ti.t18)), 6)
-        |       WHEN sp.s_mk < 0 THEN round((sp.s_mk + 1) * sqrt(18.0 /
-        |         (ti.n_days*(ti.n_days-1)*(2*ti.n_days+5) - ti.t18)), 6)
-        |       ELSE 0.0 END AS z
-        |FROM sp, ti""".stripMargin,
-    // Benford first digit from the decimal STRING of positive cents
-    // (engine-neutral; float log10 paths are not); expectations are
-    // pinned x1e6 literals
-    "q_benford" ->
-      """WITH d AS (SELECT substr(CAST(c AS VARCHAR), 1, 1) AS dg
-        |       FROM (SELECT CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
-        |               AS c FROM events WHERE value IS NOT NULL)
-        |       WHERE c > 0),
-        |c AS (SELECT CAST(dg AS BIGINT) AS digit, CAST(count(*) AS BIGINT) AS n
-        |      FROM d GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM c),
-        |e(digit, benford_fp) AS (VALUES (1, 301030), (2, 176091),
-        |  (3, 124939), (4, 96910), (5, 79181), (6, 66947), (7, 57992),
-        |  (8, 51153), (9, 45757))
-        |SELECT CAST(e.digit AS BIGINT) AS digit,
-        |  CAST(coalesce(c.n, 0) AS BIGINT) AS n,
-        |  (2 * coalesce(c.n, 0) * 1000000 + t.tot) // (2 * t.tot) AS share_fp,
-        |  CAST(e.benford_fp AS BIGINT) AS benford_fp,
-        |  abs((2 * coalesce(c.n, 0) * 1000000 + t.tot) // (2 * t.tot)
-        |      - e.benford_fp) AS dev_fp
-        |FROM e LEFT JOIN c ON e.digit = c.digit, tot t
-        |ORDER BY digit""".stripMargin,
-    // winsorized mean per type: float-free p10/p90 cuts on the value-
-    // count table, clamp re-aggregates counts, round-half-up cents
-    // with sign separation (value cents can be negative)
-    "q_winsorize" ->
-      """WITH vc AS (SELECT event_type,
-        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c,
-        |         CAST(count(*) AS BIGINT) AS n
-        |       FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |tot AS (SELECT event_type, CAST(sum(n) AS BIGINT) AS nr,
-        |          CAST(sum(c*n) AS BIGINT) AS s_raw FROM vc GROUP BY 1),
-        |cum AS (SELECT event_type, c,
-        |          CAST(sum(n) OVER (PARTITION BY event_type ORDER BY c
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |            AS BIGINT) AS cum
-        |        FROM vc),
-        |p10 AS (SELECT cum.event_type, min(c) AS p10_c FROM cum
-        |        JOIN tot ON cum.event_type = tot.event_type
-        |        WHERE cum * 100 >= nr * 10 GROUP BY 1),
-        |p90 AS (SELECT cum.event_type, min(c) AS p90_c FROM cum
-        |        JOIN tot ON cum.event_type = tot.event_type
-        |        WHERE cum * 100 >= nr * 90 GROUP BY 1),
-        |w AS (SELECT vc.event_type, CAST(sum(n) AS BIGINT) AS n,
-        |        CAST(sum(greatest(least(c, p90_c), p10_c) * n) AS BIGINT) AS s_w,
-        |        any_value(p10_c) AS p10_c, any_value(p90_c) AS p90_c
-        |      FROM vc JOIN p10 ON vc.event_type = p10.event_type
-        |              JOIN p90 ON vc.event_type = p90.event_type
-        |      GROUP BY 1)
-        |SELECT w.event_type, w.n, w.p10_c, w.p90_c,
-        |  CASE WHEN t.s_raw >= 0 THEN (2 * t.s_raw + w.n) // (2 * w.n)
-        |       ELSE -((2 * abs(t.s_raw) + w.n) // (2 * w.n)) END AS mean_c,
-        |  CASE WHEN w.s_w >= 0 THEN (2 * w.s_w + w.n) // (2 * w.n)
-        |       ELSE -((2 * abs(w.s_w) + w.n) // (2 * w.n)) END AS wmean_c
-        |FROM w JOIN tot t ON w.event_type = t.event_type
-        |ORDER BY w.event_type""".stripMargin,
-    // Fano factor per event type over the global dense hour spine:
-    // F = (wQ - S^2)/(wS) on exact longs, x1e6 round-half-up (the
-    // numerator is >= 0 by Cauchy-Schwarz, no sign handling)
-    "q_burstiness" ->
-      """WITH hc AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-        |         CAST(count(*) AS BIGINT) AS y FROM events GROUP BY 1, 2),
-        |b AS (SELECT min(hr) AS h0, max(hr) AS h1 FROM hc),
-        |ty AS (SELECT DISTINCT event_type FROM hc),
-        |sp AS (SELECT ty.event_type, s.hr FROM ty,
-        |         (SELECT unnest(generate_series(h0, h1)) AS hr FROM b) s),
-        |dn AS (SELECT sp.event_type, CAST(coalesce(hc.y, 0) AS BIGINT) AS y
-        |       FROM sp LEFT JOIN hc
-        |         ON sp.event_type = hc.event_type AND sp.hr = hc.hr),
-        |a AS (SELECT event_type, CAST(count(*) AS BIGINT) AS w,
-        |        CAST(sum(y) AS BIGINT) AS n_events,
-        |        CAST(sum(y*y) AS BIGINT) AS q FROM dn GROUP BY 1)
-        |SELECT event_type, w, n_events,
-        |  (2 * (w*q - n_events*n_events) * 1000000 + w*n_events)
-        |    // (2 * w*n_events) AS fano_fp
-        |FROM a ORDER BY event_type""".stripMargin,
-    // inter-arrival gaps per type: lag micros with (ts, event_id)
-    // tie-break, float-free cum*100 >= n*p percentiles, round-half-up
-    // integer mean
-    "q_gap_stats" ->
-      """WITH ev AS (SELECT event_type, epoch_us(ts) AS tu, event_id FROM events),
-        |g AS (SELECT event_type, tu - lag(tu) OVER
-        |        (PARTITION BY event_type ORDER BY tu, event_id) AS gap
-        |      FROM ev),
-        |gc AS (SELECT event_type, gap, CAST(count(*) AS BIGINT) AS c
-        |       FROM g WHERE gap IS NOT NULL GROUP BY 1, 2),
-        |tot AS (SELECT event_type, CAST(sum(c) AS BIGINT) AS n_gaps,
-        |          min(gap) AS min_gap, max(gap) AS max_gap,
-        |          CAST(sum(gap*c) AS BIGINT) AS s_gap FROM gc GROUP BY 1),
-        |cum AS (SELECT event_type, gap,
-        |          CAST(sum(c) OVER (PARTITION BY event_type ORDER BY gap
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |            AS BIGINT) AS cum
-        |        FROM gc),
-        |p50 AS (SELECT c.event_type, min(c.gap) AS p50_gap FROM cum c
-        |        JOIN tot t ON c.event_type = t.event_type
-        |        WHERE c.cum * 100 >= t.n_gaps * 50 GROUP BY 1),
-        |p90 AS (SELECT c.event_type, min(c.gap) AS p90_gap FROM cum c
-        |        JOIN tot t ON c.event_type = t.event_type
-        |        WHERE c.cum * 100 >= t.n_gaps * 90 GROUP BY 1)
-        |SELECT t.event_type, t.n_gaps, t.min_gap, p50.p50_gap, p90.p90_gap,
-        |  t.max_gap, (2 * t.s_gap + t.n_gaps) // (2 * t.n_gaps) AS mean_gap
-        |FROM tot t JOIN p50 ON t.event_type = p50.event_type
-        |           JOIN p90 ON t.event_type = p90.event_type
-        |ORDER BY t.event_type""".stripMargin,
-    "q_time_tumble" ->
-      """SELECT CAST(date_part('epoch', date_trunc('hour', ts)) AS BIGINT) AS w_start,
-        |  event_type, count(*) AS n, CAST(round(sum(CAST(value AS DECIMAL(18,2))),2) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // OHLC bars: exact cents, first/last by the (ts, event_id) total
-    // order via two opposite-sort row_numbers, one grouped agg
-    "q_ohlc" ->
-      """WITH b AS (SELECT
-        |    CAST(date_part('epoch', date_trunc('hour', ts)) AS BIGINT) AS w_start,
-        |    event_type, ts, event_id,
-        |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
-        |  FROM events),
-        |r AS (SELECT *,
-        |    row_number() OVER (PARTITION BY w_start, event_type
-        |      ORDER BY ts, event_id) AS rf,
-        |    row_number() OVER (PARTITION BY w_start, event_type
-        |      ORDER BY ts DESC, event_id DESC) AS rl
-        |  FROM b)
-        |SELECT w_start, event_type, count(*) AS n,
-        |  CAST(max(CASE WHEN rf = 1 THEN c END) AS BIGINT) AS open_cents,
-        |  CAST(max(c) AS BIGINT) AS high_cents,
-        |  CAST(min(c) AS BIGINT) AS low_cents,
-        |  CAST(max(CASE WHEN rl = 1 THEN c END) AS BIGINT) AS close_cents
-        |FROM r GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_time_slide" ->
-      """SELECT ((epoch_us(ts) // 900000000) * 900 - t.k * 900) AS w_start,
-        |  event_type, count(*) AS n, CAST(round(sum(CAST(value AS DECIMAL(18,2))),2) AS DOUBLE) AS sum_value
-        |FROM events, (VALUES (0),(1),(2),(3)) t(k)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_join_asof" ->
-      """WITH ev AS (SELECT event_id, user_id, event_type, value,
-        |  epoch_us(ts)//1000000 AS es FROM events),
-        |p AS (SELECT user_id, es, arg_max(value, event_id) AS p_value
-        |  FROM ev WHERE event_type = 'purchase' GROUP BY user_id, es)
-        |SELECT e.event_id, e.user_id, e.es, p.p_value AS last_purchase
-        |FROM ev e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.es >= p.es
-        |ORDER BY event_id""".stripMargin,
-    // tolerance as-of: DuckDB's ASOF join surfaces the matched p.es,
-    // so gap and cutoff are plain projections over the same match
-    "q_join_asof_tol" ->
-      """WITH ev AS (SELECT event_id, user_id, event_type, value,
-        |  epoch_us(ts)//1000000 AS es FROM events),
-        |p AS (SELECT user_id, es, arg_max(value, event_id) AS p_value
-        |  FROM ev WHERE event_type = 'purchase' GROUP BY user_id, es)
-        |SELECT e.event_id, e.user_id, e.es,
-        |  e.es - p.es AS gap_s,
-        |  CASE WHEN e.es - p.es <= 3600 THEN p.p_value END AS last_purchase_tol
-        |FROM ev e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.es >= p.es
-        |ORDER BY event_id""".stripMargin,
-    "q_retention" ->
-      """WITH ud AS (SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day FROM events),
-        |c AS (SELECT user_id, min(day) AS cohort_day FROM ud GROUP BY 1),
-        |s AS (SELECT cohort_day, count(*) AS n_cohort FROM c GROUP BY 1),
-        |a AS (SELECT cohort_day, day - cohort_day AS day_offset, count(*) AS n_active
-        |      FROM ud JOIN c USING (user_id) GROUP BY 1, 2)
-        |SELECT a.cohort_day, a.day_offset, a.n_active, s.n_cohort,
-        |  (2 * a.n_active * 1000000 + s.n_cohort) // (2 * s.n_cohort) AS retention_fp
-        |FROM a JOIN s USING (cohort_day)
-        |ORDER BY cohort_day, day_offset""".stripMargin,
-    "q_funnel" ->
-      s"""WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS tu FROM events),
-        |s1 AS (SELECT user_id, min(tu) AS t1 FROM ev WHERE event_type = 'signup' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, t1, min(tu) AS t2 FROM ev e JOIN s1 USING (user_id)
-        |       WHERE event_type = 'view' AND tu > t1
-        |         AND tu <= t1 + ${graft.queries.TimeSeries.FunnelWindowMicros} GROUP BY 1, 2),
-        |s3 AS (SELECT e.user_id, t1, min(tu) AS t3 FROM ev e JOIN s2 USING (user_id)
-        |       WHERE event_type = 'click' AND tu > t2
-        |         AND tu <= t1 + ${graft.queries.TimeSeries.FunnelWindowMicros} GROUP BY 1, 2),
-        |s4 AS (SELECT e.user_id, min(tu) AS t4 FROM ev e JOIN s3 USING (user_id)
-        |       WHERE event_type = 'purchase' AND tu > t3
-        |         AND tu <= t1 + ${graft.queries.TimeSeries.FunnelWindowMicros} GROUP BY 1),
-        |n AS (SELECT 1 AS stage_idx, 'signup' AS stage, (SELECT count(*) FROM s1) AS n_users
-        |      UNION ALL SELECT 2, 'view', (SELECT count(*) FROM s2)
-        |      UNION ALL SELECT 3, 'click', (SELECT count(*) FROM s3)
-        |      UNION ALL SELECT 4, 'purchase', (SELECT count(*) FROM s4)),
-        |r AS (SELECT CAST(stage_idx AS BIGINT) AS stage_idx, stage, n_users,
-        |  coalesce((2 * n_users * 1000000 + lag(n_users) OVER (ORDER BY stage_idx))
-        |    // (2 * lag(n_users) OVER (ORDER BY stage_idx)), 1000000) AS conv_prev_fp,
-        |  (2 * n_users * 1000000 + first_value(n_users) OVER (ORDER BY stage_idx))
-        |    // (2 * first_value(n_users) OVER (ORDER BY stage_idx)) AS conv_first_fp
-        |FROM n)
-        |SELECT * FROM r WHERE n_users > 0 ORDER BY stage_idx""".stripMargin,
-    // 32 shared equi-width buckets over global [min,max] cents; all
-    // integer floor division on non-negative operands
-    "q_value_hist" ->
-      """WITH e AS (SELECT event_type,
-        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
-        |       FROM events WHERE value IS NOT NULL),
-        |b AS (SELECT min(c) AS min_c, max(c) AS max_c FROM e),
-        |g AS (SELECT event_type, (c - min_c) * 32 // (max_c - min_c + 1) AS bucket,
-        |        min_c, max_c
-        |      FROM e, b)
-        |SELECT event_type, bucket,
-        |  min_c + (bucket * (max_c - min_c + 1)) // 32 AS lo_c,
-        |  min_c + ((bucket + 1) * (max_c - min_c + 1)) // 32 - 1 AS hi_c,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM g GROUP BY event_type, bucket, min_c, max_c
-        |ORDER BY event_type, bucket""".stripMargin,
-    // median/MAD in exact integer cents; discrete lower medians via
-    // the float-free 2*cum >= n cumulative-window form; every sum
-    // CAST BIGINT (HUGEINT trap)
-    "q_outliers" ->
-      """WITH vc AS (SELECT event_type,
-        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c,
-        |         CAST(count(*) AS BIGINT) AS n
-        |       FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |mw AS (SELECT event_type, c,
-        |         sum(n) OVER (PARTITION BY event_type ORDER BY c) AS cum,
-        |         sum(n) OVER (PARTITION BY event_type) AS nl FROM vc),
-        |med AS (SELECT event_type, min(c) AS median_c FROM mw
-        |        WHERE cum * 2 >= nl GROUP BY 1),
-        |dv AS (SELECT vc.event_type, abs(vc.c - med.median_c) AS dev,
-        |         CAST(sum(vc.n) AS BIGINT) AS dn
-        |       FROM vc JOIN med USING (event_type) GROUP BY 1, 2),
-        |aw AS (SELECT event_type, dev,
-        |         sum(dn) OVER (PARTITION BY event_type ORDER BY dev) AS cum,
-        |         sum(dn) OVER (PARTITION BY event_type) AS nl FROM dv),
-        |mad AS (SELECT event_type, min(dev) AS mad_c FROM aw
-        |        WHERE cum * 2 >= nl GROUP BY 1),
-        |o AS (SELECT vc.event_type, CAST(sum(vc.n) AS BIGINT) AS n,
-        |        CAST(sum(CASE WHEN abs(vc.c - med.median_c) > mad.mad_c * 3
-        |          THEN vc.n ELSE 0 END) AS BIGINT) AS n_outliers
-        |      FROM vc JOIN med USING (event_type) JOIN mad USING (event_type)
-        |      GROUP BY 1)
-        |SELECT o.event_type, o.n, med.median_c, mad.mad_c, o.n_outliers,
-        |  (2 * o.n_outliers * 1000000 + o.n) // (2 * o.n) AS outlier_share_fp
-        |FROM o JOIN med USING (event_type) JOIN mad USING (event_type)
-        |ORDER BY o.event_type""".stripMargin,
-    "q_sql_report" ->
-      """SELECT r_name, n_name, count(*) AS n_orders,
-        |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))),2) AS DOUBLE) AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-    "q_text_stats" ->
-      """SELECT word, count(*) AS n
-        |FROM (SELECT unnest(string_split(text,' ')) AS word FROM documents)
-        |WHERE length(word) > 0 GROUP BY word ORDER BY n DESC, word LIMIT 100""".stripMargin,
-    "q_tokens" ->
-      """SELECT doc_id,
-        |  len(regexp_split_to_array(text, '\s+')) AS n_ws_tokens,
-        |  len(regexp_extract_all(text, '\w+|[^\w\s]')) AS n_bpe_tokens,
-        |  CASE WHEN len(regexp_extract_all(text, '\w+|[^\w\s]')) > 0 THEN
-        |    round(CAST(length(text) AS DOUBLE) / len(regexp_extract_all(text, '\w+|[^\w\s]')), 10)
-        |  END AS chars_per_token
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_lang_id" ->
-      """SELECT doc_id, lang,
-        |  len(regexp_extract_all(text, '\b(the|and|of)\b')) AS n_en,
-        |  len(regexp_extract_all(text, '\b(le|la|les|et)\b')) AS n_fr,
-        |  len(regexp_extract_all(text, '\b(der|die|das|und)\b')) AS n_de,
-        |  len(regexp_extract_all(text, '\b(el|los|las)\b')) AS n_es,
-        |  CASE WHEN n_en >= n_fr AND n_en >= n_de AND n_en >= n_es THEN 'en'
-        |       WHEN n_fr >= n_de AND n_fr >= n_es THEN 'fr'
-        |       WHEN n_de >= n_es THEN 'de' ELSE 'es' END AS pred_lang
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // the CASE length(text) = 0 guards mirror the Spark side's empty-
-    // document handling (0.0 punct ratio; NULL text stays NULL)
-    "q_text_quality" ->
-      s"""SELECT doc_id,
-         |  len(string_split(text,' ')) AS n_words,
-         |  round(CAST(len(list_filter(string_split(text,' '), w -> w IN ('the','a','of','and'))) AS DOUBLE)
-         |        / len(string_split(text,' ')), 10) AS stopword_ratio,
-         |  CASE WHEN length(text) = 0 THEN 0.0 ELSE
-         |    round(CAST(length(text) - length(regexp_replace(text, '[.,;:!?''"()\\[\\]{}-]', '', 'g')) AS DOUBLE)
-         |          / length(text), 10) END AS punct_ratio,
-         |  $duckQualityScore AS quality_score
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    // Fully integer output (r8): the per-group sum is exact fixed-point
-    // BIGINTs (order-independent), and the shares/means are emitted as
-    // ×1e6 fixed-point BIGINTs via round-half-up integer arithmetic
-    // ((2a + d) // (2d)) — no DOUBLE appears anywhere in the result,
-    // so the driver's hash canonicalization of floats can't diverge.
-    // r9 ROOT CAUSE of the r6-r8 hash-fail: DuckDB sum(BIGINT) returns
-    // HUGEINT (Arrow decimal128(38,0)), so n_tokens/doc_share_fp/
-    // mean_quality_fp reached the driver as int128 columns while Spark
-    // sent int64 — equal values, different types. Every CAST below to
-    // BIGINT pins the oracle's final types to int64; the slice keys
-    // that follow bisect any residue (TextOps.q_corpus_slice_share).
-    "q_corpus_report" ->
-      s"""WITH per AS (
-         |  SELECT lang, source, count(*) AS n_docs,
-         |    CAST(sum(len(regexp_split_to_array(text, '\\s+'))) AS BIGINT) AS n_tokens,
-         |    CAST(sum(CAST(round(($duckQualityScore) * 1e10) AS BIGINT)) AS BIGINT) AS q_sum_fp,
-         |    count($duckQualityScore) AS n_q
-         |  FROM documents GROUP BY 1, 2),
-         |t AS (SELECT CAST(sum(n_docs) AS BIGINT) AS total_docs FROM per)
-         |SELECT lang, source, n_docs, n_tokens,
-         |  CAST((2 * n_docs * 1000000 + total_docs) // (2 * total_docs) AS BIGINT) AS doc_share_fp,
-         |  CASE WHEN n_q > 0
-         |    THEN CAST((2 * q_sum_fp + n_q * 10000) // (2 * n_q * 10000) AS BIGINT)
-         |  END AS mean_quality_fp
-         |FROM per, t ORDER BY lang, source""".stripMargin,
-    // round 11: exact distributed ranking family — oracle = the naive
-    // global window DuckDB runs fine at these sfs; Spark produces the
-    // identical values through plans/GlobalRank (range-partitioned,
-    // no single-partition WindowExec)
-    "q_rank_global" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(string_split(text, ' '), x -> length(x) > 0)) AS BIGINT) AS t
-        |  FROM documents WHERE text IS NOT NULL),
-        |r AS (SELECT doc_id, t,
-        |        row_number() OVER (ORDER BY t, doc_id) AS rn,
-        |        count(*) OVER () AS n
-        |      FROM w)
-        |SELECT doc_id, t, rn, (rn - 1) * 100 // n + 1 AS pctile
-        |FROM r ORDER BY doc_id""".stripMargin,
-    "q_rank_strat" ->
-      """WITH w AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(list_filter(string_split(text, ' '), x -> length(x) > 0)) AS BIGINT) AS t
-        |  FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL),
-        |r AS (SELECT doc_id, lang, t,
-        |        row_number() OVER (PARTITION BY lang ORDER BY t, doc_id) AS rn_in_lang,
-        |        count(*) OVER (PARTITION BY lang) AS n_lang
-        |      FROM w)
-        |SELECT doc_id, lang, t, rn_in_lang,
-        |  (rn_in_lang - 1) * 100 // n_lang + 1 AS pctile
-        |FROM r ORDER BY doc_id""".stripMargin,
-    // quantile normalization: two row_number orders (within-source,
-    // pooled) + the exact ceil-rank map (r_s*n_p + n_s - 1) // n_s —
-    // positive operands, so DuckDB's truncating // is floor here
-    "q_quantile_norm" ->
-      """WITH d AS (SELECT doc_id, source, n_chars AS v FROM documents
-        |           WHERE source IS NOT NULL AND n_chars IS NOT NULL),
-        |r AS (SELECT doc_id, source, v,
-        |        row_number() OVER (PARTITION BY source ORDER BY v, doc_id) AS r_s,
-        |        CAST(count(*) OVER (PARTITION BY source) AS BIGINT) AS n_s
-        |      FROM d),
-        |p AS (SELECT row_number() OVER (ORDER BY v, doc_id) AS target_rn,
-        |             v AS v_norm
-        |      FROM d),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n_p FROM d),
-        |t AS (SELECT doc_id, source, v, r_s, n_s,
-        |        CAST((r_s * n_p + n_s - 1) // n_s AS BIGINT) AS target_rn
-        |      FROM r, n)
-        |SELECT doc_id, source, v, r_s, n_s, target_rn, v_norm
-        |FROM t JOIN p USING (target_rn) ORDER BY doc_id""".stripMargin,
-    "q_quantiles_exact" ->
-      """WITH v AS (
-        |  SELECT CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS c,
-        |         l_orderkey, l_linenumber
-        |  FROM lineitem),
-        |r AS (SELECT c,
-        |        row_number() OVER (ORDER BY c, l_orderkey, l_linenumber) AS rn,
-        |        count(*) OVER () AS n
-        |      FROM v),
-        |p AS (SELECT unnest(range(21)) AS p)
-        |SELECT CAST(p.p * 5 AS BIGINT) AS pct,
-        |       1 + (r.n - 1) * p.p // 20 AS r, c AS value_c
-        |FROM p JOIN r ON r.rn = 1 + (r.n - 1) * p.p // 20
-        |ORDER BY pct""".stripMargin,
-    // systematic sample: same 60-bit md5-window order key as
-    // q_sketch_kmv (nibble arithmetic — DuckDB has no base-16 conv)
-    "q_sample_systematic" ->
-      s"""WITH m AS (
-         |  SELECT doc_id, md5('sys:' || CAST(doc_id AS VARCHAR)) AS h
-         |  FROM documents),
-         |hv AS (SELECT doc_id, ${duckHexValue("h", 1, 15)} AS hv FROM m),
-         |r AS (SELECT doc_id, hv,
-         |        row_number() OVER (ORDER BY hv, doc_id) AS rn
-         |      FROM hv)
-         |SELECT doc_id, hv, rn FROM r
-         |WHERE (rn - 1) % 20 = 0 ORDER BY doc_id""".stripMargin,
-    "q_corpus_dump_toks" ->
-      """SELECT doc_id, len(regexp_split_to_array(text, '\s+')) AS n_toks
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_corpus_dump_q" ->
-      s"""SELECT doc_id,
-         |  CAST(round(($duckQualityScore) * 1e10) AS BIGINT) AS q_fp
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    // rank on the ROUNDED score (then term) so float-tail ties cannot
-    // order differently across engines
-    "q_tfidf" ->
-      """WITH w AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf
-        |       FROM w WHERE length(term) > 0 GROUP BY 1, 2),
-        |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |n AS (SELECT count(*) AS n FROM documents),
-        |scored AS (
-        |  SELECT doc_id, tf.term,
-        |         round(tf * ln((n.n + 1.0) / (df.df + 1.0)), 6) AS tfidf
-        |  FROM tf JOIN df USING (term), n),
-        |ranked AS (
-        |  SELECT doc_id, term, tfidf,
-        |         row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rank
-        |  FROM scored)
-        |SELECT doc_id, term, tfidf, CAST(rank AS BIGINT) AS rank
-        |FROM ranked WHERE rank <= 5 ORDER BY doc_id, rank""".stripMargin,
-    // NOT EXISTS, not NOT IN: a NULL fingerprint (null doc) must be
-    // ADMITTED (null never equals anything), matching left_anti — and
-    // admitted null docs stay INDIVIDUAL rows (GROUP BY would collapse
-    // unrelated null docs into one), mirroring the Spark split
-    "q_dedup_incr" ->
-      """WITH fp AS (
-        |  SELECT doc_id, source,
-        |    CASE WHEN text IS NULL THEN NULL
-        |         ELSE md5(array_to_string(list_sort(string_split(text,' ')), ' ')) END AS fp
-        |  FROM documents),
-        |ex AS (SELECT DISTINCT fp FROM fp WHERE source = 'src0' AND fp IS NOT NULL),
-        |b AS (SELECT * FROM fp WHERE source <> 'src0')
-        |SELECT min(doc_id) AS doc_id, fp, count(*) AS n_batch_dups
-        |FROM b
-        |WHERE fp IS NOT NULL
-        |  AND NOT EXISTS (SELECT 1 FROM ex WHERE ex.fp = b.fp)
-        |GROUP BY fp
-        |UNION ALL
-        |SELECT doc_id, fp, 1 AS n_batch_dups FROM b WHERE fp IS NULL
-        |ORDER BY doc_id""".stripMargin,
-    // corpus snapshot diff: v2 derived deterministically (id%17==3
-    // removed, id%13==5 edited via null-propagating ||, id%19==7
-    // duplicated at id+1e6); presence flags, not fp-nullness, drive
-    // added/removed; IS NOT DISTINCT FROM mirrors Spark's <=>
-    "q_corpus_diff" ->
-      """WITH v1 AS (
-        |  SELECT doc_id,
-        |    md5(array_to_string(list_sort(string_split(text,' ')), ' ')) AS fp
-        |  FROM documents),
-        |v2d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 13 = 5 THEN text || ' v2edit' ELSE text END AS text
-        |  FROM documents WHERE doc_id % 17 <> 3
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, text
-        |  FROM documents WHERE doc_id % 19 = 7),
-        |v2 AS (
-        |  SELECT doc_id,
-        |    md5(array_to_string(list_sort(string_split(text,' ')), ' ')) AS fp
-        |  FROM v2d)
-        |SELECT coalesce(v1.doc_id, v2.doc_id) AS doc_id,
-        |  CASE WHEN v1.doc_id IS NULL THEN 'added'
-        |       WHEN v2.doc_id IS NULL THEN 'removed'
-        |       WHEN v1.fp IS NOT DISTINCT FROM v2.fp THEN 'unchanged'
-        |       ELSE 'changed' END AS status
-        |FROM v1 FULL OUTER JOIN v2 ON v1.doc_id = v2.doc_id
-        |ORDER BY doc_id""".stripMargin,
-    "q_fingerprint" ->
-      """SELECT doc_id, md5(text) AS fp_exact,
-        |  md5(array_to_string(list_sort(string_split(text,' ')), ' ')) AS fp_normalized
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // mirrors q_text_clean's rule order exactly: URL strip → email
-    // strip → lower → drop non-alphanumerics → collapse blanks → trim
-    "q_text_clean" ->
-      """WITH c AS (
-        |  SELECT doc_id, text,
-        |    trim(regexp_replace(
-        |      regexp_replace(
-        |        lower(regexp_replace(
-        |          regexp_replace(text, 'https?://[^ ]+', ' ', 'g'),
-        |          '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+', ' ', 'g')),
-        |        '[^a-z0-9 ]', '', 'g'),
-        |      ' +', ' ', 'g')) AS clean_text
-        |  FROM documents)
-        |SELECT doc_id, clean_text,
-        |  len(regexp_extract_all(text, 'https?://[^ ]+')) AS n_urls,
-        |  len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+')) AS n_emails,
-        |  length(text) - length(clean_text) AS n_removed_chars
-        |FROM c ORDER BY doc_id""".stripMargin,
-    // blocklist literal order mirrors TextOps.blockPhrases (sorted);
-    // list_filter preserves it, so the joined hits strings agree.
-    "q_blocklist" ->
-      """WITH per AS (
-        |  SELECT doc_id,
-        |    list_filter(['big data','hash join','slow query','stream batch','table scan'],
-        |                p -> contains(lower(text), p)) AS h
-        |  FROM documents WHERE text IS NOT NULL)
-        |SELECT doc_id, CAST(len(h) AS BIGINT) AS n_hits,
-        |  array_to_string(h, ',') AS hits,
-        |  CASE WHEN len(h) >= 2 THEN 'drop' ELSE 'flag' END AS action
-        |FROM per WHERE len(h) > 0 ORDER BY doc_id""".stripMargin,
-    "q_repetition" ->
-      """WITH g AS (
-        |  SELECT doc_id, w,
-        |    CASE WHEN len(w) >= 2
-        |      THEN [array_to_string(w[i:i+1], ' ') for i in range(1, len(w))]
-        |      ELSE [] END AS g2,
-        |    CASE WHEN len(w) >= 3
-        |      THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
-        |      ELSE [] END AS g3
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents))
-        |SELECT doc_id, len(w) AS n_words,
-        |  round(CASE WHEN len(w) > 0
-        |    THEN CAST(len(w) - len(list_distinct(w)) AS DOUBLE) / len(w)
-        |    ELSE 0 END, 10) AS dup_word_frac,
-        |  round(CASE WHEN len(g2) > 0
-        |    THEN CAST(len(g2) - len(list_distinct(g2)) AS DOUBLE) / len(g2)
-        |    ELSE 0 END, 10) AS dup_2gram_frac,
-        |  round(CASE WHEN len(g3) > 0
-        |    THEN CAST(len(g3) - len(list_distinct(g3)) AS DOUBLE) / len(g3)
-        |    ELSE 0 END, 10) AS dup_3gram_frac
-        |FROM g ORDER BY doc_id""".stripMargin,
-    // winnowing: 4-gram hash60 values (15-nibble md5 bridge), windows
-    // of 4, leftmost-min selection with 0-based gram positions —
-    // list_position finds the first (leftmost) occurrence, matching
-    // Spark's (h, p) struct-min tie rule; short docs fall back to one
-    // whole-text gram like q_contamination
-    "q_winnow" ->
-      s"""WITH $duckWinnowFps
-         |SELECT doc_id, pos, fp FROM wfp
-         |ORDER BY doc_id, pos""".stripMargin,
-    // overlap localization over the winnow table: fps in 2..10 docs
-    // only (df<2 can't pair, df>10 is a stop-phrase cap), self-join on
-    // fp, span aggregation per ordered doc pair
-    "q_overlap" ->
-      s"""WITH $duckWinnowFps,
-         |rare AS (SELECT fp FROM wfp GROUP BY fp
-         |         HAVING count(DISTINCT doc_id) BETWEEN 2 AND 10),
-         |f2 AS (SELECT wfp.* FROM wfp JOIN rare USING (fp))
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  count(DISTINCT a.fp) AS n_shared,
-         |  min(a.pos) AS a_from, max(a.pos) AS a_to,
-         |  min(b.pos) AS b_from, max(b.pos) AS b_to
-         |FROM f2 a JOIN f2 b ON a.fp = b.fp AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2 ORDER BY doc_a, doc_b""".stripMargin,
-    // same benchmark slice (doc_id % 100 < 2) and 5-gram fallback-to-
-    // full-text rule as DedupOps.q_contamination
-    "q_contamination" ->
-      """WITH g AS (
-        |  SELECT doc_id, list_distinct(CASE WHEN len(w) >= 5
-        |    THEN [array_to_string(w[i:i+4], ' ') for i in range(1, len(w)-3)]
-        |    ELSE [text] END) AS gs
-        |  FROM (SELECT doc_id, text, string_split(text, ' ') AS w FROM documents)),
-        |bench AS (SELECT DISTINCT unnest(gs) AS g FROM g WHERE doc_id % 100 < 2),
-        |corpus AS (SELECT doc_id, unnest(gs) AS g FROM g WHERE doc_id % 100 >= 2),
-        |hits AS (SELECT doc_id, count(*) AS n_hits
-        |         FROM corpus JOIN bench USING (g) GROUP BY doc_id)
-        |SELECT d.doc_id, coalesce(h.n_hits, 0) AS n_hits,
-        |  coalesce(h.n_hits, 0) > 0 AS contaminated
-        |FROM (SELECT doc_id FROM g WHERE doc_id % 100 >= 2) d
-        |LEFT JOIN hits h USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    // MinHash values are the first 15 hex chars of the seeded md5 read
-    // as a 60-bit BIGINT (see DedupOps.signatures for why long, not
-    // hex-string): md5 once per (seed, shingle), then the hex→int
-    // nibble arithmetic of duckHashDraw applied to the 15-char prefix.
-    "q_minhash" ->
-      s"""WITH sh AS (
-         |  SELECT doc_id, CASE WHEN len(w) >= 3
-         |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
-         |    ELSE [text] END AS shingles
-         |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents))
-         |SELECT doc_id,
-         |${(1 to 8).map(i => s"  ${duckMinhash(i)} AS h$i").mkString(",\n")}
-         |FROM sh ORDER BY doc_id""".stripMargin,
-    // Carries no maxBucket cap (same caveat as q_sim_lsh /
-    // q_dedup_simhash): parity holds while no band bucket exceeds
-    // candidatePairs' 10k ceiling — an overflowed bucket would make
-    // the Spark side drop pairs the oracle keeps. Cap drop semantics
-    // are unit-tested separately.
-    "q_dedup_minhash" ->
-      """WITH sh AS (
-        |  SELECT doc_id, CASE WHEN len(w) >= 3
-        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
-        |    ELSE [text] END AS shingles
-        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents)),
-        |sig AS (
-        |  SELECT doc_id,
-        |SIG_COLUMNS
-        |  FROM sh),
-        |bands AS (
-        |  SELECT doc_id, concat_ws(':', h1, h2, h3, h4) AS band FROM sig
-        |  UNION ALL SELECT doc_id, concat_ws(':', h5, h6, h7, h8) FROM sig),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id),
-        |-- shingles = [NULL] iff text IS NULL (the short-text fallback
-        |-- wraps the raw text): null-text docs leave dsh, so the inner
-        |-- join drops their pairs — mirroring the Spark regroup's
-        |-- t_a/t_b IS NOT NULL invariant (a null doc confirms nothing)
-        |dsh AS (SELECT doc_id, list_distinct(shingles) AS s FROM sh
-        |        WHERE NOT (len(shingles) = 1 AND shingles[1] IS NULL))
-        |SELECT doc_a, doc_b,
-        |  round(CAST(len(list_intersect(x.s, y.s)) AS DOUBLE) / len(list_distinct(x.s || y.s)), 10) AS jaccard
-        |FROM cand JOIN dsh x ON x.doc_id = doc_a JOIN dsh y ON y.doc_id = doc_b
-        |ORDER BY doc_a, doc_b""".stripMargin
-        .replace("SIG_COLUMNS",
-          (1 to 8).map(i => s"    ${duckMinhash(i)} AS h$i").mkString(",\n")),
-    // Threshold sweep: the q_dedup_minhash pair CTEs, thresholds via
-    // unnest, rounded-jaccard >= thr/100.0 compare (identical IEEE
-    // division + bit-identical jaccard doubles → identical branches),
-    // literal spine keeps zero rows
-    "q_dedup_savings" ->
-      """WITH sh AS (
-        |  SELECT doc_id, CASE WHEN len(w) >= 3
-        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
-        |    ELSE [text] END AS shingles
-        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents)),
-        |sig AS (
-        |  SELECT doc_id,
-        |SIG_COLUMNS
-        |  FROM sh),
-        |bands AS (
-        |  SELECT doc_id, concat_ws(':', h1, h2, h3, h4) AS band FROM sig
-        |  UNION ALL SELECT doc_id, concat_ws(':', h5, h6, h7, h8) FROM sig),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id),
-        |dsh AS (SELECT doc_id, list_distinct(shingles) AS sset FROM sh
-        |        WHERE NOT (len(shingles) = 1 AND shingles[1] IS NULL)),
-        |mh AS (
-        |  SELECT doc_a, doc_b,
-        |    round(CAST(len(list_intersect(x.sset, y.sset)) AS DOUBLE) / len(list_distinct(x.sset || y.sset)), 10) AS jaccard
-        |  FROM cand JOIN dsh x ON x.doc_id = doc_a JOIN dsh y ON y.doc_id = doc_b),
-        |thr AS (SELECT unnest([900, 925, 950, 975, 990]) AS thr_mille),
-        |pt AS (SELECT t.thr_mille, m.doc_a, m.doc_b FROM mh m, thr t
-        |       WHERE m.jaccard >= t.thr_mille / 1000.0),
-        |pc AS (SELECT thr_mille, CAST(count(*) AS BIGINT) AS n_pairs
-        |       FROM pt GROUP BY 1),
-        |inv AS (SELECT DISTINCT thr_mille, doc_id FROM (
-        |    SELECT thr_mille, doc_a AS doc_id FROM pt
-        |    UNION ALL SELECT thr_mille, doc_b FROM pt)),
-        |tk AS (SELECT doc_id, CAST(len(regexp_split_to_array(text, '\s+')) AS BIGINT) AS n_toks
-        |       FROM documents),
-        |da AS (SELECT thr_mille, CAST(count(*) AS BIGINT) AS n_docs,
-        |         CAST(sum(n_toks) AS BIGINT) AS n_tokens
-        |       FROM inv JOIN tk USING (doc_id) GROUP BY 1)
-        |SELECT CAST(t.thr_mille AS BIGINT) AS thr_mille,
-        |  coalesce(pc.n_pairs, 0) AS n_pairs,
-        |  coalesce(da.n_docs, 0) AS n_docs,
-        |  coalesce(da.n_tokens, 0) AS n_tokens
-        |FROM thr t LEFT JOIN pc USING (thr_mille) LEFT JOIN da USING (thr_mille)
-        |ORDER BY thr_mille""".stripMargin
-        .replace("SIG_COLUMNS",
-          (1 to 8).map(i => s"    ${duckMinhash(i)} AS h$i").mkString(",\n")),
-    // CDC: boundaries where the 4-gram hash60 = 0 mod 16; spans from
-    // prepend/append of the boundary list; chunk fp = md5 of the
-    // token slice; df across the corpus
-    "q_cdc_chunks" -> {
-      val h60g = duckHexValue("md5(array_to_string(w[p:p+3], ' '))", 1, 15)
-      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-         |           WHERE text IS NOT NULL),
-         |b AS (SELECT doc_id, w, len(w) AS n,
-         |        CASE WHEN len(w) >= 4 THEN
-         |          [CAST(p - 1 AS BIGINT) FOR p IN range(1, len(w) - 2)
-         |           IF ($h60g) % 16 = 0]
-         |        ELSE [] END AS bpos
-         |      FROM t),
-         |c AS (SELECT doc_id, w,
-         |        list_prepend(CAST(0 AS BIGINT),
-         |          [CAST(p + 4 AS BIGINT) FOR p IN bpos]) AS starts,
-         |        list_append([CAST(p + 3 AS BIGINT) FOR p IN bpos],
-         |          CAST(n - 1 AS BIGINT)) AS ends
-         |      FROM b),
-         |u AS (SELECT doc_id, w,
-         |        CAST(generate_subscripts(starts, 1) - 1 AS BIGINT) AS chunk_id,
-         |        unnest(starts) AS st, unnest(ends) AS en
-         |      FROM c),
-         |ch AS (SELECT doc_id, chunk_id, st AS start_pos,
-         |         en - st + 1 AS n_tokens,
-         |         md5(array_to_string(w[st+1 : en+1], ' ')) AS chunk_fp
-         |       FROM u WHERE st <= en),
-         |dfc AS (SELECT chunk_fp, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-         |        FROM ch GROUP BY 1)
-         |SELECT doc_id, chunk_id, start_pos, n_tokens, chunk_fp, df
-         |FROM ch JOIN dfc USING (chunk_fp)
-         |ORDER BY doc_id, chunk_id""".stripMargin
-    },
-    // CDC savings: the same chunk CTE chain up to `ch`, source
-    // attached, then per-(source, fp) and per-fp collapse; n_tokens
-    // rides the fp group via min (content-determined)
-    "q_cdc_savings" -> {
-      val h60g = duckHexValue("md5(array_to_string(w[p:p+3], ' '))", 1, 15)
-      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-         |           WHERE text IS NOT NULL),
-         |b AS (SELECT doc_id, w, len(w) AS n,
-         |        CASE WHEN len(w) >= 4 THEN
-         |          [CAST(p - 1 AS BIGINT) FOR p IN range(1, len(w) - 2)
-         |           IF ($h60g) % 16 = 0]
-         |        ELSE [] END AS bpos
-         |      FROM t),
-         |c AS (SELECT doc_id, w,
-         |        list_prepend(CAST(0 AS BIGINT),
-         |          [CAST(p + 4 AS BIGINT) FOR p IN bpos]) AS starts,
-         |        list_append([CAST(p + 3 AS BIGINT) FOR p IN bpos],
-         |          CAST(n - 1 AS BIGINT)) AS ends
-         |      FROM b),
-         |u AS (SELECT doc_id, w,
-         |        unnest(starts) AS st, unnest(ends) AS en
-         |      FROM c),
-         |ch AS (SELECT doc_id, en - st + 1 AS n_tokens,
-         |         md5(array_to_string(w[st+1 : en+1], ' ')) AS chunk_fp
-         |       FROM u WHERE st <= en),
-         |chs AS (SELECT d.source, ch.n_tokens, ch.chunk_fp
-         |        FROM ch JOIN documents d USING (doc_id)),
-         |per AS (SELECT source, chunk_fp, CAST(count(*) AS BIGINT) AS cnt,
-         |          CAST(min(n_tokens) AS BIGINT) AS tok
-         |        FROM chs GROUP BY 1, 2),
-         |sa AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS n_chunks,
-         |         CAST(count(*) AS BIGINT) AS n_unique_chunks,
-         |         CAST(sum(cnt * tok) AS BIGINT) AS total_tokens,
-         |         CAST(sum(tok) AS BIGINT) AS unique_tokens
-         |       FROM per GROUP BY 1),
-         |gp AS (SELECT chunk_fp, CAST(count(*) AS BIGINT) AS cnt,
-         |          CAST(min(n_tokens) AS BIGINT) AS tok
-         |        FROM chs GROUP BY 1),
-         |ga AS (SELECT '(all)' AS source, CAST(sum(cnt) AS BIGINT) AS n_chunks,
-         |         CAST(count(*) AS BIGINT) AS n_unique_chunks,
-         |         CAST(sum(cnt * tok) AS BIGINT) AS total_tokens,
-         |         CAST(sum(tok) AS BIGINT) AS unique_tokens
-         |       FROM gp)
-         |SELECT source, n_chunks, n_unique_chunks, total_tokens, unique_tokens,
-         |  (2 * (total_tokens - unique_tokens) * 1000000 + total_tokens)
-         |    // (2 * total_tokens) AS savings_fp
-         |FROM (SELECT * FROM sa UNION ALL SELECT * FROM ga)
-         |ORDER BY source""".stripMargin
-    },
-    // Provenance matrix: q_dedup_minhash's pairs at jaccard >= 0.5
-    // (compared on the ROUNDED value), sources attached both sides,
-    // unordered (least, greatest) key
-    "q_source_overlap" ->
-      """WITH sh AS (
-        |  SELECT doc_id, CASE WHEN len(w) >= 3
-        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
-        |    ELSE [text] END AS shingles
-        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents)),
-        |sig AS (
-        |  SELECT doc_id,
-        |SIG_COLUMNS
-        |  FROM sh),
-        |bands AS (
-        |  SELECT doc_id, concat_ws(':', h1, h2, h3, h4) AS band FROM sig
-        |  UNION ALL SELECT doc_id, concat_ws(':', h5, h6, h7, h8) FROM sig),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id),
-        |dsh AS (SELECT doc_id, list_distinct(shingles) AS sset FROM sh
-        |        WHERE NOT (len(shingles) = 1 AND shingles[1] IS NULL)),
-        |mh AS (
-        |  SELECT doc_a, doc_b,
-        |    round(CAST(len(list_intersect(x.sset, y.sset)) AS DOUBLE) / len(list_distinct(x.sset || y.sset)), 10) AS jaccard
-        |  FROM cand JOIN dsh x ON x.doc_id = doc_a JOIN dsh y ON y.doc_id = doc_b),
-        |so AS (
-        |  SELECT least(da.source, db.source) AS source_a,
-        |         greatest(da.source, db.source) AS source_b
-        |  FROM mh JOIN documents da ON da.doc_id = doc_a
-        |          JOIN documents db ON db.doc_id = doc_b
-        |  WHERE jaccard >= 0.5)
-        |SELECT source_a, source_b, CAST(count(*) AS BIGINT) AS n_pairs
-        |FROM so GROUP BY 1, 2 ORDER BY source_a, source_b""".stripMargin
-        .replace("SIG_COLUMNS",
-          (1 to 8).map(i => s"    ${duckMinhash(i)} AS h$i").mkString(",\n")),
-    // Leakage audit: q_dedup_minhash's confirmed pairs joined to the
-    // q_split assignment on both members; leaks = boundary-straddling
-    "q_split_leakage" -> {
-      val key = "coalesce(md5(array_to_string(list_sort(string_split(text, ' ')), ' ')), " +
-        "'null:' || CAST(doc_id AS VARCHAR))"
-      val draw = duckHexValue(s"md5($key)", 1, 4)
-      s"""WITH sh AS (
-        |  SELECT doc_id, CASE WHEN len(w) >= 3
-        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
-        |    ELSE [text] END AS shingles
-        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents)),
-        |sig AS (
-        |  SELECT doc_id,
-        |SIG_COLUMNS
-        |  FROM sh),
-        |bands AS (
-        |  SELECT doc_id, concat_ws(':', h1, h2, h3, h4) AS band FROM sig
-        |  UNION ALL SELECT doc_id, concat_ws(':', h5, h6, h7, h8) FROM sig),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id),
-        |dsh AS (SELECT doc_id, list_distinct(shingles) AS sset FROM sh
-        |        WHERE NOT (len(shingles) = 1 AND shingles[1] IS NULL)),
-        |mh AS (
-        |  SELECT doc_a, doc_b,
-        |    round(CAST(len(list_intersect(x.sset, y.sset)) AS DOUBLE) / len(list_distinct(x.sset || y.sset)), 10) AS jaccard
-        |  FROM cand JOIN dsh x ON x.doc_id = doc_a JOIN dsh y ON y.doc_id = doc_b),
-        |sp AS (
-        |  SELECT doc_id,
-        |    CASE WHEN $draw % 1000 < 800 THEN 'train'
-        |         WHEN $draw % 1000 < 900 THEN 'val'
-        |         ELSE 'test' END AS split
-        |  FROM documents)
-        |SELECT doc_a, doc_b, jaccard, sa.split AS split_a, sb.split AS split_b,
-        |  sa.split <> sb.split AS leaks
-        |FROM mh JOIN sp sa ON sa.doc_id = doc_a JOIN sp sb ON sb.doc_id = doc_b
-        |ORDER BY doc_a, doc_b""".stripMargin
-        .replace("SIG_COLUMNS",
-          (1 to 8).map(i => s"    ${duckMinhash(i)} AS h$i").mkString(",\n"))
-    },
-    // Group-aware split: union of the two near-dup pair families
-    // (MinHash exact-jaccard >= 0.5 on the ROUNDED value + SimHash
-    // hamming <= 1), recursive min-label components (the
-    // q_dup_clusters oracle's CC form), draw on 'grp:' || group_id.
-    // CTE namespaces don't collide: minhash uses sh/sig/bands/cand/
-    // dsh/mh, simhash w/h/v/s.
-    "q_split_group" -> {
-      val draw = duckHexValue("md5('grp:' || CAST(group_id AS VARCHAR))", 1, 4)
-      s"""WITH RECURSIVE sh AS (
-        |  SELECT doc_id, CASE WHEN len(w) >= 3
-        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
-        |    ELSE [text] END AS shingles
-        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents)),
-        |sig AS (
-        |  SELECT doc_id,
-        |SIG_COLUMNS
-        |  FROM sh),
-        |bands AS (
-        |  SELECT doc_id, concat_ws(':', h1, h2, h3, h4) AS band FROM sig
-        |  UNION ALL SELECT doc_id, concat_ws(':', h5, h6, h7, h8) FROM sig),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id),
-        |dsh AS (SELECT doc_id, list_distinct(shingles) AS sset FROM sh
-        |        WHERE NOT (len(shingles) = 1 AND shingles[1] IS NULL)),
-        |mh AS (
-        |  SELECT doc_a, doc_b
-        |  FROM cand JOIN dsh x ON x.doc_id = doc_a JOIN dsh y ON y.doc_id = doc_b
-        |  WHERE round(CAST(len(list_intersect(x.sset, y.sset)) AS DOUBLE)
-        |          / len(list_distinct(x.sset || y.sset)), 10) >= 0.5),
-        |$duckSimhashCtes,
-        |p AS (SELECT doc_a, doc_b FROM mh
-        |  UNION
-        |  SELECT a.doc_id, b.doc_id FROM s a, s b
-        |  WHERE a.doc_id < b.doc_id
-        |    AND bit_count(xor(a.simhash, b.simhash)) <= 1),
-        |e AS (SELECT doc_a AS u, doc_b AS vtx FROM p
-        |  UNION ALL SELECT doc_b, doc_a FROM p),
-        |lab(node, label) AS (
-        |  SELECT u, least(u, min(vtx)) FROM e GROUP BY u
-        |  UNION
-        |  SELECT e.u, l.label FROM e JOIN lab l ON e.vtx = l.node),
-        |lbl AS (SELECT node, min(label) AS label FROM lab GROUP BY node),
-        |base AS (SELECT d.doc_id, coalesce(l.label, d.doc_id) AS group_id
-        |  FROM documents d LEFT JOIN lbl l ON d.doc_id = l.node)
-        |SELECT doc_id, group_id, $draw % 1000 AS bucket,
-        |  CASE WHEN $draw % 1000 < 800 THEN 'train'
-        |       WHEN $draw % 1000 < 900 THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM base ORDER BY doc_id""".stripMargin
-        .replace("SIG_COLUMNS",
-          (1 to 8).map(i => s"    ${duckMinhash(i)} AS h$i").mkString(",\n"))
-    },
-    // Calibration: q_dedup_minhash's candidate CTEs plus the
-    // signature-agreement count; every output column is an integer
-    // (est = n_agree*125000 exactly; exact jaccard is x1e6
-    // round-half-up on integer set sizes), so the compare is
-    // bit-exact. NULL=NULL signature slots score 0 in both engines.
-    "q_minhash_calib" ->
-      """WITH sh AS (
-        |  SELECT doc_id, CASE WHEN len(w) >= 3
-        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
-        |    ELSE [text] END AS shingles
-        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents)),
-        |sig AS (
-        |  SELECT doc_id,
-        |SIG_COLUMNS
-        |  FROM sh),
-        |bands AS (
-        |  SELECT doc_id, concat_ws(':', h1, h2, h3, h4) AS band FROM sig
-        |  UNION ALL SELECT doc_id, concat_ws(':', h5, h6, h7, h8) FROM sig),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id),
-        |agree AS (
-        |  SELECT doc_a, doc_b, CAST(
-        |    (CASE WHEN x.h1 = y.h1 THEN 1 ELSE 0 END) +
-        |    (CASE WHEN x.h2 = y.h2 THEN 1 ELSE 0 END) +
-        |    (CASE WHEN x.h3 = y.h3 THEN 1 ELSE 0 END) +
-        |    (CASE WHEN x.h4 = y.h4 THEN 1 ELSE 0 END) +
-        |    (CASE WHEN x.h5 = y.h5 THEN 1 ELSE 0 END) +
-        |    (CASE WHEN x.h6 = y.h6 THEN 1 ELSE 0 END) +
-        |    (CASE WHEN x.h7 = y.h7 THEN 1 ELSE 0 END) +
-        |    (CASE WHEN x.h8 = y.h8 THEN 1 ELSE 0 END) AS BIGINT) AS n_agree
-        |  FROM cand JOIN sig x ON x.doc_id = doc_a JOIN sig y ON y.doc_id = doc_b),
-        |dsh AS (SELECT doc_id, list_distinct(shingles) AS s FROM sh
-        |        WHERE NOT (len(shingles) = 1 AND shingles[1] IS NULL)),
-        |ex AS (
-        |  SELECT doc_a, doc_b,
-        |    CAST(len(list_intersect(a.s, b.s)) AS BIGINT) AS inter,
-        |    CAST(len(list_distinct(a.s || b.s)) AS BIGINT) AS uni
-        |  FROM cand JOIN dsh a ON a.doc_id = doc_a JOIN dsh b ON b.doc_id = doc_b)
-        |SELECT p.doc_a, p.doc_b, n_agree,
-        |  CAST(n_agree * 125000 AS BIGINT) AS est_jaccard_fp,
-        |  CAST((2 * 1000000 * inter + uni) // (2 * uni) AS BIGINT) AS exact_jaccard_fp,
-        |  CAST(n_agree * 125000 - (2 * 1000000 * inter + uni) // (2 * uni) AS BIGINT) AS err_fp
-        |FROM agree p JOIN ex USING (doc_a, doc_b)
-        |ORDER BY p.doc_a, p.doc_b""".stripMargin
-        .replace("SIG_COLUMNS",
-          (1 to 8).map(i => s"    ${duckMinhash(i)} AS h$i").mkString(",\n")),
-    // Exact run localization: every 8-gram hash60 with its position,
-    // df-bounded rare slice, fp self-join, gaps-and-islands on the
-    // (pair, diagonal) partition; run length = gram count + 7
-    "q_substr_runs" -> {
-      val h60 = duckHexValue("hx", 1, 15)
-      s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents
-         |           WHERE text IS NOT NULL),
-         |g AS (SELECT doc_id, unnest(range(1, len(w) - 6)) AS i, w
-         |      FROM t WHERE len(w) >= 8),
-         |fpt AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, CAST($h60 AS BIGINT) AS fp
-         |        FROM (SELECT doc_id, i, md5(array_to_string(w[i:i+7], ' ')) AS hx FROM g)),
-         |rare AS (SELECT fp FROM fpt GROUP BY fp
-         |         HAVING count(DISTINCT doc_id) BETWEEN 2 AND 10),
-         |f2 AS (SELECT fpt.* FROM fpt JOIN rare USING (fp)),
-         |m AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |        a.pos AS pa, b.pos AS pb, a.pos - b.pos AS diag
-         |      FROM f2 a JOIN f2 b ON a.fp = b.fp AND a.doc_id < b.doc_id),
-         |isl AS (SELECT *, pa - row_number()
-         |          OVER (PARTITION BY doc_a, doc_b, diag ORDER BY pa) AS island
-         |        FROM m)
-         |SELECT doc_a, doc_b, CAST(min(pa) AS BIGINT) AS a_from,
-         |  CAST(min(pb) AS BIGINT) AS b_from,
-         |  CAST(count(*) + 7 AS BIGINT) AS n_tokens
-         |FROM isl GROUP BY doc_a, doc_b, diag, island
-         |ORDER BY doc_a, doc_b, a_from, b_from""".stripMargin
-    },
-    // Agreement: the q_dedup_minhash chain (sh/sig/bands/cand/dsh)
-    // and the q_dedup_simhash chain (w/h/v/s — disjoint CTE names by
-    // construction) full-outer joined on the pair key; flags are
-    // presence booleans, scores ride where computed.
-    "q_dedup_agreement" ->
-      s"""WITH sh AS (
-        |  SELECT doc_id, CASE WHEN len(w) >= 3
-        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
-        |    ELSE [text] END AS shingles
-        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents)),
-        |sig AS (
-        |  SELECT doc_id,
-        |SIG_COLUMNS
-        |  FROM sh),
-        |bands AS (
-        |  SELECT doc_id, concat_ws(':', h1, h2, h3, h4) AS band FROM sig
-        |  UNION ALL SELECT doc_id, concat_ws(':', h5, h6, h7, h8) FROM sig),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id),
-        |dsh AS (SELECT doc_id, list_distinct(shingles) AS sset FROM sh
-        |        WHERE NOT (len(shingles) = 1 AND shingles[1] IS NULL)),
-        |mh AS (
-        |  SELECT doc_a AS ma, doc_b AS mb,
-        |    round(CAST(len(list_intersect(x.sset, y.sset)) AS DOUBLE) / len(list_distinct(x.sset || y.sset)), 10) AS jaccard
-        |  FROM cand JOIN dsh x ON x.doc_id = doc_a JOIN dsh y ON y.doc_id = doc_b),
-        |$duckSimhashCtes,
-        |shp AS (
-        |  SELECT a.doc_id AS sa, b.doc_id AS sb,
-        |    CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-        |  FROM s a, s b
-        |  WHERE a.doc_id < b.doc_id AND bit_count(xor(a.simhash, b.simhash)) <= 1)
-        |SELECT coalesce(ma, sa) AS doc_a, coalesce(mb, sb) AS doc_b,
-        |  ma IS NOT NULL AS in_minhash, sa IS NOT NULL AS in_simhash,
-        |  jaccard, hamming
-        |FROM mh FULL OUTER JOIN shp ON ma = sa AND mb = sb
-        |ORDER BY doc_a, doc_b""".stripMargin
-        .replace("SIG_COLUMNS",
-          (1 to 8).map(i => s"    ${duckMinhash(i)} AS h$i").mkString(",\n")),
-    // Containment: q_dedup_minhash's candidate CTEs, with Broder
-    // containment both directions + the quote_like flag compared on
-    // ROUNDED values (both engines branch identically)
-    "q_containment" ->
-      """WITH sh AS (
-        |  SELECT doc_id, CASE WHEN len(w) >= 3
-        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
-        |    ELSE [text] END AS shingles
-        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents)),
-        |sig AS (
-        |  SELECT doc_id,
-        |SIG_COLUMNS
-        |  FROM sh),
-        |bands AS (
-        |  SELECT doc_id, concat_ws(':', h1, h2, h3, h4) AS band FROM sig
-        |  UNION ALL SELECT doc_id, concat_ws(':', h5, h6, h7, h8) FROM sig),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id),
-        |dsh AS (SELECT doc_id, list_distinct(shingles) AS s FROM sh
-        |        WHERE NOT (len(shingles) = 1 AND shingles[1] IS NULL)),
-        |sc AS (
-        |  SELECT doc_a, doc_b,
-        |    round(CAST(len(list_intersect(x.s, y.s)) AS DOUBLE)
-        |      / len(list_distinct(x.s || y.s)), 10) AS jaccard,
-        |    round(CAST(len(list_intersect(x.s, y.s)) AS DOUBLE) / len(x.s), 10)
-        |      AS containment_a,
-        |    round(CAST(len(list_intersect(x.s, y.s)) AS DOUBLE) / len(y.s), 10)
-        |      AS containment_b
-        |  FROM cand JOIN dsh x ON x.doc_id = doc_a JOIN dsh y ON y.doc_id = doc_b)
-        |SELECT doc_a, doc_b, jaccard, containment_a, containment_b,
-        |  (greatest(containment_a, containment_b) >= 0.8 AND jaccard < 0.5)
-        |    AS quote_like
-        |FROM sc ORDER BY doc_a, doc_b""".stripMargin
-        .replace("SIG_COLUMNS",
-          (1 to 8).map(i => s"    ${duckMinhash(i)} AS h$i").mkString(",\n")),
-    // Fuzzy decontamination: same sig/band CTEs as q_dedup_minhash,
-    // but bands join corpus-side against bench-side (doc_id%100 split,
-    // q_contamination's convention) instead of self-joining; exact
-    // shingle Jaccard confirms; argmax via row_number on the rounded
-    // score (engine-stable ordering), left join keeps clean docs.
-    "q_contamination_fuzzy" ->
-      """WITH sh AS (
-        |  SELECT doc_id, CASE WHEN len(w) >= 3
-        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
-        |    ELSE [text] END AS shingles
-        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents)),
-        |sig AS (
-        |  SELECT doc_id,
-        |SIG_COLUMNS
-        |  FROM sh),
-        |bands AS (
-        |  SELECT doc_id, concat_ws(':', h1, h2, h3, h4) AS band FROM sig
-        |  UNION ALL SELECT doc_id, concat_ws(':', h5, h6, h7, h8) FROM sig),
-        |cand AS (
-        |  SELECT DISTINCT c.doc_id, b.doc_id AS bench_id
-        |  FROM bands c JOIN bands b ON c.band = b.band
-        |  WHERE c.doc_id % 100 >= 2 AND b.doc_id % 100 < 2),
-        |dsh AS (SELECT doc_id, list_distinct(shingles) AS s FROM sh
-        |        WHERE NOT (len(shingles) = 1 AND shingles[1] IS NULL)),
-        |conf AS (
-        |  SELECT cand.doc_id, cand.bench_id,
-        |    round(CAST(len(list_intersect(x.s, y.s)) AS DOUBLE) / len(list_distinct(x.s || y.s)), 10) AS jaccard
-        |  FROM cand JOIN dsh x ON x.doc_id = cand.doc_id
-        |            JOIN dsh y ON y.doc_id = cand.bench_id),
-        |rb AS (
-        |  SELECT doc_id, bench_id, jaccard,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY jaccard DESC, bench_id) AS rn,
-        |    CAST(count(*) OVER (PARTITION BY doc_id) AS BIGINT) AS n_cand
-        |  FROM conf)
-        |SELECT d.doc_id, coalesce(r.n_cand, 0) AS n_cand,
-        |  r.bench_id AS best_bench_id, r.jaccard AS best_jaccard,
-        |  coalesce(r.jaccard >= 0.5, false) AS contaminated
-        |FROM (SELECT doc_id FROM documents WHERE doc_id % 100 >= 2) d
-        |LEFT JOIN (SELECT * FROM rb WHERE rn = 1) r ON d.doc_id = r.doc_id
-        |ORDER BY d.doc_id""".stripMargin
-        .replace("SIG_COLUMNS",
-          (1 to 8).map(i => s"    ${duckMinhash(i)} AS h$i").mkString(",\n")),
-    "q_ngram_jaccard" ->
-      """WITH sh AS (
-        |  SELECT doc_id, list_distinct(CASE WHEN len(w) >= 3
-        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
-        |    ELSE [text] END) AS s
-        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents
-        |        WHERE doc_id < 40 AND text IS NOT NULL))
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |  round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(list_distinct(a.s || b.s)), 10) AS jaccard
-        |FROM sh a, sh b WHERE a.doc_id < b.doc_id ORDER BY doc_a, doc_b""".stripMargin,
-    // AllPairs truth: the quadratic inverted-index form (co-occurring
-    // pair intersection counts) — prefix filtering is EXACT, so the
-    // scalable Spark plan must reproduce this byte for byte.
-    "q_dedup_allpairs" ->
-      """WITH sh AS (
-        |  SELECT doc_id, list_distinct(
-        |    [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]) AS g
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        |        WHERE text IS NOT NULL)
-        |  WHERE len(w) >= 3),
-        |e AS (SELECT doc_id, unnest(g) AS sh FROM sh),
-        |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM e GROUP BY 1),
-        |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |            CAST(count(*) AS BIGINT) AS n_inter
-        |          FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |          GROUP BY 1, 2)
-        |SELECT doc_a, doc_b, n_inter, sa.n AS n_a, sb.n AS n_b,
-        |  (2 * n_inter * 1000000 + (sa.n + sb.n - n_inter))
-        |    // (2 * (sa.n + sb.n - n_inter)) AS j_fp
-        |FROM inter JOIN sz sa ON doc_a = sa.doc_id
-        |           JOIN sz sb ON doc_b = sb.doc_id
-        |WHERE 3 * n_inter >= sa.n + sb.n
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    // kNN graph: exact integer d2 on the x1e6 grid via the
-    // |a|^2+|b|^2-2ab identity (list_inner_product over
-    // integer-valued doubles <= 2.2e13 - exact); mutual = reverse
-    // edge exists in the same top-k edge set
-    "q_knn_graph" ->
-      """WITH x AS MATERIALIZED (SELECT vec_id,
-        |    list_transform(embedding::DOUBLE[], v -> floor(v * 1e6 + 0.5)) AS q
-        |  FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) > 0),
-        |nn AS MATERIALIZED (SELECT vec_id, q,
-        |    CAST(list_inner_product(q, q) AS BIGINT) AS n2 FROM x),
-        |p AS (SELECT a.vec_id AS va, b.vec_id AS vb,
-        |    a.n2 + b.n2 - 2 * CAST(list_inner_product(a.q, b.q) AS BIGINT) AS d2
-        |  FROM nn a, nn b WHERE a.vec_id <> b.vec_id),
-        |e AS MATERIALIZED (SELECT va, vb, d2,
-        |    CAST(row_number() OVER (PARTITION BY va ORDER BY d2, vb) AS BIGINT) AS rank
-        |  FROM p QUALIFY rank <= 4)
-        |SELECT e.va AS vec_id, e.rank AS rank, e.vb AS nn_id, e.d2 AS d2,
-        |  m.va IS NOT NULL AS mutual
-        |FROM e LEFT JOIN e m ON m.va = e.vb AND m.vb = e.va
-        |ORDER BY e.va, e.rank""".stripMargin,
-    // IVF-bucketed kNN graph: q_sim_ivf's deterministic cell
-    // assignment/probes for EVERY vector, exact d2 ranking within
-    // the probed cells only
-    "q_knn_graph_ivf" ->
-      """WITH cent AS (
-        |  SELECT vec_id AS cent_id, embedding AS cv FROM embeddings
-        |  WHERE vec_id < 16 AND embedding IS NOT NULL AND len(embedding) > 0),
-        |x AS MATERIALIZED (SELECT vec_id, embedding,
-        |    list_transform(embedding::DOUBLE[], v -> floor(v * 1e6 + 0.5)) AS q
-        |  FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) > 0),
-        |ranked AS MATERIALIZED (
-        |  SELECT e.vec_id, e.q, c.cent_id,
-        |    row_number() OVER (PARTITION BY e.vec_id
-        |      ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cv::DOUBLE[]) DESC,
-        |               c.cent_id) AS rn
-        |  FROM x e, cent c),
-        |assigned AS (SELECT vec_id, q, cent_id AS cell FROM ranked WHERE rn = 1),
-        |probes AS (SELECT vec_id AS query_id, q AS qq, cent_id AS cell
-        |           FROM ranked WHERE rn <= 4),
-        |p AS (SELECT p.query_id AS va, a.vec_id AS vb,
-        |    CAST(list_inner_product(p.qq, p.qq) AS BIGINT)
-        |      + CAST(list_inner_product(a.q, a.q) AS BIGINT)
-        |      - 2 * CAST(list_inner_product(p.qq, a.q) AS BIGINT) AS d2
-        |  FROM probes p JOIN assigned a USING (cell)
-        |  WHERE a.vec_id <> p.query_id),
-        |e AS MATERIALIZED (SELECT va, vb, d2,
-        |    CAST(row_number() OVER (PARTITION BY va ORDER BY d2, vb) AS BIGINT) AS rank
-        |  FROM p QUALIFY rank <= 4)
-        |SELECT e.va AS vec_id, e.rank AS rank, e.vb AS nn_id, e.d2 AS d2,
-        |  m.va IS NOT NULL AS mutual
-        |FROM e LEFT JOIN e m ON m.va = e.vb AND m.vb = e.va
-        |ORDER BY e.va, e.rank""".stripMargin,
-    "q_sim_topk" ->
-      """SELECT query_id, neighbor_id, cosine, rank FROM (
-        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-        |    round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS cosine,
-        |    row_number() OVER (PARTITION BY a.vec_id
-        |      ORDER BY round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) DESC,
-        |               b.vec_id) AS rank
-        |  FROM embeddings a, embeddings b
-        |  WHERE a.vec_id < 10 AND b.vec_id <> a.vec_id)
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // hard negatives: q_sim_topk's ranking restricted to cross-label
-    // candidates; same rounded-cosine DESC, id ASC tie order as the
-    // bounded-heap aggregator
-    "q_hard_negatives" ->
-      """SELECT query_id, query_label, neighbor_id, neighbor_label,
-        |       cosine, rank FROM (
-        |  SELECT a.vec_id AS query_id, a.label AS query_label,
-        |    b.vec_id AS neighbor_id, b.label AS neighbor_label,
-        |    round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS cosine,
-        |    row_number() OVER (PARTITION BY a.vec_id
-        |      ORDER BY round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) DESC,
-        |               b.vec_id) AS rank
-        |  FROM embeddings a, embeddings b
-        |  WHERE a.vec_id < 10 AND a.label IS NOT NULL
-        |    AND b.vec_id <> a.vec_id AND b.label IS NOT NULL
-        |    AND b.label <> a.label)
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // Spark session_window ≡ gaps-and-islands: a new session starts
-    // when the gap to the previous event is >= 30 min (Spark merges
-    // strictly-before-end starts); end = last event + gap. Computed at
-    // microsecond precision so sub-second timestamps can't diverge,
-    // floored to seconds only at the output boundary.
-    "q_time_session" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS eus, value FROM events),
-        |m AS (SELECT user_id, eus, value,
-        |  CASE WHEN lag(eus) OVER w IS NULL
-        |       OR eus - lag(eus) OVER w >= 1800000000 THEN 1 ELSE 0 END AS new_sess
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY eus)),
-        |g AS (SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY eus
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess FROM m)
-        |SELECT (min(eus) // 1000000) AS sess_start,
-        |  ((max(eus) + 1800000000) // 1000000) AS sess_end,
-        |  user_id, count(*) AS n_events,
-        |  CAST(round(sum(CAST(value AS DECIMAL(18,2))),2) AS DOUBLE) AS sum_value
-        |FROM g GROUP BY user_id, sess
-        |ORDER BY user_id, sess_start""".stripMargin,
-    // media metadata derives arithmetically from doc_id (mediaTable);
-    // floor() before the INT cast — DuckDB's cast-to-int ROUNDS while
-    // Spark's truncates
-    "q_media_resize" ->
-      """SELECT doc_id AS media_id,
-        |  (['image','audio','video'])[CAST(doc_id % 3 AS INT) + 1] AS kind,
-        |  CAST(doc_id % 4 * 160 + 320 AS INT) AS width,
-        |  CAST(doc_id % 4 * 90 + 180 AS INT) AS height,
-        |  CAST(least(doc_id % 4 * 160 + 320, 640) AS INT) AS out_width,
-        |  CAST(floor((doc_id % 4 * 90 + 180) * least(doc_id % 4 * 160 + 320, 640)
-        |       / (doc_id % 4 * 160 + 320)) AS INT) AS out_height
-        |FROM documents ORDER BY media_id""".stripMargin,
-    // REAL codec round-trip (Multimodal.q_media_decode): Spark encodes
-    // a deterministic 16x16 PNG per id with ImageIO, decodes it back,
-    // and sums the raster channels; the oracle computes the closed form
-    // channel(x,y,c) = (id*37 + x*5 + y*11 + c*3) % 256 directly —
-    // DuckDB never sees bytes, so a hash match proves the codec path.
-    // Integer sums: no float parity caveats.
-    "q_media_decode" ->
-      """WITH px AS (
-        |  SELECT doc_id AS media_id, g1.x, g2.y
-        |  FROM documents, generate_series(0, 15) g1(x), generate_series(0, 15) g2(y)
-        |  WHERE doc_id < 64)
-        |SELECT media_id,
-        |  CAST(16 AS INT) AS width, CAST(16 AS INT) AS height,
-        |  CAST(sum((media_id*37 + x*5 + y*11) % 256) AS BIGINT) AS sum_r,
-        |  CAST(sum((media_id*37 + x*5 + y*11 + 3) % 256) AS BIGINT) AS sum_g,
-        |  CAST(sum((media_id*37 + x*5 + y*11 + 6) % 256) AS BIGINT) AS sum_b
-        |FROM px GROUP BY media_id ORDER BY media_id""".stripMargin,
-    // Perceptual aHash over the REAL codec (Multimodal.q_media_phash):
-    // the oracle rebuilds the 8x8 luma-block hash and the Hamming
-    // nearest neighbor from the closed-form pixels alone — integer
-    // cross-multiplied mean test, 63-bit hash, bit_count(xor) NN
-    "q_media_phash" ->
-      """WITH px AS (
-        |  SELECT doc_id AS media_id, g1.x, g2.y,
-        |    299*((media_id*37 + x*5 + y*11) % 256)
-        |    + 587*((media_id*37 + x*5 + y*11 + 3) % 256)
-        |    + 114*((media_id*37 + x*5 + y*11 + 6) % 256) AS luma
-        |  FROM documents, generate_series(0, 15) g1(x), generate_series(0, 15) g2(y)
-        |  WHERE doc_id < 64),
-        |bl AS (SELECT media_id, (y // 2) * 8 + (x // 2) AS b,
-        |         CAST(sum(luma) AS BIGINT) AS bs
-        |       FROM px GROUP BY 1, 2),
-        |tt AS (SELECT media_id, CAST(sum(bs) AS BIGINT) AS total
-        |       FROM bl GROUP BY 1),
-        |ph AS (SELECT bl.media_id,
-        |    CAST(sum(CASE WHEN b < 63 AND 64 * bs > total
-        |             THEN CAST(1 AS BIGINT) << CAST(b AS INT) ELSE 0 END) AS BIGINT) AS phash
-        |  FROM bl JOIN tt USING (media_id) GROUP BY 1),
-        |pr AS (SELECT x.media_id, x.phash, y.media_id AS nn_id,
-        |    CAST(bit_count(xor(x.phash, y.phash)) AS BIGINT) AS nn_hamming,
-        |    row_number() OVER (PARTITION BY x.media_id
-        |      ORDER BY bit_count(xor(x.phash, y.phash)), y.media_id) AS rn
-        |  FROM ph x JOIN ph y ON x.media_id <> y.media_id)
-        |SELECT media_id, phash, nn_id, nn_hamming
-        |FROM pr WHERE rn = 1 ORDER BY media_id""".stripMargin,
-    // Image near-dup pairs (Multimodal.q_media_dedup): banding is pure
-    // pruning (pigeonhole: maxHamming+1 bands, a pair within the
-    // threshold agrees exactly on >=1 band), so the oracle skips it
-    // and takes ALL pairs within Hamming <= 3 over the closed-form
-    // pHash — a hash match proves the banded path loses no pairs and
-    // reproves the PNG codec arithmetic (the q_dedup_simhash stance).
-    "q_media_dedup" ->
-      """WITH px AS (
-        |  SELECT doc_id AS media_id, g1.x, g2.y,
-        |    299*((media_id*37 + x*5 + y*11) % 256)
-        |    + 587*((media_id*37 + x*5 + y*11 + 3) % 256)
-        |    + 114*((media_id*37 + x*5 + y*11 + 6) % 256) AS luma
-        |  FROM documents, generate_series(0, 15) g1(x), generate_series(0, 15) g2(y)
-        |  WHERE doc_id < 64),
-        |bl AS (SELECT media_id, (y // 2) * 8 + (x // 2) AS b,
-        |         CAST(sum(luma) AS BIGINT) AS bs
-        |       FROM px GROUP BY 1, 2),
-        |tt AS (SELECT media_id, CAST(sum(bs) AS BIGINT) AS total
-        |       FROM bl GROUP BY 1),
-        |ph AS (SELECT bl.media_id,
-        |    CAST(sum(CASE WHEN b < 63 AND 64 * bs > total
-        |             THEN CAST(1 AS BIGINT) << CAST(b AS INT) ELSE 0 END) AS BIGINT) AS phash
-        |  FROM bl JOIN tt USING (media_id) GROUP BY 1)
-        |SELECT a.media_id AS media_a, b.media_id AS media_b,
-        |  CAST(bit_count(xor(a.phash, b.phash)) AS BIGINT) AS hamming
-        |FROM ph a JOIN ph b ON a.media_id < b.media_id
-        |WHERE bit_count(xor(a.phash, b.phash)) <= 3
-        |ORDER BY media_a, media_b""".stripMargin,
-    // REAL audio codec round-trip (Multimodal.q_media_audio): Spark
-    // encodes a deterministic 256-sample 16-bit PCM mono WAV per id
-    // with javax.sound.sampled, decodes it back, and emits integer
-    // sample stats; the oracle computes the closed form
-    // sample(i) = ((id*31 + i*7) % 65536) - 32768 directly — DuckDB
-    // never sees bytes, so a hash match proves the WAV/PCM codec path
-    // (header, endianness, sign extension). Integer stats throughout.
-    "q_media_audio" ->
-      """WITH sm AS (
-        |  SELECT doc_id AS media_id,
-        |         ((doc_id*31 + i.i*7) % 65536) - 32768 AS v
-        |  FROM documents, generate_series(0, 255) i(i)
-        |  WHERE doc_id < 64)
-        |SELECT media_id,
-        |  CAST(16000 AS BIGINT) AS sample_rate,
-        |  CAST(256 AS BIGINT) AS n_samples,
-        |  CAST(sum(v) AS BIGINT) AS sum_samples,
-        |  CAST(sum(abs(v)) AS BIGINT) AS sum_abs,
-        |  CAST(min(v) AS BIGINT) AS min_sample,
-        |  CAST(max(v) AS BIGINT) AS max_sample
-        |FROM sm GROUP BY media_id ORDER BY media_id""".stripMargin,
-    // round 11: the full media-features surface under the oracle —
-    // the stub decoder is positional byte sums (feature j = sum of
-    // byte values at positions ≡ j mod 8), which DuckDB reproduces
-    // with ascii(substr(...)) sums over the ASCII payloads; the dense
-    // 8-row spine keeps short/empty/null payloads at zero features
-    // instead of missing rows
-    "q_media_features" ->
-      """WITH b AS (
-        |  SELECT doc_id AS media_id,
-        |    CASE CAST(doc_id % 3 AS INTEGER) WHEN 0 THEN 'image'
-        |      WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-        |    coalesce(text, '') AS t
-        |  FROM documents),
-        |sp AS (
-        |  SELECT media_id, kind, length(t) AS n_bytes,
-        |    unnest(range(8)) AS feat_idx
-        |  FROM b),
-        |ch AS (
-        |  SELECT media_id, p % 8 AS fi,
-        |    ascii(substr(t, CAST(p + 1 AS BIGINT), 1)) AS code
-        |  FROM (SELECT media_id, t, unnest(range(length(t))) AS p FROM b)),
-        |agg AS (SELECT media_id, fi, sum(code) AS sv FROM ch GROUP BY 1, 2)
-        |SELECT sp.media_id, sp.kind, CAST(sp.n_bytes AS BIGINT) AS n_bytes,
-        |  CAST(sp.feat_idx AS BIGINT) AS feat_idx,
-        |  round(CAST(coalesce(agg.sv, 0) AS DOUBLE), 6) AS feat_value
-        |FROM sp LEFT JOIN agg
-        |  ON sp.media_id = agg.media_id AND sp.feat_idx = agg.fi
-        |ORDER BY sp.media_id, sp.feat_idx""".stripMargin,
-    // round 11: frame content verified as STRINGS (ASCII payloads —
-    // proven by q_media_frame_meta's md5 match), so count, offsets,
-    // and content are all under the hash
-    "q_media_frames" ->
-      """WITH v AS (
-        |  SELECT doc_id AS media_id, text, length(text) AS n
-        |  FROM documents WHERE doc_id % 3 = 2 AND length(text) > 0),
-        |i AS (
-        |  SELECT media_id, text,
-        |         unnest(range(CAST(ceil(n / 64.0) AS BIGINT))) AS frame_no
-        |  FROM v)
-        |SELECT media_id, frame_no,
-        |  length(substr(text, CAST(frame_no*64 + 1 AS BIGINT), 64)) AS n_bytes,
-        |  substr(text, CAST(frame_no*64 + 1 AS BIGINT), 64) AS frame_str
-        |FROM i ORDER BY media_id, frame_no""".stripMargin,
-    // frame boundaries verified on the TEXT view of the ASCII payloads
-    // (DuckDB can't slice BLOBs): substr chars == substring bytes here
-    "q_media_frame_meta" ->
-      """WITH v AS (
-        |  SELECT doc_id AS media_id, text, length(text) AS n
-        |  FROM documents WHERE doc_id % 3 = 2 AND length(text) > 0),
-        |i AS (
-        |  SELECT media_id, text,
-        |         unnest(range(CAST(ceil(n / 64.0) AS BIGINT))) AS frame_no
-        |  FROM v),
-        |f AS (
-        |  SELECT media_id, frame_no,
-        |         substr(text, CAST(frame_no*64 + 1 AS BIGINT), 64) AS frame
-        |  FROM i)
-        |SELECT media_id, frame_no,
-        |  length(frame) AS n_bytes, md5(frame) AS frame_md5,
-        |  CAST(ascii(frame) AS BIGINT) AS first_byte
-        |FROM f ORDER BY media_id, frame_no""".stripMargin,
-    "q_embed_stats" ->
-      """SELECT vec_id,
-        |  CAST(len(embedding) AS BIGINT) AS dim,
-        |  round(sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x*x))), 6) AS l2_norm,
-        |  list_max(embedding::DOUBLE[]) AS max_val,
-        |  list_min(embedding::DOUBLE[]) AS min_val
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-    // floor(x+0.5), not round(): the engines disagree on .5 ties
-    "q_embed_quant" ->
-      """WITH s AS (SELECT vec_id, embedding::DOUBLE[] AS e,
-        |  127.0 / greatest(list_max(embedding::DOUBLE[]), -list_min(embedding::DOUBLE[])) AS scale
-        |  FROM embeddings WHERE vec_id < 100)
-        |SELECT vec_id, CAST(generate_subscripts(e,1) - 1 AS BIGINT) AS dim,
-        |  CAST(floor(unnest(e) * scale + 0.5) AS BIGINT) AS q
-        |FROM s ORDER BY vec_id, dim""".stripMargin,
-    // per-dim calibration: floor(v*1e6+0.5) fixed-point (float grids
-    // DO hit exact .5 ties — k/128 * 1e6 — and engine round() modes
-    // differ); HUGEINT sums mirror Spark's decimal(38,0) exactly
-    "q_embed_calib" ->
-      """WITH x AS (
-        |  SELECT CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS dim,
-        |    unnest(embedding::DOUBLE[]) AS v
-        |  FROM embeddings),
-        |a AS (
-        |  SELECT dim, count(*) AS n,
-        |    sum(CAST(floor(v * 1e6 + 0.5) AS BIGINT)) AS sx,
-        |    sum(CAST(floor(v * 1e6 + 0.5) AS BIGINT) * CAST(floor(v * 1e6 + 0.5) AS BIGINT)) AS sxx,
-        |    min(v) AS min_val, max(v) AS max_val
-        |  FROM x WHERE v IS NOT NULL GROUP BY dim)
-        |SELECT dim, n,
-        |  round(CAST(sx AS DOUBLE) / n / 1e6, 6) AS mean,
-        |  CASE WHEN n > 1
-        |       THEN round(sqrt(CAST(n * sxx - sx * sx AS DOUBLE) / (n * (n - 1))) / 1e6, 6) END AS std,
-        |  min_val, max_val,
-        |  CASE WHEN greatest(abs(min_val), abs(max_val)) > 0
-        |       THEN round(127.0 / greatest(abs(min_val), abs(max_val)), 6) END AS scale
-        |FROM a ORDER BY dim""".stripMargin,
-    // centroid-distance outliers: x1e6 grid, sign-separated centroid
-    // rounding, exact integer d2, row_number mirrors the heap ranks
-    "q_embed_outliers" ->
-      """WITH el AS (SELECT vec_id,
-        |    CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS dim,
-        |    CAST(floor(unnest(embedding::DOUBLE[]) * 1e6 + 0.5) AS BIGINT) AS x
-        |  FROM embeddings),
-        |cen AS (SELECT dim,
-        |    CASE WHEN sum(x) >= 0
-        |      THEN (2 * CAST(sum(x) AS BIGINT) + count(*)) // (2 * count(*))
-        |      ELSE -((2 * abs(CAST(sum(x) AS BIGINT)) + count(*))
-        |             // (2 * count(*))) END AS c
-        |  FROM el WHERE x IS NOT NULL GROUP BY 1),
-        |d2 AS (SELECT el.vec_id,
-        |    CAST(sum((el.x - cen.c) * (el.x - cen.c)) AS BIGINT) AS d2
-        |  FROM el JOIN cen ON el.dim = cen.dim
-        |  WHERE el.x IS NOT NULL GROUP BY 1),
-        |r AS (SELECT vec_id, d2, CAST(row_number() OVER
-        |        (ORDER BY d2 DESC, vec_id) AS BIGINT) AS rank FROM d2)
-        |SELECT vec_id, d2, rank FROM r WHERE rank <= 20
-        |ORDER BY rank""".stripMargin,
-    // per-dim mean drift: floor(v*1e6+0.5) grid, mean difference
-    // cleared to (s_ref*n_cur - s_cur*n_ref)/(n_ref*n_cur), sign
-    // separated before the round-half-up division
-    "q_embed_drift" ->
-      """WITH x AS (SELECT vec_id % 2 = 0 AS ref,
-        |    CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS dim,
-        |    unnest(embedding::DOUBLE[]) AS v
-        |  FROM embeddings),
-        |a AS (SELECT dim,
-        |    CAST(sum(CASE WHEN ref THEN 1 ELSE 0 END) AS BIGINT) AS n_ref,
-        |    CAST(sum(CASE WHEN NOT ref THEN 1 ELSE 0 END) AS BIGINT) AS n_cur,
-        |    CAST(sum(CASE WHEN ref THEN CAST(floor(v * 1e6 + 0.5) AS BIGINT)
-        |             ELSE 0 END) AS BIGINT) AS s_ref,
-        |    CAST(sum(CASE WHEN NOT ref THEN CAST(floor(v * 1e6 + 0.5) AS BIGINT)
-        |             ELSE 0 END) AS BIGINT) AS s_cur
-        |  FROM x WHERE v IS NOT NULL GROUP BY dim)
-        |SELECT dim, n_ref, n_cur, s_ref, s_cur,
-        |  CASE WHEN n_ref = 0 OR n_cur = 0 THEN NULL ELSE
-        |    (CASE WHEN s_ref*n_cur - s_cur*n_ref < 0 THEN -1 ELSE 1 END) *
-        |    ((2 * abs(s_ref*n_cur - s_cur*n_ref) + n_ref*n_cur) //
-        |     (2 * n_ref*n_cur)) END AS mean_diff_fp
-        |FROM a ORDER BY dim""".stripMargin,
-    // JL projection oracle is GENERATED from the same pinned sign
-    // matrix the Spark expressions read (EmbedOps.rpSigns)
-    "q_embed_rp" -> graft.queries.EmbedOps.rpOracleSql,
-    // Covariance truth: self-join the per-(vec, dim) quantized table
-    // on vec_id (quadratic in d, fine at oracle scale); the Spark
-    // side is the one-shuffle bounded-key row-local pair build. Sums
-    // re-cast to BIGINT (DuckDB widens to HUGEINT); corr is the one
-    // mirrored double expression.
-    "q_embed_cov" ->
-      """WITH x0 AS (SELECT vec_id,
-        |    CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS d,
-        |    unnest(embedding::DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |x AS (SELECT vec_id, d, CAST(floor(v * 1e6 + 0.5) AS BIGINT) AS q
-        |      FROM x0),
-        |cells AS (SELECT a.d AS i, b.d AS j, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(a.q * b.q) AS BIGINT) AS s_ij
-        |  FROM x a JOIN x b ON a.vec_id = b.vec_id AND a.d <= b.d
-        |  GROUP BY 1, 2),
-        |dv AS (SELECT d, CAST(sum(q) AS BIGINT) AS s,
-        |    CAST(count(*) AS HUGEINT) * CAST(sum(q * q) AS HUGEINT)
-        |      - CAST(sum(q) AS HUGEINT) * CAST(sum(q) AS HUGEINT) AS vnum
-        |  FROM x GROUP BY 1)
-        |SELECT c.i, c.j, c.n, c.s_ij,
-        |  CAST(CASE WHEN CAST(c.n AS HUGEINT) * c.s_ij - CAST(di.s AS HUGEINT) * dj.s >= 0
-        |    THEN (CAST(c.n AS HUGEINT) * c.s_ij - CAST(di.s AS HUGEINT) * dj.s)
-        |         // (CAST(c.n AS HUGEINT) * c.n)
-        |    ELSE -((CAST(di.s AS HUGEINT) * dj.s - CAST(c.n AS HUGEINT) * c.s_ij)
-        |           // (CAST(c.n AS HUGEINT) * c.n))
-        |  END AS BIGINT) AS cov_fp12,
-        |  CASE WHEN di.vnum > 0 AND dj.vnum > 0
-        |    THEN round((CAST(c.n AS HUGEINT) * c.s_ij - CAST(di.s AS HUGEINT) * dj.s)
-        |               / (sqrt(di.vnum) * sqrt(dj.vnum)), 6)
-        |  END AS corr
-        |FROM cells c JOIN dv di ON c.i = di.d JOIN dv dj ON c.j = dj.d
-        |ORDER BY c.i, c.j""".stripMargin,
-    // Power-iteration truth: the same covariance cells, mirrored to
-    // the full matrix, then K = 8 unrolled integer iterations (join +
-    // max-abs normalize per step) — every op is integer, so the
-    // prefix replays identically
-    "q_pca_power" ->
-      s"""WITH ${duckPcaCtes(8)}
-         |SELECT v.dim, v.v AS v_fp,
-         |  (SELECT mx FROM x8) // 100000 AS lambda_fp
-         |FROM it8 v ORDER BY v.dim""".stripMargin,
-    // Projection onto the q_pca_power direction (shared CTE chain):
-    // exact long dot products of the quantized vectors with the
-    // integer eigendirection; explained-variance share from the
-    // covariance trace (diagonal mu cells), x1e6 round-half-up.
-    "q_pca_project" ->
-      s"""WITH ${duckPcaCtes(8)},
-         |lam AS (SELECT mx // 100000 AS lambda_fp FROM x8),
-         |tr AS (SELECT CAST(sum(m) AS BIGINT) AS trace FROM mu WHERE i = j),
-         |pr AS (SELECT xq.vec_id, CAST(sum(xq.q * v.v) AS BIGINT) AS proj_fp
-         |       FROM xq JOIN it8 v ON xq.d = v.dim GROUP BY 1)
-         |SELECT vec_id, proj_fp, lambda_fp,
-         |  (2 * lambda_fp * 1000000 + trace) // (2 * trace) AS ev_share_fp
-         |FROM pr, lam, tr ORDER BY vec_id""".stripMargin,
-    // list(v ORDER BY vec_id) fixes the accumulation order on both
-    // sides — float sums are order-dependent in the last bits
-    "q_embed_centroid" ->
-      """WITH pe AS (
-        |  SELECT vec_id % 8 AS cell, vec_id,
-        |    CAST(generate_subscripts(embedding,1) - 1 AS BIGINT) AS dim,
-        |    unnest(embedding::DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id < 256)
-        |SELECT cell, dim,
-        |  round(list_sum(list(v ORDER BY vec_id)) / count(*), 6) AS centroid,
-        |  count(*) AS n
-        |FROM pe GROUP BY cell, dim ORDER BY cell, dim""".stripMargin,
-    // Two Lloyd iterations, k=8, bounded window, first-k init — the
-    // Spark side's ordered-fold M-step (round 6 → REAL) makes the
-    // inter-iteration centroids bit-identical in both engines, so the
-    // E-step argmax (cosine DESC, cent_id — DuckDB ranked window vs
-    // Spark's greatest over (c, -id) structs) agrees exactly, as
-    // q_sim_ivf already proves for cosine ranking.
-    "q_embed_train" ->
-      s"""WITH ${duckKmeansCtes(2)},
-         |sf AS (SELECT v.vec_id, c.cent_id, list_cosine_similarity(v.e, c.cv) AS c
-         |  FROM v, c2 c)
-         |SELECT vec_id, cell, round(c, 6) AS cosine FROM (
-         |  SELECT vec_id, cent_id AS cell, c,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, cent_id) AS rn
-         |  FROM sf) WHERE rn = 1 ORDER BY vec_id""".stripMargin,
-    // Silhouette over the SAME trained kernel (shared CTE chain):
-    // top-2 cosines per vector, one mirrored IEEE silhouette
-    // expression quantized x1e6 before the per-cell sum, mean by
-    // sign-separated integer division.
-    "q_silhouette" ->
-      s"""WITH ${duckKmeansCtes(2)},
-         |sf AS (SELECT v.vec_id, c.cent_id, list_cosine_similarity(v.e, c.cv) AS c
-         |  FROM v, c2 c),
-         |r AS (SELECT vec_id, cent_id, c,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, cent_id) AS rn
-         |  FROM sf),
-         |p AS (SELECT vec_id,
-         |    max(CASE WHEN rn = 1 THEN cent_id END) AS cell,
-         |    max(CASE WHEN rn = 1 THEN c END) AS c1,
-         |    max(CASE WHEN rn = 2 THEN c END) AS c2
-         |  FROM r WHERE rn <= 2 GROUP BY vec_id),
-         |q AS (SELECT cell,
-         |    CAST(floor((CASE WHEN greatest(1.0 - c1, 1.0 - c2) = 0.0 THEN 0.0
-         |      ELSE (c1 - c2) / greatest(1.0 - c1, 1.0 - c2) END) * 1000000 + 0.5)
-         |      AS BIGINT) AS s_fp
-         |  FROM p),
-         |g AS (SELECT cell, CAST(count(*) AS BIGINT) AS n_vecs,
-         |    CAST(sum(s_fp) AS BIGINT) AS sum_sil_fp
-         |  FROM q GROUP BY cell)
-         |SELECT cell, n_vecs, sum_sil_fp,
-         |  CASE WHEN sum_sil_fp >= 0 THEN sum_sil_fp // n_vecs
-         |       ELSE -((-sum_sil_fp) // n_vecs) END AS mean_sil_fp
-         |FROM g ORDER BY cell""".stripMargin,
-    // Prototype pruning over the SAME trained kernel: cosine quantized
-    // x1e6 BEFORE the within-cell ranking (identical longs order
-    // identically in both engines); the prune cutoff is the integer
-    // cross-multiplication rnk*1000 <= n_cell*300 — no division.
-    "q_prune_proto" ->
-      s"""WITH ${duckKmeansCtes(2)},
-         |sf AS (SELECT v.vec_id, c.cent_id, list_cosine_similarity(v.e, c.cv) AS c
-         |  FROM v, c2 c),
-         |bst AS (SELECT vec_id, cent_id AS cell,
-         |    CAST(floor(c * 1000000 + 0.5) AS BIGINT) AS cos_fp
-         |  FROM (SELECT vec_id, cent_id, c,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, cent_id) AS rn
-         |    FROM sf) WHERE rn = 1),
-         |rk AS (SELECT vec_id, cell, cos_fp,
-         |    CAST(row_number() OVER (PARTITION BY cell ORDER BY cos_fp DESC, vec_id) AS BIGINT) AS rnk,
-         |    CAST(count(*) OVER (PARTITION BY cell) AS BIGINT) AS n_cell
-         |  FROM bst)
-         |SELECT vec_id, cell, cos_fp, rnk, n_cell,
-         |  rnk * 1000 <= n_cell * 300 AS pruned
-         |FROM rk ORDER BY vec_id""".stripMargin,
-    // Greedy k-center: unrolled selection CTEs, every step
-    // MATERIALIZED (the q_pca_power inlined-CTE lesson); each c$i is
-    // the farthest-point argmax (d2 DESC, vec_id), m$i the running
-    // min-distance table after adding it; exclusion by the explicit
-    // id list, mirroring the Spark isin filter
-    "q_kcenter" -> {
-      val k = 8
-      val dist = (a: String, b: String) =>
-        s"CAST(list_sum(list_transform(range(1, len($a) + 1), " +
-          s"i -> ($a[i] - $b[i]) * ($a[i] - $b[i]))) AS BIGINT)"
-      val steps = (2 to k).map { i =>
-        val notIn = (1 until i).map(j => s"SELECT vec_id FROM c$j")
-          .mkString(" UNION ALL ")
-        s"""c$i AS MATERIALIZED (SELECT vec_id, q, d2 FROM m${i - 1}
-           |  WHERE vec_id NOT IN ($notIn)
-           |  ORDER BY d2 DESC, vec_id LIMIT 1),
-           |m$i AS MATERIALIZED (SELECT m.vec_id, m.q,
-           |    least(m.d2, ${dist("m.q", "c.q")}) AS d2
-           |  FROM m${i - 1} m, c$i c)""".stripMargin
-      }.mkString(",\n")
-      val out = (s"SELECT CAST(1 AS BIGINT) AS step, vec_id, " +
-        s"CAST(0 AS BIGINT) AS radius_d2 FROM c1") +:
-        (2 to k).map(i => s"SELECT CAST($i AS BIGINT), vec_id, d2 FROM c$i")
-      s"""WITH xq AS MATERIALIZED (SELECT vec_id,
-         |    list_transform(embedding::DOUBLE[],
-         |      x -> CAST(floor(x * 1000000 + 0.5) AS BIGINT)) AS q
-         |  FROM embeddings
-         |  WHERE embedding IS NOT NULL AND len(embedding) > 0),
-         |c1 AS MATERIALIZED (SELECT vec_id, q FROM xq ORDER BY vec_id LIMIT 1),
-         |m1 AS MATERIALIZED (SELECT x.vec_id, x.q,
-         |    ${dist("x.q", "c.q")} AS d2 FROM xq x, c1 c),
-         |$steps
-         |SELECT * FROM (${out.mkString("\nUNION ALL\n")}) ORDER BY step""".stripMargin
-    },
-    // Deterministic hash draw shared by the sampling oracles: integer
-    // value of the first N hex chars of md5(doc_id), via per-nibble
-    // strpos arithmetic (DuckDB has no base-16 conv()).
-    "q_sample_weighted" -> {
-      val draw4 = duckHashDraw(4)
-      s"""WITH q AS (
-         |  SELECT doc_id, lang, $draw4 % 1000 AS bucket,
-         |    CAST(floor(100.0 + 900.0 * $duckQualityScore) AS BIGINT) AS keep_rate
-         |  FROM documents)
-         |SELECT doc_id, lang, bucket, keep_rate
-         |FROM q WHERE bucket < keep_rate ORDER BY doc_id""".stripMargin
-    },
-    // sliding-window chunking: DuckDB 1-based inclusive list slicing
-    // w[a:b] == Spark slice(w, a, b-a+1); chunk count mirrors the
-    // Spark floor form token for token; NULL text yields no rows on
-    // both engines (range(NULL) / sequence(NULL))
-    "q_chunk" ->
-      """WITH d AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w,
-        |         len(string_split(text, ' ')) AS n
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, n, w,
-        |    unnest(range(0, CASE WHEN n <= 32 THEN 1
-        |      ELSE CAST(floor((n - 32 + 23) / 24.0) AS BIGINT) + 1 END)) AS chunk_idx
-        |  FROM d)
-        |SELECT doc_id, chunk_idx,
-        |  array_to_string(w[chunk_idx*24 + 1 : chunk_idx*24 + 32], ' ') AS chunk_text,
-        |  least(32, n - chunk_idx*24) AS n_chunk_tokens
-        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
-    // uniform language rebalancing: integer counts, one exact floor
-    // division for the rate, the shared md5 draw — fully deterministic
-    "q_sample_balance" -> {
-      val draw4 = duckHashDraw(4)
-      s"""WITH c AS (SELECT lang, count(*) AS n_lang FROM documents GROUP BY 1),
-         |t AS (SELECT min(n_lang) AS target_n FROM c),
-         |r AS (SELECT lang, CAST(floor(target_n * 1000.0 / n_lang) AS BIGINT) AS keep_rate
-         |      FROM c, t),
-         |d AS (SELECT doc_id, lang, $draw4 % 1000 AS bucket FROM documents)
-         |SELECT doc_id, lang, bucket, keep_rate
-         |FROM d JOIN r USING (lang)
-         |WHERE bucket < keep_rate ORDER BY doc_id""".stripMargin
-    },
-    // exactly-k-per-stratum: smallest md5 draws per language, doc_id
-    // tie-break — the custom heap operator vs the rank-filter oracle
-    "q_sample_stratified" -> {
-      val draw6 = duckHashDraw(6)
-      s"""WITH d AS (SELECT doc_id, lang, $draw6 AS draw FROM documents),
-         |r AS (SELECT doc_id, lang, draw,
-         |        CAST(row_number() OVER (PARTITION BY lang
-         |          ORDER BY draw, doc_id) AS BIGINT) AS rank
-         |      FROM d)
-         |SELECT doc_id, lang, draw, rank FROM r
-         |WHERE rank <= 20 ORDER BY lang, rank""".stripMargin
-    },
-    // per-token log-probs are 1e-9 fixed-point longs BEFORE the
-    // per-doc sum (exact, order-independent — the q_corpus_report
-    // rule); ln runs on exact integer ratios; unscored (null/empty)
-    // docs keep NULL columns through the left join
-    "q_lm_score" ->
-      """WITH tok AS (
-        |  SELECT doc_id, word FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents)
-        |  WHERE length(word) > 0),
-        |c AS (SELECT word, count(*) AS cnt FROM tok GROUP BY 1),
-        |n AS (SELECT count(*) AS n_total FROM tok),
-        |lp AS (
-        |  SELECT tok.doc_id,
-        |    CAST(round(ln(CAST(cnt AS DOUBLE) / n_total) * 1e9) AS BIGINT) AS lp_fp
-        |  FROM tok JOIN c USING (word), n),
-        |per AS (
-        |  SELECT doc_id, count(*) AS n_scored_tokens, sum(lp_fp) AS s
-        |  FROM lp GROUP BY 1)
-        |SELECT d.doc_id, n_scored_tokens,
-        |  round(CAST(s AS DOUBLE) / n_scored_tokens / 1e9, 6) AS mean_logp,
-        |  round(exp(-(CAST(s AS DOUBLE) / n_scored_tokens / 1e9)), 4) AS ppl_proxy
-        |FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    // ANALYZE-style column profile: one aggregate row fanned to one
-    // row per column; min/max surface as strings (uniform row shape,
-    // no doubles in the hash)
-    "q_profile" -> {
-      val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
-      val aggs = cols.map { c =>
-        s"""  CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nn_$c,
-           |  CAST(count(DISTINCT $c) AS BIGINT) AS nd_$c,
-           |  CAST(min($c) AS VARCHAR) AS mn_$c,
-           |  CAST(max($c) AS VARCHAR) AS mx_$c""".stripMargin
-      }.mkString(",\n")
-      val rows = cols.map { c =>
-        s"SELECT '$c' AS col_name, n_rows, nn_$c AS n_nulls, nd_$c AS n_distinct, " +
-          s"mn_$c AS min_str, mx_$c AS max_str FROM a"
-      }.mkString("\n  UNION ALL ")
-      s"""WITH a AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-         |$aggs
-         |FROM documents)
-         |SELECT * FROM (
-         |  $rows)
-         |ORDER BY col_name""".stripMargin
-    },
-    // Confusion matrix over q_lang_id's prediction expression; the
-    // diagonal's share_fp is per-language recall
-    "q_langid_eval" ->
-      """WITH p AS (
-        |  SELECT lang,
-        |    CASE WHEN n_en >= n_fr AND n_en >= n_de AND n_en >= n_es THEN 'en'
-        |         WHEN n_fr >= n_de AND n_fr >= n_es THEN 'fr'
-        |         WHEN n_de >= n_es THEN 'de' ELSE 'es' END AS pred_lang
-        |  FROM (SELECT lang,
-        |    len(regexp_extract_all(text, '\b(the|and|of)\b')) AS n_en,
-        |    len(regexp_extract_all(text, '\b(le|la|les|et)\b')) AS n_fr,
-        |    len(regexp_extract_all(text, '\b(der|die|das|und)\b')) AS n_de,
-        |    len(regexp_extract_all(text, '\b(el|los|las)\b')) AS n_es
-        |    FROM documents)),
-        |c AS (SELECT lang, pred_lang, CAST(count(*) AS BIGINT) AS n FROM p GROUP BY 1, 2),
-        |t AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_lang FROM p GROUP BY 1)
-        |SELECT c.lang, pred_lang, n, n_lang, c.lang = pred_lang AS correct,
-        |  CAST((2 * n * 1000000 + n_lang) // (2 * n_lang) AS BIGINT) AS share_fp
-        |FROM c JOIN t USING (lang)
-        |ORDER BY lang, pred_lang""".stripMargin,
-    // PMI collocations: positional marginals over the bigram corpus,
-    // one ln on an exact integer ratio quantized at 1e-9; top-100
-    // under the (pmi_fp DESC, bigram) total order
-    "q_collocations" ->
-      """WITH w AS (SELECT string_split(text, ' ') AS w FROM documents),
-        |bg AS (
-        |  SELECT unnest(CASE WHEN len(w) >= 2
-        |    THEN [array_to_string(w[i:i+1], ' ') for i in range(1, len(w))]
-        |    ELSE [] END) AS bg
-        |  FROM w),
-        |bgw AS (SELECT bg, string_split(bg, ' ')[1] AS w1, string_split(bg, ' ')[2] AS w2 FROM bg),
-        |c12 AS (SELECT bg, w1, w2, count(*) AS c12 FROM bgw GROUP BY 1, 2, 3),
-        |c1 AS (SELECT w1, count(*) AS c1 FROM bgw GROUP BY 1),
-        |c2 AS (SELECT w2, count(*) AS c2 FROM bgw GROUP BY 1),
-        |n AS (SELECT count(*) AS n FROM bgw)
-        |SELECT bg AS bigram, c12, c1, c2,
-        |  CAST(round(ln(CAST(c12 * n AS DOUBLE) / (c1 * c2)) * 1e9) AS BIGINT) AS pmi_fp
-        |FROM c12 JOIN c1 USING (w1) JOIN c2 USING (w2), n
-        |WHERE c12 >= 5
-        |ORDER BY pmi_fp DESC, bigram LIMIT 100""".stripMargin,
-    // BM25 with Lucene idf ln((N+1)/(df+0.5)) and k1=1.2/b=0.75
-    // cleared to the exact integer identity by multiplying through by
-    // 10*S; tf-part quantized x1e6 round-half-up, idf 1e-9-quantized
-    // ln of (2N+2)/(2df+1); score = exact long sum of the products
-    "q_bm25" ->
-      s"""WITH $duckBm25Ctes,
-        |r AS (SELECT query_id,
-        |        CAST(row_number() OVER (PARTITION BY query_id
-        |          ORDER BY score_fp DESC, doc_id) AS BIGINT) AS rank,
-        |        doc_id, score_fp FROM agg)
-        |SELECT query_id, rank, doc_id, score_fp FROM r
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // RRF fusion: the bm25 pipeline cut at depth 20 unioned with the
-    // x1e10 quality fixed-point top-20; each reciprocal term is the
-    // exact integer floor(1e9/(60+r)) (positive operands - DuckDB's
-    // truncating // is floor), fused score an order-free long sum
-    "q_rrf" ->
-      s"""WITH $duckBm25Ctes,
-         |lex AS (SELECT query_id, doc_id, r, 'lex' AS src FROM (
-         |          SELECT query_id, doc_id,
-         |            CAST(row_number() OVER (PARTITION BY query_id
-         |              ORDER BY score_fp DESC, doc_id) AS BIGINT) AS r
-         |          FROM agg) WHERE r <= 20),
-         |qsc AS (SELECT doc_id,
-         |          CAST(round($duckQualityScore * 1e10) AS BIGINT) AS qf
-         |        FROM documents WHERE text IS NOT NULL),
-         |qtop AS (SELECT doc_id, r FROM (
-         |           SELECT doc_id,
-         |             CAST(row_number() OVER (ORDER BY qf DESC, doc_id) AS BIGINT) AS r
-         |           FROM qsc) WHERE r <= 20),
-         |qual AS (SELECT qs.query_id, qtop.doc_id, qtop.r, 'qual' AS src
-         |         FROM (SELECT DISTINCT query_id FROM lex) qs, qtop),
-         |f AS (SELECT query_id, doc_id,
-         |        CAST(sum(1000000000 // (60 + r)) AS BIGINT) AS rrf_fp,
-         |        min(CASE WHEN src = 'lex' THEN r END) AS r_lex,
-         |        min(CASE WHEN src = 'qual' THEN r END) AS r_qual
-         |      FROM (SELECT * FROM lex UNION ALL SELECT * FROM qual)
-         |      GROUP BY 1, 2),
-         |rk AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-         |         ORDER BY rrf_fp DESC, doc_id) AS BIGINT) AS fused_rank
-         |       FROM f)
-         |SELECT query_id, fused_rank, doc_id, rrf_fp, r_lex, r_qual
-         |FROM rk WHERE fused_rank <= 5
-         |ORDER BY query_id, fused_rank""".stripMargin,
-    // RBO: the same bm25-depth-20 and quality-top-20 lists as q_rrf;
-    // each overlapping doc contributes the SHARED x1e12 literal
-    // suffix weight at max(r_lex, r_qual) - rboSuffixWeights is the
-    // one source of truth for the geometric weight table
-    "q_rbo" -> {
-      val v = graft.queries.TextOps.rboSuffixWeights(20, 0.9)
-        .mkString("[", ", ", "]")
-      s"""WITH $duckBm25Ctes,
-         |lex AS (SELECT query_id, doc_id, r FROM (
-         |          SELECT query_id, doc_id,
-         |            CAST(row_number() OVER (PARTITION BY query_id
-         |              ORDER BY score_fp DESC, doc_id) AS BIGINT) AS r
-         |          FROM agg) WHERE r <= 20),
-         |qsc AS (SELECT doc_id,
-         |          CAST(round($duckQualityScore * 1e10) AS BIGINT) AS qf
-         |        FROM documents WHERE text IS NOT NULL),
-         |qtop AS (SELECT doc_id, r FROM (
-         |           SELECT doc_id,
-         |             CAST(row_number() OVER (ORDER BY qf DESC, doc_id) AS BIGINT) AS r
-         |           FROM qsc) WHERE r <= 20),
-         |ov AS (SELECT lex.query_id, greatest(lex.r, qtop.r) AS m
-         |       FROM lex JOIN qtop USING (doc_id)),
-         |a AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_overlap,
-         |        CAST(sum(CASE WHEN m <= 5 THEN 1 ELSE 0 END) AS BIGINT) AS o_5,
-         |        CAST(sum(CASE WHEN m <= 10 THEN 1 ELSE 0 END) AS BIGINT) AS o_10,
-         |        CAST(sum(($v)[CAST(m AS INT)]) AS BIGINT) AS rbo_fp
-         |      FROM ov GROUP BY 1)
-         |SELECT qs.query_id,
-         |  coalesce(n_overlap, CAST(0 AS BIGINT)) AS n_overlap,
-         |  coalesce(o_5, CAST(0 AS BIGINT)) AS o_5,
-         |  coalesce(o_10, CAST(0 AS BIGINT)) AS o_10,
-         |  coalesce(rbo_fp, CAST(0 AS BIGINT)) AS rbo_fp
-         |FROM (SELECT DISTINCT query_id FROM lex) qs LEFT JOIN a USING (query_id)
-         |ORDER BY query_id""".stripMargin
-    },
-    // nDCG: bm25 depth-20 list left-joined to the quality top-20 for
-    // graded gains; discounts are the SHARED x1e9 ndcgDiscounts
-    // literals; ideal order re-ranks the same gains per query
-    "q_ndcg" -> {
-      val disc = graft.queries.TextOps.ndcgDiscounts(20)
-        .mkString("[", ", ", "]")
-      s"""WITH $duckBm25Ctes,
-         |lex AS (SELECT query_id, doc_id, r FROM (
-         |          SELECT query_id, doc_id,
-         |            CAST(row_number() OVER (PARTITION BY query_id
-         |              ORDER BY score_fp DESC, doc_id) AS BIGINT) AS r
-         |          FROM agg) WHERE r <= 20),
-         |qsc AS (SELECT doc_id,
-         |          CAST(round($duckQualityScore * 1e10) AS BIGINT) AS qf
-         |        FROM documents WHERE text IS NOT NULL),
-         |qtop AS (SELECT doc_id, r FROM (
-         |           SELECT doc_id,
-         |             CAST(row_number() OVER (ORDER BY qf DESC, doc_id) AS BIGINT) AS r
-         |           FROM qsc) WHERE r <= 20),
-         |g AS (SELECT lex.query_id, lex.doc_id, lex.r AS rank,
-         |        coalesce(21 - qtop.r, CAST(0 AS BIGINT)) AS gain
-         |      FROM lex LEFT JOIN qtop USING (doc_id)),
-         |g2 AS (SELECT query_id, gain, rank,
-         |         CAST(row_number() OVER (PARTITION BY query_id
-         |           ORDER BY gain DESC, doc_id) AS BIGINT) AS ideal_pos
-         |       FROM g),
-         |a AS (SELECT query_id,
-         |        CAST(sum(gain * ($disc)[CAST(rank AS INT)]) AS BIGINT) AS dcg_fp,
-         |        CAST(sum(gain * ($disc)[CAST(ideal_pos AS INT)]) AS BIGINT) AS idcg_fp
-         |      FROM g2 GROUP BY 1)
-         |SELECT query_id, dcg_fp, idcg_fp,
-         |  coalesce((2 * dcg_fp * 1000000 + idcg_fp) // nullif(2 * idcg_fp, 0),
-         |           CAST(0 AS BIGINT)) AS ndcg_fp
-         |FROM a ORDER BY query_id""".stripMargin
-    },
-    // PBM/IPS click-model eval: bm25 depth-20 log, quality-top-20
-    // clicks, literal 1/r propensities -> each IPS weight is the
-    // exact integer r; both reads x1e6 round-half-up over depth=20
-    "q_pbm" ->
-      s"""WITH $duckBm25Ctes,
-         |lex AS (SELECT query_id, doc_id, r FROM (
-         |          SELECT query_id, doc_id,
-         |            CAST(row_number() OVER (PARTITION BY query_id
-         |              ORDER BY score_fp DESC, doc_id) AS BIGINT) AS r
-         |          FROM agg) WHERE r <= 20),
-         |qsc AS (SELECT doc_id,
-         |          CAST(round($duckQualityScore * 1e10) AS BIGINT) AS qf
-         |        FROM documents WHERE text IS NOT NULL),
-         |qtop AS (SELECT doc_id, r FROM (
-         |           SELECT doc_id,
-         |             CAST(row_number() OVER (ORDER BY qf DESC, doc_id) AS BIGINT) AS r
-         |           FROM qsc) WHERE r <= 20),
-         |cl AS (SELECT lex.query_id, lex.r AS rank,
-         |         CASE WHEN qtop.doc_id IS NULL THEN 0 ELSE 1 END AS click
-         |       FROM lex LEFT JOIN qtop USING (doc_id))
-         |SELECT query_id, CAST(sum(click) AS BIGINT) AS n_clicks,
-         |  (2 * CAST(sum(click) AS BIGINT) * 1000000 + 20) // (2 * 20) AS ctr_fp,
-         |  (2 * CAST(sum(click * rank) AS BIGINT) * 1000000 + 20) // (2 * 20) AS ips_fp
-         |FROM cl GROUP BY 1 ORDER BY query_id""".stripMargin,
-    // MAP@20: binary quality-top relevance over the bm25 depth-20
-    // list; Precision@r terms share denominator L = lcm(1..20) =
-    // 232792560 so the AP numerator is an exact long sum and ap_fp is
-    // one x1e6 round-half-up division by L*20 = 4655851200
-    "q_map" ->
-      s"""WITH $duckBm25Ctes,
-         |lex AS (SELECT query_id, doc_id, r FROM (
-         |          SELECT query_id, doc_id,
-         |            CAST(row_number() OVER (PARTITION BY query_id
-         |              ORDER BY score_fp DESC, doc_id) AS BIGINT) AS r
-         |          FROM agg) WHERE r <= 20),
-         |qsc AS (SELECT doc_id,
-         |          CAST(round($duckQualityScore * 1e10) AS BIGINT) AS qf
-         |        FROM documents WHERE text IS NOT NULL),
-         |qtop AS (SELECT doc_id, r FROM (
-         |           SELECT doc_id,
-         |             CAST(row_number() OVER (ORDER BY qf DESC, doc_id) AS BIGINT) AS r
-         |           FROM qsc) WHERE r <= 20),
-         |cl AS (SELECT lex.query_id, lex.r AS rank,
-         |         CASE WHEN qtop.doc_id IS NULL THEN 0 ELSE 1 END AS click
-         |       FROM lex LEFT JOIN qtop USING (doc_id)),
-         |h AS (SELECT query_id, rank, click,
-         |        sum(click) OVER (PARTITION BY query_id ORDER BY rank
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS hits
-         |      FROM cl)
-         |SELECT query_id, CAST(sum(click) AS BIGINT) AS n_rel,
-         |  (2 * CAST(sum(click * hits * (232792560 // rank)) AS BIGINT) * 1000000
-         |    + 4655851200) // (2 * 4655851200) AS ap_fp
-         |FROM h GROUP BY 1 ORDER BY query_id""".stripMargin,
-    // Hill tail index: top-21 counts by (n DESC, t), x1e9-quantized
-    // per-count ln, exact ratio sum, x1e6 alpha with a NULL guard for
-    // k past the vocabulary
-    "q_hill" ->
-      """WITH tok AS (SELECT unnest(string_split(text, ' ')) AS t
-        |             FROM documents WHERE text IS NOT NULL),
-        |tc AS (SELECT t, CAST(count(*) AS BIGINT) AS n
-        |       FROM tok WHERE t <> '' GROUP BY 1),
-        |top AS (SELECT n,
-        |          CAST(round(ln(CAST(n AS DOUBLE)) * 1e9) AS BIGINT) AS ln9,
-        |          CAST(row_number() OVER (ORDER BY n DESC, t) AS BIGINT) AS r
-        |        FROM tc ORDER BY n DESC, t LIMIT 21),
-        |ks AS (SELECT CAST(unnest([5, 10, 20]) AS BIGINT) AS k),
-        |a AS (SELECT k,
-        |        max(CASE WHEN r = k + 1 THEN n END) AS thr_count,
-        |        CAST(sum(CASE WHEN r <= k THEN ln9 END)
-        |          - k * max(CASE WHEN r = k + 1 THEN ln9 END) AS BIGINT)
-        |          AS s_fp9
-        |      FROM ks, top GROUP BY 1)
-        |SELECT k, thr_count, s_fp9,
-        |  CASE WHEN s_fp9 > 0 THEN
-        |    (2 * k * 1000000000000000 + s_fp9) // (2 * s_fp9) END AS alpha_fp
-        |FROM a ORDER BY k""".stripMargin,
-    // ECE: the SAME eceConfFp sigmoid literal (one source of truth);
-    // bucket ids, sums, fixed points, and the n-weighted ECE all
-    // integer-exact on the x1e6-quantized confidences
-    "q_ece" ->
-      s"""WITH c AS (SELECT ${graft.queries.TextOps.eceConfFp} AS conf_fp,
-         |             (lang = 'en') AS pos
-         |           FROM documents
-         |           WHERE n_chars IS NOT NULL AND lang IS NOT NULL),
-         |b AS (SELECT least(conf_fp // 100000, 9) AS bucket,
-         |        CAST(count(*) AS BIGINT) AS n,
-         |        CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-         |        CAST(sum(conf_fp) AS BIGINT) AS sum_conf_fp
-         |      FROM c GROUP BY 1),
-         |g AS (SELECT bucket, n, n_pos,
-         |        (2 * n_pos * 1000000 + n) // (2 * n) AS acc_fp,
-         |        (2 * sum_conf_fp + n) // (2 * n) AS avg_conf_fp
-         |      FROM b),
-         |g2 AS (SELECT *, abs(acc_fp - avg_conf_fp) AS gap_fp FROM g),
-         |t AS (SELECT CAST(sum(n) AS BIGINT) AS n_tot,
-         |        CAST(sum(n * gap_fp) AS BIGINT) AS g_tot FROM g2)
-         |SELECT bucket, n, n_pos, acc_fp, avg_conf_fp, gap_fp,
-         |  (2 * g_tot + n_tot) // (2 * n_tot) AS ece_fp
-         |FROM g2, t ORDER BY bucket""".stripMargin,
-    // Lorenz/Gini: ascending-token-count position deciles (the q_rfm
-    // quintile formula at 10), cumulative mass over the 10-row table,
-    // Gini cleared to (2*Sum(i*t) - (n+1)*S) / (n*S), all x1e6
-    "q_lorenz" ->
-      """WITH per AS (SELECT doc_id,
-        |         CAST(len(list_filter(string_split(text, ' '),
-        |           t -> len(t) > 0)) AS BIGINT) AS t
-        |       FROM documents WHERE text IS NOT NULL),
-        |r AS (SELECT t, CAST(row_number() OVER (ORDER BY t, doc_id) AS BIGINT) AS rn
-        |      FROM per),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |          CAST(sum(t) AS BIGINT) AS s_tok,
-        |          CAST(sum(rn * t) AS BIGINT) AS s_rt FROM r),
-        |dec AS (SELECT (rn - 1) * 10 // n + 1 AS decile,
-        |          CAST(count(*) AS BIGINT) AS n_docs,
-        |          CAST(sum(t) AS BIGINT) AS tokens,
-        |          any_value(n) AS n, any_value(s_tok) AS s_tok,
-        |          any_value(s_rt) AS s_rt
-        |        FROM r, tot GROUP BY 1)
-        |SELECT decile, n_docs, tokens,
-        |  CAST(sum(tokens) OVER (ORDER BY decile) AS BIGINT) AS cum_tokens,
-        |  (2 * CAST(sum(tokens) OVER (ORDER BY decile) AS BIGINT) * 1000000
-        |     + s_tok) // (2 * s_tok) AS cum_share_fp,
-        |  (2 * (2 * s_rt - (n + 1) * s_tok) * 1000000 + n * s_tok)
-        |    // (2 * n * s_tok) AS gini_fp
-        |FROM dec ORDER BY decile""".stripMargin,
-    // exact two-sample KS: D found by integer cross-multiplication
-    // |cum1*n2 - cum2*n1| over the value-count table, one division
-    "q_ks" ->
-      """WITH vc AS (SELECT n_chars AS v,
-        |         CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-        |         CAST(sum(CASE WHEN doc_id % 2 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS c2
-        |       FROM documents WHERE n_chars IS NOT NULL GROUP BY 1),
-        |cum AS (SELECT v,
-        |          CAST(sum(c1) OVER (ORDER BY v) AS BIGINT) AS cum1,
-        |          CAST(sum(c2) OVER (ORDER BY v) AS BIGINT) AS cum2
-        |        FROM vc),
-        |tot AS (SELECT CAST(sum(c1) AS BIGINT) AS n1,
-        |          CAST(sum(c2) AS BIGINT) AS n2 FROM vc),
-        |agg AS (SELECT any_value(n1) AS n_ref, any_value(n2) AS n_cur,
-        |          max(abs(cum1 * n2 - cum2 * n1)) AS d_num
-        |        FROM cum, tot)
-        |SELECT n_ref, n_cur, CAST(d_num AS BIGINT) AS d_num,
-        |  (2 * d_num * 1000000 + n_ref * n_cur) // (2 * n_ref * n_cur) AS ks_fp
-        |FROM agg""".stripMargin,
-    // Mann-Whitney rank-sum, en vs rest over n_chars: doubled-U and
-    // tie term as exact integer sums off the value-count table; z is
-    // the one mirrored round(double,6) over those longs
-    "q_mannwhitney" ->
-      """WITH vc AS (SELECT n_chars AS v,
-        |         CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-        |         CAST(sum(CASE WHEN lang <> 'en' THEN 1 ELSE 0 END) AS BIGINT) AS c2
-        |       FROM documents
-        |       WHERE n_chars IS NOT NULL AND lang IS NOT NULL GROUP BY 1),
-        |cum AS (SELECT v, c1, c2,
-        |          CAST(sum(c2) OVER (ORDER BY v) AS BIGINT) - c2 AS below2
-        |        FROM vc),
-        |a AS (SELECT CAST(sum(c1) AS BIGINT) AS n_en,
-        |        CAST(sum(c2) AS BIGINT) AS n_other,
-        |        CAST(sum(c1 * (2*below2 + c2)) AS BIGINT) AS u2_en,
-        |        CAST(sum((c1+c2)*(c1+c2)*(c1+c2) - (c1+c2)) AS BIGINT) AS tie_t
-        |      FROM cum)
-        |SELECT n_en, n_other, u2_en,
-        |  2*n_en*n_other - u2_en AS u2_other, tie_t,
-        |  CASE WHEN n_en = 0 OR n_other = 0 OR
-        |    (n_en+n_other+1)*(n_en+n_other)*(n_en+n_other-1) - tie_t = 0
-        |  THEN NULL ELSE
-        |    round(CAST(u2_en - n_en*n_other AS DOUBLE) *
-        |      sqrt(3.0 * (n_en+n_other) * (n_en+n_other-1) /
-        |        (CAST(n_en AS DOUBLE) * n_other *
-        |         ((n_en+n_other+1.0) * (n_en+n_other) * (n_en+n_other-1)
-        |          - tie_t))), 6) END AS z
-        |FROM a""".stripMargin,
-    // distinct-n diversity: the three gram branches mirror shinglesN's
-    // inclusive-slice windows; exact counts, x1e6 fixed-point ratio
-    "q_distinct_n" ->
-      """WITH wd AS (SELECT source, string_split(text, ' ') AS w
-        |            FROM documents WHERE text IS NOT NULL),
-        |g AS (
-        |  SELECT source, CAST(1 AS BIGINT) AS n, unnest(w) AS g FROM wd
-        |  UNION ALL
-        |  SELECT source, CAST(2 AS BIGINT), unnest(
-        |      CASE WHEN len(w) >= 2
-        |        THEN [array_to_string(w[i:i+1], ' ') FOR i IN range(1, len(w))]
-        |        ELSE [] END) FROM wd
-        |  UNION ALL
-        |  SELECT source, CAST(3 AS BIGINT), unnest(
-        |      CASE WHEN len(w) >= 3
-        |        THEN [array_to_string(w[i:i+2], ' ') FOR i IN range(1, len(w) - 1)]
-        |        ELSE [] END) FROM wd)
-        |SELECT source, n, CAST(count(*) AS BIGINT) AS total_ngrams,
-        |  CAST(count(DISTINCT g) AS BIGINT) AS distinct_ngrams,
-        |  (2 * count(DISTINCT g) * 1000000 + count(*)) // (2 * count(*))
-        |    AS distinct_fp
-        |FROM g GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // Welch t: the moment CTE feeds the SAME welchT/welchDf double
-    // expressions the Spark side parses (shared Scala vals — one
-    // source of truth for the IEEE op sequence)
-    "q_welch" ->
-      s"""WITH m AS (SELECT
-         |    CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_1,
-         |    CAST(sum(CASE WHEN lang <> 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_2,
-         |    CAST(sum(CASE WHEN lang = 'en' THEN n_chars ELSE 0 END) AS BIGINT) AS sum_1,
-         |    CAST(sum(CASE WHEN lang <> 'en' THEN n_chars ELSE 0 END) AS BIGINT) AS sum_2,
-         |    CAST(sum(CASE WHEN lang = 'en' THEN n_chars * n_chars ELSE 0 END) AS BIGINT) AS sumsq_1,
-         |    CAST(sum(CASE WHEN lang <> 'en' THEN n_chars * n_chars ELSE 0 END) AS BIGINT) AS sumsq_2
-         |  FROM documents WHERE n_chars IS NOT NULL AND lang IS NOT NULL)
-         |SELECT n_1, n_2, sum_1, sum_2, sumsq_1, sumsq_2,
-         |  ${graft.queries.TextOps.welchT} AS t,
-         |  ${graft.queries.TextOps.welchDf} AS df
-         |FROM m""".stripMargin,
-    // Kruskal-Wallis H across all language groups: doubled-midrank
-    // sums and the tie term as exact longs off the value-count spine;
-    // the one float sum (sum_j R_j^2/n_j) is a grp-ordered left fold
-    // (list ORDER BY grp + list_sum = Spark's aggregate over the
-    // sorted collect — the order-fixed float-fold rule); H is the
-    // shared kruskalH expression (one source of truth)
-    "q_kruskal" ->
-      s"""WITH d AS (SELECT lang AS grp, n_chars AS v FROM documents
-         |           WHERE n_chars IS NOT NULL AND lang IS NOT NULL),
-         |vc AS (SELECT v, grp, CAST(count(*) AS BIGINT) AS c
-         |       FROM d GROUP BY 1, 2),
-         |tv AS (SELECT v, CAST(sum(c) AS BIGINT) AS t FROM vc GROUP BY 1),
-         |cum AS (SELECT v, t,
-         |          CAST(sum(t) OVER (ORDER BY v) AS BIGINT) - t AS below
-         |        FROM tv),
-         |g AS (SELECT grp, CAST(sum(c) AS BIGINT) AS n_j,
-         |        CAST(sum(c * (2*below + t + 1)) AS BIGINT) AS r2_j
-         |      FROM vc JOIN cum USING (v) GROUP BY 1),
-         |tie AS (SELECT CAST(sum(t*t*t - t) AS BIGINT) AS tie_t FROM tv),
-         |tot AS (SELECT CAST(count(*) AS BIGINT) AS k,
-         |          CAST(sum(n_j) AS BIGINT) AS n,
-         |          list_sum(list_transform(
-         |            list(struct_pack(n_j := n_j, r2_j := r2_j) ORDER BY grp),
-         |            x -> CAST(x.r2_j AS DOUBLE) * x.r2_j / (4.0 * x.n_j)))
-         |            AS s_rank
-         |        FROM g)
-         |SELECT grp, n_j, r2_j, k, n, tie_t,
-         |  ${graft.queries.TextOps.kruskalH} AS h
-         |FROM g, tot, tie ORDER BY grp""".stripMargin,
-    // Novelty: the q_minhash shingle spelling (with the NULL-text
-    // filter), distinct grams per doc, first-occurrence owners from
-    // the vocab-sized min-doc table, x1e6 round-half-up share
-    "q_novelty" ->
-      """WITH sh AS (
-        |  SELECT doc_id, CASE WHEN len(w) >= 3
-        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
-        |    ELSE [text] END AS shingles
-        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents
-        |        WHERE text IS NOT NULL)),
-        |g AS (SELECT DISTINCT doc_id, unnest(shingles) AS gram FROM sh),
-        |pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams FROM g GROUP BY 1),
-        |own AS (SELECT min(doc_id) AS doc_id FROM g GROUP BY gram),
-        |nn AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_novel FROM own GROUP BY 1)
-        |SELECT d.doc_id, pd.n_grams,
-        |  CASE WHEN pd.n_grams IS NOT NULL
-        |    THEN CAST(coalesce(nn.n_novel, 0) AS BIGINT) END AS n_novel,
-        |  CASE WHEN pd.n_grams IS NOT NULL
-        |    THEN (2 * coalesce(nn.n_novel, 0) * 1000000 + pd.n_grams)
-        |         // (2 * pd.n_grams) END AS novelty_fp
-        |FROM documents d
-        |LEFT JOIN pd ON d.doc_id = pd.doc_id
-        |LEFT JOIN nn ON d.doc_id = nn.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    // Heaps fit: exact first-sighting counts, one cumulative window
-    // (the Spark side's two-level prefix is algebraically identical),
-    // x1e3 quantized-ln points, zipf-style moment fit
-    "q_heaps" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |             FROM documents),
-        |t2 AS (SELECT doc_id, term FROM tok WHERE len(term) > 0),
-        |pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_toks
-        |       FROM t2 GROUP BY 1),
-        |fs AS (SELECT min(doc_id) AS doc_id FROM t2 GROUP BY term),
-        |fn AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_new
-        |       FROM fs GROUP BY 1),
-        |dr AS (SELECT pd.doc_id, pd.n_toks,
-        |         CAST(coalesce(fn.n_new, 0) AS BIGINT) AS n_new
-        |       FROM pd LEFT JOIN fn ON pd.doc_id = fn.doc_id),
-        |pts AS (SELECT CAST(sum(n_toks) OVER w AS BIGINT) AS cum_t,
-        |               CAST(sum(n_new) OVER w AS BIGINT) AS cum_v
-        |        FROM dr WINDOW w AS (ORDER BY doc_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |p AS (SELECT CAST(round(ln(CAST(cum_t AS DOUBLE)) * 1e3) AS BIGINT) AS x,
-        |             CAST(round(ln(CAST(cum_v AS DOUBLE)) * 1e3) AS BIGINT) AS y
-        |      FROM pts WHERE cum_t > 0 AND cum_v > 0),
-        |a AS (SELECT CAST(count(*) AS BIGINT) AS n_points,
-        |        CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |        CAST(sum(x*x) AS BIGINT) AS sxx,
-        |        CAST(sum(x*y) AS BIGINT) AS sxy,
-        |        CAST(sum(y*y) AS BIGINT) AS syy FROM p)
-        |SELECT n_points, sx, sy, sxx, sxy,
-        |  CASE WHEN n_points*sxx - sx*sx = 0 THEN NULL ELSE
-        |    round(CAST(n_points*sxy - sx*sy AS DOUBLE) /
-        |          CAST(n_points*sxx - sx*sx AS DOUBLE), 6) END AS beta,
-        |  CASE WHEN n_points*sxx - sx*sx = 0 THEN NULL ELSE
-        |    round((CAST(sy AS DOUBLE) -
-        |      CAST(n_points*sxy - sx*sy AS DOUBLE) /
-        |      CAST(n_points*sxx - sx*sx AS DOUBLE) * sx)
-        |      / n_points / 1000.0, 6) END AS ln_k,
-        |  CASE WHEN n_points*sxx - sx*sx = 0 OR n_points*syy - sy*sy = 0
-        |  THEN NULL ELSE
-        |    round(CAST(n_points*sxy - sx*sy AS DOUBLE) *
-        |          CAST(n_points*sxy - sx*sy AS DOUBLE) /
-        |          (CAST(n_points*sxx - sx*sx AS DOUBLE) *
-        |           CAST(n_points*syy - sy*sy AS DOUBLE)), 6) END AS r2
-        |FROM a""".stripMargin,
-    // Flesch-Kincaid per doc: regexp-count proxies, fraction cleared
-    // to (195W^2 + 5900SV - 7795SW)/(500SW), sign-separated x1e6
-    "q_readability" ->
-      """WITH c AS (SELECT doc_id,
-        |    CAST(len(list_filter(regexp_split_to_array(text, '\s+'),
-        |         t -> len(t) > 0)) AS BIGINT) AS w,
-        |    greatest(CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT),
-        |         1) AS sent,
-        |    CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT)
-        |         AS v
-        |  FROM documents WHERE text IS NOT NULL),
-        |n AS (SELECT doc_id, w, sent, v,
-        |        195 * w * w + 5900 * sent * v - 7795 * sent * w AS num,
-        |        500 * sent * w AS den
-        |      FROM c WHERE w > 0)
-        |SELECT doc_id, w AS n_words, sent AS n_sentences, v AS n_syllables,
-        |  (CASE WHEN num < 0 THEN -1 ELSE 1 END) *
-        |    ((2 * abs(num) * 1000000 + den) // (2 * den)) AS fk_fp
-        |FROM n ORDER BY doc_id""".stripMargin,
-    // Zipf fit: quantized-ln points over the top-100 vocab, exact
-    // integer moment sums, slope/r2 as one mirrored double expr each
-    "q_zipf" ->
-      """WITH t AS (SELECT unnest(string_split(text, ' ')) AS term FROM documents),
-        |c AS (SELECT term, CAST(count(*) AS BIGINT) AS cnt
-        |      FROM t WHERE len(term) > 0 GROUP BY 1),
-        |top AS (SELECT term, cnt FROM c ORDER BY cnt DESC, term LIMIT 100),
-        |r AS (SELECT cnt, CAST(row_number() OVER
-        |        (ORDER BY cnt DESC, term) AS BIGINT) AS rank FROM top),
-        |p AS (SELECT CAST(round(ln(CAST(rank AS DOUBLE)) * 1e6) AS BIGINT) AS x,
-        |             CAST(round(ln(CAST(cnt AS DOUBLE)) * 1e6) AS BIGINT) AS y
-        |      FROM r),
-        |a AS (SELECT CAST(count(*) AS BIGINT) AS n_terms,
-        |        CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |        CAST(sum(x*x) AS BIGINT) AS sxx,
-        |        CAST(sum(x*y) AS BIGINT) AS sxy,
-        |        CAST(sum(y*y) AS BIGINT) AS syy FROM p)
-        |SELECT n_terms, sx, sy, sxx, sxy,
-        |  round(CAST(n_terms*sxy - sx*sy AS DOUBLE) /
-        |        CAST(n_terms*sxx - sx*sx AS DOUBLE), 6) AS slope,
-        |  round(CAST(n_terms*sxy - sx*sy AS DOUBLE) *
-        |        CAST(n_terms*sxy - sx*sy AS DOUBLE) /
-        |        (CAST(n_terms*sxx - sx*sx AS DOUBLE) *
-        |         CAST(n_terms*syy - sy*sy AS DOUBLE)), 6) AS r2
-        |FROM a""".stripMargin,
-    // chi-square independence: dense marginal-cross spine, fraction
-    // cleared to (O*N - R*C)^2 / (N*R*C), x1e6 round-half-up
-    "q_chi2" ->
-      """WITH c AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS o
-        |      FROM documents GROUP BY 1, 2),
-        |rt AS (SELECT lang, CAST(sum(o) AS BIGINT) AS r FROM c GROUP BY 1),
-        |ct AS (SELECT source, CAST(sum(o) AS BIGINT) AS cc FROM c GROUP BY 1),
-        |n AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM c),
-        |sp AS (SELECT rt.lang, ct.source, rt.r, ct.cc FROM rt CROSS JOIN ct)
-        |SELECT sp.lang, sp.source,
-        |  CAST(coalesce(c.o, 0) AS BIGINT) AS n_docs,
-        |  sp.r AS n_lang, sp.cc AS n_source,
-        |  (2 * (coalesce(c.o, 0)*n.n - sp.r*sp.cc)
-        |     * (coalesce(c.o, 0)*n.n - sp.r*sp.cc) * 1000000
-        |   + n.n*sp.r*sp.cc) // (2 * n.n*sp.r*sp.cc) AS chi2_fp
-        |FROM sp LEFT JOIN c ON sp.lang = c.lang AND sp.source = c.source, n
-        |ORDER BY sp.lang, sp.source""".stripMargin,
-    // PSI drift: even/odd doc_id split over shared equi-width length
-    // buckets; +1 Laplace smoothing; psi term via |A|*|ln9| so the
-    // trunc-vs-floor negative-division divergence cannot arise
-    "q_drift_psi" ->
-      """WITH docs AS (SELECT doc_id, n_chars, doc_id % 2 = 0 AS is_ref FROM documents),
-        |rg AS (SELECT min(n_chars) AS min_c, max(n_chars) AS max_c FROM docs),
-        |tt AS (SELECT CAST(sum(CASE WHEN is_ref THEN 1 ELSE 0 END) AS BIGINT) AS n_ref_tot,
-        |         CAST(sum(CASE WHEN NOT is_ref THEN 1 ELSE 0 END) AS BIGINT) AS n_cur_tot
-        |       FROM docs),
-        |c AS (SELECT (n_chars - min_c) * 16 // (max_c - min_c + 1) AS bucket,
-        |        CAST(sum(CASE WHEN is_ref THEN 1 ELSE 0 END) AS BIGINT) AS n_ref,
-        |        CAST(sum(CASE WHEN NOT is_ref THEN 1 ELSE 0 END) AS BIGINT) AS n_cur
-        |      FROM docs, rg GROUP BY 1),
-        |p AS (SELECT bucket, n_ref, n_cur,
-        |        (n_cur + 1) * (n_ref_tot + 16) AS pc_num,
-        |        (n_ref + 1) * (n_cur_tot + 16) AS pr_num,
-        |        (n_cur_tot + 16) * (n_ref_tot + 16) AS den
-        |      FROM c, tt),
-        |l AS (SELECT bucket, n_ref, n_cur, pc_num, pr_num, den,
-        |        CAST(round(ln(CAST(pc_num AS DOUBLE) /
-        |          CAST(pr_num AS DOUBLE)) * 1e9) AS BIGINT) AS ln9
-        |      FROM p)
-        |SELECT bucket, n_ref, n_cur, ln9 AS lr_fp,
-        |  (2 * abs(pc_num - pr_num) * abs(ln9) + den) // (2 * den) AS psi_fp
-        |FROM l ORDER BY bucket""".stripMargin,
-    // Ablation: per-doc pass flags (ratio rules by integer
-    // cross-multiplication, composite on the rounded score, nulls
-    // fail everything) -> one counter row -> 4 literal rows
-    "q_quality_ablation" -> {
-      val q = duckQualityScore
-      s"""WITH f AS (
-         |  SELECT
-         |    coalesce(len(w) BETWEEN 20 AND 1000, false) AS p1,
-         |    coalesce(len(list_filter(w, x -> x IN ('the','a','of','and'))) * 100 >= len(w) * 3, false) AS p2,
-         |    coalesce((len(w) - len(list_distinct(w))) * 10 <= len(w) * 6, false) AS p3,
-         |    coalesce(($q) >= 0.45, false) AS p4
-         |  FROM (SELECT text, string_split(text,' ') AS w FROM documents)),
-         |a AS (SELECT
-         |  CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(CASE WHEN NOT p1 THEN 1 ELSE 0 END) AS BIGINT) AS f1,
-         |  CAST(sum(CASE WHEN NOT p2 THEN 1 ELSE 0 END) AS BIGINT) AS f2,
-         |  CAST(sum(CASE WHEN NOT p3 THEN 1 ELSE 0 END) AS BIGINT) AS f3,
-         |  CAST(sum(CASE WHEN NOT p4 THEN 1 ELSE 0 END) AS BIGINT) AS f4,
-         |  CAST(sum(CASE WHEN NOT p1 AND p2 AND p3 AND p4 THEN 1 ELSE 0 END) AS BIGINT) AS fo1,
-         |  CAST(sum(CASE WHEN p1 AND NOT p2 AND p3 AND p4 THEN 1 ELSE 0 END) AS BIGINT) AS fo2,
-         |  CAST(sum(CASE WHEN p1 AND p2 AND NOT p3 AND p4 THEN 1 ELSE 0 END) AS BIGINT) AS fo3,
-         |  CAST(sum(CASE WHEN p1 AND p2 AND p3 AND NOT p4 THEN 1 ELSE 0 END) AS BIGINT) AS fo4,
-         |  CAST(sum(CASE WHEN p2 AND p3 AND p4 THEN 1 ELSE 0 END) AS BIGINT) AS sw1,
-         |  CAST(sum(CASE WHEN p1 AND p3 AND p4 THEN 1 ELSE 0 END) AS BIGINT) AS sw2,
-         |  CAST(sum(CASE WHEN p1 AND p2 AND p4 THEN 1 ELSE 0 END) AS BIGINT) AS sw3,
-         |  CAST(sum(CASE WHEN p1 AND p2 AND p3 THEN 1 ELSE 0 END) AS BIGINT) AS sw4,
-         |  CAST(sum(CASE WHEN p1 AND p2 AND p3 AND p4 THEN 1 ELSE 0 END) AS BIGINT) AS survivors_all
-         |  FROM f)
-         |SELECT rule, n_fail, n_fail_alone, survivors_without_rule, n_docs, survivors_all
-         |FROM (
-         |  SELECT 'min_length' AS rule, f1 AS n_fail, fo1 AS n_fail_alone, sw1 AS survivors_without_rule, n_docs, survivors_all FROM a
-         |  UNION ALL SELECT 'stopwords', f2, fo2, sw2, n_docs, survivors_all FROM a
-         |  UNION ALL SELECT 'dup_words', f3, fo3, sw3, n_docs, survivors_all FROM a
-         |  UNION ALL SELECT 'quality', f4, fo4, sw4, n_docs, survivors_all FROM a)
-         |ORDER BY rule""".stripMargin
-    },
-    // Bigram LM, add-one smoothing: p(w2|w1) = (c12+1)/(c1+V) with c1
-    // counting w1 as a bigram PREFIX; log-probs fixed-pointed to 1e-9
-    // longs BEFORE the per-doc sum (exact, order-free), doubles only
-    // at the rounded display boundary — the q_lm_score contract.
-    "q_lm_bigram" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |bg AS (
-        |  SELECT doc_id, unnest(CASE WHEN len(w) >= 2
-        |    THEN [array_to_string(w[i:i+1], ' ') for i in range(1, len(w))]
-        |    ELSE [] END) AS bg
-        |  FROM w),
-        |bgw AS (SELECT doc_id, bg, string_split(bg, ' ')[1] AS w1 FROM bg),
-        |c12 AS (SELECT bg, count(*) AS c12 FROM bgw GROUP BY 1),
-        |c1 AS (SELECT w1, count(*) AS c1 FROM bgw GROUP BY 1),
-        |v AS (SELECT count(DISTINCT tok) AS v FROM
-        |  (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)),
-        |lp AS (
-        |  SELECT bgw.doc_id,
-        |    CAST(round(ln(CAST(c12 + 1 AS DOUBLE) / (c1 + v)) * 1e9) AS BIGINT) AS lp_fp
-        |  FROM bgw JOIN c12 USING (bg) JOIN c1 USING (w1), v),
-        |per AS (
-        |  SELECT doc_id, count(*) AS n_bigrams, sum(lp_fp) AS s
-        |  FROM lp GROUP BY 1)
-        |SELECT d.doc_id, n_bigrams,
-        |  round(CAST(s AS DOUBLE) / n_bigrams / 1e9, 6) AS mean_logp,
-        |  round(exp(-(CAST(s AS DOUBLE) / n_bigrams / 1e9)), 4) AS ppl_proxy
-        |FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    // CCNet tercile split: the q_lm_bigram chain, then the
-    // sign-separated mean division (log-probs are negative — // and
-    // div disagree unless sign-separated), one global rank, and the
-    // shared position-tercile formula.
-    "q_ccnet_split" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |bg AS (
-        |  SELECT doc_id, unnest(CASE WHEN len(w) >= 2
-        |    THEN [array_to_string(w[i:i+1], ' ') for i in range(1, len(w))]
-        |    ELSE [] END) AS bg
-        |  FROM w),
-        |bgw AS (SELECT doc_id, bg, string_split(bg, ' ')[1] AS w1 FROM bg),
-        |c12 AS (SELECT bg, count(*) AS c12 FROM bgw GROUP BY 1),
-        |c1 AS (SELECT w1, count(*) AS c1 FROM bgw GROUP BY 1),
-        |v AS (SELECT count(DISTINCT tok) AS v FROM
-        |  (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)),
-        |lp AS (
-        |  SELECT bgw.doc_id,
-        |    CAST(round(ln(CAST(c12 + 1 AS DOUBLE) / (c1 + v)) * 1e9) AS BIGINT) AS lp_fp
-        |  FROM bgw JOIN c12 USING (bg) JOIN c1 USING (w1), v),
-        |per AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-        |    CAST(sum(lp_fp) AS BIGINT) AS s
-        |  FROM lp GROUP BY 1),
-        |sc AS (SELECT doc_id, n_bigrams,
-        |    CASE WHEN s >= 0 THEN s // n_bigrams
-        |         ELSE -((-s) // n_bigrams) END AS mean_fp
-        |  FROM per),
-        |rk AS (SELECT doc_id, n_bigrams, mean_fp,
-        |    CAST(row_number() OVER (ORDER BY mean_fp DESC, doc_id) AS BIGINT) AS rn,
-        |    CAST(count(*) OVER () AS BIGINT) AS n_scored
-        |  FROM sc)
-        |SELECT d.doc_id, n_bigrams, mean_fp, rn,
-        |  CASE (rn - 1) * 3 // n_scored + 1 WHEN 1 THEN 'head'
-        |       WHEN 2 THEN 'middle' WHEN 3 THEN 'tail' END AS bucket
-        |FROM documents d LEFT JOIN rk USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-    // Stupid backoff: count tables from the EVEN half, held-out ODD
-    // positions served tri→bi→uni by count presence; every score is
-    // an integer division of counts ×1e9 (2/5 and 4/25 clear the 0.4
-    // factors exactly), numerators non-negative so // (floor) and
-    // Spark div (trunc) agree.
-    "q_lm_backoff" ->
-      s"""WITH ${duckBackoffCtes()}
-        |SELECT d.doc_id, n_trigrams, n_tri, n_bi, n_uni, sum_score_fp,
-        |  sum_score_fp // n_trigrams AS mean_score_fp
-        |FROM (SELECT doc_id FROM documents WHERE doc_id % 2 = 1) d
-        |LEFT JOIN per USING (doc_id) ORDER BY d.doc_id""".stripMargin,
-    // Min-K% prob: every doc scored (posFilter TRUE), per-doc sorted
-    // score list, bottom ceil(n*20/100) summed — scores are
-    // non-negative count ratios so // and div agree, and ties at the
-    // cut are sum-invariant.
-    "q_minkprob" ->
-      s"""WITH ${duckBackoffCtes("TRUE")},
-        |ps AS (SELECT doc_id,
-        |    CASE WHEN c123 IS NOT NULL THEN (c123 * 1000000000) // c12
-        |      WHEN c23 IS NOT NULL THEN (2 * c23 * 1000000000) // (5 * cw2)
-        |      ELSE (4 * coalesce(cw3, 0) * 1000000000) // (25 * n_train) END AS score_fp
-        |  FROM sc),
-        |ag AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_trigrams,
-        |    list_sort(list(score_fp)) AS xs FROM ps GROUP BY 1),
-        |ks AS (SELECT doc_id, n_trigrams,
-        |    (n_trigrams * 20 + 99) // 100 AS k, xs FROM ag),
-        |res AS (SELECT doc_id, n_trigrams, k,
-        |    CAST(list_sum(xs[1:k]) AS BIGINT) AS min_k_sum_fp FROM ks)
-        |SELECT d.doc_id, d.doc_id % 2 = 0 AS in_train, n_trigrams, k,
-        |  min_k_sum_fp, min_k_sum_fp // k AS min_k_mean_fp
-        |FROM documents d LEFT JOIN res USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-    // DoReMi-lite reweighting: the backoff per-doc table pooled per
-    // source (position-weighted sign-separated mean), deficit vs the
-    // best source, linear weights with the +1000 epsilon, x1e6
-    // round-half-up share.
-    "q_mix_lm" ->
-      s"""WITH ${duckBackoffCtes()},
-        |src AS (SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(n_trigrams) AS BIGINT) AS n_trigrams,
-        |    CAST(sum(sum_score_fp) AS BIGINT) AS s
-        |  FROM per JOIN documents d USING (doc_id) GROUP BY 1),
-        |m AS (SELECT source, n_docs, n_trigrams,
-        |    CASE WHEN s >= 0 THEN s // n_trigrams
-        |         ELSE -((-s) // n_trigrams) END AS mean_score_fp
-        |  FROM src),
-        |b AS (SELECT max(mean_score_fp) AS best FROM m),
-        |dd AS (SELECT m.*, (best - mean_score_fp) AS deficit_fp FROM m, b),
-        |tt AS (SELECT CAST(sum(deficit_fp + 1000) AS BIGINT) AS tot FROM dd)
-        |SELECT source, n_docs, n_trigrams, mean_score_fp, deficit_fp,
-        |  (2 * (deficit_fp + 1000) * 1000000 + tot) // (2 * tot) AS weight_fp
-        |FROM dd, tt ORDER BY source""".stripMargin,
-    // The appended suffix is DECOMPOSED (e+U+0301, a+U+0308) in both
-    // engines, so real NFC composition sits under the hash: the
-    // composed string, its codepoint count (raw - 2) and the changed
-    // flag must all agree. NULL text stays NULL end-to-end (|| and
-    // nfc_normalize are null-propagating, like Spark's concat).
-    "q_text_normalize" ->
-      """SELECT doc_id, length(raw) AS n_raw, length(nfc) AS n_nfc,
-        |  length(raw) <> length(nfc) AS changed, nfc AS text_nfc
-        |FROM (SELECT doc_id,
-        |        text || ' cafe' || chr(769) || ' la' || chr(776) || 'rm' AS raw,
-        |        nfc_normalize(text || ' cafe' || chr(769) || ' la' || chr(776) || 'rm') AS nfc
-        |      FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-    "q_sample_hash" -> {
-      val draw4 = duckHashDraw(4)
-      s"""SELECT doc_id, lang, source, $draw4 % 1000 AS bucket
-         |FROM documents
-         |WHERE $draw4 % 1000 <
-         |  (CASE lang WHEN 'en' THEN 200 WHEN 'zh' THEN 400 ELSE 600 END)
-         |ORDER BY doc_id""".stripMargin
-    },
-    "q_sample_reservoir" -> {
-      val draw6 = duckHashDraw(6)
-      s"""WITH d AS (SELECT lang, doc_id, $draw6 AS draw FROM documents),
-         |r AS (SELECT lang, doc_id, draw,
-         |  row_number() OVER (PARTITION BY lang ORDER BY draw, doc_id) AS rank
-         |  FROM d WHERE draw IS NOT NULL)
-         |SELECT lang, CAST(rank AS BIGINT) AS rank, doc_id, CAST(draw AS BIGINT) AS draw
-         |FROM r WHERE rank <= 20 ORDER BY lang, rank""".stripMargin
-    },
-    "q_pack_sequences" ->
-      """WITH toks AS (SELECT doc_id, doc_id % 8 AS shard,
-        |    len(regexp_split_to_array(text, '\s+')) AS n_tokens
-        |  FROM documents),
-        |c AS (SELECT doc_id, shard, CAST(n_tokens AS BIGINT) AS n_tokens,
-        |    sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM toks)
-        |SELECT doc_id, shard, n_tokens,
-        |  CAST(cum - n_tokens AS BIGINT) AS shard_offset,
-        |  (shard << 40) + CAST(floor((cum - n_tokens) / 512.0) AS BIGINT) AS seq_id
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "q_pipeline_prep" ->
-      s"""WITH scored AS (
-         |  SELECT doc_id, lang,
-         |    $duckQualityScore AS quality,
-         |    len(regexp_split_to_array(text, '\\s+')) AS n_tokens,
-         |    md5(array_to_string(list_sort(string_split(text,' ')), ' ')) AS fp
-         |  FROM documents),
-        |kept AS (SELECT * FROM scored
-        |  WHERE quality >= 0.45 AND lang IN ('en','fr','de','es'))
-        |SELECT min(doc_id) AS doc_id, min(lang) AS lang, min(quality) AS quality,
-        |  CAST(min(n_tokens) AS BIGINT) AS n_tokens, count(*) AS n_dups
-        |FROM kept GROUP BY fp ORDER BY doc_id""".stripMargin,
-    // Bit b of the simhash = bit b%4 of hex nibble b/4 of md5(word) —
-    // identical strings, identical md5s, identical bits in both engines.
-    "q_simhash" ->
-      s"""WITH $duckSimhashCtes
-         |SELECT doc_id, simhash FROM s ORDER BY doc_id""".stripMargin,
-    // banding is pure pruning (pigeonhole: maxHamming+1 bands — here
-    // 2 bands for the default threshold 1, so a pair differing in <=1
-    // bit leaves at least one band equal), so the oracle can skip it
-    // and take ALL pairs within the Hamming threshold — same result by
-    // theory, and the hash-match proves the banded path loses no
-    // pairs. Like q_sim_lsh's oracle, this SQL carries no maxBucket
-    // cap: parity holds while no band bucket exceeds candidatePairs'
-    // 10k ceiling (an overflowed bucket would make the Spark side drop
-    // pairs the oracle keeps; the cap's drop semantics are unit-tested
-    // separately).
-    "q_dedup_simhash" ->
-      s"""WITH $duckSimhashCtes
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-         |FROM s a, s b
-         |WHERE a.doc_id < b.doc_id AND bit_count(xor(a.simhash, b.simhash)) <= 1
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    // Connected components in SQL: recursive min-label propagation.
-    // Seed every edge-incident node with the min of its closed
-    // neighborhood; the recursive step flows any neighbor's label
-    // across an edge; UNION dedups so the iteration reaches a fixpoint
-    // over the finite label set. The component minimum m seeds itself
-    // (all its neighbors are larger) and propagates along every path,
-    // so min(label) per node is exactly the component min — the same
-    // labels star-contraction converges to. Singletons (no pair) get
-    // cluster_id = doc_id via the left join, as in the query.
-    "q_dup_clusters" ->
-      s"""WITH RECURSIVE $duckSimhashCtes,
-         |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM s a, s b
-         |  WHERE a.doc_id < b.doc_id AND bit_count(xor(a.simhash, b.simhash)) <= 1),
-         |e AS (SELECT doc_a AS u, doc_b AS v FROM p
-         |  UNION ALL SELECT doc_b, doc_a FROM p),
-         |lab(node, label) AS (
-         |  SELECT u, least(u, min(v)) FROM e GROUP BY u
-         |  UNION
-         |  SELECT e.u, l.label FROM e JOIN lab l ON e.v = l.node),
-         |lbl AS (SELECT node, min(label) AS label FROM lab GROUP BY node),
-         |base AS (SELECT d.doc_id, coalesce(l.label, d.doc_id) AS cluster_id
-         |  FROM documents d LEFT JOIN lbl l ON d.doc_id = l.node)
-         |SELECT doc_id, cluster_id,
-         |  count(*) OVER (PARTITION BY cluster_id) AS cluster_size
-         |FROM base ORDER BY doc_id""".stripMargin,
-    // same label propagation; keep only canonical rows (doc_id ==
-    // cluster minimum) — the surviving corpus after near-dup dedup
-    "q_dedup_resolve" ->
-      s"""WITH RECURSIVE $duckSimhashCtes,
-         |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM s a, s b
-         |  WHERE a.doc_id < b.doc_id AND bit_count(xor(a.simhash, b.simhash)) <= 1),
-         |e AS (SELECT doc_a AS u, doc_b AS v FROM p
-         |  UNION ALL SELECT doc_b, doc_a FROM p),
-         |lab(node, label) AS (
-         |  SELECT u, least(u, min(v)) FROM e GROUP BY u
-         |  UNION
-         |  SELECT e.u, l.label FROM e JOIN lab l ON e.v = l.node),
-         |lbl AS (SELECT node, min(label) AS label FROM lab GROUP BY node),
-         |base AS (SELECT d.doc_id, coalesce(l.label, d.doc_id) AS cluster_id
-         |  FROM documents d LEFT JOIN lbl l ON d.doc_id = l.node),
-         |sized AS (SELECT doc_id, cluster_id,
-         |  count(*) OVER (PARTITION BY cluster_id) AS cluster_size
-         |  FROM base)
-         |SELECT doc_id, cluster_size AS n_members,
-         |  cluster_size - 1 AS n_dropped
-         |FROM sized WHERE doc_id = cluster_id ORDER BY doc_id""".stripMargin,
-    // same components; representative = LONGEST member (n_chars DESC,
-    // doc_id ASC) via a per-cluster rank CTE — keep-rarest-source was
-    // measured degenerate on this corpus (uniform source sizes)
-    "q_dedup_priority" ->
-      s"""WITH RECURSIVE $duckSimhashCtes,
-         |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM s a, s b
-         |  WHERE a.doc_id < b.doc_id AND bit_count(xor(a.simhash, b.simhash)) <= 1),
-         |e AS (SELECT doc_a AS u, doc_b AS v FROM p
-         |  UNION ALL SELECT doc_b, doc_a FROM p),
-         |lab(node, label) AS (
-         |  SELECT u, least(u, min(v)) FROM e GROUP BY u
-         |  UNION
-         |  SELECT e.u, l.label FROM e JOIN lab l ON e.v = l.node),
-         |lbl AS (SELECT node, min(label) AS label FROM lab GROUP BY node),
-         |base AS (SELECT d.doc_id, coalesce(l.label, d.doc_id) AS cluster_id
-         |  FROM documents d LEFT JOIN lbl l ON d.doc_id = l.node),
-         |j AS (SELECT b.doc_id, b.cluster_id, CAST(d.n_chars AS BIGINT) AS n_chars
-         |  FROM base b JOIN documents d USING (doc_id)),
-         |r AS (SELECT cluster_id, doc_id AS rep_id FROM (
-         |    SELECT cluster_id, doc_id,
-         |      row_number() OVER (PARTITION BY cluster_id
-         |        ORDER BY n_chars DESC, doc_id) AS rn
-         |    FROM j) WHERE rn = 1)
-         |SELECT j.doc_id, j.cluster_id, j.n_chars, r.rep_id,
-         |  j.doc_id = r.rep_id AS kept
-         |FROM j JOIN r USING (cluster_id) ORDER BY j.doc_id""".stripMargin,
-    "q_dedup_embed" ->
-      """SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-        |  round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS cosine
-        |FROM embeddings a, embeddings b
-        |WHERE a.vec_id < 300 AND b.vec_id < 300 AND a.vec_id < b.vec_id
-        |  AND round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) > 0.35
-        |ORDER BY vec_a, vec_b""".stripMargin,
-    // The LSH planes are deterministic ±1 literals (SimilarityOps
-    // .lshPlaneSign), so the oracle can rebuild every sign bit as an
-    // explicit left-associated signed sum — bit-identical to the
-    // codegen'd dot_product fold (float→double products with ±1 are
-    // exact; both engines then add left-to-right in double) — and
-    // re-derive buckets, candidate pairs, and confirmed cosines
-    // entirely in SQL. The SQL carries no maxBucket cap: parity holds
-    // while no bucket overflows (10k members would mean a degenerate
-    // corpus; the cap's drop semantics are unit-tested separately).
-    "q_sim_lsh" -> {
-      import graft.queries.SimilarityOps.{LshBits, LshDims, LshTables, lshPlaneSign}
-      val buckets = (0 until LshTables).map { t =>
-        val bits = (0 until LshBits).map { b =>
-          val terms = (0 until LshDims).map { j =>
-            val sign = if (lshPlaneSign(t, b, j) > 0) "+" else "-"
-            s"$sign e[${j + 1}]::DOUBLE"
-          }.mkString(" ")
-          s"(CASE WHEN ($terms) >= 0 THEN ${1L << b} ELSE 0 END)"
-        }.mkString(" + ")
-        s"($bits) + ${t.toLong << 32}"
-      }
-      s"""WITH ids AS (
-         |  SELECT vec_id, unnest([${buckets.mkString(", ")}]) AS bucket
-         |  FROM (SELECT vec_id, embedding AS e FROM embeddings)),
-         |pairs AS (
-         |  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-         |  FROM ids a JOIN ids b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
-         |SELECT p.vec_a, p.vec_b,
-         |  round(list_cosine_similarity(ea.embedding::DOUBLE[], eb.embedding::DOUBLE[]), 6) AS cosine
-         |FROM pairs p
-         |JOIN embeddings ea ON ea.vec_id = p.vec_a
-         |JOIN embeddings eb ON eb.vec_id = p.vec_b
-         |WHERE round(list_cosine_similarity(ea.embedding::DOUBLE[], eb.embedding::DOUBLE[]), 6) > 0.35
-         |ORDER BY vec_a, vec_b""".stripMargin
-    },
-    // block-level exact dedup: 20-word blocks, first-occurrence
-    // ownership by (doc_id, pos) via the same row_number window; DuckDB
-    // 1-based inclusive slicing ws[a:b] == Spark slice(w, a, 20); a
-    // fully-dropped doc keeps '' (coalesce of string_agg) on both
-    // sides, a null doc keeps NULL via the left join
-    "q_dedup_block" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws
-        |           FROM documents WHERE text IS NOT NULL),
-        |b0 AS (SELECT doc_id, ws,
-        |         unnest(range(0, CAST(ceil(len(ws)/20.0) AS BIGINT))) AS pos FROM d),
-        |b AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos,
-        |        array_to_string(ws[pos*20 + 1 : pos*20 + 20], ' ') AS block FROM b0),
-        |f AS (SELECT doc_id, pos, block,
-        |        (row_number() OVER (PARTITION BY md5(block) ORDER BY doc_id, pos)) = 1 AS kept
-        |      FROM b),
-        |p AS (SELECT doc_id, count(*) AS n_blocks,
-        |        CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        |        coalesce(string_agg(CASE WHEN kept THEN block END, ' ' ORDER BY pos), '') AS kept_text
-        |      FROM f GROUP BY doc_id)
-        |SELECT doc.doc_id, coalesce(n_blocks, 0) AS n_blocks,
-        |  coalesce(n_kept, 0) AS n_kept, kept_text
-        |FROM documents doc LEFT JOIN p USING (doc_id)
-        |ORDER BY doc.doc_id""".stripMargin,
-    // exact substring-level dedup (Lee et al. 2021 style): every-8-gram
-    // fingerprints, first-occurrence ownership (rn > 1 == Spark's
-    // struct-min filter — (doc_id, pos) is unique per fp), then the
-    // running-max interval merge; DuckDB list_slice is 1-based
-    // inclusive == Spark slice(w, p, 8); sum() is HUGEINT -> CAST
-    "q_dedup_substr" ->
-      """WITH toks AS (SELECT doc_id,
-        |         list_filter(string_split(text, ' '), x -> x <> '') AS w
-        |       FROM documents WHERE text IS NOT NULL),
-        |base AS (SELECT doc_id, w, CAST(len(w) AS BIGINT) AS n_tokens FROM toks),
-        |grams AS (SELECT doc_id, CAST(p AS BIGINT) AS pos,
-        |        md5(array_to_string(list_slice(w, p, p + 7), ' ')) AS fp
-        |      FROM base, unnest(range(1, CAST(n_tokens - 6 AS BIGINT))) AS t(p)
-        |      WHERE n_tokens >= 8),
-        |marked AS (SELECT doc_id, pos,
-        |        row_number() OVER (PARTITION BY fp ORDER BY doc_id, pos) AS rn
-        |      FROM grams),
-        |dups AS (SELECT doc_id, pos AS s, pos + 7 AS e FROM marked WHERE rn > 1),
-        |m AS (SELECT doc_id, s, e,
-        |        max(e) OVER (PARTITION BY doc_id ORDER BY s
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-        |      FROM dups),
-        |flg AS (SELECT doc_id, s, e,
-        |        CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END AS ns FROM m),
-        |grp AS (SELECT doc_id, s, e,
-        |        sum(ns) OVER (PARTITION BY doc_id ORDER BY s) AS g FROM flg),
-        |spans AS (SELECT doc_id, g, min(s) AS ss, max(e) AS ee
-        |      FROM grp GROUP BY doc_id, g),
-        |per_doc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans,
-        |        CAST(sum(ee - ss + 1) AS BIGINT) AS dup_tokens
-        |      FROM spans GROUP BY doc_id)
-        |SELECT doc.doc_id,
-        |  coalesce(b.n_tokens, 0) AS n_tokens,
-        |  coalesce(p.dup_tokens, 0) AS dup_tokens,
-        |  coalesce(p.n_spans, 0) AS n_spans,
-        |  coalesce(b.n_tokens, 0) - coalesce(p.dup_tokens, 0) AS kept_tokens,
-        |  CASE WHEN coalesce(b.n_tokens, 0) = 0 THEN 0
-        |    ELSE (2 * coalesce(p.dup_tokens, 0) * 1000000 + b.n_tokens)
-        |         // (2 * b.n_tokens) END AS dup_share_fp
-        |FROM documents doc
-        |LEFT JOIN base b USING (doc_id)
-        |LEFT JOIN per_doc p USING (doc_id)
-        |ORDER BY doc.doc_id""".stripMargin,
-    // sorted-neighborhood dedup: in-block lead window over the
-    // normalized sort key, levenshtein confirm on candidates only;
-    // regexp_replace needs the 'g' flag (DuckDB default replaces the
-    // FIRST match; Spark replaces all)
-    "q_dedup_sorted" ->
-      """WITH k AS (SELECT doc_id,
-        |         lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm
-        |       FROM documents WHERE text IS NOT NULL),
-        |b AS (SELECT doc_id, norm, substr(norm, 1, 12) AS blk FROM k),
-        |w AS (SELECT blk, doc_id, norm,
-        |        lead(doc_id,1) OVER sw AS id_1, lead(norm,1) OVER sw AS norm_1,
-        |        lead(doc_id,2) OVER sw AS id_2, lead(norm,2) OVER sw AS norm_2,
-        |        lead(doc_id,3) OVER sw AS id_3, lead(norm,3) OVER sw AS norm_3
-        |      FROM b WINDOW sw AS (PARTITION BY blk ORDER BY norm, doc_id)),
-        |p AS (SELECT doc_id AS a_id, id_1 AS b_id,
-        |        CAST(levenshtein(norm, norm_1) AS BIGINT) AS dist
-        |      FROM w WHERE id_1 IS NOT NULL
-        |      UNION ALL SELECT doc_id, id_2, CAST(levenshtein(norm, norm_2) AS BIGINT)
-        |      FROM w WHERE id_2 IS NOT NULL
-        |      UNION ALL SELECT doc_id, id_3, CAST(levenshtein(norm, norm_3) AS BIGINT)
-        |      FROM w WHERE id_3 IS NOT NULL)
-        |SELECT a_id, b_id, dist FROM p WHERE dist <= 12
-        |ORDER BY a_id, b_id""".stripMargin,
-    // skew diagnostic: all-integer metric report off the key-count
-    // table; percentiles via the float-free b*cum >= a form
-    "q_skew_stats" ->
-      """WITH kc AS (SELECT l_partkey AS k, CAST(count(*) AS BIGINT) AS n
-        |            FROM lineitem GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS nr, CAST(count(*) AS BIGINT) AS nk,
-        |          max(n) AS mx, CAST(sum(n * n) AS BIGINT) AS ssq FROM kc),
-        |cc AS (SELECT n AS c, CAST(count(*) AS BIGINT) AS keys FROM kc GROUP BY 1),
-        |cw AS (SELECT c, sum(keys) OVER (ORDER BY c) AS cum FROM cc),
-        |p50 AS (SELECT min(c) AS v FROM cw, tot WHERE cum * 100 >= nk * 50),
-        |p99 AS (SELECT min(c) AS v FROM cw, tot WHERE cum * 100 >= nk * 99)
-        |SELECT metric, value FROM (
-        |  SELECT 'n_rows' AS metric, nr AS value FROM tot
-        |  UNION ALL SELECT 'n_keys', nk FROM tot
-        |  UNION ALL SELECT 'max_key_n', mx FROM tot
-        |  UNION ALL SELECT 'top1_share_fp', (2 * mx * 1000000 + nr) // (2 * nr) FROM tot
-        |  UNION ALL SELECT 'hhi_fp', (2 * ssq * 1000000 + nr * nr) // (2 * nr * nr) FROM tot
-        |  UNION ALL SELECT 'p50_key_n', v FROM p50
-        |  UNION ALL SELECT 'p99_key_n', v FROM p99)
-        |ORDER BY metric""".stripMargin,
-    // df = distinct docs per block via dense_rank + partition max
-    // (mirrors the Spark two-window form); blocks with df >= 2 are
-    // boilerplate and removed from ALL docs; n_kept CAST BIGINT
-    // (DuckDB sum() returns HUGEINT — the q_corpus_report lesson)
-    "q_boilerplate" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws
-        |           FROM documents WHERE text IS NOT NULL),
-        |b0 AS (SELECT doc_id, ws,
-        |         unnest(range(0, CAST(ceil(len(ws)/20.0) AS BIGINT))) AS pos FROM d),
-        |b AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos,
-        |        array_to_string(ws[pos*20 + 1 : pos*20 + 20], ' ') AS block FROM b0),
-        |f AS (SELECT doc_id, pos, block,
-        |        dense_rank() OVER (PARTITION BY md5(block) ORDER BY doc_id) AS dr
-        |      FROM b),
-        |g AS (SELECT doc_id, pos, block,
-        |        (max(dr) OVER (PARTITION BY md5(block))) < 2 AS kept FROM f),
-        |p AS (SELECT doc_id, count(*) AS n_blocks,
-        |        CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        |        coalesce(string_agg(CASE WHEN kept THEN block END, ' ' ORDER BY pos), '') AS kept_text
-        |      FROM g GROUP BY doc_id)
-        |SELECT doc.doc_id, coalesce(n_blocks, 0) AS n_blocks,
-        |  coalesce(n_kept, 0) AS n_kept, kept_text
-        |FROM documents doc LEFT JOIN p USING (doc_id)
-        |ORDER BY doc.doc_id""".stripMargin,
-    // per-language discrete lower median over exact fixed-point scores
-    // (integer cumulative window over value counts — no interpolated
-    // percentile, whose two-value midpoint can sit exactly on a float
-    // rounding boundary); the gate compares longs
-    "q_quality_gate" ->
-      s"""WITH sc AS (SELECT doc_id, lang,
-         |    CAST(round($duckQualityScore * 1e10) AS BIGINT) AS qf FROM documents),
-         |v AS (SELECT lang, qf, count(*) AS c FROM sc
-         |      WHERE qf IS NOT NULL GROUP BY 1, 2),
-         |cw AS (SELECT lang, qf,
-         |         sum(c) OVER (PARTITION BY lang ORDER BY qf) AS cum,
-         |         sum(c) OVER (PARTITION BY lang) AS nl FROM v),
-         |t AS (SELECT lang, min(qf) AS thr_fp FROM cw
-         |      WHERE cum >= CAST(ceil(nl / 2.0) AS BIGINT) GROUP BY 1)
-         |SELECT doc_id, lang, CAST(qf AS DOUBLE) / 1e10 AS quality,
-         |  CAST(thr_fp AS DOUBLE) / 1e10 AS lang_median
-         |FROM sc JOIN t USING (lang)
-         |WHERE qf >= thr_fp ORDER BY doc_id""".stripMargin,
-    // dedup-safe split: the draw hashes the normalized-content
-    // fingerprint (null docs: a namespaced doc id), same md5-nibble
-    // bridge as the sampling oracles
-    "q_split" -> {
-      val key = "coalesce(md5(array_to_string(list_sort(string_split(text, ' ')), ' ')), " +
-        "'null:' || CAST(doc_id AS VARCHAR))"
-      val draw = duckHexValue(s"md5($key)", 1, 4)
-      s"""SELECT doc_id, lang, $draw % 1000 AS bucket,
-         |  CASE WHEN $draw % 1000 < 800 THEN 'train'
-         |       WHEN $draw % 1000 < 900 THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM documents ORDER BY doc_id""".stripMargin
-    },
-    // token-budget mixing: integer token counts, ONE float division
-    // sequence for the rate written token for token as the query
-    // (identical IEEE ops on exact operands), the shared md5 draw;
-    // left join keeps zero-admission sources in the report
-    "q_mix_budget" -> {
-      val draw4 = duckHashDraw(4)
-      s"""WITH ps AS (SELECT source, count(*) AS src_docs,
-         |      CAST(sum(len(regexp_split_to_array(text, '\\s+'))) AS BIGINT) AS src_tokens
-         |    FROM documents GROUP BY 1),
-         |tt AS (SELECT CAST(sum(src_tokens) AS BIGINT) AS total_tokens,
-         |         count(*) AS n_sources FROM ps),
-         |r AS (SELECT source, src_docs, src_tokens,
-         |        least(1000, CAST(floor(total_tokens * 500.0 / (n_sources * src_tokens))
-         |          AS BIGINT)) AS rate_mille
-         |      FROM ps, tt),
-         |k AS (SELECT d.source, count(*) AS kept_docs,
-         |        CAST(sum(len(regexp_split_to_array(d.text, '\\s+'))) AS BIGINT) AS kept_tokens
-         |      FROM documents d JOIN r USING (source)
-         |      WHERE $draw4 % 1000 < rate_mille GROUP BY 1)
-         |SELECT source, src_docs, src_tokens, rate_mille,
-         |  coalesce(kept_docs, 0) AS kept_docs,
-         |  coalesce(kept_tokens, 0) AS kept_tokens
-         |FROM r LEFT JOIN k USING (source) ORDER BY source""".stripMargin
-    },
-    // temperature mixing: sqrt weight (α=0.5 — IEEE-correctly-rounded
-    // in both engines, unlike pow), floor fixed-pointing (round
-    // diverges: Spark half-up, DuckDB half-even), exact long
-    // normalizing sum, rate = one double op sequence mirrored token
-    // for token
-    "q_mix_temp" -> {
-      val draw4 = duckHashDraw(4)
-      s"""WITH ps AS (SELECT source, count(*) AS src_docs,
-         |      CAST(sum(len(regexp_split_to_array(text, '\\s+'))) AS BIGINT) AS src_tokens
-         |    FROM documents GROUP BY 1),
-         |w AS (SELECT source, src_docs, src_tokens,
-         |        CAST(floor(sqrt(CAST(src_tokens AS DOUBLE)) * 1e6) AS BIGINT)
-         |          AS weight_fp FROM ps),
-         |tt AS (SELECT CAST(sum(src_tokens) AS BIGINT) AS total_tokens,
-         |         CAST(sum(weight_fp) AS BIGINT) AS w_sum FROM w),
-         |r AS (SELECT source, src_docs, src_tokens, weight_fp,
-         |        least(1000, CAST(floor(CAST(total_tokens AS DOUBLE) * 500.0 * weight_fp /
-         |          (CAST(w_sum AS DOUBLE) * src_tokens)) AS BIGINT)) AS rate_mille
-         |      FROM w, tt),
-         |k AS (SELECT d.source, count(*) AS kept_docs,
-         |        CAST(sum(len(regexp_split_to_array(d.text, '\\s+'))) AS BIGINT) AS kept_tokens
-         |      FROM documents d JOIN r USING (source)
-         |      WHERE $draw4 % 1000 < rate_mille GROUP BY 1)
-         |SELECT source, src_docs, src_tokens, weight_fp, rate_mille,
-         |  coalesce(kept_docs, 0) AS kept_docs,
-         |  coalesce(kept_tokens, 0) AS kept_tokens
-         |FROM r LEFT JOIN k USING (source) ORDER BY source""".stripMargin
-    },
-    // epoch allocation: q_mix_temp's sqrt weights over LANGUAGES, 4x
-    // token budget, integer allocation and round-half-up epochs; the
-    // >4-epoch cap mirrors as a pure integer comparison
-    "q_mix_epoch" ->
-      s"""WITH ps AS (SELECT lang, count(*) AS n_docs,
-         |      CAST(sum(len(regexp_split_to_array(text, '\\s+'))) AS BIGINT) AS lang_tokens
-         |    FROM documents GROUP BY 1),
-         |w AS (SELECT lang, n_docs, lang_tokens,
-         |        CAST(floor(sqrt(CAST(lang_tokens AS DOUBLE)) * 1e6) AS BIGINT)
-         |          AS weight_fp FROM ps),
-         |tt AS (SELECT CAST(sum(lang_tokens) AS BIGINT) AS total_tokens,
-         |         CAST(sum(weight_fp) AS BIGINT) AS w_sum FROM w),
-         |a AS (SELECT lang, n_docs, lang_tokens, weight_fp,
-         |        CAST((4 * total_tokens * weight_fp) // w_sum AS BIGINT)
-         |          AS alloc_tokens
-         |      FROM w, tt)
-         |SELECT lang, n_docs, lang_tokens, weight_fp, alloc_tokens,
-         |  (2 * alloc_tokens * 1000000 + lang_tokens) // (2 * lang_tokens)
-         |    AS epochs_fp,
-         |  (2 * alloc_tokens * 1000000 + lang_tokens) // (2 * lang_tokens)
-         |    > 4000000 AS over_cap,
-         |  least(alloc_tokens, lang_tokens * 4) AS effective_tokens
-         |FROM a ORDER BY lang""".stripMargin,
-    // top-N vocabulary: exact long counts and running sum, one
-    // long/long division per share; (n DESC, term) has no ties (term
-    // unique post-group), so rank and the running-sum frame agree
-    "q_vocab" ->
-      """WITH t AS (SELECT unnest(string_split(text, ' ')) AS term
-        |           FROM documents WHERE text IS NOT NULL),
-        |v AS (SELECT term, count(*) AS n FROM t WHERE len(term) > 0 GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS total_tokens FROM v),
-        |top AS (SELECT term, n FROM v ORDER BY n DESC, term LIMIT 100),
-        |r AS (SELECT term, CAST(n AS BIGINT) AS n,
-        |        CAST(row_number() OVER (ORDER BY n DESC, term) AS BIGINT) AS rank,
-        |        CAST(sum(n) OVER (ORDER BY n DESC, term) AS BIGINT) AS cum_n FROM top)
-        |SELECT rank, term, n,
-        |  round(CAST(n AS DOUBLE) / total_tokens, 10) AS share,
-        |  round(CAST(cum_n AS DOUBLE) / total_tokens, 10) AS cum_share
-        |FROM r, tot ORDER BY rank""".stripMargin,
-    // BPE merge-step: pair counting over the distinct vocab, weighted
-    // by word frequency; exact longs, ties (cnt DESC, pair)
-    "q_bpe" ->
-      """WITH t AS (SELECT unnest(string_split(text, ' ')) AS word
-        |           FROM documents WHERE text IS NOT NULL),
-        |w AS (SELECT word, count(*) AS n FROM t WHERE length(word) > 1 GROUP BY 1),
-        |p AS (SELECT unnest(list_transform(range(1, length(word)), i ->
-        |        substr(word, CAST(i AS INTEGER), 2))) AS pair, n
-        |      FROM w),
-        |a AS (SELECT pair, CAST(sum(n) AS BIGINT) AS cnt FROM p GROUP BY pair)
-        |SELECT CAST(row_number() OVER (ORDER BY cnt DESC, pair) AS BIGINT) AS rank,
-        |  pair, cnt
-        |FROM a ORDER BY cnt DESC, pair LIMIT 50""".stripMargin,
-    // Unigram-LM trainer: two recursive-CTE Viterbi-EM rounds over
-    // the distinct-word table; final vocab with last-round usage,
-    // smoothed scores, and the per-round EM objectives
-    "q_unigram_train" ->
-      s"""WITH RECURSIVE
-         |${duckUnigramCtes(24)}
-         |SELECT v.piece, CAST(length(v.piece) AS BIGINT) AS len,
-         |  s2.u AS usage, s2.score AS score_fp,
-         |  (SELECT obj FROM obj1) AS obj1_fp,
-         |  (SELECT obj FROM obj2) AS obj2_fp
-         |FROM vocab v JOIN sc2 s2 ON v.piece = s2.piece
-         |ORDER BY s2.u DESC, v.piece""".stripMargin,
-    // Unigram encode: a THIRD Viterbi pass under the trained (vv2)
-    // scores gives each distinct word its token count; docs join the
-    // Zipf-bounded (word, n_tok) model and aggregate per doc
-    "q_unigram_encode" ->
-      s"""WITH RECURSIVE
-         |${duckUnigramCtes(24, rounds = 3)},
-         |wt AS (SELECT word, CAST(len(lens) AS BIGINT) AS n_tok
-         |       FROM ex3 WHERE j = 0),
-         |dw AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-         |       FROM documents WHERE text IS NOT NULL)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-         |  CAST(sum(length(word)) AS BIGINT) AS n_chars,
-         |  CAST(sum(n_tok) AS BIGINT) AS n_unigram_tokens
-         |FROM dw JOIN wt USING (word)
-         |GROUP BY 1 ORDER BY doc_id""".stripMargin,
-    // Unigram prune: per removable piece, the Viterbi-objective loss
-    // of dropping it under the FINAL scores - masked (cand, ps, ss)
-    // model rows from the sc2 table, one forward DP per (cand, word)
-    "q_unigram_prune" ->
-      s"""WITH RECURSIVE
-         |${duckUnigramCtes(24, rounds = 3)},
-         |cands AS (SELECT piece AS cand, u FROM sc2
-         |          WHERE length(piece) > 1 AND u > 0),
-         |mv AS MATERIALIZED (
-         |  SELECT c.cand, c.u, list(s.piece ORDER BY s.piece) AS ps,
-         |    list(s.score ORDER BY s.piece) AS ss
-         |  FROM cands c JOIN sc2 s ON s.piece <> c.cand GROUP BY c.cand, c.u),
-         |dpp AS (
-         |  SELECT cand, u, word, n, ps, ss, [CAST(0 AS BIGINT)] AS bests, 0 AS j
-         |  FROM w, mv
-         |  UNION ALL
-         |  SELECT cand, u, word, n, ps, ss, list_append(bests,
-         |    list_max(list_transform([1,2,3,4], l -> CASE WHEN j + 1 - l >= 0
-         |      THEN bests[j + 2 - l] +
-         |        coalesce(ss[list_position(ps, substr(word, j + 2 - l, l))],
-         |          CAST(-1000000000000000 AS BIGINT)) END))), j + 1
-         |  FROM dpp WHERE j < length(word)),
-         |objm AS (SELECT cand, u,
-         |    CAST(sum(n * bests[length(word) + 1]) AS BIGINT) AS obj_masked
-         |  FROM dpp WHERE j = length(word) GROUP BY 1, 2)
-         |SELECT cand AS piece, u AS usage,
-         |  (SELECT obj FROM obj3) - obj_masked AS delta_fp
-         |FROM objm ORDER BY delta_fp, piece""".stripMargin,
-    // BPE trainer: 8 written-out merge iterations (the q_embed_train
-    // iterative-CTE stance); each m_i is the argmax pair (cnt DESC,
-    // pat ASC), each v_i the vocab after that literal replace
-    "q_bpe_train" -> {
-      val merges = 8
-      val steps = duckBpeTrainCtes(merges)
-      val out = (1 to merges).map { i =>
-        s"""SELECT CAST($i AS BIGINT) AS step,
-           |  string_split(substr(pat, 2, length(pat) - 2), '><')[1] AS lhs,
-           |  string_split(substr(pat, 2, length(pat) - 2), '><')[2] AS rhs,
-           |  replace(substr(pat, 2, length(pat) - 2), '><', '') AS merged,
-           |  cnt FROM m$i""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH $steps
-         |SELECT * FROM ($out) ORDER BY step""".stripMargin
-    },
-    // BPE encode: the SAME training CTE chain derives the merge
-    // tables m1..mK; the corpus is then re-tokenized word-by-word by
-    // a K-deep nested replace whose pat/mrg arguments are scalar
-    // subqueries against those CTEs — mirroring the Spark side's
-    // collected-literal replace chain step for step. Token count =
-    // occurrences of '>' (every symbol ends with one).
-    "q_bpe_encode" -> {
-      val merges = 8
-      // coalesce (ADVICE r8): a corpus that exhausts merges before
-      // K leaves m$i empty, its scalar subquery NULL, and
-      // replace(x, NULL, NULL) would null the whole encoding — the
-      // Spark side applies only trained merges, so a missing merge
-      // must be a no-op here too (replace(x, '', '') is identity)
-      val applied = (1 to merges).foldLeft("r") { (acc, i) =>
-        s"replace($acc, coalesce((SELECT pat FROM m$i), '')," +
-          s" coalesce((SELECT mrg FROM m$i), ''))"
-      }
-      s"""WITH ${duckBpeTrainCtes(merges)},
-         |dw AS (SELECT doc_id, word FROM (
-         |    SELECT doc_id, unnest(string_split(text, ' ')) AS word
-         |    FROM documents WHERE text IS NOT NULL)
-         |  WHERE length(word) > 0),
-         |db AS (SELECT doc_id, CAST(length(word) AS BIGINT) AS n_sym,
-         |         '<' || array_to_string(string_split(word, ''), '><') || '>' AS r
-         |       FROM dw),
-         |de AS (SELECT doc_id, n_sym, $applied AS enc FROM db)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-         |  CAST(sum(n_sym) AS BIGINT) AS n_base_symbols,
-         |  CAST(sum(length(enc) - length(replace(enc, '>', ''))) AS BIGINT) AS n_bpe_tokens
-         |FROM de GROUP BY doc_id ORDER BY doc_id""".stripMargin
-    },
-    // per-language fertility: the encode CTE chain regrouped by lang;
-    // every sum CAST to BIGINT before the fixed-point arithmetic
-    // (DuckDB sum() returns HUGEINT — the q_corpus_report lesson)
-    "q_tok_fertility" -> {
-      val merges = 8
-      val applied = (1 to merges).foldLeft("r") { (acc, i) =>
-        s"replace($acc, coalesce((SELECT pat FROM m$i), '')," +
-          s" coalesce((SELECT mrg FROM m$i), ''))"
-      }
-      s"""WITH ${duckBpeTrainCtes(merges)},
-         |dw AS (SELECT doc_id, word FROM (
-         |    SELECT doc_id, unnest(string_split(text, ' ')) AS word
-         |    FROM documents WHERE text IS NOT NULL)
-         |  WHERE length(word) > 0),
-         |db AS (SELECT doc_id, CAST(length(word) AS BIGINT) AS n_sym,
-         |         '<' || array_to_string(string_split(word, ''), '><') || '>' AS r
-         |       FROM dw),
-         |de AS (SELECT doc_id, n_sym, $applied AS enc FROM db),
-         |pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nw,
-         |         CAST(sum(n_sym) AS BIGINT) AS ns,
-         |         CAST(sum(length(enc) - length(replace(enc, '>', ''))) AS BIGINT) AS nt
-         |       FROM de GROUP BY doc_id),
-         |pl AS (SELECT d.lang, CAST(count(*) AS BIGINT) AS n_docs,
-         |         CAST(sum(nw) AS BIGINT) AS n_words,
-         |         CAST(sum(ns) AS BIGINT) AS n_base_symbols,
-         |         CAST(sum(nt) AS BIGINT) AS n_bpe_tokens
-         |       FROM pd JOIN documents d USING (doc_id) GROUP BY d.lang)
-         |SELECT lang, n_docs, n_words, n_base_symbols, n_bpe_tokens,
-         |  (2 * n_base_symbols * 1000000 + n_bpe_tokens) // (2 * n_bpe_tokens)
-         |    AS symbols_per_token_fp,
-         |  (2 * n_bpe_tokens * 1000000 + n_words) // (2 * n_words)
-         |    AS tokens_per_word_fp
-         |FROM pl ORDER BY lang""".stripMargin
-    },
-    // vocab-size sweep: the training CTE chain once, then each
-    // checkpoint's encoding as the full replace-prefix (the oracle
-    // pays 2+4+6+8 replaces where Spark's incremental columns pay 8 —
-    // same values, the oracle optimizes for dialect simplicity);
-    // empty-merge coalesce no-ops as in q_bpe_encode
-    "q_bpe_sweep" -> {
-      val (merges, stride) = (8, 2)
-      val cps = stride to merges by stride
-      def applied(k: Int) = (1 to k).foldLeft("r") { (acc, i) =>
-        s"replace($acc, coalesce((SELECT pat FROM m$i), '')," +
-          s" coalesce((SELECT mrg FROM m$i), ''))"
-      }
-      val encCols = cps.map(k => s"${applied(k)} AS e$k").mkString(",\n")
-      val tokSums = cps.map(k =>
-        s"CAST(sum(length(e$k) - length(replace(e$k, '>', ''))) AS BIGINT) AS t$k")
-        .mkString(",\n")
-      def nm(k: Int) =
-        if (k == 0) "CAST(0 AS BIGINT)"
-        else "CAST(" + (1 to k).map(i => s"(SELECT count(*) FROM m$i)")
-          .mkString(" + ") + " AS BIGINT)"
-      val rows = (s"""SELECT CAST(0 AS BIGINT) AS k, ${nm(0)} AS n_merges,
-        |  s0 AS total_base_symbols, s0 AS total_bpe_tokens,
-        |  (2 * s0 * 1000000 + s0) // (2 * s0) AS symbols_per_token_fp,
-        |  CAST(0 AS BIGINT) AS tokens_saved FROM tot""".stripMargin +:
-        cps.map { k =>
-          val prev = if (k - stride == 0) "s0" else s"t${k - stride}"
-          s"""SELECT CAST($k AS BIGINT), ${nm(k)}, s0, t$k,
-             |  (2 * s0 * 1000000 + t$k) // (2 * t$k), $prev - t$k
-             |FROM tot""".stripMargin
-        }).mkString("\nUNION ALL\n")
-      s"""WITH ${duckBpeTrainCtes(merges)},
-         |dw AS (SELECT word FROM (
-         |    SELECT unnest(string_split(text, ' ')) AS word
-         |    FROM documents WHERE text IS NOT NULL)
-         |  WHERE length(word) > 0),
-         |db AS (SELECT CAST(length(word) AS BIGINT) AS ns,
-         |         '<' || array_to_string(string_split(word, ''), '><') || '>' AS r
-         |       FROM dw),
-         |de AS (SELECT ns,
-         |$encCols
-         |FROM db),
-         |tot AS (SELECT CAST(sum(ns) AS BIGINT) AS s0,
-         |$tokSums
-         |FROM de)
-         |SELECT * FROM ($rows) ORDER BY k""".stripMargin
-    },
-    // PageRank: all-integer fixed-point iterations — both engines
-    // carry bit-identical longs; positive operands make Spark div and
-    // DuckDB // agree
-    // truncated k-core peeling: K=3 unrolled rounds; k=95 sits at the
-    // measured core-collapse threshold (sf0.01: 1642 → 1230 → 377
-    // survivors; k=3 was vacuous against the ~115 average degree and
-    // k≥100 collapses every sf to zero by round 3) — all-integer
-    "q_graph_kcore" -> {
-      val (k, rounds) = (95, 3)
-      val steps = (1 to rounds).map { i =>
-        val prev = if (i == 1) "sym" else s"s${i - 1}"
-        s"""a$i AS (SELECT src AS node FROM $prev GROUP BY src HAVING count(*) >= $k),
-           |s$i AS (SELECT s.src, s.dst FROM $prev s
-           |        JOIN a$i x ON s.src = x.node JOIN a$i y ON s.dst = y.node)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH so AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS sk FROM lineitem),
-         |e AS (SELECT DISTINCT x.sk AS a, y.sk AS b
-         |      FROM so x JOIN so y ON x.ok = y.ok AND x.sk < y.sk),
-         |sym AS (SELECT a AS src, b AS dst FROM e
-         |        UNION ALL SELECT b AS src, a AS dst FROM e),
-         |d0 AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg0
-         |       FROM sym GROUP BY src),
-         |$steps,
-         |df AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg_final
-         |       FROM s$rounds GROUP BY src)
-         |SELECT d0.node, d0.deg0,
-         |  CAST(coalesce(df.deg_final, 0) AS BIGINT) AS deg_final,
-         |  a$rounds.node IS NOT NULL AS in_core
-         |FROM d0 LEFT JOIN df USING (node) LEFT JOIN a$rounds USING (node)
-         |ORDER BY d0.node""".stripMargin
-    },
-    // synchronous LPA: K=3 unrolled iterations; per-iteration argmax
-    // (count DESC, label ASC) as a ranked window — mirrors Spark's
-    // max(struct(cnt, -label)); labels exact longs throughout
-    "q_graph_lpa" -> {
-      val iters = 3
-      val steps = (1 to iters).map { i =>
-        val prev = s"l${i - 1}"
-        s"""l$i AS (SELECT node, label FROM (
-           |  SELECT dst AS node, label,
-           |    row_number() OVER (PARTITION BY dst ORDER BY c DESC, label) AS rn
-           |  FROM (SELECT e.dst, r.label, count(*) AS c
-           |        FROM sym e JOIN $prev r ON e.src = r.node
-           |        GROUP BY e.dst, r.label))
-           |  WHERE rn = 1)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH so AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS sk FROM lineitem),
-         |e AS (SELECT DISTINCT x.sk AS a, y.sk AS b
-         |      FROM so x JOIN so y ON x.ok = y.ok AND x.sk < y.sk),
-         |sym AS (SELECT a AS src, b AS dst FROM e
-         |        UNION ALL SELECT b AS src, a AS dst FROM e),
-         |l0 AS (SELECT DISTINCT src AS node, src AS label FROM sym),
-         |$steps,
-         |sz AS (SELECT label, CAST(count(*) AS BIGINT) AS comm_size
-         |       FROM l$iters GROUP BY label)
-         |SELECT l.node, l.label, sz.comm_size
-         |FROM l$iters l JOIN sz USING (label) ORDER BY l.node""".stripMargin
-    },
-    // Newman modularity over the LPA labels: composes the q_graph_lpa
-    // CTE chain, then all-integer per-community terms with the
-    // negative branch sign-separated (trunc-toward-zero both engines)
-    "q_graph_modularity" -> {
-      val iters = 3
-      val steps = (1 to iters).map { i =>
-        val prev = s"l${i - 1}"
-        s"""l$i AS (SELECT node, label FROM (
-           |  SELECT dst AS node, label,
-           |    row_number() OVER (PARTITION BY dst ORDER BY c DESC, label) AS rn
-           |  FROM (SELECT e.dst, r.label, count(*) AS c
-           |        FROM sym e JOIN $prev r ON e.src = r.node
-           |        GROUP BY e.dst, r.label))
-           |  WHERE rn = 1)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH so AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS sk FROM lineitem),
-         |e AS (SELECT DISTINCT x.sk AS a, y.sk AS b
-         |      FROM so x JOIN so y ON x.ok = y.ok AND x.sk < y.sk),
-         |sym AS (SELECT a AS src, b AS dst FROM e
-         |        UNION ALL SELECT b AS src, a AS dst FROM e),
-         |l0 AS (SELECT DISTINCT src AS node, src AS label FROM sym),
-         |$steps,
-         |mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM e),
-         |deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
-         |        FROM sym GROUP BY 1),
-         |dl AS (SELECT l.label, CAST(sum(d.deg) AS BIGINT) AS d_sum,
-         |         CAST(count(*) AS BIGINT) AS n_nodes
-         |       FROM l$iters l JOIN deg d USING (node) GROUP BY 1),
-         |ie AS (SELECT la.label, CAST(count(*) AS BIGINT) AS m_intra
-         |       FROM e JOIN l$iters la ON e.a = la.node
-         |              JOIN l$iters lb ON e.b = lb.node
-         |       WHERE la.label = lb.label GROUP BY 1)
-         |SELECT dl.label, dl.n_nodes,
-         |  CAST(coalesce(ie.m_intra, 0) AS BIGINT) AS m_intra, dl.d_sum,
-         |  CASE WHEN 4 * mm.m * coalesce(ie.m_intra, 0)
-         |            - dl.d_sum * dl.d_sum >= 0
-         |    THEN ((4 * mm.m * coalesce(ie.m_intra, 0)
-         |           - dl.d_sum * dl.d_sum) * 1000000) // (4 * mm.m * mm.m)
-         |    ELSE -(((dl.d_sum * dl.d_sum
-         |           - 4 * mm.m * coalesce(ie.m_intra, 0)) * 1000000)
-         |          // (4 * mm.m * mm.m))
-         |  END AS term_fp
-         |FROM dl LEFT JOIN ie USING (label), mm
-         |ORDER BY dl.label""".stripMargin
-    },
-    // degree-oriented triangle counting over the part co-occurrence
-    // graph; clustering = one IEEE division on exact integer
-    // operands, NULL (not NaN) when deg < 2 on both sides
-    "q_graph_triangles" ->
-      """WITH so AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS sk FROM lineitem),
-        |e AS (SELECT DISTINCT x.sk AS a, y.sk AS b
-        |      FROM so x JOIN so y ON x.ok = y.ok AND x.sk < y.sk),
-        |sym AS (SELECT a AS src, b AS dst FROM e
-        |        UNION ALL SELECT b AS src, a AS dst FROM e),
-        |dg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
-        |       FROM sym GROUP BY 1),
-        |o AS (SELECT s.src, s.dst, d2.deg AS ddeg FROM sym s
-        |      JOIN dg d1 ON s.src = d1.node JOIN dg d2 ON s.dst = d2.node
-        |      WHERE d1.deg < d2.deg OR (d1.deg = d2.deg AND s.src < s.dst)),
-        |wg AS (SELECT e1.src AS u, e1.dst AS v, e2.dst AS wn
-        |       FROM o e1 JOIN o e2 ON e1.src = e2.src
-        |       WHERE e1.ddeg < e2.ddeg OR (e1.ddeg = e2.ddeg AND e1.dst < e2.dst)),
-        |t AS (SELECT u, v, wn FROM wg
-        |      WHERE EXISTS (SELECT 1 FROM o WHERE o.src = wg.v AND o.dst = wg.wn)),
-        |c AS (SELECT node, CAST(count(*) AS BIGINT) AS n_tri FROM (
-        |        SELECT u AS node FROM t
-        |        UNION ALL SELECT v FROM t
-        |        UNION ALL SELECT wn FROM t)
-        |      GROUP BY 1)
-        |SELECT d.node, d.deg, CAST(coalesce(c.n_tri, 0) AS BIGINT) AS n_tri,
-        |  CASE WHEN d.deg >= 2
-        |    THEN CAST(2 * coalesce(c.n_tri, 0) AS DOUBLE) / (d.deg * (d.deg - 1)) END
-        |    AS clustering
-        |FROM dg d LEFT JOIN c USING (node) ORDER BY d.node""".stripMargin,
-    // k_nn(k) degree mixing: per-degree node counts + mean neighbor
-    // degree as the x1e6 round-half-up fixed point
-    "q_graph_degree" ->
-      """WITH so AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS sk FROM lineitem),
-        |e AS (SELECT DISTINCT x.sk AS a, y.sk AS b
-        |      FROM so x JOIN so y ON x.ok = y.ok AND x.sk < y.sk),
-        |sym AS (SELECT a AS src, b AS dst FROM e
-        |        UNION ALL SELECT b AS src, a AS dst FROM e),
-        |dg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
-        |       FROM sym GROUP BY 1),
-        |nb AS (SELECT deg, CAST(count(*) AS BIGINT) AS n_nodes
-        |       FROM dg GROUP BY 1),
-        |j AS (SELECT d1.deg AS deg, CAST(count(*) AS BIGINT) AS cnt,
-        |        CAST(sum(d2.deg) AS BIGINT) AS sd
-        |      FROM sym s JOIN dg d1 ON s.src = d1.node
-        |                 JOIN dg d2 ON s.dst = d2.node
-        |      GROUP BY 1)
-        |SELECT nb.deg, nb.n_nodes,
-        |  (2 * j.sd * 1000000 + j.cnt) // (2 * j.cnt) AS knn_fp
-        |FROM nb JOIN j USING (deg) ORDER BY nb.deg""".stripMargin,
-    // per-edge common neighbors = per-edge triangle counts (same
-    // oriented enumeration, triangles exploded into their 3 unordered
-    // edges); jaccard as x1e6 round-half-up over exact BIGINTs; the
-    // top-5000 cut is deterministic under the (fp DESC, a, b) total
-    // order
-    "q_graph_jaccard" ->
-      """WITH so AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS sk FROM lineitem),
-        |e AS (SELECT DISTINCT x.sk AS a, y.sk AS b
-        |      FROM so x JOIN so y ON x.ok = y.ok AND x.sk < y.sk),
-        |sym AS (SELECT a AS src, b AS dst FROM e
-        |        UNION ALL SELECT b AS src, a AS dst FROM e),
-        |dg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
-        |       FROM sym GROUP BY 1),
-        |o AS (SELECT s.src, s.dst, d2.deg AS ddeg FROM sym s
-        |      JOIN dg d1 ON s.src = d1.node JOIN dg d2 ON s.dst = d2.node
-        |      WHERE d1.deg < d2.deg OR (d1.deg = d2.deg AND s.src < s.dst)),
-        |wg AS (SELECT e1.src AS u, e1.dst AS v, e2.dst AS wn
-        |       FROM o e1 JOIN o e2 ON e1.src = e2.src
-        |       WHERE e1.ddeg < e2.ddeg OR (e1.ddeg = e2.ddeg AND e1.dst < e2.dst)),
-        |t AS (SELECT u, v, wn FROM wg
-        |      WHERE EXISTS (SELECT 1 FROM o WHERE o.src = wg.v AND o.dst = wg.wn)),
-        |pc AS (SELECT pa AS a, pb AS b, CAST(count(*) AS BIGINT) AS common FROM (
-        |         SELECT least(u, v) AS pa, greatest(u, v) AS pb FROM t
-        |         UNION ALL SELECT least(u, wn), greatest(u, wn) FROM t
-        |         UNION ALL SELECT least(v, wn), greatest(v, wn) FROM t)
-        |       GROUP BY 1, 2)
-        |SELECT e.a, e.b, coalesce(pc.common, 0) AS common,
-        |  da.deg AS deg_a, db.deg AS deg_b,
-        |  (2 * coalesce(pc.common, 0) * 1000000 + (da.deg + db.deg - coalesce(pc.common, 0)))
-        |    // (2 * (da.deg + db.deg - coalesce(pc.common, 0))) AS jaccard_fp
-        |FROM e LEFT JOIN pc ON pc.a = e.a AND pc.b = e.b
-        |  JOIN dg da ON da.node = e.a JOIN dg db ON db.node = e.b
-        |ORDER BY jaccard_fp DESC, e.a, e.b LIMIT 5000""".stripMargin,
-    // Adamic-Adar: per-edge sum of round(1e9/ln(deg)) over common
-    // neighbors (= wedge centers of the same oriented triangle
-    // enumeration); one libm ln per center on an exact integer input
-    // (the q_dsir fixed-point rule)
-    "q_graph_adamic" ->
-      """WITH so AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS sk FROM lineitem),
-        |e AS (SELECT DISTINCT x.sk AS a, y.sk AS b
-        |      FROM so x JOIN so y ON x.ok = y.ok AND x.sk < y.sk),
-        |sym AS (SELECT a AS src, b AS dst FROM e
-        |        UNION ALL SELECT b AS src, a AS dst FROM e),
-        |dg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
-        |       FROM sym GROUP BY 1),
-        |o AS (SELECT s.src, s.dst, d2.deg AS ddeg FROM sym s
-        |      JOIN dg d1 ON s.src = d1.node JOIN dg d2 ON s.dst = d2.node
-        |      WHERE d1.deg < d2.deg OR (d1.deg = d2.deg AND s.src < s.dst)),
-        |wg AS (SELECT e1.src AS u, e1.dst AS v, e2.dst AS wn
-        |       FROM o e1 JOIN o e2 ON e1.src = e2.src
-        |       WHERE e1.ddeg < e2.ddeg OR (e1.ddeg = e2.ddeg AND e1.dst < e2.dst)),
-        |t AS (SELECT u, v, wn FROM wg
-        |      WHERE EXISTS (SELECT 1 FROM o WHERE o.src = wg.v AND o.dst = wg.wn)),
-        |tc AS (SELECT pa AS a, pb AS b, c FROM (
-        |         SELECT least(u, v) AS pa, greatest(u, v) AS pb, wn AS c FROM t
-        |         UNION ALL SELECT least(u, wn), greatest(u, wn), v FROM t
-        |         UNION ALL SELECT least(v, wn), greatest(v, wn), u FROM t)),
-        |pc AS (SELECT a, b, CAST(count(*) AS BIGINT) AS common,
-        |         CAST(sum(CAST(round(1e9 / ln(d.deg)) AS BIGINT)) AS BIGINT) AS aa_fp
-        |       FROM tc JOIN dg d ON tc.c = d.node GROUP BY 1, 2)
-        |SELECT e.a, e.b, coalesce(pc.common, 0) AS common,
-        |  CAST(coalesce(pc.aa_fp, 0) AS BIGINT) AS aa_fp
-        |FROM e LEFT JOIN pc ON pc.a = e.a AND pc.b = e.b
-        |ORDER BY aa_fp DESC, e.a, e.b LIMIT 5000""".stripMargin,
-    // HITS: unrolled half-step CTEs (auth-raw / auth / hub-raw / hub
-    // per iteration), max-normalized x1e6 fixed point — all-positive
-    // integer ops so // and div agree; sums CAST BIGINT (HUGEINT)
-    "q_graph_hits" -> {
-      val iters = 4
-      val steps = (1 to iters).map { i =>
-        val hp = s"h${i - 1}"
-        s"""ar$i AS (SELECT e.dst, CAST(sum(h.hub) AS BIGINT) AS raw
-           |        FROM e JOIN $hp h ON e.src = h.node GROUP BY 1),
-           |a$i AS (SELECT n.node,
-           |          CAST((coalesce(ar.raw, 0) * 1000000)
-           |               // max(ar.raw) OVER () AS BIGINT) AS auth
-           |        FROM n LEFT JOIN ar$i ar ON n.node = ar.dst),
-           |hr$i AS (SELECT e.src, CAST(sum(a.auth) AS BIGINT) AS raw
-           |        FROM e JOIN a$i a ON e.dst = a.node GROUP BY 1),
-           |h$i AS (SELECT n.node,
-           |          CAST((coalesce(hr.raw, 0) * 1000000)
-           |               // max(hr.raw) OVER () AS BIGINT) AS hub
-           |        FROM n LEFT JOIN hr$i hr ON n.node = hr.src)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS src,
-         |                's' || CAST(l.l_suppkey AS VARCHAR) AS dst
-         |           FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-         |n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-         |h0 AS (SELECT node, CAST(1000000 AS BIGINT) AS hub FROM n),
-         |$steps
-         |SELECT h.node, h.hub AS hub_fp, a.auth AS auth_fp,
-         |  CAST(h.hub AS DOUBLE) / 1e6 AS hub,
-         |  CAST(a.auth AS DOUBLE) / 1e6 AS auth
-         |FROM h$iters h JOIN a$iters a ON h.node = a.node
-         |ORDER BY h.node""".stripMargin
-    },
-    "q_pagerank" -> {
-      val iters = 3
-      val steps = (1 to iters).map { i =>
-        val prev = if (i == 1) "r0" else s"r${i - 1}"
-        s"""r$i AS (SELECT node,
-           |  CAST(150000000000 // (SELECT n FROM nn)
-           |       + (85 * s) // 100 AS BIGINT) AS fp
-           |FROM (SELECT e.dst AS node, sum(r.fp // d.deg) AS s
-           |      FROM e JOIN $prev r ON e.src = r.node
-           |             JOIN dg d ON e.src = d.src
-           |      GROUP BY e.dst))""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e0 AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS a,
-         |                   's' || CAST(l.l_suppkey AS VARCHAR) AS b
-         |            FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-         |e AS (SELECT a AS src, b AS dst FROM e0
-         |      UNION ALL SELECT b AS src, a AS dst FROM e0),
-         |dg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY 1),
-         |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM dg),
-         |r0 AS (SELECT src AS node,
-         |         CAST(1000000000000 // (SELECT n FROM nn) AS BIGINT) AS fp
-         |       FROM dg),
-         |$steps
-         |SELECT r.node, d.deg, r.fp AS rank_fp,
-         |  CAST(r.fp AS DOUBLE) / 1e12 AS rank
-         |FROM r$iters r JOIN dg d ON r.node = d.src
-         |ORDER BY r.node""".stripMargin
-    },
-    // Multi-source BFS hop labeling: unrolled frontier-expansion CTEs,
-    // one (reached / fresh / visited / frontier) quadruple per level;
-    // min-hop needs no tie-break (first level to reach a node IS its
-    // minimum hop); unreached nodes report -1 via the final left join.
-    "q_graph_hops" -> {
-      val maxHops = 4
-      val steps = (1 to maxHops).map { i =>
-        val (dp, fp) = (s"d${i - 1}", s"f${i - 1}")
-        s"""r$i AS (SELECT DISTINCT e.dst AS node FROM e JOIN $fp f ON e.src = f.node),
-           |x$i AS (SELECT r.node, CAST($i AS BIGINT) AS hop FROM r$i r
-           |        LEFT JOIN $dp d ON r.node = d.node WHERE d.node IS NULL),
-           |d$i AS (SELECT * FROM $dp UNION ALL SELECT * FROM x$i),
-           |f$i AS (SELECT node FROM x$i)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e0 AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS a,
-         |                  's' || CAST(l.l_suppkey AS VARCHAR) AS b
-         |           FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-         |e AS (SELECT a AS src, b AS dst FROM e0
-         |      UNION ALL SELECT b AS src, a AS dst FROM e0),
-         |nd AS (SELECT DISTINCT src AS node FROM e),
-         |d0 AS (SELECT node, CAST(0 AS BIGINT) AS hop FROM nd
-         |       WHERE node LIKE 's%' AND CAST(substr(node, 2) AS BIGINT) % 100 = 0),
-         |f0 AS (SELECT node FROM d0),
-         |$steps
-         |SELECT nd.node, CAST(coalesce(d.hop, -1) AS BIGINT) AS hop
-         |FROM nd LEFT JOIN d$maxHops d ON nd.node = d.node
-         |ORDER BY nd.node""".stripMargin
-    },
-    // Seeded PageRank: teleport only to the seed suppliers (CASE on
-    // the seed flag), nodes kept alive by the left join so unreached
-    // nodes report exactly 0; same all-integer fixed-point contract.
-    "q_pagerank_seed" -> {
-      val iters = 3
-      val steps = (1 to iters).map { i =>
-        val prev = if (i == 1) "r0" else s"r${i - 1}"
-        s"""r$i AS (SELECT nd.node,
-           |  CAST((CASE WHEN nd.seed THEN 150000000000 // (SELECT n FROM ns) ELSE 0 END)
-           |       + (85 * coalesce(c.s, 0)) // 100 AS BIGINT) AS fp
-           |FROM nd LEFT JOIN (SELECT e.dst AS node, sum(r.fp // dg.deg) AS s
-           |                   FROM e JOIN $prev r ON e.src = r.node
-           |                          JOIN dg ON e.src = dg.src
-           |                   GROUP BY e.dst) c ON nd.node = c.node)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e0 AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS a,
-         |                  's' || CAST(l.l_suppkey AS VARCHAR) AS b
-         |           FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-         |e AS (SELECT a AS src, b AS dst FROM e0
-         |      UNION ALL SELECT b AS src, a AS dst FROM e0),
-         |dg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY 1),
-         |nd AS (SELECT src AS node, deg,
-         |         (src LIKE 's%' AND CAST(substr(src, 2) AS BIGINT) % 100 = 0) AS seed
-         |       FROM dg),
-         |ns AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nd WHERE seed),
-         |r0 AS (SELECT node, CASE WHEN seed
-         |         THEN CAST(1000000000000 // (SELECT n FROM ns) AS BIGINT)
-         |         ELSE CAST(0 AS BIGINT) END AS fp
-         |       FROM nd),
-         |$steps
-         |SELECT r.node, nd.seed, r.fp AS rank_fp,
-         |  CAST(r.fp AS DOUBLE) / 1e12 AS rank
-         |FROM r$iters r JOIN nd ON r.node = nd.node
-         |ORDER BY r.node""".stripMargin
-    },
-    // Directed PageRank with dangling-mass redistribution: suppliers
-    // are sinks (outdeg 0); each step collects their total fp into a
-    // one-row dangling aggregate and every node receives dm // N on
-    // top of its in-edge contributions. Same all-integer fixed-point
-    // contract — final CASTs normalize DuckDB's HUGEINT sums back to
-    // BIGINT so both engines carry identical longs.
-    "q_pagerank_dir" -> {
-      val iters = 3
-      val steps = (1 to iters).map { i =>
-        val prev = if (i == 1) "r0" else s"r${i - 1}"
-        s"""d$i AS (SELECT CAST(coalesce(sum(r.fp), 0) AS BIGINT) AS dm
-           |  FROM $prev r JOIN nd ON r.node = nd.node WHERE nd.deg = 0),
-           |r$i AS (SELECT nd.node,
-           |  CAST(150000000000 // (SELECT n FROM nn)
-           |       + (85 * (coalesce(c.s, 0)
-           |                + (SELECT dm FROM d$i) // (SELECT n FROM nn))) // 100
-           |       AS BIGINT) AS fp
-           |FROM nd LEFT JOIN (SELECT e.dst AS node, sum(r.fp // dg.deg) AS s
-           |                   FROM e JOIN $prev r ON e.src = r.node
-           |                          JOIN dg ON e.src = dg.src
-           |                   GROUP BY e.dst) c ON nd.node = c.node)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS src,
-         |                  's' || CAST(l.l_suppkey AS VARCHAR) AS dst
-         |           FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-         |dg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY 1),
-         |nd AS (SELECT n.node, CAST(coalesce(dg.deg, 0) AS BIGINT) AS deg
-         |       FROM (SELECT src AS node FROM e UNION SELECT dst FROM e) n
-         |       LEFT JOIN dg ON n.node = dg.src),
-         |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nd),
-         |r0 AS (SELECT node,
-         |         CAST(1000000000000 // (SELECT n FROM nn) AS BIGINT) AS fp
-         |       FROM nd),
-         |$steps
-         |SELECT r.node, nd.deg AS out_deg, r.fp AS rank_fp,
-         |  CAST(r.fp AS DOUBLE) / 1e12 AS rank
-         |FROM r$iters r JOIN nd ON r.node = nd.node
-         |ORDER BY r.node""".stripMargin
-    },
-    // char entropy: per-(doc,char) contributions are fixed-point longs
-    // (exact sum, order-free); final H is one deterministic double
-    // expression; + 0.0 normalizes −0.0 at the single-char boundary
-    "q_entropy" ->
-      """WITH ch AS (SELECT doc_id, unnest(string_split(text, '')) AS c
-        |            FROM documents WHERE text IS NOT NULL),
-        |cc AS (SELECT doc_id, c, count(*) AS n FROM ch WHERE c <> '' GROUP BY 1, 2),
-        |a AS (SELECT doc_id,
-        |        CAST(sum(n) AS BIGINT) AS n_chars,
-        |        CAST(count(*) AS BIGINT) AS n_uniq_chars,
-        |        sum(CAST(round(CAST(n AS DOUBLE) * ln(CAST(n AS DOUBLE)) * 1e12) AS BIGINT)) AS s
-        |      FROM cc GROUP BY 1)
-        |SELECT d.doc_id,
-        |  CASE WHEN d.text IS NULL THEN NULL ELSE coalesce(a.n_chars, 0) END AS n_chars,
-        |  CASE WHEN d.text IS NULL THEN NULL ELSE coalesce(a.n_uniq_chars, 0) END AS n_uniq_chars,
-        |  CASE WHEN a.n_chars > 0 THEN
-        |    round(ln(CAST(a.n_chars AS DOUBLE)) - CAST(a.s AS DOUBLE) / 1e12 / a.n_chars, 6) + 0.0
-        |  END AS char_entropy
-        |FROM documents d LEFT JOIN a ON d.doc_id = a.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    // deterministic shard shuffle: the 8-hex-char draw is the
-    // pseudo-random order key; seq = per-shard row_number (ties
-    // impossible: doc_id breaks them)
-    "q_shuffle_shards" -> {
-      val draw8 = duckHashDraw(8)
-      s"""WITH d AS (SELECT doc_id, $draw8 AS rkey FROM documents)
-         |SELECT doc_id, rkey % 8 AS shard,
-         |  CAST(row_number() OVER (PARTITION BY rkey % 8 ORDER BY rkey, doc_id)
-         |    AS BIGINT) AS seq,
-         |  rkey
-         |FROM d ORDER BY doc_id""".stripMargin
-    },
-    // DP Laplace release: integer nibble draw over md5(lang), sign
-    // from the raw draw, x1e6-quantized ln, 2^-32 floor on mag
-    "q_dp_hist" -> {
-      val draw = duckHexValue("md5(lang)", 1, 8)
-      s"""WITH pl AS (SELECT lang, CAST(count(*) AS BIGINT) AS n
-         |    FROM documents WHERE lang IS NOT NULL GROUP BY 1),
-         |dr AS (SELECT lang, n, $draw AS draw FROM pl),
-         |nz AS (SELECT lang, n,
-         |    CAST(CASE WHEN draw >= 2147483648 THEN 1 ELSE -1 END AS BIGINT) AS sgn,
-         |    greatest(1.0 - 2.0 * abs(draw / 4294967296.0 - 0.5),
-         |             1.0 / 4294967296.0) AS mag
-         |  FROM dr)
-         |SELECT lang, n,
-         |  sgn * CAST(round(-ln(mag) * 1000000.0) AS BIGINT) AS noise_fp,
-         |  n * 1000000 + sgn * CAST(round(-ln(mag) * 1000000.0) AS BIGINT)
-         |    AS noisy_n_fp
-         |FROM nz ORDER BY lang""".stripMargin
-    },
-    // k-anonymity audit: one group-size agg over the quasi-identifier
-    // pair; risk_fp is the positive-operand round-half-up fixed point
-    // (// == div on positives)
-    "q_kanon" ->
-      """SELECT c_nationkey, c_mktsegment, CAST(count(*) AS BIGINT) AS n,
-        |  count(*) < 10 AS violates_k,
-        |  (2 * 1000000 + CAST(count(*) AS BIGINT))
-        |    // (2 * CAST(count(*) AS BIGINT)) AS risk_fp
-        |FROM customer GROUP BY 1, 2
-        |ORDER BY c_nationkey, c_mktsegment""".stripMargin,
-    // l-diversity: DECIMAL cents (money rule), FLOOR-division band.
-    // DuckDB's integer // truncates toward zero just like Spark div
-    // (-7 // 2 = -3, measured — only its FLOAT // floors), so floor is
-    // spelled sign-separated as -ceil(|x|/d) on the negative side;
-    // the Spark side subtracts pmod first. Two-level agg.
-    "q_ldiversity" ->
-      """WITH sv AS (
-        |  SELECT c_nationkey, c_mktsegment,
-        |    CASE WHEN cents >= 0 THEN cents // 100000
-        |         ELSE -((-cents + 99999) // 100000) END AS bal_band
-        |  FROM (SELECT c_nationkey, c_mktsegment,
-        |          CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        |        FROM customer)),
-        |cell AS (SELECT c_nationkey, c_mktsegment, bal_band,
-        |    CAST(count(*) AS BIGINT) AS n_sv
-        |  FROM sv GROUP BY 1, 2, 3)
-        |SELECT c_nationkey, c_mktsegment, CAST(sum(n_sv) AS BIGINT) AS n,
-        |  CAST(count(*) AS BIGINT) AS distinct_sensitive,
-        |  CAST(count(*) AS BIGINT) < 6 AS violates_l
-        |FROM cell GROUP BY 1, 2
-        |ORDER BY c_nationkey, c_mktsegment""".stripMargin,
-    // Efraimidis-Spirakis exact-k weighted sampling: deterministic
-    // doc_id draw, x1e9-quantized -ln(u), round-half-up key over the
-    // length weight, total-order cut
-    "q_sample_es" -> {
-      val draw8 = duckHashDraw(8)
-      s"""WITH dr AS (SELECT doc_id, lang, n_chars, $draw8 AS draw
-         |    FROM documents WHERE n_chars > 0),
-         |ln0 AS (SELECT doc_id, lang, n_chars,
-         |    CAST(round(-ln(greatest(draw / 4294967296.0,
-         |      1.0 / 4294967296.0)) * 1000000000.0) AS BIGINT) AS lnu_fp
-         |  FROM dr)
-         |SELECT doc_id, lang, n_chars,
-         |  (2 * lnu_fp * 1000000 + n_chars) // (2 * n_chars) AS key_fp
-         |FROM ln0 ORDER BY key_fp, doc_id LIMIT 50""".stripMargin
-    },
-    // DP median via the exponential mechanism (Gumbel-max): integer
-    // twice-utility from the cumulative band ranks; inner ln quantized
-    // x1e9 BEFORE the outer ln (composition amplifies a 1-ulp inner
-    // divergence), outer x1e6; deterministic md5 draw per band
-    "q_dp_quantile" -> {
-      val draw = duckHexValue("md5(CAST(bal_band AS VARCHAR))", 1, 8)
-      s"""WITH cell AS MATERIALIZED (
-         |  SELECT CASE WHEN cents >= 0 THEN cents // 100000
-         |         ELSE -((-cents + 99999) // 100000) END AS bal_band,
-         |    CAST(count(*) AS BIGINT) AS n_b
-         |  FROM (SELECT CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
-         |          AS cents FROM customer)
-         |  GROUP BY 1),
-         |tot AS (SELECT CAST(sum(n_b) AS BIGINT) AS n FROM cell),
-         |sp AS (SELECT bal_band, n_b,
-         |    CAST(sum(n_b) OVER (ORDER BY bal_band) AS BIGINT) AS cum,
-         |    $draw AS draw
-         |  FROM cell),
-         |sc AS (SELECT bal_band, n_b, -abs(2 * cum - n) AS u2,
-         |    greatest(1, CAST(round(-ln(greatest(draw / 4294967296.0,
-         |      1.0 / 4294967296.0)) * 1000000000.0) AS BIGINT)) AS y_fp
-         |  FROM sp CROSS JOIN tot),
-         |s2 AS (SELECT bal_band, n_b, u2,
-         |    CAST(-round(ln(y_fp / 1000000000.0) * 1000000.0) AS BIGINT)
-         |      AS gumbel_fp
-         |  FROM sc),
-         |s3 AS (SELECT *, u2 * 250000 + gumbel_fp AS score_fp FROM s2),
-         |best AS MATERIALIZED (SELECT bal_band AS best_band FROM s3
-         |  ORDER BY score_fp DESC, bal_band ASC LIMIT 1)
-         |SELECT bal_band, n_b, u2, gumbel_fp, score_fp,
-         |  bal_band = (SELECT best_band FROM best) AS released
-         |FROM s3 ORDER BY bal_band""".stripMargin
-    },
-    // DP top-k: one-shot exponential mechanism via per-cell Gumbel
-    // noise (same quantize-inner-ln-first composition as
-    // q_dp_quantile); threshold = k-th best score from the scored
-    // CTE, released on score >= threshold
-    "q_dp_topk" -> {
-      val draw = duckHexValue("md5(lang || ':' || source)", 1, 8)
-      s"""WITH cell AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS n
-         |  FROM documents
-         |  WHERE lang IS NOT NULL AND source IS NOT NULL GROUP BY 1, 2),
-         |sc AS (SELECT lang, source, n,
-         |    greatest(1, CAST(round(-ln(greatest($draw / 4294967296.0,
-         |      1.0 / 4294967296.0)) * 1000000000.0) AS BIGINT)) AS y_fp
-         |  FROM cell),
-         |s2 AS MATERIALIZED (SELECT lang, source, n,
-         |    CAST(-round(ln(y_fp / 1000000000.0) * 1000000.0) AS BIGINT)
-         |      AS gumbel_fp,
-         |    n * 2000000 +
-         |      CAST(-round(ln(y_fp / 1000000000.0) * 1000000.0) AS BIGINT)
-         |      AS score_fp
-         |  FROM sc),
-         |thr AS (SELECT min(score_fp) AS thr_fp FROM (
-         |  SELECT score_fp FROM s2
-         |  ORDER BY score_fp DESC, lang, source LIMIT 5))
-         |SELECT lang, source, n, gumbel_fp, score_fp,
-         |  score_fp >= (SELECT thr_fp FROM thr) AS released
-         |FROM s2 ORDER BY lang, source""".stripMargin
-    },
-    // t-closeness: ordered-domain EMD as all-integer cross-multiplied
-    // cumulative diffs over a dense class x band spine; the 4x-read
-    // cell CTE and the totals are MATERIALIZED (DuckDB re-inlines per
-    // reference); positive-operand round-half-up fixed point
-    "q_tcloseness" ->
-      """WITH cell AS MATERIALIZED (
-        |  SELECT c_nationkey, c_mktsegment,
-        |    CASE WHEN cents >= 0 THEN cents // 100000
-        |         ELSE -((-cents + 99999) // 100000) END AS bal_band,
-        |    CAST(count(*) AS BIGINT) AS nb
-        |  FROM (SELECT c_nationkey, c_mktsegment,
-        |          CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        |        FROM customer)
-        |  GROUP BY 1, 2, 3),
-        |cls AS (SELECT c_nationkey, c_mktsegment, CAST(sum(nb) AS BIGINT) AS n
-        |  FROM cell GROUP BY 1, 2),
-        |gb AS (SELECT bal_band, CAST(sum(nb) AS BIGINT) AS g FROM cell GROUP BY 1),
-        |tot AS MATERIALIZED (SELECT CAST(sum(nb) AS BIGINT) AS big_n,
-        |  CAST(count(DISTINCT bal_band) AS BIGINT) AS n_bands FROM cell),
-        |spine AS (SELECT cls.c_nationkey, cls.c_mktsegment, cls.n,
-        |    gb.bal_band, gb.g, coalesce(cell.nb, 0) AS nb
-        |  FROM cls CROSS JOIN gb
-        |  LEFT JOIN cell USING (c_nationkey, c_mktsegment, bal_band)),
-        |cum AS (SELECT c_nationkey, c_mktsegment, n,
-        |    CAST(sum(nb) OVER (PARTITION BY c_nationkey, c_mktsegment
-        |      ORDER BY bal_band) AS BIGINT) AS cn,
-        |    CAST(sum(g) OVER (PARTITION BY c_nationkey, c_mktsegment
-        |      ORDER BY bal_band) AS BIGINT) AS cg
-        |  FROM spine),
-        |emd AS (SELECT c_nationkey, c_mktsegment, max(n) AS n,
-        |    CAST(sum(abs(cn * big_n - cg * n)) AS BIGINT) AS diff,
-        |    max(big_n) AS big_n, max(n_bands) AS n_bands
-        |  FROM cum CROSS JOIN tot GROUP BY 1, 2)
-        |SELECT c_nationkey, c_mktsegment, n,
-        |  (2 * 1000000 * diff + n * big_n * greatest(n_bands - 1, 1))
-        |    // (2 * n * big_n * greatest(n_bands - 1, 1)) AS t_fp,
-        |  (2 * 1000000 * diff + n * big_n * greatest(n_bands - 1, 1))
-        |    // (2 * n * big_n * greatest(n_bands - 1, 1)) > 200000 AS violates_t
-        |FROM emd ORDER BY c_nationkey, c_mktsegment""".stripMargin,
-    // shard-mix audit: same draw, (shard, lang) cells, integer
-    // cross-multiplied per-mille deviation, max per shard
-    "q_shard_quality" -> {
-      val draw8 = duckHashDraw(8)
-      s"""WITH c AS (SELECT ($draw8) % 8 AS shard, lang,
-         |      CAST(count(*) AS BIGINT) AS n_sl
-         |    FROM documents WHERE lang IS NOT NULL GROUP BY 1, 2),
-         |bs AS (SELECT shard, CAST(sum(n_sl) AS BIGINT) AS n_s,
-         |         CAST(count(*) AS BIGINT) AS n_langs FROM c GROUP BY 1),
-         |bl AS (SELECT lang, CAST(sum(n_sl) AS BIGINT) AS n_l FROM c GROUP BY 1),
-         |tt AS (SELECT CAST(sum(n_sl) AS BIGINT) AS n_total FROM c),
-         |dev AS (SELECT c.shard, bs.n_s, bs.n_langs,
-         |    (2 * 1000 * abs(c.n_sl * n_total - bl.n_l * bs.n_s) + bs.n_s * n_total)
-         |      // (2 * bs.n_s * n_total) AS dev_mille
-         |  FROM c JOIN bl USING (lang) JOIN bs USING (shard), tt)
-         |SELECT shard, n_s AS n_docs, n_langs,
-         |  CAST(max(dev_mille) AS BIGINT) AS max_dev_mille
-         |FROM dev GROUP BY shard, n_s, n_langs ORDER BY shard""".stripMargin
-    },
-    // shard manifests: same doc_id draw as q_shuffle_shards; content
-    // checksum = bit_xor of 60-bit md5(text) fingerprints (order-free;
-    // a BIGINT SUM would overflow into HUGEINT divergence — the
-    // q_corpus_report round-8 lesson); every aggregate cast to BIGINT
-    // Morton interleave as 32 generated shift/mask terms; keys scaled
-    // to a fixed 16-bit domain by the data maxima with exact integer
-    // division — identical codes in both engines at every sf
-    "q_zorder" -> {
-      val terms = (0 until 16).map { i =>
-        s"((((p16 >> $i) & 1) << ${2 * i + 1}) + (((s16 >> $i) & 1) << ${2 * i}))"
-      }.mkString(" + ")
-      s"""WITH mx AS (SELECT max(l_partkey) AS pmax, max(l_suppkey) AS smax FROM lineitem),
-         |sc AS (SELECT l_partkey AS p, l_suppkey AS sk,
-         |         (l_partkey * 65535) // greatest(pmax, 1) AS p16,
-         |         (l_suppkey * 65535) // greatest(smax, 1) AS s16
-         |       FROM lineitem, mx),
-         |zz AS (SELECT p, sk, $terms AS z FROM sc)
-         |SELECT z >> 26 AS bucket, CAST(count(*) AS BIGINT) AS n,
-         |  min(p) AS p_min, max(p) AS p_max, min(sk) AS s_min, max(sk) AS s_max,
-         |  max(p) - min(p) + 1 AS p_span, max(sk) - min(sk) + 1 AS s_span
-         |FROM zz GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-    "q_shard_manifest" -> {
-      val draw8 = duckHashDraw(8)
-      val cfp = duckHexValue("md5(text)", 1, 15)
-      s"""WITH d AS (
-         |  SELECT doc_id, $draw8 % 8 AS shard, $cfp AS cfp,
-         |    CASE WHEN text IS NOT NULL
-         |      THEN len(string_split(text, ' ')) END AS n_toks
-         |  FROM documents)
-         |SELECT shard, count(*) AS n_docs, count(cfp) AS n_content,
-         |  CAST(coalesce(sum(n_toks), 0) AS BIGINT) AS n_tokens,
-         |  CAST(coalesce(bit_xor(cfp), 0) AS BIGINT) AS checksum_xor,
-         |  min(cfp) AS fp_min, max(cfp) AS fp_max
-         |FROM d GROUP BY shard ORDER BY shard""".stripMargin
-    },
-    // curriculum staging: x1e10 quality fixed point ranked DESC
-    // (doc_id tiebreak), q_rfm position-formula stages, exact-long
-    // stage stats with the round-half-up mean
-    "q_curriculum" ->
-      s"""WITH per AS (SELECT doc_id,
-         |    CAST(round($duckQualityScore * 1e10) AS BIGINT) AS qf,
-         |    CAST(len(list_filter(string_split(text, ' '),
-         |      x -> len(x) > 0)) AS BIGINT) AS t
-         |  FROM documents WHERE text IS NOT NULL),
-         |p2 AS (SELECT doc_id, qf, t FROM per WHERE qf IS NOT NULL),
-         |r AS (SELECT qf, t,
-         |        CAST(row_number() OVER (ORDER BY qf DESC, doc_id) AS BIGINT) AS rn,
-         |        CAST(count(*) OVER () AS BIGINT) AS n
-         |      FROM p2),
-         |st AS (SELECT (rn - 1) * 4 // n + 1 AS stage, qf, t FROM r)
-         |SELECT stage, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(t) AS BIGINT) AS n_tokens,
-         |  min(qf) AS qf_min, max(qf) AS qf_max,
-         |  (2 * CAST(sum(qf) AS BIGINT) + count(*)) // (2 * count(*)) AS mean_qf
-         |FROM st GROUP BY 1 ORDER BY 1""".stripMargin,
-    // length-bucketed batching report: power-of-two bucket via the
-    // same branchless bit-smear both engines evaluate on exact longs;
-    // waste is (2a+d) div 2d round-half-up fixed point
-    "q_length_buckets" -> {
-      var smear = "(n - 1)"
-      Seq(1, 2, 4, 8, 16, 32).foreach { sh =>
-        smear = s"(($smear) | (($smear) >> $sh))"
-      }
-      s"""WITH t AS (
-         |  SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS n
-         |  FROM documents WHERE text IS NOT NULL),
-         |b AS (SELECT CASE WHEN n <= 1 THEN 1 ELSE $smear + 1 END AS bucket, n
-         |      FROM t),
-         |g AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_docs,
-         |        CAST(sum(n) AS BIGINT) AS n_tokens
-         |      FROM b GROUP BY bucket)
-         |SELECT bucket, n_docs, n_tokens,
-         |  CAST(bucket * n_docs AS BIGINT) AS padded_tokens,
-         |  CAST((2 * (bucket * n_docs - n_tokens) * 1000000 + bucket * n_docs)
-         |       // (2 * bucket * n_docs) AS BIGINT) AS waste_fp
-         |FROM g ORDER BY bucket""".stripMargin
-    },
-    // DSIR importance weights: one ln per token on an exact integer
-    // ratio (smoothed target/raw probabilities composed into a single
-    // rational, integer-multiply-then-cast), 1e9 fixed-point longs,
-    // exact per-doc sums; totals CAST to BIGINT (HUGEINT trap)
-    "q_dsir" -> {
-      val bucket = s"(${duckHexValue("md5(w)", 1, 15)}) % 1024"
-      s"""WITH tok AS (SELECT doc_id, ($duckQualityScore) >= 0.45 AS tgt,
-         |               unnest(string_split(text, ' ')) AS w
-         |             FROM documents),
-         |tk AS (SELECT doc_id, tgt, $bucket AS b FROM tok WHERE len(w) > 0),
-         |bs AS (SELECT b, CAST(count(*) AS BIGINT) AS r,
-         |         CAST(count(CASE WHEN tgt THEN 1 END) AS BIGINT) AS t
-         |       FROM tk GROUP BY b),
-         |tt AS (SELECT CAST(sum(r) AS BIGINT) AS bigR,
-         |              CAST(sum(t) AS BIGINT) AS bigT FROM bs),
-         |term AS (SELECT k.doc_id,
-         |    CAST(round(ln(
-         |      CAST((bs.t + 1) * ((SELECT bigR FROM tt) + 1024) AS DOUBLE) /
-         |      CAST((bs.r + 1) * ((SELECT bigT FROM tt) + 1024) AS DOUBLE)) * 1e9)
-         |      AS BIGINT) AS lfp
-         |  FROM tk k JOIN bs ON k.b = bs.b),
-         |p AS (SELECT doc_id, count(*) AS n_toks,
-         |        CAST(sum(lfp) AS BIGINT) AS llr_fp
-         |      FROM term GROUP BY doc_id),
-         |c AS (SELECT CAST(sum(llr_fp) AS BIGINT) AS totL,
-         |             CAST(sum(n_toks) AS BIGINT) AS totN FROM p)
-         |SELECT d.doc_id, CAST(coalesce(p.n_toks, 0) AS BIGINT) AS n_toks,
-         |  p.llr_fp, CAST(p.llr_fp AS DOUBLE) / 1e9 AS llr,
-         |  coalesce(p.llr_fp * (SELECT totN FROM c)
-         |           > (SELECT totL FROM c) * p.n_toks, false) AS selected
-         |FROM documents d LEFT JOIN p USING (doc_id) ORDER BY d.doc_id""".stripMargin
-    },
-    // n-gram novelty: per-doc distinct 3-gram df=1 fraction as a ×1e6
-    // round-half-up fixed-point BIGINT; list_distinct drops NULLs so
-    // null docs leave the gram stream exactly like the Spark
-    // isNotNull filter, and the left join re-emits them with NULLs
-    "q_ngram_novelty" ->
-      """WITH sh AS (
-        |  SELECT doc_id, CASE WHEN len(w) >= 3
-        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
-        |    ELSE [text] END AS shingles
-        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents)),
-        |g AS (SELECT doc_id, unnest(list_distinct(shingles)) AS gram FROM sh),
-        |gd AS (SELECT gram, count(*) AS df FROM g GROUP BY gram),
-        |p AS (SELECT doc_id, count(*) AS n_grams,
-        |        CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unique
-        |      FROM g JOIN gd USING (gram) GROUP BY doc_id)
-        |SELECT d.doc_id, CAST(coalesce(p.n_grams, 0) AS BIGINT) AS n_grams,
-        |  CAST(coalesce(p.n_unique, 0) AS BIGINT) AS n_unique,
-        |  CAST((2 * p.n_unique * 1000000 + p.n_grams) // (2 * p.n_grams) AS BIGINT)
-        |    AS novelty_fp
-        |FROM documents d LEFT JOIN p USING (doc_id) ORDER BY d.doc_id""".stripMargin,
-    // hashed linear classifier: the "weights" are a deterministic
-    // integer function of the 1024 md5 buckets (Knuth multiplicative
-    // scramble into [-1000,1000]), so the oracle materializes the
-    // identical model; score is one IEEE division on exact operands
-    "q_quality_classifier" -> {
-      val bucket = s"(${duckHexValue("md5(tok)", 1, 15)}) % 1024"
-      s"""WITH t AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
-         |           FROM documents),
-         |b AS (SELECT doc_id, $bucket AS bucket FROM t),
-         |p AS (SELECT doc_id, count(*) AS n_toks,
-         |        CAST(sum((bucket * 2654435761) % 2001 - 1000) AS BIGINT) AS score_sum
-         |      FROM b GROUP BY doc_id)
-         |SELECT d.doc_id,
-         |  CAST(coalesce(p.n_toks, 0) AS BIGINT) AS n_toks,
-         |  CAST(coalesce(p.score_sum, 0) AS BIGINT) AS score_sum,
-         |  CASE WHEN p.n_toks > 0 THEN CAST(p.score_sum AS DOUBLE) / p.n_toks END AS score,
-         |  coalesce(p.score_sum, 0) > 0 AS accept
-         |FROM documents d LEFT JOIN p USING (doc_id) ORDER BY d.doc_id""".stripMargin
-    },
-    // PII redaction over the deterministically-built access-log line
-    // (integer ids only — no float formatting); patterns live in the
-    // RE2 ∩ java.util.regex common subset; DuckDB needs the explicit
-    // 'g' flag for global replace (Spark regexp_replace is global)
-    "q_pii" ->
-      """WITH l AS (
-        |  SELECT event_id,
-        |    'user ' || CAST(user_id AS VARCHAR) || ' <u' || CAST(user_id AS VARCHAR)
-        |    || '@mail.example.com> did ' || event_type
-        |    || ' from 10.' || CAST(user_id % 256 AS VARCHAR)
-        |    || '.' || CAST(event_id % 256 AS VARCHAR)
-        |    || '.' || CAST((user_id + event_id) % 256 AS VARCHAR) AS line
-        |  FROM events)
-        |SELECT event_id,
-        |  CAST(len(regexp_extract_all(line, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+')) AS BIGINT) AS n_emails,
-        |  CAST(len(regexp_extract_all(line, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS n_ips,
-        |  CAST(len(regexp_extract_all(line, '\buser \d+\b')) AS BIGINT) AS n_user_ids,
-        |  regexp_replace(regexp_replace(regexp_replace(line,
-        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '[IP]', 'g'),
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+', '[EMAIL]', 'g'),
-        |    '\buser \d+\b', '[USER]', 'g') AS redacted
-        |FROM l ORDER BY event_id""".stripMargin,
-    // IVF is deterministic too (centroids = first 16 vectors): the
-    // E-step argmax, nprobe probe ranking, and final top-5 all order by
-    // (cosine DESC, id) — reproduced with ranked windows. E-step/probe
-    // ranks use the unrounded cosine on both sides, as the query does.
-    // SemDeDup: q_sim_ivf's deterministic assignment CTE, then
-    // within-cell pairs on round(cosine,6) > 0.35 and the greedy
-    // lowest-id-representative keep rule
-    "q_dedup_semantic" ->
-      """WITH cent AS (
-        |  SELECT vec_id AS cent_id, embedding AS cv FROM embeddings
-        |  WHERE vec_id < 16 AND embedding IS NOT NULL AND len(embedding) > 0),
-        |assigned AS (
-        |  SELECT vec_id, embedding, cent_id AS cell FROM (
-        |    SELECT e.vec_id, e.embedding, c.cent_id,
-        |      row_number() OVER (PARTITION BY e.vec_id
-        |        ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cv::DOUBLE[]) DESC,
-        |                 c.cent_id) AS rn
-        |    FROM embeddings e, cent c)
-        |  WHERE rn = 1),
-        |p AS (
-        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-        |  FROM assigned a JOIN assigned b
-        |    ON a.cell = b.cell AND a.vec_id < b.vec_id
-        |  WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) > 0.35),
-        |g AS (SELECT vec_b AS vec_id, CAST(count(*) AS BIGINT) AS n_dups,
-        |        min(vec_a) AS rep_id
-        |      FROM p GROUP BY 1)
-        |SELECT a.vec_id, a.cell, CAST(coalesce(g.n_dups, 0) AS BIGINT) AS n_dups,
-        |  coalesce(g.rep_id, a.vec_id) AS rep_id, g.rep_id IS NULL AS kept
-        |FROM assigned a LEFT JOIN g USING (vec_id) ORDER BY a.vec_id""".stripMargin,
-    // Greedy MMR: the identical sequential chain as k generated CTE
-    // steps (the BPE m1..mK precedent) — each s_i is ONE row, so the
-    // max-sim-to-selected is a greatest() over i-1 correlated scalar
-    // subqueries, and every step is pinned AS MATERIALIZED
-    "q_select_mmr" -> duckMmrSql(8),
-    // IVF index health: the q_sim_ivf assignment window also carries
-    // the winning cosine; floor(c*1e6+0.5) is the engine-identical
-    // quantizer (double round() would be half-even vs HALF_UP)
-    "q_ivf_balance" ->
-      """WITH cent AS (
-        |  SELECT vec_id AS cent_id, embedding AS cv FROM embeddings
-        |  WHERE vec_id < 16 AND embedding IS NOT NULL AND len(embedding) > 0),
-        |a AS (
-        |  SELECT vec_id, cent_id AS cell,
-        |    CAST(floor(c * 1e6 + 0.5) AS BIGINT) AS cos_fp
-        |  FROM (
-        |    SELECT e.vec_id, c.cent_id,
-        |      list_cosine_similarity(e.embedding::DOUBLE[], c.cv::DOUBLE[]) AS c,
-        |      row_number() OVER (PARTITION BY e.vec_id
-        |        ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cv::DOUBLE[]) DESC,
-        |                 c.cent_id) AS rn
-        |    FROM embeddings e, cent c
-        |    WHERE e.embedding IS NOT NULL AND len(e.embedding) > 0)
-        |  WHERE rn = 1),
-        |g AS MATERIALIZED (SELECT cell, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(cos_fp) AS BIGINT) AS sc FROM a GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS t, CAST(max(n) AS BIGINT) AS mx,
-        |        CAST(count(*) AS BIGINT) AS nc FROM g)
-        |SELECT c.cent_id AS cell, CAST(coalesce(g.n, 0) AS BIGINT) AS n,
-        |  CASE WHEN g.n IS NOT NULL THEN (2 * g.sc + g.n) // (2 * g.n) END AS mean_cos_fp,
-        |  (2 * coalesce(g.n, 0) * 1000000 + t) // (2 * t) AS share_fp,
-        |  (2 * mx * nc * 1000000 + t) // (2 * t) AS imbalance_fp
-        |FROM cent c LEFT JOIN g ON g.cell = c.cent_id, tot
-        |ORDER BY cell""".stripMargin,
-    "q_sim_ivf" ->
-      """WITH cent AS (
-        |  SELECT vec_id AS cent_id, embedding AS cv FROM embeddings
-        |  WHERE vec_id < 16 AND embedding IS NOT NULL AND len(embedding) > 0),
-        |assigned AS (
-        |  SELECT vec_id, embedding, cent_id AS cell FROM (
-        |    SELECT e.vec_id, e.embedding, c.cent_id,
-        |      row_number() OVER (PARTITION BY e.vec_id
-        |        ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cv::DOUBLE[]) DESC,
-        |                 c.cent_id) AS rn
-        |    FROM embeddings e, cent c)
-        |  WHERE rn = 1),
-        |probes AS (
-        |  SELECT query_id, qv, cent_id AS cell FROM (
-        |    SELECT q.vec_id AS query_id, q.embedding AS qv, c.cent_id,
-        |      row_number() OVER (PARTITION BY q.vec_id
-        |        ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.cv::DOUBLE[]) DESC,
-        |                 c.cent_id) AS rn
-        |    FROM embeddings q, cent c WHERE q.vec_id < 10)
-        |  WHERE rn <= 4)
-        |SELECT query_id, neighbor_id, cosine, rank FROM (
-        |  SELECT p.query_id, a.vec_id AS neighbor_id,
-        |    round(list_cosine_similarity(p.qv::DOUBLE[], a.embedding::DOUBLE[]), 6) AS cosine,
-        |    row_number() OVER (PARTITION BY p.query_id
-        |      ORDER BY round(list_cosine_similarity(p.qv::DOUBLE[], a.embedding::DOUBLE[]), 6) DESC,
-        |               a.vec_id) AS rank
-        |  FROM probes p JOIN assigned a ON a.cell = p.cell
-        |  WHERE a.vec_id <> p.query_id)
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // Sparse cosine: q_tfidf's tf/df CTEs, weights quantized to x1e6
-    // BIGINTs before any sum (order-free exact dots/norms), one
-    // double cosine per pair mirrored token-for-token
-    "q_sim_sparse" ->
-      """WITH w AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf
-        |       FROM w WHERE length(term) > 0 GROUP BY 1, 2),
-        |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |n AS (SELECT count(*) AS n FROM documents),
-        |wfp AS (
-        |  SELECT doc_id, tf.term,
-        |    CAST(round(round(tf * ln((n.n + 1.0) / (df.df + 1.0)), 6) * 1e6) AS BIGINT) AS wv
-        |  FROM tf JOIN df USING (term), n
-        |  WHERE doc_id < 100),
-        |norms AS (SELECT doc_id, CAST(sum(wv * wv) AS BIGINT) AS n2 FROM wfp GROUP BY 1),
-        |dots AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    CAST(sum(a.wv * b.wv) AS BIGINT) AS dot_fp
-        |  FROM wfp a JOIN wfp b ON a.term = b.term AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_a, doc_b, dot_fp,
-        |  round(CAST(dot_fp AS DOUBLE) /
-        |        (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))), 6) AS cosine
-        |FROM dots JOIN norms na ON na.doc_id = doc_a JOIN norms nb ON nb.doc_id = doc_b
-        |ORDER BY cosine DESC, doc_a, doc_b LIMIT 50""".stripMargin,
-    // Truncated-dimension recall curve: all dots are exact integer
-    // sums on the x1e6 quantized grid in BOTH engines (one corpus pass
-    // in Spark, list arithmetic here), rankings share the
-    // (dot DESC, id ASC) tie contract, and recall_fp is the x1e6
-    // round-half-up division. sc pinned MATERIALIZED: five rankings
-    // reference it (the q_bpe_sweep CTE-re-inlining lesson).
-    "q_dim_recall" ->
-      """WITH e AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding,
-        |      x -> CAST(floor(CAST(x AS DOUBLE) * 1e6 + 0.5) AS BIGINT)) AS q
-        |  FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) > 0),
-        |qq AS (SELECT vec_id AS query_id, q AS qv FROM e WHERE vec_id < 10),
-        |sc AS MATERIALIZED (
-        |  SELECT query_id, e.vec_id AS did,
-        |    CAST(list_sum(list_transform(list_zip(qv, q), t -> t[1]*t[2])) AS BIGINT) AS dot_full,
-        |    CAST(list_sum(list_transform(list_zip(qv[1:8], q[1:8]), t -> t[1]*t[2])) AS BIGINT) AS dot_8,
-        |    CAST(list_sum(list_transform(list_zip(qv[1:16], q[1:16]), t -> t[1]*t[2])) AS BIGINT) AS dot_16,
-        |    CAST(list_sum(list_transform(list_zip(qv[1:32], q[1:32]), t -> t[1]*t[2])) AS BIGINT) AS dot_32,
-        |    CAST(list_sum(list_transform(list_zip(qv[1:48], q[1:48]), t -> t[1]*t[2])) AS BIGINT) AS dot_48
-        |  FROM qq JOIN e ON e.vec_id <> query_id),
-        |tf AS (SELECT query_id, did FROM (
-        |    SELECT query_id, did, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY dot_full DESC, did) AS r FROM sc) WHERE r <= 10),
-        |t8 AS (SELECT query_id, did FROM (
-        |    SELECT query_id, did, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY dot_8 DESC, did) AS r FROM sc) WHERE r <= 10),
-        |t16 AS (SELECT query_id, did FROM (
-        |    SELECT query_id, did, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY dot_16 DESC, did) AS r FROM sc) WHERE r <= 10),
-        |t32 AS (SELECT query_id, did FROM (
-        |    SELECT query_id, did, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY dot_32 DESC, did) AS r FROM sc) WHERE r <= 10),
-        |t48 AS (SELECT query_id, did FROM (
-        |    SELECT query_id, did, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY dot_48 DESC, did) AS r FROM sc) WHERE r <= 10),
-        |u AS (
-        |  SELECT CAST(8 AS BIGINT) AS m,
-        |    CAST(count(t.query_id) AS BIGINT) AS hits, CAST(count(*) AS BIGINT) AS total
-        |  FROM tf LEFT JOIN t8 t ON tf.query_id = t.query_id AND tf.did = t.did
-        |  UNION ALL
-        |  SELECT CAST(16 AS BIGINT),
-        |    CAST(count(t.query_id) AS BIGINT), CAST(count(*) AS BIGINT)
-        |  FROM tf LEFT JOIN t16 t ON tf.query_id = t.query_id AND tf.did = t.did
-        |  UNION ALL
-        |  SELECT CAST(32 AS BIGINT),
-        |    CAST(count(t.query_id) AS BIGINT), CAST(count(*) AS BIGINT)
-        |  FROM tf LEFT JOIN t32 t ON tf.query_id = t.query_id AND tf.did = t.did
-        |  UNION ALL
-        |  SELECT CAST(48 AS BIGINT),
-        |    CAST(count(t.query_id) AS BIGINT), CAST(count(*) AS BIGINT)
-        |  FROM tf LEFT JOIN t48 t ON tf.query_id = t.query_id AND tf.did = t.did)
-        |SELECT m, hits, total,
-        |  (2 * hits * 1000000 + total) // nullif(2 * total, 0) AS recall_fp
-        |FROM u ORDER BY m""".stripMargin,
-    // Recall evaluation: the q_sim_topk window-rank CTE is the truth
-    // set, the q_sim_ivf CTE chain is the index's answer; both use the
-    // identical (cosine-rounded-to-6 DESC, vec_id) tie-break contract
-    // that already hash-matches key-for-key, so the intersection —
-    // and therefore the integer recall — is deterministic.
-    "q_sim_recall" ->
-      """WITH exact AS (
-        |  SELECT query_id, neighbor_id FROM (
-        |    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-        |      row_number() OVER (PARTITION BY a.vec_id
-        |        ORDER BY round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) DESC,
-        |                 b.vec_id) AS rank
-        |    FROM embeddings a, embeddings b
-        |    WHERE a.vec_id < 10 AND b.vec_id <> a.vec_id)
-        |  WHERE rank <= 5),
-        |cent AS (
-        |  SELECT vec_id AS cent_id, embedding AS cv FROM embeddings
-        |  WHERE vec_id < 16 AND embedding IS NOT NULL AND len(embedding) > 0),
-        |assigned AS (
-        |  SELECT vec_id, embedding, cent_id AS cell FROM (
-        |    SELECT e.vec_id, e.embedding, c.cent_id,
-        |      row_number() OVER (PARTITION BY e.vec_id
-        |        ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cv::DOUBLE[]) DESC,
-        |                 c.cent_id) AS rn
-        |    FROM embeddings e, cent c)
-        |  WHERE rn = 1),
-        |probes AS (
-        |  SELECT query_id, qv, cent_id AS cell FROM (
-        |    SELECT q.vec_id AS query_id, q.embedding AS qv, c.cent_id,
-        |      row_number() OVER (PARTITION BY q.vec_id
-        |        ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.cv::DOUBLE[]) DESC,
-        |                 c.cent_id) AS rn
-        |    FROM embeddings q, cent c WHERE q.vec_id < 10)
-        |  WHERE rn <= 4),
-        |ivf AS (
-        |  SELECT query_id, neighbor_id FROM (
-        |    SELECT p.query_id, a.vec_id AS neighbor_id,
-        |      row_number() OVER (PARTITION BY p.query_id
-        |        ORDER BY round(list_cosine_similarity(p.qv::DOUBLE[], a.embedding::DOUBLE[]), 6) DESC,
-        |                 a.vec_id) AS rank
-        |    FROM probes p JOIN assigned a ON a.cell = p.cell
-        |    WHERE a.vec_id <> p.query_id)
-        |  WHERE rank <= 5)
-        |SELECT e.query_id,
-        |  CAST(count(*) AS BIGINT) AS n_exact,
-        |  CAST(count(i.neighbor_id) AS BIGINT) AS n_hit,
-        |  CAST((2 * count(i.neighbor_id) * 1000000 + count(*)) // (2 * count(*)) AS BIGINT) AS recall_fp
-        |FROM exact e LEFT JOIN ivf i
-        |  ON e.query_id = i.query_id AND e.neighbor_id = i.neighbor_id
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // PQ: every per-subspace squared-L2 is an i-ascending fold over 8
-    // positions (list_transform keeps list order; list_sum folds it
-    // left-to-right — the same op sequence as the codegen'd sq_l2),
-    // fixed-pointed to 1e-6 BIGINTs; codes, the ADC integer sum, and
-    // the final ranking are then integer-exact in both engines.
-    "q_sim_pq" ->
-      """WITH v AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings WHERE len(embedding) = 64),
-        |cent AS (SELECT vec_id AS cid, e AS cv FROM v WHERE vec_id < 16),
-        |dist AS (
-        |  SELECT v.vec_id, s.m, c.cid,
-        |    CAST(round(1e6 * list_sum(list_transform(range(1, 9), i ->
-        |      (v.e[s.m*8 + i] - c.cv[s.m*8 + i]) * (v.e[s.m*8 + i] - c.cv[s.m*8 + i])
-        |    ))) AS BIGINT) AS dfp
-        |  FROM v, (SELECT unnest(range(0, 8)) AS m) s, cent c),
-        |codes AS (
-        |  SELECT vec_id, m, cid AS code FROM (
-        |    SELECT vec_id, m, cid,
-        |      row_number() OVER (PARTITION BY vec_id, m ORDER BY dfp, cid) AS rn
-        |    FROM dist) WHERE rn = 1),
-        |qd AS (SELECT vec_id AS query_id, m, cid, dfp FROM dist WHERE vec_id < 10),
-        |adc AS (
-        |  SELECT q.query_id, c.vec_id AS neighbor_id, sum(q.dfp) AS adc_fp
-        |  FROM codes c JOIN qd q ON q.m = c.m AND q.cid = c.code
-        |  WHERE c.vec_id <> q.query_id
-        |  GROUP BY 1, 2)
-        |SELECT query_id, neighbor_id,
-        |  round(CAST(adc_fp AS DOUBLE) / 1e6, 6) AS approx_dist, rank
-        |FROM (
-        |  SELECT query_id, neighbor_id, adc_fp,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY adc_fp, neighbor_id) AS rank
-        |  FROM adc)
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // PQ distortion: the q_sim_pq dist CTE's per-(vec, subspace)
-    // minimum IS the assigned-centroid error; M-row report
-    "q_pq_error" ->
-      """WITH v AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings WHERE len(embedding) = 64),
-        |cent AS (SELECT vec_id AS cid, e AS cv FROM v WHERE vec_id < 16),
-        |dist AS (
-        |  SELECT v.vec_id, s.m, c.cid,
-        |    CAST(round(1e6 * list_sum(list_transform(range(1, 9), i ->
-        |      (v.e[s.m*8 + i] - c.cv[s.m*8 + i]) * (v.e[s.m*8 + i] - c.cv[s.m*8 + i])
-        |    ))) AS BIGINT) AS dfp
-        |  FROM v, (SELECT unnest(range(0, 8)) AS m) s, cent c),
-        |best AS (SELECT vec_id, m, min(dfp) AS err_fp FROM dist GROUP BY 1, 2)
-        |SELECT CAST(m AS BIGINT) AS subspace, CAST(count(*) AS BIGINT) AS n_vecs,
-        |  CAST(sum(err_fp) AS BIGINT) AS sum_err_fp,
-        |  CAST(sum(err_fp) AS BIGINT) // count(*) AS mean_err_fp
-        |FROM best WHERE err_fp IS NOT NULL GROUP BY 1 ORDER BY subspace""".stripMargin,
-    // IVF-PQ: the q_sim_pq fixed-point machinery composed with a
-    // coarse quantizer. Residuals are exact double subtractions
-    // ((v-cc) identical bits in both engines); every distance is the
-    // same i-ascending fold rounded once to a 1e-6 BIGINT, so cell
-    // assignment, codes, probes, ADC sums, and ranks are all
-    // integer-exact.
-    "q_sim_ivfpq" ->
-      """WITH v AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings WHERE len(embedding) = 64),
-        |cc AS (SELECT vec_id AS cid, e AS cv FROM v WHERE vec_id < 8),
-        |cd AS (
-        |  SELECT v.vec_id, c.cid,
-        |    CAST(round(1e6 * list_sum(list_transform(range(1, 65), i ->
-        |      (v.e[i] - c.cv[i]) * (v.e[i] - c.cv[i])))) AS BIGINT) AS dfp
-        |  FROM v, cc c),
-        |cell AS (
-        |  SELECT vec_id, cid AS cell FROM (
-        |    SELECT vec_id, cid,
-        |      row_number() OVER (PARTITION BY vec_id ORDER BY dfp, cid) AS rn
-        |    FROM cd) WHERE rn = 1),
-        |res AS (
-        |  SELECT v.vec_id, cell.cell,
-        |    list_transform(range(1, 65), i -> v.e[i] - cc.cv[i]) AS r
-        |  FROM v JOIN cell USING (vec_id) JOIN cc ON cc.cid = cell.cell),
-        |cb AS (SELECT vec_id AS code_id, r AS br FROM res WHERE vec_id < 16),
-        |enc AS (
-        |  SELECT x.vec_id, s.m, b.code_id,
-        |    CAST(round(1e6 * list_sum(list_transform(range(1, 9), i ->
-        |      (x.r[s.m*8 + i] - b.br[s.m*8 + i]) * (x.r[s.m*8 + i] - b.br[s.m*8 + i])
-        |    ))) AS BIGINT) AS dfp
-        |  FROM res x, (SELECT unnest(range(0, 8)) AS m) s, cb b),
-        |codes AS (
-        |  SELECT vec_id, m, code_id AS code FROM (
-        |    SELECT vec_id, m, code_id,
-        |      row_number() OVER (PARTITION BY vec_id, m ORDER BY dfp, code_id) AS rn
-        |    FROM enc) WHERE rn = 1),
-        |probes AS (
-        |  SELECT vec_id AS query_id, cid AS cell FROM (
-        |    SELECT vec_id, cid,
-        |      row_number() OVER (PARTITION BY vec_id ORDER BY dfp, cid) AS rn
-        |    FROM cd WHERE vec_id < 10) WHERE rn <= 2),
-        |qd AS (
-        |  SELECT p.query_id, p.cell, s.m, b.code_id,
-        |    CAST(round(1e6 * list_sum(list_transform(range(1, 9), i ->
-        |      ((v.e[s.m*8 + i] - cc.cv[s.m*8 + i]) - b.br[s.m*8 + i]) *
-        |      ((v.e[s.m*8 + i] - cc.cv[s.m*8 + i]) - b.br[s.m*8 + i])
-        |    ))) AS BIGINT) AS dfp
-        |  FROM probes p
-        |  JOIN v ON v.vec_id = p.query_id
-        |  JOIN cc ON cc.cid = p.cell,
-        |  (SELECT unnest(range(0, 8)) AS m) s, cb b),
-        |adc AS (
-        |  SELECT q.query_id, ce.vec_id AS neighbor_id, sum(q.dfp) AS adc_fp
-        |  FROM cell ce
-        |  JOIN codes c ON c.vec_id = ce.vec_id
-        |  JOIN qd q ON q.cell = ce.cell AND q.m = c.m AND q.code_id = c.code
-        |  WHERE ce.vec_id <> q.query_id
-        |  GROUP BY 1, 2)
-        |SELECT query_id, neighbor_id,
-        |  round(CAST(adc_fp AS DOUBLE) / 1e6, 6) AS approx_dist, rank
-        |FROM (
-        |  SELECT query_id, neighbor_id, adc_fp,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY adc_fp, neighbor_id) AS rank
-        |  FROM adc)
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-  )
-
-  /** Twin keys whose results must be bit-identical to another key's —
-    * one oracle text serves both (the materialized-fp-index read path
-    * must reproduce the in-DAG recompute exactly).
-    */
-  def oracleSql: Map[String, String] =
-    oracleSqlBase +
-      ("q_dedup_incr_idx" -> oracleSqlBase("q_dedup_incr")) +
-      ("q_dedup_bloom"    -> oracleSqlBase("q_dedup_incr")) +
-      // the co-partitioned iteration joins are PHYSICAL variants only:
-      // identical fixed-point ranks / hop labels under the identical
-      // oracles
-      ("q_pagerank_copart" -> oracleSqlBase("q_pagerank")) +
-      ("q_graph_hops_copart" -> oracleSqlBase("q_graph_hops"))
+  /** Each key's DuckDB oracle SQL, by name. */
+  val oracleSql: Map[String, String] = keys.map(k => k.name -> k.oracle).toMap
 }

@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry key's result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare. Keys run, and
+  * oracle_sql.json lists them, in SparkEntry.keys' sorted order. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated list of query keys to dump
@@ -29,10 +30,10 @@ object Verify {
     } catch { case e: Throwable =>
       System.err.println(s"[verify] env probe failed: ${e.getMessage}")
     }
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    SparkEntry.keys
+      .filter(k => only.forall(_.contains(k.name)))
+      .foreach { case SparkEntry.Key(name, run, _) =>
+      try run(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -57,8 +58,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.keys
+      .map(k => s"${q(k.name)}: ${q(k.oracle)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

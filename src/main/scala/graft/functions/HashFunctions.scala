@@ -170,4 +170,26 @@ object HashFunctions {
     register(SparkSession.active)
     call_function("hex_window_u", c, lit(off), lit(len))
   }
+
+  /** Integer value of the first `chars` hex chars of md5(doc_id) in
+    * DuckDB SQL — mirrors SampleOps.hashDraw (Spark `conv`) nibble for
+    * nibble.
+    */
+  private[graft] def duckHashDraw(chars: Int): String = {
+    val h = s"substr(md5(CAST(doc_id AS VARCHAR)),1,$chars)"
+    (1 to chars).map { i =>
+      val weight = 1L << (4 * (chars - i))
+      s"(strpos('0123456789abcdef', substr($h,$i,1)) - 1) * $weight"
+    }.mkString("(", " + ", ")")
+  }
+
+  /** Hex-window→BIGINT nibble arithmetic over a hex string expression
+    * `h`, reading `chars` nibbles starting at 1-based `from` (same
+    * per-nibble form as [[duckHashDraw]]).
+    */
+  private[graft] def duckHexValue(h: String, from: Int, chars: Int): String =
+    (0 until chars).map { i =>
+      val weight = 1L << (4 * (chars - 1 - i))
+      s"(strpos('0123456789abcdef', substr($h,${from + i},1)) - 1) * $weight"
+    }.mkString("(", " + ", ")")
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SparkEntry.Key
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -344,4 +345,167 @@ object BpeOps {
     sums.select(explode(array(rows: _*)).as("r")).select(col("r.*"))
       .orderBy("k")
   }
+
+  /** Full WITH-body CTE chain deriving the BPE merge tables m1..mK
+    * (pat, mrg, cnt) plus rewritten vocabs v0..vK from the documents
+    * corpus — shared by the q_bpe_train, q_bpe_encode, q_tok_fertility
+    * and q_bpe_sweep oracles so the fit the encoder applies is BY
+    * CONSTRUCTION the fit the trainer reports. v0/m_i/v_i are pinned
+    * AS MATERIALIZED (the q_pca_power inlined-CTE lesson): each m_i is
+    * referenced by v_i AND by every downstream scalar subquery
+    * (q_bpe_sweep's checkpoint columns reference m_1 four times), and
+    * DuckDB re-inlines an unmaterialized CTE per reference — the whole
+    * training prefix would re-evaluate multiplicatively.
+    */
+  private def duckBpeTrainCtes(merges: Int): String = {
+    val steps = (1 to merges).map { i =>
+      val prev = if (i == 1) "v0" else s"v${i - 1}"
+      s"""p$i AS (SELECT pat, CAST(sum(n) AS BIGINT) AS cnt FROM (
+         |    SELECT n, unnest(list_transform(range(1, len(syms)), j ->
+         |      '<' || syms[j] || '><' || syms[j + 1] || '>')) AS pat
+         |    FROM (SELECT n, string_split(substr(r, 2, length(r) - 2), '><') AS syms
+         |          FROM $prev)) GROUP BY pat),
+         |m$i AS MATERIALIZED (SELECT pat, replace(pat, '><', '') AS mrg, cnt
+         |        FROM p$i ORDER BY cnt DESC, pat LIMIT 1),
+         |v$i AS MATERIALIZED (SELECT n, replace(v.r, m.pat, m.mrg) AS r FROM $prev v, m$i m)"""
+        .stripMargin
+    }.mkString(",\n")
+    s"""w AS (SELECT word, count(*) AS n FROM (
+       |    SELECT unnest(string_split(text, ' ')) AS word FROM documents
+       |    WHERE text IS NOT NULL)
+       |  WHERE length(word) > 1 GROUP BY 1),
+       |v0 AS MATERIALIZED (SELECT n, '<' || array_to_string(string_split(word, ''), '><') || '>' AS r
+       |       FROM w),
+       |$steps""".stripMargin
+  }
+
+  val keys: Seq[Key] = Seq(
+    // BPE trainer: 8 written-out merge iterations (the q_embed_train
+    // iterative-CTE stance); each m_i is the argmax pair (cnt DESC,
+    // pat ASC), each v_i the vocab after that literal replace
+    Key("q_bpe_train", (s, d) => q_bpe_train(s, d), {
+      val merges = 8
+      val steps = duckBpeTrainCtes(merges)
+      val out = (1 to merges).map { i =>
+        s"""SELECT CAST($i AS BIGINT) AS step,
+           |  string_split(substr(pat, 2, length(pat) - 2), '><')[1] AS lhs,
+           |  string_split(substr(pat, 2, length(pat) - 2), '><')[2] AS rhs,
+           |  replace(substr(pat, 2, length(pat) - 2), '><', '') AS merged,
+           |  cnt FROM m$i""".stripMargin
+      }.mkString("\nUNION ALL\n")
+      s"""WITH $steps
+         |SELECT * FROM ($out) ORDER BY step""".stripMargin
+    }),
+    // BPE encode: the SAME training CTE chain derives the merge
+    // tables m1..mK; the corpus is then re-tokenized word-by-word by
+    // a K-deep nested replace whose pat/mrg arguments are scalar
+    // subqueries against those CTEs — mirroring the Spark side's
+    // collected-literal replace chain step for step. Token count =
+    // occurrences of '>' (every symbol ends with one).
+    Key("q_bpe_encode", (s, d) => q_bpe_encode(s, d), {
+      val merges = 8
+      // coalesce (ADVICE r8): a corpus that exhausts merges before
+      // K leaves m$i empty, its scalar subquery NULL, and
+      // replace(x, NULL, NULL) would null the whole encoding — the
+      // Spark side applies only trained merges, so a missing merge
+      // must be a no-op here too (replace(x, '', '') is identity)
+      val applied = (1 to merges).foldLeft("r") { (acc, i) =>
+        s"replace($acc, coalesce((SELECT pat FROM m$i), '')," +
+          s" coalesce((SELECT mrg FROM m$i), ''))"
+      }
+      s"""WITH ${duckBpeTrainCtes(merges)},
+         |dw AS (SELECT doc_id, word FROM (
+         |    SELECT doc_id, unnest(string_split(text, ' ')) AS word
+         |    FROM documents WHERE text IS NOT NULL)
+         |  WHERE length(word) > 0),
+         |db AS (SELECT doc_id, CAST(length(word) AS BIGINT) AS n_sym,
+         |         '<' || array_to_string(string_split(word, ''), '><') || '>' AS r
+         |       FROM dw),
+         |de AS (SELECT doc_id, n_sym, $applied AS enc FROM db)
+         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
+         |  CAST(sum(n_sym) AS BIGINT) AS n_base_symbols,
+         |  CAST(sum(length(enc) - length(replace(enc, '>', ''))) AS BIGINT) AS n_bpe_tokens
+         |FROM de GROUP BY doc_id ORDER BY doc_id""".stripMargin
+    }),
+    // per-language fertility: the encode CTE chain regrouped by lang;
+    // every sum CAST to BIGINT before the fixed-point arithmetic
+    // (DuckDB sum() returns HUGEINT — the q_corpus_report lesson)
+    Key("q_tok_fertility", (s, d) => q_tok_fertility(s, d), {
+      val merges = 8
+      val applied = (1 to merges).foldLeft("r") { (acc, i) =>
+        s"replace($acc, coalesce((SELECT pat FROM m$i), '')," +
+          s" coalesce((SELECT mrg FROM m$i), ''))"
+      }
+      s"""WITH ${duckBpeTrainCtes(merges)},
+         |dw AS (SELECT doc_id, word FROM (
+         |    SELECT doc_id, unnest(string_split(text, ' ')) AS word
+         |    FROM documents WHERE text IS NOT NULL)
+         |  WHERE length(word) > 0),
+         |db AS (SELECT doc_id, CAST(length(word) AS BIGINT) AS n_sym,
+         |         '<' || array_to_string(string_split(word, ''), '><') || '>' AS r
+         |       FROM dw),
+         |de AS (SELECT doc_id, n_sym, $applied AS enc FROM db),
+         |pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nw,
+         |         CAST(sum(n_sym) AS BIGINT) AS ns,
+         |         CAST(sum(length(enc) - length(replace(enc, '>', ''))) AS BIGINT) AS nt
+         |       FROM de GROUP BY doc_id),
+         |pl AS (SELECT d.lang, CAST(count(*) AS BIGINT) AS n_docs,
+         |         CAST(sum(nw) AS BIGINT) AS n_words,
+         |         CAST(sum(ns) AS BIGINT) AS n_base_symbols,
+         |         CAST(sum(nt) AS BIGINT) AS n_bpe_tokens
+         |       FROM pd JOIN documents d USING (doc_id) GROUP BY d.lang)
+         |SELECT lang, n_docs, n_words, n_base_symbols, n_bpe_tokens,
+         |  (2 * n_base_symbols * 1000000 + n_bpe_tokens) // (2 * n_bpe_tokens)
+         |    AS symbols_per_token_fp,
+         |  (2 * n_bpe_tokens * 1000000 + n_words) // (2 * n_words)
+         |    AS tokens_per_word_fp
+         |FROM pl ORDER BY lang""".stripMargin
+    }),
+    // vocab-size sweep: the training CTE chain once, then each
+    // checkpoint's encoding as the full replace-prefix (the oracle
+    // pays 2+4+6+8 replaces where Spark's incremental columns pay 8 —
+    // same values, the oracle optimizes for dialect simplicity);
+    // empty-merge coalesce no-ops as in q_bpe_encode
+    Key("q_bpe_sweep", (s, d) => q_bpe_sweep(s, d), {
+      val (merges, stride) = (8, 2)
+      val cps = stride to merges by stride
+      def applied(k: Int) = (1 to k).foldLeft("r") { (acc, i) =>
+        s"replace($acc, coalesce((SELECT pat FROM m$i), '')," +
+          s" coalesce((SELECT mrg FROM m$i), ''))"
+      }
+      val encCols = cps.map(k => s"${applied(k)} AS e$k").mkString(",\n")
+      val tokSums = cps.map(k =>
+        s"CAST(sum(length(e$k) - length(replace(e$k, '>', ''))) AS BIGINT) AS t$k")
+        .mkString(",\n")
+      def nm(k: Int) =
+        if (k == 0) "CAST(0 AS BIGINT)"
+        else "CAST(" + (1 to k).map(i => s"(SELECT count(*) FROM m$i)")
+          .mkString(" + ") + " AS BIGINT)"
+      val rows = (s"""SELECT CAST(0 AS BIGINT) AS k, ${nm(0)} AS n_merges,
+        |  s0 AS total_base_symbols, s0 AS total_bpe_tokens,
+        |  (2 * s0 * 1000000 + s0) // (2 * s0) AS symbols_per_token_fp,
+        |  CAST(0 AS BIGINT) AS tokens_saved FROM tot""".stripMargin +:
+        cps.map { k =>
+          val prev = if (k - stride == 0) "s0" else s"t${k - stride}"
+          s"""SELECT CAST($k AS BIGINT), ${nm(k)}, s0, t$k,
+             |  (2 * s0 * 1000000 + t$k) // (2 * t$k), $prev - t$k
+             |FROM tot""".stripMargin
+        }).mkString("\nUNION ALL\n")
+      s"""WITH ${duckBpeTrainCtes(merges)},
+         |dw AS (SELECT word FROM (
+         |    SELECT unnest(string_split(text, ' ')) AS word
+         |    FROM documents WHERE text IS NOT NULL)
+         |  WHERE length(word) > 0),
+         |db AS (SELECT CAST(length(word) AS BIGINT) AS ns,
+         |         '<' || array_to_string(string_split(word, ''), '><') || '>' AS r
+         |       FROM dw),
+         |de AS (SELECT ns,
+         |$encCols
+         |FROM db),
+         |tot AS (SELECT CAST(sum(ns) AS BIGINT) AS s0,
+         |$tokSums
+         |FROM de)
+         |SELECT * FROM ($rows) ORDER BY k""".stripMargin
+    }),
+  )
 }

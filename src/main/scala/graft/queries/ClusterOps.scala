@@ -1,6 +1,8 @@
 package graft.queries
 
+import graft.SparkEntry.Key
 import graft.Tables._
+import graft.queries.DedupOps.duckSimhashCtes
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -292,4 +294,82 @@ object ClusterOps {
         col("rep_id"), (col("doc_id") === col("rep_id")).as("kept"))
       .orderBy("doc_id")
   }
+
+  val keys: Seq[Key] = Seq(
+    // Connected components in SQL: recursive min-label propagation.
+    // Seed every edge-incident node with the min of its closed
+    // neighborhood; the recursive step flows any neighbor's label
+    // across an edge; UNION dedups so the iteration reaches a fixpoint
+    // over the finite label set. The component minimum m seeds itself
+    // (all its neighbors are larger) and propagates along every path,
+    // so min(label) per node is exactly the component min — the same
+    // labels star-contraction converges to. Singletons (no pair) get
+    // cluster_id = doc_id via the left join, as in the query.
+    Key("q_dup_clusters", q_dup_clusters _,
+      s"""WITH RECURSIVE $duckSimhashCtes,
+         |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |  FROM s a, s b
+         |  WHERE a.doc_id < b.doc_id AND bit_count(xor(a.simhash, b.simhash)) <= 1),
+         |e AS (SELECT doc_a AS u, doc_b AS v FROM p
+         |  UNION ALL SELECT doc_b, doc_a FROM p),
+         |lab(node, label) AS (
+         |  SELECT u, least(u, min(v)) FROM e GROUP BY u
+         |  UNION
+         |  SELECT e.u, l.label FROM e JOIN lab l ON e.v = l.node),
+         |lbl AS (SELECT node, min(label) AS label FROM lab GROUP BY node),
+         |base AS (SELECT d.doc_id, coalesce(l.label, d.doc_id) AS cluster_id
+         |  FROM documents d LEFT JOIN lbl l ON d.doc_id = l.node)
+         |SELECT doc_id, cluster_id,
+         |  count(*) OVER (PARTITION BY cluster_id) AS cluster_size
+         |FROM base ORDER BY doc_id""".stripMargin),
+    // same label propagation; keep only canonical rows (doc_id ==
+    // cluster minimum) — the surviving corpus after near-dup dedup
+    Key("q_dedup_resolve", q_dedup_resolve _,
+      s"""WITH RECURSIVE $duckSimhashCtes,
+         |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |  FROM s a, s b
+         |  WHERE a.doc_id < b.doc_id AND bit_count(xor(a.simhash, b.simhash)) <= 1),
+         |e AS (SELECT doc_a AS u, doc_b AS v FROM p
+         |  UNION ALL SELECT doc_b, doc_a FROM p),
+         |lab(node, label) AS (
+         |  SELECT u, least(u, min(v)) FROM e GROUP BY u
+         |  UNION
+         |  SELECT e.u, l.label FROM e JOIN lab l ON e.v = l.node),
+         |lbl AS (SELECT node, min(label) AS label FROM lab GROUP BY node),
+         |base AS (SELECT d.doc_id, coalesce(l.label, d.doc_id) AS cluster_id
+         |  FROM documents d LEFT JOIN lbl l ON d.doc_id = l.node),
+         |sized AS (SELECT doc_id, cluster_id,
+         |  count(*) OVER (PARTITION BY cluster_id) AS cluster_size
+         |  FROM base)
+         |SELECT doc_id, cluster_size AS n_members,
+         |  cluster_size - 1 AS n_dropped
+         |FROM sized WHERE doc_id = cluster_id ORDER BY doc_id""".stripMargin),
+    // same components; representative = LONGEST member (n_chars DESC,
+    // doc_id ASC) via a per-cluster rank CTE — keep-rarest-source was
+    // measured degenerate on this corpus (uniform source sizes)
+    Key("q_dedup_priority", q_dedup_priority _,
+      s"""WITH RECURSIVE $duckSimhashCtes,
+         |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |  FROM s a, s b
+         |  WHERE a.doc_id < b.doc_id AND bit_count(xor(a.simhash, b.simhash)) <= 1),
+         |e AS (SELECT doc_a AS u, doc_b AS v FROM p
+         |  UNION ALL SELECT doc_b, doc_a FROM p),
+         |lab(node, label) AS (
+         |  SELECT u, least(u, min(v)) FROM e GROUP BY u
+         |  UNION
+         |  SELECT e.u, l.label FROM e JOIN lab l ON e.v = l.node),
+         |lbl AS (SELECT node, min(label) AS label FROM lab GROUP BY node),
+         |base AS (SELECT d.doc_id, coalesce(l.label, d.doc_id) AS cluster_id
+         |  FROM documents d LEFT JOIN lbl l ON d.doc_id = l.node),
+         |j AS (SELECT b.doc_id, b.cluster_id, CAST(d.n_chars AS BIGINT) AS n_chars
+         |  FROM base b JOIN documents d USING (doc_id)),
+         |r AS (SELECT cluster_id, doc_id AS rep_id FROM (
+         |    SELECT cluster_id, doc_id,
+         |      row_number() OVER (PARTITION BY cluster_id
+         |        ORDER BY n_chars DESC, doc_id) AS rn
+         |    FROM j) WHERE rn = 1)
+         |SELECT j.doc_id, j.cluster_id, j.n_chars, r.rep_id,
+         |  j.doc_id = r.rep_id AS kept
+         |FROM j JOIN r USING (cluster_id) ORDER BY j.doc_id""".stripMargin),
+  )
 }

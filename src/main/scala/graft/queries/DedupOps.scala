@@ -1,6 +1,8 @@
 package graft.queries
 
+import graft.SparkEntry.Key
 import graft.Tables._
+import graft.functions.HashFunctions.{duckHashDraw, duckHexValue}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -277,6 +279,17 @@ object DedupOps {
       min(graft.functions.HashFunctions.hexWindowU(col(s"d$seed"), off, 15)).as(s"h$i")
     }
     withDigests.groupBy("doc_id").agg(mins.head, mins.tail: _*)
+  }
+
+  /** MinHash function i over a `shingles` list column in DuckDB SQL,
+    * mirroring [[signaturesMd5]]' digest reuse: seeded digest (i+1)/2, 60-bit
+    * hex window at char 1 (odd i) or 17 (even i), list_min.
+    */
+  private[graft] def duckMinhash(i: Int): String = {
+    val seed = (i + 1) / 2
+    val off = if (i % 2 == 1) 1 else 17
+    s"list_min(list_transform([md5('$seed:' || x) for x in shingles], " +
+      s"h -> ${duckHexValue("h", off, 15)}))"
   }
 
   /** Signature scaffold for one-hash-per-function variants: fan-out →
@@ -1158,6 +1171,24 @@ object DedupOps {
     packedSimhash(hashed, bitOf)
   }
 
+  /** DuckDB CTE block `w,h,v,s` computing the 63-bit SimHash per
+    * document — bit b of the simhash = bit b%4 of hex nibble b/4 of
+    * md5(word), identical in both engines. Shared by the q_simhash /
+    * q_dedup_simhash / q_dup_clusters oracles.
+    */
+  private[graft] def duckSimhashCtes: String = {
+    val votes = (0 until 63).map { b =>
+      s"  sum(CASE WHEN (((strpos('0123456789abcdef', substr(hx,${b / 4 + 1},1)) - 1) >> ${b % 4}) & 1) = 1 THEN 1 ELSE -1 END) AS v$b"
+    }.mkString(",\n")
+    val bits = (0 until 63).map(b => s"(CASE WHEN v$b > 0 THEN ${1L << b} ELSE 0 END)").mkString(" + ")
+    s"""w AS (SELECT DISTINCT doc_id, unnest(string_split(text,' ')) AS word FROM documents),
+       |h AS (SELECT doc_id, substr(md5(word),1,16) AS hx FROM w),
+       |v AS (SELECT doc_id,
+       |$votes
+       |FROM h GROUP BY doc_id),
+       |s AS (SELECT doc_id, CAST($bits AS BIGINT) AS simhash FROM v)""".stripMargin
+  }
+
   /** Packed 63-bit vote aggregation shared by both hash families:
     * votes_b > 0 ⟺ 2·Σbit_b > n, and Σbit_b is non-negative, so three
     * 21-bit counters pack into one long — 21 sum() buffers plus a
@@ -1762,4 +1793,641 @@ object DedupOps {
                | div (2 * (n_a + n_b - n_inter))""".stripMargin).as("j_fp"))
       .orderBy("doc_a", "doc_b")
   }
+
+  /** The winnowing fingerprint table as a reusable CTE chain ending in
+    * `wfp(doc_id, pos, fp)` — shared by the q_winnow and q_overlap
+    * oracles so the selection logic cannot drift between them. Mirrors
+    * DedupOps.winnowFps: word 4-grams (whole-text fallback under 4
+    * words, NULL docs contribute nothing), hash60 per gram, windows of
+    * 4, leftmost-min selection, 0-based gram positions.
+    */
+  private lazy val duckWinnowFps: String = {
+    val h60 = duckHexValue("md5(x)", 1, 15)
+    s"""t AS (
+       |  SELECT doc_id, CASE WHEN len(w) >= 4
+       |    THEN [array_to_string(w[i:i+3], ' ') for i in range(1, len(w)-2)]
+       |    ELSE [text] END AS gs
+       |  FROM (SELECT doc_id, text, string_split(text, ' ') AS w FROM documents
+       |        WHERE text IS NOT NULL)),
+       |h AS (SELECT doc_id, [$h60 for x in gs] AS hs FROM t),
+       |wdw AS (SELECT doc_id, hs,
+       |        unnest(range(0, greatest(len(hs) - 3, 1))) AS j FROM h),
+       |sel AS (SELECT doc_id,
+       |         CAST(j + list_position(hs[j+1 : j+4], list_min(hs[j+1 : j+4])) - 1
+       |              AS BIGINT) AS pos,
+       |         list_min(hs[j+1 : j+4]) AS fp
+       |        FROM wdw),
+       |wfp AS (SELECT DISTINCT doc_id, pos, fp FROM sel)""".stripMargin
+  }
+
+  val keys: Seq[Key] = Seq(
+    // winnowing: 4-gram hash60 values (15-nibble md5 bridge), windows
+    // of 4, leftmost-min selection with 0-based gram positions —
+    // list_position finds the first (leftmost) occurrence, matching
+    // Spark's (h, p) struct-min tie rule; short docs fall back to one
+    // whole-text gram like q_contamination
+    Key("q_winnow", (s, d) => q_winnow(s, d),
+      s"""WITH $duckWinnowFps
+         |SELECT doc_id, pos, fp FROM wfp
+         |ORDER BY doc_id, pos""".stripMargin),
+    // overlap localization over the winnow table: fps in 2..10 docs
+    // only (df<2 can't pair, df>10 is a stop-phrase cap), self-join on
+    // fp, span aggregation per ordered doc pair
+    Key("q_overlap", (s, d) => q_overlap(s, d),
+      s"""WITH $duckWinnowFps,
+         |rare AS (SELECT fp FROM wfp GROUP BY fp
+         |         HAVING count(DISTINCT doc_id) BETWEEN 2 AND 10),
+         |f2 AS (SELECT wfp.* FROM wfp JOIN rare USING (fp))
+         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         |  count(DISTINCT a.fp) AS n_shared,
+         |  min(a.pos) AS a_from, max(a.pos) AS a_to,
+         |  min(b.pos) AS b_from, max(b.pos) AS b_to
+         |FROM f2 a JOIN f2 b ON a.fp = b.fp AND a.doc_id < b.doc_id
+         |GROUP BY 1, 2 ORDER BY doc_a, doc_b""".stripMargin),
+    // same benchmark slice (doc_id % 100 < 2) and 5-gram fallback-to-
+    // full-text rule as DedupOps.q_contamination
+    Key("q_contamination", q_contamination _,
+      """WITH g AS (
+        |  SELECT doc_id, list_distinct(CASE WHEN len(w) >= 5
+        |    THEN [array_to_string(w[i:i+4], ' ') for i in range(1, len(w)-3)]
+        |    ELSE [text] END) AS gs
+        |  FROM (SELECT doc_id, text, string_split(text, ' ') AS w FROM documents)),
+        |bench AS (SELECT DISTINCT unnest(gs) AS g FROM g WHERE doc_id % 100 < 2),
+        |corpus AS (SELECT doc_id, unnest(gs) AS g FROM g WHERE doc_id % 100 >= 2),
+        |hits AS (SELECT doc_id, count(*) AS n_hits
+        |         FROM corpus JOIN bench USING (g) GROUP BY doc_id)
+        |SELECT d.doc_id, coalesce(h.n_hits, 0) AS n_hits,
+        |  coalesce(h.n_hits, 0) > 0 AS contaminated
+        |FROM (SELECT doc_id FROM g WHERE doc_id % 100 >= 2) d
+        |LEFT JOIN hits h USING (doc_id)
+        |ORDER BY doc_id""".stripMargin),
+    // MinHash values are the first 15 hex chars of the seeded md5 read
+    // as a 60-bit BIGINT (see DedupOps.signatures for why long, not
+    // hex-string): md5 once per (seed, shingle), then the hex→int
+    // nibble arithmetic of duckHashDraw applied to the 15-char prefix.
+    Key("q_minhash", q_minhash _,
+      s"""WITH sh AS (
+         |  SELECT doc_id, CASE WHEN len(w) >= 3
+         |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
+         |    ELSE [text] END AS shingles
+         |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents))
+         |SELECT doc_id,
+         |${(1 to 8).map(i => s"  ${duckMinhash(i)} AS h$i").mkString(",\n")}
+         |FROM sh ORDER BY doc_id""".stripMargin),
+    // Carries no maxBucket cap (same caveat as q_sim_lsh /
+    // q_dedup_simhash): parity holds while no band bucket exceeds
+    // candidatePairs' 10k ceiling — an overflowed bucket would make
+    // the Spark side drop pairs the oracle keeps. Cap drop semantics
+    // are unit-tested separately.
+    Key("q_dedup_minhash", q_dedup_minhash _,
+      """WITH sh AS (
+        |  SELECT doc_id, CASE WHEN len(w) >= 3
+        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
+        |    ELSE [text] END AS shingles
+        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents)),
+        |sig AS (
+        |  SELECT doc_id,
+        |SIG_COLUMNS
+        |  FROM sh),
+        |bands AS (
+        |  SELECT doc_id, concat_ws(':', h1, h2, h3, h4) AS band FROM sig
+        |  UNION ALL SELECT doc_id, concat_ws(':', h5, h6, h7, h8) FROM sig),
+        |cand AS (
+        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id),
+        |-- shingles = [NULL] iff text IS NULL (the short-text fallback
+        |-- wraps the raw text): null-text docs leave dsh, so the inner
+        |-- join drops their pairs — mirroring the Spark regroup's
+        |-- t_a/t_b IS NOT NULL invariant (a null doc confirms nothing)
+        |dsh AS (SELECT doc_id, list_distinct(shingles) AS s FROM sh
+        |        WHERE NOT (len(shingles) = 1 AND shingles[1] IS NULL))
+        |SELECT doc_a, doc_b,
+        |  round(CAST(len(list_intersect(x.s, y.s)) AS DOUBLE) / len(list_distinct(x.s || y.s)), 10) AS jaccard
+        |FROM cand JOIN dsh x ON x.doc_id = doc_a JOIN dsh y ON y.doc_id = doc_b
+        |ORDER BY doc_a, doc_b""".stripMargin
+        .replace("SIG_COLUMNS",
+          (1 to 8).map(i => s"    ${duckMinhash(i)} AS h$i").mkString(",\n"))),
+    // Threshold sweep: the q_dedup_minhash pair CTEs, thresholds via
+    // unnest, rounded-jaccard >= thr/100.0 compare (identical IEEE
+    // division + bit-identical jaccard doubles → identical branches),
+    // literal spine keeps zero rows
+    Key("q_dedup_savings", q_dedup_savings _,
+      """WITH sh AS (
+        |  SELECT doc_id, CASE WHEN len(w) >= 3
+        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
+        |    ELSE [text] END AS shingles
+        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents)),
+        |sig AS (
+        |  SELECT doc_id,
+        |SIG_COLUMNS
+        |  FROM sh),
+        |bands AS (
+        |  SELECT doc_id, concat_ws(':', h1, h2, h3, h4) AS band FROM sig
+        |  UNION ALL SELECT doc_id, concat_ws(':', h5, h6, h7, h8) FROM sig),
+        |cand AS (
+        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id),
+        |dsh AS (SELECT doc_id, list_distinct(shingles) AS sset FROM sh
+        |        WHERE NOT (len(shingles) = 1 AND shingles[1] IS NULL)),
+        |mh AS (
+        |  SELECT doc_a, doc_b,
+        |    round(CAST(len(list_intersect(x.sset, y.sset)) AS DOUBLE) / len(list_distinct(x.sset || y.sset)), 10) AS jaccard
+        |  FROM cand JOIN dsh x ON x.doc_id = doc_a JOIN dsh y ON y.doc_id = doc_b),
+        |thr AS (SELECT unnest([900, 925, 950, 975, 990]) AS thr_mille),
+        |pt AS (SELECT t.thr_mille, m.doc_a, m.doc_b FROM mh m, thr t
+        |       WHERE m.jaccard >= t.thr_mille / 1000.0),
+        |pc AS (SELECT thr_mille, CAST(count(*) AS BIGINT) AS n_pairs
+        |       FROM pt GROUP BY 1),
+        |inv AS (SELECT DISTINCT thr_mille, doc_id FROM (
+        |    SELECT thr_mille, doc_a AS doc_id FROM pt
+        |    UNION ALL SELECT thr_mille, doc_b FROM pt)),
+        |tk AS (SELECT doc_id, CAST(len(regexp_split_to_array(text, '\s+')) AS BIGINT) AS n_toks
+        |       FROM documents),
+        |da AS (SELECT thr_mille, CAST(count(*) AS BIGINT) AS n_docs,
+        |         CAST(sum(n_toks) AS BIGINT) AS n_tokens
+        |       FROM inv JOIN tk USING (doc_id) GROUP BY 1)
+        |SELECT CAST(t.thr_mille AS BIGINT) AS thr_mille,
+        |  coalesce(pc.n_pairs, 0) AS n_pairs,
+        |  coalesce(da.n_docs, 0) AS n_docs,
+        |  coalesce(da.n_tokens, 0) AS n_tokens
+        |FROM thr t LEFT JOIN pc USING (thr_mille) LEFT JOIN da USING (thr_mille)
+        |ORDER BY thr_mille""".stripMargin
+        .replace("SIG_COLUMNS",
+          (1 to 8).map(i => s"    ${duckMinhash(i)} AS h$i").mkString(",\n"))),
+    // CDC: boundaries where the 4-gram hash60 = 0 mod 16; spans from
+    // prepend/append of the boundary list; chunk fp = md5 of the
+    // token slice; df across the corpus
+    Key("q_cdc_chunks", (s, d) => q_cdc_chunks(s, d), {
+      val h60g = duckHexValue("md5(array_to_string(w[p:p+3], ' '))", 1, 15)
+      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents
+         |           WHERE text IS NOT NULL),
+         |b AS (SELECT doc_id, w, len(w) AS n,
+         |        CASE WHEN len(w) >= 4 THEN
+         |          [CAST(p - 1 AS BIGINT) FOR p IN range(1, len(w) - 2)
+         |           IF ($h60g) % 16 = 0]
+         |        ELSE [] END AS bpos
+         |      FROM t),
+         |c AS (SELECT doc_id, w,
+         |        list_prepend(CAST(0 AS BIGINT),
+         |          [CAST(p + 4 AS BIGINT) FOR p IN bpos]) AS starts,
+         |        list_append([CAST(p + 3 AS BIGINT) FOR p IN bpos],
+         |          CAST(n - 1 AS BIGINT)) AS ends
+         |      FROM b),
+         |u AS (SELECT doc_id, w,
+         |        CAST(generate_subscripts(starts, 1) - 1 AS BIGINT) AS chunk_id,
+         |        unnest(starts) AS st, unnest(ends) AS en
+         |      FROM c),
+         |ch AS (SELECT doc_id, chunk_id, st AS start_pos,
+         |         en - st + 1 AS n_tokens,
+         |         md5(array_to_string(w[st+1 : en+1], ' ')) AS chunk_fp
+         |       FROM u WHERE st <= en),
+         |dfc AS (SELECT chunk_fp, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
+         |        FROM ch GROUP BY 1)
+         |SELECT doc_id, chunk_id, start_pos, n_tokens, chunk_fp, df
+         |FROM ch JOIN dfc USING (chunk_fp)
+         |ORDER BY doc_id, chunk_id""".stripMargin
+    }),
+    // CDC savings: the same chunk CTE chain up to `ch`, source
+    // attached, then per-(source, fp) and per-fp collapse; n_tokens
+    // rides the fp group via min (content-determined)
+    Key("q_cdc_savings", (s, d) => q_cdc_savings(s, d), {
+      val h60g = duckHexValue("md5(array_to_string(w[p:p+3], ' '))", 1, 15)
+      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents
+         |           WHERE text IS NOT NULL),
+         |b AS (SELECT doc_id, w, len(w) AS n,
+         |        CASE WHEN len(w) >= 4 THEN
+         |          [CAST(p - 1 AS BIGINT) FOR p IN range(1, len(w) - 2)
+         |           IF ($h60g) % 16 = 0]
+         |        ELSE [] END AS bpos
+         |      FROM t),
+         |c AS (SELECT doc_id, w,
+         |        list_prepend(CAST(0 AS BIGINT),
+         |          [CAST(p + 4 AS BIGINT) FOR p IN bpos]) AS starts,
+         |        list_append([CAST(p + 3 AS BIGINT) FOR p IN bpos],
+         |          CAST(n - 1 AS BIGINT)) AS ends
+         |      FROM b),
+         |u AS (SELECT doc_id, w,
+         |        unnest(starts) AS st, unnest(ends) AS en
+         |      FROM c),
+         |ch AS (SELECT doc_id, en - st + 1 AS n_tokens,
+         |         md5(array_to_string(w[st+1 : en+1], ' ')) AS chunk_fp
+         |       FROM u WHERE st <= en),
+         |chs AS (SELECT d.source, ch.n_tokens, ch.chunk_fp
+         |        FROM ch JOIN documents d USING (doc_id)),
+         |per AS (SELECT source, chunk_fp, CAST(count(*) AS BIGINT) AS cnt,
+         |          CAST(min(n_tokens) AS BIGINT) AS tok
+         |        FROM chs GROUP BY 1, 2),
+         |sa AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS n_chunks,
+         |         CAST(count(*) AS BIGINT) AS n_unique_chunks,
+         |         CAST(sum(cnt * tok) AS BIGINT) AS total_tokens,
+         |         CAST(sum(tok) AS BIGINT) AS unique_tokens
+         |       FROM per GROUP BY 1),
+         |gp AS (SELECT chunk_fp, CAST(count(*) AS BIGINT) AS cnt,
+         |          CAST(min(n_tokens) AS BIGINT) AS tok
+         |        FROM chs GROUP BY 1),
+         |ga AS (SELECT '(all)' AS source, CAST(sum(cnt) AS BIGINT) AS n_chunks,
+         |         CAST(count(*) AS BIGINT) AS n_unique_chunks,
+         |         CAST(sum(cnt * tok) AS BIGINT) AS total_tokens,
+         |         CAST(sum(tok) AS BIGINT) AS unique_tokens
+         |       FROM gp)
+         |SELECT source, n_chunks, n_unique_chunks, total_tokens, unique_tokens,
+         |  (2 * (total_tokens - unique_tokens) * 1000000 + total_tokens)
+         |    // (2 * total_tokens) AS savings_fp
+         |FROM (SELECT * FROM sa UNION ALL SELECT * FROM ga)
+         |ORDER BY source""".stripMargin
+    }),
+    // Provenance matrix: q_dedup_minhash's pairs at jaccard >= 0.5
+    // (compared on the ROUNDED value), sources attached both sides,
+    // unordered (least, greatest) key
+    Key("q_source_overlap", (s, d) => q_source_overlap(s, d),
+      """WITH sh AS (
+        |  SELECT doc_id, CASE WHEN len(w) >= 3
+        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
+        |    ELSE [text] END AS shingles
+        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents)),
+        |sig AS (
+        |  SELECT doc_id,
+        |SIG_COLUMNS
+        |  FROM sh),
+        |bands AS (
+        |  SELECT doc_id, concat_ws(':', h1, h2, h3, h4) AS band FROM sig
+        |  UNION ALL SELECT doc_id, concat_ws(':', h5, h6, h7, h8) FROM sig),
+        |cand AS (
+        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id),
+        |dsh AS (SELECT doc_id, list_distinct(shingles) AS sset FROM sh
+        |        WHERE NOT (len(shingles) = 1 AND shingles[1] IS NULL)),
+        |mh AS (
+        |  SELECT doc_a, doc_b,
+        |    round(CAST(len(list_intersect(x.sset, y.sset)) AS DOUBLE) / len(list_distinct(x.sset || y.sset)), 10) AS jaccard
+        |  FROM cand JOIN dsh x ON x.doc_id = doc_a JOIN dsh y ON y.doc_id = doc_b),
+        |so AS (
+        |  SELECT least(da.source, db.source) AS source_a,
+        |         greatest(da.source, db.source) AS source_b
+        |  FROM mh JOIN documents da ON da.doc_id = doc_a
+        |          JOIN documents db ON db.doc_id = doc_b
+        |  WHERE jaccard >= 0.5)
+        |SELECT source_a, source_b, CAST(count(*) AS BIGINT) AS n_pairs
+        |FROM so GROUP BY 1, 2 ORDER BY source_a, source_b""".stripMargin
+        .replace("SIG_COLUMNS",
+          (1 to 8).map(i => s"    ${duckMinhash(i)} AS h$i").mkString(",\n"))),
+    // Calibration: q_dedup_minhash's candidate CTEs plus the
+    // signature-agreement count; every output column is an integer
+    // (est = n_agree*125000 exactly; exact jaccard is x1e6
+    // round-half-up on integer set sizes), so the compare is
+    // bit-exact. NULL=NULL signature slots score 0 in both engines.
+    Key("q_minhash_calib", q_minhash_calib _,
+      """WITH sh AS (
+        |  SELECT doc_id, CASE WHEN len(w) >= 3
+        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
+        |    ELSE [text] END AS shingles
+        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents)),
+        |sig AS (
+        |  SELECT doc_id,
+        |SIG_COLUMNS
+        |  FROM sh),
+        |bands AS (
+        |  SELECT doc_id, concat_ws(':', h1, h2, h3, h4) AS band FROM sig
+        |  UNION ALL SELECT doc_id, concat_ws(':', h5, h6, h7, h8) FROM sig),
+        |cand AS (
+        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id),
+        |agree AS (
+        |  SELECT doc_a, doc_b, CAST(
+        |    (CASE WHEN x.h1 = y.h1 THEN 1 ELSE 0 END) +
+        |    (CASE WHEN x.h2 = y.h2 THEN 1 ELSE 0 END) +
+        |    (CASE WHEN x.h3 = y.h3 THEN 1 ELSE 0 END) +
+        |    (CASE WHEN x.h4 = y.h4 THEN 1 ELSE 0 END) +
+        |    (CASE WHEN x.h5 = y.h5 THEN 1 ELSE 0 END) +
+        |    (CASE WHEN x.h6 = y.h6 THEN 1 ELSE 0 END) +
+        |    (CASE WHEN x.h7 = y.h7 THEN 1 ELSE 0 END) +
+        |    (CASE WHEN x.h8 = y.h8 THEN 1 ELSE 0 END) AS BIGINT) AS n_agree
+        |  FROM cand JOIN sig x ON x.doc_id = doc_a JOIN sig y ON y.doc_id = doc_b),
+        |dsh AS (SELECT doc_id, list_distinct(shingles) AS s FROM sh
+        |        WHERE NOT (len(shingles) = 1 AND shingles[1] IS NULL)),
+        |ex AS (
+        |  SELECT doc_a, doc_b,
+        |    CAST(len(list_intersect(a.s, b.s)) AS BIGINT) AS inter,
+        |    CAST(len(list_distinct(a.s || b.s)) AS BIGINT) AS uni
+        |  FROM cand JOIN dsh a ON a.doc_id = doc_a JOIN dsh b ON b.doc_id = doc_b)
+        |SELECT p.doc_a, p.doc_b, n_agree,
+        |  CAST(n_agree * 125000 AS BIGINT) AS est_jaccard_fp,
+        |  CAST((2 * 1000000 * inter + uni) // (2 * uni) AS BIGINT) AS exact_jaccard_fp,
+        |  CAST(n_agree * 125000 - (2 * 1000000 * inter + uni) // (2 * uni) AS BIGINT) AS err_fp
+        |FROM agree p JOIN ex USING (doc_a, doc_b)
+        |ORDER BY p.doc_a, p.doc_b""".stripMargin
+        .replace("SIG_COLUMNS",
+          (1 to 8).map(i => s"    ${duckMinhash(i)} AS h$i").mkString(",\n"))),
+    // Exact run localization: every 8-gram hash60 with its position,
+    // df-bounded rare slice, fp self-join, gaps-and-islands on the
+    // (pair, diagonal) partition; run length = gram count + 7
+    Key("q_substr_runs", (s, d) => q_substr_runs(s, d), {
+      val h60 = duckHexValue("hx", 1, 15)
+      s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents
+         |           WHERE text IS NOT NULL),
+         |g AS (SELECT doc_id, unnest(range(1, len(w) - 6)) AS i, w
+         |      FROM t WHERE len(w) >= 8),
+         |fpt AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, CAST($h60 AS BIGINT) AS fp
+         |        FROM (SELECT doc_id, i, md5(array_to_string(w[i:i+7], ' ')) AS hx FROM g)),
+         |rare AS (SELECT fp FROM fpt GROUP BY fp
+         |         HAVING count(DISTINCT doc_id) BETWEEN 2 AND 10),
+         |f2 AS (SELECT fpt.* FROM fpt JOIN rare USING (fp)),
+         |m AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         |        a.pos AS pa, b.pos AS pb, a.pos - b.pos AS diag
+         |      FROM f2 a JOIN f2 b ON a.fp = b.fp AND a.doc_id < b.doc_id),
+         |isl AS (SELECT *, pa - row_number()
+         |          OVER (PARTITION BY doc_a, doc_b, diag ORDER BY pa) AS island
+         |        FROM m)
+         |SELECT doc_a, doc_b, CAST(min(pa) AS BIGINT) AS a_from,
+         |  CAST(min(pb) AS BIGINT) AS b_from,
+         |  CAST(count(*) + 7 AS BIGINT) AS n_tokens
+         |FROM isl GROUP BY doc_a, doc_b, diag, island
+         |ORDER BY doc_a, doc_b, a_from, b_from""".stripMargin
+    }),
+    // Agreement: the q_dedup_minhash chain (sh/sig/bands/cand/dsh)
+    // and the q_dedup_simhash chain (w/h/v/s — disjoint CTE names by
+    // construction) full-outer joined on the pair key; flags are
+    // presence booleans, scores ride where computed.
+    Key("q_dedup_agreement", q_dedup_agreement _,
+      s"""WITH sh AS (
+        |  SELECT doc_id, CASE WHEN len(w) >= 3
+        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
+        |    ELSE [text] END AS shingles
+        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents)),
+        |sig AS (
+        |  SELECT doc_id,
+        |SIG_COLUMNS
+        |  FROM sh),
+        |bands AS (
+        |  SELECT doc_id, concat_ws(':', h1, h2, h3, h4) AS band FROM sig
+        |  UNION ALL SELECT doc_id, concat_ws(':', h5, h6, h7, h8) FROM sig),
+        |cand AS (
+        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id),
+        |dsh AS (SELECT doc_id, list_distinct(shingles) AS sset FROM sh
+        |        WHERE NOT (len(shingles) = 1 AND shingles[1] IS NULL)),
+        |mh AS (
+        |  SELECT doc_a AS ma, doc_b AS mb,
+        |    round(CAST(len(list_intersect(x.sset, y.sset)) AS DOUBLE) / len(list_distinct(x.sset || y.sset)), 10) AS jaccard
+        |  FROM cand JOIN dsh x ON x.doc_id = doc_a JOIN dsh y ON y.doc_id = doc_b),
+        |$duckSimhashCtes,
+        |shp AS (
+        |  SELECT a.doc_id AS sa, b.doc_id AS sb,
+        |    CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
+        |  FROM s a, s b
+        |  WHERE a.doc_id < b.doc_id AND bit_count(xor(a.simhash, b.simhash)) <= 1)
+        |SELECT coalesce(ma, sa) AS doc_a, coalesce(mb, sb) AS doc_b,
+        |  ma IS NOT NULL AS in_minhash, sa IS NOT NULL AS in_simhash,
+        |  jaccard, hamming
+        |FROM mh FULL OUTER JOIN shp ON ma = sa AND mb = sb
+        |ORDER BY doc_a, doc_b""".stripMargin
+        .replace("SIG_COLUMNS",
+          (1 to 8).map(i => s"    ${duckMinhash(i)} AS h$i").mkString(",\n"))),
+    // Containment: q_dedup_minhash's candidate CTEs, with Broder
+    // containment both directions + the quote_like flag compared on
+    // ROUNDED values (both engines branch identically)
+    Key("q_containment", q_containment _,
+      """WITH sh AS (
+        |  SELECT doc_id, CASE WHEN len(w) >= 3
+        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
+        |    ELSE [text] END AS shingles
+        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents)),
+        |sig AS (
+        |  SELECT doc_id,
+        |SIG_COLUMNS
+        |  FROM sh),
+        |bands AS (
+        |  SELECT doc_id, concat_ws(':', h1, h2, h3, h4) AS band FROM sig
+        |  UNION ALL SELECT doc_id, concat_ws(':', h5, h6, h7, h8) FROM sig),
+        |cand AS (
+        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id),
+        |dsh AS (SELECT doc_id, list_distinct(shingles) AS s FROM sh
+        |        WHERE NOT (len(shingles) = 1 AND shingles[1] IS NULL)),
+        |sc AS (
+        |  SELECT doc_a, doc_b,
+        |    round(CAST(len(list_intersect(x.s, y.s)) AS DOUBLE)
+        |      / len(list_distinct(x.s || y.s)), 10) AS jaccard,
+        |    round(CAST(len(list_intersect(x.s, y.s)) AS DOUBLE) / len(x.s), 10)
+        |      AS containment_a,
+        |    round(CAST(len(list_intersect(x.s, y.s)) AS DOUBLE) / len(y.s), 10)
+        |      AS containment_b
+        |  FROM cand JOIN dsh x ON x.doc_id = doc_a JOIN dsh y ON y.doc_id = doc_b)
+        |SELECT doc_a, doc_b, jaccard, containment_a, containment_b,
+        |  (greatest(containment_a, containment_b) >= 0.8 AND jaccard < 0.5)
+        |    AS quote_like
+        |FROM sc ORDER BY doc_a, doc_b""".stripMargin
+        .replace("SIG_COLUMNS",
+          (1 to 8).map(i => s"    ${duckMinhash(i)} AS h$i").mkString(",\n"))),
+    // Fuzzy decontamination: same sig/band CTEs as q_dedup_minhash,
+    // but bands join corpus-side against bench-side (doc_id%100 split,
+    // q_contamination's convention) instead of self-joining; exact
+    // shingle Jaccard confirms; argmax via row_number on the rounded
+    // score (engine-stable ordering), left join keeps clean docs.
+    Key("q_contamination_fuzzy", q_contamination_fuzzy _,
+      """WITH sh AS (
+        |  SELECT doc_id, CASE WHEN len(w) >= 3
+        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
+        |    ELSE [text] END AS shingles
+        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents)),
+        |sig AS (
+        |  SELECT doc_id,
+        |SIG_COLUMNS
+        |  FROM sh),
+        |bands AS (
+        |  SELECT doc_id, concat_ws(':', h1, h2, h3, h4) AS band FROM sig
+        |  UNION ALL SELECT doc_id, concat_ws(':', h5, h6, h7, h8) FROM sig),
+        |cand AS (
+        |  SELECT DISTINCT c.doc_id, b.doc_id AS bench_id
+        |  FROM bands c JOIN bands b ON c.band = b.band
+        |  WHERE c.doc_id % 100 >= 2 AND b.doc_id % 100 < 2),
+        |dsh AS (SELECT doc_id, list_distinct(shingles) AS s FROM sh
+        |        WHERE NOT (len(shingles) = 1 AND shingles[1] IS NULL)),
+        |conf AS (
+        |  SELECT cand.doc_id, cand.bench_id,
+        |    round(CAST(len(list_intersect(x.s, y.s)) AS DOUBLE) / len(list_distinct(x.s || y.s)), 10) AS jaccard
+        |  FROM cand JOIN dsh x ON x.doc_id = cand.doc_id
+        |            JOIN dsh y ON y.doc_id = cand.bench_id),
+        |rb AS (
+        |  SELECT doc_id, bench_id, jaccard,
+        |    row_number() OVER (PARTITION BY doc_id ORDER BY jaccard DESC, bench_id) AS rn,
+        |    CAST(count(*) OVER (PARTITION BY doc_id) AS BIGINT) AS n_cand
+        |  FROM conf)
+        |SELECT d.doc_id, coalesce(r.n_cand, 0) AS n_cand,
+        |  r.bench_id AS best_bench_id, r.jaccard AS best_jaccard,
+        |  coalesce(r.jaccard >= 0.5, false) AS contaminated
+        |FROM (SELECT doc_id FROM documents WHERE doc_id % 100 >= 2) d
+        |LEFT JOIN (SELECT * FROM rb WHERE rn = 1) r ON d.doc_id = r.doc_id
+        |ORDER BY d.doc_id""".stripMargin
+        .replace("SIG_COLUMNS",
+          (1 to 8).map(i => s"    ${duckMinhash(i)} AS h$i").mkString(",\n"))),
+    Key("q_ngram_jaccard", q_ngram_jaccard _,
+      """WITH sh AS (
+        |  SELECT doc_id, list_distinct(CASE WHEN len(w) >= 3
+        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
+        |    ELSE [text] END) AS s
+        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents
+        |        WHERE doc_id < 40 AND text IS NOT NULL))
+        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |  round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(list_distinct(a.s || b.s)), 10) AS jaccard
+        |FROM sh a, sh b WHERE a.doc_id < b.doc_id ORDER BY doc_a, doc_b""".stripMargin),
+    // AllPairs truth: the quadratic inverted-index form (co-occurring
+    // pair intersection counts) — prefix filtering is EXACT, so the
+    // scalable Spark plan must reproduce this byte for byte.
+    Key("q_dedup_allpairs", q_dedup_allpairs _,
+      """WITH sh AS (
+        |  SELECT doc_id, list_distinct(
+        |    [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]) AS g
+        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents
+        |        WHERE text IS NOT NULL)
+        |  WHERE len(w) >= 3),
+        |e AS (SELECT doc_id, unnest(g) AS sh FROM sh),
+        |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM e GROUP BY 1),
+        |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |            CAST(count(*) AS BIGINT) AS n_inter
+        |          FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
+        |          GROUP BY 1, 2)
+        |SELECT doc_a, doc_b, n_inter, sa.n AS n_a, sb.n AS n_b,
+        |  (2 * n_inter * 1000000 + (sa.n + sb.n - n_inter))
+        |    // (2 * (sa.n + sb.n - n_inter)) AS j_fp
+        |FROM inter JOIN sz sa ON doc_a = sa.doc_id
+        |           JOIN sz sb ON doc_b = sb.doc_id
+        |WHERE 3 * n_inter >= sa.n + sb.n
+        |ORDER BY doc_a, doc_b""".stripMargin),
+    // Bit b of the simhash = bit b%4 of hex nibble b/4 of md5(word) —
+    // identical strings, identical md5s, identical bits in both engines.
+    Key("q_simhash", q_simhash _,
+      s"""WITH $duckSimhashCtes
+         |SELECT doc_id, simhash FROM s ORDER BY doc_id""".stripMargin),
+    // banding is pure pruning (pigeonhole: maxHamming+1 bands — here
+    // 2 bands for the default threshold 1, so a pair differing in <=1
+    // bit leaves at least one band equal), so the oracle can skip it
+    // and take ALL pairs within the Hamming threshold — same result by
+    // theory, and the hash-match proves the banded path loses no
+    // pairs. Like q_sim_lsh's oracle, this SQL carries no maxBucket
+    // cap: parity holds while no band bucket exceeds candidatePairs'
+    // 10k ceiling (an overflowed bucket would make the Spark side drop
+    // pairs the oracle keeps; the cap's drop semantics are unit-tested
+    // separately).
+    Key("q_dedup_simhash", (s, d) => q_dedup_simhash(s, d),
+      s"""WITH $duckSimhashCtes
+         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
+         |FROM s a, s b
+         |WHERE a.doc_id < b.doc_id AND bit_count(xor(a.simhash, b.simhash)) <= 1
+         |ORDER BY doc_a, doc_b""".stripMargin),
+    // block-level exact dedup: 20-word blocks, first-occurrence
+    // ownership by (doc_id, pos) via the same row_number window; DuckDB
+    // 1-based inclusive slicing ws[a:b] == Spark slice(w, a, 20); a
+    // fully-dropped doc keeps '' (coalesce of string_agg) on both
+    // sides, a null doc keeps NULL via the left join
+    Key("q_dedup_block", (s, d) => q_dedup_block(s, d),
+      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws
+        |           FROM documents WHERE text IS NOT NULL),
+        |b0 AS (SELECT doc_id, ws,
+        |         unnest(range(0, CAST(ceil(len(ws)/20.0) AS BIGINT))) AS pos FROM d),
+        |b AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos,
+        |        array_to_string(ws[pos*20 + 1 : pos*20 + 20], ' ') AS block FROM b0),
+        |f AS (SELECT doc_id, pos, block,
+        |        (row_number() OVER (PARTITION BY md5(block) ORDER BY doc_id, pos)) = 1 AS kept
+        |      FROM b),
+        |p AS (SELECT doc_id, count(*) AS n_blocks,
+        |        CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+        |        coalesce(string_agg(CASE WHEN kept THEN block END, ' ' ORDER BY pos), '') AS kept_text
+        |      FROM f GROUP BY doc_id)
+        |SELECT doc.doc_id, coalesce(n_blocks, 0) AS n_blocks,
+        |  coalesce(n_kept, 0) AS n_kept, kept_text
+        |FROM documents doc LEFT JOIN p USING (doc_id)
+        |ORDER BY doc.doc_id""".stripMargin),
+    // exact substring-level dedup (Lee et al. 2021 style): every-8-gram
+    // fingerprints, first-occurrence ownership (rn > 1 == Spark's
+    // struct-min filter — (doc_id, pos) is unique per fp), then the
+    // running-max interval merge; DuckDB list_slice is 1-based
+    // inclusive == Spark slice(w, p, 8); sum() is HUGEINT -> CAST
+    Key("q_dedup_substr", (s, d) => q_dedup_substr(s, d),
+      """WITH toks AS (SELECT doc_id,
+        |         list_filter(string_split(text, ' '), x -> x <> '') AS w
+        |       FROM documents WHERE text IS NOT NULL),
+        |base AS (SELECT doc_id, w, CAST(len(w) AS BIGINT) AS n_tokens FROM toks),
+        |grams AS (SELECT doc_id, CAST(p AS BIGINT) AS pos,
+        |        md5(array_to_string(list_slice(w, p, p + 7), ' ')) AS fp
+        |      FROM base, unnest(range(1, CAST(n_tokens - 6 AS BIGINT))) AS t(p)
+        |      WHERE n_tokens >= 8),
+        |marked AS (SELECT doc_id, pos,
+        |        row_number() OVER (PARTITION BY fp ORDER BY doc_id, pos) AS rn
+        |      FROM grams),
+        |dups AS (SELECT doc_id, pos AS s, pos + 7 AS e FROM marked WHERE rn > 1),
+        |m AS (SELECT doc_id, s, e,
+        |        max(e) OVER (PARTITION BY doc_id ORDER BY s
+        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
+        |      FROM dups),
+        |flg AS (SELECT doc_id, s, e,
+        |        CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END AS ns FROM m),
+        |grp AS (SELECT doc_id, s, e,
+        |        sum(ns) OVER (PARTITION BY doc_id ORDER BY s) AS g FROM flg),
+        |spans AS (SELECT doc_id, g, min(s) AS ss, max(e) AS ee
+        |      FROM grp GROUP BY doc_id, g),
+        |per_doc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans,
+        |        CAST(sum(ee - ss + 1) AS BIGINT) AS dup_tokens
+        |      FROM spans GROUP BY doc_id)
+        |SELECT doc.doc_id,
+        |  coalesce(b.n_tokens, 0) AS n_tokens,
+        |  coalesce(p.dup_tokens, 0) AS dup_tokens,
+        |  coalesce(p.n_spans, 0) AS n_spans,
+        |  coalesce(b.n_tokens, 0) - coalesce(p.dup_tokens, 0) AS kept_tokens,
+        |  CASE WHEN coalesce(b.n_tokens, 0) = 0 THEN 0
+        |    ELSE (2 * coalesce(p.dup_tokens, 0) * 1000000 + b.n_tokens)
+        |         // (2 * b.n_tokens) END AS dup_share_fp
+        |FROM documents doc
+        |LEFT JOIN base b USING (doc_id)
+        |LEFT JOIN per_doc p USING (doc_id)
+        |ORDER BY doc.doc_id""".stripMargin),
+    // sorted-neighborhood dedup: in-block lead window over the
+    // normalized sort key, levenshtein confirm on candidates only;
+    // regexp_replace needs the 'g' flag (DuckDB default replaces the
+    // FIRST match; Spark replaces all)
+    Key("q_dedup_sorted", (s, d) => q_dedup_sorted(s, d),
+      """WITH k AS (SELECT doc_id,
+        |         lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm
+        |       FROM documents WHERE text IS NOT NULL),
+        |b AS (SELECT doc_id, norm, substr(norm, 1, 12) AS blk FROM k),
+        |w AS (SELECT blk, doc_id, norm,
+        |        lead(doc_id,1) OVER sw AS id_1, lead(norm,1) OVER sw AS norm_1,
+        |        lead(doc_id,2) OVER sw AS id_2, lead(norm,2) OVER sw AS norm_2,
+        |        lead(doc_id,3) OVER sw AS id_3, lead(norm,3) OVER sw AS norm_3
+        |      FROM b WINDOW sw AS (PARTITION BY blk ORDER BY norm, doc_id)),
+        |p AS (SELECT doc_id AS a_id, id_1 AS b_id,
+        |        CAST(levenshtein(norm, norm_1) AS BIGINT) AS dist
+        |      FROM w WHERE id_1 IS NOT NULL
+        |      UNION ALL SELECT doc_id, id_2, CAST(levenshtein(norm, norm_2) AS BIGINT)
+        |      FROM w WHERE id_2 IS NOT NULL
+        |      UNION ALL SELECT doc_id, id_3, CAST(levenshtein(norm, norm_3) AS BIGINT)
+        |      FROM w WHERE id_3 IS NOT NULL)
+        |SELECT a_id, b_id, dist FROM p WHERE dist <= 12
+        |ORDER BY a_id, b_id""".stripMargin),
+    // df = distinct docs per block via dense_rank + partition max
+    // (mirrors the Spark two-window form); blocks with df >= 2 are
+    // boilerplate and removed from ALL docs; n_kept CAST BIGINT
+    // (DuckDB sum() returns HUGEINT — the q_corpus_report lesson)
+    Key("q_boilerplate", (s, d) => q_boilerplate(s, d),
+      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws
+        |           FROM documents WHERE text IS NOT NULL),
+        |b0 AS (SELECT doc_id, ws,
+        |         unnest(range(0, CAST(ceil(len(ws)/20.0) AS BIGINT))) AS pos FROM d),
+        |b AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos,
+        |        array_to_string(ws[pos*20 + 1 : pos*20 + 20], ' ') AS block FROM b0),
+        |f AS (SELECT doc_id, pos, block,
+        |        dense_rank() OVER (PARTITION BY md5(block) ORDER BY doc_id) AS dr
+        |      FROM b),
+        |g AS (SELECT doc_id, pos, block,
+        |        (max(dr) OVER (PARTITION BY md5(block))) < 2 AS kept FROM f),
+        |p AS (SELECT doc_id, count(*) AS n_blocks,
+        |        CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+        |        coalesce(string_agg(CASE WHEN kept THEN block END, ' ' ORDER BY pos), '') AS kept_text
+        |      FROM g GROUP BY doc_id)
+        |SELECT doc.doc_id, coalesce(n_blocks, 0) AS n_blocks,
+        |  coalesce(n_kept, 0) AS n_kept, kept_text
+        |FROM documents doc LEFT JOIN p USING (doc_id)
+        |ORDER BY doc.doc_id""".stripMargin),
+  )
 }

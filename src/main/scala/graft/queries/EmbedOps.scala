@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SparkEntry.Key
 import graft.Tables._
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -650,4 +651,239 @@ object EmbedOps {
     }
     selected.toSeq.toDF("step", "vec_id", "radius_d2").orderBy("step")
   }
+
+  /** The integer power-iteration CTE chain (xq quantized vectors,
+    * covariance cells → mu → symmetric mat, it0..it`iters` iterations
+    * ending with x`iters`'s max) — shared by the q_pca_power and
+    * q_pca_project oracles. w$k is referenced twice (x$k and it$k)
+    * and the chain nests K deep: without AS MATERIALIZED, inlined-CTE
+    * re-evaluation makes the plan 2^K copies of the whole prefix
+    * (measured: the sf0.01 oracle never finished). MATERIALIZED pins
+    * the evaluate-once semantics the Spark side gets from
+    * localCheckpoint.
+    */
+  private def duckPcaCtes(iters: Int): String = {
+    val steps = (1 to iters).map { k =>
+      val prev = s"it${k - 1}"
+      s"""w$k AS MATERIALIZED (
+         |  SELECT m.i AS dim, CAST(sum(m.m * v.v) AS BIGINT) AS w
+         |  FROM mat m JOIN $prev v ON m.j = v.dim GROUP BY 1),
+         |x$k AS (SELECT CAST(max(abs(w)) AS BIGINT) AS mx FROM w$k),
+         |it$k AS (SELECT dim, CASE WHEN mx > 0 THEN
+         |    (CASE WHEN w >= 0 THEN (w * 100000) // mx
+         |     ELSE -(((-w) * 100000) // mx) END)
+         |  ELSE 0 END AS v FROM w$k, x$k)""".stripMargin
+    }.mkString(",\n")
+    s"""x0 AS (SELECT vec_id,
+       |    CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS d,
+       |    unnest(embedding::DOUBLE[]) AS v
+       |  FROM embeddings WHERE embedding IS NOT NULL),
+       |xq AS (SELECT vec_id, d, CAST(floor(v * 1e6 + 0.5) AS BIGINT) AS q
+       |       FROM x0),
+       |cells AS (SELECT a.d AS i, b.d AS j, CAST(count(*) AS BIGINT) AS n,
+       |    CAST(sum(a.q * b.q) AS BIGINT) AS s_ij
+       |  FROM xq a JOIN xq b ON a.vec_id = b.vec_id AND a.d <= b.d
+       |  GROUP BY 1, 2),
+       |dvs AS (SELECT d, CAST(sum(q) AS BIGINT) AS s FROM xq GROUP BY 1),
+       |mu AS (SELECT c.i, c.j,
+       |    CAST(CASE WHEN CAST(c.n AS HUGEINT) * c.s_ij - CAST(di.s AS HUGEINT) * dj.s >= 0
+       |      THEN (CAST(c.n AS HUGEINT) * c.s_ij - CAST(di.s AS HUGEINT) * dj.s)
+       |           // (CAST(c.n AS HUGEINT) * c.n * 1000000)
+       |      ELSE -((CAST(di.s AS HUGEINT) * dj.s - CAST(c.n AS HUGEINT) * c.s_ij)
+       |             // (CAST(c.n AS HUGEINT) * c.n * 1000000))
+       |    END AS BIGINT) AS m
+       |  FROM cells c JOIN dvs di ON c.i = di.d JOIN dvs dj ON c.j = dj.d),
+       |mat AS MATERIALIZED (SELECT i, j, m FROM mu
+       |        UNION ALL SELECT j, i, m FROM mu WHERE i <> j),
+       |it0 AS (SELECT DISTINCT i AS dim, CAST(100000 AS BIGINT) AS v
+       |        FROM mat),
+       |$steps""".stripMargin
+  }
+
+  val keys: Seq[Key] = Seq(
+    Key("q_embed_stats", q_embed_stats _,
+      """SELECT vec_id,
+        |  CAST(len(embedding) AS BIGINT) AS dim,
+        |  round(sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x*x))), 6) AS l2_norm,
+        |  list_max(embedding::DOUBLE[]) AS max_val,
+        |  list_min(embedding::DOUBLE[]) AS min_val
+        |FROM embeddings ORDER BY vec_id""".stripMargin),
+    // floor(x+0.5), not round(): the engines disagree on .5 ties
+    Key("q_embed_quant", q_embed_quant _,
+      """WITH s AS (SELECT vec_id, embedding::DOUBLE[] AS e,
+        |  127.0 / greatest(list_max(embedding::DOUBLE[]), -list_min(embedding::DOUBLE[])) AS scale
+        |  FROM embeddings WHERE vec_id < 100)
+        |SELECT vec_id, CAST(generate_subscripts(e,1) - 1 AS BIGINT) AS dim,
+        |  CAST(floor(unnest(e) * scale + 0.5) AS BIGINT) AS q
+        |FROM s ORDER BY vec_id, dim""".stripMargin),
+    // per-dim calibration: floor(v*1e6+0.5) fixed-point (float grids
+    // DO hit exact .5 ties — k/128 * 1e6 — and engine round() modes
+    // differ); HUGEINT sums mirror Spark's decimal(38,0) exactly
+    Key("q_embed_calib", q_embed_calib _,
+      """WITH x AS (
+        |  SELECT CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS dim,
+        |    unnest(embedding::DOUBLE[]) AS v
+        |  FROM embeddings),
+        |a AS (
+        |  SELECT dim, count(*) AS n,
+        |    sum(CAST(floor(v * 1e6 + 0.5) AS BIGINT)) AS sx,
+        |    sum(CAST(floor(v * 1e6 + 0.5) AS BIGINT) * CAST(floor(v * 1e6 + 0.5) AS BIGINT)) AS sxx,
+        |    min(v) AS min_val, max(v) AS max_val
+        |  FROM x WHERE v IS NOT NULL GROUP BY dim)
+        |SELECT dim, n,
+        |  round(CAST(sx AS DOUBLE) / n / 1e6, 6) AS mean,
+        |  CASE WHEN n > 1
+        |       THEN round(sqrt(CAST(n * sxx - sx * sx AS DOUBLE) / (n * (n - 1))) / 1e6, 6) END AS std,
+        |  min_val, max_val,
+        |  CASE WHEN greatest(abs(min_val), abs(max_val)) > 0
+        |       THEN round(127.0 / greatest(abs(min_val), abs(max_val)), 6) END AS scale
+        |FROM a ORDER BY dim""".stripMargin),
+    // centroid-distance outliers: x1e6 grid, sign-separated centroid
+    // rounding, exact integer d2, row_number mirrors the heap ranks
+    Key("q_embed_outliers", (s, d) => q_embed_outliers(s, d),
+      """WITH el AS (SELECT vec_id,
+        |    CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS dim,
+        |    CAST(floor(unnest(embedding::DOUBLE[]) * 1e6 + 0.5) AS BIGINT) AS x
+        |  FROM embeddings),
+        |cen AS (SELECT dim,
+        |    CASE WHEN sum(x) >= 0
+        |      THEN (2 * CAST(sum(x) AS BIGINT) + count(*)) // (2 * count(*))
+        |      ELSE -((2 * abs(CAST(sum(x) AS BIGINT)) + count(*))
+        |             // (2 * count(*))) END AS c
+        |  FROM el WHERE x IS NOT NULL GROUP BY 1),
+        |d2 AS (SELECT el.vec_id,
+        |    CAST(sum((el.x - cen.c) * (el.x - cen.c)) AS BIGINT) AS d2
+        |  FROM el JOIN cen ON el.dim = cen.dim
+        |  WHERE el.x IS NOT NULL GROUP BY 1),
+        |r AS (SELECT vec_id, d2, CAST(row_number() OVER
+        |        (ORDER BY d2 DESC, vec_id) AS BIGINT) AS rank FROM d2)
+        |SELECT vec_id, d2, rank FROM r WHERE rank <= 20
+        |ORDER BY rank""".stripMargin),
+    // per-dim mean drift: floor(v*1e6+0.5) grid, mean difference
+    // cleared to (s_ref*n_cur - s_cur*n_ref)/(n_ref*n_cur), sign
+    // separated before the round-half-up division
+    Key("q_embed_drift", q_embed_drift _,
+      """WITH x AS (SELECT vec_id % 2 = 0 AS ref,
+        |    CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS dim,
+        |    unnest(embedding::DOUBLE[]) AS v
+        |  FROM embeddings),
+        |a AS (SELECT dim,
+        |    CAST(sum(CASE WHEN ref THEN 1 ELSE 0 END) AS BIGINT) AS n_ref,
+        |    CAST(sum(CASE WHEN NOT ref THEN 1 ELSE 0 END) AS BIGINT) AS n_cur,
+        |    CAST(sum(CASE WHEN ref THEN CAST(floor(v * 1e6 + 0.5) AS BIGINT)
+        |             ELSE 0 END) AS BIGINT) AS s_ref,
+        |    CAST(sum(CASE WHEN NOT ref THEN CAST(floor(v * 1e6 + 0.5) AS BIGINT)
+        |             ELSE 0 END) AS BIGINT) AS s_cur
+        |  FROM x WHERE v IS NOT NULL GROUP BY dim)
+        |SELECT dim, n_ref, n_cur, s_ref, s_cur,
+        |  CASE WHEN n_ref = 0 OR n_cur = 0 THEN NULL ELSE
+        |    (CASE WHEN s_ref*n_cur - s_cur*n_ref < 0 THEN -1 ELSE 1 END) *
+        |    ((2 * abs(s_ref*n_cur - s_cur*n_ref) + n_ref*n_cur) //
+        |     (2 * n_ref*n_cur)) END AS mean_diff_fp
+        |FROM a ORDER BY dim""".stripMargin),
+    // JL projection oracle is GENERATED from the same pinned sign
+    // matrix the Spark expressions read (EmbedOps.rpSigns)
+    Key("q_embed_rp", q_embed_rp _, rpOracleSql),
+    // Covariance truth: self-join the per-(vec, dim) quantized table
+    // on vec_id (quadratic in d, fine at oracle scale); the Spark
+    // side is the one-shuffle bounded-key row-local pair build. Sums
+    // re-cast to BIGINT (DuckDB widens to HUGEINT); corr is the one
+    // mirrored double expression.
+    Key("q_embed_cov", q_embed_cov _,
+      """WITH x0 AS (SELECT vec_id,
+        |    CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS d,
+        |    unnest(embedding::DOUBLE[]) AS v
+        |  FROM embeddings WHERE embedding IS NOT NULL),
+        |x AS (SELECT vec_id, d, CAST(floor(v * 1e6 + 0.5) AS BIGINT) AS q
+        |      FROM x0),
+        |cells AS (SELECT a.d AS i, b.d AS j, CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(a.q * b.q) AS BIGINT) AS s_ij
+        |  FROM x a JOIN x b ON a.vec_id = b.vec_id AND a.d <= b.d
+        |  GROUP BY 1, 2),
+        |dv AS (SELECT d, CAST(sum(q) AS BIGINT) AS s,
+        |    CAST(count(*) AS HUGEINT) * CAST(sum(q * q) AS HUGEINT)
+        |      - CAST(sum(q) AS HUGEINT) * CAST(sum(q) AS HUGEINT) AS vnum
+        |  FROM x GROUP BY 1)
+        |SELECT c.i, c.j, c.n, c.s_ij,
+        |  CAST(CASE WHEN CAST(c.n AS HUGEINT) * c.s_ij - CAST(di.s AS HUGEINT) * dj.s >= 0
+        |    THEN (CAST(c.n AS HUGEINT) * c.s_ij - CAST(di.s AS HUGEINT) * dj.s)
+        |         // (CAST(c.n AS HUGEINT) * c.n)
+        |    ELSE -((CAST(di.s AS HUGEINT) * dj.s - CAST(c.n AS HUGEINT) * c.s_ij)
+        |           // (CAST(c.n AS HUGEINT) * c.n))
+        |  END AS BIGINT) AS cov_fp12,
+        |  CASE WHEN di.vnum > 0 AND dj.vnum > 0
+        |    THEN round((CAST(c.n AS HUGEINT) * c.s_ij - CAST(di.s AS HUGEINT) * dj.s)
+        |               / (sqrt(di.vnum) * sqrt(dj.vnum)), 6)
+        |  END AS corr
+        |FROM cells c JOIN dv di ON c.i = di.d JOIN dv dj ON c.j = dj.d
+        |ORDER BY c.i, c.j""".stripMargin),
+    // Power-iteration truth: the same covariance cells, mirrored to
+    // the full matrix, then K = 8 unrolled integer iterations (join +
+    // max-abs normalize per step) — every op is integer, so the
+    // prefix replays identically
+    Key("q_pca_power", (s, d) => q_pca_power(s, d),
+      s"""WITH ${duckPcaCtes(8)}
+         |SELECT v.dim, v.v AS v_fp,
+         |  (SELECT mx FROM x8) // 100000 AS lambda_fp
+         |FROM it8 v ORDER BY v.dim""".stripMargin),
+    // Projection onto the q_pca_power direction (shared CTE chain):
+    // exact long dot products of the quantized vectors with the
+    // integer eigendirection; explained-variance share from the
+    // covariance trace (diagonal mu cells), x1e6 round-half-up.
+    Key("q_pca_project", q_pca_project _,
+      s"""WITH ${duckPcaCtes(8)},
+         |lam AS (SELECT mx // 100000 AS lambda_fp FROM x8),
+         |tr AS (SELECT CAST(sum(m) AS BIGINT) AS trace FROM mu WHERE i = j),
+         |pr AS (SELECT xq.vec_id, CAST(sum(xq.q * v.v) AS BIGINT) AS proj_fp
+         |       FROM xq JOIN it8 v ON xq.d = v.dim GROUP BY 1)
+         |SELECT vec_id, proj_fp, lambda_fp,
+         |  (2 * lambda_fp * 1000000 + trace) // (2 * trace) AS ev_share_fp
+         |FROM pr, lam, tr ORDER BY vec_id""".stripMargin),
+    // list(v ORDER BY vec_id) fixes the accumulation order on both
+    // sides — float sums are order-dependent in the last bits
+    Key("q_embed_centroid", (s, d) => q_embed_centroid(s, d),
+      """WITH pe AS (
+        |  SELECT vec_id % 8 AS cell, vec_id,
+        |    CAST(generate_subscripts(embedding,1) - 1 AS BIGINT) AS dim,
+        |    unnest(embedding::DOUBLE[]) AS v
+        |  FROM embeddings WHERE vec_id < 256)
+        |SELECT cell, dim,
+        |  round(list_sum(list(v ORDER BY vec_id)) / count(*), 6) AS centroid,
+        |  count(*) AS n
+        |FROM pe GROUP BY cell, dim ORDER BY cell, dim""".stripMargin),
+    // Greedy k-center: unrolled selection CTEs, every step
+    // MATERIALIZED (the q_pca_power inlined-CTE lesson); each c$i is
+    // the farthest-point argmax (d2 DESC, vec_id), m$i the running
+    // min-distance table after adding it; exclusion by the explicit
+    // id list, mirroring the Spark isin filter
+    Key("q_kcenter", (s, d) => q_kcenter(s, d), {
+      val k = 8
+      val dist = (a: String, b: String) =>
+        s"CAST(list_sum(list_transform(range(1, len($a) + 1), " +
+          s"i -> ($a[i] - $b[i]) * ($a[i] - $b[i]))) AS BIGINT)"
+      val steps = (2 to k).map { i =>
+        val notIn = (1 until i).map(j => s"SELECT vec_id FROM c$j")
+          .mkString(" UNION ALL ")
+        s"""c$i AS MATERIALIZED (SELECT vec_id, q, d2 FROM m${i - 1}
+           |  WHERE vec_id NOT IN ($notIn)
+           |  ORDER BY d2 DESC, vec_id LIMIT 1),
+           |m$i AS MATERIALIZED (SELECT m.vec_id, m.q,
+           |    least(m.d2, ${dist("m.q", "c.q")}) AS d2
+           |  FROM m${i - 1} m, c$i c)""".stripMargin
+      }.mkString(",\n")
+      val out = (s"SELECT CAST(1 AS BIGINT) AS step, vec_id, " +
+        s"CAST(0 AS BIGINT) AS radius_d2 FROM c1") +:
+        (2 to k).map(i => s"SELECT CAST($i AS BIGINT), vec_id, d2 FROM c$i")
+      s"""WITH xq AS MATERIALIZED (SELECT vec_id,
+         |    list_transform(embedding::DOUBLE[],
+         |      x -> CAST(floor(x * 1000000 + 0.5) AS BIGINT)) AS q
+         |  FROM embeddings
+         |  WHERE embedding IS NOT NULL AND len(embedding) > 0),
+         |c1 AS MATERIALIZED (SELECT vec_id, q FROM xq ORDER BY vec_id LIMIT 1),
+         |m1 AS MATERIALIZED (SELECT x.vec_id, x.q,
+         |    ${dist("x.q", "c.q")} AS d2 FROM xq x, c1 c),
+         |$steps
+         |SELECT * FROM (${out.mkString("\nUNION ALL\n")}) ORDER BY step""".stripMargin
+    }),
+  )
 }

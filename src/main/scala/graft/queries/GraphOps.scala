@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SparkEntry.Key
 import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1150,4 +1151,394 @@ object GraphOps {
                |END""".stripMargin).as("term_fp"))
       .orderBy("label")
   }
+
+  // The co-partitioned iteration joins are physical variants only:
+  // each _copart key shares its base key's oracle text, since the
+  // fixed-point ranks and hop labels must come out identical.
+  private val pagerankOracle: String = {
+    val iters = 3
+    val steps = (1 to iters).map { i =>
+      val prev = if (i == 1) "r0" else s"r${i - 1}"
+      s"""r$i AS (SELECT node,
+         |  CAST(150000000000 // (SELECT n FROM nn)
+         |       + (85 * s) // 100 AS BIGINT) AS fp
+         |FROM (SELECT e.dst AS node, sum(r.fp // d.deg) AS s
+         |      FROM e JOIN $prev r ON e.src = r.node
+         |             JOIN dg d ON e.src = d.src
+         |      GROUP BY e.dst))""".stripMargin
+    }.mkString(",\n")
+    s"""WITH e0 AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS a,
+       |                   's' || CAST(l.l_suppkey AS VARCHAR) AS b
+       |            FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
+       |e AS (SELECT a AS src, b AS dst FROM e0
+       |      UNION ALL SELECT b AS src, a AS dst FROM e0),
+       |dg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY 1),
+       |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM dg),
+       |r0 AS (SELECT src AS node,
+       |         CAST(1000000000000 // (SELECT n FROM nn) AS BIGINT) AS fp
+       |       FROM dg),
+       |$steps
+       |SELECT r.node, d.deg, r.fp AS rank_fp,
+       |  CAST(r.fp AS DOUBLE) / 1e12 AS rank
+       |FROM r$iters r JOIN dg d ON r.node = d.src
+       |ORDER BY r.node""".stripMargin
+  }
+
+  // Multi-source BFS hop labeling: unrolled frontier-expansion CTEs,
+  // one (reached / fresh / visited / frontier) quadruple per level;
+  // min-hop needs no tie-break (first level to reach a node IS its
+  // minimum hop); unreached nodes report -1 via the final left join.
+  private val graphHopsOracle: String = {
+    val maxHops = 4
+    val steps = (1 to maxHops).map { i =>
+      val (dp, fp) = (s"d${i - 1}", s"f${i - 1}")
+      s"""r$i AS (SELECT DISTINCT e.dst AS node FROM e JOIN $fp f ON e.src = f.node),
+         |x$i AS (SELECT r.node, CAST($i AS BIGINT) AS hop FROM r$i r
+         |        LEFT JOIN $dp d ON r.node = d.node WHERE d.node IS NULL),
+         |d$i AS (SELECT * FROM $dp UNION ALL SELECT * FROM x$i),
+         |f$i AS (SELECT node FROM x$i)""".stripMargin
+    }.mkString(",\n")
+    s"""WITH e0 AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS a,
+       |                  's' || CAST(l.l_suppkey AS VARCHAR) AS b
+       |           FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
+       |e AS (SELECT a AS src, b AS dst FROM e0
+       |      UNION ALL SELECT b AS src, a AS dst FROM e0),
+       |nd AS (SELECT DISTINCT src AS node FROM e),
+       |d0 AS (SELECT node, CAST(0 AS BIGINT) AS hop FROM nd
+       |       WHERE node LIKE 's%' AND CAST(substr(node, 2) AS BIGINT) % 100 = 0),
+       |f0 AS (SELECT node FROM d0),
+       |$steps
+       |SELECT nd.node, CAST(coalesce(d.hop, -1) AS BIGINT) AS hop
+       |FROM nd LEFT JOIN d$maxHops d ON nd.node = d.node
+       |ORDER BY nd.node""".stripMargin
+  }
+
+  val keys: Seq[Key] = Seq(
+    // PageRank: all-integer fixed-point iterations — both engines
+    // carry bit-identical longs; positive operands make Spark div and
+    // DuckDB // agree
+    // truncated k-core peeling: K=3 unrolled rounds; k=95 sits at the
+    // measured core-collapse threshold (sf0.01: 1642 → 1230 → 377
+    // survivors; k=3 was vacuous against the ~115 average degree and
+    // k≥100 collapses every sf to zero by round 3) — all-integer
+    Key("q_graph_kcore", (s, d) => q_graph_kcore(s, d), {
+      val (k, rounds) = (95, 3)
+      val steps = (1 to rounds).map { i =>
+        val prev = if (i == 1) "sym" else s"s${i - 1}"
+        s"""a$i AS (SELECT src AS node FROM $prev GROUP BY src HAVING count(*) >= $k),
+           |s$i AS (SELECT s.src, s.dst FROM $prev s
+           |        JOIN a$i x ON s.src = x.node JOIN a$i y ON s.dst = y.node)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH so AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS sk FROM lineitem),
+         |e AS (SELECT DISTINCT x.sk AS a, y.sk AS b
+         |      FROM so x JOIN so y ON x.ok = y.ok AND x.sk < y.sk),
+         |sym AS (SELECT a AS src, b AS dst FROM e
+         |        UNION ALL SELECT b AS src, a AS dst FROM e),
+         |d0 AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg0
+         |       FROM sym GROUP BY src),
+         |$steps,
+         |df AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg_final
+         |       FROM s$rounds GROUP BY src)
+         |SELECT d0.node, d0.deg0,
+         |  CAST(coalesce(df.deg_final, 0) AS BIGINT) AS deg_final,
+         |  a$rounds.node IS NOT NULL AS in_core
+         |FROM d0 LEFT JOIN df USING (node) LEFT JOIN a$rounds USING (node)
+         |ORDER BY d0.node""".stripMargin
+    }),
+    // synchronous LPA: K=3 unrolled iterations; per-iteration argmax
+    // (count DESC, label ASC) as a ranked window — mirrors Spark's
+    // max(struct(cnt, -label)); labels exact longs throughout
+    Key("q_graph_lpa", (s, d) => q_graph_lpa(s, d), {
+      val iters = 3
+      val steps = (1 to iters).map { i =>
+        val prev = s"l${i - 1}"
+        s"""l$i AS (SELECT node, label FROM (
+           |  SELECT dst AS node, label,
+           |    row_number() OVER (PARTITION BY dst ORDER BY c DESC, label) AS rn
+           |  FROM (SELECT e.dst, r.label, count(*) AS c
+           |        FROM sym e JOIN $prev r ON e.src = r.node
+           |        GROUP BY e.dst, r.label))
+           |  WHERE rn = 1)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH so AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS sk FROM lineitem),
+         |e AS (SELECT DISTINCT x.sk AS a, y.sk AS b
+         |      FROM so x JOIN so y ON x.ok = y.ok AND x.sk < y.sk),
+         |sym AS (SELECT a AS src, b AS dst FROM e
+         |        UNION ALL SELECT b AS src, a AS dst FROM e),
+         |l0 AS (SELECT DISTINCT src AS node, src AS label FROM sym),
+         |$steps,
+         |sz AS (SELECT label, CAST(count(*) AS BIGINT) AS comm_size
+         |       FROM l$iters GROUP BY label)
+         |SELECT l.node, l.label, sz.comm_size
+         |FROM l$iters l JOIN sz USING (label) ORDER BY l.node""".stripMargin
+    }),
+    // Newman modularity over the LPA labels: composes the q_graph_lpa
+    // CTE chain, then all-integer per-community terms with the
+    // negative branch sign-separated (trunc-toward-zero both engines)
+    Key("q_graph_modularity", (s, d) => q_graph_modularity(s, d), {
+      val iters = 3
+      val steps = (1 to iters).map { i =>
+        val prev = s"l${i - 1}"
+        s"""l$i AS (SELECT node, label FROM (
+           |  SELECT dst AS node, label,
+           |    row_number() OVER (PARTITION BY dst ORDER BY c DESC, label) AS rn
+           |  FROM (SELECT e.dst, r.label, count(*) AS c
+           |        FROM sym e JOIN $prev r ON e.src = r.node
+           |        GROUP BY e.dst, r.label))
+           |  WHERE rn = 1)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH so AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS sk FROM lineitem),
+         |e AS (SELECT DISTINCT x.sk AS a, y.sk AS b
+         |      FROM so x JOIN so y ON x.ok = y.ok AND x.sk < y.sk),
+         |sym AS (SELECT a AS src, b AS dst FROM e
+         |        UNION ALL SELECT b AS src, a AS dst FROM e),
+         |l0 AS (SELECT DISTINCT src AS node, src AS label FROM sym),
+         |$steps,
+         |mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM e),
+         |deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
+         |        FROM sym GROUP BY 1),
+         |dl AS (SELECT l.label, CAST(sum(d.deg) AS BIGINT) AS d_sum,
+         |         CAST(count(*) AS BIGINT) AS n_nodes
+         |       FROM l$iters l JOIN deg d USING (node) GROUP BY 1),
+         |ie AS (SELECT la.label, CAST(count(*) AS BIGINT) AS m_intra
+         |       FROM e JOIN l$iters la ON e.a = la.node
+         |              JOIN l$iters lb ON e.b = lb.node
+         |       WHERE la.label = lb.label GROUP BY 1)
+         |SELECT dl.label, dl.n_nodes,
+         |  CAST(coalesce(ie.m_intra, 0) AS BIGINT) AS m_intra, dl.d_sum,
+         |  CASE WHEN 4 * mm.m * coalesce(ie.m_intra, 0)
+         |            - dl.d_sum * dl.d_sum >= 0
+         |    THEN ((4 * mm.m * coalesce(ie.m_intra, 0)
+         |           - dl.d_sum * dl.d_sum) * 1000000) // (4 * mm.m * mm.m)
+         |    ELSE -(((dl.d_sum * dl.d_sum
+         |           - 4 * mm.m * coalesce(ie.m_intra, 0)) * 1000000)
+         |          // (4 * mm.m * mm.m))
+         |  END AS term_fp
+         |FROM dl LEFT JOIN ie USING (label), mm
+         |ORDER BY dl.label""".stripMargin
+    }),
+    // degree-oriented triangle counting over the part co-occurrence
+    // graph; clustering = one IEEE division on exact integer
+    // operands, NULL (not NaN) when deg < 2 on both sides
+    Key("q_graph_triangles", (s, d) => q_graph_triangles(s, d),
+      """WITH so AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS sk FROM lineitem),
+        |e AS (SELECT DISTINCT x.sk AS a, y.sk AS b
+        |      FROM so x JOIN so y ON x.ok = y.ok AND x.sk < y.sk),
+        |sym AS (SELECT a AS src, b AS dst FROM e
+        |        UNION ALL SELECT b AS src, a AS dst FROM e),
+        |dg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
+        |       FROM sym GROUP BY 1),
+        |o AS (SELECT s.src, s.dst, d2.deg AS ddeg FROM sym s
+        |      JOIN dg d1 ON s.src = d1.node JOIN dg d2 ON s.dst = d2.node
+        |      WHERE d1.deg < d2.deg OR (d1.deg = d2.deg AND s.src < s.dst)),
+        |wg AS (SELECT e1.src AS u, e1.dst AS v, e2.dst AS wn
+        |       FROM o e1 JOIN o e2 ON e1.src = e2.src
+        |       WHERE e1.ddeg < e2.ddeg OR (e1.ddeg = e2.ddeg AND e1.dst < e2.dst)),
+        |t AS (SELECT u, v, wn FROM wg
+        |      WHERE EXISTS (SELECT 1 FROM o WHERE o.src = wg.v AND o.dst = wg.wn)),
+        |c AS (SELECT node, CAST(count(*) AS BIGINT) AS n_tri FROM (
+        |        SELECT u AS node FROM t
+        |        UNION ALL SELECT v FROM t
+        |        UNION ALL SELECT wn FROM t)
+        |      GROUP BY 1)
+        |SELECT d.node, d.deg, CAST(coalesce(c.n_tri, 0) AS BIGINT) AS n_tri,
+        |  CASE WHEN d.deg >= 2
+        |    THEN CAST(2 * coalesce(c.n_tri, 0) AS DOUBLE) / (d.deg * (d.deg - 1)) END
+        |    AS clustering
+        |FROM dg d LEFT JOIN c USING (node) ORDER BY d.node""".stripMargin),
+    // k_nn(k) degree mixing: per-degree node counts + mean neighbor
+    // degree as the x1e6 round-half-up fixed point
+    Key("q_graph_degree", q_graph_degree _,
+      """WITH so AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS sk FROM lineitem),
+        |e AS (SELECT DISTINCT x.sk AS a, y.sk AS b
+        |      FROM so x JOIN so y ON x.ok = y.ok AND x.sk < y.sk),
+        |sym AS (SELECT a AS src, b AS dst FROM e
+        |        UNION ALL SELECT b AS src, a AS dst FROM e),
+        |dg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
+        |       FROM sym GROUP BY 1),
+        |nb AS (SELECT deg, CAST(count(*) AS BIGINT) AS n_nodes
+        |       FROM dg GROUP BY 1),
+        |j AS (SELECT d1.deg AS deg, CAST(count(*) AS BIGINT) AS cnt,
+        |        CAST(sum(d2.deg) AS BIGINT) AS sd
+        |      FROM sym s JOIN dg d1 ON s.src = d1.node
+        |                 JOIN dg d2 ON s.dst = d2.node
+        |      GROUP BY 1)
+        |SELECT nb.deg, nb.n_nodes,
+        |  (2 * j.sd * 1000000 + j.cnt) // (2 * j.cnt) AS knn_fp
+        |FROM nb JOIN j USING (deg) ORDER BY nb.deg""".stripMargin),
+    // per-edge common neighbors = per-edge triangle counts (same
+    // oriented enumeration, triangles exploded into their 3 unordered
+    // edges); jaccard as x1e6 round-half-up over exact BIGINTs; the
+    // top-5000 cut is deterministic under the (fp DESC, a, b) total
+    // order
+    Key("q_graph_jaccard", (s, d) => q_graph_jaccard(s, d),
+      """WITH so AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS sk FROM lineitem),
+        |e AS (SELECT DISTINCT x.sk AS a, y.sk AS b
+        |      FROM so x JOIN so y ON x.ok = y.ok AND x.sk < y.sk),
+        |sym AS (SELECT a AS src, b AS dst FROM e
+        |        UNION ALL SELECT b AS src, a AS dst FROM e),
+        |dg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
+        |       FROM sym GROUP BY 1),
+        |o AS (SELECT s.src, s.dst, d2.deg AS ddeg FROM sym s
+        |      JOIN dg d1 ON s.src = d1.node JOIN dg d2 ON s.dst = d2.node
+        |      WHERE d1.deg < d2.deg OR (d1.deg = d2.deg AND s.src < s.dst)),
+        |wg AS (SELECT e1.src AS u, e1.dst AS v, e2.dst AS wn
+        |       FROM o e1 JOIN o e2 ON e1.src = e2.src
+        |       WHERE e1.ddeg < e2.ddeg OR (e1.ddeg = e2.ddeg AND e1.dst < e2.dst)),
+        |t AS (SELECT u, v, wn FROM wg
+        |      WHERE EXISTS (SELECT 1 FROM o WHERE o.src = wg.v AND o.dst = wg.wn)),
+        |pc AS (SELECT pa AS a, pb AS b, CAST(count(*) AS BIGINT) AS common FROM (
+        |         SELECT least(u, v) AS pa, greatest(u, v) AS pb FROM t
+        |         UNION ALL SELECT least(u, wn), greatest(u, wn) FROM t
+        |         UNION ALL SELECT least(v, wn), greatest(v, wn) FROM t)
+        |       GROUP BY 1, 2)
+        |SELECT e.a, e.b, coalesce(pc.common, 0) AS common,
+        |  da.deg AS deg_a, db.deg AS deg_b,
+        |  (2 * coalesce(pc.common, 0) * 1000000 + (da.deg + db.deg - coalesce(pc.common, 0)))
+        |    // (2 * (da.deg + db.deg - coalesce(pc.common, 0))) AS jaccard_fp
+        |FROM e LEFT JOIN pc ON pc.a = e.a AND pc.b = e.b
+        |  JOIN dg da ON da.node = e.a JOIN dg db ON db.node = e.b
+        |ORDER BY jaccard_fp DESC, e.a, e.b LIMIT 5000""".stripMargin),
+    // Adamic-Adar: per-edge sum of round(1e9/ln(deg)) over common
+    // neighbors (= wedge centers of the same oriented triangle
+    // enumeration); one libm ln per center on an exact integer input
+    // (the q_dsir fixed-point rule)
+    Key("q_graph_adamic", (s, d) => q_graph_adamic(s, d),
+      """WITH so AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS sk FROM lineitem),
+        |e AS (SELECT DISTINCT x.sk AS a, y.sk AS b
+        |      FROM so x JOIN so y ON x.ok = y.ok AND x.sk < y.sk),
+        |sym AS (SELECT a AS src, b AS dst FROM e
+        |        UNION ALL SELECT b AS src, a AS dst FROM e),
+        |dg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
+        |       FROM sym GROUP BY 1),
+        |o AS (SELECT s.src, s.dst, d2.deg AS ddeg FROM sym s
+        |      JOIN dg d1 ON s.src = d1.node JOIN dg d2 ON s.dst = d2.node
+        |      WHERE d1.deg < d2.deg OR (d1.deg = d2.deg AND s.src < s.dst)),
+        |wg AS (SELECT e1.src AS u, e1.dst AS v, e2.dst AS wn
+        |       FROM o e1 JOIN o e2 ON e1.src = e2.src
+        |       WHERE e1.ddeg < e2.ddeg OR (e1.ddeg = e2.ddeg AND e1.dst < e2.dst)),
+        |t AS (SELECT u, v, wn FROM wg
+        |      WHERE EXISTS (SELECT 1 FROM o WHERE o.src = wg.v AND o.dst = wg.wn)),
+        |tc AS (SELECT pa AS a, pb AS b, c FROM (
+        |         SELECT least(u, v) AS pa, greatest(u, v) AS pb, wn AS c FROM t
+        |         UNION ALL SELECT least(u, wn), greatest(u, wn), v FROM t
+        |         UNION ALL SELECT least(v, wn), greatest(v, wn), u FROM t)),
+        |pc AS (SELECT a, b, CAST(count(*) AS BIGINT) AS common,
+        |         CAST(sum(CAST(round(1e9 / ln(d.deg)) AS BIGINT)) AS BIGINT) AS aa_fp
+        |       FROM tc JOIN dg d ON tc.c = d.node GROUP BY 1, 2)
+        |SELECT e.a, e.b, coalesce(pc.common, 0) AS common,
+        |  CAST(coalesce(pc.aa_fp, 0) AS BIGINT) AS aa_fp
+        |FROM e LEFT JOIN pc ON pc.a = e.a AND pc.b = e.b
+        |ORDER BY aa_fp DESC, e.a, e.b LIMIT 5000""".stripMargin),
+    // HITS: unrolled half-step CTEs (auth-raw / auth / hub-raw / hub
+    // per iteration), max-normalized x1e6 fixed point — all-positive
+    // integer ops so // and div agree; sums CAST BIGINT (HUGEINT)
+    Key("q_graph_hits", (s, d) => q_graph_hits(s, d), {
+      val iters = 4
+      val steps = (1 to iters).map { i =>
+        val hp = s"h${i - 1}"
+        s"""ar$i AS (SELECT e.dst, CAST(sum(h.hub) AS BIGINT) AS raw
+           |        FROM e JOIN $hp h ON e.src = h.node GROUP BY 1),
+           |a$i AS (SELECT n.node,
+           |          CAST((coalesce(ar.raw, 0) * 1000000)
+           |               // max(ar.raw) OVER () AS BIGINT) AS auth
+           |        FROM n LEFT JOIN ar$i ar ON n.node = ar.dst),
+           |hr$i AS (SELECT e.src, CAST(sum(a.auth) AS BIGINT) AS raw
+           |        FROM e JOIN a$i a ON e.dst = a.node GROUP BY 1),
+           |h$i AS (SELECT n.node,
+           |          CAST((coalesce(hr.raw, 0) * 1000000)
+           |               // max(hr.raw) OVER () AS BIGINT) AS hub
+           |        FROM n LEFT JOIN hr$i hr ON n.node = hr.src)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH e AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS src,
+         |                's' || CAST(l.l_suppkey AS VARCHAR) AS dst
+         |           FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
+         |n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
+         |h0 AS (SELECT node, CAST(1000000 AS BIGINT) AS hub FROM n),
+         |$steps
+         |SELECT h.node, h.hub AS hub_fp, a.auth AS auth_fp,
+         |  CAST(h.hub AS DOUBLE) / 1e6 AS hub,
+         |  CAST(a.auth AS DOUBLE) / 1e6 AS auth
+         |FROM h$iters h JOIN a$iters a ON h.node = a.node
+         |ORDER BY h.node""".stripMargin
+    }),
+    Key("q_pagerank", (s, d) => q_pagerank(s, d), pagerankOracle),
+    Key("q_pagerank_copart", (s, d) => q_pagerank_copart(s, d), pagerankOracle),
+    Key("q_graph_hops", (s, d) => q_graph_hops(s, d), graphHopsOracle),
+    Key("q_graph_hops_copart", (s, d) => q_graph_hops_copart(s, d), graphHopsOracle),
+    // Seeded PageRank: teleport only to the seed suppliers (CASE on
+    // the seed flag), nodes kept alive by the left join so unreached
+    // nodes report exactly 0; same all-integer fixed-point contract.
+    Key("q_pagerank_seed", (s, d) => q_pagerank_seeded(s, d), {
+      val iters = 3
+      val steps = (1 to iters).map { i =>
+        val prev = if (i == 1) "r0" else s"r${i - 1}"
+        s"""r$i AS (SELECT nd.node,
+           |  CAST((CASE WHEN nd.seed THEN 150000000000 // (SELECT n FROM ns) ELSE 0 END)
+           |       + (85 * coalesce(c.s, 0)) // 100 AS BIGINT) AS fp
+           |FROM nd LEFT JOIN (SELECT e.dst AS node, sum(r.fp // dg.deg) AS s
+           |                   FROM e JOIN $prev r ON e.src = r.node
+           |                          JOIN dg ON e.src = dg.src
+           |                   GROUP BY e.dst) c ON nd.node = c.node)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH e0 AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS a,
+         |                  's' || CAST(l.l_suppkey AS VARCHAR) AS b
+         |           FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
+         |e AS (SELECT a AS src, b AS dst FROM e0
+         |      UNION ALL SELECT b AS src, a AS dst FROM e0),
+         |dg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY 1),
+         |nd AS (SELECT src AS node, deg,
+         |         (src LIKE 's%' AND CAST(substr(src, 2) AS BIGINT) % 100 = 0) AS seed
+         |       FROM dg),
+         |ns AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nd WHERE seed),
+         |r0 AS (SELECT node, CASE WHEN seed
+         |         THEN CAST(1000000000000 // (SELECT n FROM ns) AS BIGINT)
+         |         ELSE CAST(0 AS BIGINT) END AS fp
+         |       FROM nd),
+         |$steps
+         |SELECT r.node, nd.seed, r.fp AS rank_fp,
+         |  CAST(r.fp AS DOUBLE) / 1e12 AS rank
+         |FROM r$iters r JOIN nd ON r.node = nd.node
+         |ORDER BY r.node""".stripMargin
+    }),
+    // Directed PageRank with dangling-mass redistribution: suppliers
+    // are sinks (outdeg 0); each step collects their total fp into a
+    // one-row dangling aggregate and every node receives dm // N on
+    // top of its in-edge contributions. Same all-integer fixed-point
+    // contract — final CASTs normalize DuckDB's HUGEINT sums back to
+    // BIGINT so both engines carry identical longs.
+    Key("q_pagerank_dir", (s, d) => q_pagerank_directed(s, d), {
+      val iters = 3
+      val steps = (1 to iters).map { i =>
+        val prev = if (i == 1) "r0" else s"r${i - 1}"
+        s"""d$i AS (SELECT CAST(coalesce(sum(r.fp), 0) AS BIGINT) AS dm
+           |  FROM $prev r JOIN nd ON r.node = nd.node WHERE nd.deg = 0),
+           |r$i AS (SELECT nd.node,
+           |  CAST(150000000000 // (SELECT n FROM nn)
+           |       + (85 * (coalesce(c.s, 0)
+           |                + (SELECT dm FROM d$i) // (SELECT n FROM nn))) // 100
+           |       AS BIGINT) AS fp
+           |FROM nd LEFT JOIN (SELECT e.dst AS node, sum(r.fp // dg.deg) AS s
+           |                   FROM e JOIN $prev r ON e.src = r.node
+           |                          JOIN dg ON e.src = dg.src
+           |                   GROUP BY e.dst) c ON nd.node = c.node)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH e AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS src,
+         |                  's' || CAST(l.l_suppkey AS VARCHAR) AS dst
+         |           FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
+         |dg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY 1),
+         |nd AS (SELECT n.node, CAST(coalesce(dg.deg, 0) AS BIGINT) AS deg
+         |       FROM (SELECT src AS node FROM e UNION SELECT dst FROM e) n
+         |       LEFT JOIN dg ON n.node = dg.src),
+         |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nd),
+         |r0 AS (SELECT node,
+         |         CAST(1000000000000 // (SELECT n FROM nn) AS BIGINT) AS fp
+         |       FROM nd),
+         |$steps
+         |SELECT r.node, nd.deg AS out_deg, r.fp AS rank_fp,
+         |  CAST(r.fp AS DOUBLE) / 1e12 AS rank
+         |FROM r$iters r JOIN nd ON r.node = nd.node
+         |ORDER BY r.node""".stripMargin
+    }),
+  )
 }

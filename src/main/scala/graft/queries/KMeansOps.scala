@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SparkEntry.Key
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -358,4 +359,99 @@ object KMeansOps {
       .select(expr("cosine_sim(embedding, cv)").as("c"))
       .agg(avg("c")).head().getDouble(0)
   }
+
+  /** The k-means kernel's DuckDB CTE chain (v, c0, then s/a/pe/m/c per
+    * iteration, ending in c`iters`): bounded window vec_id < 256,
+    * first-8-by-id init, ordered-fold M-step rounded to 6 and cast
+    * REAL so both engines carry bit-identical centroids. Shared by the
+    * q_embed_train and q_silhouette oracles so the evaluated model
+    * cannot drift from the trained one.
+    */
+  private def duckKmeansCtes(iters: Int): String = {
+    val stepCtes = (1 to iters).map { i =>
+      val prev = if (i == 1) "c0" else s"c${i - 1}"
+      s"""s$i AS (SELECT v.vec_id, c.cent_id, list_cosine_similarity(v.e, c.cv) AS c
+         |  FROM v, $prev c),
+         |a$i AS (SELECT vec_id, cent_id AS cell FROM (
+         |    SELECT vec_id, cent_id,
+         |      row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, cent_id) AS rn
+         |    FROM s$i) WHERE rn = 1),
+         |pe$i AS (SELECT a.cell, v.vec_id,
+         |    CAST(generate_subscripts(v.e,1) - 1 AS BIGINT) AS dim, unnest(v.e) AS val
+         |  FROM a$i a JOIN v USING (vec_id)),
+         |m$i AS (SELECT cell, dim,
+         |    CAST(round(list_sum(list(val ORDER BY vec_id)) / count(*), 6) AS REAL) AS m
+         |  FROM pe$i GROUP BY cell, dim),
+         |c$i AS (SELECT cell AS cent_id, list(m::DOUBLE ORDER BY dim) AS cv
+         |  FROM m$i GROUP BY cell)""".stripMargin
+    }.mkString(",\n")
+    s"""v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings WHERE vec_id < 256),
+       |c0 AS (SELECT vec_id AS cent_id, embedding::DOUBLE[] AS cv FROM embeddings WHERE vec_id < 8),
+       |$stepCtes""".stripMargin
+  }
+
+  val keys: Seq[Key] = Seq(
+    // Two Lloyd iterations, k=8, bounded window, first-k init — the
+    // Spark side's ordered-fold M-step (round 6 → REAL) makes the
+    // inter-iteration centroids bit-identical in both engines, so the
+    // E-step argmax (cosine DESC, cent_id — DuckDB ranked window vs
+    // Spark's greatest over (c, -id) structs) agrees exactly, as
+    // q_sim_ivf already proves for cosine ranking.
+    Key("q_embed_train", (s, d) => q_embed_train(s, d),
+      s"""WITH ${duckKmeansCtes(2)},
+         |sf AS (SELECT v.vec_id, c.cent_id, list_cosine_similarity(v.e, c.cv) AS c
+         |  FROM v, c2 c)
+         |SELECT vec_id, cell, round(c, 6) AS cosine FROM (
+         |  SELECT vec_id, cent_id AS cell, c,
+         |    row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, cent_id) AS rn
+         |  FROM sf) WHERE rn = 1 ORDER BY vec_id""".stripMargin),
+    // Silhouette over the SAME trained kernel (shared CTE chain):
+    // top-2 cosines per vector, one mirrored IEEE silhouette
+    // expression quantized x1e6 before the per-cell sum, mean by
+    // sign-separated integer division.
+    Key("q_silhouette", (s, d) => q_silhouette(s, d),
+      s"""WITH ${duckKmeansCtes(2)},
+         |sf AS (SELECT v.vec_id, c.cent_id, list_cosine_similarity(v.e, c.cv) AS c
+         |  FROM v, c2 c),
+         |r AS (SELECT vec_id, cent_id, c,
+         |    row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, cent_id) AS rn
+         |  FROM sf),
+         |p AS (SELECT vec_id,
+         |    max(CASE WHEN rn = 1 THEN cent_id END) AS cell,
+         |    max(CASE WHEN rn = 1 THEN c END) AS c1,
+         |    max(CASE WHEN rn = 2 THEN c END) AS c2
+         |  FROM r WHERE rn <= 2 GROUP BY vec_id),
+         |q AS (SELECT cell,
+         |    CAST(floor((CASE WHEN greatest(1.0 - c1, 1.0 - c2) = 0.0 THEN 0.0
+         |      ELSE (c1 - c2) / greatest(1.0 - c1, 1.0 - c2) END) * 1000000 + 0.5)
+         |      AS BIGINT) AS s_fp
+         |  FROM p),
+         |g AS (SELECT cell, CAST(count(*) AS BIGINT) AS n_vecs,
+         |    CAST(sum(s_fp) AS BIGINT) AS sum_sil_fp
+         |  FROM q GROUP BY cell)
+         |SELECT cell, n_vecs, sum_sil_fp,
+         |  CASE WHEN sum_sil_fp >= 0 THEN sum_sil_fp // n_vecs
+         |       ELSE -((-sum_sil_fp) // n_vecs) END AS mean_sil_fp
+         |FROM g ORDER BY cell""".stripMargin),
+    // Prototype pruning over the SAME trained kernel: cosine quantized
+    // x1e6 BEFORE the within-cell ranking (identical longs order
+    // identically in both engines); the prune cutoff is the integer
+    // cross-multiplication rnk*1000 <= n_cell*300 — no division.
+    Key("q_prune_proto", (s, d) => q_prune_proto(s, d),
+      s"""WITH ${duckKmeansCtes(2)},
+         |sf AS (SELECT v.vec_id, c.cent_id, list_cosine_similarity(v.e, c.cv) AS c
+         |  FROM v, c2 c),
+         |bst AS (SELECT vec_id, cent_id AS cell,
+         |    CAST(floor(c * 1000000 + 0.5) AS BIGINT) AS cos_fp
+         |  FROM (SELECT vec_id, cent_id, c,
+         |      row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, cent_id) AS rn
+         |    FROM sf) WHERE rn = 1),
+         |rk AS (SELECT vec_id, cell, cos_fp,
+         |    CAST(row_number() OVER (PARTITION BY cell ORDER BY cos_fp DESC, vec_id) AS BIGINT) AS rnk,
+         |    CAST(count(*) OVER (PARTITION BY cell) AS BIGINT) AS n_cell
+         |  FROM bst)
+         |SELECT vec_id, cell, cos_fp, rnk, n_cell,
+         |  rnk * 1000 <= n_cell * 300 AS pruned
+         |FROM rk ORDER BY vec_id""".stripMargin),
+  )
 }

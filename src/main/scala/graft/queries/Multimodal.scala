@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SparkEntry.Key
 import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -547,4 +548,174 @@ object Multimodal {
       (col("meta.height") * least(col("meta.width"), lit(maxW)) / col("meta.width"))
         .cast("int").as("out_height"))
       .orderBy("media_id")
+
+  val keys: Seq[Key] = Seq(
+    // media metadata derives arithmetically from doc_id (mediaTable);
+    // floor() before the INT cast — DuckDB's cast-to-int ROUNDS while
+    // Spark's truncates
+    Key("q_media_resize", (s, d) => resizeMeta(s, d),
+      """SELECT doc_id AS media_id,
+        |  (['image','audio','video'])[CAST(doc_id % 3 AS INT) + 1] AS kind,
+        |  CAST(doc_id % 4 * 160 + 320 AS INT) AS width,
+        |  CAST(doc_id % 4 * 90 + 180 AS INT) AS height,
+        |  CAST(least(doc_id % 4 * 160 + 320, 640) AS INT) AS out_width,
+        |  CAST(floor((doc_id % 4 * 90 + 180) * least(doc_id % 4 * 160 + 320, 640)
+        |       / (doc_id % 4 * 160 + 320)) AS INT) AS out_height
+        |FROM documents ORDER BY media_id""".stripMargin),
+    // REAL codec round-trip (Multimodal.q_media_decode): Spark encodes
+    // a deterministic 16x16 PNG per id with ImageIO, decodes it back,
+    // and sums the raster channels; the oracle computes the closed form
+    // channel(x,y,c) = (id*37 + x*5 + y*11 + c*3) % 256 directly —
+    // DuckDB never sees bytes, so a hash match proves the codec path.
+    // Integer sums: no float parity caveats.
+    Key("q_media_decode", (s, d) => q_media_decode(s, d),
+      """WITH px AS (
+        |  SELECT doc_id AS media_id, g1.x, g2.y
+        |  FROM documents, generate_series(0, 15) g1(x), generate_series(0, 15) g2(y)
+        |  WHERE doc_id < 64)
+        |SELECT media_id,
+        |  CAST(16 AS INT) AS width, CAST(16 AS INT) AS height,
+        |  CAST(sum((media_id*37 + x*5 + y*11) % 256) AS BIGINT) AS sum_r,
+        |  CAST(sum((media_id*37 + x*5 + y*11 + 3) % 256) AS BIGINT) AS sum_g,
+        |  CAST(sum((media_id*37 + x*5 + y*11 + 6) % 256) AS BIGINT) AS sum_b
+        |FROM px GROUP BY media_id ORDER BY media_id""".stripMargin),
+    // Perceptual aHash over the REAL codec (Multimodal.q_media_phash):
+    // the oracle rebuilds the 8x8 luma-block hash and the Hamming
+    // nearest neighbor from the closed-form pixels alone — integer
+    // cross-multiplied mean test, 63-bit hash, bit_count(xor) NN
+    Key("q_media_phash", (s, d) => q_media_phash(s, d),
+      """WITH px AS (
+        |  SELECT doc_id AS media_id, g1.x, g2.y,
+        |    299*((media_id*37 + x*5 + y*11) % 256)
+        |    + 587*((media_id*37 + x*5 + y*11 + 3) % 256)
+        |    + 114*((media_id*37 + x*5 + y*11 + 6) % 256) AS luma
+        |  FROM documents, generate_series(0, 15) g1(x), generate_series(0, 15) g2(y)
+        |  WHERE doc_id < 64),
+        |bl AS (SELECT media_id, (y // 2) * 8 + (x // 2) AS b,
+        |         CAST(sum(luma) AS BIGINT) AS bs
+        |       FROM px GROUP BY 1, 2),
+        |tt AS (SELECT media_id, CAST(sum(bs) AS BIGINT) AS total
+        |       FROM bl GROUP BY 1),
+        |ph AS (SELECT bl.media_id,
+        |    CAST(sum(CASE WHEN b < 63 AND 64 * bs > total
+        |             THEN CAST(1 AS BIGINT) << CAST(b AS INT) ELSE 0 END) AS BIGINT) AS phash
+        |  FROM bl JOIN tt USING (media_id) GROUP BY 1),
+        |pr AS (SELECT x.media_id, x.phash, y.media_id AS nn_id,
+        |    CAST(bit_count(xor(x.phash, y.phash)) AS BIGINT) AS nn_hamming,
+        |    row_number() OVER (PARTITION BY x.media_id
+        |      ORDER BY bit_count(xor(x.phash, y.phash)), y.media_id) AS rn
+        |  FROM ph x JOIN ph y ON x.media_id <> y.media_id)
+        |SELECT media_id, phash, nn_id, nn_hamming
+        |FROM pr WHERE rn = 1 ORDER BY media_id""".stripMargin),
+    // Image near-dup pairs (Multimodal.q_media_dedup): banding is pure
+    // pruning (pigeonhole: maxHamming+1 bands, a pair within the
+    // threshold agrees exactly on >=1 band), so the oracle skips it
+    // and takes ALL pairs within Hamming <= 3 over the closed-form
+    // pHash — a hash match proves the banded path loses no pairs and
+    // reproves the PNG codec arithmetic (the q_dedup_simhash stance).
+    Key("q_media_dedup", (s, d) => q_media_dedup(s, d),
+      """WITH px AS (
+        |  SELECT doc_id AS media_id, g1.x, g2.y,
+        |    299*((media_id*37 + x*5 + y*11) % 256)
+        |    + 587*((media_id*37 + x*5 + y*11 + 3) % 256)
+        |    + 114*((media_id*37 + x*5 + y*11 + 6) % 256) AS luma
+        |  FROM documents, generate_series(0, 15) g1(x), generate_series(0, 15) g2(y)
+        |  WHERE doc_id < 64),
+        |bl AS (SELECT media_id, (y // 2) * 8 + (x // 2) AS b,
+        |         CAST(sum(luma) AS BIGINT) AS bs
+        |       FROM px GROUP BY 1, 2),
+        |tt AS (SELECT media_id, CAST(sum(bs) AS BIGINT) AS total
+        |       FROM bl GROUP BY 1),
+        |ph AS (SELECT bl.media_id,
+        |    CAST(sum(CASE WHEN b < 63 AND 64 * bs > total
+        |             THEN CAST(1 AS BIGINT) << CAST(b AS INT) ELSE 0 END) AS BIGINT) AS phash
+        |  FROM bl JOIN tt USING (media_id) GROUP BY 1)
+        |SELECT a.media_id AS media_a, b.media_id AS media_b,
+        |  CAST(bit_count(xor(a.phash, b.phash)) AS BIGINT) AS hamming
+        |FROM ph a JOIN ph b ON a.media_id < b.media_id
+        |WHERE bit_count(xor(a.phash, b.phash)) <= 3
+        |ORDER BY media_a, media_b""".stripMargin),
+    // REAL audio codec round-trip (Multimodal.q_media_audio): Spark
+    // encodes a deterministic 256-sample 16-bit PCM mono WAV per id
+    // with javax.sound.sampled, decodes it back, and emits integer
+    // sample stats; the oracle computes the closed form
+    // sample(i) = ((id*31 + i*7) % 65536) - 32768 directly — DuckDB
+    // never sees bytes, so a hash match proves the WAV/PCM codec path
+    // (header, endianness, sign extension). Integer stats throughout.
+    Key("q_media_audio", (s, d) => q_media_audio(s, d),
+      """WITH sm AS (
+        |  SELECT doc_id AS media_id,
+        |         ((doc_id*31 + i.i*7) % 65536) - 32768 AS v
+        |  FROM documents, generate_series(0, 255) i(i)
+        |  WHERE doc_id < 64)
+        |SELECT media_id,
+        |  CAST(16000 AS BIGINT) AS sample_rate,
+        |  CAST(256 AS BIGINT) AS n_samples,
+        |  CAST(sum(v) AS BIGINT) AS sum_samples,
+        |  CAST(sum(abs(v)) AS BIGINT) AS sum_abs,
+        |  CAST(min(v) AS BIGINT) AS min_sample,
+        |  CAST(max(v) AS BIGINT) AS max_sample
+        |FROM sm GROUP BY media_id ORDER BY media_id""".stripMargin),
+    // round 11: the full media-features surface under the oracle —
+    // the stub decoder is positional byte sums (feature j = sum of
+    // byte values at positions ≡ j mod 8), which DuckDB reproduces
+    // with ascii(substr(...)) sums over the ASCII payloads; the dense
+    // 8-row spine keeps short/empty/null payloads at zero features
+    // instead of missing rows
+    Key("q_media_features", mediaFeaturesFlat _,
+      """WITH b AS (
+        |  SELECT doc_id AS media_id,
+        |    CASE CAST(doc_id % 3 AS INTEGER) WHEN 0 THEN 'image'
+        |      WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
+        |    coalesce(text, '') AS t
+        |  FROM documents),
+        |sp AS (
+        |  SELECT media_id, kind, length(t) AS n_bytes,
+        |    unnest(range(8)) AS feat_idx
+        |  FROM b),
+        |ch AS (
+        |  SELECT media_id, p % 8 AS fi,
+        |    ascii(substr(t, CAST(p + 1 AS BIGINT), 1)) AS code
+        |  FROM (SELECT media_id, t, unnest(range(length(t))) AS p FROM b)),
+        |agg AS (SELECT media_id, fi, sum(code) AS sv FROM ch GROUP BY 1, 2)
+        |SELECT sp.media_id, sp.kind, CAST(sp.n_bytes AS BIGINT) AS n_bytes,
+        |  CAST(sp.feat_idx AS BIGINT) AS feat_idx,
+        |  round(CAST(coalesce(agg.sv, 0) AS DOUBLE), 6) AS feat_value
+        |FROM sp LEFT JOIN agg
+        |  ON sp.media_id = agg.media_id AND sp.feat_idx = agg.fi
+        |ORDER BY sp.media_id, sp.feat_idx""".stripMargin),
+    // round 11: frame content verified as STRINGS (ASCII payloads —
+    // proven by q_media_frame_meta's md5 match), so count, offsets,
+    // and content are all under the hash
+    Key("q_media_frames", (s, d) => q_media_frames(s, d),
+      """WITH v AS (
+        |  SELECT doc_id AS media_id, text, length(text) AS n
+        |  FROM documents WHERE doc_id % 3 = 2 AND length(text) > 0),
+        |i AS (
+        |  SELECT media_id, text,
+        |         unnest(range(CAST(ceil(n / 64.0) AS BIGINT))) AS frame_no
+        |  FROM v)
+        |SELECT media_id, frame_no,
+        |  length(substr(text, CAST(frame_no*64 + 1 AS BIGINT), 64)) AS n_bytes,
+        |  substr(text, CAST(frame_no*64 + 1 AS BIGINT), 64) AS frame_str
+        |FROM i ORDER BY media_id, frame_no""".stripMargin),
+    // frame boundaries verified on the TEXT view of the ASCII payloads
+    // (DuckDB can't slice BLOBs): substr chars == substring bytes here
+    Key("q_media_frame_meta", (s, d) => q_media_frame_meta(s, d),
+      """WITH v AS (
+        |  SELECT doc_id AS media_id, text, length(text) AS n
+        |  FROM documents WHERE doc_id % 3 = 2 AND length(text) > 0),
+        |i AS (
+        |  SELECT media_id, text,
+        |         unnest(range(CAST(ceil(n / 64.0) AS BIGINT))) AS frame_no
+        |  FROM v),
+        |f AS (
+        |  SELECT media_id, frame_no,
+        |         substr(text, CAST(frame_no*64 + 1 AS BIGINT), 64) AS frame
+        |  FROM i)
+        |SELECT media_id, frame_no,
+        |  length(frame) AS n_bytes, md5(frame) AS frame_md5,
+        |  CAST(ascii(frame) AS BIGINT) AS first_byte
+        |FROM f ORDER BY media_id, frame_no""".stripMargin),
+  )
 }

@@ -1,6 +1,8 @@
 package graft.queries
 
+import graft.SparkEntry.Key
 import graft.Tables._
+import graft.functions.HashFunctions.duckHexValue
 import graft.plans.GlobalRank.globalRowNumber
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -175,4 +177,79 @@ object RankOps {
       .select(col("doc_id"), col("hv"), col("rn"))
       .orderBy("doc_id")
   }
+
+  val keys: Seq[Key] = Seq(
+    // round 11: exact distributed ranking family — oracle = the naive
+    // global window DuckDB runs fine at these sfs; Spark produces the
+    // identical values through plans/GlobalRank (range-partitioned,
+    // no single-partition WindowExec)
+    Key("q_rank_global", q_rank_global _,
+      """WITH w AS (
+        |  SELECT doc_id,
+        |    CAST(len(list_filter(string_split(text, ' '), x -> length(x) > 0)) AS BIGINT) AS t
+        |  FROM documents WHERE text IS NOT NULL),
+        |r AS (SELECT doc_id, t,
+        |        row_number() OVER (ORDER BY t, doc_id) AS rn,
+        |        count(*) OVER () AS n
+        |      FROM w)
+        |SELECT doc_id, t, rn, (rn - 1) * 100 // n + 1 AS pctile
+        |FROM r ORDER BY doc_id""".stripMargin),
+    Key("q_rank_strat", q_rank_strat _,
+      """WITH w AS (
+        |  SELECT doc_id, lang,
+        |    CAST(len(list_filter(string_split(text, ' '), x -> length(x) > 0)) AS BIGINT) AS t
+        |  FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL),
+        |r AS (SELECT doc_id, lang, t,
+        |        row_number() OVER (PARTITION BY lang ORDER BY t, doc_id) AS rn_in_lang,
+        |        count(*) OVER (PARTITION BY lang) AS n_lang
+        |      FROM w)
+        |SELECT doc_id, lang, t, rn_in_lang,
+        |  (rn_in_lang - 1) * 100 // n_lang + 1 AS pctile
+        |FROM r ORDER BY doc_id""".stripMargin),
+    // quantile normalization: two row_number orders (within-source,
+    // pooled) + the exact ceil-rank map (r_s*n_p + n_s - 1) // n_s —
+    // positive operands, so DuckDB's truncating // is floor here
+    Key("q_quantile_norm", q_quantile_norm _,
+      """WITH d AS (SELECT doc_id, source, n_chars AS v FROM documents
+        |           WHERE source IS NOT NULL AND n_chars IS NOT NULL),
+        |r AS (SELECT doc_id, source, v,
+        |        row_number() OVER (PARTITION BY source ORDER BY v, doc_id) AS r_s,
+        |        CAST(count(*) OVER (PARTITION BY source) AS BIGINT) AS n_s
+        |      FROM d),
+        |p AS (SELECT row_number() OVER (ORDER BY v, doc_id) AS target_rn,
+        |             v AS v_norm
+        |      FROM d),
+        |n AS (SELECT CAST(count(*) AS BIGINT) AS n_p FROM d),
+        |t AS (SELECT doc_id, source, v, r_s, n_s,
+        |        CAST((r_s * n_p + n_s - 1) // n_s AS BIGINT) AS target_rn
+        |      FROM r, n)
+        |SELECT doc_id, source, v, r_s, n_s, target_rn, v_norm
+        |FROM t JOIN p USING (target_rn) ORDER BY doc_id""".stripMargin),
+    Key("q_quantiles_exact", q_quantiles_exact _,
+      """WITH v AS (
+        |  SELECT CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS c,
+        |         l_orderkey, l_linenumber
+        |  FROM lineitem),
+        |r AS (SELECT c,
+        |        row_number() OVER (ORDER BY c, l_orderkey, l_linenumber) AS rn,
+        |        count(*) OVER () AS n
+        |      FROM v),
+        |p AS (SELECT unnest(range(21)) AS p)
+        |SELECT CAST(p.p * 5 AS BIGINT) AS pct,
+        |       1 + (r.n - 1) * p.p // 20 AS r, c AS value_c
+        |FROM p JOIN r ON r.rn = 1 + (r.n - 1) * p.p // 20
+        |ORDER BY pct""".stripMargin),
+    // systematic sample: same 60-bit md5-window order key as
+    // q_sketch_kmv (nibble arithmetic — DuckDB has no base-16 conv)
+    Key("q_sample_systematic", (s, d) => q_sample_systematic(s, d),
+      s"""WITH m AS (
+         |  SELECT doc_id, md5('sys:' || CAST(doc_id AS VARCHAR)) AS h
+         |  FROM documents),
+         |hv AS (SELECT doc_id, ${duckHexValue("h", 1, 15)} AS hv FROM m),
+         |r AS (SELECT doc_id, hv,
+         |        row_number() OVER (ORDER BY hv, doc_id) AS rn
+         |      FROM hv)
+         |SELECT doc_id, hv, rn FROM r
+         |WHERE (rn - 1) % 20 = 0 ORDER BY doc_id""".stripMargin),
+  )
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SparkEntry.Key
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -757,4 +758,325 @@ object Relational {
           |AS (metric, value)""".stripMargin))
       .orderBy("metric")
   }
+
+  // q_join_range_binned shares this text: the binned rewrite must be
+  // result-identical to the plain range join.
+  private val joinRangeOracle: String =
+    """SELECT tier, count(*) AS n, CAST(round(sum(CAST(value AS DECIMAL(18,2))),2) AS DOUBLE) AS sum_value
+      |FROM events JOIN (VALUES ('low',0.0,50.0),('mid',50.0,200.0),('high',200.0,1000.0))
+      |  AS t(tier,lo,hi) ON value >= lo AND value < hi
+      |GROUP BY tier ORDER BY tier""".stripMargin
+
+  val keys: Seq[Key] = Seq(
+    Key("q_scan_project", q_scan_project _,
+      """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag
+        |FROM lineitem WHERE l_quantity > 30
+        |ORDER BY l_orderkey, l_linenumber, l_quantity, l_returnflag""".stripMargin),
+    Key("q_filter_pred", q_filter_pred _,
+      """SELECT l_orderkey, l_linenumber, l_quantity, l_discount, l_returnflag
+        |FROM lineitem
+        |WHERE l_quantity >= 45 AND l_discount < 0.05 AND l_returnflag <> 'A'
+        |ORDER BY l_orderkey, l_linenumber, l_quantity, l_discount, l_returnflag""".stripMargin),
+    Key("q_filter_isin", q_filter_isin _,
+      """SELECT c_custkey, c_name, c_mktsegment, c_nationkey FROM customer
+        |WHERE c_mktsegment IN ('BUILDING','MACHINERY') AND c_nationkey NOT IN (3,7)
+        |ORDER BY c_custkey""".stripMargin),
+    Key("q_join_inner", q_join_inner _,
+      """SELECT c_mktsegment, count(*) AS n_orders, CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))),2) AS DOUBLE) AS revenue
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    Key("q_join_broadcast", q_join_broadcast _,
+      """SELECT p_brand, count(*) AS n_items,
+        |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))),2) AS DOUBLE) AS net_revenue
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |GROUP BY p_brand ORDER BY p_brand""".stripMargin),
+    Key("q_join_lookup", q_join_lookup _,
+      """SELECT c_custkey, c_mktsegment,
+        |  CASE c_mktsegment WHEN 'BUILDING' THEN 'construction'
+        |    WHEN 'AUTOMOBILE' THEN 'vehicles'
+        |    WHEN 'MACHINERY' THEN 'industrial' ELSE 'other' END AS tier
+        |FROM customer ORDER BY c_custkey""".stripMargin),
+    Key("q_join_semi", q_join_semi _,
+      """SELECT c_custkey, c_name FROM customer
+        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+        |ORDER BY c_custkey""".stripMargin),
+    Key("q_join_anti", q_join_anti _,
+      """SELECT c_custkey, c_name FROM customer
+        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus = 'P')
+        |ORDER BY c_custkey""".stripMargin),
+    Key("q_join_range", q_join_range _, joinRangeOracle),
+    Key("q_join_range_binned", q_join_range_binned _, joinRangeOracle),
+    Key("q_agg_hash", q_agg_hash _,
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(round(sum(CAST(l_quantity AS DECIMAL(18,2))),2) AS DOUBLE) AS sum_qty,
+        |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2))),2) AS DOUBLE) AS sum_base_price,
+        |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))),2) AS DOUBLE) AS sum_disc_price,
+        |  round(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*), 4) AS avg_qty,
+        |  round(CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) / count(*), 4) AS avg_disc,
+        |  count(*) AS count_order
+        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Key("q_agg_count", q_agg_count _, "SELECT count(*) AS n_rows FROM lineitem"),
+    Key("q_join_outer", q_join_outer _,
+      """WITH oagg AS (SELECT o_custkey, count(*) AS n_orders FROM orders
+        |  WHERE o_orderstatus = 'P' AND o_totalprice > 200000 GROUP BY o_custkey),
+        |rich AS (SELECT c_custkey, c_name FROM customer WHERE c_acctbal > 9000)
+        |SELECT coalesce(c_custkey, o_custkey) AS custkey, c_name, n_orders
+        |FROM rich FULL OUTER JOIN oagg ON c_custkey = o_custkey
+        |ORDER BY custkey""".stripMargin),
+    // the salted join must be RESULT-identical to the plain join — the
+    // salt is a physical rewrite, so the oracle doesn't mention it
+    Key("q_join_skew", q_join_skew _,
+      """SELECT o_orderkey, o_custkey, c_name, o_totalprice
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |ORDER BY o_orderkey""".stripMargin),
+    Key("q_window_range", q_window_range _,
+      """SELECT o_custkey, o_orderkey,
+        |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
+        |    PARTITION BY o_custkey ORDER BY o_orderdate
+        |    RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW), 2) AS DOUBLE)
+        |    AS trailing_30d
+        |FROM orders
+        |ORDER BY o_custkey, o_orderkey""".stripMargin),
+    Key("q_string_agg", q_string_agg _,
+      """SELECT o_orderpriority,
+        |  string_agg(DISTINCT o_orderstatus, ',' ORDER BY o_orderstatus) AS statuses,
+        |  count(DISTINCT o_orderstatus) AS n_statuses
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Key("q_agg_distinct", q_agg_distinct _,
+      """SELECT count(DISTINCT l_partkey) AS n_parts,
+        |  count(DISTINCT l_suppkey) AS n_supps,
+        |  count(DISTINCT l_orderkey) AS n_orders
+        |FROM lineitem""".stripMargin),
+    // HLL bound-check oracles (round 11): the sketch estimate itself
+    // is engine-specific, so the verified surface is exact counts plus
+    // booleans the SPARK side computes from the estimate — a hash
+    // match proves the rsd=1% estimate landed within +-5 % (and, for
+    // q_sketch_merge's global row, that union-of-partials tracks the
+    // single-pass rebuild within 2%). A sketch regression flips a
+    // boolean and reds the row.
+    Key("q_agg_approx", q_agg_approx _,
+      """SELECT count(DISTINCT l_partkey) AS exact_parts,
+        |  count(DISTINCT l_orderkey) AS exact_orders,
+        |  TRUE AS parts_within_5pct, TRUE AS orders_within_5pct
+        |FROM lineitem""".stripMargin),
+    Key("q_agg_rollup", q_agg_rollup _,
+      """SELECT coalesce(o_orderstatus,'ALL') AS status,
+        |  coalesce(o_orderpriority,'ALL') AS priority,
+        |  count(*) AS n, CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))),2) AS DOUBLE) AS total
+        |FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
+        |ORDER BY status, priority""".stripMargin),
+    Key("q_agg_groupset", q_agg_groupset _,
+      """SELECT coalesce(o_orderstatus, 'ALL') AS status,
+        |  coalesce(o_orderpriority, 'ALL') AS priority,
+        |  count(*) AS n,
+        |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))),2) AS DOUBLE) AS total
+        |FROM orders
+        |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
+        |ORDER BY status, priority""".stripMargin),
+    Key("q_regexp_fn", q_regexp_fn _,
+      """SELECT doc_id,
+        |  regexp_extract(source, 'src(\d+)', 1) AS src_num,
+        |  regexp_matches(text, '\bspark\b') AS mentions_spark,
+        |  len(regexp_extract_all(text, '\btable\b')) AS n_table
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Key("q_cond_agg", q_cond_agg _,
+      """SELECT o_orderpriority,
+        |  count(*) FILTER (WHERE o_totalprice > 250000.0) AS n_big,
+        |  bool_and(o_totalprice > 1000.0) AS all_over_1k,
+        |  arg_max(o_orderkey, CAST(CAST(o_totalprice AS DECIMAL(18,2))*100 AS BIGINT)*10000000 + o_orderkey) AS top_order,
+        |  arg_min(o_orderkey, CAST(CAST(o_totalprice AS DECIMAL(18,2))*100 AS BIGINT)*10000000 + o_orderkey) AS bottom_order
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    // exact integer moments (2-decimal values → exact fixed-point
+    // longs; sums associative in any order), closed forms on exact
+    // integers, double arithmetic only in the final sqrt/divide —
+    // mirrors Relational.q_stats_agg op for op. The builtin
+    // stddev_samp/var_samp/corr merge float partials whose tails are
+    // summation-order-dependent in BOTH engines.
+    Key("q_stats_agg", q_stats_agg _,
+      """WITH f AS (
+        |  SELECT l_returnflag,
+        |    CAST(round(l_quantity * 100) AS BIGINT) AS x,
+        |    CAST(round(l_extendedprice * 100) AS BIGINT) AS y,
+        |    CAST(round(l_discount * 100) AS BIGINT) AS dsc,
+        |    CAST(round(l_tax * 100) AS BIGINT) AS tax
+        |  FROM lineitem),
+        |a AS (
+        |  SELECT l_returnflag, count(*) AS n,
+        |    sum(x) AS sx, sum(x*x) AS sxx, sum(y) AS sy, sum(y*y) AS syy,
+        |    sum(x*y) AS sxy, sum(dsc) AS sd, sum(dsc*dsc) AS sdd, sum(tax) AS st
+        |  FROM f GROUP BY 1)
+        |SELECT l_returnflag,
+        |  round(sqrt(CAST(n*sxx - sx*sx AS DOUBLE) / (n*(n-1))) / 100.0, 4) AS sd_qty,
+        |  round(CAST(n*sdd - sd*sd AS DOUBLE) / (n*(n-1)) / 1e4, 6) AS var_disc,
+        |  round(CAST(n*sxy - sx*sy AS DOUBLE)
+        |        / (sqrt(CAST(n*sxx - sx*sx AS DOUBLE)) * sqrt(CAST(n*syy - sy*sy AS DOUBLE))), 4) AS qty_price_corr,
+        |  round(CAST(st AS DOUBLE) / n / 100.0, 6) AS avg_tax
+        |FROM a ORDER BY l_returnflag""".stripMargin),
+    Key("q_bit_fn", q_bit_fn _,
+      """SELECT o_orderkey,
+        |  o_orderkey & 255 AS low_byte,
+        |  o_orderkey | 16 AS with_flag,
+        |  xor(o_orderkey, o_custkey) AS xored,
+        |  o_orderkey << 2 AS shifted
+        |FROM orders WHERE o_orderkey < 500 ORDER BY o_orderkey""".stripMargin),
+    Key("q_having", q_having _,
+      """SELECT o_custkey, count(*) AS n_orders,
+        |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))),2) AS DOUBLE) AS spend
+        |FROM orders GROUP BY o_custkey HAVING count(*) >= 12
+        |ORDER BY o_custkey""".stripMargin),
+    // scalar mean as exact fixed-point sum / count (mirrors the Spark
+    // side; avg(double) would be summation-order-dependent)
+    Key("q_subquery", q_subquery _,
+      """SELECT o_orderkey,
+        |  round(o_totalprice /
+        |    (SELECT CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
+        |       / count(*) / 100.0 FROM orders), 6) AS rel_price
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Key("q_pivot", q_pivot _,
+      """SELECT o_orderpriority,
+        |  count(*) FILTER (WHERE o_orderstatus = 'F') AS f_cnt,
+        |  count(*) FILTER (WHERE o_orderstatus = 'O') AS o_cnt,
+        |  count(*) FILTER (WHERE o_orderstatus = 'P') AS p_cnt
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Key("q_unpivot", q_unpivot _,
+      """SELECT * FROM (
+        |  SELECT p_partkey, 'p_size' AS metric, CAST(p_size AS DOUBLE) AS val FROM part
+        |  UNION ALL
+        |  SELECT p_partkey, 'p_retailprice' AS metric, p_retailprice AS val FROM part)
+        |ORDER BY p_partkey, metric""".stripMargin),
+    Key("q_null_fn", q_null_fn _,
+      """SELECT o_orderkey,
+        |  nullif(o_orderstatus, 'P') AS status_or_null,
+        |  coalesce(nullif(o_orderstatus, 'P'), '(pending)') AS status_filled,
+        |  nullif(o_orderstatus, 'P') IS NULL AS was_pending,
+        |  CASE WHEN o_totalprice > 250000.0 THEN 'high'
+        |       WHEN o_totalprice > 100000.0 THEN 'mid'
+        |       ELSE 'low' END AS price_band
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Key("q_percentile", q_percentile _,
+      """SELECT o_orderstatus,
+        |  round(quantile_cont(o_totalprice, 0.5), 4) AS median_price,
+        |  round(quantile_cont(o_totalprice, 0.9), 4) AS p90_price,
+        |  count(*) AS n
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    Key("q_array_fn", q_array_fn _,
+      """SELECT doc_id,
+        |  len(string_split(text, ' ')) AS n_words,
+        |  array_to_string(list_slice(list_sort(list_distinct(string_split(text, ' '))), 1, 5), ' ') AS first5_sorted,
+        |  list_contains(string_split(text, ' '), 'the') AS has_the,
+        |  string_split(text, ' ')[-1] AS last_word,
+        |  list_aggregate(string_split(text, ' '), 'max') AS max_word
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Key("q_agg_cube", q_agg_cube _,
+      """SELECT coalesce(l_returnflag,'ALL') AS returnflag,
+        |  coalesce(l_linestatus,'ALL') AS linestatus,
+        |  count(*) AS n, CAST(round(sum(CAST(l_quantity AS DECIMAL(18,2))),2) AS DOUBLE) AS sum_qty
+        |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
+        |ORDER BY returnflag, linestatus""".stripMargin),
+    Key("q_sort", q_sort _,
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |ORDER BY o_totalprice DESC, o_orderkey""".stripMargin),
+    Key("q_topk", q_topk _,
+      """SELECT c_custkey, c_name, c_acctbal FROM customer
+        |ORDER BY c_acctbal DESC, c_custkey LIMIT 10""".stripMargin),
+    Key("q_union", q_union _,
+      """SELECT * FROM (
+        |  SELECT o_orderkey, 'f_status' AS src FROM orders WHERE o_orderstatus = 'F'
+        |  UNION ALL
+        |  SELECT o_orderkey, 'big_ticket' AS src FROM orders WHERE o_totalprice > 400000.0)
+        |ORDER BY o_orderkey, src""".stripMargin),
+    Key("q_intersect", q_intersect _,
+      """SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
+        |INTERSECT
+        |SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
+        |ORDER BY o_custkey""".stripMargin),
+    Key("q_except", q_except _,
+      """SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
+        |EXCEPT
+        |SELECT o_custkey FROM orders WHERE o_orderstatus = 'P'
+        |ORDER BY o_custkey""".stripMargin),
+    Key("q_dedup", q_dedup _,
+      """SELECT lang, source, min(doc_id) AS doc_id, count(*) AS n_dups
+        |FROM documents GROUP BY lang, source ORDER BY lang, source""".stripMargin),
+    Key("q_explode", q_explode _,
+      """SELECT doc_id,
+        |  CAST(generate_subscripts(string_split(text,' '),1) - 1 AS INT) AS pos,
+        |  unnest(string_split(text,' ')) AS word
+        |FROM documents WHERE doc_id < 50 ORDER BY doc_id, pos""".stripMargin),
+    Key("q_string_fn", q_string_fn _,
+      """SELECT doc_id, upper(substring(text,1,12)) AS prefix_u,
+        |  regexp_replace(source, '^src', 'source-') AS src_renamed,
+        |  concat_ws('|', lang, source) AS tag,
+        |  string_split(text,' ')[1] AS first_word,
+        |  length(text) AS len
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Key("q_date_fn", q_date_fn _,
+      """SELECT o_orderkey,
+        |  CAST(year(o_orderdate) AS BIGINT) AS yr,
+        |  CAST(month(o_orderdate) AS BIGINT) AS mo,
+        |  CAST(day(o_orderdate) AS BIGINT) AS dom,
+        |  CAST(date_part('epoch', date_trunc('month', o_orderdate)) AS BIGINT) AS month_start_epoch,
+        |  CAST(datediff('day', TIMESTAMP '1995-01-01 00:00:00', o_orderdate) AS BIGINT) AS days_since_95
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Key("q_date_fn2", q_date_fn2 _,
+      """SELECT o_orderkey,
+        |  CAST(o_orderdate + INTERVAL 3 MONTH AS DATE) AS plus3m,
+        |  last_day(CAST(o_orderdate AS DATE)) AS month_end,
+        |  CAST(quarter(o_orderdate) AS BIGINT) AS qtr,
+        |  CAST(dayofyear(o_orderdate) AS BIGINT) AS doy,
+        |  CAST(weekofyear(o_orderdate) AS BIGINT) AS iso_week
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Key("q_math_fn", q_math_fn _,
+      """SELECT l_orderkey, l_linenumber,
+        |  CAST(round(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))), 2) AS DOUBLE) AS net,
+        |  CAST(ceil(l_quantity) AS BIGINT) AS qty_ceil,
+        |  CAST(floor(l_tax * 100) AS BIGINT) AS tax_pct,
+        |  round(sqrt(l_extendedprice), 4) AS price_sqrt,
+        |  abs(l_discount - 0.05) AS disc_dev,
+        |  l_orderkey % 7 AS key_mod7
+        |FROM lineitem WHERE l_orderkey < 100
+        |ORDER BY l_orderkey, l_linenumber, net, qty_ceil, tax_pct, price_sqrt""".stripMargin),
+    Key("q_json_fn", q_json_fn _,
+      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
+        |FROM events WHERE CAST(json_extract_string(props, '$.k') AS BIGINT) > 50
+        |ORDER BY event_id""".stripMargin),
+    // the custom bounded-heap operator must equal the declarative
+    // rank-filter, rank column included
+    Key("q_topk_group", (s, d) => q_topk_group(s, d),
+      """SELECT * FROM (
+        |  SELECT c_nationkey, c_custkey, c_acctbal,
+        |    CAST(row_number() OVER (PARTITION BY c_nationkey
+        |      ORDER BY c_acctbal DESC, c_custkey) AS BIGINT) AS rank
+        |  FROM customer)
+        |WHERE rank <= 3 ORDER BY c_nationkey, rank""".stripMargin),
+    Key("q_sql_report", q_sql_report _,
+      """SELECT r_name, n_name, count(*) AS n_orders,
+        |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))),2) AS DOUBLE) AS revenue
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |  JOIN nation ON c_nationkey = n_nationkey
+        |  JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin),
+    // skew diagnostic: all-integer metric report off the key-count
+    // table; percentiles via the float-free b*cum >= a form
+    Key("q_skew_stats", q_skew_stats _,
+      """WITH kc AS (SELECT l_partkey AS k, CAST(count(*) AS BIGINT) AS n
+        |            FROM lineitem GROUP BY 1),
+        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS nr, CAST(count(*) AS BIGINT) AS nk,
+        |          max(n) AS mx, CAST(sum(n * n) AS BIGINT) AS ssq FROM kc),
+        |cc AS (SELECT n AS c, CAST(count(*) AS BIGINT) AS keys FROM kc GROUP BY 1),
+        |cw AS (SELECT c, sum(keys) OVER (ORDER BY c) AS cum FROM cc),
+        |p50 AS (SELECT min(c) AS v FROM cw, tot WHERE cum * 100 >= nk * 50),
+        |p99 AS (SELECT min(c) AS v FROM cw, tot WHERE cum * 100 >= nk * 99)
+        |SELECT metric, value FROM (
+        |  SELECT 'n_rows' AS metric, nr AS value FROM tot
+        |  UNION ALL SELECT 'n_keys', nk FROM tot
+        |  UNION ALL SELECT 'max_key_n', mx FROM tot
+        |  UNION ALL SELECT 'top1_share_fp', (2 * mx * 1000000 + nr) // (2 * nr) FROM tot
+        |  UNION ALL SELECT 'hhi_fp', (2 * ssq * 1000000 + nr * nr) // (2 * nr * nr) FROM tot
+        |  UNION ALL SELECT 'p50_key_n', v FROM p50
+        |  UNION ALL SELECT 'p99_key_n', v FROM p99)
+        |ORDER BY metric""".stripMargin),
+  )
 }

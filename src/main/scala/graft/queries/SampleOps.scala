@@ -1,7 +1,11 @@
 package graft.queries
 
+import graft.SparkEntry.Key
 import graft.Tables._
+import graft.functions.HashFunctions.{duckHashDraw, duckHexValue}
 import graft.functions.TopKAggregator
+import graft.queries.DedupOps.{duckMinhash, duckSimhashCtes}
+import graft.queries.TextOps.duckQualityScore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1291,4 +1295,606 @@ object SampleOps {
       shiftleft(shiftright(a, i).bitwiseAND(lit(1L)), 2 * i + 1) +
         shiftleft(shiftright(b, i).bitwiseAND(lit(1L)), 2 * i)
     }.reduce(_ + _)
+
+  val keys: Seq[Key] = Seq(
+    // Leakage audit: q_dedup_minhash's confirmed pairs joined to the
+    // q_split assignment on both members; leaks = boundary-straddling
+    Key("q_split_leakage", q_split_leakage _, {
+      val key = "coalesce(md5(array_to_string(list_sort(string_split(text, ' ')), ' ')), " +
+        "'null:' || CAST(doc_id AS VARCHAR))"
+      val draw = duckHexValue(s"md5($key)", 1, 4)
+      s"""WITH sh AS (
+        |  SELECT doc_id, CASE WHEN len(w) >= 3
+        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
+        |    ELSE [text] END AS shingles
+        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents)),
+        |sig AS (
+        |  SELECT doc_id,
+        |SIG_COLUMNS
+        |  FROM sh),
+        |bands AS (
+        |  SELECT doc_id, concat_ws(':', h1, h2, h3, h4) AS band FROM sig
+        |  UNION ALL SELECT doc_id, concat_ws(':', h5, h6, h7, h8) FROM sig),
+        |cand AS (
+        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id),
+        |dsh AS (SELECT doc_id, list_distinct(shingles) AS sset FROM sh
+        |        WHERE NOT (len(shingles) = 1 AND shingles[1] IS NULL)),
+        |mh AS (
+        |  SELECT doc_a, doc_b,
+        |    round(CAST(len(list_intersect(x.sset, y.sset)) AS DOUBLE) / len(list_distinct(x.sset || y.sset)), 10) AS jaccard
+        |  FROM cand JOIN dsh x ON x.doc_id = doc_a JOIN dsh y ON y.doc_id = doc_b),
+        |sp AS (
+        |  SELECT doc_id,
+        |    CASE WHEN $draw % 1000 < 800 THEN 'train'
+        |         WHEN $draw % 1000 < 900 THEN 'val'
+        |         ELSE 'test' END AS split
+        |  FROM documents)
+        |SELECT doc_a, doc_b, jaccard, sa.split AS split_a, sb.split AS split_b,
+        |  sa.split <> sb.split AS leaks
+        |FROM mh JOIN sp sa ON sa.doc_id = doc_a JOIN sp sb ON sb.doc_id = doc_b
+        |ORDER BY doc_a, doc_b""".stripMargin
+        .replace("SIG_COLUMNS",
+          (1 to 8).map(i => s"    ${duckMinhash(i)} AS h$i").mkString(",\n"))
+    }),
+    // Group-aware split: union of the two near-dup pair families
+    // (MinHash exact-jaccard >= 0.5 on the ROUNDED value + SimHash
+    // hamming <= 1), recursive min-label components (the
+    // q_dup_clusters oracle's CC form), draw on 'grp:' || group_id.
+    // CTE namespaces don't collide: minhash uses sh/sig/bands/cand/
+    // dsh/mh, simhash w/h/v/s.
+    Key("q_split_group", q_split_group _, {
+      val draw = duckHexValue("md5('grp:' || CAST(group_id AS VARCHAR))", 1, 4)
+      s"""WITH RECURSIVE sh AS (
+        |  SELECT doc_id, CASE WHEN len(w) >= 3
+        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
+        |    ELSE [text] END AS shingles
+        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents)),
+        |sig AS (
+        |  SELECT doc_id,
+        |SIG_COLUMNS
+        |  FROM sh),
+        |bands AS (
+        |  SELECT doc_id, concat_ws(':', h1, h2, h3, h4) AS band FROM sig
+        |  UNION ALL SELECT doc_id, concat_ws(':', h5, h6, h7, h8) FROM sig),
+        |cand AS (
+        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id),
+        |dsh AS (SELECT doc_id, list_distinct(shingles) AS sset FROM sh
+        |        WHERE NOT (len(shingles) = 1 AND shingles[1] IS NULL)),
+        |mh AS (
+        |  SELECT doc_a, doc_b
+        |  FROM cand JOIN dsh x ON x.doc_id = doc_a JOIN dsh y ON y.doc_id = doc_b
+        |  WHERE round(CAST(len(list_intersect(x.sset, y.sset)) AS DOUBLE)
+        |          / len(list_distinct(x.sset || y.sset)), 10) >= 0.5),
+        |$duckSimhashCtes,
+        |p AS (SELECT doc_a, doc_b FROM mh
+        |  UNION
+        |  SELECT a.doc_id, b.doc_id FROM s a, s b
+        |  WHERE a.doc_id < b.doc_id
+        |    AND bit_count(xor(a.simhash, b.simhash)) <= 1),
+        |e AS (SELECT doc_a AS u, doc_b AS vtx FROM p
+        |  UNION ALL SELECT doc_b, doc_a FROM p),
+        |lab(node, label) AS (
+        |  SELECT u, least(u, min(vtx)) FROM e GROUP BY u
+        |  UNION
+        |  SELECT e.u, l.label FROM e JOIN lab l ON e.vtx = l.node),
+        |lbl AS (SELECT node, min(label) AS label FROM lab GROUP BY node),
+        |base AS (SELECT d.doc_id, coalesce(l.label, d.doc_id) AS group_id
+        |  FROM documents d LEFT JOIN lbl l ON d.doc_id = l.node)
+        |SELECT doc_id, group_id, $draw % 1000 AS bucket,
+        |  CASE WHEN $draw % 1000 < 800 THEN 'train'
+        |       WHEN $draw % 1000 < 900 THEN 'val'
+        |       ELSE 'test' END AS split
+        |FROM base ORDER BY doc_id""".stripMargin
+        .replace("SIG_COLUMNS",
+          (1 to 8).map(i => s"    ${duckMinhash(i)} AS h$i").mkString(",\n"))
+    }),
+    // Deterministic hash draw shared by the sampling oracles: integer
+    // value of the first N hex chars of md5(doc_id), via per-nibble
+    // strpos arithmetic (DuckDB has no base-16 conv()).
+    Key("q_sample_weighted", q_sample_weighted _, {
+      val draw4 = duckHashDraw(4)
+      s"""WITH q AS (
+         |  SELECT doc_id, lang, $draw4 % 1000 AS bucket,
+         |    CAST(floor(100.0 + 900.0 * $duckQualityScore) AS BIGINT) AS keep_rate
+         |  FROM documents)
+         |SELECT doc_id, lang, bucket, keep_rate
+         |FROM q WHERE bucket < keep_rate ORDER BY doc_id""".stripMargin
+    }),
+    // sliding-window chunking: DuckDB 1-based inclusive list slicing
+    // w[a:b] == Spark slice(w, a, b-a+1); chunk count mirrors the
+    // Spark floor form token for token; NULL text yields no rows on
+    // both engines (range(NULL) / sequence(NULL))
+    Key("q_chunk", q_chunk _,
+      """WITH d AS (
+        |  SELECT doc_id, string_split(text, ' ') AS w,
+        |         len(string_split(text, ' ')) AS n
+        |  FROM documents),
+        |c AS (
+        |  SELECT doc_id, n, w,
+        |    unnest(range(0, CASE WHEN n <= 32 THEN 1
+        |      ELSE CAST(floor((n - 32 + 23) / 24.0) AS BIGINT) + 1 END)) AS chunk_idx
+        |  FROM d)
+        |SELECT doc_id, chunk_idx,
+        |  array_to_string(w[chunk_idx*24 + 1 : chunk_idx*24 + 32], ' ') AS chunk_text,
+        |  least(32, n - chunk_idx*24) AS n_chunk_tokens
+        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin),
+    // uniform language rebalancing: integer counts, one exact floor
+    // division for the rate, the shared md5 draw — fully deterministic
+    Key("q_sample_balance", q_sample_balance _, {
+      val draw4 = duckHashDraw(4)
+      s"""WITH c AS (SELECT lang, count(*) AS n_lang FROM documents GROUP BY 1),
+         |t AS (SELECT min(n_lang) AS target_n FROM c),
+         |r AS (SELECT lang, CAST(floor(target_n * 1000.0 / n_lang) AS BIGINT) AS keep_rate
+         |      FROM c, t),
+         |d AS (SELECT doc_id, lang, $draw4 % 1000 AS bucket FROM documents)
+         |SELECT doc_id, lang, bucket, keep_rate
+         |FROM d JOIN r USING (lang)
+         |WHERE bucket < keep_rate ORDER BY doc_id""".stripMargin
+    }),
+    // exactly-k-per-stratum: smallest md5 draws per language, doc_id
+    // tie-break — the custom heap operator vs the rank-filter oracle
+    Key("q_sample_stratified", (s, d) => q_sample_stratified(s, d), {
+      val draw6 = duckHashDraw(6)
+      s"""WITH d AS (SELECT doc_id, lang, $draw6 AS draw FROM documents),
+         |r AS (SELECT doc_id, lang, draw,
+         |        CAST(row_number() OVER (PARTITION BY lang
+         |          ORDER BY draw, doc_id) AS BIGINT) AS rank
+         |      FROM d)
+         |SELECT doc_id, lang, draw, rank FROM r
+         |WHERE rank <= 20 ORDER BY lang, rank""".stripMargin
+    }),
+    Key("q_sample_hash", q_sample_hash _, {
+      val draw4 = duckHashDraw(4)
+      s"""SELECT doc_id, lang, source, $draw4 % 1000 AS bucket
+         |FROM documents
+         |WHERE $draw4 % 1000 <
+         |  (CASE lang WHEN 'en' THEN 200 WHEN 'zh' THEN 400 ELSE 600 END)
+         |ORDER BY doc_id""".stripMargin
+    }),
+    Key("q_sample_reservoir", (s, d) => q_sample_reservoir(s, d), {
+      val draw6 = duckHashDraw(6)
+      s"""WITH d AS (SELECT lang, doc_id, $draw6 AS draw FROM documents),
+         |r AS (SELECT lang, doc_id, draw,
+         |  row_number() OVER (PARTITION BY lang ORDER BY draw, doc_id) AS rank
+         |  FROM d WHERE draw IS NOT NULL)
+         |SELECT lang, CAST(rank AS BIGINT) AS rank, doc_id, CAST(draw AS BIGINT) AS draw
+         |FROM r WHERE rank <= 20 ORDER BY lang, rank""".stripMargin
+    }),
+    Key("q_pack_sequences", (s, d) => q_pack_sequences(s, d),
+      """WITH toks AS (SELECT doc_id, doc_id % 8 AS shard,
+        |    len(regexp_split_to_array(text, '\s+')) AS n_tokens
+        |  FROM documents),
+        |c AS (SELECT doc_id, shard, CAST(n_tokens AS BIGINT) AS n_tokens,
+        |    sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+        |  FROM toks)
+        |SELECT doc_id, shard, n_tokens,
+        |  CAST(cum - n_tokens AS BIGINT) AS shard_offset,
+        |  (shard << 40) + CAST(floor((cum - n_tokens) / 512.0) AS BIGINT) AS seq_id
+        |FROM c ORDER BY doc_id""".stripMargin),
+    Key("q_pipeline_prep", q_pipeline_prep _,
+      s"""WITH scored AS (
+         |  SELECT doc_id, lang,
+         |    $duckQualityScore AS quality,
+         |    len(regexp_split_to_array(text, '\\s+')) AS n_tokens,
+         |    md5(array_to_string(list_sort(string_split(text,' ')), ' ')) AS fp
+         |  FROM documents),
+        |kept AS (SELECT * FROM scored
+        |  WHERE quality >= 0.45 AND lang IN ('en','fr','de','es'))
+        |SELECT min(doc_id) AS doc_id, min(lang) AS lang, min(quality) AS quality,
+        |  CAST(min(n_tokens) AS BIGINT) AS n_tokens, count(*) AS n_dups
+        |FROM kept GROUP BY fp ORDER BY doc_id""".stripMargin),
+    // per-language discrete lower median over exact fixed-point scores
+    // (integer cumulative window over value counts — no interpolated
+    // percentile, whose two-value midpoint can sit exactly on a float
+    // rounding boundary); the gate compares longs
+    Key("q_quality_gate", q_quality_gate _,
+      s"""WITH sc AS (SELECT doc_id, lang,
+         |    CAST(round($duckQualityScore * 1e10) AS BIGINT) AS qf FROM documents),
+         |v AS (SELECT lang, qf, count(*) AS c FROM sc
+         |      WHERE qf IS NOT NULL GROUP BY 1, 2),
+         |cw AS (SELECT lang, qf,
+         |         sum(c) OVER (PARTITION BY lang ORDER BY qf) AS cum,
+         |         sum(c) OVER (PARTITION BY lang) AS nl FROM v),
+         |t AS (SELECT lang, min(qf) AS thr_fp FROM cw
+         |      WHERE cum >= CAST(ceil(nl / 2.0) AS BIGINT) GROUP BY 1)
+         |SELECT doc_id, lang, CAST(qf AS DOUBLE) / 1e10 AS quality,
+         |  CAST(thr_fp AS DOUBLE) / 1e10 AS lang_median
+         |FROM sc JOIN t USING (lang)
+         |WHERE qf >= thr_fp ORDER BY doc_id""".stripMargin),
+    // dedup-safe split: the draw hashes the normalized-content
+    // fingerprint (null docs: a namespaced doc id), same md5-nibble
+    // bridge as the sampling oracles
+    Key("q_split", q_split _, {
+      val key = "coalesce(md5(array_to_string(list_sort(string_split(text, ' ')), ' ')), " +
+        "'null:' || CAST(doc_id AS VARCHAR))"
+      val draw = duckHexValue(s"md5($key)", 1, 4)
+      s"""SELECT doc_id, lang, $draw % 1000 AS bucket,
+         |  CASE WHEN $draw % 1000 < 800 THEN 'train'
+         |       WHEN $draw % 1000 < 900 THEN 'val'
+         |       ELSE 'test' END AS split
+         |FROM documents ORDER BY doc_id""".stripMargin
+    }),
+    // token-budget mixing: integer token counts, ONE float division
+    // sequence for the rate written token for token as the query
+    // (identical IEEE ops on exact operands), the shared md5 draw;
+    // left join keeps zero-admission sources in the report
+    Key("q_mix_budget", (s, d) => q_mix_budget(s, d), {
+      val draw4 = duckHashDraw(4)
+      s"""WITH ps AS (SELECT source, count(*) AS src_docs,
+         |      CAST(sum(len(regexp_split_to_array(text, '\\s+'))) AS BIGINT) AS src_tokens
+         |    FROM documents GROUP BY 1),
+         |tt AS (SELECT CAST(sum(src_tokens) AS BIGINT) AS total_tokens,
+         |         count(*) AS n_sources FROM ps),
+         |r AS (SELECT source, src_docs, src_tokens,
+         |        least(1000, CAST(floor(total_tokens * 500.0 / (n_sources * src_tokens))
+         |          AS BIGINT)) AS rate_mille
+         |      FROM ps, tt),
+         |k AS (SELECT d.source, count(*) AS kept_docs,
+         |        CAST(sum(len(regexp_split_to_array(d.text, '\\s+'))) AS BIGINT) AS kept_tokens
+         |      FROM documents d JOIN r USING (source)
+         |      WHERE $draw4 % 1000 < rate_mille GROUP BY 1)
+         |SELECT source, src_docs, src_tokens, rate_mille,
+         |  coalesce(kept_docs, 0) AS kept_docs,
+         |  coalesce(kept_tokens, 0) AS kept_tokens
+         |FROM r LEFT JOIN k USING (source) ORDER BY source""".stripMargin
+    }),
+    // temperature mixing: sqrt weight (α=0.5 — IEEE-correctly-rounded
+    // in both engines, unlike pow), floor fixed-pointing (round
+    // diverges: Spark half-up, DuckDB half-even), exact long
+    // normalizing sum, rate = one double op sequence mirrored token
+    // for token
+    Key("q_mix_temp", (s, d) => q_mix_temp(s, d), {
+      val draw4 = duckHashDraw(4)
+      s"""WITH ps AS (SELECT source, count(*) AS src_docs,
+         |      CAST(sum(len(regexp_split_to_array(text, '\\s+'))) AS BIGINT) AS src_tokens
+         |    FROM documents GROUP BY 1),
+         |w AS (SELECT source, src_docs, src_tokens,
+         |        CAST(floor(sqrt(CAST(src_tokens AS DOUBLE)) * 1e6) AS BIGINT)
+         |          AS weight_fp FROM ps),
+         |tt AS (SELECT CAST(sum(src_tokens) AS BIGINT) AS total_tokens,
+         |         CAST(sum(weight_fp) AS BIGINT) AS w_sum FROM w),
+         |r AS (SELECT source, src_docs, src_tokens, weight_fp,
+         |        least(1000, CAST(floor(CAST(total_tokens AS DOUBLE) * 500.0 * weight_fp /
+         |          (CAST(w_sum AS DOUBLE) * src_tokens)) AS BIGINT)) AS rate_mille
+         |      FROM w, tt),
+         |k AS (SELECT d.source, count(*) AS kept_docs,
+         |        CAST(sum(len(regexp_split_to_array(d.text, '\\s+'))) AS BIGINT) AS kept_tokens
+         |      FROM documents d JOIN r USING (source)
+         |      WHERE $draw4 % 1000 < rate_mille GROUP BY 1)
+         |SELECT source, src_docs, src_tokens, weight_fp, rate_mille,
+         |  coalesce(kept_docs, 0) AS kept_docs,
+         |  coalesce(kept_tokens, 0) AS kept_tokens
+         |FROM r LEFT JOIN k USING (source) ORDER BY source""".stripMargin
+    }),
+    // epoch allocation: q_mix_temp's sqrt weights over LANGUAGES, 4x
+    // token budget, integer allocation and round-half-up epochs; the
+    // >4-epoch cap mirrors as a pure integer comparison
+    Key("q_mix_epoch", (s, d) => q_mix_epoch(s, d),
+      s"""WITH ps AS (SELECT lang, count(*) AS n_docs,
+         |      CAST(sum(len(regexp_split_to_array(text, '\\s+'))) AS BIGINT) AS lang_tokens
+         |    FROM documents GROUP BY 1),
+         |w AS (SELECT lang, n_docs, lang_tokens,
+         |        CAST(floor(sqrt(CAST(lang_tokens AS DOUBLE)) * 1e6) AS BIGINT)
+         |          AS weight_fp FROM ps),
+         |tt AS (SELECT CAST(sum(lang_tokens) AS BIGINT) AS total_tokens,
+         |         CAST(sum(weight_fp) AS BIGINT) AS w_sum FROM w),
+         |a AS (SELECT lang, n_docs, lang_tokens, weight_fp,
+         |        CAST((4 * total_tokens * weight_fp) // w_sum AS BIGINT)
+         |          AS alloc_tokens
+         |      FROM w, tt)
+         |SELECT lang, n_docs, lang_tokens, weight_fp, alloc_tokens,
+         |  (2 * alloc_tokens * 1000000 + lang_tokens) // (2 * lang_tokens)
+         |    AS epochs_fp,
+         |  (2 * alloc_tokens * 1000000 + lang_tokens) // (2 * lang_tokens)
+         |    > 4000000 AS over_cap,
+         |  least(alloc_tokens, lang_tokens * 4) AS effective_tokens
+         |FROM a ORDER BY lang""".stripMargin),
+    // deterministic shard shuffle: the 8-hex-char draw is the
+    // pseudo-random order key; seq = per-shard row_number (ties
+    // impossible: doc_id breaks them)
+    Key("q_shuffle_shards", (s, d) => q_shuffle_shards(s, d), {
+      val draw8 = duckHashDraw(8)
+      s"""WITH d AS (SELECT doc_id, $draw8 AS rkey FROM documents)
+         |SELECT doc_id, rkey % 8 AS shard,
+         |  CAST(row_number() OVER (PARTITION BY rkey % 8 ORDER BY rkey, doc_id)
+         |    AS BIGINT) AS seq,
+         |  rkey
+         |FROM d ORDER BY doc_id""".stripMargin
+    }),
+    // DP Laplace release: integer nibble draw over md5(lang), sign
+    // from the raw draw, x1e6-quantized ln, 2^-32 floor on mag
+    Key("q_dp_hist", (s, d) => q_dp_hist(s, d), {
+      val draw = duckHexValue("md5(lang)", 1, 8)
+      s"""WITH pl AS (SELECT lang, CAST(count(*) AS BIGINT) AS n
+         |    FROM documents WHERE lang IS NOT NULL GROUP BY 1),
+         |dr AS (SELECT lang, n, $draw AS draw FROM pl),
+         |nz AS (SELECT lang, n,
+         |    CAST(CASE WHEN draw >= 2147483648 THEN 1 ELSE -1 END AS BIGINT) AS sgn,
+         |    greatest(1.0 - 2.0 * abs(draw / 4294967296.0 - 0.5),
+         |             1.0 / 4294967296.0) AS mag
+         |  FROM dr)
+         |SELECT lang, n,
+         |  sgn * CAST(round(-ln(mag) * 1000000.0) AS BIGINT) AS noise_fp,
+         |  n * 1000000 + sgn * CAST(round(-ln(mag) * 1000000.0) AS BIGINT)
+         |    AS noisy_n_fp
+         |FROM nz ORDER BY lang""".stripMargin
+    }),
+    // k-anonymity audit: one group-size agg over the quasi-identifier
+    // pair; risk_fp is the positive-operand round-half-up fixed point
+    // (// == div on positives)
+    Key("q_kanon", (s, d) => q_kanon(s, d),
+      """SELECT c_nationkey, c_mktsegment, CAST(count(*) AS BIGINT) AS n,
+        |  count(*) < 10 AS violates_k,
+        |  (2 * 1000000 + CAST(count(*) AS BIGINT))
+        |    // (2 * CAST(count(*) AS BIGINT)) AS risk_fp
+        |FROM customer GROUP BY 1, 2
+        |ORDER BY c_nationkey, c_mktsegment""".stripMargin),
+    // l-diversity: DECIMAL cents (money rule), FLOOR-division band.
+    // DuckDB's integer // truncates toward zero just like Spark div
+    // (-7 // 2 = -3, measured — only its FLOAT // floors), so floor is
+    // spelled sign-separated as -ceil(|x|/d) on the negative side;
+    // the Spark side subtracts pmod first. Two-level agg.
+    Key("q_ldiversity", (s, d) => q_ldiversity(s, d),
+      """WITH sv AS (
+        |  SELECT c_nationkey, c_mktsegment,
+        |    CASE WHEN cents >= 0 THEN cents // 100000
+        |         ELSE -((-cents + 99999) // 100000) END AS bal_band
+        |  FROM (SELECT c_nationkey, c_mktsegment,
+        |          CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+        |        FROM customer)),
+        |cell AS (SELECT c_nationkey, c_mktsegment, bal_band,
+        |    CAST(count(*) AS BIGINT) AS n_sv
+        |  FROM sv GROUP BY 1, 2, 3)
+        |SELECT c_nationkey, c_mktsegment, CAST(sum(n_sv) AS BIGINT) AS n,
+        |  CAST(count(*) AS BIGINT) AS distinct_sensitive,
+        |  CAST(count(*) AS BIGINT) < 6 AS violates_l
+        |FROM cell GROUP BY 1, 2
+        |ORDER BY c_nationkey, c_mktsegment""".stripMargin),
+    // Efraimidis-Spirakis exact-k weighted sampling: deterministic
+    // doc_id draw, x1e9-quantized -ln(u), round-half-up key over the
+    // length weight, total-order cut
+    Key("q_sample_es", (s, d) => q_sample_es(s, d), {
+      val draw8 = duckHashDraw(8)
+      s"""WITH dr AS (SELECT doc_id, lang, n_chars, $draw8 AS draw
+         |    FROM documents WHERE n_chars > 0),
+         |ln0 AS (SELECT doc_id, lang, n_chars,
+         |    CAST(round(-ln(greatest(draw / 4294967296.0,
+         |      1.0 / 4294967296.0)) * 1000000000.0) AS BIGINT) AS lnu_fp
+         |  FROM dr)
+         |SELECT doc_id, lang, n_chars,
+         |  (2 * lnu_fp * 1000000 + n_chars) // (2 * n_chars) AS key_fp
+         |FROM ln0 ORDER BY key_fp, doc_id LIMIT 50""".stripMargin
+    }),
+    // DP median via the exponential mechanism (Gumbel-max): integer
+    // twice-utility from the cumulative band ranks; inner ln quantized
+    // x1e9 BEFORE the outer ln (composition amplifies a 1-ulp inner
+    // divergence), outer x1e6; deterministic md5 draw per band
+    Key("q_dp_quantile", (s, d) => q_dp_quantile(s, d), {
+      val draw = duckHexValue("md5(CAST(bal_band AS VARCHAR))", 1, 8)
+      s"""WITH cell AS MATERIALIZED (
+         |  SELECT CASE WHEN cents >= 0 THEN cents // 100000
+         |         ELSE -((-cents + 99999) // 100000) END AS bal_band,
+         |    CAST(count(*) AS BIGINT) AS n_b
+         |  FROM (SELECT CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
+         |          AS cents FROM customer)
+         |  GROUP BY 1),
+         |tot AS (SELECT CAST(sum(n_b) AS BIGINT) AS n FROM cell),
+         |sp AS (SELECT bal_band, n_b,
+         |    CAST(sum(n_b) OVER (ORDER BY bal_band) AS BIGINT) AS cum,
+         |    $draw AS draw
+         |  FROM cell),
+         |sc AS (SELECT bal_band, n_b, -abs(2 * cum - n) AS u2,
+         |    greatest(1, CAST(round(-ln(greatest(draw / 4294967296.0,
+         |      1.0 / 4294967296.0)) * 1000000000.0) AS BIGINT)) AS y_fp
+         |  FROM sp CROSS JOIN tot),
+         |s2 AS (SELECT bal_band, n_b, u2,
+         |    CAST(-round(ln(y_fp / 1000000000.0) * 1000000.0) AS BIGINT)
+         |      AS gumbel_fp
+         |  FROM sc),
+         |s3 AS (SELECT *, u2 * 250000 + gumbel_fp AS score_fp FROM s2),
+         |best AS MATERIALIZED (SELECT bal_band AS best_band FROM s3
+         |  ORDER BY score_fp DESC, bal_band ASC LIMIT 1)
+         |SELECT bal_band, n_b, u2, gumbel_fp, score_fp,
+         |  bal_band = (SELECT best_band FROM best) AS released
+         |FROM s3 ORDER BY bal_band""".stripMargin
+    }),
+    // DP top-k: one-shot exponential mechanism via per-cell Gumbel
+    // noise (same quantize-inner-ln-first composition as
+    // q_dp_quantile); threshold = k-th best score from the scored
+    // CTE, released on score >= threshold
+    Key("q_dp_topk", (s, d) => q_dp_topk(s, d), {
+      val draw = duckHexValue("md5(lang || ':' || source)", 1, 8)
+      s"""WITH cell AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS n
+         |  FROM documents
+         |  WHERE lang IS NOT NULL AND source IS NOT NULL GROUP BY 1, 2),
+         |sc AS (SELECT lang, source, n,
+         |    greatest(1, CAST(round(-ln(greatest($draw / 4294967296.0,
+         |      1.0 / 4294967296.0)) * 1000000000.0) AS BIGINT)) AS y_fp
+         |  FROM cell),
+         |s2 AS MATERIALIZED (SELECT lang, source, n,
+         |    CAST(-round(ln(y_fp / 1000000000.0) * 1000000.0) AS BIGINT)
+         |      AS gumbel_fp,
+         |    n * 2000000 +
+         |      CAST(-round(ln(y_fp / 1000000000.0) * 1000000.0) AS BIGINT)
+         |      AS score_fp
+         |  FROM sc),
+         |thr AS (SELECT min(score_fp) AS thr_fp FROM (
+         |  SELECT score_fp FROM s2
+         |  ORDER BY score_fp DESC, lang, source LIMIT 5))
+         |SELECT lang, source, n, gumbel_fp, score_fp,
+         |  score_fp >= (SELECT thr_fp FROM thr) AS released
+         |FROM s2 ORDER BY lang, source""".stripMargin
+    }),
+    // t-closeness: ordered-domain EMD as all-integer cross-multiplied
+    // cumulative diffs over a dense class x band spine; the 4x-read
+    // cell CTE and the totals are MATERIALIZED (DuckDB re-inlines per
+    // reference); positive-operand round-half-up fixed point
+    Key("q_tcloseness", (s, d) => q_tcloseness(s, d),
+      """WITH cell AS MATERIALIZED (
+        |  SELECT c_nationkey, c_mktsegment,
+        |    CASE WHEN cents >= 0 THEN cents // 100000
+        |         ELSE -((-cents + 99999) // 100000) END AS bal_band,
+        |    CAST(count(*) AS BIGINT) AS nb
+        |  FROM (SELECT c_nationkey, c_mktsegment,
+        |          CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+        |        FROM customer)
+        |  GROUP BY 1, 2, 3),
+        |cls AS (SELECT c_nationkey, c_mktsegment, CAST(sum(nb) AS BIGINT) AS n
+        |  FROM cell GROUP BY 1, 2),
+        |gb AS (SELECT bal_band, CAST(sum(nb) AS BIGINT) AS g FROM cell GROUP BY 1),
+        |tot AS MATERIALIZED (SELECT CAST(sum(nb) AS BIGINT) AS big_n,
+        |  CAST(count(DISTINCT bal_band) AS BIGINT) AS n_bands FROM cell),
+        |spine AS (SELECT cls.c_nationkey, cls.c_mktsegment, cls.n,
+        |    gb.bal_band, gb.g, coalesce(cell.nb, 0) AS nb
+        |  FROM cls CROSS JOIN gb
+        |  LEFT JOIN cell USING (c_nationkey, c_mktsegment, bal_band)),
+        |cum AS (SELECT c_nationkey, c_mktsegment, n,
+        |    CAST(sum(nb) OVER (PARTITION BY c_nationkey, c_mktsegment
+        |      ORDER BY bal_band) AS BIGINT) AS cn,
+        |    CAST(sum(g) OVER (PARTITION BY c_nationkey, c_mktsegment
+        |      ORDER BY bal_band) AS BIGINT) AS cg
+        |  FROM spine),
+        |emd AS (SELECT c_nationkey, c_mktsegment, max(n) AS n,
+        |    CAST(sum(abs(cn * big_n - cg * n)) AS BIGINT) AS diff,
+        |    max(big_n) AS big_n, max(n_bands) AS n_bands
+        |  FROM cum CROSS JOIN tot GROUP BY 1, 2)
+        |SELECT c_nationkey, c_mktsegment, n,
+        |  (2 * 1000000 * diff + n * big_n * greatest(n_bands - 1, 1))
+        |    // (2 * n * big_n * greatest(n_bands - 1, 1)) AS t_fp,
+        |  (2 * 1000000 * diff + n * big_n * greatest(n_bands - 1, 1))
+        |    // (2 * n * big_n * greatest(n_bands - 1, 1)) > 200000 AS violates_t
+        |FROM emd ORDER BY c_nationkey, c_mktsegment""".stripMargin),
+    // shard-mix audit: same draw, (shard, lang) cells, integer
+    // cross-multiplied per-mille deviation, max per shard
+    Key("q_shard_quality", (s, d) => q_shard_quality(s, d), {
+      val draw8 = duckHashDraw(8)
+      s"""WITH c AS (SELECT ($draw8) % 8 AS shard, lang,
+         |      CAST(count(*) AS BIGINT) AS n_sl
+         |    FROM documents WHERE lang IS NOT NULL GROUP BY 1, 2),
+         |bs AS (SELECT shard, CAST(sum(n_sl) AS BIGINT) AS n_s,
+         |         CAST(count(*) AS BIGINT) AS n_langs FROM c GROUP BY 1),
+         |bl AS (SELECT lang, CAST(sum(n_sl) AS BIGINT) AS n_l FROM c GROUP BY 1),
+         |tt AS (SELECT CAST(sum(n_sl) AS BIGINT) AS n_total FROM c),
+         |dev AS (SELECT c.shard, bs.n_s, bs.n_langs,
+         |    (2 * 1000 * abs(c.n_sl * n_total - bl.n_l * bs.n_s) + bs.n_s * n_total)
+         |      // (2 * bs.n_s * n_total) AS dev_mille
+         |  FROM c JOIN bl USING (lang) JOIN bs USING (shard), tt)
+         |SELECT shard, n_s AS n_docs, n_langs,
+         |  CAST(max(dev_mille) AS BIGINT) AS max_dev_mille
+         |FROM dev GROUP BY shard, n_s, n_langs ORDER BY shard""".stripMargin
+    }),
+    // shard manifests: same doc_id draw as q_shuffle_shards; content
+    // checksum = bit_xor of 60-bit md5(text) fingerprints (order-free;
+    // a BIGINT SUM would overflow into HUGEINT divergence — the
+    // q_corpus_report round-8 lesson); every aggregate cast to BIGINT
+    // Morton interleave as 32 generated shift/mask terms; keys scaled
+    // to a fixed 16-bit domain by the data maxima with exact integer
+    // division — identical codes in both engines at every sf
+    Key("q_zorder", (s, d) => q_zorder(s, d), {
+      val terms = (0 until 16).map { i =>
+        s"((((p16 >> $i) & 1) << ${2 * i + 1}) + (((s16 >> $i) & 1) << ${2 * i}))"
+      }.mkString(" + ")
+      s"""WITH mx AS (SELECT max(l_partkey) AS pmax, max(l_suppkey) AS smax FROM lineitem),
+         |sc AS (SELECT l_partkey AS p, l_suppkey AS sk,
+         |         (l_partkey * 65535) // greatest(pmax, 1) AS p16,
+         |         (l_suppkey * 65535) // greatest(smax, 1) AS s16
+         |       FROM lineitem, mx),
+         |zz AS (SELECT p, sk, $terms AS z FROM sc)
+         |SELECT z >> 26 AS bucket, CAST(count(*) AS BIGINT) AS n,
+         |  min(p) AS p_min, max(p) AS p_max, min(sk) AS s_min, max(sk) AS s_max,
+         |  max(p) - min(p) + 1 AS p_span, max(sk) - min(sk) + 1 AS s_span
+         |FROM zz GROUP BY 1 ORDER BY 1""".stripMargin
+    }),
+    Key("q_shard_manifest", (s, d) => q_shard_manifest(s, d), {
+      val draw8 = duckHashDraw(8)
+      val cfp = duckHexValue("md5(text)", 1, 15)
+      s"""WITH d AS (
+         |  SELECT doc_id, $draw8 % 8 AS shard, $cfp AS cfp,
+         |    CASE WHEN text IS NOT NULL
+         |      THEN len(string_split(text, ' ')) END AS n_toks
+         |  FROM documents)
+         |SELECT shard, count(*) AS n_docs, count(cfp) AS n_content,
+         |  CAST(coalesce(sum(n_toks), 0) AS BIGINT) AS n_tokens,
+         |  CAST(coalesce(bit_xor(cfp), 0) AS BIGINT) AS checksum_xor,
+         |  min(cfp) AS fp_min, max(cfp) AS fp_max
+         |FROM d GROUP BY shard ORDER BY shard""".stripMargin
+    }),
+    // curriculum staging: x1e10 quality fixed point ranked DESC
+    // (doc_id tiebreak), q_rfm position-formula stages, exact-long
+    // stage stats with the round-half-up mean
+    Key("q_curriculum", (s, d) => q_curriculum(s, d),
+      s"""WITH per AS (SELECT doc_id,
+         |    CAST(round($duckQualityScore * 1e10) AS BIGINT) AS qf,
+         |    CAST(len(list_filter(string_split(text, ' '),
+         |      x -> len(x) > 0)) AS BIGINT) AS t
+         |  FROM documents WHERE text IS NOT NULL),
+         |p2 AS (SELECT doc_id, qf, t FROM per WHERE qf IS NOT NULL),
+         |r AS (SELECT qf, t,
+         |        CAST(row_number() OVER (ORDER BY qf DESC, doc_id) AS BIGINT) AS rn,
+         |        CAST(count(*) OVER () AS BIGINT) AS n
+         |      FROM p2),
+         |st AS (SELECT (rn - 1) * 4 // n + 1 AS stage, qf, t FROM r)
+         |SELECT stage, CAST(count(*) AS BIGINT) AS n_docs,
+         |  CAST(sum(t) AS BIGINT) AS n_tokens,
+         |  min(qf) AS qf_min, max(qf) AS qf_max,
+         |  (2 * CAST(sum(qf) AS BIGINT) + count(*)) // (2 * count(*)) AS mean_qf
+         |FROM st GROUP BY 1 ORDER BY 1""".stripMargin),
+    // length-bucketed batching report: power-of-two bucket via the
+    // same branchless bit-smear both engines evaluate on exact longs;
+    // waste is (2a+d) div 2d round-half-up fixed point
+    Key("q_length_buckets", q_length_buckets _, {
+      var smear = "(n - 1)"
+      Seq(1, 2, 4, 8, 16, 32).foreach { sh =>
+        smear = s"(($smear) | (($smear) >> $sh))"
+      }
+      s"""WITH t AS (
+         |  SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS n
+         |  FROM documents WHERE text IS NOT NULL),
+         |b AS (SELECT CASE WHEN n <= 1 THEN 1 ELSE $smear + 1 END AS bucket, n
+         |      FROM t),
+         |g AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_docs,
+         |        CAST(sum(n) AS BIGINT) AS n_tokens
+         |      FROM b GROUP BY bucket)
+         |SELECT bucket, n_docs, n_tokens,
+         |  CAST(bucket * n_docs AS BIGINT) AS padded_tokens,
+         |  CAST((2 * (bucket * n_docs - n_tokens) * 1000000 + bucket * n_docs)
+         |       // (2 * bucket * n_docs) AS BIGINT) AS waste_fp
+         |FROM g ORDER BY bucket""".stripMargin
+    }),
+    // DSIR importance weights: one ln per token on an exact integer
+    // ratio (smoothed target/raw probabilities composed into a single
+    // rational, integer-multiply-then-cast), 1e9 fixed-point longs,
+    // exact per-doc sums; totals CAST to BIGINT (HUGEINT trap)
+    Key("q_dsir", q_dsir _, {
+      val bucket = s"(${duckHexValue("md5(w)", 1, 15)}) % 1024"
+      s"""WITH tok AS (SELECT doc_id, ($duckQualityScore) >= 0.45 AS tgt,
+         |               unnest(string_split(text, ' ')) AS w
+         |             FROM documents),
+         |tk AS (SELECT doc_id, tgt, $bucket AS b FROM tok WHERE len(w) > 0),
+         |bs AS (SELECT b, CAST(count(*) AS BIGINT) AS r,
+         |         CAST(count(CASE WHEN tgt THEN 1 END) AS BIGINT) AS t
+         |       FROM tk GROUP BY b),
+         |tt AS (SELECT CAST(sum(r) AS BIGINT) AS bigR,
+         |              CAST(sum(t) AS BIGINT) AS bigT FROM bs),
+         |term AS (SELECT k.doc_id,
+         |    CAST(round(ln(
+         |      CAST((bs.t + 1) * ((SELECT bigR FROM tt) + 1024) AS DOUBLE) /
+         |      CAST((bs.r + 1) * ((SELECT bigT FROM tt) + 1024) AS DOUBLE)) * 1e9)
+         |      AS BIGINT) AS lfp
+         |  FROM tk k JOIN bs ON k.b = bs.b),
+         |p AS (SELECT doc_id, count(*) AS n_toks,
+         |        CAST(sum(lfp) AS BIGINT) AS llr_fp
+         |      FROM term GROUP BY doc_id),
+         |c AS (SELECT CAST(sum(llr_fp) AS BIGINT) AS totL,
+         |             CAST(sum(n_toks) AS BIGINT) AS totN FROM p)
+         |SELECT d.doc_id, CAST(coalesce(p.n_toks, 0) AS BIGINT) AS n_toks,
+         |  p.llr_fp, CAST(p.llr_fp AS DOUBLE) / 1e9 AS llr,
+         |  coalesce(p.llr_fp * (SELECT totN FROM c)
+         |           > (SELECT totL FROM c) * p.n_toks, false) AS selected
+         |FROM documents d LEFT JOIN p USING (doc_id) ORDER BY d.doc_id""".stripMargin
+    }),
+  )
 }

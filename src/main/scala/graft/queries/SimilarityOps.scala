@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SparkEntry.Key
 import graft.Tables._
 import graft.functions.{TopKAggregator, VectorFunctions}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -550,10 +551,11 @@ object SimilarityOps {
   }
 
   /** LSH geometry shared by the Spark query and the DuckDB oracle
-    * generator (SparkEntry.oracleSql): component j of hyperplane b in
-    * table t is ±1 from a seeded MurmurHash3 — a deterministic literal,
-    * not fitted state, so BOTH engines can materialize the exact same
-    * planes and the bucketing is hash-verifiable end-to-end.
+    * generator (q_sim_lsh's entry in [[keys]]): component j of
+    * hyperplane b in table t is ±1 from a seeded MurmurHash3 — a
+    * deterministic literal, not fitted state, so BOTH engines can
+    * materialize the exact same planes and the bucketing is
+    * hash-verifiable end-to-end.
     */
   val LshDims   = 64
   val LshBits   = 8 // bucket width: P(same bucket | near-dup) per table
@@ -1185,4 +1187,515 @@ object SimilarityOps {
         expr("(2 * n_hit * 1000000 + n_exact) div (2 * n_exact)").as("recall_fp"))
       .orderBy("query_id")
   }
+
+  /** Generated-SQL replay of [[graft.queries.SimilarityOps
+    * .q_select_mmr]]'s greedy chain: rel scores once, then k CTE
+    * steps s1..sK, each picking the (score_fp DESC, vec_id) argmax
+    * over the not-yet-selected candidates with max-sim-to-selected
+    * spelled as greatest() over one correlated scalar subquery per
+    * prior one-row step. Every step AS MATERIALIZED (DuckDB re-inlines
+    * CTEs per reference — an unmaterialized s1 would re-run inside
+    * every later step's subqueries multiplicatively).
+    */
+  private def duckMmrSql(k: Int): String = {
+    def fpcos(a: String, b: String) =
+      s"CAST(floor(list_cosine_similarity($a::DOUBLE[], $b::DOUBLE[]) * 1e6 + 0.5) AS BIGINT)"
+    val steps = (1 to k).map { i =>
+      if (i == 1)
+        s"""s1 AS MATERIALIZED (
+           |  SELECT vec_id, rel_fp, CAST(NULL AS BIGINT) AS maxsim_fp,
+           |    rel_fp AS score_fp, embedding
+           |  FROM rel ORDER BY rel_fp DESC, vec_id LIMIT 1)""".stripMargin
+      else {
+        val subs = (1 until i).map(j =>
+          s"(SELECT ${fpcos("r.embedding", "s.embedding")} FROM s$j s)")
+        val ms =
+          if (subs.length == 1) subs.head
+          else s"greatest(${subs.mkString(", ")})"
+        val excl = (1 until i).map(j => s"SELECT vec_id FROM s$j")
+          .mkString(" UNION ALL ")
+        s"""s$i AS MATERIALIZED (
+           |  SELECT vec_id, rel_fp, maxsim_fp, rel_fp - maxsim_fp AS score_fp,
+           |    embedding
+           |  FROM (SELECT r.vec_id, r.rel_fp, r.embedding, $ms AS maxsim_fp
+           |        FROM rel r WHERE r.vec_id NOT IN ($excl))
+           |  ORDER BY score_fp DESC, vec_id LIMIT 1)""".stripMargin
+      }
+    }
+    val unions = (1 to k).map(i =>
+      s"SELECT CAST($i AS BIGINT) AS rank, vec_id, rel_fp, maxsim_fp, score_fp FROM s$i")
+      .mkString("\n  UNION ALL ")
+    s"""WITH q AS (SELECT embedding AS qv FROM embeddings
+       |  WHERE vec_id = 0 AND embedding IS NOT NULL AND len(embedding) > 0),
+       |rel AS MATERIALIZED (
+       |  SELECT c.vec_id, ${fpcos("c.embedding", "q.qv")} AS rel_fp, c.embedding
+       |  FROM embeddings c, q
+       |  WHERE c.vec_id > 0 AND c.embedding IS NOT NULL AND len(c.embedding) > 0),
+       |${steps.mkString(",\n")}
+       |SELECT * FROM (
+       |  $unions)
+       |ORDER BY rank""".stripMargin
+  }
+
+  val keys: Seq[Key] = Seq(
+    // kNN graph: exact integer d2 on the x1e6 grid via the
+    // |a|^2+|b|^2-2ab identity (list_inner_product over
+    // integer-valued doubles <= 2.2e13 - exact); mutual = reverse
+    // edge exists in the same top-k edge set
+    Key("q_knn_graph", (s, d) => q_knn_graph(s, d),
+      """WITH x AS MATERIALIZED (SELECT vec_id,
+        |    list_transform(embedding::DOUBLE[], v -> floor(v * 1e6 + 0.5)) AS q
+        |  FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) > 0),
+        |nn AS MATERIALIZED (SELECT vec_id, q,
+        |    CAST(list_inner_product(q, q) AS BIGINT) AS n2 FROM x),
+        |p AS (SELECT a.vec_id AS va, b.vec_id AS vb,
+        |    a.n2 + b.n2 - 2 * CAST(list_inner_product(a.q, b.q) AS BIGINT) AS d2
+        |  FROM nn a, nn b WHERE a.vec_id <> b.vec_id),
+        |e AS MATERIALIZED (SELECT va, vb, d2,
+        |    CAST(row_number() OVER (PARTITION BY va ORDER BY d2, vb) AS BIGINT) AS rank
+        |  FROM p QUALIFY rank <= 4)
+        |SELECT e.va AS vec_id, e.rank AS rank, e.vb AS nn_id, e.d2 AS d2,
+        |  m.va IS NOT NULL AS mutual
+        |FROM e LEFT JOIN e m ON m.va = e.vb AND m.vb = e.va
+        |ORDER BY e.va, e.rank""".stripMargin),
+    // IVF-bucketed kNN graph: q_sim_ivf's deterministic cell
+    // assignment/probes for EVERY vector, exact d2 ranking within
+    // the probed cells only
+    Key("q_knn_graph_ivf", (s, d) => q_knn_graph_ivf(s, d),
+      """WITH cent AS (
+        |  SELECT vec_id AS cent_id, embedding AS cv FROM embeddings
+        |  WHERE vec_id < 16 AND embedding IS NOT NULL AND len(embedding) > 0),
+        |x AS MATERIALIZED (SELECT vec_id, embedding,
+        |    list_transform(embedding::DOUBLE[], v -> floor(v * 1e6 + 0.5)) AS q
+        |  FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) > 0),
+        |ranked AS MATERIALIZED (
+        |  SELECT e.vec_id, e.q, c.cent_id,
+        |    row_number() OVER (PARTITION BY e.vec_id
+        |      ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cv::DOUBLE[]) DESC,
+        |               c.cent_id) AS rn
+        |  FROM x e, cent c),
+        |assigned AS (SELECT vec_id, q, cent_id AS cell FROM ranked WHERE rn = 1),
+        |probes AS (SELECT vec_id AS query_id, q AS qq, cent_id AS cell
+        |           FROM ranked WHERE rn <= 4),
+        |p AS (SELECT p.query_id AS va, a.vec_id AS vb,
+        |    CAST(list_inner_product(p.qq, p.qq) AS BIGINT)
+        |      + CAST(list_inner_product(a.q, a.q) AS BIGINT)
+        |      - 2 * CAST(list_inner_product(p.qq, a.q) AS BIGINT) AS d2
+        |  FROM probes p JOIN assigned a USING (cell)
+        |  WHERE a.vec_id <> p.query_id),
+        |e AS MATERIALIZED (SELECT va, vb, d2,
+        |    CAST(row_number() OVER (PARTITION BY va ORDER BY d2, vb) AS BIGINT) AS rank
+        |  FROM p QUALIFY rank <= 4)
+        |SELECT e.va AS vec_id, e.rank AS rank, e.vb AS nn_id, e.d2 AS d2,
+        |  m.va IS NOT NULL AS mutual
+        |FROM e LEFT JOIN e m ON m.va = e.vb AND m.vb = e.va
+        |ORDER BY e.va, e.rank""".stripMargin),
+    Key("q_sim_topk", q_sim_topk _,
+      """SELECT query_id, neighbor_id, cosine, rank FROM (
+        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+        |    round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS cosine,
+        |    row_number() OVER (PARTITION BY a.vec_id
+        |      ORDER BY round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) DESC,
+        |               b.vec_id) AS rank
+        |  FROM embeddings a, embeddings b
+        |  WHERE a.vec_id < 10 AND b.vec_id <> a.vec_id)
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // hard negatives: q_sim_topk's ranking restricted to cross-label
+    // candidates; same rounded-cosine DESC, id ASC tie order as the
+    // bounded-heap aggregator
+    Key("q_hard_negatives", q_hard_negatives _,
+      """SELECT query_id, query_label, neighbor_id, neighbor_label,
+        |       cosine, rank FROM (
+        |  SELECT a.vec_id AS query_id, a.label AS query_label,
+        |    b.vec_id AS neighbor_id, b.label AS neighbor_label,
+        |    round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS cosine,
+        |    row_number() OVER (PARTITION BY a.vec_id
+        |      ORDER BY round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) DESC,
+        |               b.vec_id) AS rank
+        |  FROM embeddings a, embeddings b
+        |  WHERE a.vec_id < 10 AND a.label IS NOT NULL
+        |    AND b.vec_id <> a.vec_id AND b.label IS NOT NULL
+        |    AND b.label <> a.label)
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    Key("q_dedup_embed", q_dedup_embed _,
+      """SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+        |  round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS cosine
+        |FROM embeddings a, embeddings b
+        |WHERE a.vec_id < 300 AND b.vec_id < 300 AND a.vec_id < b.vec_id
+        |  AND round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) > 0.35
+        |ORDER BY vec_a, vec_b""".stripMargin),
+    // The LSH planes are deterministic ±1 literals (SimilarityOps
+    // .lshPlaneSign), so the oracle can rebuild every sign bit as an
+    // explicit left-associated signed sum — bit-identical to the
+    // codegen'd dot_product fold (float→double products with ±1 are
+    // exact; both engines then add left-to-right in double) — and
+    // re-derive buckets, candidate pairs, and confirmed cosines
+    // entirely in SQL. The SQL carries no maxBucket cap: parity holds
+    // while no bucket overflows (10k members would mean a degenerate
+    // corpus; the cap's drop semantics are unit-tested separately).
+    Key("q_sim_lsh", q_sim_lsh _, {
+      val buckets = (0 until LshTables).map { t =>
+        val bits = (0 until LshBits).map { b =>
+          val terms = (0 until LshDims).map { j =>
+            val sign = if (lshPlaneSign(t, b, j) > 0) "+" else "-"
+            s"$sign e[${j + 1}]::DOUBLE"
+          }.mkString(" ")
+          s"(CASE WHEN ($terms) >= 0 THEN ${1L << b} ELSE 0 END)"
+        }.mkString(" + ")
+        s"($bits) + ${t.toLong << 32}"
+      }
+      s"""WITH ids AS (
+         |  SELECT vec_id, unnest([${buckets.mkString(", ")}]) AS bucket
+         |  FROM (SELECT vec_id, embedding AS e FROM embeddings)),
+         |pairs AS (
+         |  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
+         |  FROM ids a JOIN ids b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
+         |SELECT p.vec_a, p.vec_b,
+         |  round(list_cosine_similarity(ea.embedding::DOUBLE[], eb.embedding::DOUBLE[]), 6) AS cosine
+         |FROM pairs p
+         |JOIN embeddings ea ON ea.vec_id = p.vec_a
+         |JOIN embeddings eb ON eb.vec_id = p.vec_b
+         |WHERE round(list_cosine_similarity(ea.embedding::DOUBLE[], eb.embedding::DOUBLE[]), 6) > 0.35
+         |ORDER BY vec_a, vec_b""".stripMargin
+    }),
+    // IVF is deterministic too (centroids = first 16 vectors): the
+    // E-step argmax, nprobe probe ranking, and final top-5 all order by
+    // (cosine DESC, id) — reproduced with ranked windows. E-step/probe
+    // ranks use the unrounded cosine on both sides, as the query does.
+    // SemDeDup: q_sim_ivf's deterministic assignment CTE, then
+    // within-cell pairs on round(cosine,6) > 0.35 and the greedy
+    // lowest-id-representative keep rule
+    Key("q_dedup_semantic", (s, d) => q_dedup_semantic(s, d),
+      """WITH cent AS (
+        |  SELECT vec_id AS cent_id, embedding AS cv FROM embeddings
+        |  WHERE vec_id < 16 AND embedding IS NOT NULL AND len(embedding) > 0),
+        |assigned AS (
+        |  SELECT vec_id, embedding, cent_id AS cell FROM (
+        |    SELECT e.vec_id, e.embedding, c.cent_id,
+        |      row_number() OVER (PARTITION BY e.vec_id
+        |        ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cv::DOUBLE[]) DESC,
+        |                 c.cent_id) AS rn
+        |    FROM embeddings e, cent c)
+        |  WHERE rn = 1),
+        |p AS (
+        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
+        |  FROM assigned a JOIN assigned b
+        |    ON a.cell = b.cell AND a.vec_id < b.vec_id
+        |  WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) > 0.35),
+        |g AS (SELECT vec_b AS vec_id, CAST(count(*) AS BIGINT) AS n_dups,
+        |        min(vec_a) AS rep_id
+        |      FROM p GROUP BY 1)
+        |SELECT a.vec_id, a.cell, CAST(coalesce(g.n_dups, 0) AS BIGINT) AS n_dups,
+        |  coalesce(g.rep_id, a.vec_id) AS rep_id, g.rep_id IS NULL AS kept
+        |FROM assigned a LEFT JOIN g USING (vec_id) ORDER BY a.vec_id""".stripMargin),
+    // Greedy MMR: the identical sequential chain as k generated CTE
+    // steps (the BPE m1..mK precedent) — each s_i is ONE row, so the
+    // max-sim-to-selected is a greatest() over i-1 correlated scalar
+    // subqueries, and every step is pinned AS MATERIALIZED
+    Key("q_select_mmr", (s, d) => q_select_mmr(s, d), duckMmrSql(8)),
+    // IVF index health: the q_sim_ivf assignment window also carries
+    // the winning cosine; floor(c*1e6+0.5) is the engine-identical
+    // quantizer (double round() would be half-even vs HALF_UP)
+    Key("q_ivf_balance", (s, d) => q_ivf_balance(s, d),
+      """WITH cent AS (
+        |  SELECT vec_id AS cent_id, embedding AS cv FROM embeddings
+        |  WHERE vec_id < 16 AND embedding IS NOT NULL AND len(embedding) > 0),
+        |a AS (
+        |  SELECT vec_id, cent_id AS cell,
+        |    CAST(floor(c * 1e6 + 0.5) AS BIGINT) AS cos_fp
+        |  FROM (
+        |    SELECT e.vec_id, c.cent_id,
+        |      list_cosine_similarity(e.embedding::DOUBLE[], c.cv::DOUBLE[]) AS c,
+        |      row_number() OVER (PARTITION BY e.vec_id
+        |        ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cv::DOUBLE[]) DESC,
+        |                 c.cent_id) AS rn
+        |    FROM embeddings e, cent c
+        |    WHERE e.embedding IS NOT NULL AND len(e.embedding) > 0)
+        |  WHERE rn = 1),
+        |g AS MATERIALIZED (SELECT cell, CAST(count(*) AS BIGINT) AS n,
+        |       CAST(sum(cos_fp) AS BIGINT) AS sc FROM a GROUP BY 1),
+        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS t, CAST(max(n) AS BIGINT) AS mx,
+        |        CAST(count(*) AS BIGINT) AS nc FROM g)
+        |SELECT c.cent_id AS cell, CAST(coalesce(g.n, 0) AS BIGINT) AS n,
+        |  CASE WHEN g.n IS NOT NULL THEN (2 * g.sc + g.n) // (2 * g.n) END AS mean_cos_fp,
+        |  (2 * coalesce(g.n, 0) * 1000000 + t) // (2 * t) AS share_fp,
+        |  (2 * mx * nc * 1000000 + t) // (2 * t) AS imbalance_fp
+        |FROM cent c LEFT JOIN g ON g.cell = c.cent_id, tot
+        |ORDER BY cell""".stripMargin),
+    Key("q_sim_ivf", q_sim_ivf _,
+      """WITH cent AS (
+        |  SELECT vec_id AS cent_id, embedding AS cv FROM embeddings
+        |  WHERE vec_id < 16 AND embedding IS NOT NULL AND len(embedding) > 0),
+        |assigned AS (
+        |  SELECT vec_id, embedding, cent_id AS cell FROM (
+        |    SELECT e.vec_id, e.embedding, c.cent_id,
+        |      row_number() OVER (PARTITION BY e.vec_id
+        |        ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cv::DOUBLE[]) DESC,
+        |                 c.cent_id) AS rn
+        |    FROM embeddings e, cent c)
+        |  WHERE rn = 1),
+        |probes AS (
+        |  SELECT query_id, qv, cent_id AS cell FROM (
+        |    SELECT q.vec_id AS query_id, q.embedding AS qv, c.cent_id,
+        |      row_number() OVER (PARTITION BY q.vec_id
+        |        ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.cv::DOUBLE[]) DESC,
+        |                 c.cent_id) AS rn
+        |    FROM embeddings q, cent c WHERE q.vec_id < 10)
+        |  WHERE rn <= 4)
+        |SELECT query_id, neighbor_id, cosine, rank FROM (
+        |  SELECT p.query_id, a.vec_id AS neighbor_id,
+        |    round(list_cosine_similarity(p.qv::DOUBLE[], a.embedding::DOUBLE[]), 6) AS cosine,
+        |    row_number() OVER (PARTITION BY p.query_id
+        |      ORDER BY round(list_cosine_similarity(p.qv::DOUBLE[], a.embedding::DOUBLE[]), 6) DESC,
+        |               a.vec_id) AS rank
+        |  FROM probes p JOIN assigned a ON a.cell = p.cell
+        |  WHERE a.vec_id <> p.query_id)
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // Sparse cosine: q_tfidf's tf/df CTEs, weights quantized to x1e6
+    // BIGINTs before any sum (order-free exact dots/norms), one
+    // double cosine per pair mirrored token-for-token
+    Key("q_sim_sparse", (s, d) => q_sim_sparse(s, d),
+      """WITH w AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
+        |tf AS (SELECT doc_id, term, count(*) AS tf
+        |       FROM w WHERE length(term) > 0 GROUP BY 1, 2),
+        |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
+        |n AS (SELECT count(*) AS n FROM documents),
+        |wfp AS (
+        |  SELECT doc_id, tf.term,
+        |    CAST(round(round(tf * ln((n.n + 1.0) / (df.df + 1.0)), 6) * 1e6) AS BIGINT) AS wv
+        |  FROM tf JOIN df USING (term), n
+        |  WHERE doc_id < 100),
+        |norms AS (SELECT doc_id, CAST(sum(wv * wv) AS BIGINT) AS n2 FROM wfp GROUP BY 1),
+        |dots AS (
+        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |    CAST(sum(a.wv * b.wv) AS BIGINT) AS dot_fp
+        |  FROM wfp a JOIN wfp b ON a.term = b.term AND a.doc_id < b.doc_id
+        |  GROUP BY 1, 2)
+        |SELECT doc_a, doc_b, dot_fp,
+        |  round(CAST(dot_fp AS DOUBLE) /
+        |        (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))), 6) AS cosine
+        |FROM dots JOIN norms na ON na.doc_id = doc_a JOIN norms nb ON nb.doc_id = doc_b
+        |ORDER BY cosine DESC, doc_a, doc_b LIMIT 50""".stripMargin),
+    // Truncated-dimension recall curve: all dots are exact integer
+    // sums on the x1e6 quantized grid in BOTH engines (one corpus pass
+    // in Spark, list arithmetic here), rankings share the
+    // (dot DESC, id ASC) tie contract, and recall_fp is the x1e6
+    // round-half-up division. sc pinned MATERIALIZED: five rankings
+    // reference it (the q_bpe_sweep CTE-re-inlining lesson).
+    Key("q_dim_recall", (s, d) => q_dim_recall(s, d),
+      """WITH e AS (
+        |  SELECT vec_id,
+        |    list_transform(embedding,
+        |      x -> CAST(floor(CAST(x AS DOUBLE) * 1e6 + 0.5) AS BIGINT)) AS q
+        |  FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) > 0),
+        |qq AS (SELECT vec_id AS query_id, q AS qv FROM e WHERE vec_id < 10),
+        |sc AS MATERIALIZED (
+        |  SELECT query_id, e.vec_id AS did,
+        |    CAST(list_sum(list_transform(list_zip(qv, q), t -> t[1]*t[2])) AS BIGINT) AS dot_full,
+        |    CAST(list_sum(list_transform(list_zip(qv[1:8], q[1:8]), t -> t[1]*t[2])) AS BIGINT) AS dot_8,
+        |    CAST(list_sum(list_transform(list_zip(qv[1:16], q[1:16]), t -> t[1]*t[2])) AS BIGINT) AS dot_16,
+        |    CAST(list_sum(list_transform(list_zip(qv[1:32], q[1:32]), t -> t[1]*t[2])) AS BIGINT) AS dot_32,
+        |    CAST(list_sum(list_transform(list_zip(qv[1:48], q[1:48]), t -> t[1]*t[2])) AS BIGINT) AS dot_48
+        |  FROM qq JOIN e ON e.vec_id <> query_id),
+        |tf AS (SELECT query_id, did FROM (
+        |    SELECT query_id, did, row_number() OVER (PARTITION BY query_id
+        |      ORDER BY dot_full DESC, did) AS r FROM sc) WHERE r <= 10),
+        |t8 AS (SELECT query_id, did FROM (
+        |    SELECT query_id, did, row_number() OVER (PARTITION BY query_id
+        |      ORDER BY dot_8 DESC, did) AS r FROM sc) WHERE r <= 10),
+        |t16 AS (SELECT query_id, did FROM (
+        |    SELECT query_id, did, row_number() OVER (PARTITION BY query_id
+        |      ORDER BY dot_16 DESC, did) AS r FROM sc) WHERE r <= 10),
+        |t32 AS (SELECT query_id, did FROM (
+        |    SELECT query_id, did, row_number() OVER (PARTITION BY query_id
+        |      ORDER BY dot_32 DESC, did) AS r FROM sc) WHERE r <= 10),
+        |t48 AS (SELECT query_id, did FROM (
+        |    SELECT query_id, did, row_number() OVER (PARTITION BY query_id
+        |      ORDER BY dot_48 DESC, did) AS r FROM sc) WHERE r <= 10),
+        |u AS (
+        |  SELECT CAST(8 AS BIGINT) AS m,
+        |    CAST(count(t.query_id) AS BIGINT) AS hits, CAST(count(*) AS BIGINT) AS total
+        |  FROM tf LEFT JOIN t8 t ON tf.query_id = t.query_id AND tf.did = t.did
+        |  UNION ALL
+        |  SELECT CAST(16 AS BIGINT),
+        |    CAST(count(t.query_id) AS BIGINT), CAST(count(*) AS BIGINT)
+        |  FROM tf LEFT JOIN t16 t ON tf.query_id = t.query_id AND tf.did = t.did
+        |  UNION ALL
+        |  SELECT CAST(32 AS BIGINT),
+        |    CAST(count(t.query_id) AS BIGINT), CAST(count(*) AS BIGINT)
+        |  FROM tf LEFT JOIN t32 t ON tf.query_id = t.query_id AND tf.did = t.did
+        |  UNION ALL
+        |  SELECT CAST(48 AS BIGINT),
+        |    CAST(count(t.query_id) AS BIGINT), CAST(count(*) AS BIGINT)
+        |  FROM tf LEFT JOIN t48 t ON tf.query_id = t.query_id AND tf.did = t.did)
+        |SELECT m, hits, total,
+        |  (2 * hits * 1000000 + total) // nullif(2 * total, 0) AS recall_fp
+        |FROM u ORDER BY m""".stripMargin),
+    // Recall evaluation: the q_sim_topk window-rank CTE is the truth
+    // set, the q_sim_ivf CTE chain is the index's answer; both use the
+    // identical (cosine-rounded-to-6 DESC, vec_id) tie-break contract
+    // that already hash-matches key-for-key, so the intersection —
+    // and therefore the integer recall — is deterministic.
+    Key("q_sim_recall", q_sim_recall _,
+      """WITH exact AS (
+        |  SELECT query_id, neighbor_id FROM (
+        |    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+        |      row_number() OVER (PARTITION BY a.vec_id
+        |        ORDER BY round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) DESC,
+        |                 b.vec_id) AS rank
+        |    FROM embeddings a, embeddings b
+        |    WHERE a.vec_id < 10 AND b.vec_id <> a.vec_id)
+        |  WHERE rank <= 5),
+        |cent AS (
+        |  SELECT vec_id AS cent_id, embedding AS cv FROM embeddings
+        |  WHERE vec_id < 16 AND embedding IS NOT NULL AND len(embedding) > 0),
+        |assigned AS (
+        |  SELECT vec_id, embedding, cent_id AS cell FROM (
+        |    SELECT e.vec_id, e.embedding, c.cent_id,
+        |      row_number() OVER (PARTITION BY e.vec_id
+        |        ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cv::DOUBLE[]) DESC,
+        |                 c.cent_id) AS rn
+        |    FROM embeddings e, cent c)
+        |  WHERE rn = 1),
+        |probes AS (
+        |  SELECT query_id, qv, cent_id AS cell FROM (
+        |    SELECT q.vec_id AS query_id, q.embedding AS qv, c.cent_id,
+        |      row_number() OVER (PARTITION BY q.vec_id
+        |        ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.cv::DOUBLE[]) DESC,
+        |                 c.cent_id) AS rn
+        |    FROM embeddings q, cent c WHERE q.vec_id < 10)
+        |  WHERE rn <= 4),
+        |ivf AS (
+        |  SELECT query_id, neighbor_id FROM (
+        |    SELECT p.query_id, a.vec_id AS neighbor_id,
+        |      row_number() OVER (PARTITION BY p.query_id
+        |        ORDER BY round(list_cosine_similarity(p.qv::DOUBLE[], a.embedding::DOUBLE[]), 6) DESC,
+        |                 a.vec_id) AS rank
+        |    FROM probes p JOIN assigned a ON a.cell = p.cell
+        |    WHERE a.vec_id <> p.query_id)
+        |  WHERE rank <= 5)
+        |SELECT e.query_id,
+        |  CAST(count(*) AS BIGINT) AS n_exact,
+        |  CAST(count(i.neighbor_id) AS BIGINT) AS n_hit,
+        |  CAST((2 * count(i.neighbor_id) * 1000000 + count(*)) // (2 * count(*)) AS BIGINT) AS recall_fp
+        |FROM exact e LEFT JOIN ivf i
+        |  ON e.query_id = i.query_id AND e.neighbor_id = i.neighbor_id
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    // PQ: every per-subspace squared-L2 is an i-ascending fold over 8
+    // positions (list_transform keeps list order; list_sum folds it
+    // left-to-right — the same op sequence as the codegen'd sq_l2),
+    // fixed-pointed to 1e-6 BIGINTs; codes, the ADC integer sum, and
+    // the final ranking are then integer-exact in both engines.
+    Key("q_sim_pq", q_sim_pq _,
+      """WITH v AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings WHERE len(embedding) = 64),
+        |cent AS (SELECT vec_id AS cid, e AS cv FROM v WHERE vec_id < 16),
+        |dist AS (
+        |  SELECT v.vec_id, s.m, c.cid,
+        |    CAST(round(1e6 * list_sum(list_transform(range(1, 9), i ->
+        |      (v.e[s.m*8 + i] - c.cv[s.m*8 + i]) * (v.e[s.m*8 + i] - c.cv[s.m*8 + i])
+        |    ))) AS BIGINT) AS dfp
+        |  FROM v, (SELECT unnest(range(0, 8)) AS m) s, cent c),
+        |codes AS (
+        |  SELECT vec_id, m, cid AS code FROM (
+        |    SELECT vec_id, m, cid,
+        |      row_number() OVER (PARTITION BY vec_id, m ORDER BY dfp, cid) AS rn
+        |    FROM dist) WHERE rn = 1),
+        |qd AS (SELECT vec_id AS query_id, m, cid, dfp FROM dist WHERE vec_id < 10),
+        |adc AS (
+        |  SELECT q.query_id, c.vec_id AS neighbor_id, sum(q.dfp) AS adc_fp
+        |  FROM codes c JOIN qd q ON q.m = c.m AND q.cid = c.code
+        |  WHERE c.vec_id <> q.query_id
+        |  GROUP BY 1, 2)
+        |SELECT query_id, neighbor_id,
+        |  round(CAST(adc_fp AS DOUBLE) / 1e6, 6) AS approx_dist, rank
+        |FROM (
+        |  SELECT query_id, neighbor_id, adc_fp,
+        |    row_number() OVER (PARTITION BY query_id ORDER BY adc_fp, neighbor_id) AS rank
+        |  FROM adc)
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // PQ distortion: the q_sim_pq dist CTE's per-(vec, subspace)
+    // minimum IS the assigned-centroid error; M-row report
+    Key("q_pq_error", q_pq_error _,
+      """WITH v AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings WHERE len(embedding) = 64),
+        |cent AS (SELECT vec_id AS cid, e AS cv FROM v WHERE vec_id < 16),
+        |dist AS (
+        |  SELECT v.vec_id, s.m, c.cid,
+        |    CAST(round(1e6 * list_sum(list_transform(range(1, 9), i ->
+        |      (v.e[s.m*8 + i] - c.cv[s.m*8 + i]) * (v.e[s.m*8 + i] - c.cv[s.m*8 + i])
+        |    ))) AS BIGINT) AS dfp
+        |  FROM v, (SELECT unnest(range(0, 8)) AS m) s, cent c),
+        |best AS (SELECT vec_id, m, min(dfp) AS err_fp FROM dist GROUP BY 1, 2)
+        |SELECT CAST(m AS BIGINT) AS subspace, CAST(count(*) AS BIGINT) AS n_vecs,
+        |  CAST(sum(err_fp) AS BIGINT) AS sum_err_fp,
+        |  CAST(sum(err_fp) AS BIGINT) // count(*) AS mean_err_fp
+        |FROM best WHERE err_fp IS NOT NULL GROUP BY 1 ORDER BY subspace""".stripMargin),
+    // IVF-PQ: the q_sim_pq fixed-point machinery composed with a
+    // coarse quantizer. Residuals are exact double subtractions
+    // ((v-cc) identical bits in both engines); every distance is the
+    // same i-ascending fold rounded once to a 1e-6 BIGINT, so cell
+    // assignment, codes, probes, ADC sums, and ranks are all
+    // integer-exact.
+    Key("q_sim_ivfpq", q_sim_ivfpq _,
+      """WITH v AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings WHERE len(embedding) = 64),
+        |cc AS (SELECT vec_id AS cid, e AS cv FROM v WHERE vec_id < 8),
+        |cd AS (
+        |  SELECT v.vec_id, c.cid,
+        |    CAST(round(1e6 * list_sum(list_transform(range(1, 65), i ->
+        |      (v.e[i] - c.cv[i]) * (v.e[i] - c.cv[i])))) AS BIGINT) AS dfp
+        |  FROM v, cc c),
+        |cell AS (
+        |  SELECT vec_id, cid AS cell FROM (
+        |    SELECT vec_id, cid,
+        |      row_number() OVER (PARTITION BY vec_id ORDER BY dfp, cid) AS rn
+        |    FROM cd) WHERE rn = 1),
+        |res AS (
+        |  SELECT v.vec_id, cell.cell,
+        |    list_transform(range(1, 65), i -> v.e[i] - cc.cv[i]) AS r
+        |  FROM v JOIN cell USING (vec_id) JOIN cc ON cc.cid = cell.cell),
+        |cb AS (SELECT vec_id AS code_id, r AS br FROM res WHERE vec_id < 16),
+        |enc AS (
+        |  SELECT x.vec_id, s.m, b.code_id,
+        |    CAST(round(1e6 * list_sum(list_transform(range(1, 9), i ->
+        |      (x.r[s.m*8 + i] - b.br[s.m*8 + i]) * (x.r[s.m*8 + i] - b.br[s.m*8 + i])
+        |    ))) AS BIGINT) AS dfp
+        |  FROM res x, (SELECT unnest(range(0, 8)) AS m) s, cb b),
+        |codes AS (
+        |  SELECT vec_id, m, code_id AS code FROM (
+        |    SELECT vec_id, m, code_id,
+        |      row_number() OVER (PARTITION BY vec_id, m ORDER BY dfp, code_id) AS rn
+        |    FROM enc) WHERE rn = 1),
+        |probes AS (
+        |  SELECT vec_id AS query_id, cid AS cell FROM (
+        |    SELECT vec_id, cid,
+        |      row_number() OVER (PARTITION BY vec_id ORDER BY dfp, cid) AS rn
+        |    FROM cd WHERE vec_id < 10) WHERE rn <= 2),
+        |qd AS (
+        |  SELECT p.query_id, p.cell, s.m, b.code_id,
+        |    CAST(round(1e6 * list_sum(list_transform(range(1, 9), i ->
+        |      ((v.e[s.m*8 + i] - cc.cv[s.m*8 + i]) - b.br[s.m*8 + i]) *
+        |      ((v.e[s.m*8 + i] - cc.cv[s.m*8 + i]) - b.br[s.m*8 + i])
+        |    ))) AS BIGINT) AS dfp
+        |  FROM probes p
+        |  JOIN v ON v.vec_id = p.query_id
+        |  JOIN cc ON cc.cid = p.cell,
+        |  (SELECT unnest(range(0, 8)) AS m) s, cb b),
+        |adc AS (
+        |  SELECT q.query_id, ce.vec_id AS neighbor_id, sum(q.dfp) AS adc_fp
+        |  FROM cell ce
+        |  JOIN codes c ON c.vec_id = ce.vec_id
+        |  JOIN qd q ON q.cell = ce.cell AND q.m = c.m AND q.code_id = c.code
+        |  WHERE ce.vec_id <> q.query_id
+        |  GROUP BY 1, 2)
+        |SELECT query_id, neighbor_id,
+        |  round(CAST(adc_fp AS DOUBLE) / 1e6, 6) AS approx_dist, rank
+        |FROM (
+        |  SELECT query_id, neighbor_id, adc_fp,
+        |    row_number() OVER (PARTITION BY query_id ORDER BY adc_fp, neighbor_id) AS rank
+        |  FROM adc)
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+  )
 }

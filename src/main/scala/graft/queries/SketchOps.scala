@@ -1,6 +1,8 @@
 package graft.queries
 
+import graft.SparkEntry.Key
 import graft.Tables._
+import graft.functions.HashFunctions.duckHexValue
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -301,4 +303,117 @@ object SketchOps {
         (col("cms_est") - col("cnt")).as("cms_err"))
       .orderBy("rank")
   }
+
+  val keys: Seq[Key] = Seq(
+    Key("q_sketch_merge", q_sketch_merge _,
+      """WITH pn AS (
+        |  SELECT CAST(c_nationkey AS BIGINT) AS c_nationkey,
+        |    count(DISTINCT c_custkey) AS exact_distinct
+        |  FROM customer GROUP BY 1)
+        |SELECT c_nationkey, exact_distinct,
+        |  TRUE AS est_within_5pct, TRUE AS merge_tracks_rebuild FROM pn
+        |UNION ALL
+        |SELECT -1, CAST(sum(exact_distinct) AS BIGINT), TRUE, TRUE FROM pn
+        |ORDER BY c_nationkey""".stripMargin),
+    // the hash-verifiable half of the sketch family
+    Key("q_sketch_exact", q_sketch_exact _,
+      """WITH pn AS (
+        |  SELECT CAST(c_nationkey AS BIGINT) AS c_nationkey,
+        |    count(DISTINCT c_custkey) AS exact_distinct
+        |  FROM customer GROUP BY 1)
+        |SELECT c_nationkey, exact_distinct FROM pn
+        |UNION ALL
+        |SELECT -1, CAST(sum(exact_distinct) AS BIGINT) FROM pn
+        |ORDER BY c_nationkey""".stripMargin),
+    // histogram-sketch percentiles: 64 mergeable bin counts +
+    // deterministic linear interpolation, so the whole estimate chain
+    // is hash-verified (unlike t-digest/KLL)
+    Key("q_approx_pct", q_approx_pct _,
+      """WITH b AS (
+        |  SELECT least(CAST(floor(CAST(l_extendedprice AS DOUBLE) / 1718.75) AS BIGINT), 63) AS bin
+        |  FROM lineitem),
+        |h AS (SELECT bin, count(*) AS n FROM b GROUP BY 1),
+        |c AS (SELECT bin, n, sum(n) OVER (ORDER BY bin) AS cum,
+        |             sum(n) OVER () AS total FROM h),
+        |p AS (SELECT CAST(unnest([0.5, 0.95, 0.99]) AS DOUBLE) AS p)
+        |SELECT p, round(bin * 1718.75 +
+        |         1718.75 * (p * total - (cum - n)) / n, 4) AS approx_value
+        |FROM p JOIN c ON c.cum >= p.p * c.total AND c.cum - c.n < p.p * c.total
+        |ORDER BY p""".stripMargin),
+    // KMV sketch: fully deterministic, so unlike HLL the whole
+    // build→merge→estimate pipeline is hash-verified. The rank window
+    // Count-Min Sketch over trigrams: the lane hash is the shared
+    // 60-bit md5 window, so DuckDB rebuilds every (lane, bucket)
+    // counter bit-for-bit — sketch build, point estimates, and the
+    // one-sided error column are all hash-verified longs.
+    Key("q_ngram_cms", (s, d) => q_ngram_cms(s, d), {
+      val (depth, width, topK) = (4, 1024, 20)
+      s"""WITH w0 AS (SELECT list_filter(string_split(text, ' '), x -> x <> '') AS w
+         |            FROM documents WHERE text IS NOT NULL),
+         |g AS (SELECT unnest(list_transform(range(1, len(w) - 1),
+         |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS gram
+         |      FROM w0),
+         |lanes AS (SELECT unnest(range(0, $depth)) AS j),
+         |gb AS (SELECT g.gram, l.j,
+         |         substr(md5(CAST(l.j // 2 AS VARCHAR) || ':' || g.gram),
+         |                CASE WHEN l.j % 2 = 0 THEN 1 ELSE 17 END, 15) AS h
+         |       FROM g, lanes l),
+         |sketch AS (SELECT j AS lane, ${duckHexValue("h", 1, 15)} % $width AS bucket,
+         |         CAST(count(*) AS BIGINT) AS counter
+         |       FROM gb GROUP BY 1, 2),
+         |exact AS (SELECT gram, CAST(count(*) AS BIGINT) AS cnt FROM g
+         |       GROUP BY 1 ORDER BY cnt DESC, gram LIMIT $topK),
+         |pr AS (SELECT e.gram, e.cnt, l.j,
+         |         ${duckHexValue(s"substr(md5(CAST(l.j // 2 AS VARCHAR) || ':' || e.gram), CASE WHEN l.j % 2 = 0 THEN 1 ELSE 17 END, 15)", 1, 15)} % $width AS bucket
+         |       FROM exact e, lanes l),
+         |est AS (SELECT pr.gram, pr.cnt, min(s.counter) AS cms_est
+         |       FROM pr JOIN sketch s ON s.lane = pr.j AND s.bucket = pr.bucket
+         |       GROUP BY 1, 2)
+         |SELECT row_number() OVER (ORDER BY cnt DESC, gram) AS rank,
+         |  gram, cnt, cms_est, cms_est - cnt AS cms_err
+         |FROM est ORDER BY rank""".stripMargin
+    }),
+    // Misra-Gries band check: the oracle computes the EXACT side
+    // (counts, total, threshold, share) and literal TRUE guarantee
+    // booleans - MG's estimate is partition-order-dependent but the
+    // retention + band facts are theorems, deterministic under any
+    // partitioning; a broken sketch merge flips them (q_agg_approx
+    // band-check stance)
+    Key("q_heavyhitters", (s, d) => q_heavyhitters(s, d),
+      """WITH ch AS (SELECT unnest(string_split_regex(text, '')) AS c
+        |            FROM documents WHERE text IS NOT NULL),
+        |c2 AS (SELECT c FROM ch WHERE c <> ''),
+        |e AS (SELECT c, CAST(count(*) AS BIGINT) AS n_exact
+        |      FROM c2 GROUP BY 1),
+        |t AS (SELECT CAST(sum(n_exact) AS BIGINT) AS n_total FROM e)
+        |SELECT c, n_exact, n_total,
+        |  (2 * n_exact * 1000000 + n_total) // (2 * n_total) AS share_fp,
+        |  TRUE AS in_sketch, TRUE AS within_band
+        |FROM e, t WHERE n_exact * 17 > n_total ORDER BY c""".stripMargin),
+    // reproduces KmvAggregator's k smallest distinct 60-bit hashes.
+    Key("q_sketch_kmv", q_sketch_kmv _,
+      s"""WITH h AS (
+         |  SELECT c_nationkey, ${duckHexValue("m", 1, 15)} AS hv
+         |  FROM (SELECT c_nationkey,
+         |          md5('kmv:' || CAST(c_custkey AS VARCHAR)) AS m
+         |        FROM customer)),
+         |pn AS (
+         |  SELECT CAST(c_nationkey AS BIGINT) AS c_nationkey, hv,
+         |         row_number() OVER (PARTITION BY c_nationkey ORDER BY hv) AS rn
+         |  FROM (SELECT DISTINCT c_nationkey, hv FROM h)),
+         |gl AS (
+         |  SELECT CAST(-1 AS BIGINT) AS c_nationkey, hv,
+         |         row_number() OVER (ORDER BY hv) AS rn
+         |  FROM (SELECT DISTINCT hv FROM h)),
+         |agg AS (
+         |  SELECT c_nationkey,
+         |    CAST(count(*) FILTER (WHERE rn <= 32) AS BIGINT) AS n_kept,
+         |    max(hv) FILTER (WHERE rn <= 32) AS kth_min
+         |  FROM (SELECT * FROM pn UNION ALL SELECT * FROM gl) GROUP BY 1)
+         |SELECT c_nationkey, n_kept, kth_min,
+         |  CASE WHEN n_kept < 32 THEN CAST(n_kept AS DOUBLE)
+         |       ELSE round(31.0 * 1152921504606846976.0 / kth_min, 4) END
+         |    AS approx_distinct
+         |FROM agg ORDER BY c_nationkey""".stripMargin),
+  )
 }

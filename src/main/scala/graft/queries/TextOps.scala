@@ -1,6 +1,8 @@
 package graft.queries
 
+import graft.SparkEntry.Key
 import graft.Tables._
+import graft.functions.HashFunctions.duckHexValue
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -128,6 +130,21 @@ object TextOps {
       lit(0.3) * least(nWords / 100.0, lit(1.0)) +
       lit(0.3) * (lit(1.0) - punctRatio), 10)
   }
+
+  /** The weighted quality score in DuckDB SQL — mirrors
+    * [[qualityScore]] EXACTLY, including the empty-text guard
+    * (null text stays null via null arithmetic). One source for every
+    * oracle that emits or filters on the score (q_text_quality,
+    * q_pipeline_prep, q_sample_weighted), so a formula tweak cannot
+    * drift the copies apart.
+    */
+  private[graft] def duckQualityScore: String =
+    """round(0.4 * (CAST(len(list_filter(string_split(text,' '), w -> w IN ('the','a','of','and'))) AS DOUBLE)
+      |               / len(string_split(text,' ')))
+      |      + 0.3 * least(CAST(len(string_split(text,' ')) AS DOUBLE) / 100.0, 1.0)
+      |      + 0.3 * (1.0 - CASE WHEN length(text) = 0 THEN 0.0 ELSE
+      |               CAST(length(text) - length(regexp_replace(text, '[.,;:!?''"()\[\]{}-]', '', 'g')) AS DOUBLE)
+      |               / length(text) END), 10)""".stripMargin
 
   /** Order-insensitive content fingerprint (sorted bag of words) — the
     * near-exact dedup key; shared with the pipeline/streaming dedup.
@@ -2658,4 +2675,1139 @@ object TextOps {
       "round((12.0 / (CAST(n AS DOUBLE) * (n + 1.0)) * s_rank " +
       "- 3.0 * (n + 1.0)) / " +
       "(1.0 - CAST(tie_t AS DOUBLE) / (CAST(n AS DOUBLE)*n*n - n)), 6) END"
+
+  /** The stupid-backoff CTE chain ending in `per` (one row per scored
+    * doc: doc_id, n_trigrams, n_tri, n_bi, n_uni, sum_score_fp) —
+    * shared by the q_lm_backoff / q_mix_lm / q_minkprob oracles so
+    * every consumer reads exactly the scored table. `posFilter`
+    * selects the scored population (held-out half for the LM evals,
+    * every doc for membership inference).
+    */
+  private def duckBackoffCtes(posFilter: String = "doc_id % 2 = 1"): String =
+    s"""t AS (SELECT doc_id, string_split(text, ' ') AS w
+      |           FROM documents WHERE text IS NOT NULL),
+      |u AS (SELECT unnest(w) AS tok FROM t WHERE doc_id % 2 = 0),
+      |c1 AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM u GROUP BY 1),
+      |nt AS (SELECT CAST(count(*) AS BIGINT) AS n_train FROM u),
+      |c2 AS (SELECT bg, CAST(count(*) AS BIGINT) AS c FROM
+      |  (SELECT unnest([array_to_string(w[i:i+1], ' ') for i in range(1, len(w))]) AS bg
+      |   FROM t WHERE doc_id % 2 = 0 AND len(w) >= 2) GROUP BY 1),
+      |c3 AS (SELECT tg, CAST(count(*) AS BIGINT) AS c FROM
+      |  (SELECT unnest([array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]) AS tg
+      |   FROM t WHERE doc_id % 2 = 0 AND len(w) >= 3) GROUP BY 1),
+      |p AS (SELECT doc_id,
+      |    unnest([w[i] for i in range(1, len(w)-1)]) AS w1,
+      |    unnest([w[i+1] for i in range(1, len(w)-1)]) AS w2,
+      |    unnest([w[i+2] for i in range(1, len(w)-1)]) AS w3
+      |  FROM t WHERE ($posFilter) AND len(w) >= 3),
+      |sc AS (SELECT p.doc_id, t3.c AS c123, b12.c AS c12, b23.c AS c23,
+      |    u2.c AS cw2, u3.c AS cw3, nt.n_train
+      |  FROM p
+      |  LEFT JOIN c3 t3 ON t3.tg = p.w1 || ' ' || p.w2 || ' ' || p.w3
+      |  LEFT JOIN c2 b12 ON b12.bg = p.w1 || ' ' || p.w2
+      |  LEFT JOIN c2 b23 ON b23.bg = p.w2 || ' ' || p.w3
+      |  LEFT JOIN c1 u2 ON u2.tok = p.w2
+      |  LEFT JOIN c1 u3 ON u3.tok = p.w3
+      |  CROSS JOIN nt),
+      |per AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_trigrams,
+      |    CAST(sum(CASE WHEN c123 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_tri,
+      |    CAST(sum(CASE WHEN c123 IS NULL AND c23 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_bi,
+      |    CAST(sum(CASE WHEN c123 IS NULL AND c23 IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_uni,
+      |    CAST(sum(CASE WHEN c123 IS NOT NULL THEN (c123 * 1000000000) // c12
+      |      WHEN c23 IS NOT NULL THEN (2 * c23 * 1000000000) // (5 * cw2)
+      |      ELSE (4 * coalesce(cw3, 0) * 1000000000) // (25 * n_train) END) AS BIGINT) AS sum_score_fp
+      |  FROM sc GROUP BY 1)""".stripMargin
+
+  /** The BM25 scoring pipeline as a reusable CTE chain ending in
+    * `agg(query_id, doc_id, score_fp)` — one source of truth for the
+    * four oracles that rank by it (q_bm25, q_rrf, q_rbo, q_ndcg), so
+    * a scoring tweak in one cannot silently desync the other three
+    * (the duckQualityScore stance). Lucene idf ln((N+1)/(df+0.5)) at
+    * k1=1.2/b=0.75 cleared to the exact integer identity by
+    * multiplying through by 10*S; tf-part quantized ×1e6
+    * round-half-up; score = exact long sum of the products.
+    */
+  private def duckBm25Ctes: String =
+    """t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
+      |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
+      |       FROM t WHERE len(term) > 0 GROUP BY 1, 2),
+      |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
+      |df AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
+      |tot AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM documents) AS n_docs,
+      |               (SELECT CAST(sum(tf) AS BIGINT) FROM tf) AS s_tok),
+      |q AS (SELECT doc_id AS query_id, term FROM tf WHERE doc_id < 10),
+      |sc AS (SELECT q.query_id, tf.doc_id,
+      |         CAST(round(ln(CAST(2*n_docs + 2 AS DOUBLE) /
+      |           CAST(2*df.df + 1 AS DOUBLE)) * 1e9) AS BIGINT)
+      |         * ((2 * 22 * tf.tf * s_tok * 1000000 +
+      |             (10 * s_tok * tf.tf + 3 * s_tok + 9 * dl.dl * n_docs))
+      |            // (2 * (10 * s_tok * tf.tf + 3 * s_tok + 9 * dl.dl * n_docs))) AS c
+      |       FROM q JOIN tf USING (term) JOIN df USING (term)
+      |            JOIN dl ON tf.doc_id = dl.doc_id, tot),
+      |agg AS (SELECT query_id, doc_id, CAST(sum(c) AS BIGINT) AS score_fp
+      |        FROM sc GROUP BY 1, 2)""".stripMargin
+
+  // NOT EXISTS, not NOT IN: a NULL fingerprint (null doc) must be
+  // ADMITTED (null never equals anything), matching left_anti — and
+  // admitted null docs stay INDIVIDUAL rows (GROUP BY would collapse
+  // unrelated null docs into one), mirroring the Spark split
+  // q_dedup_incr_idx and q_dedup_bloom share this text: the
+  // materialized-fp-index and Bloom read paths must reproduce the
+  // in-DAG recompute exactly.
+  private val dedupIncrOracle: String =
+    """WITH fp AS (
+      |  SELECT doc_id, source,
+      |    CASE WHEN text IS NULL THEN NULL
+      |         ELSE md5(array_to_string(list_sort(string_split(text,' ')), ' ')) END AS fp
+      |  FROM documents),
+      |ex AS (SELECT DISTINCT fp FROM fp WHERE source = 'src0' AND fp IS NOT NULL),
+      |b AS (SELECT * FROM fp WHERE source <> 'src0')
+      |SELECT min(doc_id) AS doc_id, fp, count(*) AS n_batch_dups
+      |FROM b
+      |WHERE fp IS NOT NULL
+      |  AND NOT EXISTS (SELECT 1 FROM ex WHERE ex.fp = b.fp)
+      |GROUP BY fp
+      |UNION ALL
+      |SELECT doc_id, fp, 1 AS n_batch_dups FROM b WHERE fp IS NULL
+      |ORDER BY doc_id""".stripMargin
+
+  val keys: Seq[Key] = Seq(
+    Key("q_text_stats", q_text_stats _,
+      """SELECT word, count(*) AS n
+        |FROM (SELECT unnest(string_split(text,' ')) AS word FROM documents)
+        |WHERE length(word) > 0 GROUP BY word ORDER BY n DESC, word LIMIT 100""".stripMargin),
+    Key("q_tokens", q_tokens _,
+      """SELECT doc_id,
+        |  len(regexp_split_to_array(text, '\s+')) AS n_ws_tokens,
+        |  len(regexp_extract_all(text, '\w+|[^\w\s]')) AS n_bpe_tokens,
+        |  CASE WHEN len(regexp_extract_all(text, '\w+|[^\w\s]')) > 0 THEN
+        |    round(CAST(length(text) AS DOUBLE) / len(regexp_extract_all(text, '\w+|[^\w\s]')), 10)
+        |  END AS chars_per_token
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Key("q_lang_id", q_lang_id _,
+      """SELECT doc_id, lang,
+        |  len(regexp_extract_all(text, '\b(the|and|of)\b')) AS n_en,
+        |  len(regexp_extract_all(text, '\b(le|la|les|et)\b')) AS n_fr,
+        |  len(regexp_extract_all(text, '\b(der|die|das|und)\b')) AS n_de,
+        |  len(regexp_extract_all(text, '\b(el|los|las)\b')) AS n_es,
+        |  CASE WHEN n_en >= n_fr AND n_en >= n_de AND n_en >= n_es THEN 'en'
+        |       WHEN n_fr >= n_de AND n_fr >= n_es THEN 'fr'
+        |       WHEN n_de >= n_es THEN 'de' ELSE 'es' END AS pred_lang
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    // the CASE length(text) = 0 guards mirror the Spark side's empty-
+    // document handling (0.0 punct ratio; NULL text stays NULL)
+    Key("q_text_quality", q_text_quality _,
+      s"""SELECT doc_id,
+         |  len(string_split(text,' ')) AS n_words,
+         |  round(CAST(len(list_filter(string_split(text,' '), w -> w IN ('the','a','of','and'))) AS DOUBLE)
+         |        / len(string_split(text,' ')), 10) AS stopword_ratio,
+         |  CASE WHEN length(text) = 0 THEN 0.0 ELSE
+         |    round(CAST(length(text) - length(regexp_replace(text, '[.,;:!?''"()\\[\\]{}-]', '', 'g')) AS DOUBLE)
+         |          / length(text), 10) END AS punct_ratio,
+         |  $duckQualityScore AS quality_score
+         |FROM documents ORDER BY doc_id""".stripMargin),
+    // Fully integer output (r8): the per-group sum is exact fixed-point
+    // BIGINTs (order-independent), and the shares/means are emitted as
+    // ×1e6 fixed-point BIGINTs via round-half-up integer arithmetic
+    // ((2a + d) // (2d)) — no DOUBLE appears anywhere in the result,
+    // so the oracle compare's hash canonicalization of floats can't diverge.
+    // r9 ROOT CAUSE of the r6-r8 hash-fail: DuckDB sum(BIGINT) returns
+    // HUGEINT (Arrow decimal128(38,0)), so n_tokens/doc_share_fp/
+    // mean_quality_fp reached the compare as int128 columns while Spark
+    // sent int64 — equal values, different types. Every CAST below to
+    // BIGINT pins the oracle's final types to int64; the slice keys
+    // that follow bisect any residue (TextOps.q_corpus_slice_share).
+    Key("q_corpus_report", q_corpus_report _,
+      s"""WITH per AS (
+         |  SELECT lang, source, count(*) AS n_docs,
+         |    CAST(sum(len(regexp_split_to_array(text, '\\s+'))) AS BIGINT) AS n_tokens,
+         |    CAST(sum(CAST(round(($duckQualityScore) * 1e10) AS BIGINT)) AS BIGINT) AS q_sum_fp,
+         |    count($duckQualityScore) AS n_q
+         |  FROM documents GROUP BY 1, 2),
+         |t AS (SELECT CAST(sum(n_docs) AS BIGINT) AS total_docs FROM per)
+         |SELECT lang, source, n_docs, n_tokens,
+         |  CAST((2 * n_docs * 1000000 + total_docs) // (2 * total_docs) AS BIGINT) AS doc_share_fp,
+         |  CASE WHEN n_q > 0
+         |    THEN CAST((2 * q_sum_fp + n_q * 10000) // (2 * n_q * 10000) AS BIGINT)
+         |  END AS mean_quality_fp
+         |FROM per, t ORDER BY lang, source""".stripMargin),
+    Key("q_corpus_dump_toks", q_corpus_dump_toks _,
+      """SELECT doc_id, len(regexp_split_to_array(text, '\s+')) AS n_toks
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Key("q_corpus_dump_q", q_corpus_dump_q _,
+      s"""SELECT doc_id,
+         |  CAST(round(($duckQualityScore) * 1e10) AS BIGINT) AS q_fp
+         |FROM documents ORDER BY doc_id""".stripMargin),
+    // rank on the ROUNDED score (then term) so float-tail ties cannot
+    // order differently across engines
+    Key("q_tfidf", (s, d) => q_tfidf(s, d),
+      """WITH w AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
+        |tf AS (SELECT doc_id, term, count(*) AS tf
+        |       FROM w WHERE length(term) > 0 GROUP BY 1, 2),
+        |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
+        |n AS (SELECT count(*) AS n FROM documents),
+        |scored AS (
+        |  SELECT doc_id, tf.term,
+        |         round(tf * ln((n.n + 1.0) / (df.df + 1.0)), 6) AS tfidf
+        |  FROM tf JOIN df USING (term), n),
+        |ranked AS (
+        |  SELECT doc_id, term, tfidf,
+        |         row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rank
+        |  FROM scored)
+        |SELECT doc_id, term, tfidf, CAST(rank AS BIGINT) AS rank
+        |FROM ranked WHERE rank <= 5 ORDER BY doc_id, rank""".stripMargin),
+    Key("q_dedup_incr", q_dedup_incr _, dedupIncrOracle),
+    Key("q_dedup_incr_idx", q_dedup_incr_idx _, dedupIncrOracle),
+    Key("q_dedup_bloom", q_dedup_bloom _, dedupIncrOracle),
+    // corpus snapshot diff: v2 derived deterministically (id%17==3
+    // removed, id%13==5 edited via null-propagating ||, id%19==7
+    // duplicated at id+1e6); presence flags, not fp-nullness, drive
+    // added/removed; IS NOT DISTINCT FROM mirrors Spark's <=>
+    Key("q_corpus_diff", q_corpus_diff _,
+      """WITH v1 AS (
+        |  SELECT doc_id,
+        |    md5(array_to_string(list_sort(string_split(text,' ')), ' ')) AS fp
+        |  FROM documents),
+        |v2d AS (
+        |  SELECT doc_id,
+        |    CASE WHEN doc_id % 13 = 5 THEN text || ' v2edit' ELSE text END AS text
+        |  FROM documents WHERE doc_id % 17 <> 3
+        |  UNION ALL
+        |  SELECT doc_id + 1000000 AS doc_id, text
+        |  FROM documents WHERE doc_id % 19 = 7),
+        |v2 AS (
+        |  SELECT doc_id,
+        |    md5(array_to_string(list_sort(string_split(text,' ')), ' ')) AS fp
+        |  FROM v2d)
+        |SELECT coalesce(v1.doc_id, v2.doc_id) AS doc_id,
+        |  CASE WHEN v1.doc_id IS NULL THEN 'added'
+        |       WHEN v2.doc_id IS NULL THEN 'removed'
+        |       WHEN v1.fp IS NOT DISTINCT FROM v2.fp THEN 'unchanged'
+        |       ELSE 'changed' END AS status
+        |FROM v1 FULL OUTER JOIN v2 ON v1.doc_id = v2.doc_id
+        |ORDER BY doc_id""".stripMargin),
+    Key("q_fingerprint", q_fingerprint _,
+      """SELECT doc_id, md5(text) AS fp_exact,
+        |  md5(array_to_string(list_sort(string_split(text,' ')), ' ')) AS fp_normalized
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    // mirrors q_text_clean's rule order exactly: URL strip → email
+    // strip → lower → drop non-alphanumerics → collapse blanks → trim
+    Key("q_text_clean", q_text_clean _,
+      """WITH c AS (
+        |  SELECT doc_id, text,
+        |    trim(regexp_replace(
+        |      regexp_replace(
+        |        lower(regexp_replace(
+        |          regexp_replace(text, 'https?://[^ ]+', ' ', 'g'),
+        |          '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+', ' ', 'g')),
+        |        '[^a-z0-9 ]', '', 'g'),
+        |      ' +', ' ', 'g')) AS clean_text
+        |  FROM documents)
+        |SELECT doc_id, clean_text,
+        |  len(regexp_extract_all(text, 'https?://[^ ]+')) AS n_urls,
+        |  len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+')) AS n_emails,
+        |  length(text) - length(clean_text) AS n_removed_chars
+        |FROM c ORDER BY doc_id""".stripMargin),
+    // blocklist literal order mirrors TextOps.blockPhrases (sorted);
+    // list_filter preserves it, so the joined hits strings agree.
+    Key("q_blocklist", q_blocklist _,
+      """WITH per AS (
+        |  SELECT doc_id,
+        |    list_filter(['big data','hash join','slow query','stream batch','table scan'],
+        |                p -> contains(lower(text), p)) AS h
+        |  FROM documents WHERE text IS NOT NULL)
+        |SELECT doc_id, CAST(len(h) AS BIGINT) AS n_hits,
+        |  array_to_string(h, ',') AS hits,
+        |  CASE WHEN len(h) >= 2 THEN 'drop' ELSE 'flag' END AS action
+        |FROM per WHERE len(h) > 0 ORDER BY doc_id""".stripMargin),
+    Key("q_repetition", q_repetition _,
+      """WITH g AS (
+        |  SELECT doc_id, w,
+        |    CASE WHEN len(w) >= 2
+        |      THEN [array_to_string(w[i:i+1], ' ') for i in range(1, len(w))]
+        |      ELSE [] END AS g2,
+        |    CASE WHEN len(w) >= 3
+        |      THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
+        |      ELSE [] END AS g3
+        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents))
+        |SELECT doc_id, len(w) AS n_words,
+        |  round(CASE WHEN len(w) > 0
+        |    THEN CAST(len(w) - len(list_distinct(w)) AS DOUBLE) / len(w)
+        |    ELSE 0 END, 10) AS dup_word_frac,
+        |  round(CASE WHEN len(g2) > 0
+        |    THEN CAST(len(g2) - len(list_distinct(g2)) AS DOUBLE) / len(g2)
+        |    ELSE 0 END, 10) AS dup_2gram_frac,
+        |  round(CASE WHEN len(g3) > 0
+        |    THEN CAST(len(g3) - len(list_distinct(g3)) AS DOUBLE) / len(g3)
+        |    ELSE 0 END, 10) AS dup_3gram_frac
+        |FROM g ORDER BY doc_id""".stripMargin),
+    // per-token log-probs are 1e-9 fixed-point longs BEFORE the
+    // per-doc sum (exact, order-independent — the q_corpus_report
+    // rule); ln runs on exact integer ratios; unscored (null/empty)
+    // docs keep NULL columns through the left join
+    Key("q_lm_score", q_lm_score _,
+      """WITH tok AS (
+        |  SELECT doc_id, word FROM (
+        |    SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents)
+        |  WHERE length(word) > 0),
+        |c AS (SELECT word, count(*) AS cnt FROM tok GROUP BY 1),
+        |n AS (SELECT count(*) AS n_total FROM tok),
+        |lp AS (
+        |  SELECT tok.doc_id,
+        |    CAST(round(ln(CAST(cnt AS DOUBLE) / n_total) * 1e9) AS BIGINT) AS lp_fp
+        |  FROM tok JOIN c USING (word), n),
+        |per AS (
+        |  SELECT doc_id, count(*) AS n_scored_tokens, sum(lp_fp) AS s
+        |  FROM lp GROUP BY 1)
+        |SELECT d.doc_id, n_scored_tokens,
+        |  round(CAST(s AS DOUBLE) / n_scored_tokens / 1e9, 6) AS mean_logp,
+        |  round(exp(-(CAST(s AS DOUBLE) / n_scored_tokens / 1e9)), 4) AS ppl_proxy
+        |FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
+        |ORDER BY d.doc_id""".stripMargin),
+    // ANALYZE-style column profile: one aggregate row fanned to one
+    // row per column; min/max surface as strings (uniform row shape,
+    // no doubles in the hash)
+    Key("q_profile", q_profile _, {
+      val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
+      val aggs = cols.map { c =>
+        s"""  CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nn_$c,
+           |  CAST(count(DISTINCT $c) AS BIGINT) AS nd_$c,
+           |  CAST(min($c) AS VARCHAR) AS mn_$c,
+           |  CAST(max($c) AS VARCHAR) AS mx_$c""".stripMargin
+      }.mkString(",\n")
+      val rows = cols.map { c =>
+        s"SELECT '$c' AS col_name, n_rows, nn_$c AS n_nulls, nd_$c AS n_distinct, " +
+          s"mn_$c AS min_str, mx_$c AS max_str FROM a"
+      }.mkString("\n  UNION ALL ")
+      s"""WITH a AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
+         |$aggs
+         |FROM documents)
+         |SELECT * FROM (
+         |  $rows)
+         |ORDER BY col_name""".stripMargin
+    }),
+    // Confusion matrix over q_lang_id's prediction expression; the
+    // diagonal's share_fp is per-language recall
+    Key("q_langid_eval", q_langid_eval _,
+      """WITH p AS (
+        |  SELECT lang,
+        |    CASE WHEN n_en >= n_fr AND n_en >= n_de AND n_en >= n_es THEN 'en'
+        |         WHEN n_fr >= n_de AND n_fr >= n_es THEN 'fr'
+        |         WHEN n_de >= n_es THEN 'de' ELSE 'es' END AS pred_lang
+        |  FROM (SELECT lang,
+        |    len(regexp_extract_all(text, '\b(the|and|of)\b')) AS n_en,
+        |    len(regexp_extract_all(text, '\b(le|la|les|et)\b')) AS n_fr,
+        |    len(regexp_extract_all(text, '\b(der|die|das|und)\b')) AS n_de,
+        |    len(regexp_extract_all(text, '\b(el|los|las)\b')) AS n_es
+        |    FROM documents)),
+        |c AS (SELECT lang, pred_lang, CAST(count(*) AS BIGINT) AS n FROM p GROUP BY 1, 2),
+        |t AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_lang FROM p GROUP BY 1)
+        |SELECT c.lang, pred_lang, n, n_lang, c.lang = pred_lang AS correct,
+        |  CAST((2 * n * 1000000 + n_lang) // (2 * n_lang) AS BIGINT) AS share_fp
+        |FROM c JOIN t USING (lang)
+        |ORDER BY lang, pred_lang""".stripMargin),
+    // PMI collocations: positional marginals over the bigram corpus,
+    // one ln on an exact integer ratio quantized at 1e-9; top-100
+    // under the (pmi_fp DESC, bigram) total order
+    Key("q_collocations", (s, d) => q_collocations(s, d),
+      """WITH w AS (SELECT string_split(text, ' ') AS w FROM documents),
+        |bg AS (
+        |  SELECT unnest(CASE WHEN len(w) >= 2
+        |    THEN [array_to_string(w[i:i+1], ' ') for i in range(1, len(w))]
+        |    ELSE [] END) AS bg
+        |  FROM w),
+        |bgw AS (SELECT bg, string_split(bg, ' ')[1] AS w1, string_split(bg, ' ')[2] AS w2 FROM bg),
+        |c12 AS (SELECT bg, w1, w2, count(*) AS c12 FROM bgw GROUP BY 1, 2, 3),
+        |c1 AS (SELECT w1, count(*) AS c1 FROM bgw GROUP BY 1),
+        |c2 AS (SELECT w2, count(*) AS c2 FROM bgw GROUP BY 1),
+        |n AS (SELECT count(*) AS n FROM bgw)
+        |SELECT bg AS bigram, c12, c1, c2,
+        |  CAST(round(ln(CAST(c12 * n AS DOUBLE) / (c1 * c2)) * 1e9) AS BIGINT) AS pmi_fp
+        |FROM c12 JOIN c1 USING (w1) JOIN c2 USING (w2), n
+        |WHERE c12 >= 5
+        |ORDER BY pmi_fp DESC, bigram LIMIT 100""".stripMargin),
+    // BM25 with Lucene idf ln((N+1)/(df+0.5)) and k1=1.2/b=0.75
+    // cleared to the exact integer identity by multiplying through by
+    // 10*S; tf-part quantized x1e6 round-half-up, idf 1e-9-quantized
+    // ln of (2N+2)/(2df+1); score = exact long sum of the products
+    Key("q_bm25", (s, d) => q_bm25(s, d),
+      s"""WITH $duckBm25Ctes,
+        |r AS (SELECT query_id,
+        |        CAST(row_number() OVER (PARTITION BY query_id
+        |          ORDER BY score_fp DESC, doc_id) AS BIGINT) AS rank,
+        |        doc_id, score_fp FROM agg)
+        |SELECT query_id, rank, doc_id, score_fp FROM r
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // RRF fusion: the bm25 pipeline cut at depth 20 unioned with the
+    // x1e10 quality fixed-point top-20; each reciprocal term is the
+    // exact integer floor(1e9/(60+r)) (positive operands - DuckDB's
+    // truncating // is floor), fused score an order-free long sum
+    Key("q_rrf", (s, d) => q_rrf(s, d),
+      s"""WITH $duckBm25Ctes,
+         |lex AS (SELECT query_id, doc_id, r, 'lex' AS src FROM (
+         |          SELECT query_id, doc_id,
+         |            CAST(row_number() OVER (PARTITION BY query_id
+         |              ORDER BY score_fp DESC, doc_id) AS BIGINT) AS r
+         |          FROM agg) WHERE r <= 20),
+         |qsc AS (SELECT doc_id,
+         |          CAST(round($duckQualityScore * 1e10) AS BIGINT) AS qf
+         |        FROM documents WHERE text IS NOT NULL),
+         |qtop AS (SELECT doc_id, r FROM (
+         |           SELECT doc_id,
+         |             CAST(row_number() OVER (ORDER BY qf DESC, doc_id) AS BIGINT) AS r
+         |           FROM qsc) WHERE r <= 20),
+         |qual AS (SELECT qs.query_id, qtop.doc_id, qtop.r, 'qual' AS src
+         |         FROM (SELECT DISTINCT query_id FROM lex) qs, qtop),
+         |f AS (SELECT query_id, doc_id,
+         |        CAST(sum(1000000000 // (60 + r)) AS BIGINT) AS rrf_fp,
+         |        min(CASE WHEN src = 'lex' THEN r END) AS r_lex,
+         |        min(CASE WHEN src = 'qual' THEN r END) AS r_qual
+         |      FROM (SELECT * FROM lex UNION ALL SELECT * FROM qual)
+         |      GROUP BY 1, 2),
+         |rk AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
+         |         ORDER BY rrf_fp DESC, doc_id) AS BIGINT) AS fused_rank
+         |       FROM f)
+         |SELECT query_id, fused_rank, doc_id, rrf_fp, r_lex, r_qual
+         |FROM rk WHERE fused_rank <= 5
+         |ORDER BY query_id, fused_rank""".stripMargin),
+    // RBO: the same bm25-depth-20 and quality-top-20 lists as q_rrf;
+    // each overlapping doc contributes the SHARED x1e12 literal
+    // suffix weight at max(r_lex, r_qual) - rboSuffixWeights is the
+    // one source of truth for the geometric weight table
+    Key("q_rbo", (s, d) => q_rbo(s, d), {
+      val v = rboSuffixWeights(20, 0.9)
+        .mkString("[", ", ", "]")
+      s"""WITH $duckBm25Ctes,
+         |lex AS (SELECT query_id, doc_id, r FROM (
+         |          SELECT query_id, doc_id,
+         |            CAST(row_number() OVER (PARTITION BY query_id
+         |              ORDER BY score_fp DESC, doc_id) AS BIGINT) AS r
+         |          FROM agg) WHERE r <= 20),
+         |qsc AS (SELECT doc_id,
+         |          CAST(round($duckQualityScore * 1e10) AS BIGINT) AS qf
+         |        FROM documents WHERE text IS NOT NULL),
+         |qtop AS (SELECT doc_id, r FROM (
+         |           SELECT doc_id,
+         |             CAST(row_number() OVER (ORDER BY qf DESC, doc_id) AS BIGINT) AS r
+         |           FROM qsc) WHERE r <= 20),
+         |ov AS (SELECT lex.query_id, greatest(lex.r, qtop.r) AS m
+         |       FROM lex JOIN qtop USING (doc_id)),
+         |a AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_overlap,
+         |        CAST(sum(CASE WHEN m <= 5 THEN 1 ELSE 0 END) AS BIGINT) AS o_5,
+         |        CAST(sum(CASE WHEN m <= 10 THEN 1 ELSE 0 END) AS BIGINT) AS o_10,
+         |        CAST(sum(($v)[CAST(m AS INT)]) AS BIGINT) AS rbo_fp
+         |      FROM ov GROUP BY 1)
+         |SELECT qs.query_id,
+         |  coalesce(n_overlap, CAST(0 AS BIGINT)) AS n_overlap,
+         |  coalesce(o_5, CAST(0 AS BIGINT)) AS o_5,
+         |  coalesce(o_10, CAST(0 AS BIGINT)) AS o_10,
+         |  coalesce(rbo_fp, CAST(0 AS BIGINT)) AS rbo_fp
+         |FROM (SELECT DISTINCT query_id FROM lex) qs LEFT JOIN a USING (query_id)
+         |ORDER BY query_id""".stripMargin
+    }),
+    // nDCG: bm25 depth-20 list left-joined to the quality top-20 for
+    // graded gains; discounts are the SHARED x1e9 ndcgDiscounts
+    // literals; ideal order re-ranks the same gains per query
+    Key("q_ndcg", (s, d) => q_ndcg(s, d), {
+      val disc = ndcgDiscounts(20)
+        .mkString("[", ", ", "]")
+      s"""WITH $duckBm25Ctes,
+         |lex AS (SELECT query_id, doc_id, r FROM (
+         |          SELECT query_id, doc_id,
+         |            CAST(row_number() OVER (PARTITION BY query_id
+         |              ORDER BY score_fp DESC, doc_id) AS BIGINT) AS r
+         |          FROM agg) WHERE r <= 20),
+         |qsc AS (SELECT doc_id,
+         |          CAST(round($duckQualityScore * 1e10) AS BIGINT) AS qf
+         |        FROM documents WHERE text IS NOT NULL),
+         |qtop AS (SELECT doc_id, r FROM (
+         |           SELECT doc_id,
+         |             CAST(row_number() OVER (ORDER BY qf DESC, doc_id) AS BIGINT) AS r
+         |           FROM qsc) WHERE r <= 20),
+         |g AS (SELECT lex.query_id, lex.doc_id, lex.r AS rank,
+         |        coalesce(21 - qtop.r, CAST(0 AS BIGINT)) AS gain
+         |      FROM lex LEFT JOIN qtop USING (doc_id)),
+         |g2 AS (SELECT query_id, gain, rank,
+         |         CAST(row_number() OVER (PARTITION BY query_id
+         |           ORDER BY gain DESC, doc_id) AS BIGINT) AS ideal_pos
+         |       FROM g),
+         |a AS (SELECT query_id,
+         |        CAST(sum(gain * ($disc)[CAST(rank AS INT)]) AS BIGINT) AS dcg_fp,
+         |        CAST(sum(gain * ($disc)[CAST(ideal_pos AS INT)]) AS BIGINT) AS idcg_fp
+         |      FROM g2 GROUP BY 1)
+         |SELECT query_id, dcg_fp, idcg_fp,
+         |  coalesce((2 * dcg_fp * 1000000 + idcg_fp) // nullif(2 * idcg_fp, 0),
+         |           CAST(0 AS BIGINT)) AS ndcg_fp
+         |FROM a ORDER BY query_id""".stripMargin
+    }),
+    // PBM/IPS click-model eval: bm25 depth-20 log, quality-top-20
+    // clicks, literal 1/r propensities -> each IPS weight is the
+    // exact integer r; both reads x1e6 round-half-up over depth=20
+    Key("q_pbm", (s, d) => q_pbm(s, d),
+      s"""WITH $duckBm25Ctes,
+         |lex AS (SELECT query_id, doc_id, r FROM (
+         |          SELECT query_id, doc_id,
+         |            CAST(row_number() OVER (PARTITION BY query_id
+         |              ORDER BY score_fp DESC, doc_id) AS BIGINT) AS r
+         |          FROM agg) WHERE r <= 20),
+         |qsc AS (SELECT doc_id,
+         |          CAST(round($duckQualityScore * 1e10) AS BIGINT) AS qf
+         |        FROM documents WHERE text IS NOT NULL),
+         |qtop AS (SELECT doc_id, r FROM (
+         |           SELECT doc_id,
+         |             CAST(row_number() OVER (ORDER BY qf DESC, doc_id) AS BIGINT) AS r
+         |           FROM qsc) WHERE r <= 20),
+         |cl AS (SELECT lex.query_id, lex.r AS rank,
+         |         CASE WHEN qtop.doc_id IS NULL THEN 0 ELSE 1 END AS click
+         |       FROM lex LEFT JOIN qtop USING (doc_id))
+         |SELECT query_id, CAST(sum(click) AS BIGINT) AS n_clicks,
+         |  (2 * CAST(sum(click) AS BIGINT) * 1000000 + 20) // (2 * 20) AS ctr_fp,
+         |  (2 * CAST(sum(click * rank) AS BIGINT) * 1000000 + 20) // (2 * 20) AS ips_fp
+         |FROM cl GROUP BY 1 ORDER BY query_id""".stripMargin),
+    // MAP@20: binary quality-top relevance over the bm25 depth-20
+    // list; Precision@r terms share denominator L = lcm(1..20) =
+    // 232792560 so the AP numerator is an exact long sum and ap_fp is
+    // one x1e6 round-half-up division by L*20 = 4655851200
+    Key("q_map", (s, d) => q_map(s, d),
+      s"""WITH $duckBm25Ctes,
+         |lex AS (SELECT query_id, doc_id, r FROM (
+         |          SELECT query_id, doc_id,
+         |            CAST(row_number() OVER (PARTITION BY query_id
+         |              ORDER BY score_fp DESC, doc_id) AS BIGINT) AS r
+         |          FROM agg) WHERE r <= 20),
+         |qsc AS (SELECT doc_id,
+         |          CAST(round($duckQualityScore * 1e10) AS BIGINT) AS qf
+         |        FROM documents WHERE text IS NOT NULL),
+         |qtop AS (SELECT doc_id, r FROM (
+         |           SELECT doc_id,
+         |             CAST(row_number() OVER (ORDER BY qf DESC, doc_id) AS BIGINT) AS r
+         |           FROM qsc) WHERE r <= 20),
+         |cl AS (SELECT lex.query_id, lex.r AS rank,
+         |         CASE WHEN qtop.doc_id IS NULL THEN 0 ELSE 1 END AS click
+         |       FROM lex LEFT JOIN qtop USING (doc_id)),
+         |h AS (SELECT query_id, rank, click,
+         |        sum(click) OVER (PARTITION BY query_id ORDER BY rank
+         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS hits
+         |      FROM cl)
+         |SELECT query_id, CAST(sum(click) AS BIGINT) AS n_rel,
+         |  (2 * CAST(sum(click * hits * (232792560 // rank)) AS BIGINT) * 1000000
+         |    + 4655851200) // (2 * 4655851200) AS ap_fp
+         |FROM h GROUP BY 1 ORDER BY query_id""".stripMargin),
+    // Hill tail index: top-21 counts by (n DESC, t), x1e9-quantized
+    // per-count ln, exact ratio sum, x1e6 alpha with a NULL guard for
+    // k past the vocabulary
+    Key("q_hill", (s, d) => q_hill(s, d),
+      """WITH tok AS (SELECT unnest(string_split(text, ' ')) AS t
+        |             FROM documents WHERE text IS NOT NULL),
+        |tc AS (SELECT t, CAST(count(*) AS BIGINT) AS n
+        |       FROM tok WHERE t <> '' GROUP BY 1),
+        |top AS (SELECT n,
+        |          CAST(round(ln(CAST(n AS DOUBLE)) * 1e9) AS BIGINT) AS ln9,
+        |          CAST(row_number() OVER (ORDER BY n DESC, t) AS BIGINT) AS r
+        |        FROM tc ORDER BY n DESC, t LIMIT 21),
+        |ks AS (SELECT CAST(unnest([5, 10, 20]) AS BIGINT) AS k),
+        |a AS (SELECT k,
+        |        max(CASE WHEN r = k + 1 THEN n END) AS thr_count,
+        |        CAST(sum(CASE WHEN r <= k THEN ln9 END)
+        |          - k * max(CASE WHEN r = k + 1 THEN ln9 END) AS BIGINT)
+        |          AS s_fp9
+        |      FROM ks, top GROUP BY 1)
+        |SELECT k, thr_count, s_fp9,
+        |  CASE WHEN s_fp9 > 0 THEN
+        |    (2 * k * 1000000000000000 + s_fp9) // (2 * s_fp9) END AS alpha_fp
+        |FROM a ORDER BY k""".stripMargin),
+    // ECE: the SAME eceConfFp sigmoid literal (one source of truth);
+    // bucket ids, sums, fixed points, and the n-weighted ECE all
+    // integer-exact on the x1e6-quantized confidences
+    Key("q_ece", q_ece _,
+      s"""WITH c AS (SELECT ${eceConfFp} AS conf_fp,
+         |             (lang = 'en') AS pos
+         |           FROM documents
+         |           WHERE n_chars IS NOT NULL AND lang IS NOT NULL),
+         |b AS (SELECT least(conf_fp // 100000, 9) AS bucket,
+         |        CAST(count(*) AS BIGINT) AS n,
+         |        CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
+         |        CAST(sum(conf_fp) AS BIGINT) AS sum_conf_fp
+         |      FROM c GROUP BY 1),
+         |g AS (SELECT bucket, n, n_pos,
+         |        (2 * n_pos * 1000000 + n) // (2 * n) AS acc_fp,
+         |        (2 * sum_conf_fp + n) // (2 * n) AS avg_conf_fp
+         |      FROM b),
+         |g2 AS (SELECT *, abs(acc_fp - avg_conf_fp) AS gap_fp FROM g),
+         |t AS (SELECT CAST(sum(n) AS BIGINT) AS n_tot,
+         |        CAST(sum(n * gap_fp) AS BIGINT) AS g_tot FROM g2)
+         |SELECT bucket, n, n_pos, acc_fp, avg_conf_fp, gap_fp,
+         |  (2 * g_tot + n_tot) // (2 * n_tot) AS ece_fp
+         |FROM g2, t ORDER BY bucket""".stripMargin),
+    // Lorenz/Gini: ascending-token-count position deciles (the q_rfm
+    // quintile formula at 10), cumulative mass over the 10-row table,
+    // Gini cleared to (2*Sum(i*t) - (n+1)*S) / (n*S), all x1e6
+    Key("q_lorenz", q_lorenz _,
+      """WITH per AS (SELECT doc_id,
+        |         CAST(len(list_filter(string_split(text, ' '),
+        |           t -> len(t) > 0)) AS BIGINT) AS t
+        |       FROM documents WHERE text IS NOT NULL),
+        |r AS (SELECT t, CAST(row_number() OVER (ORDER BY t, doc_id) AS BIGINT) AS rn
+        |      FROM per),
+        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
+        |          CAST(sum(t) AS BIGINT) AS s_tok,
+        |          CAST(sum(rn * t) AS BIGINT) AS s_rt FROM r),
+        |dec AS (SELECT (rn - 1) * 10 // n + 1 AS decile,
+        |          CAST(count(*) AS BIGINT) AS n_docs,
+        |          CAST(sum(t) AS BIGINT) AS tokens,
+        |          any_value(n) AS n, any_value(s_tok) AS s_tok,
+        |          any_value(s_rt) AS s_rt
+        |        FROM r, tot GROUP BY 1)
+        |SELECT decile, n_docs, tokens,
+        |  CAST(sum(tokens) OVER (ORDER BY decile) AS BIGINT) AS cum_tokens,
+        |  (2 * CAST(sum(tokens) OVER (ORDER BY decile) AS BIGINT) * 1000000
+        |     + s_tok) // (2 * s_tok) AS cum_share_fp,
+        |  (2 * (2 * s_rt - (n + 1) * s_tok) * 1000000 + n * s_tok)
+        |    // (2 * n * s_tok) AS gini_fp
+        |FROM dec ORDER BY decile""".stripMargin),
+    // exact two-sample KS: D found by integer cross-multiplication
+    // |cum1*n2 - cum2*n1| over the value-count table, one division
+    Key("q_ks", q_ks _,
+      """WITH vc AS (SELECT n_chars AS v,
+        |         CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
+        |         CAST(sum(CASE WHEN doc_id % 2 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS c2
+        |       FROM documents WHERE n_chars IS NOT NULL GROUP BY 1),
+        |cum AS (SELECT v,
+        |          CAST(sum(c1) OVER (ORDER BY v) AS BIGINT) AS cum1,
+        |          CAST(sum(c2) OVER (ORDER BY v) AS BIGINT) AS cum2
+        |        FROM vc),
+        |tot AS (SELECT CAST(sum(c1) AS BIGINT) AS n1,
+        |          CAST(sum(c2) AS BIGINT) AS n2 FROM vc),
+        |agg AS (SELECT any_value(n1) AS n_ref, any_value(n2) AS n_cur,
+        |          max(abs(cum1 * n2 - cum2 * n1)) AS d_num
+        |        FROM cum, tot)
+        |SELECT n_ref, n_cur, CAST(d_num AS BIGINT) AS d_num,
+        |  (2 * d_num * 1000000 + n_ref * n_cur) // (2 * n_ref * n_cur) AS ks_fp
+        |FROM agg""".stripMargin),
+    // Mann-Whitney rank-sum, en vs rest over n_chars: doubled-U and
+    // tie term as exact integer sums off the value-count table; z is
+    // the one mirrored round(double,6) over those longs
+    Key("q_mannwhitney", q_mannwhitney _,
+      """WITH vc AS (SELECT n_chars AS v,
+        |         CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS c1,
+        |         CAST(sum(CASE WHEN lang <> 'en' THEN 1 ELSE 0 END) AS BIGINT) AS c2
+        |       FROM documents
+        |       WHERE n_chars IS NOT NULL AND lang IS NOT NULL GROUP BY 1),
+        |cum AS (SELECT v, c1, c2,
+        |          CAST(sum(c2) OVER (ORDER BY v) AS BIGINT) - c2 AS below2
+        |        FROM vc),
+        |a AS (SELECT CAST(sum(c1) AS BIGINT) AS n_en,
+        |        CAST(sum(c2) AS BIGINT) AS n_other,
+        |        CAST(sum(c1 * (2*below2 + c2)) AS BIGINT) AS u2_en,
+        |        CAST(sum((c1+c2)*(c1+c2)*(c1+c2) - (c1+c2)) AS BIGINT) AS tie_t
+        |      FROM cum)
+        |SELECT n_en, n_other, u2_en,
+        |  2*n_en*n_other - u2_en AS u2_other, tie_t,
+        |  CASE WHEN n_en = 0 OR n_other = 0 OR
+        |    (n_en+n_other+1)*(n_en+n_other)*(n_en+n_other-1) - tie_t = 0
+        |  THEN NULL ELSE
+        |    round(CAST(u2_en - n_en*n_other AS DOUBLE) *
+        |      sqrt(3.0 * (n_en+n_other) * (n_en+n_other-1) /
+        |        (CAST(n_en AS DOUBLE) * n_other *
+        |         ((n_en+n_other+1.0) * (n_en+n_other) * (n_en+n_other-1)
+        |          - tie_t))), 6) END AS z
+        |FROM a""".stripMargin),
+    // distinct-n diversity: the three gram branches mirror shinglesN's
+    // inclusive-slice windows; exact counts, x1e6 fixed-point ratio
+    Key("q_distinct_n", (s, d) => q_distinct_n(s, d),
+      """WITH wd AS (SELECT source, string_split(text, ' ') AS w
+        |            FROM documents WHERE text IS NOT NULL),
+        |g AS (
+        |  SELECT source, CAST(1 AS BIGINT) AS n, unnest(w) AS g FROM wd
+        |  UNION ALL
+        |  SELECT source, CAST(2 AS BIGINT), unnest(
+        |      CASE WHEN len(w) >= 2
+        |        THEN [array_to_string(w[i:i+1], ' ') FOR i IN range(1, len(w))]
+        |        ELSE [] END) FROM wd
+        |  UNION ALL
+        |  SELECT source, CAST(3 AS BIGINT), unnest(
+        |      CASE WHEN len(w) >= 3
+        |        THEN [array_to_string(w[i:i+2], ' ') FOR i IN range(1, len(w) - 1)]
+        |        ELSE [] END) FROM wd)
+        |SELECT source, n, CAST(count(*) AS BIGINT) AS total_ngrams,
+        |  CAST(count(DISTINCT g) AS BIGINT) AS distinct_ngrams,
+        |  (2 * count(DISTINCT g) * 1000000 + count(*)) // (2 * count(*))
+        |    AS distinct_fp
+        |FROM g GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    // Welch t: the moment CTE feeds the SAME welchT/welchDf double
+    // expressions the Spark side parses (shared Scala vals — one
+    // source of truth for the IEEE op sequence)
+    Key("q_welch", q_welch _,
+      s"""WITH m AS (SELECT
+         |    CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_1,
+         |    CAST(sum(CASE WHEN lang <> 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_2,
+         |    CAST(sum(CASE WHEN lang = 'en' THEN n_chars ELSE 0 END) AS BIGINT) AS sum_1,
+         |    CAST(sum(CASE WHEN lang <> 'en' THEN n_chars ELSE 0 END) AS BIGINT) AS sum_2,
+         |    CAST(sum(CASE WHEN lang = 'en' THEN n_chars * n_chars ELSE 0 END) AS BIGINT) AS sumsq_1,
+         |    CAST(sum(CASE WHEN lang <> 'en' THEN n_chars * n_chars ELSE 0 END) AS BIGINT) AS sumsq_2
+         |  FROM documents WHERE n_chars IS NOT NULL AND lang IS NOT NULL)
+         |SELECT n_1, n_2, sum_1, sum_2, sumsq_1, sumsq_2,
+         |  ${welchT} AS t,
+         |  ${welchDf} AS df
+         |FROM m""".stripMargin),
+    // Kruskal-Wallis H across all language groups: doubled-midrank
+    // sums and the tie term as exact longs off the value-count spine;
+    // the one float sum (sum_j R_j^2/n_j) is a grp-ordered left fold
+    // (list ORDER BY grp + list_sum = Spark's aggregate over the
+    // sorted collect — the order-fixed float-fold rule); H is the
+    // shared kruskalH expression (one source of truth)
+    Key("q_kruskal", q_kruskal _,
+      s"""WITH d AS (SELECT lang AS grp, n_chars AS v FROM documents
+         |           WHERE n_chars IS NOT NULL AND lang IS NOT NULL),
+         |vc AS (SELECT v, grp, CAST(count(*) AS BIGINT) AS c
+         |       FROM d GROUP BY 1, 2),
+         |tv AS (SELECT v, CAST(sum(c) AS BIGINT) AS t FROM vc GROUP BY 1),
+         |cum AS (SELECT v, t,
+         |          CAST(sum(t) OVER (ORDER BY v) AS BIGINT) - t AS below
+         |        FROM tv),
+         |g AS (SELECT grp, CAST(sum(c) AS BIGINT) AS n_j,
+         |        CAST(sum(c * (2*below + t + 1)) AS BIGINT) AS r2_j
+         |      FROM vc JOIN cum USING (v) GROUP BY 1),
+         |tie AS (SELECT CAST(sum(t*t*t - t) AS BIGINT) AS tie_t FROM tv),
+         |tot AS (SELECT CAST(count(*) AS BIGINT) AS k,
+         |          CAST(sum(n_j) AS BIGINT) AS n,
+         |          list_sum(list_transform(
+         |            list(struct_pack(n_j := n_j, r2_j := r2_j) ORDER BY grp),
+         |            x -> CAST(x.r2_j AS DOUBLE) * x.r2_j / (4.0 * x.n_j)))
+         |            AS s_rank
+         |        FROM g)
+         |SELECT grp, n_j, r2_j, k, n, tie_t,
+         |  ${kruskalH} AS h
+         |FROM g, tot, tie ORDER BY grp""".stripMargin),
+    // Novelty: the q_minhash shingle spelling (with the NULL-text
+    // filter), distinct grams per doc, first-occurrence owners from
+    // the vocab-sized min-doc table, x1e6 round-half-up share
+    Key("q_novelty", q_novelty _,
+      """WITH sh AS (
+        |  SELECT doc_id, CASE WHEN len(w) >= 3
+        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
+        |    ELSE [text] END AS shingles
+        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents
+        |        WHERE text IS NOT NULL)),
+        |g AS (SELECT DISTINCT doc_id, unnest(shingles) AS gram FROM sh),
+        |pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams FROM g GROUP BY 1),
+        |own AS (SELECT min(doc_id) AS doc_id FROM g GROUP BY gram),
+        |nn AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_novel FROM own GROUP BY 1)
+        |SELECT d.doc_id, pd.n_grams,
+        |  CASE WHEN pd.n_grams IS NOT NULL
+        |    THEN CAST(coalesce(nn.n_novel, 0) AS BIGINT) END AS n_novel,
+        |  CASE WHEN pd.n_grams IS NOT NULL
+        |    THEN (2 * coalesce(nn.n_novel, 0) * 1000000 + pd.n_grams)
+        |         // (2 * pd.n_grams) END AS novelty_fp
+        |FROM documents d
+        |LEFT JOIN pd ON d.doc_id = pd.doc_id
+        |LEFT JOIN nn ON d.doc_id = nn.doc_id
+        |ORDER BY d.doc_id""".stripMargin),
+    // Heaps fit: exact first-sighting counts, one cumulative window
+    // (the Spark side's two-level prefix is algebraically identical),
+    // x1e3 quantized-ln points, zipf-style moment fit
+    Key("q_heaps", q_heaps _,
+      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
+        |             FROM documents),
+        |t2 AS (SELECT doc_id, term FROM tok WHERE len(term) > 0),
+        |pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_toks
+        |       FROM t2 GROUP BY 1),
+        |fs AS (SELECT min(doc_id) AS doc_id FROM t2 GROUP BY term),
+        |fn AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_new
+        |       FROM fs GROUP BY 1),
+        |dr AS (SELECT pd.doc_id, pd.n_toks,
+        |         CAST(coalesce(fn.n_new, 0) AS BIGINT) AS n_new
+        |       FROM pd LEFT JOIN fn ON pd.doc_id = fn.doc_id),
+        |pts AS (SELECT CAST(sum(n_toks) OVER w AS BIGINT) AS cum_t,
+        |               CAST(sum(n_new) OVER w AS BIGINT) AS cum_v
+        |        FROM dr WINDOW w AS (ORDER BY doc_id
+        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+        |p AS (SELECT CAST(round(ln(CAST(cum_t AS DOUBLE)) * 1e3) AS BIGINT) AS x,
+        |             CAST(round(ln(CAST(cum_v AS DOUBLE)) * 1e3) AS BIGINT) AS y
+        |      FROM pts WHERE cum_t > 0 AND cum_v > 0),
+        |a AS (SELECT CAST(count(*) AS BIGINT) AS n_points,
+        |        CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+        |        CAST(sum(x*x) AS BIGINT) AS sxx,
+        |        CAST(sum(x*y) AS BIGINT) AS sxy,
+        |        CAST(sum(y*y) AS BIGINT) AS syy FROM p)
+        |SELECT n_points, sx, sy, sxx, sxy,
+        |  CASE WHEN n_points*sxx - sx*sx = 0 THEN NULL ELSE
+        |    round(CAST(n_points*sxy - sx*sy AS DOUBLE) /
+        |          CAST(n_points*sxx - sx*sx AS DOUBLE), 6) END AS beta,
+        |  CASE WHEN n_points*sxx - sx*sx = 0 THEN NULL ELSE
+        |    round((CAST(sy AS DOUBLE) -
+        |      CAST(n_points*sxy - sx*sy AS DOUBLE) /
+        |      CAST(n_points*sxx - sx*sx AS DOUBLE) * sx)
+        |      / n_points / 1000.0, 6) END AS ln_k,
+        |  CASE WHEN n_points*sxx - sx*sx = 0 OR n_points*syy - sy*sy = 0
+        |  THEN NULL ELSE
+        |    round(CAST(n_points*sxy - sx*sy AS DOUBLE) *
+        |          CAST(n_points*sxy - sx*sy AS DOUBLE) /
+        |          (CAST(n_points*sxx - sx*sx AS DOUBLE) *
+        |           CAST(n_points*syy - sy*sy AS DOUBLE)), 6) END AS r2
+        |FROM a""".stripMargin),
+    // Flesch-Kincaid per doc: regexp-count proxies, fraction cleared
+    // to (195W^2 + 5900SV - 7795SW)/(500SW), sign-separated x1e6
+    Key("q_readability", q_readability _,
+      """WITH c AS (SELECT doc_id,
+        |    CAST(len(list_filter(regexp_split_to_array(text, '\s+'),
+        |         t -> len(t) > 0)) AS BIGINT) AS w,
+        |    greatest(CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT),
+        |         1) AS sent,
+        |    CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT)
+        |         AS v
+        |  FROM documents WHERE text IS NOT NULL),
+        |n AS (SELECT doc_id, w, sent, v,
+        |        195 * w * w + 5900 * sent * v - 7795 * sent * w AS num,
+        |        500 * sent * w AS den
+        |      FROM c WHERE w > 0)
+        |SELECT doc_id, w AS n_words, sent AS n_sentences, v AS n_syllables,
+        |  (CASE WHEN num < 0 THEN -1 ELSE 1 END) *
+        |    ((2 * abs(num) * 1000000 + den) // (2 * den)) AS fk_fp
+        |FROM n ORDER BY doc_id""".stripMargin),
+    // Zipf fit: quantized-ln points over the top-100 vocab, exact
+    // integer moment sums, slope/r2 as one mirrored double expr each
+    Key("q_zipf", (s, d) => q_zipf(s, d),
+      """WITH t AS (SELECT unnest(string_split(text, ' ')) AS term FROM documents),
+        |c AS (SELECT term, CAST(count(*) AS BIGINT) AS cnt
+        |      FROM t WHERE len(term) > 0 GROUP BY 1),
+        |top AS (SELECT term, cnt FROM c ORDER BY cnt DESC, term LIMIT 100),
+        |r AS (SELECT cnt, CAST(row_number() OVER
+        |        (ORDER BY cnt DESC, term) AS BIGINT) AS rank FROM top),
+        |p AS (SELECT CAST(round(ln(CAST(rank AS DOUBLE)) * 1e6) AS BIGINT) AS x,
+        |             CAST(round(ln(CAST(cnt AS DOUBLE)) * 1e6) AS BIGINT) AS y
+        |      FROM r),
+        |a AS (SELECT CAST(count(*) AS BIGINT) AS n_terms,
+        |        CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+        |        CAST(sum(x*x) AS BIGINT) AS sxx,
+        |        CAST(sum(x*y) AS BIGINT) AS sxy,
+        |        CAST(sum(y*y) AS BIGINT) AS syy FROM p)
+        |SELECT n_terms, sx, sy, sxx, sxy,
+        |  round(CAST(n_terms*sxy - sx*sy AS DOUBLE) /
+        |        CAST(n_terms*sxx - sx*sx AS DOUBLE), 6) AS slope,
+        |  round(CAST(n_terms*sxy - sx*sy AS DOUBLE) *
+        |        CAST(n_terms*sxy - sx*sy AS DOUBLE) /
+        |        (CAST(n_terms*sxx - sx*sx AS DOUBLE) *
+        |         CAST(n_terms*syy - sy*sy AS DOUBLE)), 6) AS r2
+        |FROM a""".stripMargin),
+    // chi-square independence: dense marginal-cross spine, fraction
+    // cleared to (O*N - R*C)^2 / (N*R*C), x1e6 round-half-up
+    Key("q_chi2", q_chi2 _,
+      """WITH c AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS o
+        |      FROM documents GROUP BY 1, 2),
+        |rt AS (SELECT lang, CAST(sum(o) AS BIGINT) AS r FROM c GROUP BY 1),
+        |ct AS (SELECT source, CAST(sum(o) AS BIGINT) AS cc FROM c GROUP BY 1),
+        |n AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM c),
+        |sp AS (SELECT rt.lang, ct.source, rt.r, ct.cc FROM rt CROSS JOIN ct)
+        |SELECT sp.lang, sp.source,
+        |  CAST(coalesce(c.o, 0) AS BIGINT) AS n_docs,
+        |  sp.r AS n_lang, sp.cc AS n_source,
+        |  (2 * (coalesce(c.o, 0)*n.n - sp.r*sp.cc)
+        |     * (coalesce(c.o, 0)*n.n - sp.r*sp.cc) * 1000000
+        |   + n.n*sp.r*sp.cc) // (2 * n.n*sp.r*sp.cc) AS chi2_fp
+        |FROM sp LEFT JOIN c ON sp.lang = c.lang AND sp.source = c.source, n
+        |ORDER BY sp.lang, sp.source""".stripMargin),
+    // PSI drift: even/odd doc_id split over shared equi-width length
+    // buckets; +1 Laplace smoothing; psi term via |A|*|ln9| so the
+    // trunc-vs-floor negative-division divergence cannot arise
+    Key("q_drift_psi", (s, d) => q_drift_psi(s, d),
+      """WITH docs AS (SELECT doc_id, n_chars, doc_id % 2 = 0 AS is_ref FROM documents),
+        |rg AS (SELECT min(n_chars) AS min_c, max(n_chars) AS max_c FROM docs),
+        |tt AS (SELECT CAST(sum(CASE WHEN is_ref THEN 1 ELSE 0 END) AS BIGINT) AS n_ref_tot,
+        |         CAST(sum(CASE WHEN NOT is_ref THEN 1 ELSE 0 END) AS BIGINT) AS n_cur_tot
+        |       FROM docs),
+        |c AS (SELECT (n_chars - min_c) * 16 // (max_c - min_c + 1) AS bucket,
+        |        CAST(sum(CASE WHEN is_ref THEN 1 ELSE 0 END) AS BIGINT) AS n_ref,
+        |        CAST(sum(CASE WHEN NOT is_ref THEN 1 ELSE 0 END) AS BIGINT) AS n_cur
+        |      FROM docs, rg GROUP BY 1),
+        |p AS (SELECT bucket, n_ref, n_cur,
+        |        (n_cur + 1) * (n_ref_tot + 16) AS pc_num,
+        |        (n_ref + 1) * (n_cur_tot + 16) AS pr_num,
+        |        (n_cur_tot + 16) * (n_ref_tot + 16) AS den
+        |      FROM c, tt),
+        |l AS (SELECT bucket, n_ref, n_cur, pc_num, pr_num, den,
+        |        CAST(round(ln(CAST(pc_num AS DOUBLE) /
+        |          CAST(pr_num AS DOUBLE)) * 1e9) AS BIGINT) AS ln9
+        |      FROM p)
+        |SELECT bucket, n_ref, n_cur, ln9 AS lr_fp,
+        |  (2 * abs(pc_num - pr_num) * abs(ln9) + den) // (2 * den) AS psi_fp
+        |FROM l ORDER BY bucket""".stripMargin),
+    // Ablation: per-doc pass flags (ratio rules by integer
+    // cross-multiplication, composite on the rounded score, nulls
+    // fail everything) -> one counter row -> 4 literal rows
+    Key("q_quality_ablation", q_quality_ablation _, {
+      val q = duckQualityScore
+      s"""WITH f AS (
+         |  SELECT
+         |    coalesce(len(w) BETWEEN 20 AND 1000, false) AS p1,
+         |    coalesce(len(list_filter(w, x -> x IN ('the','a','of','and'))) * 100 >= len(w) * 3, false) AS p2,
+         |    coalesce((len(w) - len(list_distinct(w))) * 10 <= len(w) * 6, false) AS p3,
+         |    coalesce(($q) >= 0.45, false) AS p4
+         |  FROM (SELECT text, string_split(text,' ') AS w FROM documents)),
+         |a AS (SELECT
+         |  CAST(count(*) AS BIGINT) AS n_docs,
+         |  CAST(sum(CASE WHEN NOT p1 THEN 1 ELSE 0 END) AS BIGINT) AS f1,
+         |  CAST(sum(CASE WHEN NOT p2 THEN 1 ELSE 0 END) AS BIGINT) AS f2,
+         |  CAST(sum(CASE WHEN NOT p3 THEN 1 ELSE 0 END) AS BIGINT) AS f3,
+         |  CAST(sum(CASE WHEN NOT p4 THEN 1 ELSE 0 END) AS BIGINT) AS f4,
+         |  CAST(sum(CASE WHEN NOT p1 AND p2 AND p3 AND p4 THEN 1 ELSE 0 END) AS BIGINT) AS fo1,
+         |  CAST(sum(CASE WHEN p1 AND NOT p2 AND p3 AND p4 THEN 1 ELSE 0 END) AS BIGINT) AS fo2,
+         |  CAST(sum(CASE WHEN p1 AND p2 AND NOT p3 AND p4 THEN 1 ELSE 0 END) AS BIGINT) AS fo3,
+         |  CAST(sum(CASE WHEN p1 AND p2 AND p3 AND NOT p4 THEN 1 ELSE 0 END) AS BIGINT) AS fo4,
+         |  CAST(sum(CASE WHEN p2 AND p3 AND p4 THEN 1 ELSE 0 END) AS BIGINT) AS sw1,
+         |  CAST(sum(CASE WHEN p1 AND p3 AND p4 THEN 1 ELSE 0 END) AS BIGINT) AS sw2,
+         |  CAST(sum(CASE WHEN p1 AND p2 AND p4 THEN 1 ELSE 0 END) AS BIGINT) AS sw3,
+         |  CAST(sum(CASE WHEN p1 AND p2 AND p3 THEN 1 ELSE 0 END) AS BIGINT) AS sw4,
+         |  CAST(sum(CASE WHEN p1 AND p2 AND p3 AND p4 THEN 1 ELSE 0 END) AS BIGINT) AS survivors_all
+         |  FROM f)
+         |SELECT rule, n_fail, n_fail_alone, survivors_without_rule, n_docs, survivors_all
+         |FROM (
+         |  SELECT 'min_length' AS rule, f1 AS n_fail, fo1 AS n_fail_alone, sw1 AS survivors_without_rule, n_docs, survivors_all FROM a
+         |  UNION ALL SELECT 'stopwords', f2, fo2, sw2, n_docs, survivors_all FROM a
+         |  UNION ALL SELECT 'dup_words', f3, fo3, sw3, n_docs, survivors_all FROM a
+         |  UNION ALL SELECT 'quality', f4, fo4, sw4, n_docs, survivors_all FROM a)
+         |ORDER BY rule""".stripMargin
+    }),
+    // Bigram LM, add-one smoothing: p(w2|w1) = (c12+1)/(c1+V) with c1
+    // counting w1 as a bigram PREFIX; log-probs fixed-pointed to 1e-9
+    // longs BEFORE the per-doc sum (exact, order-free), doubles only
+    // at the rounded display boundary — the q_lm_score contract.
+    Key("q_lm_bigram", q_lm_bigram _,
+      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        |bg AS (
+        |  SELECT doc_id, unnest(CASE WHEN len(w) >= 2
+        |    THEN [array_to_string(w[i:i+1], ' ') for i in range(1, len(w))]
+        |    ELSE [] END) AS bg
+        |  FROM w),
+        |bgw AS (SELECT doc_id, bg, string_split(bg, ' ')[1] AS w1 FROM bg),
+        |c12 AS (SELECT bg, count(*) AS c12 FROM bgw GROUP BY 1),
+        |c1 AS (SELECT w1, count(*) AS c1 FROM bgw GROUP BY 1),
+        |v AS (SELECT count(DISTINCT tok) AS v FROM
+        |  (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)),
+        |lp AS (
+        |  SELECT bgw.doc_id,
+        |    CAST(round(ln(CAST(c12 + 1 AS DOUBLE) / (c1 + v)) * 1e9) AS BIGINT) AS lp_fp
+        |  FROM bgw JOIN c12 USING (bg) JOIN c1 USING (w1), v),
+        |per AS (
+        |  SELECT doc_id, count(*) AS n_bigrams, sum(lp_fp) AS s
+        |  FROM lp GROUP BY 1)
+        |SELECT d.doc_id, n_bigrams,
+        |  round(CAST(s AS DOUBLE) / n_bigrams / 1e9, 6) AS mean_logp,
+        |  round(exp(-(CAST(s AS DOUBLE) / n_bigrams / 1e9)), 4) AS ppl_proxy
+        |FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
+        |ORDER BY d.doc_id""".stripMargin),
+    // CCNet tercile split: the q_lm_bigram chain, then the
+    // sign-separated mean division (log-probs are negative — // and
+    // div disagree unless sign-separated), one global rank, and the
+    // shared position-tercile formula.
+    Key("q_ccnet_split", q_ccnet_split _,
+      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        |bg AS (
+        |  SELECT doc_id, unnest(CASE WHEN len(w) >= 2
+        |    THEN [array_to_string(w[i:i+1], ' ') for i in range(1, len(w))]
+        |    ELSE [] END) AS bg
+        |  FROM w),
+        |bgw AS (SELECT doc_id, bg, string_split(bg, ' ')[1] AS w1 FROM bg),
+        |c12 AS (SELECT bg, count(*) AS c12 FROM bgw GROUP BY 1),
+        |c1 AS (SELECT w1, count(*) AS c1 FROM bgw GROUP BY 1),
+        |v AS (SELECT count(DISTINCT tok) AS v FROM
+        |  (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)),
+        |lp AS (
+        |  SELECT bgw.doc_id,
+        |    CAST(round(ln(CAST(c12 + 1 AS DOUBLE) / (c1 + v)) * 1e9) AS BIGINT) AS lp_fp
+        |  FROM bgw JOIN c12 USING (bg) JOIN c1 USING (w1), v),
+        |per AS (
+        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+        |    CAST(sum(lp_fp) AS BIGINT) AS s
+        |  FROM lp GROUP BY 1),
+        |sc AS (SELECT doc_id, n_bigrams,
+        |    CASE WHEN s >= 0 THEN s // n_bigrams
+        |         ELSE -((-s) // n_bigrams) END AS mean_fp
+        |  FROM per),
+        |rk AS (SELECT doc_id, n_bigrams, mean_fp,
+        |    CAST(row_number() OVER (ORDER BY mean_fp DESC, doc_id) AS BIGINT) AS rn,
+        |    CAST(count(*) OVER () AS BIGINT) AS n_scored
+        |  FROM sc)
+        |SELECT d.doc_id, n_bigrams, mean_fp, rn,
+        |  CASE (rn - 1) * 3 // n_scored + 1 WHEN 1 THEN 'head'
+        |       WHEN 2 THEN 'middle' WHEN 3 THEN 'tail' END AS bucket
+        |FROM documents d LEFT JOIN rk USING (doc_id)
+        |ORDER BY d.doc_id""".stripMargin),
+    // Stupid backoff: count tables from the EVEN half, held-out ODD
+    // positions served tri→bi→uni by count presence; every score is
+    // an integer division of counts ×1e9 (2/5 and 4/25 clear the 0.4
+    // factors exactly), numerators non-negative so // (floor) and
+    // Spark div (trunc) agree.
+    Key("q_lm_backoff", q_lm_backoff _,
+      s"""WITH ${duckBackoffCtes()}
+        |SELECT d.doc_id, n_trigrams, n_tri, n_bi, n_uni, sum_score_fp,
+        |  sum_score_fp // n_trigrams AS mean_score_fp
+        |FROM (SELECT doc_id FROM documents WHERE doc_id % 2 = 1) d
+        |LEFT JOIN per USING (doc_id) ORDER BY d.doc_id""".stripMargin),
+    // Min-K% prob: every doc scored (posFilter TRUE), per-doc sorted
+    // score list, bottom ceil(n*20/100) summed — scores are
+    // non-negative count ratios so // and div agree, and ties at the
+    // cut are sum-invariant.
+    Key("q_minkprob", (s, d) => q_minkprob(s, d),
+      s"""WITH ${duckBackoffCtes("TRUE")},
+        |ps AS (SELECT doc_id,
+        |    CASE WHEN c123 IS NOT NULL THEN (c123 * 1000000000) // c12
+        |      WHEN c23 IS NOT NULL THEN (2 * c23 * 1000000000) // (5 * cw2)
+        |      ELSE (4 * coalesce(cw3, 0) * 1000000000) // (25 * n_train) END AS score_fp
+        |  FROM sc),
+        |ag AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_trigrams,
+        |    list_sort(list(score_fp)) AS xs FROM ps GROUP BY 1),
+        |ks AS (SELECT doc_id, n_trigrams,
+        |    (n_trigrams * 20 + 99) // 100 AS k, xs FROM ag),
+        |res AS (SELECT doc_id, n_trigrams, k,
+        |    CAST(list_sum(xs[1:k]) AS BIGINT) AS min_k_sum_fp FROM ks)
+        |SELECT d.doc_id, d.doc_id % 2 = 0 AS in_train, n_trigrams, k,
+        |  min_k_sum_fp, min_k_sum_fp // k AS min_k_mean_fp
+        |FROM documents d LEFT JOIN res USING (doc_id)
+        |ORDER BY d.doc_id""".stripMargin),
+    // DoReMi-lite reweighting: the backoff per-doc table pooled per
+    // source (position-weighted sign-separated mean), deficit vs the
+    // best source, linear weights with the +1000 epsilon, x1e6
+    // round-half-up share.
+    Key("q_mix_lm", q_mix_lm _,
+      s"""WITH ${duckBackoffCtes()},
+        |src AS (SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
+        |    CAST(sum(n_trigrams) AS BIGINT) AS n_trigrams,
+        |    CAST(sum(sum_score_fp) AS BIGINT) AS s
+        |  FROM per JOIN documents d USING (doc_id) GROUP BY 1),
+        |m AS (SELECT source, n_docs, n_trigrams,
+        |    CASE WHEN s >= 0 THEN s // n_trigrams
+        |         ELSE -((-s) // n_trigrams) END AS mean_score_fp
+        |  FROM src),
+        |b AS (SELECT max(mean_score_fp) AS best FROM m),
+        |dd AS (SELECT m.*, (best - mean_score_fp) AS deficit_fp FROM m, b),
+        |tt AS (SELECT CAST(sum(deficit_fp + 1000) AS BIGINT) AS tot FROM dd)
+        |SELECT source, n_docs, n_trigrams, mean_score_fp, deficit_fp,
+        |  (2 * (deficit_fp + 1000) * 1000000 + tot) // (2 * tot) AS weight_fp
+        |FROM dd, tt ORDER BY source""".stripMargin),
+    // The appended suffix is DECOMPOSED (e+U+0301, a+U+0308) in both
+    // engines, so real NFC composition sits under the hash: the
+    // composed string, its codepoint count (raw - 2) and the changed
+    // flag must all agree. NULL text stays NULL end-to-end (|| and
+    // nfc_normalize are null-propagating, like Spark's concat).
+    Key("q_text_normalize", q_text_normalize _,
+      """SELECT doc_id, length(raw) AS n_raw, length(nfc) AS n_nfc,
+        |  length(raw) <> length(nfc) AS changed, nfc AS text_nfc
+        |FROM (SELECT doc_id,
+        |        text || ' cafe' || chr(769) || ' la' || chr(776) || 'rm' AS raw,
+        |        nfc_normalize(text || ' cafe' || chr(769) || ' la' || chr(776) || 'rm') AS nfc
+        |      FROM documents)
+        |ORDER BY doc_id""".stripMargin),
+    // top-N vocabulary: exact long counts and running sum, one
+    // long/long division per share; (n DESC, term) has no ties (term
+    // unique post-group), so rank and the running-sum frame agree
+    Key("q_vocab", (s, d) => q_vocab(s, d),
+      """WITH t AS (SELECT unnest(string_split(text, ' ')) AS term
+        |           FROM documents WHERE text IS NOT NULL),
+        |v AS (SELECT term, count(*) AS n FROM t WHERE len(term) > 0 GROUP BY 1),
+        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS total_tokens FROM v),
+        |top AS (SELECT term, n FROM v ORDER BY n DESC, term LIMIT 100),
+        |r AS (SELECT term, CAST(n AS BIGINT) AS n,
+        |        CAST(row_number() OVER (ORDER BY n DESC, term) AS BIGINT) AS rank,
+        |        CAST(sum(n) OVER (ORDER BY n DESC, term) AS BIGINT) AS cum_n FROM top)
+        |SELECT rank, term, n,
+        |  round(CAST(n AS DOUBLE) / total_tokens, 10) AS share,
+        |  round(CAST(cum_n AS DOUBLE) / total_tokens, 10) AS cum_share
+        |FROM r, tot ORDER BY rank""".stripMargin),
+    // BPE merge-step: pair counting over the distinct vocab, weighted
+    // by word frequency; exact longs, ties (cnt DESC, pair)
+    Key("q_bpe", (s, d) => q_bpe(s, d),
+      """WITH t AS (SELECT unnest(string_split(text, ' ')) AS word
+        |           FROM documents WHERE text IS NOT NULL),
+        |w AS (SELECT word, count(*) AS n FROM t WHERE length(word) > 1 GROUP BY 1),
+        |p AS (SELECT unnest(list_transform(range(1, length(word)), i ->
+        |        substr(word, CAST(i AS INTEGER), 2))) AS pair, n
+        |      FROM w),
+        |a AS (SELECT pair, CAST(sum(n) AS BIGINT) AS cnt FROM p GROUP BY pair)
+        |SELECT CAST(row_number() OVER (ORDER BY cnt DESC, pair) AS BIGINT) AS rank,
+        |  pair, cnt
+        |FROM a ORDER BY cnt DESC, pair LIMIT 50""".stripMargin),
+    // char entropy: per-(doc,char) contributions are fixed-point longs
+    // (exact sum, order-free); final H is one deterministic double
+    // expression; + 0.0 normalizes −0.0 at the single-char boundary
+    Key("q_entropy", q_entropy _,
+      """WITH ch AS (SELECT doc_id, unnest(string_split(text, '')) AS c
+        |            FROM documents WHERE text IS NOT NULL),
+        |cc AS (SELECT doc_id, c, count(*) AS n FROM ch WHERE c <> '' GROUP BY 1, 2),
+        |a AS (SELECT doc_id,
+        |        CAST(sum(n) AS BIGINT) AS n_chars,
+        |        CAST(count(*) AS BIGINT) AS n_uniq_chars,
+        |        sum(CAST(round(CAST(n AS DOUBLE) * ln(CAST(n AS DOUBLE)) * 1e12) AS BIGINT)) AS s
+        |      FROM cc GROUP BY 1)
+        |SELECT d.doc_id,
+        |  CASE WHEN d.text IS NULL THEN NULL ELSE coalesce(a.n_chars, 0) END AS n_chars,
+        |  CASE WHEN d.text IS NULL THEN NULL ELSE coalesce(a.n_uniq_chars, 0) END AS n_uniq_chars,
+        |  CASE WHEN a.n_chars > 0 THEN
+        |    round(ln(CAST(a.n_chars AS DOUBLE)) - CAST(a.s AS DOUBLE) / 1e12 / a.n_chars, 6) + 0.0
+        |  END AS char_entropy
+        |FROM documents d LEFT JOIN a ON d.doc_id = a.doc_id
+        |ORDER BY d.doc_id""".stripMargin),
+    // n-gram novelty: per-doc distinct 3-gram df=1 fraction as a ×1e6
+    // round-half-up fixed-point BIGINT; list_distinct drops NULLs so
+    // null docs leave the gram stream exactly like the Spark
+    // isNotNull filter, and the left join re-emits them with NULLs
+    Key("q_ngram_novelty", q_ngram_novelty _,
+      """WITH sh AS (
+        |  SELECT doc_id, CASE WHEN len(w) >= 3
+        |    THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]
+        |    ELSE [text] END AS shingles
+        |  FROM (SELECT doc_id, text, string_split(text,' ') AS w FROM documents)),
+        |g AS (SELECT doc_id, unnest(list_distinct(shingles)) AS gram FROM sh),
+        |gd AS (SELECT gram, count(*) AS df FROM g GROUP BY gram),
+        |p AS (SELECT doc_id, count(*) AS n_grams,
+        |        CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unique
+        |      FROM g JOIN gd USING (gram) GROUP BY doc_id)
+        |SELECT d.doc_id, CAST(coalesce(p.n_grams, 0) AS BIGINT) AS n_grams,
+        |  CAST(coalesce(p.n_unique, 0) AS BIGINT) AS n_unique,
+        |  CAST((2 * p.n_unique * 1000000 + p.n_grams) // (2 * p.n_grams) AS BIGINT)
+        |    AS novelty_fp
+        |FROM documents d LEFT JOIN p USING (doc_id) ORDER BY d.doc_id""".stripMargin),
+    // hashed linear classifier: the "weights" are a deterministic
+    // integer function of the 1024 md5 buckets (Knuth multiplicative
+    // scramble into [-1000,1000]), so the oracle materializes the
+    // identical model; score is one IEEE division on exact operands
+    Key("q_quality_classifier", q_quality_classifier _, {
+      val bucket = s"(${duckHexValue("md5(tok)", 1, 15)}) % 1024"
+      s"""WITH t AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
+         |           FROM documents),
+         |b AS (SELECT doc_id, $bucket AS bucket FROM t),
+         |p AS (SELECT doc_id, count(*) AS n_toks,
+         |        CAST(sum((bucket * 2654435761) % 2001 - 1000) AS BIGINT) AS score_sum
+         |      FROM b GROUP BY doc_id)
+         |SELECT d.doc_id,
+         |  CAST(coalesce(p.n_toks, 0) AS BIGINT) AS n_toks,
+         |  CAST(coalesce(p.score_sum, 0) AS BIGINT) AS score_sum,
+         |  CASE WHEN p.n_toks > 0 THEN CAST(p.score_sum AS DOUBLE) / p.n_toks END AS score,
+         |  coalesce(p.score_sum, 0) > 0 AS accept
+         |FROM documents d LEFT JOIN p USING (doc_id) ORDER BY d.doc_id""".stripMargin
+    }),
+    // PII redaction over the deterministically-built access-log line
+    // (integer ids only — no float formatting); patterns live in the
+    // RE2 ∩ java.util.regex common subset; DuckDB needs the explicit
+    // 'g' flag for global replace (Spark regexp_replace is global)
+    Key("q_pii", q_pii _,
+      """WITH l AS (
+        |  SELECT event_id,
+        |    'user ' || CAST(user_id AS VARCHAR) || ' <u' || CAST(user_id AS VARCHAR)
+        |    || '@mail.example.com> did ' || event_type
+        |    || ' from 10.' || CAST(user_id % 256 AS VARCHAR)
+        |    || '.' || CAST(event_id % 256 AS VARCHAR)
+        |    || '.' || CAST((user_id + event_id) % 256 AS VARCHAR) AS line
+        |  FROM events)
+        |SELECT event_id,
+        |  CAST(len(regexp_extract_all(line, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+')) AS BIGINT) AS n_emails,
+        |  CAST(len(regexp_extract_all(line, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS n_ips,
+        |  CAST(len(regexp_extract_all(line, '\buser \d+\b')) AS BIGINT) AS n_user_ids,
+        |  regexp_replace(regexp_replace(regexp_replace(line,
+        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '[IP]', 'g'),
+        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+', '[EMAIL]', 'g'),
+        |    '\buser \d+\b', '[USER]', 'g') AS redacted
+        |FROM l ORDER BY event_id""".stripMargin),
+  )
 }

@@ -1,6 +1,8 @@
 package graft.queries
 
+import graft.SparkEntry.Key
 import graft.Tables._
+import graft.functions.HashFunctions.duckHexValue
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,7 +48,7 @@ object TimeSeries {
   /** Session windows: events grouped into per-user sessions separated
     * by >= 30 minutes of inactivity. Oracle-checked via the DuckDB
     * gaps-and-islands formulation (lag + cumulative flag over
-    * (user_id, ts) at microsecond precision) — see SparkEntry.oracleSql;
+    * (user_id, ts) at microsecond precision) — see its entry in [[keys]];
     * also covered by a unit test with hand-computed sessions.
     */
   def q_time_session(s: SparkSession, d: String): DataFrame =
@@ -1643,4 +1645,808 @@ object TimeSeries {
       .select("rn", "path", "n_sessions")
       .orderBy("rn")
   }
+
+  val keys: Seq[Key] = Seq(
+    // first-order Markov transition matrix over the per-user ordered
+    // event stream; probabilities x1e6 round-half-up per prev row
+    Key("q_transitions", q_transitions _,
+      """WITH o AS (SELECT user_id, event_id, event_type,
+        |         epoch_us(ts) // 1000000 AS es FROM events),
+        |p AS (SELECT event_type AS next_type,
+        |        lag(event_type) OVER
+        |          (PARTITION BY user_id ORDER BY es, event_id) AS prev_type
+        |      FROM o),
+        |c AS (SELECT prev_type, next_type, CAST(count(*) AS BIGINT) AS n
+        |      FROM p WHERE prev_type IS NOT NULL GROUP BY 1, 2),
+        |t AS (SELECT *, CAST(sum(n) OVER (PARTITION BY prev_type) AS BIGINT) AS tot
+        |      FROM c)
+        |SELECT prev_type, next_type, n,
+        |  (2 * n * 1000000 + tot) // (2 * tot) AS p_fp
+        |FROM t ORDER BY prev_type, next_type""".stripMargin),
+    // RFM: per-user purchase recency/frequency/cents with position
+    // quintiles from row_number ((rn-1)*5 // n + 1 — not ntile, whose
+    // remainder rule is engine lore), user-id tie-breaks throughout
+    Key("q_rfm", q_rfm _,
+      """WITH p AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
+        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+        |       FROM events WHERE event_type = 'purchase' AND value IS NOT NULL),
+        |per AS (SELECT user_id, max(day) AS last_day,
+        |          CAST(count(*) AS BIGINT) AS frequency,
+        |          CAST(sum(cents) AS BIGINT) AS monetary_c
+        |        FROM p GROUP BY 1),
+        |g AS (SELECT max(last_day) AS gmax, CAST(count(*) AS BIGINT) AS n_users
+        |      FROM per),
+        |b AS (SELECT user_id, gmax - last_day AS recency_days, frequency,
+        |        monetary_c, n_users FROM per, g),
+        |r AS (SELECT *,
+        |        CAST(row_number() OVER (ORDER BY recency_days ASC, user_id) AS BIGINT) AS rn_r,
+        |        CAST(row_number() OVER (ORDER BY frequency ASC, user_id) AS BIGINT) AS rn_f,
+        |        CAST(row_number() OVER (ORDER BY monetary_c ASC, user_id) AS BIGINT) AS rn_m
+        |      FROM b),
+        |sc AS (SELECT user_id, recency_days, frequency, monetary_c,
+        |         6 - (((rn_r - 1) * 5) // n_users + 1) AS r_score,
+        |         ((rn_f - 1) * 5) // n_users + 1 AS f_score,
+        |         ((rn_m - 1) * 5) // n_users + 1 AS m_score
+        |       FROM r)
+        |SELECT user_id, recency_days, frequency, monetary_c,
+        |  r_score, f_score, m_score,
+        |  r_score * 100 + f_score * 10 + m_score AS rfm_code
+        |FROM sc ORDER BY user_id""".stripMargin),
+    // 3-sigma hourly spike flags by integer cross-multiplication:
+    // (w*n-S)^2 > 9(w*Q-S^2), upward-only, 12-hour warm-up
+    Key("q_spikes", (s, d) => q_spikes(s, d),
+      """WITH h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+        |         CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2),
+        |w AS (SELECT event_type, hr, n,
+        |        CAST(count(*) OVER tw AS BIGINT) AS w,
+        |        CAST(sum(n) OVER tw AS BIGINT) AS s,
+        |        CAST(sum(n*n) OVER tw AS BIGINT) AS q
+        |      FROM h
+        |      WINDOW tw AS (PARTITION BY event_type ORDER BY hr
+        |        ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING))
+        |SELECT event_type, hr, n, w,
+        |  (w >= 12 AND (w*n - s)*(w*n - s) > 9*(w*q - s*s) AND n*w > s)
+        |    AS is_spike
+        |FROM w ORDER BY event_type, hr""".stripMargin),
+    // OLS daily-count trend over the dense day spine: exact integer
+    // moments, slope/intercept/r2 as one mirrored round(double,6)
+    // each (the q_zipf stance)
+    Key("q_trend", q_trend _,
+      """WITH dc AS (SELECT epoch_us(ts) // 86400000000 AS day,
+        |         CAST(count(*) AS BIGINT) AS y FROM events GROUP BY 1),
+        |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM dc),
+        |xy AS (SELECT CAST(s.day - b.d0 AS BIGINT) AS x,
+        |         CAST(coalesce(dc.y, 0) AS BIGINT) AS y
+        |       FROM (SELECT unnest(generate_series(d0, d1)) AS day FROM b) s
+        |       JOIN b ON TRUE LEFT JOIN dc ON s.day = dc.day),
+        |a AS (SELECT CAST(count(*) AS BIGINT) AS n_days,
+        |        CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+        |        CAST(sum(x*y) AS BIGINT) AS sxy,
+        |        CAST(sum(x*x) AS BIGINT) AS sxx,
+        |        CAST(sum(y*y) AS BIGINT) AS syy FROM xy)
+        |SELECT n_days, sx, sy, sxy, sxx, syy,
+        |  CASE WHEN n_days*sxx - sx*sx = 0 THEN NULL ELSE
+        |    round(CAST(n_days*sxy - sx*sy AS DOUBLE) /
+        |          CAST(n_days*sxx - sx*sx AS DOUBLE), 6) END AS slope,
+        |  CASE WHEN n_days*sxx - sx*sx = 0 THEN NULL ELSE
+        |    round(CAST(sy*sxx - sx*sxy AS DOUBLE) /
+        |          CAST(n_days*sxx - sx*sx AS DOUBLE), 6) END AS intercept,
+        |  CASE WHEN n_days*sxx - sx*sx = 0 OR n_days*syy - sy*sy = 0
+        |  THEN NULL ELSE
+        |    round(CAST(n_days*sxy - sx*sy AS DOUBLE) *
+        |          CAST(n_days*sxy - sx*sy AS DOUBLE) /
+        |          (CAST(n_days*sxx - sx*sx AS DOUBLE) *
+        |           CAST(n_days*syy - sy*sy AS DOUBLE)), 6) END AS r2
+        |FROM a""".stripMargin),
+    // hourly-count autocorrelation at lags 1..6 over the dense hour
+    // spine: mean cleared by x n^2, integer num/den, sign-separated
+    // x1e6 fixed point (Spark div truncates, DuckDB // floors — the
+    // division only ever sees non-negative operands)
+    Key("q_acf", (s, d) => q_acf(s, d),
+      """WITH hc AS (SELECT epoch_us(ts) // 3600000000 AS hr,
+        |         CAST(count(*) AS BIGINT) AS y FROM events GROUP BY 1),
+        |b AS (SELECT min(hr) AS h0, max(hr) AS h1 FROM hc),
+        |dense AS (SELECT s.hr, CAST(coalesce(hc.y, 0) AS BIGINT) AS y
+        |          FROM (SELECT unnest(generate_series(h0, h1)) AS hr FROM b) s
+        |          LEFT JOIN hc ON s.hr = hc.hr),
+        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
+        |          CAST(sum(y) AS BIGINT) AS s FROM dense),
+        |lg AS (SELECT unnest(generate_series(1, 6)) AS "lag"),
+        |pl AS (SELECT lg."lag", CAST(count(*) AS BIGINT) AS n_pairs,
+        |         CAST(sum((t.n*a.y - t.s) * (t.n*bb.y - t.s)) AS BIGINT) AS num
+        |       FROM lg JOIN dense a ON TRUE
+        |       JOIN dense bb ON bb.hr = a.hr + lg."lag", tot t
+        |       GROUP BY 1),
+        |den AS (SELECT CAST(sum((t.n*y - t.s)*(t.n*y - t.s)) AS BIGINT) AS den
+        |        FROM dense, tot t)
+        |SELECT pl."lag" AS "lag", pl.n_pairs, pl.num, den.den,
+        |  (CASE WHEN pl.num < 0 THEN -1 ELSE 1 END) *
+        |    ((2*abs(pl.num)*1000000 + den.den) // (2*den.den)) AS acf_fp
+        |FROM pl, den ORDER BY "lag"""".stripMargin),
+    // dow x hod seasonality: arithmetic dow from the epoch day
+    // ((day+4) mod 7, Sunday=0 — engine calendar functions disagree
+    // on numbering), dense 168-cell spine, x1e6 lift vs uniform
+    Key("q_seasonality", q_seasonality _,
+      """WITH c AS (SELECT ((epoch_us(ts) // 86400000000) + 4) % 7 AS dow,
+        |         (epoch_us(ts) // 3600000000) % 24 AS hod,
+        |         CAST(count(*) AS BIGINT) AS n_events
+        |       FROM events GROUP BY 1, 2),
+        |spine AS (SELECT d.dow, h.hod
+        |          FROM (SELECT unnest(generate_series(0, 6)) AS dow) d,
+        |               (SELECT unnest(generate_series(0, 23)) AS hod) h),
+        |tot AS (SELECT CAST(sum(n_events) AS BIGINT) AS tot FROM c)
+        |SELECT s.dow, s.hod,
+        |  CAST(coalesce(c.n_events, 0) AS BIGINT) AS n_events,
+        |  (2 * 168 * coalesce(c.n_events, 0) * 1000000 + t.tot)
+        |    // (2 * t.tot) AS lift_fp
+        |FROM spine s LEFT JOIN c ON s.dow = c.dow AND s.hod = c.hod, tot t
+        |ORDER BY s.dow, s.hod""".stripMargin),
+    // peak concurrent sessions per day: sweep-line over the session
+    // intervals (q_time_session's gaps-and-islands construction),
+    // ends before starts at equal t (half-open intervals), hourly
+    // carry partials + in-hour prefix sums
+    Key("q_concurrency", q_concurrency _,
+      """WITH ev AS (SELECT user_id, epoch_us(ts) AS eus FROM events),
+        |m AS (SELECT user_id, eus,
+        |  CASE WHEN lag(eus) OVER w IS NULL
+        |       OR eus - lag(eus) OVER w >= 1800000000 THEN 1 ELSE 0 END AS new_sess
+        |  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY eus)),
+        |g AS (SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY eus
+        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess FROM m),
+        |sessn AS (SELECT min(eus) AS s_us, max(eus) + 1800000000 AS e_us
+        |          FROM g GROUP BY user_id, sess),
+        |deltas AS (SELECT s_us AS t, CAST(1 AS BIGINT) AS delta FROM sessn
+        |           UNION ALL
+        |           SELECT e_us AS t, CAST(-1 AS BIGINT) AS delta FROM sessn),
+        |carry AS (SELECT hr, CAST(sum(d_h) OVER (ORDER BY hr
+        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |            - d_h AS BIGINT) AS carry
+        |          FROM (SELECT t // 3600000000 AS hr,
+        |                  CAST(sum(delta) AS BIGINT) AS d_h
+        |                FROM deltas GROUP BY 1)),
+        |run AS (SELECT d.t, d.delta,
+        |          c.carry + CAST(sum(d.delta) OVER (PARTITION BY d.t // 3600000000
+        |            ORDER BY d.t, d.delta
+        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+        |            AS open
+        |        FROM deltas d JOIN carry c ON d.t // 3600000000 = c.hr)
+        |SELECT t // 86400000000 AS day, CAST(count(*) AS BIGINT) AS n_changes,
+        |  max(open) AS peak
+        |FROM run GROUP BY 1 ORDER BY day""".stripMargin),
+    // EWMA (alpha=1/2, w=20 truncation): power-of-two weights make
+    // the smoothing exact integer arithmetic; renormalized by the
+    // actual weight total at the series-start warm-up
+    Key("q_ewma", (s, d) => q_ewma(s, d),
+      """WITH hc AS (SELECT epoch_us(ts) // 3600000000 AS hr,
+        |         CAST(count(*) AS BIGINT) AS y FROM events GROUP BY 1),
+        |b AS (SELECT min(hr) AS h0, max(hr) AS h1 FROM hc),
+        |dense AS (SELECT s.hr, CAST(coalesce(hc.y, 0) AS BIGINT) AS y
+        |          FROM (SELECT unnest(generate_series(h0, h1)) AS hr FROM b) s
+        |          LEFT JOIN hc ON s.hr = hc.hr),
+        |offs AS (SELECT o AS off,
+        |           CAST(1 AS BIGINT) << CAST(19 - o AS INT) AS wt
+        |         FROM (SELECT unnest(generate_series(0, 19)) AS o)),
+        |c AS (SELECT d.hr + o.off AS t, d.y, o.wt FROM dense d, offs o),
+        |a AS (SELECT c.t, CAST(sum(c.y * c.wt) AS BIGINT) AS num,
+        |        CAST(sum(c.wt) AS BIGINT) AS den
+        |      FROM c JOIN dense dd ON c.t = dd.hr GROUP BY 1)
+        |SELECT a.t AS hr, d.y, (2 * num * 1000000 + den) // (2 * den) AS ewma_fp
+        |FROM a JOIN dense d ON a.t = d.hr ORDER BY hr""".stripMargin),
+    // interval-overlap self-join over the session table: hour-binned
+    // (the range-binned idiom on a self-join), each pair credited
+    // once in the bin holding its overlap start; half-open overlap
+    Key("q_join_overlap", q_join_overlap _,
+      """WITH ev AS (SELECT user_id, epoch_us(ts) AS eus FROM events),
+        |m AS (SELECT user_id, eus,
+        |  CASE WHEN lag(eus) OVER w IS NULL
+        |       OR eus - lag(eus) OVER w >= 1800000000 THEN 1 ELSE 0 END AS new_sess
+        |  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY eus)),
+        |g AS (SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY eus
+        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess FROM m),
+        |sessn AS (SELECT user_id, min(eus) AS s_us, max(eus) + 1800000000 AS e_us
+        |          FROM g GROUP BY user_id, sess),
+        |bn AS (SELECT user_id, s_us, e_us,
+        |         unnest(generate_series(s_us // 3600000000,
+        |                               (e_us - 1) // 3600000000)) AS hr
+        |       FROM sessn),
+        |p AS (SELECT x.user_id AS user_a, y.user_id AS user_b,
+        |        least(x.e_us, y.e_us) - greatest(x.s_us, y.s_us) AS ov
+        |      FROM bn x JOIN bn y ON x.hr = y.hr
+        |        AND x.user_id < y.user_id
+        |        AND x.s_us < y.e_us AND y.s_us < x.e_us
+        |      WHERE x.hr = greatest(x.s_us, y.s_us) // 3600000000)
+        |SELECT user_a, user_b, CAST(count(*) AS BIGINT) AS n_overlaps,
+        |  CAST(sum(ov) AS BIGINT) AS total_overlap_us
+        |FROM p GROUP BY 1, 2 ORDER BY user_a, user_b""".stripMargin),
+    // two-proportion A/B z-test: exact integer counts/rates, pooled z
+    // pre-cleared to (x_a*n_b - x_b*n_a)*sqrt(n/(n_a*n_b*x*(n-x))) as
+    // the one mirrored round(double,6); degenerate splits -> NULL z
+    Key("q_ab_test", q_ab_test _,
+      """WITH per AS (SELECT user_id,
+        |         max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
+        |       FROM events GROUP BY 1),
+        |c AS (SELECT
+        |  CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
+        |  CAST(sum(CASE WHEN user_id % 2 = 0 THEN conv ELSE 0 END) AS BIGINT) AS x_a,
+        |  CAST(sum(CASE WHEN user_id % 2 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
+        |  CAST(sum(CASE WHEN user_id % 2 <> 0 THEN conv ELSE 0 END) AS BIGINT) AS x_b
+        |  FROM per)
+        |SELECT n_a, x_a, n_b, x_b,
+        |  CASE WHEN n_a = 0 THEN NULL ELSE
+        |    (2 * x_a * 1000000 + n_a) // (2 * n_a) END AS rate_a_fp,
+        |  CASE WHEN n_b = 0 THEN NULL ELSE
+        |    (2 * x_b * 1000000 + n_b) // (2 * n_b) END AS rate_b_fp,
+        |  CASE WHEN n_a = 0 OR n_b = 0 OR x_a + x_b = 0 OR
+        |    x_a + x_b = n_a + n_b THEN NULL ELSE
+        |    round(CAST(x_a*n_b - x_b*n_a AS DOUBLE) *
+        |      sqrt(CAST(n_a + n_b AS DOUBLE) /
+        |        (CAST(n_a AS DOUBLE) * n_b * (x_a + x_b) *
+        |         (n_a + n_b - x_a - x_b))), 6) END AS z
+        |FROM c""".stripMargin),
+    // cohort LTV: retention's cohort definition + exact integer cents,
+    // dense age spine, per-cohort cumulative, sign-separated div
+    Key("q_ltv", q_ltv _,
+      """WITH ev AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
+        |         event_type, value FROM events),
+        |coh AS (SELECT user_id, min(day) AS cohort_day FROM ev GROUP BY 1),
+        |sz AS (SELECT cohort_day, CAST(count(*) AS BIGINT) AS n_cohort
+        |       FROM coh GROUP BY 1),
+        |dm AS (SELECT max(day) AS d1 FROM ev),
+        |rev AS (SELECT c.cohort_day, e.day - c.cohort_day AS age,
+        |         CAST(sum(CAST(CAST(e.value AS DECIMAL(18,2)) * 100 AS BIGINT))
+        |           AS BIGINT) AS rev_c
+        |       FROM ev e JOIN coh c ON e.user_id = c.user_id
+        |       WHERE e.event_type = 'purchase' AND e.value IS NOT NULL
+        |       GROUP BY 1, 2),
+        |sp AS (SELECT sz.cohort_day, sz.n_cohort,
+        |         unnest(generate_series(0, dm.d1 - sz.cohort_day)) AS age
+        |       FROM sz, dm),
+        |j AS (SELECT sp.cohort_day, sp.age, sp.n_cohort,
+        |        CAST(coalesce(rev.rev_c, 0) AS BIGINT) AS rev_c
+        |      FROM sp LEFT JOIN rev ON sp.cohort_day = rev.cohort_day
+        |        AND sp.age = rev.age),
+        |cc AS (SELECT *, CAST(sum(rev_c) OVER (PARTITION BY cohort_day
+        |         ORDER BY age ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |         AS BIGINT) AS cum_rev_c FROM j)
+        |SELECT cohort_day, age, n_cohort, rev_c, cum_rev_c,
+        |  CASE WHEN cum_rev_c >= 0
+        |       THEN (2 * cum_rev_c + n_cohort) // (2 * n_cohort)
+        |       ELSE -((2 * abs(cum_rev_c) + n_cohort) // (2 * n_cohort)) END
+        |    AS ltv_c
+        |FROM cc ORDER BY cohort_day, age""".stripMargin),
+    // Kaplan-Meier: quantized-ln product via cumulative long sum,
+    // final-lifetime S = 0 emitted directly instead of ln(0)
+    Key("q_survival", q_survival _,
+      """WITH lf AS (SELECT user_id, max(d) - min(d) AS t
+        |       FROM (SELECT user_id, epoch_us(ts) // 86400000000 AS d
+        |             FROM events) GROUP BY 1),
+        |dd AS (SELECT t, CAST(count(*) AS BIGINT) AS d FROM lf GROUP BY 1),
+        |tt AS (SELECT CAST(sum(d) AS BIGINT) AS n_users FROM dd),
+        |rk AS (SELECT t, d, n_users -
+        |         (CAST(sum(d) OVER (ORDER BY t
+        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |            AS BIGINT) - d) AS n_risk
+        |       FROM dd, tt),
+        |lq AS (SELECT t, d, n_risk,
+        |        CASE WHEN n_risk > d THEN
+        |          CAST(round(ln(CAST(n_risk - d AS DOUBLE) / n_risk) * 1e9)
+        |            AS BIGINT) ELSE 0 END AS lq
+        |      FROM rk),
+        |cl AS (SELECT *, CAST(sum(lq) OVER (ORDER BY t
+        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |         AS BIGINT) AS cum_lq FROM lq)
+        |SELECT t AS t_days, n_risk, d,
+        |  CASE WHEN n_risk = d THEN 0 ELSE
+        |    CAST(round(exp(CAST(cum_lq AS DOUBLE) / 1e9) * 1e6) AS BIGINT) END
+        |    AS km_fp
+        |FROM cl ORDER BY t_days""".stripMargin),
+    // additive decomposition: full-window 25h MA trend, exact x1e6
+    // detrending, sign-separated per-hod seasonal mean
+    Key("q_decompose", q_decompose _,
+      """WITH hc AS (SELECT epoch_us(ts) // 3600000000 AS hr,
+        |         CAST(count(*) AS BIGINT) AS y FROM events GROUP BY 1),
+        |b AS (SELECT min(hr) AS h0, max(hr) AS h1 FROM hc),
+        |dense AS (SELECT s.hr, CAST(coalesce(hc.y, 0) AS BIGINT) AS y
+        |          FROM (SELECT unnest(generate_series(h0, h1)) AS hr FROM b) s
+        |          LEFT JOIN hc ON s.hr = hc.hr),
+        |ma AS (SELECT hr, y, CAST(count(*) OVER wd AS BIGINT) AS w_n,
+        |         CAST(sum(y) OVER wd AS BIGINT) AS w_s
+        |       FROM dense WINDOW wd AS (ORDER BY hr
+        |         ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
+        |dt AS (SELECT hr, y,
+        |         CASE WHEN w_n = 25 THEN (2 * w_s * 1000000 + 25) // 50 END
+        |           AS trend_fp,
+        |         y * 1000000 - CASE WHEN w_n = 25
+        |           THEN (2 * w_s * 1000000 + 25) // 50 END AS det_fp
+        |       FROM ma),
+        |se AS (SELECT hod, CASE WHEN sd >= 0 THEN (2*sd + nd) // (2*nd)
+        |         ELSE -((2*abs(sd) + nd) // (2*nd)) END AS seasonal_fp
+        |       FROM (SELECT hr % 24 AS hod, CAST(sum(det_fp) AS BIGINT) AS sd,
+        |               CAST(count(*) AS BIGINT) AS nd
+        |             FROM dt WHERE det_fp IS NOT NULL GROUP BY 1))
+        |SELECT dt.hr, dt.y, dt.trend_fp,
+        |  CASE WHEN dt.det_fp IS NOT NULL THEN se.seasonal_fp END AS seasonal_fp,
+        |  dt.det_fp - se.seasonal_fp AS resid_fp
+        |FROM dt JOIN se ON dt.hr % 24 = se.hod
+        |ORDER BY dt.hr""".stripMargin),
+    // Seasonal-naive MASE backtest on the dense per-type hour spine;
+    // the MASE double fraction cleared by cross-multiplication into
+    // the (2a+d) // 2d round-half-up fixed point
+    Key("q_forecast", (s, d) => q_forecast(s, d),
+      """WITH hc AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+        |         CAST(count(*) AS BIGINT) AS y FROM events GROUP BY 1, 2),
+        |b AS (SELECT min(hr) AS h0, max(hr) AS h1 FROM hc),
+        |dense AS (SELECT t.event_type, s.hr, b.h1,
+        |            CAST(coalesce(hc.y, 0) AS BIGINT) AS y
+        |          FROM (SELECT DISTINCT event_type FROM hc) t
+        |          CROSS JOIN b
+        |          CROSS JOIN (SELECT unnest(generate_series(
+        |            (SELECT h0 FROM b), (SELECT h1 FROM b))) AS hr) s
+        |          LEFT JOIN hc ON hc.event_type = t.event_type
+        |                      AND hc.hr = s.hr),
+        |l AS (SELECT event_type, hr, h1, y,
+        |        abs(y - lag(y, 24) OVER w) AS nav,
+        |        abs(y - lag(y, 1) OVER w) AS stp,
+        |        hr > h1 - 48 AS is_test
+        |      FROM dense WINDOW w AS (PARTITION BY event_type ORDER BY hr)),
+        |a AS (SELECT event_type,
+        |        CAST(count(CASE WHEN is_test AND nav IS NOT NULL
+        |                   THEN 1 END) AS BIGINT) AS n_test,
+        |        CAST(sum(CASE WHEN is_test THEN nav END) AS BIGINT) AS e_sum,
+        |        CAST(count(CASE WHEN NOT is_test AND stp IS NOT NULL
+        |                   THEN 1 END) AS BIGINT) AS n_train,
+        |        CAST(sum(CASE WHEN NOT is_test THEN stp END) AS BIGINT)
+        |          AS d_sum
+        |      FROM l GROUP BY 1)
+        |SELECT event_type, n_test, e_sum, n_train, d_sum,
+        |  CASE WHEN d_sum > 0
+        |    THEN (2 * e_sum * n_train * 1000000 + n_test * d_sum)
+        |         // (2 * n_test * d_sum) END AS mase_fp
+        |FROM a ORDER BY event_type""".stripMargin),
+    // Spearman with average ranks kept integral (2r = 2·min_rank +
+    // tie_count − 1) and CENTERED (x = 2r − (n+1)) so every moment
+    // stays under n³ — rho is the one mirrored double expression
+    Key("q_spearman", q_spearman _,
+      """WITH ev AS (SELECT event_type,
+        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v,
+        |         (epoch_us(ts) // 3600000000) % 24 AS hod
+        |       FROM events WHERE value IS NOT NULL),
+        |r AS (SELECT event_type,
+        |        count(*) OVER (PARTITION BY event_type) AS n,
+        |        rank() OVER (PARTITION BY event_type ORDER BY v) AS fa,
+        |        count(*) OVER (PARTITION BY event_type, v) AS ca,
+        |        rank() OVER (PARTITION BY event_type ORDER BY hod) AS fb,
+        |        count(*) OVER (PARTITION BY event_type, hod) AS cb
+        |      FROM ev),
+        |x AS (SELECT event_type, n,
+        |        2 * fa + ca - 1 - (n + 1) AS xa,
+        |        2 * fb + cb - 1 - (n + 1) AS xb FROM r),
+        |a AS (SELECT event_type, CAST(max(n) AS BIGINT) AS n,
+        |        CAST(sum(xa * xb) AS BIGINT) AS sxy,
+        |        CAST(sum(xa * xa) AS BIGINT) AS sxx,
+        |        CAST(sum(xb * xb) AS BIGINT) AS syy
+        |      FROM x GROUP BY 1)
+        |SELECT event_type, n, sxy, sxx, syy,
+        |  CASE WHEN sxx > 0 AND syy > 0
+        |    THEN round(sxy / (sqrt(sxx) * sqrt(syy)), 6) END AS rho
+        |FROM a ORDER BY event_type""".stripMargin),
+    // Poisson bootstrap: replicate weights from the shared md5-nibble
+    // 52-bit uniform against ⌊CDF_Poisson(1)·2^52⌋ integer thresholds —
+    // both engines compare identical longs, so every weight matches
+    // bit-for-bit; sums re-cast to BIGINT (DuckDB sum(BIGINT) widens
+    // to HUGEINT — the q_corpus_report lesson).
+    Key("q_bootstrap", (s, d) => q_bootstrap(s, d), {
+      val h = "md5(CAST(event_id AS VARCHAR) || ':' || CAST(rep AS VARCHAR))"
+      val u = duckHexValue(h, 1, 13)
+      val ts = Seq(1656781714176974L, 3313563428353948L, 4141954285442435L,
+        4418084571138597L, 4487117142562638L, 4500923656847446L,
+        4503224742561580L, 4503553469092171L)
+      val caseCnt = ts.zipWithIndex.map { case (t, k) =>
+        s"WHEN $u < $t THEN $k" }.mkString("CASE ", " ", " ELSE 8 END")
+      s"""WITH base AS (SELECT event_type, event_id,
+        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+        |       FROM events WHERE value IS NOT NULL),
+        |r AS (SELECT base.*, rep FROM base
+        |      CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS rep)),
+        |w AS (SELECT event_type, rep, cents,
+        |        CAST($caseCnt AS BIGINT) AS cnt FROM r),
+        |bm AS (SELECT event_type, rep,
+        |         CAST(sum(cnt * cents) AS BIGINT) AS num,
+        |         CAST(sum(cnt) AS BIGINT) AS den
+        |       FROM w GROUP BY 1, 2),
+        |mm AS (SELECT event_type, rep,
+        |         (2 * num * 10000 + den) // (2 * den) AS m_fp
+        |       FROM bm WHERE den > 0),
+        |rk AS (SELECT event_type, m_fp,
+        |         row_number() OVER (PARTITION BY event_type
+        |           ORDER BY m_fp, rep) AS rn,
+        |         count(*) OVER (PARTITION BY event_type) AS nb
+        |       FROM mm),
+        |ci AS (SELECT event_type,
+        |         max(CASE WHEN rn = 2 THEN m_fp END) AS boot_lo_fp,
+        |         max(CASE WHEN rn = nb - 1 THEN m_fp END) AS boot_hi_fp
+        |       FROM rk GROUP BY 1),
+        |f AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+        |        CAST(sum(cents) AS BIGINT) AS s FROM base GROUP BY 1)
+        |SELECT f.event_type, f.n, (2 * s * 10000 + n) // (2 * n) AS mean_fp,
+        |  ci.boot_lo_fp, ci.boot_hi_fp
+        |FROM f LEFT JOIN ci ON f.event_type = ci.event_type
+        |ORDER BY f.event_type""".stripMargin
+    }),
+    // Attribution oracle: the O(purchases × touches-per-user)
+    // inequality join + row_number form — correct and simple at oracle
+    // scale; the Spark side is the one-exchange windowed form.
+    Key("q_attribution", q_attribution _,
+      """WITH ev AS (SELECT user_id, event_id, event_type,
+        |         epoch_us(ts) AS tu,
+        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+        |       FROM events),
+        |p AS (SELECT user_id, event_id, tu, cents FROM ev
+        |      WHERE event_type = 'purchase'),
+        |t AS (SELECT user_id, event_id, tu, event_type FROM ev
+        |      WHERE event_type IN ('signup', 'view', 'click')),
+        |pair AS (SELECT p.event_id AS pid, t.event_type, t.tu,
+        |           t.event_id AS tid
+        |         FROM p JOIN t ON p.user_id = t.user_id
+        |          AND (t.tu < p.tu OR (t.tu = p.tu AND t.event_id < p.event_id))),
+        |rk AS (SELECT pid, event_type,
+        |         row_number() OVER (PARTITION BY pid ORDER BY tu, tid) AS rf,
+        |         row_number() OVER (PARTITION BY pid
+        |           ORDER BY tu DESC, tid DESC) AS rl
+        |       FROM pair),
+        |fst AS (SELECT pid, event_type FROM rk WHERE rf = 1),
+        |lst AS (SELECT pid, event_type FROM rk WHERE rl = 1),
+        |m AS (SELECT 'first' AS model,
+        |        coalesce(fst.event_type, '(none)') AS touch_type, p.cents
+        |      FROM p LEFT JOIN fst ON fst.pid = p.event_id
+        |      UNION ALL
+        |      SELECT 'last', coalesce(lst.event_type, '(none)'), p.cents
+        |      FROM p LEFT JOIN lst ON lst.pid = p.event_id)
+        |SELECT model, touch_type, CAST(count(*) AS BIGINT) AS n_conv,
+        |  CAST(sum(cents) AS BIGINT) AS revenue_cents
+        |FROM m GROUP BY model, touch_type
+        |ORDER BY model, touch_type""".stripMargin),
+    // Basket mining over sessions: same sessionization CTE as
+    // q_session_paths; pairs via DISTINCT (sess, type) self-join
+    // (quadratic is fine at oracle scale — the Spark side builds
+    // pairs row-locally from the sorted basket array)
+    Key("q_basket", q_basket _,
+      """WITH ev AS (SELECT user_id, event_id, event_type,
+        |         epoch_us(ts) AS tu FROM events),
+        |g AS (SELECT *, CASE WHEN lag(tu) OVER w IS NULL
+        |           OR tu - lag(tu) OVER w > 1800000000 THEN 1 ELSE 0 END
+        |         AS new_s
+        |      FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY tu, event_id)),
+        |s AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id
+        |        ORDER BY tu, event_id ROWS UNBOUNDED PRECEDING) AS sess_id
+        |      FROM g),
+        |bt AS (SELECT DISTINCT user_id, sess_id, event_type FROM s),
+        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_sessions
+        |        FROM (SELECT DISTINCT user_id, sess_id FROM s)),
+        |sg AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_t
+        |       FROM bt GROUP BY 1),
+        |pr AS (SELECT x.event_type AS a, y.event_type AS b,
+        |         CAST(count(*) AS BIGINT) AS n_ab
+        |       FROM bt x JOIN bt y ON x.user_id = y.user_id
+        |         AND x.sess_id = y.sess_id AND x.event_type < y.event_type
+        |       GROUP BY 1, 2)
+        |SELECT pr.a, pr.b, pr.n_ab, sa.n_t AS n_a, sb.n_t AS n_b,
+        |  tot.n_sessions,
+        |  (2 * pr.n_ab * 1000000 + tot.n_sessions)
+        |    // (2 * tot.n_sessions) AS support_fp,
+        |  (2 * pr.n_ab * tot.n_sessions * 1000000 + sa.n_t * sb.n_t)
+        |    // (2 * sa.n_t * sb.n_t) AS lift_fp
+        |FROM pr JOIN sg sa ON pr.a = sa.event_type
+        |        JOIN sg sb ON pr.b = sb.event_type, tot
+        |ORDER BY pr.a, pr.b""".stripMargin),
+    // Session paths: 30-min-gap sessionization via the lag-flag cumsum
+    // (engine-neutral, unlike session_window's internal ids); in-path
+    // order pinned by ORDER BY inside string_agg ↔ array_sort structs.
+    Key("q_session_paths", (s, d) => q_session_paths(s, d),
+      """WITH ev AS (SELECT user_id, event_id, event_type,
+        |         epoch_us(ts) AS tu FROM events),
+        |g AS (SELECT *, CASE WHEN lag(tu) OVER w IS NULL
+        |           OR tu - lag(tu) OVER w > 1800000000 THEN 1 ELSE 0 END
+        |         AS new_s
+        |      FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY tu, event_id)),
+        |s AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id
+        |        ORDER BY tu, event_id ROWS UNBOUNDED PRECEDING) AS sess_id
+        |      FROM g),
+        |p AS (SELECT string_agg(event_type, '>' ORDER BY tu, event_id) AS path
+        |      FROM s GROUP BY user_id, sess_id),
+        |c AS (SELECT path, CAST(count(*) AS BIGINT) AS n_sessions
+        |      FROM p GROUP BY path),
+        |r AS (SELECT CAST(row_number() OVER (ORDER BY n_sessions DESC, path)
+        |         AS BIGINT) AS rn, path, n_sessions FROM c)
+        |SELECT rn, path, n_sessions FROM r WHERE rn <= 20
+        |ORDER BY rn""".stripMargin),
+    // CUSUM via the max-prefix identity S_t = P_t - min prefix; mean
+    // cleared by x n (the q_acf trick); 5-sigma decision integer-only
+    // via cusum^2 > 25(nQ - S^2)
+    Key("q_cusum", q_cusum _,
+      """WITH hc AS (SELECT epoch_us(ts) // 3600000000 AS hr,
+        |         CAST(count(*) AS BIGINT) AS y FROM events GROUP BY 1),
+        |b AS (SELECT min(hr) AS h0, max(hr) AS h1 FROM hc),
+        |dense AS (SELECT s.hr, CAST(coalesce(hc.y, 0) AS BIGINT) AS y
+        |          FROM (SELECT unnest(generate_series(h0, h1)) AS hr FROM b) s
+        |          LEFT JOIN hc ON s.hr = hc.hr),
+        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
+        |          CAST(sum(y) AS BIGINT) AS s,
+        |          CAST(sum(y*y) AS BIGINT) AS q FROM dense),
+        |pp AS (SELECT hr, y, n, s, q,
+        |         CAST(sum(n*y - s) OVER (ORDER BY hr
+        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |           AS BIGINT) AS p
+        |       FROM dense, tot),
+        |m AS (SELECT hr, y, n, s, q, p,
+        |        min(p) OVER (ORDER BY hr
+        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mn,
+        |        max(p) OVER (ORDER BY hr
+        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mx
+        |      FROM pp)
+        |SELECT hr, y, p - mn AS cusum_up, mx - p AS cusum_dn,
+        |  (p - mn)*(p - mn) > 25*(n*q - s*s) AS up_flag,
+        |  (mx - p)*(mx - p) > 25*(n*q - s*s) AS dn_flag
+        |FROM m ORDER BY hr""".stripMargin),
+    // Mann-Kendall: exact pair-sign sum over the dense day spine,
+    // tie-corrected var x18, continuity-corrected z as the one
+    // mirrored round(double,6)
+    Key("q_mk_trend", q_mk_trend _,
+      """WITH dc AS (SELECT epoch_us(ts) // 86400000000 AS day,
+        |         CAST(count(*) AS BIGINT) AS y FROM events GROUP BY 1),
+        |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM dc),
+        |dense AS (SELECT s.day, CAST(coalesce(dc.y, 0) AS BIGINT) AS y
+        |          FROM (SELECT unnest(generate_series(d0, d1)) AS day FROM b) s
+        |          LEFT JOIN dc ON s.day = dc.day),
+        |sp AS (SELECT CAST(coalesce(sum(CASE WHEN bj.y > ai.y THEN 1
+        |                 WHEN bj.y < ai.y THEN -1 ELSE 0 END), 0) AS BIGINT)
+        |         AS s_mk
+        |       FROM dense ai JOIN dense bj ON ai.day < bj.day),
+        |ti AS (SELECT CAST(sum(t) AS BIGINT) AS n_days,
+        |         CAST(sum(t*(t-1)*(2*t+5)) AS BIGINT) AS t18
+        |       FROM (SELECT y, CAST(count(*) AS BIGINT) AS t
+        |             FROM dense GROUP BY 1))
+        |SELECT ti.n_days, sp.s_mk,
+        |  ti.n_days*(ti.n_days-1)*(2*ti.n_days+5) - ti.t18 AS var18,
+        |  CASE WHEN ti.n_days*(ti.n_days-1)*(2*ti.n_days+5) - ti.t18 <= 0
+        |       THEN NULL
+        |       WHEN sp.s_mk > 0 THEN round((sp.s_mk - 1) * sqrt(18.0 /
+        |         (ti.n_days*(ti.n_days-1)*(2*ti.n_days+5) - ti.t18)), 6)
+        |       WHEN sp.s_mk < 0 THEN round((sp.s_mk + 1) * sqrt(18.0 /
+        |         (ti.n_days*(ti.n_days-1)*(2*ti.n_days+5) - ti.t18)), 6)
+        |       ELSE 0.0 END AS z
+        |FROM sp, ti""".stripMargin),
+    // Benford first digit from the decimal STRING of positive cents
+    // (engine-neutral; float log10 paths are not); expectations are
+    // pinned x1e6 literals
+    Key("q_benford", q_benford _,
+      """WITH d AS (SELECT substr(CAST(c AS VARCHAR), 1, 1) AS dg
+        |       FROM (SELECT CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
+        |               AS c FROM events WHERE value IS NOT NULL)
+        |       WHERE c > 0),
+        |c AS (SELECT CAST(dg AS BIGINT) AS digit, CAST(count(*) AS BIGINT) AS n
+        |      FROM d GROUP BY 1),
+        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM c),
+        |e(digit, benford_fp) AS (VALUES (1, 301030), (2, 176091),
+        |  (3, 124939), (4, 96910), (5, 79181), (6, 66947), (7, 57992),
+        |  (8, 51153), (9, 45757))
+        |SELECT CAST(e.digit AS BIGINT) AS digit,
+        |  CAST(coalesce(c.n, 0) AS BIGINT) AS n,
+        |  (2 * coalesce(c.n, 0) * 1000000 + t.tot) // (2 * t.tot) AS share_fp,
+        |  CAST(e.benford_fp AS BIGINT) AS benford_fp,
+        |  abs((2 * coalesce(c.n, 0) * 1000000 + t.tot) // (2 * t.tot)
+        |      - e.benford_fp) AS dev_fp
+        |FROM e LEFT JOIN c ON e.digit = c.digit, tot t
+        |ORDER BY digit""".stripMargin),
+    // winsorized mean per type: float-free p10/p90 cuts on the value-
+    // count table, clamp re-aggregates counts, round-half-up cents
+    // with sign separation (value cents can be negative)
+    Key("q_winsorize", q_winsorize _,
+      """WITH vc AS (SELECT event_type,
+        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c,
+        |         CAST(count(*) AS BIGINT) AS n
+        |       FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+        |tot AS (SELECT event_type, CAST(sum(n) AS BIGINT) AS nr,
+        |          CAST(sum(c*n) AS BIGINT) AS s_raw FROM vc GROUP BY 1),
+        |cum AS (SELECT event_type, c,
+        |          CAST(sum(n) OVER (PARTITION BY event_type ORDER BY c
+        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |            AS BIGINT) AS cum
+        |        FROM vc),
+        |p10 AS (SELECT cum.event_type, min(c) AS p10_c FROM cum
+        |        JOIN tot ON cum.event_type = tot.event_type
+        |        WHERE cum * 100 >= nr * 10 GROUP BY 1),
+        |p90 AS (SELECT cum.event_type, min(c) AS p90_c FROM cum
+        |        JOIN tot ON cum.event_type = tot.event_type
+        |        WHERE cum * 100 >= nr * 90 GROUP BY 1),
+        |w AS (SELECT vc.event_type, CAST(sum(n) AS BIGINT) AS n,
+        |        CAST(sum(greatest(least(c, p90_c), p10_c) * n) AS BIGINT) AS s_w,
+        |        any_value(p10_c) AS p10_c, any_value(p90_c) AS p90_c
+        |      FROM vc JOIN p10 ON vc.event_type = p10.event_type
+        |              JOIN p90 ON vc.event_type = p90.event_type
+        |      GROUP BY 1)
+        |SELECT w.event_type, w.n, w.p10_c, w.p90_c,
+        |  CASE WHEN t.s_raw >= 0 THEN (2 * t.s_raw + w.n) // (2 * w.n)
+        |       ELSE -((2 * abs(t.s_raw) + w.n) // (2 * w.n)) END AS mean_c,
+        |  CASE WHEN w.s_w >= 0 THEN (2 * w.s_w + w.n) // (2 * w.n)
+        |       ELSE -((2 * abs(w.s_w) + w.n) // (2 * w.n)) END AS wmean_c
+        |FROM w JOIN tot t ON w.event_type = t.event_type
+        |ORDER BY w.event_type""".stripMargin),
+    // Fano factor per event type over the global dense hour spine:
+    // F = (wQ - S^2)/(wS) on exact longs, x1e6 round-half-up (the
+    // numerator is >= 0 by Cauchy-Schwarz, no sign handling)
+    Key("q_burstiness", q_burstiness _,
+      """WITH hc AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+        |         CAST(count(*) AS BIGINT) AS y FROM events GROUP BY 1, 2),
+        |b AS (SELECT min(hr) AS h0, max(hr) AS h1 FROM hc),
+        |ty AS (SELECT DISTINCT event_type FROM hc),
+        |sp AS (SELECT ty.event_type, s.hr FROM ty,
+        |         (SELECT unnest(generate_series(h0, h1)) AS hr FROM b) s),
+        |dn AS (SELECT sp.event_type, CAST(coalesce(hc.y, 0) AS BIGINT) AS y
+        |       FROM sp LEFT JOIN hc
+        |         ON sp.event_type = hc.event_type AND sp.hr = hc.hr),
+        |a AS (SELECT event_type, CAST(count(*) AS BIGINT) AS w,
+        |        CAST(sum(y) AS BIGINT) AS n_events,
+        |        CAST(sum(y*y) AS BIGINT) AS q FROM dn GROUP BY 1)
+        |SELECT event_type, w, n_events,
+        |  (2 * (w*q - n_events*n_events) * 1000000 + w*n_events)
+        |    // (2 * w*n_events) AS fano_fp
+        |FROM a ORDER BY event_type""".stripMargin),
+    // inter-arrival gaps per type: lag micros with (ts, event_id)
+    // tie-break, float-free cum*100 >= n*p percentiles, round-half-up
+    // integer mean
+    Key("q_gap_stats", q_gap_stats _,
+      """WITH ev AS (SELECT event_type, epoch_us(ts) AS tu, event_id FROM events),
+        |g AS (SELECT event_type, tu - lag(tu) OVER
+        |        (PARTITION BY event_type ORDER BY tu, event_id) AS gap
+        |      FROM ev),
+        |gc AS (SELECT event_type, gap, CAST(count(*) AS BIGINT) AS c
+        |       FROM g WHERE gap IS NOT NULL GROUP BY 1, 2),
+        |tot AS (SELECT event_type, CAST(sum(c) AS BIGINT) AS n_gaps,
+        |          min(gap) AS min_gap, max(gap) AS max_gap,
+        |          CAST(sum(gap*c) AS BIGINT) AS s_gap FROM gc GROUP BY 1),
+        |cum AS (SELECT event_type, gap,
+        |          CAST(sum(c) OVER (PARTITION BY event_type ORDER BY gap
+        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |            AS BIGINT) AS cum
+        |        FROM gc),
+        |p50 AS (SELECT c.event_type, min(c.gap) AS p50_gap FROM cum c
+        |        JOIN tot t ON c.event_type = t.event_type
+        |        WHERE c.cum * 100 >= t.n_gaps * 50 GROUP BY 1),
+        |p90 AS (SELECT c.event_type, min(c.gap) AS p90_gap FROM cum c
+        |        JOIN tot t ON c.event_type = t.event_type
+        |        WHERE c.cum * 100 >= t.n_gaps * 90 GROUP BY 1)
+        |SELECT t.event_type, t.n_gaps, t.min_gap, p50.p50_gap, p90.p90_gap,
+        |  t.max_gap, (2 * t.s_gap + t.n_gaps) // (2 * t.n_gaps) AS mean_gap
+        |FROM tot t JOIN p50 ON t.event_type = p50.event_type
+        |           JOIN p90 ON t.event_type = p90.event_type
+        |ORDER BY t.event_type""".stripMargin),
+    Key("q_time_tumble", q_time_tumble _,
+      """SELECT CAST(date_part('epoch', date_trunc('hour', ts)) AS BIGINT) AS w_start,
+        |  event_type, count(*) AS n, CAST(round(sum(CAST(value AS DECIMAL(18,2))),2) AS DOUBLE) AS sum_value
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    // OHLC bars: exact cents, first/last by the (ts, event_id) total
+    // order via two opposite-sort row_numbers, one grouped agg
+    Key("q_ohlc", q_ohlc _,
+      """WITH b AS (SELECT
+        |    CAST(date_part('epoch', date_trunc('hour', ts)) AS BIGINT) AS w_start,
+        |    event_type, ts, event_id,
+        |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
+        |  FROM events),
+        |r AS (SELECT *,
+        |    row_number() OVER (PARTITION BY w_start, event_type
+        |      ORDER BY ts, event_id) AS rf,
+        |    row_number() OVER (PARTITION BY w_start, event_type
+        |      ORDER BY ts DESC, event_id DESC) AS rl
+        |  FROM b)
+        |SELECT w_start, event_type, count(*) AS n,
+        |  CAST(max(CASE WHEN rf = 1 THEN c END) AS BIGINT) AS open_cents,
+        |  CAST(max(c) AS BIGINT) AS high_cents,
+        |  CAST(min(c) AS BIGINT) AS low_cents,
+        |  CAST(max(CASE WHEN rl = 1 THEN c END) AS BIGINT) AS close_cents
+        |FROM r GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Key("q_time_slide", q_time_slide _,
+      """SELECT ((epoch_us(ts) // 900000000) * 900 - t.k * 900) AS w_start,
+        |  event_type, count(*) AS n, CAST(round(sum(CAST(value AS DECIMAL(18,2))),2) AS DOUBLE) AS sum_value
+        |FROM events, (VALUES (0),(1),(2),(3)) t(k)
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Key("q_retention", q_retention _,
+      """WITH ud AS (SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day FROM events),
+        |c AS (SELECT user_id, min(day) AS cohort_day FROM ud GROUP BY 1),
+        |s AS (SELECT cohort_day, count(*) AS n_cohort FROM c GROUP BY 1),
+        |a AS (SELECT cohort_day, day - cohort_day AS day_offset, count(*) AS n_active
+        |      FROM ud JOIN c USING (user_id) GROUP BY 1, 2)
+        |SELECT a.cohort_day, a.day_offset, a.n_active, s.n_cohort,
+        |  (2 * a.n_active * 1000000 + s.n_cohort) // (2 * s.n_cohort) AS retention_fp
+        |FROM a JOIN s USING (cohort_day)
+        |ORDER BY cohort_day, day_offset""".stripMargin),
+    Key("q_funnel", q_funnel _,
+      s"""WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS tu FROM events),
+        |s1 AS (SELECT user_id, min(tu) AS t1 FROM ev WHERE event_type = 'signup' GROUP BY 1),
+        |s2 AS (SELECT e.user_id, t1, min(tu) AS t2 FROM ev e JOIN s1 USING (user_id)
+        |       WHERE event_type = 'view' AND tu > t1
+        |         AND tu <= t1 + ${FunnelWindowMicros} GROUP BY 1, 2),
+        |s3 AS (SELECT e.user_id, t1, min(tu) AS t3 FROM ev e JOIN s2 USING (user_id)
+        |       WHERE event_type = 'click' AND tu > t2
+        |         AND tu <= t1 + ${FunnelWindowMicros} GROUP BY 1, 2),
+        |s4 AS (SELECT e.user_id, min(tu) AS t4 FROM ev e JOIN s3 USING (user_id)
+        |       WHERE event_type = 'purchase' AND tu > t3
+        |         AND tu <= t1 + ${FunnelWindowMicros} GROUP BY 1),
+        |n AS (SELECT 1 AS stage_idx, 'signup' AS stage, (SELECT count(*) FROM s1) AS n_users
+        |      UNION ALL SELECT 2, 'view', (SELECT count(*) FROM s2)
+        |      UNION ALL SELECT 3, 'click', (SELECT count(*) FROM s3)
+        |      UNION ALL SELECT 4, 'purchase', (SELECT count(*) FROM s4)),
+        |r AS (SELECT CAST(stage_idx AS BIGINT) AS stage_idx, stage, n_users,
+        |  coalesce((2 * n_users * 1000000 + lag(n_users) OVER (ORDER BY stage_idx))
+        |    // (2 * lag(n_users) OVER (ORDER BY stage_idx)), 1000000) AS conv_prev_fp,
+        |  (2 * n_users * 1000000 + first_value(n_users) OVER (ORDER BY stage_idx))
+        |    // (2 * first_value(n_users) OVER (ORDER BY stage_idx)) AS conv_first_fp
+        |FROM n)
+        |SELECT * FROM r WHERE n_users > 0 ORDER BY stage_idx""".stripMargin),
+    // 32 shared equi-width buckets over global [min,max] cents; all
+    // integer floor division on non-negative operands
+    Key("q_value_hist", (s, d) => q_value_hist(s, d),
+      """WITH e AS (SELECT event_type,
+        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
+        |       FROM events WHERE value IS NOT NULL),
+        |b AS (SELECT min(c) AS min_c, max(c) AS max_c FROM e),
+        |g AS (SELECT event_type, (c - min_c) * 32 // (max_c - min_c + 1) AS bucket,
+        |        min_c, max_c
+        |      FROM e, b)
+        |SELECT event_type, bucket,
+        |  min_c + (bucket * (max_c - min_c + 1)) // 32 AS lo_c,
+        |  min_c + ((bucket + 1) * (max_c - min_c + 1)) // 32 - 1 AS hi_c,
+        |  CAST(count(*) AS BIGINT) AS n
+        |FROM g GROUP BY event_type, bucket, min_c, max_c
+        |ORDER BY event_type, bucket""".stripMargin),
+    // median/MAD in exact integer cents; discrete lower medians via
+    // the float-free 2*cum >= n cumulative-window form; every sum
+    // CAST BIGINT (HUGEINT trap)
+    Key("q_outliers", q_outliers _,
+      """WITH vc AS (SELECT event_type,
+        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c,
+        |         CAST(count(*) AS BIGINT) AS n
+        |       FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+        |mw AS (SELECT event_type, c,
+        |         sum(n) OVER (PARTITION BY event_type ORDER BY c) AS cum,
+        |         sum(n) OVER (PARTITION BY event_type) AS nl FROM vc),
+        |med AS (SELECT event_type, min(c) AS median_c FROM mw
+        |        WHERE cum * 2 >= nl GROUP BY 1),
+        |dv AS (SELECT vc.event_type, abs(vc.c - med.median_c) AS dev,
+        |         CAST(sum(vc.n) AS BIGINT) AS dn
+        |       FROM vc JOIN med USING (event_type) GROUP BY 1, 2),
+        |aw AS (SELECT event_type, dev,
+        |         sum(dn) OVER (PARTITION BY event_type ORDER BY dev) AS cum,
+        |         sum(dn) OVER (PARTITION BY event_type) AS nl FROM dv),
+        |mad AS (SELECT event_type, min(dev) AS mad_c FROM aw
+        |        WHERE cum * 2 >= nl GROUP BY 1),
+        |o AS (SELECT vc.event_type, CAST(sum(vc.n) AS BIGINT) AS n,
+        |        CAST(sum(CASE WHEN abs(vc.c - med.median_c) > mad.mad_c * 3
+        |          THEN vc.n ELSE 0 END) AS BIGINT) AS n_outliers
+        |      FROM vc JOIN med USING (event_type) JOIN mad USING (event_type)
+        |      GROUP BY 1)
+        |SELECT o.event_type, o.n, med.median_c, mad.mad_c, o.n_outliers,
+        |  (2 * o.n_outliers * 1000000 + o.n) // (2 * o.n) AS outlier_share_fp
+        |FROM o JOIN med USING (event_type) JOIN mad USING (event_type)
+        |ORDER BY o.event_type""".stripMargin),
+    // Spark session_window ≡ gaps-and-islands: a new session starts
+    // when the gap to the previous event is >= 30 min (Spark merges
+    // strictly-before-end starts); end = last event + gap. Computed at
+    // microsecond precision so sub-second timestamps can't diverge,
+    // floored to seconds only at the output boundary.
+    Key("q_time_session", q_time_session _,
+      """WITH e AS (SELECT user_id, epoch_us(ts) AS eus, value FROM events),
+        |m AS (SELECT user_id, eus, value,
+        |  CASE WHEN lag(eus) OVER w IS NULL
+        |       OR eus - lag(eus) OVER w >= 1800000000 THEN 1 ELSE 0 END AS new_sess
+        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY eus)),
+        |g AS (SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY eus
+        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess FROM m)
+        |SELECT (min(eus) // 1000000) AS sess_start,
+        |  ((max(eus) + 1800000000) // 1000000) AS sess_end,
+        |  user_id, count(*) AS n_events,
+        |  CAST(round(sum(CAST(value AS DECIMAL(18,2))),2) AS DOUBLE) AS sum_value
+        |FROM g GROUP BY user_id, sess
+        |ORDER BY user_id, sess_start""".stripMargin),
+  )
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SparkEntry.Key
 import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -318,4 +319,151 @@ object UnigramOps {
         sum(col("n_tok")).as("n_unigram_tokens"))
       .orderBy("doc_id")
   }
+
+  /** Full WITH-RECURSIVE body replaying this object's
+    * hard-EM unigram trainer: candidate seeding, seed scores, and per
+    * EM round a forward-Viterbi recursive CTE (dp$k — one row per
+    * word carrying the growing best[] list), the backward extraction
+    * (ex$k — piece lengths appended last-first, the enc = score·8+len
+    * argmax with positive-mod length recovery), segmentation usage,
+    * and the add-one-smoothed rescore. Shared by the q_unigram_train
+    * and q_unigram_encode oracles; every fan-out CTE is pinned
+    * AS MATERIALIZED (the q_pca_power inlined-CTE lesson). `sub17`
+    * replaces the lateral range() DuckDB 1.0 rejects inside a
+    * recursive step; its upper bound is DERIVED from the corpus
+    * (max word length, floor 16 — ADVICE r13: the former fixed 1..16
+    * range silently skipped substrings starting past position 16 and
+    * pieces past the 16th on any corpus with longer words, diverging
+    * from the unbounded Spark side via a puzzling hash mismatch
+    * instead of loudly), guarded per-use by length predicates.
+    */
+  private def duckUnigramCtes(topM: Int, rounds: Int = 2): String = {
+    val BIGNEG = "CAST(-1000000000000000 AS BIGINT)"
+    def emRound(k: Int, vv: String): String =
+      s"""dp$k AS (
+         |  SELECT word, n, ps, ss, [CAST(0 AS BIGINT)] AS bests, 0 AS j
+         |  FROM w, $vv
+         |  UNION ALL
+         |  SELECT word, n, ps, ss, list_append(bests,
+         |    list_max(list_transform([1,2,3,4], l -> CASE WHEN j + 1 - l >= 0
+         |      THEN bests[j + 2 - l] +
+         |        coalesce(ss[list_position(ps, substr(word, j + 2 - l, l))], $BIGNEG)
+         |      END))), j + 1
+         |  FROM dp$k WHERE j < length(word)),
+         |dpf$k AS MATERIALIZED (SELECT word, n, ps, ss, bests FROM dp$k
+         |  WHERE j = length(word)),
+         |obj$k AS (SELECT CAST(sum(n * bests[length(word) + 1]) AS BIGINT) AS obj
+         |  FROM dpf$k),
+         |ex$k AS (
+         |  SELECT word, n, ps, ss, bests, CAST([] AS BIGINT[]) AS lens,
+         |    length(word) AS j
+         |  FROM dpf$k
+         |  UNION ALL
+         |  SELECT word, n, ps, ss, bests, list_append(lens, ((m % 8) + 8) % 8),
+         |    j - (((m % 8) + 8) % 8)
+         |  FROM (SELECT *, list_max(list_transform([1,2,3,4], l -> CASE WHEN l <= j
+         |          THEN (bests[j + 1 - l] +
+         |            coalesce(ss[list_position(ps, substr(word, j + 1 - l, l))],
+         |              $BIGNEG)) * 8 + l END)) AS m
+         |        FROM ex$k WHERE j > 0)),
+         |seg$k AS MATERIALIZED (
+         |  SELECT word, n, substr(word,
+         |      length(word) - CAST(list_sum(lens[1:CAST(g.k AS INT)]) AS BIGINT) + 1,
+         |      lens[CAST(g.k AS INT)]) AS piece
+         |  FROM (SELECT word, n, lens FROM ex$k WHERE j = 0), sub17 g
+         |  WHERE g.k <= len(lens)),
+         |usage$k AS MATERIALIZED (
+         |  SELECT v.piece, CAST(coalesce(sum(s.n), 0) AS BIGINT) AS u
+         |  FROM vocab v LEFT JOIN seg$k s ON v.piece = s.piece GROUP BY 1),
+         |tot$k AS (SELECT CAST(sum(u) AS BIGINT) AS t, CAST(count(*) AS BIGINT) AS v
+         |  FROM usage$k),
+         |sc$k AS MATERIALIZED (
+         |  SELECT piece, u,
+         |    CAST(round(ln(CAST(u + 1 AS DOUBLE) / (t + v)) * 1e9) AS BIGINT) AS score
+         |  FROM usage$k, tot$k),
+         |vv$k AS MATERIALIZED (SELECT list(piece ORDER BY piece) AS ps,
+         |  list(score ORDER BY piece) AS ss FROM sc$k)""".stripMargin
+    s"""w AS MATERIALIZED (SELECT word, CAST(count(*) AS BIGINT) AS n FROM (
+       |    SELECT unnest(string_split(text, ' ')) AS word FROM documents
+       |    WHERE text IS NOT NULL) WHERE length(word) > 0 GROUP BY 1),
+       |sub17 AS (SELECT unnest(range(1,
+       |    greatest(17, (SELECT max(length(word)) + 1 FROM w)))) AS k),
+       |cand AS MATERIALIZED (
+       |  SELECT substr(word, CAST(s.k AS INT), CAST(ls.l AS INT)) AS piece,
+       |    CAST(sum(n) AS BIGINT) AS f
+       |  FROM w, sub17 s, (SELECT unnest([1,2,3,4]) AS l) ls
+       |  WHERE s.k + ls.l - 1 <= length(word)
+       |  GROUP BY 1),
+       |vocab AS MATERIALIZED (
+       |  SELECT piece FROM cand WHERE length(piece) = 1
+       |  UNION ALL
+       |  SELECT piece FROM (SELECT piece FROM cand WHERE length(piece) > 1
+       |                     ORDER BY f DESC, piece LIMIT $topM)),
+       |ftot AS (SELECT CAST(sum(f) AS BIGINT) AS ft FROM cand JOIN vocab USING (piece)),
+       |sc0 AS MATERIALIZED (
+       |  SELECT piece, CAST(round(ln(CAST(f AS DOUBLE) / ft) * 1e9) AS BIGINT) AS score
+       |  FROM cand JOIN vocab USING (piece), ftot),
+       |vv0 AS MATERIALIZED (SELECT list(piece ORDER BY piece) AS ps,
+       |  list(score ORDER BY piece) AS ss FROM sc0),
+       |${(1 to rounds).map(k => emRound(k, s"vv${k - 1}")).mkString(",\n")}"""
+      .stripMargin
+  }
+
+  val keys: Seq[Key] = Seq(
+    // Unigram-LM trainer: two recursive-CTE Viterbi-EM rounds over
+    // the distinct-word table; final vocab with last-round usage,
+    // smoothed scores, and the per-round EM objectives
+    Key("q_unigram_train", (s, d) => q_unigram_train(s, d),
+      s"""WITH RECURSIVE
+         |${duckUnigramCtes(24)}
+         |SELECT v.piece, CAST(length(v.piece) AS BIGINT) AS len,
+         |  s2.u AS usage, s2.score AS score_fp,
+         |  (SELECT obj FROM obj1) AS obj1_fp,
+         |  (SELECT obj FROM obj2) AS obj2_fp
+         |FROM vocab v JOIN sc2 s2 ON v.piece = s2.piece
+         |ORDER BY s2.u DESC, v.piece""".stripMargin),
+    // Unigram encode: a THIRD Viterbi pass under the trained (vv2)
+    // scores gives each distinct word its token count; docs join the
+    // Zipf-bounded (word, n_tok) model and aggregate per doc
+    Key("q_unigram_encode", (s, d) => q_unigram_encode(s, d),
+      s"""WITH RECURSIVE
+         |${duckUnigramCtes(24, rounds = 3)},
+         |wt AS (SELECT word, CAST(len(lens) AS BIGINT) AS n_tok
+         |       FROM ex3 WHERE j = 0),
+         |dw AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word
+         |       FROM documents WHERE text IS NOT NULL)
+         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
+         |  CAST(sum(length(word)) AS BIGINT) AS n_chars,
+         |  CAST(sum(n_tok) AS BIGINT) AS n_unigram_tokens
+         |FROM dw JOIN wt USING (word)
+         |GROUP BY 1 ORDER BY doc_id""".stripMargin),
+    // Unigram prune: per removable piece, the Viterbi-objective loss
+    // of dropping it under the FINAL scores - masked (cand, ps, ss)
+    // model rows from the sc2 table, one forward DP per (cand, word)
+    Key("q_unigram_prune", (s, d) => q_unigram_prune(s, d),
+      s"""WITH RECURSIVE
+         |${duckUnigramCtes(24, rounds = 3)},
+         |cands AS (SELECT piece AS cand, u FROM sc2
+         |          WHERE length(piece) > 1 AND u > 0),
+         |mv AS MATERIALIZED (
+         |  SELECT c.cand, c.u, list(s.piece ORDER BY s.piece) AS ps,
+         |    list(s.score ORDER BY s.piece) AS ss
+         |  FROM cands c JOIN sc2 s ON s.piece <> c.cand GROUP BY c.cand, c.u),
+         |dpp AS (
+         |  SELECT cand, u, word, n, ps, ss, [CAST(0 AS BIGINT)] AS bests, 0 AS j
+         |  FROM w, mv
+         |  UNION ALL
+         |  SELECT cand, u, word, n, ps, ss, list_append(bests,
+         |    list_max(list_transform([1,2,3,4], l -> CASE WHEN j + 1 - l >= 0
+         |      THEN bests[j + 2 - l] +
+         |        coalesce(ss[list_position(ps, substr(word, j + 2 - l, l))],
+         |          CAST(-1000000000000000 AS BIGINT)) END))), j + 1
+         |  FROM dpp WHERE j < length(word)),
+         |objm AS (SELECT cand, u,
+         |    CAST(sum(n * bests[length(word) + 1]) AS BIGINT) AS obj_masked
+         |  FROM dpp WHERE j = length(word) GROUP BY 1, 2)
+         |SELECT cand AS piece, u AS usage,
+         |  (SELECT obj FROM obj3) - obj_masked AS delta_fp
+         |FROM objm ORDER BY delta_fp, piece""".stripMargin),
+  )
 }

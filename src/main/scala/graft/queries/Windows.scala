@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SparkEntry.Key
 import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -243,4 +244,102 @@ object Windows {
         when(lead(col("day"), 1).over(w).isNull, 1L).otherwise(0L).as("is_current"))
       .orderBy("o_custkey", "version")
   }
+
+  val keys: Seq[Key] = Seq(
+    Key("q_window_rank", q_window_rank _,
+      """SELECT * FROM (
+        |  SELECT c_nationkey, c_custkey, c_acctbal,
+        |    row_number() OVER (PARTITION BY c_nationkey
+        |      ORDER BY c_acctbal DESC, c_custkey) AS rn
+        |  FROM customer)
+        |WHERE rn <= 3 ORDER BY c_nationkey, rn""".stripMargin),
+    Key("q_window_lag", q_window_lag _,
+      """SELECT user_id, event_id,
+        |  (epoch_us(ts) // 1000000)
+        |    - lag(epoch_us(ts) // 1000000, 1) OVER (
+        |        PARTITION BY user_id
+        |        ORDER BY epoch_us(ts) // 1000000, event_id) AS gap_s
+        |FROM events ORDER BY user_id, event_id""".stripMargin),
+    Key("q_window_dist", q_window_dist _,
+      """SELECT c_nationkey, c_custkey,
+        |  ntile(4) OVER w AS quartile,
+        |  round(percent_rank() OVER w, 10) AS pct_rank,
+        |  round(cume_dist() OVER w, 10) AS cume,
+        |  lead(c_custkey, 1) OVER w AS next_cust
+        |FROM customer
+        |WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal ASC, c_custkey)
+        |ORDER BY c_nationkey, c_custkey""".stripMargin),
+    Key("q_window_running", q_window_running _,
+      """SELECT o_custkey, o_orderkey,
+        |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (PARTITION BY o_custkey
+        |    ORDER BY o_orderdate, o_orderkey
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS DOUBLE) AS running_total
+        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin),
+    // SCD type-2: consecutive-run collapse via lag, then version /
+    // validity intervals via row_number + lead over the change rows;
+    // integral epoch-day pair (div 86400 <-> // 86400000000)
+    Key("q_scd2", q_scd2 _,
+      """WITH st AS (SELECT o_custkey,
+        |         epoch_us(o_orderdate) // 86400000000 AS day,
+        |         o_orderkey, o_orderstatus AS status FROM orders),
+        |ch AS (SELECT *, lag(status) OVER
+        |         (PARTITION BY o_custkey ORDER BY day, o_orderkey) AS prev
+        |       FROM st),
+        |f AS (SELECT o_custkey, day, o_orderkey, status FROM ch
+        |      WHERE prev IS NULL OR prev <> status)
+        |SELECT o_custkey,
+        |  CAST(row_number() OVER w AS BIGINT) AS version,
+        |  status,
+        |  day AS valid_from_day,
+        |  lead(day) OVER w AS valid_to_day,
+        |  CAST(CASE WHEN lead(day) OVER w IS NULL THEN 1 ELSE 0 END AS BIGINT)
+        |    AS is_current
+        |FROM f
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY day, o_orderkey)
+        |ORDER BY o_custkey, version""".stripMargin),
+    // point-in-time SCD-2 lookup: equi join on customer + interval
+    // residual; exactly one version matches per order
+    Key("q_scd2_lookup", q_scd2_lookup _,
+      """WITH st AS (SELECT o_custkey,
+        |         epoch_us(o_orderdate) // 86400000000 AS day,
+        |         o_orderkey, o_orderstatus AS status FROM orders),
+        |ch AS (SELECT *, lag(status) OVER
+        |         (PARTITION BY o_custkey ORDER BY day, o_orderkey) AS prev
+        |       FROM st),
+        |f AS (SELECT o_custkey, day, o_orderkey, status FROM ch
+        |      WHERE prev IS NULL OR prev <> status),
+        |dim AS (SELECT o_custkey,
+        |    CAST(row_number() OVER w AS BIGINT) AS version, status,
+        |    day AS valid_from_day, lead(day) OVER w AS valid_to_day
+        |  FROM f
+        |  WINDOW w AS (PARTITION BY o_custkey ORDER BY day, o_orderkey)),
+        |fact AS (SELECT o_orderkey, o_custkey,
+        |    epoch_us(o_orderdate) // 86400000000 AS day FROM orders)
+        |SELECT fact.o_orderkey, fact.o_custkey, fact.day,
+        |  dim.version, dim.status
+        |FROM fact JOIN dim ON fact.o_custkey = dim.o_custkey
+        |  AND fact.day >= dim.valid_from_day
+        |  AND (dim.valid_to_day IS NULL OR fact.day < dim.valid_to_day)
+        |ORDER BY fact.o_orderkey""".stripMargin),
+    Key("q_join_asof", q_join_asof _,
+      """WITH ev AS (SELECT event_id, user_id, event_type, value,
+        |  epoch_us(ts)//1000000 AS es FROM events),
+        |p AS (SELECT user_id, es, arg_max(value, event_id) AS p_value
+        |  FROM ev WHERE event_type = 'purchase' GROUP BY user_id, es)
+        |SELECT e.event_id, e.user_id, e.es, p.p_value AS last_purchase
+        |FROM ev e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.es >= p.es
+        |ORDER BY event_id""".stripMargin),
+    // tolerance as-of: DuckDB's ASOF join surfaces the matched p.es,
+    // so gap and cutoff are plain projections over the same match
+    Key("q_join_asof_tol", (s, d) => q_join_asof_tol(s, d),
+      """WITH ev AS (SELECT event_id, user_id, event_type, value,
+        |  epoch_us(ts)//1000000 AS es FROM events),
+        |p AS (SELECT user_id, es, arg_max(value, event_id) AS p_value
+        |  FROM ev WHERE event_type = 'purchase' GROUP BY user_id, es)
+        |SELECT e.event_id, e.user_id, e.es,
+        |  e.es - p.es AS gap_s,
+        |  CASE WHEN e.es - p.es <= 3600 THEN p.p_value END AS last_purchase_tol
+        |FROM ev e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.es >= p.es
+        |ORDER BY event_id""".stripMargin),
+  )
 }

@@ -144,9 +144,9 @@ object PlanAudit {
     val saved = spark.conf.getOption("spark.graft.ckptCapture")
     spark.conf.set("spark.graft.ckptCapture", "true")
     try {
-      val per = graft.SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val per = graft.SparkEntry.keys.map { case graft.SparkEntry.Key(name, run, _) =>
         graft.plans.Ckpt.drainCaptured() // drop stale segments
-        val plan = fn(spark, sfDir).queryExecution.sparkPlan
+        val plan = run(spark, sfDir).queryExecution.sparkPlan
         val segs = plan +: graft.plans.Ckpt.drainCaptured()
         spark.catalog.clearCache()
         (name, segs.exists(_.toString.contains("CartesianProduct")),
@@ -201,7 +201,7 @@ object PlanAudit {
     audit.windowCounts.toSeq.sorted.foreach { case (n, w) =>
       println(s"windows $n: $w")
     }
-    println(s"audited ${graft.SparkEntry.queries.size} plans, " +
+    println(s"audited ${graft.SparkEntry.keys.size} plans, " +
       s"${audit.cartesian.size + audit.globalWindows.size} flagged, " +
       s"${audit.fallbacks.size} with fallbacks")
     spark.stop()

@@ -27,6 +27,17 @@ class RelationalSpec extends AnyFunSuite {
   test("every oracleSql key has a matching queries key") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracleSql without query impl: $missing")
+    val names = SparkEntry.keys.map(_.name)
+    assert(names.distinct == names, "a key name is registered by two families")
+    assert(names == names.sorted, "keys must come sorted by name")
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    assert(SparkEntry.queries.size == 265)
+    // twins share their base key's oracle text, not a copy of it
+    Seq("q_dedup_incr_idx" -> "q_dedup_incr", "q_dedup_bloom" -> "q_dedup_incr",
+      "q_pagerank_copart" -> "q_pagerank", "q_graph_hops_copart" -> "q_graph_hops",
+      "q_join_range_binned" -> "q_join_range").foreach { case (twin, base) =>
+      assert(SparkEntry.oracleSql(twin) eq SparkEntry.oracleSql(base), twin)
+    }
   }
 
   test("q_agg_hash: group count and row invariants") {

@@ -920,4 +920,110 @@ class SimTextSpec extends AnyFunSuite {
       rows("s0").getAs[Long]("unique_tokens") +
         rows("s1").getAs[Long]("unique_tokens"))
   }
+
+  // Hand-check pins against independent recomputes: q_ivf_balance's
+  // occupancy/cohesion report, q_select_mmr's greedy chain on the same
+  // quantized grid, and q_dim_recall's monotone recall curve.
+  test("q_ivf_balance equals an independent Scala recompute of the assignment report") {
+    val rows = Tables.embeddings(spark, sf)
+      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
+      .select(col("vec_id"), col("embedding")).collect()
+      .map(r => r.getAs[Long]("vec_id") -> r.getSeq[Float](1).toArray)
+    val cents = rows.filter(_._1 < 16).sortBy(_._1)
+    def cos(a: Array[Float], b: Array[Float]): Double = {
+      var d = 0.0; var na = 0.0; var nb = 0.0
+      var i = 0
+      while (i < a.length) {
+        d += a(i).toDouble * b(i).toDouble
+        na += a(i).toDouble * a(i).toDouble
+        nb += b(i).toDouble * b(i).toDouble
+        i += 1
+      }
+      d / (math.sqrt(na) * math.sqrt(nb))
+    }
+    // assignment: max cosine, ties to the smallest cent_id
+    val perCell = rows.map { case (_, v) =>
+      val scored = cents.map { case (cid, cv) => (cos(v, cv), cid) }
+      val best = scored.maxBy { case (c, cid) => (c, -cid.toDouble) }
+      (best._2, math.floor(best._1 * 1e6 + 0.5).toLong)
+    }.groupBy(_._1).map { case (cell, xs) =>
+      cell -> (xs.length.toLong, xs.map(_._2).sum)
+    }
+    val t = perCell.values.map(_._1).sum
+    val mx = perCell.values.map(_._1).max
+    val nc = perCell.size.toLong
+    val got = graft.queries.SimilarityOps.q_ivf_balance(spark, sf).collect()
+    assert(got.length == cents.length, "one row per codebook cell")
+    got.foreach { r =>
+      val cell = r.getAs[Long]("cell")
+      perCell.get(cell) match {
+        case Some((n, sc)) =>
+          assert(r.getAs[Long]("n") == n, s"cell $cell occupancy")
+          assert(r.getAs[Long]("mean_cos_fp") == (2 * sc + n) / (2 * n),
+            s"cell $cell cohesion")
+          assert(r.getAs[Long]("share_fp") == (2 * n * 1000000L + t) / (2 * t))
+        case None =>
+          assert(r.getAs[Long]("n") == 0L, s"cell $cell must report empty")
+      }
+      assert(r.getAs[Long]("imbalance_fp") == (2 * mx * nc * 1000000L + t) / (2 * t))
+    }
+  }
+
+  test("q_select_mmr equals an independent greedy reference and diverges from relevance top-k") {
+    val rows = Tables.embeddings(spark, sf)
+      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
+      .select(col("vec_id"), col("embedding")).collect()
+      .map(r => r.getAs[Long]("vec_id") -> r.getSeq[Float](1).toArray)
+    val q = rows.find(_._1 == 0L).get._2
+    def cosfp(a: Array[Float], b: Array[Float]): Long = {
+      var d = 0.0; var na = 0.0; var nb = 0.0
+      var i = 0
+      while (i < a.length) {
+        d += a(i).toDouble * b(i).toDouble
+        na += a(i).toDouble * a(i).toDouble
+        nb += b(i).toDouble * b(i).toDouble
+        i += 1
+      }
+      math.floor(d / (math.sqrt(na) * math.sqrt(nb)) * 1e6 + 0.5).toLong
+    }
+    val cand = rows.filter(_._1 > 0L)
+    val rel = cand.map { case (id, v) => id -> cosfp(v, q) }.toMap
+    val emb = cand.toMap
+    val sel = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val expect = (1 to 8).map { rank =>
+      val best = cand.iterator.filterNot(c => sel.contains(c._1)).map { case (id, v) =>
+        val ms = if (sel.isEmpty) None else Some(sel.map(s => cosfp(v, emb(s))).max)
+        val score = rel(id) - ms.getOrElse(0L)
+        (score, id, ms)
+      }.minBy { case (score, id, _) => (-score, id) }
+      sel += best._2
+      (rank.toLong, best._2, rel(best._2), best._3, best._1)
+    }
+    val got = graft.queries.SimilarityOps.q_select_mmr(spark, sf).collect()
+      .map(r => (r.getAs[Long]("rank"), r.getAs[Long]("vec_id"),
+        r.getAs[Long]("rel_fp"),
+        Option(r.getAs[java.lang.Long]("maxsim_fp")).map(_.longValue),
+        r.getAs[Long]("score_fp")))
+    assert(got.toSeq == expect,
+      s"greedy chain diverged:\n got   ${got.toSeq}\n expect $expect")
+    // the diversity term must actually move the selection
+    val topRel = cand.sortBy { case (id, _) => (-rel(id), id) }.take(8).map(_._1).toSet
+    assert(got.map(_._2).toSet != topRel,
+      "MMR selection must differ from pure relevance top-k on this corpus")
+  }
+
+  test("q_dim_recall: monotone non-decreasing recall in m, full-dim truth bounded") {
+    val rows = graft.queries.SimilarityOps.q_dim_recall(spark, sf).collect()
+      .map(r => (r.getAs[Long]("m"), r.getAs[Long]("hits"),
+        r.getAs[Long]("total"), r.getAs[Long]("recall_fp")))
+    assert(rows.map(_._1).toSeq == Seq(8L, 16L, 32L, 48L))
+    rows.foreach { case (m, hits, total, rf) =>
+      assert(hits <= total, s"m=$m")
+      assert(rf == (2 * hits * 1000000 + total) / (2 * total), s"m=$m")
+    }
+    val recalls = rows.sortBy(_._1).map(_._4)
+    assert(recalls.zip(recalls.tail).forall { case (a, b) => a <= b },
+      s"longer prefixes must not lose recall: ${recalls.mkString(",")}")
+    assert(recalls.distinct.size > 1, "curve must vary (non-degeneracy)")
+  }
 }

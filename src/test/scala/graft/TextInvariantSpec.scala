@@ -713,4 +713,72 @@ class TextInvariantSpec extends AnyFunSuite {
     assert(nRef + nCur == nDocs)
     corpus.foreach(r => assert(r.getAs[Long]("psi_fp") >= 0L))
   }
+
+  // Hand-check pins: planted first-occurrence ownership for q_novelty,
+  // and q_map's AP fold re-derived sequentially from the same click log
+  // plus its fixed-point arithmetic on a closed-form case. The DuckDB
+  // oracle is the cross-engine gate; these pin the semantics.
+  test("q_novelty: first-occurrence ownership on a planted corpus") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("nov-docs").toString
+    // doc 0: 3 distinct shingles, all first-seen here (novelty 1).
+    // doc 1: exact dup of doc 0 (novelty 0).
+    // doc 2: shares one shingle with doc 0 ("a b c"), adds two new
+    //        ones -> 2/3 novel.
+    // doc 3: null text -> null row. doc 4: short text -> whole-text
+    //        fallback shingle, first-seen -> novelty 1.
+    Seq[(Long, String, String, String, Long)](
+      (0L, "a b c d e", "en", "s", 9L),
+      (1L, "a b c d e", "en", "s", 9L),
+      (2L, "a b c x y", "en", "s", 9L),
+      (3L, null, "en", "s", 0L),
+      (4L, "zz", "en", "s", 2L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    val got = SparkEntry.queries("q_novelty")(spark, tmp).collect()
+      .map(r => r.getAs[Long]("doc_id") ->
+        (Option(r.getAs[java.lang.Long]("n_grams")),
+          Option(r.getAs[java.lang.Long]("n_novel")),
+          Option(r.getAs[java.lang.Long]("novelty_fp")))).toMap
+    assert(got(0L) == ((Some(3L), Some(3L), Some(1000000L))))
+    assert(got(1L) == ((Some(3L), Some(0L), Some(0L))))
+    assert(got(2L) == ((Some(3L), Some(2L), Some(666667L))))
+    assert(got(3L) == ((None, None, None)), "null text must report null")
+    assert(got(4L) == ((Some(1L), Some(1L), Some(1000000L))))
+  }
+
+  test("q_map equals a sequential AP recompute over the shared click log") {
+    val depth = 20
+    val log = graft.queries.TextOps.pbmClicked(spark, sf, depth)
+      .collect()
+      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank"),
+        r.getAs[Long]("click")))
+    val L = (1 to depth).foldLeft(1L)((l, i) =>
+      l / BigInt(l).gcd(BigInt(i)).toLong * i)
+    val expected = log.groupBy(_._1).map { case (q, rows) =>
+      var hits = 0L
+      var apSum = 0L
+      rows.sortBy(_._2).foreach { case (_, rank, click) =>
+        hits += click
+        if (click == 1L) apSum += hits * (L / rank)
+      }
+      val den = L * depth
+      q -> (rows.map(_._3).sum, (2 * apSum * 1000000 + den) / (2 * den))
+    }
+    val got = graft.queries.TextOps.q_map(spark, sf, depth).collect()
+      .map(r => r.getAs[Long]("query_id") ->
+        ((r.getAs[Long]("n_rel"), r.getAs[Long]("ap_fp")))).toMap
+    assert(got.nonEmpty && got == expected)
+    assert(got.values.map(_._2).toSet.size > 1,
+      "AP must vary across queries (non-degeneracy)")
+  }
+
+  test("q_map fixed-point arithmetic: closed-form two-hit case") {
+    // clicks at ranks 1 and 3 with depth 20:
+    // AP = (1/20) * (1/1 + 2/3) = 1/12 -> ap_fp = round(1e6/12) = 83333
+    val L = 232792560L
+    val apSum = 1L * (L / 1) + 2L * (L / 3)
+    val den = L * 20
+    assert((2 * apSum * 1000000 + den) / (2 * den) == 83333L)
+  }
 }
