@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.Sinks
 
 /** The downstream analytics a git-log-to-sqlite user runs over the
   * produced schema (README.md:51-78 documents the tables for exactly
@@ -15,8 +16,11 @@ import org.apache.spark.sql.functions._
   */
 object GitAnalytics {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  // the schema comes from one footer: constructing a query runs no job
+  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    s.read.schema(Sinks.parquetSchema(s, path)).parquet(path)
+  }
 
   /** Top-k most-changed files per repository — the canonical query the
     * schema exists for. Windowed rank with per-partition pruning

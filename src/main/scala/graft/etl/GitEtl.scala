@@ -2,8 +2,8 @@ package graft.etl
 
 import java.nio.file.{Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's full ETL (analyzer.rs:203-352) as a Spark job:
   * driver-side directory scan → one distributed pass per repo doing
@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * tables.
   *
   * Deviations from the reference, by design (SURVEY.md §7.3):
-  *  - surrogate keys are deterministic (dense_rank over (name, path)),
+  *  - surrogate keys are deterministic (rank over (name, path)),
   *    not SQLite AUTOINCREMENT (analyzer.rs:152) — AUTOINCREMENT has no
   *    stable distributed analog;
   *  - the logs "primary key" is (repository_id, commit_hash), not a
@@ -44,15 +44,18 @@ object GitEtl {
     tables("changed_files").write.mode("overwrite").parquet(s"$outDir/changed_files.parquet")
   }
 
-  /** Build the output DataFrames without writing. Triggers NO Spark
-    * jobs — callers that want the run report call [[report]] (which
-    * does), and should unpersist the "events" entry when finished.
-    * Tables land (via [[write]]) as repositories(repo_id, name, url),
+  /** Build the output DataFrames, running exactly ONE Spark job: the
+    * extraction ([[extract]]), which fills the events cache and brings
+    * the O(repos) repo and error events to the driver. Everything else
+    * stays lazy — callers that want the run report call [[report]],
+    * and should unpersist the "events" entry when finished. Tables
+    * land (via [[write]]) as repositories(repo_id, name, url),
     * logs(commit_hash, parent_hash, author_name, author_email,
     * commit_datetime, commit_epoch, message, insertions, deletions,
     * repository_id), changed_files(commit_hash, file_path,
     * repository_id) — DDL shapes from analyzer.rs:149-188 with an extra
-    * epoch column for engine-neutral comparisons.
+    * epoch column for engine-neutral comparisons. "repositories",
+    * "failures" and "ignored" are local relations built on the driver.
     */
   def dataframes(
       spark: SparkSession,
@@ -61,126 +64,134 @@ object GitEtl {
       maxDepth: Int,
       shardsPerRepo: Int = 1): Map[String, DataFrame] = {
     import spark.implicits._
-    val (events, ignored) = extract(spark, root, config, maxDepth, shardsPerRepo, Map.empty)
-    val dim = repoDim(events, None)
-    val (logs, changedFiles) = normalizedTables(events, dim, config.authorMap)
+    val ex = extract(spark, root, config, maxDepth, shardsPerRepo, Map.empty)
+    val dim = repoDim(ex.repos, Nil)
+    val (logs, changedFiles) = normalizedTables(ex.events, dim, config.authorMap)
     Map(
-      "repositories" -> dim.select("repo_id", "name", "url"),
+      "repositories" -> dim.toDF().select("repo_id", "name", "url"),
       "logs" -> logs,
       "changed_files" -> changedFiles,
-      "failures" -> events.filter(col("kind") === "error")
-        .select(col("repo_path").as("path"), col("error")),
-      "ignored" -> ignored.toDF("name"),
-      "events" -> events)
+      "failures" -> ex.errors.map(e => (e.repo_path, e.error)).toDF("path", "error"),
+      "ignored" -> ex.ignored.toDF("name"),
+      "events" -> ex.events)
   }
 
+  /** One extraction: the persisted events, the ignored directory
+    * names, and the run's kind="repo" and kind="error" events,
+    * collected to the driver.
+    */
+  private[etl] final case class Extraction(
+      events: DataFrame, ignored: Seq[String], repos: Seq[ExtractEvent], errors: Seq[ExtractEvent])
+
   /** The one extraction pipeline of the full and the incremental run:
-    * driver-side directory scan, then one task per work item (repo,
-    * shard) — the reference's task-per-repo fanout, analyzer.rs:222-230
-    * — with ALL per-repo subprocess work inside the task
-    * ([[GitLogSource.extractRepo]]), so driver prep is O(1) filesystem
-    * metadata per directory. `prevHeads` (repo path → head recorded by
-    * the previous run) turns each repo's walk incremental.
+    * driver-side directory scan, then ONE job with one task per work
+    * item (repo, shard) — the reference's task-per-repo fanout,
+    * analyzer.rs:222-230 — and no shuffle: the work-list is
+    * parallelized one item per partition. ALL per-repo subprocess work
+    * runs inside the task ([[GitLogSource.extractRepo]]), so driver
+    * prep is O(1) filesystem metadata per directory. `prevHeads` (repo
+    * path → head recorded by the previous run) turns each repo's walk
+    * incremental.
     *
-    * Persisted: the one extraction pass feeds the repositories dim,
-    * logs, changed_files AND the report — without caching, every
-    * downstream action would re-run `git log` over every repo. Returns
-    * the events and the ignored directory names.
+    * Persisted: the one extraction pass feeds logs, changed_files AND
+    * the report — without caching, every downstream action would re-run
+    * `git log` over every repo. The job is a collect of the non-commit
+    * events: it fills the whole cache, and returns O(repos) rows, the
+    * same order as the work-list the driver already holds.
     */
   private[etl] def extract(
       spark: SparkSession, root: Path, config: EtlConfig, maxDepth: Int,
-      shardsPerRepo: Int, prevHeads: Map[String, String]): (DataFrame, Seq[String]) = {
+      shardsPerRepo: Int, prevHeads: Map[String, String]): Extraction = {
     import spark.implicits._
     val (candidates, ignored) =
       GitLogSource.scanDirectories(root, maxDepth, config.ignoredRepositories)
     val shards = math.max(1, shardsPerRepo)
     val work = for (p <- candidates.map(_.toString); sh <- 0 until shards)
       yield (p, prevHeads.get(p), sh)
-    val events = spark
-      .createDataset(work)
-      .repartition(math.max(1, work.size))
-      .mapPartitions(_.flatMap { case (p, since, sh) =>
-        GitLogSource.extractRepo(Paths.get(p), since, sh, shards)
-      })
+    val events = spark.sparkContext
+      .parallelize(work, math.max(1, work.size))
+      .flatMap { case (p, since, sh) => GitLogSource.extractRepo(Paths.get(p), since, sh, shards) }
       .toDF()
       .persist()
-    (events, ignored)
+    val heads = events.filter(col("kind") =!= "commit").as[ExtractEvent].collect().toSeq
+    Extraction(events, ignored, heads.filter(_.kind == "repo"), heads.filter(_.kind == "error"))
   }
 
-  /** The repositories dimension (repo_id, name, path, url, head, mode)
-    * from the VALIDATED WORK-LIST (kind=repo events), not from
-    * extracted commits: a repo that validates but yields zero non-merge
-    * commits still gets its row, matching the reference's
+  /** One row of the repositories dimension, and of the incremental
+    * run's `state` table (the next run's frontier). */
+  final case class RepoRow(repo_id: Long, name: String, path: String, url: String, head: String)
+
+  /** The repositories dimension, computed on the driver from the
+    * VALIDATED WORK-LIST (the kind=repo events [[extract]] collected),
+    * not from extracted commits: a repo that validates but yields zero
+    * non-merge commits still gets its row, matching the reference's
     * unconditional repository insert (analyzer.rs:299-310). The
     * identity key is the unique path — two checkouts with the same
     * basename (root/team1/app, root/team2/app) are distinct
     * repositories; `name` stays the basename for reference parity.
     *
     * Without a previous state (a full run) the surrogate key is
-    * deterministic: dense_rank over (name, path). With one (an
-    * incremental run) ids are STABLE: a repo the state knows keeps its
-    * id, and new repos rank after the largest id the state ever gave —
-    * retired repos included, so no id is reused. The global window
-    * runs over the work-list, which is already driver-sized.
+    * deterministic: the rank over (name, path), in Spark's string
+    * order (UTF-8 bytes). With one (an incremental run) ids are
+    * STABLE: a repo the state knows keeps its id, and new repos rank
+    * after the largest id the state ever gave — retired repos
+    * included, so no id is reused. The rows are written as a local
+    * relation and attached to commits by a broadcast lookup
+    * ([[normalizedTables]]): no window, no exchange, no job.
     */
-  private[etl] def repoDim(events: DataFrame, prevState: Option[DataFrame]): DataFrame = {
-    val repos = events.filter(col("kind") === "repo")
-      .select(col("repo_name").as("name"), col("repo_path").as("path"),
-        col("repo_url").as("url"), col("head"), col("mode"))
-    val byNamePath = Window.orderBy("name", "path")
-    prevState match {
-      case None => repos.withColumn("repo_id", dense_rank().over(byNamePath).cast("long"))
-      case Some(st) =>
-        val ids = st.select(col("path").as("p_path"), col("repo_id").as("p_id"))
-        val maxId = st.agg(coalesce(max("repo_id"), lit(0L)).as("max_id"))
-        val joined = repos.join(broadcast(ids), col("path") === col("p_path"), "left")
-          .drop("p_path")
-        val kept = joined.filter(col("p_id").isNotNull).withColumn("repo_id", col("p_id"))
-        val fresh = joined.filter(col("p_id").isNull).crossJoin(broadcast(maxId))
-          .withColumn("repo_id", col("max_id") + dense_rank().over(byNamePath).cast("long"))
-          .drop("max_id")
-        kept.unionByName(fresh).drop("p_id")
-    }
+  private[etl] def repoDim(repos: Seq[ExtractEvent], prev: Seq[RepoRow]): Seq[RepoRow] = {
+    val known = prev.map(r => r.path -> r.repo_id).toMap
+    val maxId = prev.map(_.repo_id).maxOption.getOrElse(0L)
+    def row(e: ExtractEvent, id: Long) = RepoRow(id, e.repo_name, e.repo_path, e.repo_url, e.head)
+    val (kept, fresh) = repos.partition(e => known.contains(e.repo_path))
+    kept.map(e => row(e, known(e.repo_path))) ++
+      fresh.sortBy(e => (UTF8String.fromString(e.repo_name), UTF8String.fromString(e.repo_path)))
+        .zipWithIndex.map { case (e, i) => row(e, maxId + i + 1) }
   }
 
   /** The commit-normalization tail shared by the full-history path
     * above and the incremental path ([[GitEtlIncr]]): author-map
     * override + repo-id attach + per-file explode over any extraction
-    * event frame and any (repo_id, path) dimension.
+    * event frame and any dimension from [[repoDim]].
     */
   private[etl] def normalizedTables(
-      events: DataFrame, repoDim: DataFrame,
+      events: DataFrame, dim: Seq[RepoRow],
       authorMap: Map[String, String]): (DataFrame, DataFrame) = {
-    // Author normalization (J1): broadcast the email→name map and
-    // override the *name* only (repository.rs:167-171). A literal
-    // MapType rides inside codegen — zero shuffle, like the
-    // reference's in-process HashMap.
+    // Author normalization (J1): override the *name* only
+    // (repository.rs:167-171). A literal MapType rides inside codegen —
+    // zero shuffle, like the reference's in-process HashMap.
     val authorMapCol = typedLit(authorMap)
+    // The repo id attaches through a broadcast variable: it ships once
+    // per executor (a literal map would ride in every task at 100k
+    // repos), and unlike a broadcast join of the dimension it runs no
+    // collect job in each plan that reads logs or changed_files.
+    val ids = events.sparkSession.sparkContext.broadcast(dim.map(r => r.path -> r.repo_id).toMap)
+    // Two lookups keep the inner-join semantics AND a non-null
+    // repository_id (the NOT NULL column of the reference's DDL).
+    val known = udf((path: String) => ids.value.contains(path))
+    val repoId = udf((path: String) => ids.value(path))
     val logsRaw = events.filter(col("kind") === "commit")
       .select(col("commit.*"))
+      .filter(known(col("repo_path")))
       .withColumn("author_name",
         coalesce(element_at(authorMapCol, col("author_email")), col("author_name")))
-    val dim = repoDim.select(col("repo_id"), col("path"))
-    val logs = logsRaw
-      .join(broadcast(dim), logsRaw("repo_path") === dim("path"))
-      .select(
-        col("commit_hash"),
-        col("parent_hash"),
-        col("author_name"),
-        col("author_email"),
-        timestamp_seconds(col("commit_epoch")).as("commit_datetime"),
-        col("commit_epoch"),
-        col("message"),
-        col("insertions"),
-        col("deletions"),
-        col("repo_id").as("repository_id"))
+      .withColumn("repository_id", repoId(col("repo_path")))
+    val logs = logsRaw.select(
+      col("commit_hash"),
+      col("parent_hash"),
+      col("author_name"),
+      col("author_email"),
+      timestamp_seconds(col("commit_epoch")).as("commit_datetime"),
+      col("commit_epoch"),
+      col("message"),
+      col("insertions"),
+      col("deletions"),
+      col("repository_id"))
     // repository_id discriminates fork-shared commit hashes, matching
     // the (repository_id, commit_hash) logs key — without it a commit
     // reachable from two repos would double-join per-file rows.
-    val changedFiles = logsRaw
-      .join(broadcast(dim), logsRaw("repo_path") === dim("path"))
-      .select(col("commit_hash"), explode(col("changed_files")).as("file_path"),
-        col("repo_id").as("repository_id"))
+    val changedFiles = logsRaw.select(col("commit_hash"),
+      explode(col("changed_files")).as("file_path"), col("repository_id"))
     (logs, changedFiles)
   }
 
@@ -190,31 +201,25 @@ object GitEtl {
       kind: String, path: String, name: String, url: String, error: String,
       head: String, mode: String, n: Long, files: Long)
 
-  /** The run summary in ONE aggregation over the cached events,
-    * collected to the driver: O(repos) rows, the same order as the
-    * work-list the driver already holds.
+  /** Materialize the run report from [[dataframes]] output in ONE
+    * aggregation over the cached extraction, collected to the driver:
+    * O(repos) rows, the same order as the work-list the driver already
+    * holds. The counts are the tables' own: logs and changed_files hold
+    * the commits of repos in the dimension, and the dimension is ranked
+    * by (name, path).
     */
-  private[etl] def summarize(events: DataFrame): Seq[RepoGroup] = {
+  def report(tables: Map[String, DataFrame]): EtlReport = {
+    val events = tables("events")
     import events.sparkSession.implicits._
-    events.groupBy(col("kind"), col("repo_path").as("path"))
+    val ignored = tables("ignored").select(lit("ignored").as("kind"), col("name").as("repo_path"))
+    val groups = events.unionByName(ignored, allowMissingColumns = true)
+      .groupBy(col("kind"), col("repo_path").as("path"))
       .agg(first("repo_name").as("name"), first("repo_url").as("url"),
         first("error").as("error"), first("head").as("head"), first("mode").as("mode"),
         count(lit(1)).as("n"),
         coalesce(sum(when(col("kind") === "commit", size(col("commit.changed_files")))),
           lit(0L)).as("files"))
       .as[RepoGroup].collect().toSeq
-  }
-
-  /** Materialize the run report from [[dataframes]] output — the one
-    * place that triggers jobs (one aggregation over the cached
-    * extraction, [[summarize]]; `dataframes` itself stays lazy). The
-    * counts are the tables' own: logs and changed_files hold the
-    * commits of repos in the dimension, and the dimension is ranked by
-    * (name, path).
-    */
-  def report(tables: Map[String, DataFrame]): EtlReport = {
-    val ignored = tables("ignored").select(lit("ignored").as("kind"), col("name").as("repo_path"))
-    val groups = summarize(tables("events").unionByName(ignored, allowMissingColumns = true))
     def of(kind: String) = groups.filter(_.kind == kind)
     val repos = of("repo").sortBy(g => (g.name, g.path))
     val commits = of("commit").map(g => g.path -> g).toMap

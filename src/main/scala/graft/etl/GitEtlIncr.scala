@@ -2,7 +2,6 @@ package graft.etl
 
 import java.nio.file.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.sources.Sinks
 
 /** Incremental (since-snapshot) git ETL — the one ETL capability the
@@ -17,7 +16,7 @@ import graft.sources.Sinks
   * `old-head..HEAD` per repo ([[GitLogSource.extractRepo]] with
   * `since` — a repo whose head is unchanged runs its validating
   * `rev-parse` and remote-url lookup but NO `git log`). The extraction
-  * pipeline, repo dimension and report pass are [[GitEtl]]'s own.
+  * pipeline, repo dimension and normalization are [[GitEtl]]'s own.
   * Batches land through the snapshot-versioned manifest-log tables
   * ([[Sinks.writeSnapshot]] append mode), so:
   *
@@ -34,10 +33,23 @@ import graft.sources.Sinks
   *    finishes the batch — IncrementalEtlSpec "crash after the logs
   *    commit" checks the result equals a full rebuild.
   *
+  * Jobs: a run re-reads none of its own output. It collects `state`
+  * once (1 job), extracts in one job that also collects the repo and
+  * error events (modes and failures come from those), builds the repo
+  * dimension on the driver, and then runs only its writes: per append
+  * table a broadcast of the committed keys plus the write, then the
+  * `repositories` and `state` writes — 8 jobs in all (IncrementalEtlSpec
+  * "at most 12 jobs"). Batch sizes are the row counts in the footers
+  * of the files the version wrote ([[Sinks.snapshotRowsAdded]]), and
+  * every snapshot read takes its schema from one footer.
+  *
   * Scale shape: extraction cost is git-side O(new commits) per repo;
   * the Spark-side anti-join is O(batch + committed-index scan) — the
   * q_dedup_incr_idx contract (scan an index fraction of corpus bytes
-  * per increment, never re-derive it). Repo ids are STABLE across
+  * per increment, never re-derive it). The anti-join still reads
+  * every committed key, so a run stays O(history) on the Spark side;
+  * restricting it to repos that rewound waits for a differential spec
+  * of the refresh against git. Repo ids are STABLE across
   * runs (previous ids preserved via the state table; new repos take
   * ids after the largest id ever given) — a full rebuild renumbers by
   * (name, path) rank, an incremental deployment must not. The state
@@ -70,51 +82,46 @@ object GitEtlIncr {
       dir: String,
       config: EtlConfig = EtlConfig(),
       maxDepth: Int = 1): IncrReport = {
+    import spark.implicits._
     def committed(t: String) = Sinks.snapshotVersions(s"$dir/$t").nonEmpty
 
-    val prevState =
-      if (committed("state")) Some(Sinks.readSnapshot(spark, s"$dir/state")) else None
-    // the frontier is O(repos) — the same order as the driver-side
-    // work-list itself, so a collected map is the right transport
-    val prevHeads: Map[String, String] = prevState
-      .map(_.select("path", "head").collect()
-        .flatMap(r => Option(r.getString(1)).map(r.getString(0) -> _)).toMap)
-      .getOrElse(Map.empty)
+    // the previous state is O(repos) — the same order as the
+    // driver-side work-list itself — so it is collected once: the
+    // frontier, the ids to keep, and the retired repos to carry
+    val prev =
+      if (committed("state")) Sinks.readSnapshot(spark, s"$dir/state").as[GitEtl.RepoRow].collect().toSeq
+      else Nil
+    val prevHeads = prev.flatMap(r => Option(r.head).map(r.path -> _)).toMap
 
-    val (events, _) = GitEtl.extract(spark, root, config, maxDepth, shardsPerRepo = 1, prevHeads)
-    val repoDim = GitEtl.repoDim(events, prevState)
-    val (logsAll, filesAll) = GitEtl.normalizedTables(events, repoDim, config.authorMap)
+    val ex = GitEtl.extract(spark, root, config, maxDepth, shardsPerRepo = 1, prevHeads)
+    val dim = GitEtl.repoDim(ex.repos, prev)
+    val (logsAll, filesAll) = GitEtl.normalizedTables(ex.events, dim, config.authorMap)
 
     // exactly-once append: each table drops the (repository_id,
     // commit_hash) keys IT already committed — the rewind/replay guard,
-    // and what lets a rerun finish a batch a crash left half-committed
-    def append(df: DataFrame, t: String): Long = {
+    // and what lets a rerun finish a batch a crash left half-committed.
+    // Returns the version and the rows it added, from its footers.
+    def append(df: DataFrame, t: String): (Long, Long) = {
       val batch =
         if (!committed(t)) df
         else df.join(Sinks.readSnapshot(spark, s"$dir/$t").select("repository_id", "commit_hash"),
           Seq("repository_id", "commit_hash"), "left_anti")
-      Sinks.writeSnapshot(batch, s"$dir/$t", overwrite = false)
+      val v = Sinks.writeSnapshot(batch, s"$dir/$t", overwrite = false)
+      v -> Sinks.snapshotRowsAdded(spark, s"$dir/$t", v)
     }
-    val logsV = append(logsAll, "logs")
-    val filesV = append(filesAll, "changed_files")
-    Sinks.writeSnapshot(repoDim.select("repo_id", "name", "url"),
-      s"$dir/repositories", overwrite = true)
+    val (logsV, batchLogs) = append(logsAll, "logs")
+    val (_, batchFiles) = append(filesAll, "changed_files")
+    Sinks.writeSnapshot(dim.toDF().select("repo_id", "name", "url"), s"$dir/repositories", overwrite = true)
     // state keeps every repo ever given an id: a repo that is gone or
     // failed validation this run keeps its id and last head
-    val stateCols = Seq("repo_id", "name", "path", "url", "head").map(col)
-    val current = repoDim.select(stateCols: _*)
-    val state = prevState.fold(current)(st => current.unionByName(
-      st.join(repoDim.select("path"), Seq("path"), "left_anti").select(stateCols: _*)))
-    Sinks.writeSnapshot(state, s"$dir/state", overwrite = true)
-
-    val groups = GitEtl.summarize(events)
-    def of(kind: String) = groups.filter(_.kind == kind)
-    val rep = IncrReport(logsV,
-      modes = of("repo").map(g => g.path -> g.mode).toMap,
-      batchLogs = Sinks.readSnapshotAdded(spark, s"$dir/logs", logsV).count(),
-      batchFiles = Sinks.readSnapshotAdded(spark, s"$dir/changed_files", filesV).count(),
-      failed = of("error").map(g => g.path -> g.error).toMap)
-    events.unpersist()
-    rep
+    val current = dim.map(_.path).toSet
+    Sinks.writeSnapshot((dim ++ prev.filterNot(r => current(r.path))).toDF(),
+      s"$dir/state", overwrite = true)
+    ex.events.unpersist()
+    IncrReport(logsV,
+      modes = ex.repos.map(e => e.repo_path -> e.mode).toMap,
+      batchLogs = batchLogs,
+      batchFiles = batchFiles,
+      failed = ex.errors.map(e => e.repo_path -> e.error).toMap)
   }
 }

@@ -94,58 +94,45 @@ object Main {
       return
     }
 
-    val tables = GitEtl.dataframes(spark, root, config, maxDepth, shards.getOrElse(1))
     // Live progress during the long pole (the reference's per-repo
-    // bars, analyzer.rs:282): one Spark task = one (repo, shard), so
-    // the extraction job's task-end stream IS per-repo completion.
-    // The extraction is materialized here under a scoped listener
-    // (count() fills the persist; the writes below read the cache),
-    // then per-repo commit counts still print post-hoc — task
-    // completion order is not repo order, and a faithful ticker
-    // reports progress, not sequence.
-    val nTasks = tables("events").rdd.getNumPartitions
+    // bars, analyzer.rs:282): one Spark task = one (repo, shard), and
+    // `dataframes` runs the extraction as ONE single-stage job, so that
+    // job's task-end stream IS per-repo completion. Per-repo commit
+    // counts still print post-hoc — task completion order is not repo
+    // order, and a faithful ticker reports progress, not sequence.
     val done = new java.util.concurrent.atomic.AtomicInteger
-    val extractStage = new java.util.concurrent.atomic.AtomicInteger(-1)
-    val ourStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val stageTasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     val progress = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        // scope to OUR count() jobs (job group set below) so a
-        // concurrently-running job can't be misattributed. AQE may
-        // split the count into several jobs, and a job's declared
-        // stageInfos can include stages that never run tasks
-        // (skipped/cached parents) — so collect the candidate set here
-        // and let the first real task-end pick the extraction stage:
-        // extraction is upstream of the count-agg, so its tasks finish
-        // first within the group.
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        // scope to OUR job (job group set below) so a concurrently
+        // running job can't be misattributed
         if (e.properties != null &&
             "graft-extract" == e.properties.getProperty("spark.jobGroup.id"))
-          e.stageInfos.foreach(si => ourStages.add(si.stageId))
-      }
+          e.stageInfos.foreach(si => stageTasks.put(si.stageId, si.numTasks))
       override def onTaskEnd(
           e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
         // successful ends only: failed/speculative attempts would
-        // overshoot the k/nTasks display and print the newline early
-        if (!ourStages.contains(e.stageId) ||
-          e.taskInfo == null || !e.taskInfo.successful) return
-        extractStage.compareAndSet(-1, e.stageId)
-        if (e.stageId != extractStage.get()) return
+        // overshoot the k/n display and print the newline early
+        val n = stageTasks.getOrDefault(e.stageId, 0)
+        if (n == 0 || e.taskInfo == null || !e.taskInfo.successful) return
         val k = done.incrementAndGet()
-        if (k <= nTasks) {
-          System.err.print(s"\r# extracting: $k/$nTasks repo tasks")
-          if (k == nTasks) System.err.println()
+        if (k <= n) {
+          System.err.print(s"\r# extracting: $k/$n repo tasks")
+          if (k == n) System.err.println()
         }
       }
     }
     spark.sparkContext.addSparkListener(progress)
     spark.sparkContext.setJobGroup("graft-extract", "git extraction progress")
-    try tables("events").count()
-    finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(progress)
-    }
+    val tables =
+      try GitEtl.dataframes(spark, root, config, maxDepth, shards.getOrElse(1))
+      finally spark.sparkContext.clearJobGroup()
     GitEtl.write(tables, out)
     val report = GitEtl.report(tables)
+    // removed only now: task-end events reach listeners asynchronously,
+    // after the job itself has returned
+    spark.sparkContext.removeSparkListener(progress)
     tables("events").unpersist()
     val secs = (System.nanoTime() - t0) / 1e9
 

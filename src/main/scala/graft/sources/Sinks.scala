@@ -1,27 +1,25 @@
 package graft.sources
 
 import java.nio.file.{FileAlreadyExistsException, Files, Paths}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import scala.jdk.CollectionConverters._
 
 /** Source/sink surface (SURVEY.md §2.1 S5-S8). The reference's only
   * sink is SQLite (analyzer.rs:146-346); the distributed equivalents:
   *
-  *  - parquet (primary, columnar, pushdown-capable) — plain and
-  *    hive-partitioned;
-  *  - csv / json (interchange);
-  *  - bucketed tables (`bucketBy` + `saveAsTable`) — the co-located
-  *    join path: two tables bucketed on the same key join with ZERO
-  *    exchange on either side (asserted in SinksSpec);
+  *  - parquet (primary, columnar, pushdown-capable) — plain,
+  *    z-ordered, and snapshot-versioned; its own files are read back
+  *    with the schema of one footer ([[parquetSchema]]), so a read
+  *    runs no schema-inference job;
   *  - JDBC (the literal SQLite analog) — runnable and round-trip
   *    tested against embedded Derby (the JDBC driver that ships with
   *    Spark); SQLite itself is a url/driver swap away.
-  *
-  * At 100 TB: hive-partition on a low-cardinality pruning column
-  * (e.g. event date) so queries touch only matching directories;
-  * bucket on the high-cardinality join key so repeated joins skip the
-  * shuffle entirely.
   *
   * Delta Lake (named in BASELINE's "writes to Delta/JDBC" approach
   * line): NOT implemented, deliberately — `delta-spark`/`delta-core`
@@ -37,38 +35,6 @@ import scala.jdk.CollectionConverters._
   * extension — no structural change to this object.
   */
 object Sinks {
-
-  /** Write a DataFrame as date-partitioned parquet (partition pruning
-    * demo: filters on `p_date` prune directories before any IO).
-    */
-  def writeDatePartitioned(df: DataFrame, tsCol: String, out: String): Unit =
-    df.withColumn("p_date", to_date(col(tsCol)))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("p_date")
-      .parquet(out)
-
-  def writeCsv(df: DataFrame, out: String): Unit =
-    df.write.mode(SaveMode.Overwrite).option("header", "true").csv(out)
-
-  def readCsv(spark: SparkSession, path: String, schemaDDL: String): DataFrame =
-    spark.read.option("header", "true").schema(schemaDDL).csv(path)
-
-  def writeJson(df: DataFrame, out: String): Unit =
-    df.write.mode(SaveMode.Overwrite).json(out)
-
-  def readJson(spark: SparkSession, path: String, schemaDDL: String): DataFrame =
-    spark.read.schema(schemaDDL).json(path)
-
-  /** ORC round-trip — the other columnar format Spark ships natively.
-    * Same pushdown/pruning properties as parquet (predicate pushdown,
-    * column pruning, per-stripe statistics), so it's a drop-in
-    * interchange target for warehouses standardized on ORC.
-    */
-  def writeOrc(df: DataFrame, out: String): Unit =
-    df.write.mode(SaveMode.Overwrite).orc(out)
-
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
 
   /** Z-order clustered write — the lakehouse `OPTIMIZE ZORDER BY`
     * layout primitive: rows are range-repartitioned and sorted on the
@@ -94,16 +60,37 @@ object Sinks {
       .write.mode(SaveMode.Overwrite).parquet(out)
   }
 
-  /** Persist `df` as a table bucketed (and sorted) on `key` —
-    * subsequent equi-joins between tables bucketed identically require
-    * no shuffle (SortMergeJoin reads buckets directly).
+  private def footer(spark: SparkSession, file: HPath): ParquetMetadata = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+    try r.getFooter finally r.close()
+  }
+
+  /** The schema Spark's parquet writer stores in every file footer
+    * (key `org.apache.spark.sql.parquet.row.metadata`), read on the
+    * driver from ONE file: `path` itself, or the first `.parquet` file of a
+    * table directory. Passed to `spark.read.schema`, it replaces the
+    * schema-inference job of a plain `spark.read.parquet`. Every field
+    * is nullable, as inference gives it; a path without that footer
+    * key (not written by Spark) falls back to inference.
     */
-  def writeBucketed(df: DataFrame, key: String, buckets: Int, table: String): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .format("parquet")
-      .saveAsTable(table)
+  def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val p = new HPath(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val file = scala.util.Try(fs.getFileStatus(p)).toOption.flatMap { st =>
+      if (!st.isDirectory) Some(p)
+      else fs.listStatus(p).map(_.getPath).filter(_.getName.endsWith(".parquet")).sortBy(_.getName).headOption
+    }
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+    file.flatMap(f => Option(footer(spark, f).getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata")))
+      .map(json => nullable(DataType.fromJson(json)).asInstanceOf[StructType])
+      .getOrElse(spark.read.parquet(path).schema)
+  }
 
   /** Embedded Derby — the one JDBC engine whose driver ships in
     * /opt/spark/jars; the integration-test target for the SQLite-shaped
@@ -335,18 +322,21 @@ object Sinks {
       stageAndCommit(df, dir, v, Some(v - 1).filter(committed.contains))
   }
 
-  /** The rows version `v` itself wrote: its own data files, without
-    * the ones an append carried over from earlier versions.
+  /** The rows version `v` itself wrote — its own data files, without
+    * the ones an append carried over — summed from their parquet
+    * footers on the driver: no Spark job.
     */
-  def readSnapshotAdded(spark: SparkSession, dir: String, v: Long): DataFrame = {
+  def snapshotRowsAdded(spark: SparkSession, dir: String, v: Long): Long = {
     val own = Paths.get(dir, "data", s"v$v").toAbsolutePath.toString + java.io.File.separator
-    spark.read.parquet(manifestFiles(dir, v).filter(_.startsWith(own)): _*)
+    manifestFiles(dir, v).filter(_.startsWith(own))
+      .map(f => footer(spark, new HPath(f)).getBlocks.asScala.map(_.getRowCount).sum).sum
   }
 
   /** Read a committed version (default: latest) — time travel is
     * `readSnapshot(spark, dir, v)` for any version whose manifest
     * survives. Only manifest-named files are opened; uncommitted
-    * data directories are never visible.
+    * data directories are never visible. The schema is the first
+    * named file's footer ([[parquetSchema]]), so the read runs no job.
     */
   def readSnapshot(spark: SparkSession, dir: String,
                    version: Long = -1L): DataFrame = {
@@ -355,6 +345,7 @@ object Sinks {
     val v = if (version < 0) versions.last else version
     require(versions.contains(v),
       s"version $v not committed at $dir (have ${versions.mkString(",")})")
-    spark.read.parquet(manifestFiles(dir, v): _*)
+    val files = manifestFiles(dir, v)
+    spark.read.schema(parquetSchema(spark, files.head)).parquet(files: _*)
   }
 }

@@ -314,6 +314,64 @@ class GitEtlSpec extends AnyFunSuite {
       .forall(_.getAs[Long]("n_together") >= 2L))
   }
 
+  /** The fixture's three tables, written once by [[GitEtl.write]]. */
+  private lazy val written: String = {
+    val out = Files.createTempDirectory("etl-written").toString
+    GitEtl.write(tables, out)
+    out
+  }
+
+  test("dataframes + write + report run at most 8 jobs: one extraction, no dimension job") {
+    val out = Files.createTempDirectory("etl-jobs").toString
+    val ((t, rep), jobs) = JobCount(spark) {
+      val t = GitEtl.dataframes(spark, root, config, maxDepth = 1)
+      GitEtl.write(t, out)
+      (t, GitEtl.report(t))
+    }
+    t("events").unpersist()
+    info(s"dataframes + write + report: $jobs jobs")
+    assert(jobs <= 8, s"dataframes + write + report ran $jobs jobs")
+    assert(rep.commitsPerRepo == Seq("repo1" -> 7L, "repo2" -> 2L))
+    assert(spark.read.parquet(s"$out/logs.parquet").count() == 9)
+  }
+
+  test("dataframes alone runs exactly one job; its driver-side tables run none") {
+    val (t, jobs) = JobCount(spark)(GitEtl.dataframes(spark, root, config, maxDepth = 1))
+    info(s"dataframes: $jobs jobs")
+    assert(jobs == 1, s"dataframes ran $jobs jobs")
+    val ((names, failures), localJobs) = JobCount(spark) {
+      (t("repositories").collect().map(_.getString(1)).toSeq.sorted, t("failures").collect().length)
+    }
+    assert(localJobs == 0, s"the local relations ran $localJobs jobs")
+    assert(names == Seq("repo1", "repo2") && failures == 1)
+    t("events").unpersist()
+  }
+
+  test("the written tables' footer schemas equal the inferred ones") {
+    for (name <- Seq("repositories", "logs", "changed_files")) {
+      val path = s"$written/$name.parquet"
+      assert(graft.sources.Sinks.parquetSchema(spark, path) == spark.read.parquet(path).schema, name)
+    }
+  }
+
+  test("constructing each GitAnalytics query runs no job") {
+    import graft.etl.GitAnalytics._
+    val dir = written // the tables are written before counting starts
+    val queries = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "topFilesPerRepo" -> (() => topFilesPerRepo(spark, dir)),
+      "authorActivity" -> (() => authorActivity(spark, dir)),
+      "cumulativeChurn" -> (() => cumulativeChurn(spark, dir)),
+      "commitCadence" -> (() => commitCadence(spark, dir)),
+      "coChangedFiles" -> (() => coChangedFiles(spark, dir, minPairCount = 1)),
+      "searchCommits" -> (() => searchCommits(spark, dir, "rename")))
+    for ((name, q) <- queries) {
+      val (df, jobs) = JobCount(spark)(q())
+      info(s"constructing $name: $jobs jobs")
+      assert(jobs == 0, s"constructing $name ran $jobs jobs")
+      assert(df.collect().nonEmpty, name)
+    }
+  }
+
   test("sharded extraction equals unsharded (giant-repo straggler path)") {
     val plain = GitEtl.dataframes(spark, root, config, maxDepth = 1)
     val sharded = GitEtl.dataframes(spark, root, config, maxDepth = 1, shardsPerRepo = 3)

@@ -229,4 +229,28 @@ class IncrementalEtlSpec extends AnyFunSuite {
     assert(idsByName(dir) == Map("a" -> 1L, "b" -> 2L, "c" -> 3L))
     assert(Sinks.readSnapshot(spark, s"$dir/logs").count() == 3)
   }
+
+  test("a refresh with a since, a rewound and a new repo runs at most 12 jobs") {
+    val root = Files.createTempDirectory("incr-jobs")
+    val dir = Files.createTempDirectory("incr-jobs-tables").toString
+    val s = initRepo(root, "s")
+    addCommit(s, "s.txt", "s\n", "S1", "2024-07-01T00:00:00Z")
+    val r = initRepo(root, "r")
+    addCommit(r, "a.txt", "a\n", "R1", "2024-07-02T00:00:00Z")
+    addCommit(r, "b.txt", "b\n", "R2", "2024-07-03T00:00:00Z")
+    GitEtlIncr.run(spark, root, dir)
+    addCommit(s, "s.txt", "s\nmore\n", "S2", "2024-07-04T00:00:00Z")
+    Files.writeString(r.resolve("b.txt"), "b amended\n")
+    git(r, "add", ".")
+    commit(r, "R2 amended", "2024-07-05T00:00:00Z", amend = true)
+    addCommit(initRepo(root, "n"), "n.txt", "n\n", "N1", "2024-07-06T00:00:00Z")
+
+    val (rep, jobs) = JobCount(spark)(GitEtlIncr.run(spark, root, dir))
+    val modes = rep.modes.map { case (p, m) => java.nio.file.Paths.get(p).getFileName.toString -> m }
+    assert(modes == Map("s" -> "since", "r" -> "rewind", "n" -> "full"), modes.toString)
+    assert((rep.batchLogs, rep.batchFiles) == (3L, 3L), rep.toString)
+    info(s"refresh: $jobs jobs")
+    assert(jobs <= 12, s"the refresh ran $jobs jobs")
+    assert(idsByName(dir) == Map("r" -> 1L, "s" -> 2L, "n" -> 3L))
+  }
 }

@@ -10,62 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class SinksSpec extends AnyFunSuite {
   import TestSpark._
 
-  test("csv and json sinks round-trip the orders table") {
-    val orders = Tables.orders(spark, sf).select("o_orderkey", "o_custkey", "o_orderstatus")
-    val tmp = Files.createTempDirectory("sinks").toString
-    Sinks.writeCsv(orders, s"$tmp/csv")
-    Sinks.writeJson(orders, s"$tmp/json")
-    val ddl = "o_orderkey bigint, o_custkey bigint, o_orderstatus string"
-    val backCsv = Sinks.readCsv(spark, s"$tmp/csv", ddl)
-    val backJson = Sinks.readJson(spark, s"$tmp/json", ddl)
-    assert(backCsv.count() == orders.count())
-    assert(backJson.count() == orders.count())
-    assert(backCsv.agg(sum("o_orderkey")).head.getLong(0) ==
-      orders.agg(sum("o_orderkey")).head.getLong(0))
-    // ORC round-trips schema-complete (self-describing like parquet)
-    Sinks.writeOrc(orders, s"$tmp/orc")
-    val backOrc = Sinks.readOrc(spark, s"$tmp/orc")
-    assert(backOrc.schema == orders.schema)
-    assert(backOrc.count() == orders.count())
-    assert(backOrc.agg(sum("o_orderkey")).head.getLong(0) ==
-      orders.agg(sum("o_orderkey")).head.getLong(0))
-  }
-
-  test("date-partitioned parquet prunes partitions on the filter") {
-    val tmp = Files.createTempDirectory("part").toString
-    Sinks.writeDatePartitioned(Tables.orders(spark, sf), "o_orderdate", s"$tmp/orders")
-    val dirs = new java.io.File(s"$tmp/orders").listFiles().count(_.getName.startsWith("p_date="))
-    assert(dirs > 1, "expected multiple date partitions")
-    val all = spark.read.parquet(s"$tmp/orders")
-    val someDay = all.select("p_date").limit(1).collect().head.getDate(0).toString
-    val oneDay = all.filter(col("p_date") === someDay)
-    // partition filter must reach the scan (directory pruning), not a post-filter
-    val plan = oneDay.queryExecution.executedPlan.toString
-    assert(oneDay.count() > 0)
-    assert(plan.contains("PartitionFilters"), plan.take(500))
-  }
-
-  test("bucketed tables join with zero exchange") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force non-broadcast path
-    try {
-      Sinks.writeBucketed(
-        Tables.orders(spark, sf).select("o_orderkey", "o_custkey", "o_totalprice"),
-        "o_orderkey", 8, "orders_b")
-      Sinks.writeBucketed(
-        Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity"),
-        "l_orderkey", 8, "lineitem_b")
-      val joined = spark.table("orders_b")
-        .join(spark.table("lineitem_b"), col("o_orderkey") === col("l_orderkey"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"bucketed join still shuffles:\n${plan.take(800)}")
-      assert(joined.count() == Tables.lineitem(spark, sf).count())
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.sql("DROP TABLE IF EXISTS orders_b")
-      spark.sql("DROP TABLE IF EXISTS lineitem_b")
-    }
-  }
-
   test("JDBC sink round-trips the reference's three-table contract (embedded Derby)") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("jdbc").toString
@@ -249,5 +193,37 @@ class SinksSpec extends AnyFunSuite {
     try assert(left.iterator().asScala.map(_.getFileName.toString).toSet ==
       Set("v1.manifest", "v2.manifest", "v3.manifest"))
     finally left.close()
+  }
+
+  test("snapshot reads take the footer schema: inferred schema, same rows, no job, footer row counts") {
+    val dir = Files.createTempDirectory("snap-footer").toString + "/tbl"
+    // nested, non-null element and decimal/timestamp columns: the footer
+    // schema must come back nullable throughout, as inference gives it
+    def df(from: Long, until: Long) = spark.range(from, until).select(
+      col("id"), col("id").cast("string").as("s"),
+      array(col("id"), lit(1L)).as("arr"),
+      struct(col("id").as("a"), lit("x").as("b")).as("st"),
+      map(lit("k"), col("id")).as("m"),
+      timestamp_seconds(col("id")).as("ts"),
+      (col("id") / 3).cast("decimal(18,2)").as("d"))
+    val v1 = Sinks.writeSnapshot(df(0, 10), dir) // overwrite
+    val v2 = Sinks.writeSnapshot(df(10, 15), dir, overwrite = false) // append
+    val v3 = Sinks.writeSnapshot(df(15, 15), dir, overwrite = false) // empty batch
+    assert(Sinks.writeSnapshotBatch(df(15, 20), dir, batchId = v3))
+    val own3 = new java.io.File(s"$dir/data/v$v3").listFiles().count(_.getName.endsWith(".parquet"))
+    assert(own3 == 1, s"an empty batch writes one empty part file, got $own3")
+    for ((v, added) <- Seq(v1 -> 10L, v2 -> 5L, v3 -> 0L, (v3 + 1) -> 5L)) {
+      val files = Files.readAllLines(java.nio.file.Paths.get(dir, "_manifests", s"v$v.manifest"))
+        .asScala.toSeq.filter(_.nonEmpty)
+      val inferred = spark.read.parquet(files: _*)
+      assert(Sinks.parquetSchema(spark, files.head) == inferred.schema, s"v$v")
+      val (snap, jobs) = JobCount(spark)(Sinks.readSnapshot(spark, dir, v))
+      info(s"readSnapshot v$v: $jobs jobs")
+      assert(jobs == 0, s"readSnapshot v$v ran $jobs jobs")
+      assert(snap.schema == inferred.schema, s"v$v")
+      assert(snap.orderBy("id").collect().toSeq == inferred.orderBy("id").collect().toSeq, s"v$v")
+      assert(Sinks.snapshotRowsAdded(spark, dir, v) == added, s"v$v")
+    }
+    assert(Sinks.readSnapshot(spark, dir).count() == 20)
   }
 }
