@@ -55,20 +55,23 @@ object GitEtl {
     * repository_id), changed_files(commit_hash, file_path,
     * repository_id) — DDL shapes from analyzer.rs:149-188 with an extra
     * epoch column for engine-neutral comparisons. "repositories",
-    * "failures" and "ignored" are local relations built on the driver.
+    * "repo_events" (the collected kind="repo" events, in repo_id
+    * order), "failures" and "ignored" are local relations built on the
+    * driver.
     */
   def dataframes(
       spark: SparkSession,
       root: Path,
       config: EtlConfig,
-      maxDepth: Int,
-      shardsPerRepo: Int = 1): Map[String, DataFrame] = {
+      maxDepth: Int): Map[String, DataFrame] = {
     import spark.implicits._
-    val ex = extract(spark, root, config, maxDepth, shardsPerRepo, Map.empty)
+    val ex = extract(spark, root, config, maxDepth, Map.empty)
     val dim = repoDim(ex.repos, Nil)
     val (logs, changedFiles) = normalizedTables(ex.events, dim, config.authorMap)
+    val byPath = ex.repos.map(e => e.repo_path -> e).toMap
     Map(
       "repositories" -> dim.toDF().select("repo_id", "name", "url"),
+      "repo_events" -> dim.sortBy(_.repo_id).map(r => byPath(r.path)).toDF(),
       "logs" -> logs,
       "changed_files" -> changedFiles,
       "failures" -> ex.errors.map(e => (e.repo_path, e.error)).toDF("path", "error"),
@@ -84,10 +87,10 @@ object GitEtl {
       events: DataFrame, ignored: Seq[String], repos: Seq[ExtractEvent], errors: Seq[ExtractEvent])
 
   /** The one extraction pipeline of the full and the incremental run:
-    * driver-side directory scan, then ONE job with one task per work
-    * item (repo, shard) — the reference's task-per-repo fanout,
+    * driver-side directory scan, then ONE job with one task and one
+    * `git log` per repo — the reference's task-per-repo fanout,
     * analyzer.rs:222-230 — and no shuffle: the work-list is
-    * parallelized one item per partition. ALL per-repo subprocess work
+    * parallelized one repo per partition. ALL per-repo subprocess work
     * runs inside the task ([[GitLogSource.extractRepo]]), so driver
     * prep is O(1) filesystem metadata per directory. `prevHeads` (repo
     * path → head recorded by the previous run) turns each repo's walk
@@ -101,16 +104,14 @@ object GitEtl {
     */
   private[etl] def extract(
       spark: SparkSession, root: Path, config: EtlConfig, maxDepth: Int,
-      shardsPerRepo: Int, prevHeads: Map[String, String]): Extraction = {
+      prevHeads: Map[String, String]): Extraction = {
     import spark.implicits._
     val (candidates, ignored) =
       GitLogSource.scanDirectories(root, maxDepth, config.ignoredRepositories)
-    val shards = math.max(1, shardsPerRepo)
-    val work = for (p <- candidates.map(_.toString); sh <- 0 until shards)
-      yield (p, prevHeads.get(p), sh)
+    val work = candidates.map(p => (p.toString, prevHeads.get(p.toString)))
     val events = spark.sparkContext
       .parallelize(work, math.max(1, work.size))
-      .flatMap { case (p, since, sh) => GitLogSource.extractRepo(Paths.get(p), since, sh, shards) }
+      .flatMap { case (p, since) => GitLogSource.extractRepo(Paths.get(p), since) }
       .toDF()
       .persist()
     val heads = events.filter(col("kind") =!= "commit").as[ExtractEvent].collect().toSeq
@@ -195,43 +196,25 @@ object GitEtl {
     (logs, changedFiles)
   }
 
-  /** One (kind, repo path) group of an extraction: `n` rows, and for
-    * kind="commit" the summed changed-file count in `files`. */
-  private[etl] final case class RepoGroup(
-      kind: String, path: String, name: String, url: String, error: String,
-      head: String, mode: String, n: Long, files: Long)
-
-  /** Materialize the run report from [[dataframes]] output in ONE
-    * aggregation over the cached extraction, collected to the driver:
-    * O(repos) rows, the same order as the work-list the driver already
-    * holds. The counts are the tables' own: logs and changed_files hold
-    * the commits of repos in the dimension, and the dimension is ranked
-    * by (name, path).
+  /** The run report of a [[dataframes]] map, from its local relations
+    * alone: no Spark job. Each repo's task counted its own commits and
+    * changed files into its kind="repo" event, and those are the
+    * tables' own counts — logs and changed_files hold exactly the
+    * commits of the repos in the dimension. Repos come in repo_id
+    * order, the one order the dimension defines.
     */
   def report(tables: Map[String, DataFrame]): EtlReport = {
-    val events = tables("events")
-    import events.sparkSession.implicits._
-    val ignored = tables("ignored").select(lit("ignored").as("kind"), col("name").as("repo_path"))
-    val groups = events.unionByName(ignored, allowMissingColumns = true)
-      .groupBy(col("kind"), col("repo_path").as("path"))
-      .agg(first("repo_name").as("name"), first("repo_url").as("url"),
-        first("error").as("error"), first("head").as("head"), first("mode").as("mode"),
-        count(lit(1)).as("n"),
-        coalesce(sum(when(col("kind") === "commit", size(col("commit.changed_files")))),
-          lit(0L)).as("files"))
-      .as[RepoGroup].collect().toSeq
-    def of(kind: String) = groups.filter(_.kind == kind)
-    val repos = of("repo").sortBy(g => (g.name, g.path))
-    val commits = of("commit").map(g => g.path -> g).toMap
-    val logged = repos.flatMap(r => commits.get(r.path))
+    val repoEvents = tables("repo_events")
+    import repoEvents.sparkSession.implicits._
+    val repos = repoEvents.as[ExtractEvent].collect().toSeq
     EtlReport(
-      analyzed = repos.map(_.name),
-      ignored = of("ignored").sortBy(_.path).flatMap(g => Seq.fill(g.n.toInt)(g.path)),
-      failed = of("error").map(g => g.path -> g.error).toMap,
-      nLogs = logged.map(_.n).sum,
-      nChangedFiles = logged.map(_.files).sum,
+      analyzed = repos.map(_.repo_name),
+      ignored = tables("ignored").as[String].collect().toSeq,
+      failed = tables("failures").as[(String, String)].collect().toMap,
+      nLogs = repos.map(_.commits).sum,
+      nChangedFiles = repos.map(_.files).sum,
       // the reference's per-repo progress lines, rendered post-hoc;
-      // zero-commit repos keep n = 0
-      commitsPerRepo = repos.map(r => r.name -> commits.get(r.path).fold(0L)(_.n)))
+      // zero-commit repos keep 0
+      commitsPerRepo = repos.map(r => r.repo_name -> r.commits))
   }
 }

@@ -93,7 +93,7 @@ object GitEtlIncr {
       else Nil
     val prevHeads = prev.flatMap(r => Option(r.head).map(r.path -> _)).toMap
 
-    val ex = GitEtl.extract(spark, root, config, maxDepth, shardsPerRepo = 1, prevHeads)
+    val ex = GitEtl.extract(spark, root, config, maxDepth, prevHeads)
     val dim = GitEtl.repoDim(ex.repos, prev)
     val (logsAll, filesAll) = GitEtl.normalizedTables(ex.events, dim, config.authorMap)
 

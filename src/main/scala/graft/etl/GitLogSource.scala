@@ -1,10 +1,9 @@
 package graft.etl
 
-import java.io.{BufferedInputStream, BufferedReader, BufferedWriter, ByteArrayOutputStream, File,
-  IOException, InputStream, InputStreamReader, OutputStream, OutputStreamWriter}
+import java.io.{BufferedInputStream, BufferedReader, ByteArrayOutputStream, File,
+  IOException, InputStream, InputStreamReader}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
-import java.util.concurrent.TimeUnit
 import scala.jdk.CollectionConverters._
 import scala.sys.process._
 import scala.util.Try
@@ -34,7 +33,9 @@ final case class CommitRow(
   *  - kind="repo":   the path validated as a git repository (url set);
   *    emitted even when the history yields zero non-merge commits, so
   *    the repositories table includes empty/all-merge repos exactly as
-  *    the reference does (analyzer.rs:299-310);
+  *    the reference does (analyzer.rs:299-310). It ends its repo's
+  *    stream and counts what came before it: `commits` rows, and
+  *    `files` summed `changed_files` sizes;
   *  - kind="commit": one extracted commit (commit set);
   *  - kind="error":  validation failed (error set) — the reference's
   *    silent skip (analyzer.rs:351) surfaced as data.
@@ -50,7 +51,9 @@ final case class ExtractEvent(
     // (an incremental run's next frontier) and how this run extracted
     // it — full | since | noop | rewind
     head: String = null,
-    mode: String = null)
+    mode: String = null,
+    commits: Long = 0L,
+    files: Long = 0L)
 
 /** Git history extraction via `git log` parsing (the JVM has no
   * bundled JGit in /opt/spark/jars, and libgit2 is C — parsing
@@ -162,7 +165,7 @@ object GitLogSource {
     raw.replace("git@github.com:", "https://github.com/")
   }
 
-  /** `git log` arguments shared by the plain and the sharded walk.
+  /** `git log` arguments of the walk.
     *
     * `-z` NUL-separates commits and NUL-terminates every numstat path
     * (renames arrive as an empty path slot followed by two standalone
@@ -216,21 +219,17 @@ object GitLogSource {
     *    again; the append's anti-join against the committed keys
     *    re-covers the repo, never doubles it.
     *
-    * `shards > 1` is the giant-repo straggler mitigation: shard `shard`
-    * extracts only the commits whose hash falls in its slice, so one
-    * huge history spreads over several tasks. Only shard 0 emits the
-    * "repo" / "error" event (one dimension row per repo); every shard
-    * validates (a rev-parse is cheap next to its slice).
-    *
-    * The "repo" event carries the head (the next run's frontier) and
-    * the mode taken.
+    * One task walks one repo with one `git log`, so it counts what it
+    * emits: the "repo" event comes LAST, built once the walk has ended
+    * (`Iterator.++` takes its tail lazily), and carries the head (the
+    * next run's frontier), the mode taken, and the repo's `commits` and
+    * `files` — the run report's per-repo numbers, with no pass over
+    * the commits.
     */
-  def extractRepo(path: Path, since: Option[String] = None,
-                  shard: Int = 0, shards: Int = 1): Iterator[ExtractEvent] = {
+  def extractRepo(path: Path, since: Option[String] = None): Iterator[ExtractEvent] = {
     val name = path.getFileName.toString
-    def lead(ev: => ExtractEvent) = if (shard == 0) Iterator.single(ev) else Iterator.empty
     validateRepo(path) match {
-      case Left(err) => lead(ExtractEvent("error", name, path.toString, null, err, null))
+      case Left(err) => Iterator.single(ExtractEvent("error", name, path.toString, null, err, null))
       case Right(head) =>
         val url = remoteUrl(path.toFile)
         val mode = since match {
@@ -240,21 +239,16 @@ object GitLogSource {
           case Some(_)                                  => "rewind"
         }
         val rev = if (mode == "since") s"${since.get}..$head" else head
-        def commits =
-          if (mode == "noop") Iterator.empty
-          else if (shards <= 1) streamLog(path, name, url, rev)
-          else streamShard(path, name, url, rev, shard, shards)
-        lead(ExtractEvent("repo", name, path.toString, url, null, null, head, mode)) ++
-          commits.map(c => ExtractEvent("commit", name, path.toString, url, null, c))
+        var commits = 0L
+        var files = 0L
+        val walk = if (mode == "noop") Iterator.empty else streamLog(path, name, url, rev)
+        walk.map { c =>
+          commits += 1; files += c.changed_files.size
+          ExtractEvent("commit", name, path.toString, url, null, c)
+        } ++ Iterator.single(
+          ExtractEvent("repo", name, path.toString, url, null, null, head, mode, commits, files))
     }
   }
-
-  /** A commit's shard: uniform from its leading hash bits — no global
-    * index pass needed, every shard streams the (cheap, diff-free)
-    * rev-list independently and keeps its slice.
-    */
-  private[etl] def shardOf(hash: String, shards: Int): Int =
-    (java.lang.Long.parseLong(hash.substring(0, 8), 16) % shards).toInt
 
   /** One git subprocess in `dir`. Stderr is drained concurrently (a
     * chatty git would otherwise block on a full pipe) into a bounded
@@ -264,6 +258,7 @@ object GitLogSource {
     private val proc = new java.lang.ProcessBuilder(
       (Seq("git", "-c", "diff.ignoreSubmodules=all", "-c", "core.quotePath=false", sub) ++
         args): _*).directory(dir.toFile).start()
+    proc.getOutputStream.close() // git reads no stdin
     private val tail = new StringBuilder
     private val drainer = new Thread(() => {
       val r = new BufferedReader(new InputStreamReader(proc.getErrorStream, UTF_8))
@@ -273,21 +268,16 @@ object GitLogSource {
           tail.synchronized { if (tail.length < 4096) tail.append(line).append('\n') }
           line = r.readLine()
         }
-      } catch { case _: IOException => () } // stream closed by a kill
+      } catch { case _: IOException => () } // stream closed under us
     }, s"git-$sub-stderr-${dir.getFileName}")
     drainer.setDaemon(true)
     drainer.start()
 
     def stdout: InputStream = proc.getInputStream
-    def stdin: OutputStream = proc.getOutputStream
 
-    /** Waits for the exit — at most `waitS` seconds when positive, then
-      * kills — and throws on a nonzero status. */
-    def check(waitS: Long = 0L): Unit = {
-      val code =
-        if (waitS <= 0) proc.waitFor()
-        else if (proc.waitFor(waitS, TimeUnit.SECONDS)) proc.exitValue()
-        else { proc.destroyForcibly(); -1 }
+    /** Waits for the exit and throws on a nonzero status. */
+    def check(): Unit = {
+      val code = proc.waitFor()
       if (code != 0) {
         drainer.join(1000)
         throw new RuntimeException(
@@ -302,65 +292,8 @@ object GitLogSource {
     */
   private def streamLog(path: Path, name: String, url: String, rev: String): Iterator[CommitRow] = {
     val log = new GitProcess(path, "log", logArgs ++ Seq(rev, "--"))
-    log.stdin.close()
     parseTokens(nulTokens(new BufferedInputStream(log.stdout), onEof = () => log.check()),
       name, path.toString, url)
-  }
-
-  /** Pipe `git rev-list` (metadata-only walk) through a shard filter
-    * into `git log --stdin --no-walk=unsorted`, which diffs ONLY the
-    * fed commits — output bytes are the same -z grammar parseTokens
-    * already handles (verified against git 2.x).
-    */
-  private def streamShard(path: Path, name: String, url: String, rev: String,
-                          shard: Int, shards: Int): Iterator[CommitRow] = {
-    val revList = new GitProcess(path, "rev-list", Seq("--no-merges", rev, "--"))
-    revList.stdin.close()
-    val revIn = new BufferedReader(new InputStreamReader(revList.stdout, UTF_8))
-    def owned(h: String) = h.length >= 8 && shardOf(h, shards) == shard
-
-    // Find the first owned hash BEFORE starting git log: `git log
-    // --stdin` with empty stdin falls back to HEAD (verified), so an
-    // empty shard must never launch the log process at all — it would
-    // re-emit the entire history.
-    var first = revIn.readLine()
-    while (first != null && !owned(first)) first = revIn.readLine()
-    if (first == null) { revList.check(); Iterator.empty }
-    else {
-      val log = new GitProcess(path, "log",
-        logArgs.filterNot(_ == "--date-order") ++ Seq("--no-walk=unsorted", "--stdin"))
-      // feeder: stream rev-list -> shard filter -> log stdin; a thread
-      // so both pipes flow without buffering the history anywhere. If
-      // git log dies mid-stream the writes hit EPIPE — swallow it (the
-      // exit-status check below raises the loud failure) but stop
-      // feeding.
-      val firstHash = first
-      val feeder = new Thread(() => {
-        val out = new BufferedWriter(new OutputStreamWriter(log.stdin, UTF_8))
-        try {
-          var h = firstHash
-          while (h != null) {
-            if (owned(h)) { out.write(h); out.write('\n') }
-            h = revIn.readLine()
-          }
-        } catch { case _: IOException => () } // EPIPE: log died
-        finally Try(out.close())
-      }, s"git-shard-feeder-$name-$shard")
-      feeder.setDaemon(true)
-      feeder.start()
-
-      val tokens = nulTokens(new BufferedInputStream(log.stdout), onEof = () => {
-        // log's stdout hit EOF, so log is exiting — but rev-list may be
-        // wedged writing to a pipe nobody drains anymore (the feeder
-        // stops on EPIPE when log aborts mid-stream): a plain wait
-        // could hang the task forever, so bound it and kill. A log
-        // failure is the cause to report.
-        val logDone = Try(log.check())
-        val revDone = Try(revList.check(waitS = 10))
-        logDone.flatMap(_ => revDone).get
-      })
-      parseTokens(tokens, name, path.toString, url)
-    }
   }
 
   /** Lazy NUL-token reader over a raw byte stream. Tokens are UTF-8

@@ -8,7 +8,7 @@ import java.nio.file.Paths
   *
   *   runMain graft.etl.Main <root> --out /path/tables \
   *     [--config config.toml] [--max-depth 1] [--recursive] \
-  *     [--num-threads N] [--clear]
+  *     [--num-threads N] ([--clear] | --incremental)
   *
   * and gets the same three tables as parquet (SQLite → parquet is the
   * one interface change; the JDBC writer shape in graft.sources.Sinks
@@ -17,68 +17,75 @@ import java.nio.file.Paths
   * repositories, skipped directories.
   */
 object Main {
-  def main(args: Array[String]): Unit = {
-    if (args.isEmpty) {
-      System.err.println(
-        "usage: graft.etl.Main <root> --out <dir> [--config <toml>] " +
-          "[--max-depth N] [--recursive] [--num-threads N] " +
-          "([--shards N] [--clear] | --incremental)\n" +
-          "       (--database is accepted as an alias for --out, matching the reference CLI;\n" +
-          "        --incremental appends only new commits since the last run's recorded\n" +
-          "        heads to snapshot-versioned tables under --out)")
-      sys.exit(2)
-    }
-    val root = Paths.get(args(0))
-    var out = "git-tables"
-    var configPath: Option[String] = None
-    var maxDepth = 1
-    var maxDepthSet = false
-    var recursive = false
-    var shards: Option[Int] = None // >1 spreads giant repos over several tasks
-    var threads = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    var incremental = false
-    var clear = false
-    var i = 1
-    def value(flag: String): String = {
-      if (i + 1 >= args.length) {
-        System.err.println(s"$flag requires a value"); sys.exit(2)
-      }
-      args(i + 1)
-    }
-    while (i < args.length) {
-      args(i) match {
-        case "--out"         => out = value("--out"); i += 2
-        // reference flag name (analyzer.rs:32-62): same meaning, the
-        // target is a table directory here rather than a .db file
-        case "--database"    => out = value("--database"); i += 2
-        case "--config"      => configPath = Some(value("--config")); i += 2
-        case "--max-depth"   => maxDepth = value("--max-depth").toInt; maxDepthSet = true; i += 2
-        case "--recursive"   => recursive = true; i += 1 // analyzer.rs:32-62 parity
-        case "--shards"      => shards = Some(value("--shards").toInt); i += 2
-        case "--num-threads" => threads = value("--num-threads").toInt; i += 2
-        case "--incremental" => incremental = true; i += 1 // since-snapshot mode
-        case "--clear"       => clear = true; i += 1 // parquet overwrite is implicit
-        case other => System.err.println(s"unknown arg: $other"); sys.exit(2)
-      }
-    }
-    // the incremental run extracts each repo in one task and appends
-    // to versioned tables: neither flag has a meaning there
-    if (incremental && (shards.nonEmpty || clear)) {
-      System.err.println("--incremental takes neither --shards nor --clear")
-      sys.exit(2)
-    }
+
+  /** A parsed command line. `maxDepth = None` is 1, or no bound with
+    * `recursive`; `threads = None` is `SPARK_GRAFT_CPUS`, else 8. */
+  final case class Args(
+      root: String, out: String = "git-tables", config: Option[String] = None,
+      maxDepth: Option[Int] = None, recursive: Boolean = false,
+      threads: Option[Int] = None, incremental: Boolean = false, clear: Boolean = false) {
     // --recursive without an explicit --max-depth means "no bound",
     // like the reference; with one, --max-depth caps the recursion
-    if (recursive && !maxDepthSet) maxDepth = Int.MaxValue
+    def depth: Int = maxDepth.getOrElse(if (recursive) Int.MaxValue else 1)
+  }
+
+  val Usage =
+    "usage: graft.etl.Main <root> --out <dir> [--config <toml>] " +
+      "[--max-depth N] [--recursive] [--num-threads N] ([--clear] | --incremental)\n" +
+      "       (--database is accepted as an alias for --out, matching the reference CLI;\n" +
+      "        --incremental appends only new commits since the last run's recorded\n" +
+      "        heads to snapshot-versioned tables under --out)"
+
+  /** Parses the command line: the root directory first, then flags. */
+  def parseArgs(args: Seq[String]): Either[String, Args] = {
+    def positive(flag: String, v: String)(set: Int => Args): Either[String, Args] =
+      v.toIntOption.filter(_ > 0).map(set).toRight(s"$flag needs a positive integer, got '$v'")
+    def flags(rest: List[String], a: Args): Either[String, Args] = rest match {
+      case Nil =>
+        // the incremental run appends to versioned tables: --clear has
+        // no meaning there
+        if (a.incremental && a.clear) Left("--incremental takes no --clear") else Right(a)
+      // --database is the reference's flag name (analyzer.rs:32-62):
+      // same meaning, the target is a table directory here
+      case ("--out" | "--database") :: v :: tail => flags(tail, a.copy(out = v))
+      case "--config" :: v :: tail => flags(tail, a.copy(config = Some(v)))
+      case "--max-depth" :: v :: tail =>
+        positive("--max-depth", v)(n => a.copy(maxDepth = Some(n))).flatMap(flags(tail, _))
+      case "--num-threads" :: v :: tail =>
+        positive("--num-threads", v)(n => a.copy(threads = Some(n))).flatMap(flags(tail, _))
+      case "--recursive" :: tail => flags(tail, a.copy(recursive = true))
+      case "--incremental" :: tail => flags(tail, a.copy(incremental = true))
+      case "--clear" :: tail => flags(tail, a.copy(clear = true)) // parquet overwrite is implicit
+      case flag :: Nil if Set("--out", "--database", "--config", "--max-depth", "--num-threads")(flag) =>
+        Left(s"$flag requires a value")
+      case other :: _ => Left(s"unknown argument '$other'")
+    }
+    args.toList match {
+      case root :: tail if !root.startsWith("--") => flags(tail, Args(root))
+      case _ => Left("the root directory comes first")
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val a = parseArgs(args.toSeq) match {
+      case Right(parsed) => parsed
+      case Left(err) =>
+        System.err.println(s"$err\n$Usage")
+        sys.exit(2)
+    }
+    val root = Paths.get(a.root)
+    val out = a.out
+    val maxDepth = a.depth
+    val threads = a.threads.getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
 
     val spark = graft.Sessions.local(threads, "spark.app.name" -> "graft-git-etl")
 
     // analyzer.rs:53-54, 137-144 parity: explicit --config fails loudly
     // when missing; no --config picks up ./config.toml if present
-    val config = EtlConfig.resolve(configPath.map(Paths.get(_)))
+    val config = EtlConfig.resolve(a.config.map(Paths.get(_)))
     val t0 = System.nanoTime()
 
-    if (incremental) {
+    if (a.incremental) {
       // since-snapshot mode: only new commits extract; tables are the
       // snapshot-versioned manifest-log layout (GitEtlIncr scaladoc)
       val rep = GitEtlIncr.run(spark, root, out, config, maxDepth)
@@ -95,7 +102,7 @@ object Main {
     }
 
     // Live progress during the long pole (the reference's per-repo
-    // bars, analyzer.rs:282): one Spark task = one (repo, shard), and
+    // bars, analyzer.rs:282): one Spark task = one repo, and
     // `dataframes` runs the extraction as ONE single-stage job, so that
     // job's task-end stream IS per-repo completion. Per-repo commit
     // counts still print post-hoc — task completion order is not repo
@@ -126,7 +133,7 @@ object Main {
     spark.sparkContext.addSparkListener(progress)
     spark.sparkContext.setJobGroup("graft-extract", "git extraction progress")
     val tables =
-      try GitEtl.dataframes(spark, root, config, maxDepth, shards.getOrElse(1))
+      try GitEtl.dataframes(spark, root, config, maxDepth)
       finally spark.sparkContext.clearJobGroup()
     GitEtl.write(tables, out)
     val report = GitEtl.report(tables)

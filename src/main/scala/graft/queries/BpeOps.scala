@@ -93,7 +93,7 @@ object BpeOps {
     * merge table is MODEL-sized (K driver-local rows — a
     * LocalRelation, no recompute risk); the per-doc encode table is
     * O(docs). Both are exactly what a production pipeline persists
-    * once per tokenizer fit (the [[graft.sources.Sinks.writeMergeTable]]
+    * once per tokenizer fit (the [[graft.sources.Sinks.writeModel]]
     * path BpeSpec round-trips).
     */
   private[graft] object SharedBpe {
@@ -162,7 +162,7 @@ object BpeOps {
     * not re-run the K driver-round-trip training aggregations).
     * `mergeTable` is [[q_bpe_train]]'s output schema
     * (step, lhs, rhs, merged, cnt) from ANY source — typically a
-    * [[graft.sources.Sinks.writeMergeTable]] round-trip, the same
+    * [[graft.sources.Sinks.writeModel]] round-trip, the same
     * persisted-model stance as the fingerprint index. The table is
     * MODEL-sized (K rows), collected once in step order and applied
     * as a chain of K codegen'd literal `replace`s over each word's
@@ -214,7 +214,7 @@ object BpeOps {
     * call, so the applied fit IS the reported fit by construction
     * (the DuckDB oracle mirrors the same composition). Production
     * code should train once, persist via
-    * [[graft.sources.Sinks.writeMergeTable]], and call [[encodeWith]]
+    * [[graft.sources.Sinks.writeModel]], and call [[encodeWith]]
     * per corpus — BpeSpec pins persisted-table encode ≡ this
     * composition.
     */

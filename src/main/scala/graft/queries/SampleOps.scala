@@ -748,7 +748,7 @@ object SampleOps {
     * count), materialized once (its lineage is two corpus scans and
     * q_dsir references it twice — twice-referenced-state rule; the
     * row count is model-sized, so the checkpoint is kilobytes).
-    * Persist with [[graft.sources.Sinks.writeDsirModel]] and score
+    * Persist with [[graft.sources.Sinks.writeModel]] and score
     * streams online via [[graft.streaming.StreamingOps
     * .streamingDsirScore]] — the train-once/score-often split, same
     * stance as the BPE merge table and the fp index.

@@ -285,7 +285,7 @@ object UnigramOps {
 
   /** Encode the corpus with an ALREADY-TRAINED (piece, score) model
     * table from ANY source — typically a
-    * [[graft.sources.Sinks.writeUnigramModel]] round trip of
+    * [[graft.sources.Sinks.writeModel]] round trip of
     * [[q_unigram_train]]'s output (accepts either `score` or the
     * train key's `score_fp` column name). The production encode
     * path, mirroring [[BpeOps.encodeWith]]: a pipeline encodes

@@ -153,46 +153,25 @@ object Sinks {
       .write.mode(mode).parquet(out)
 
   def readFpIndex(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    readModel(spark, path)
 
-  /** Persist a trained BPE merge table ([[graft.queries.BpeOps
-    * .q_bpe_train]]'s output: step, lhs, rhs, merged, cnt) — the
-    * train-once side of the train-once/encode-often split. The table
-    * is MODEL-sized (K rows), so a single parquet file; read back
-    * with [[readMergeTable]] and encode via
-    * [[graft.queries.BpeOps.encodeWith]].
+  /** Persist a trained model table — the train-once side of a
+    * train-once/apply-often split: a BPE merge table
+    * ([[graft.queries.BpeOps.q_bpe_train]]'s step, lhs, rhs, merged,
+    * cnt; encode via [[graft.queries.BpeOps.encodeWith]]), a unigram-LM
+    * (piece, score) table ([[graft.queries.UnigramOps.encodeWithModel]]
+    * segments without re-running EM), or a DSIR bucket model
+    * ([[graft.queries.SampleOps.dsirModel]]; scored by
+    * [[graft.streaming.StreamingOps.streamingDsirScore]]). A model is
+    * small, so it is one parquet file; read it back with [[readModel]].
     */
-  def writeMergeTable(mergeTable: DataFrame, out: String): Unit =
-    mergeTable.coalesce(1).write.mode(SaveMode.Overwrite).parquet(out)
-
-  def readMergeTable(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** Persist a trained unigram-LM tokenizer model
-    * ([[graft.queries.UnigramOps.q_unigram_train]]'s output or any
-    * (piece, score) table) — the train-once side of the unigram
-    * train-once/encode-often split;
-    * [[graft.queries.UnigramOps.encodeWithModel]] reads it back and
-    * segments a corpus without re-running EM (the
-    * [[writeMergeTable]] stance for the BPE family).
-    */
-  def writeUnigramModel(model: DataFrame, out: String): Unit =
+  def writeModel(model: DataFrame, out: String): Unit =
     model.coalesce(1).write.mode(SaveMode.Overwrite).parquet(out)
 
-  def readUnigramModel(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** Persist a trained DSIR bucket model ([[graft.queries.SampleOps
-    * .dsirModel]]'s output: b, r, t — 1024 rows) — the train-once
-    * side of DSIR's train-once/score-often split; the streaming
-    * scorer ([[graft.streaming.StreamingOps.streamingDsirScore]])
-    * reads it back and scores arriving documents statelessly.
-    */
-  def writeDsirModel(model: DataFrame, out: String): Unit =
-    model.coalesce(1).write.mode(SaveMode.Overwrite).parquet(out)
-
-  def readDsirModel(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** A table this object wrote, read with its footer schema
+    * ([[parquetSchema]]): no schema-inference job. */
+  def readModel(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
 
   /** The reference's full `.db` contract: repositories / logs /
     * changed_files written into one embedded database

@@ -119,7 +119,7 @@ object StreamingOps {
   /** STATELESS streaming DSIR scorer — the online half of
     * [[graft.queries.SampleOps.q_dsir]]: score arriving documents
     * against a PERSISTED bucket model ([[graft.queries.SampleOps
-    * .dsirModel]] via Sinks.writeDsirModel/readDsirModel) with zero
+    * .dsirModel]] via Sinks.writeModel/readModel) with zero
     * state. The 1024-row model collects into two map LITERALS (the
     * broadcast-the-model stance — kilobytes); the corpus-mean gate
     * constants derive from the model alone (ΣN = Σr; ΣL = Σ r_b·lfp_b

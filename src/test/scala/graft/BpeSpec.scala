@@ -134,8 +134,8 @@ class BpeSpec extends AnyFunSuite {
     // oracle key
     val dir = java.nio.file.Files.createTempDirectory("bpe_merges").toString
     val trained = graft.queries.BpeOps.q_bpe_train(spark, TestSpark.sf)
-    graft.sources.Sinks.writeMergeTable(trained, s"$dir/merges")
-    val persisted = graft.sources.Sinks.readMergeTable(spark, s"$dir/merges")
+    graft.sources.Sinks.writeModel(trained, s"$dir/merges")
+    val persisted = graft.sources.Sinks.readModel(spark, s"$dir/merges")
     val viaTable = graft.queries.BpeOps.encodeWith(spark, TestSpark.sf, persisted)
       .collect().toSeq
     val composed = SparkEntry.queries("q_bpe_encode")(spark, TestSpark.sf)
@@ -201,8 +201,8 @@ class BpeSpec extends AnyFunSuite {
   test("fertilityWith a persisted merge table equals the composed q_tok_fertility") {
     val dir = java.nio.file.Files.createTempDirectory("fert_merges").toString
     val trained = graft.queries.BpeOps.q_bpe_train(spark, TestSpark.sf)
-    graft.sources.Sinks.writeMergeTable(trained, s"$dir/merges")
-    val persisted = graft.sources.Sinks.readMergeTable(spark, s"$dir/merges")
+    graft.sources.Sinks.writeModel(trained, s"$dir/merges")
+    val persisted = graft.sources.Sinks.readModel(spark, s"$dir/merges")
     val viaTable = graft.queries.BpeOps.fertilityWith(spark, TestSpark.sf, persisted)
       .collect().toSeq
     val composed = SparkEntry.queries("q_tok_fertility")(spark, TestSpark.sf)

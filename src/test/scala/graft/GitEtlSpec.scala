@@ -109,26 +109,13 @@ class GitEtlSpec extends AnyFunSuite {
     assert(report.failed.keySet.map(p => java.nio.file.Paths.get(p).getFileName.toString) == Set("data"))
   }
 
-  test("report: every field equals the tables' own value, in at most 3 jobs") {
+  test("report: every field equals the tables' own value, in no Spark job") {
     import org.apache.spark.sql.functions.{coalesce, col, count, lit}
     val t = GitEtl.dataframes(spark, root, config, maxDepth = 1)
-    t("events").foreach(_ => ()) // extraction runs before the report, as in Main
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    val rep = try GitEtl.report(t) finally {
-      org.apache.spark.ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    assert(jobs.get <= 3, s"report ran ${jobs.get} jobs")
+    val (rep, jobs) = JobCount(spark)(GitEtl.report(t))
+    assert(jobs == 0, s"report ran $jobs jobs")
     assert(rep.analyzed ==
-      t("repositories").select("name").collect().map(_.getString(0)).toSeq.sorted)
+      t("repositories").collect().sortBy(_.getAs[Long]("repo_id")).map(_.getAs[String]("name")).toSeq)
     assert(rep.ignored == t("ignored").collect().map(_.getString(0)).toSeq)
     assert(rep.failed ==
       t("failures").collect().map(r => r.getString(0) -> r.getString(1)).toMap)
@@ -137,14 +124,36 @@ class GitEtlSpec extends AnyFunSuite {
     val perRepo = t("logs").groupBy("repository_id").agg(count(lit(1)).as("n"))
       .join(t("repositories"), col("repository_id") === col("repo_id"), "right")
       .select(col("name"), coalesce(col("n"), lit(0L)), col("repo_id"))
-      .collect().sortBy(r => (r.getString(0), r.getLong(2)))
+      .collect().sortBy(_.getLong(2))
       .map(r => r.getString(0) -> r.getLong(1)).toSeq
     assert(rep.commitsPerRepo == perRepo)
     assert(perRepo == Seq("repo1" -> 7L, "repo2" -> 2L))
     t("events").unpersist()
   }
 
-  test("sharded extraction names git's stderr when rev-list fails") {
+  test("report: repos in repo_id order, the dimension's UTF-8 byte order") {
+    // U+FF41 is EF BD 81 in UTF-8 but FF41 in UTF-16; U+1F600 is
+    // F0 9F 98 80 but D83D DE00: the two orders disagree
+    val r = Files.createTempDirectory("etl-order")
+    for (name <- Seq("\uFF41", "\uD83D\uDE00")) {
+      val repo = Files.createDirectory(r.resolve(name))
+      git(repo, "init", "-q", "-b", "main")
+      git(repo, "config", "user.email", "o@x.io")
+      git(repo, "config", "user.name", "O")
+      Files.writeString(repo.resolve("f.txt"), s"$name\n")
+      git(repo, "add", ".")
+      commit(repo, s"$name commit", date = "2024-08-01T00:00:00Z")
+    }
+    val t = GitEtl.dataframes(spark, r, EtlConfig(), maxDepth = 1)
+    val rep = GitEtl.report(t)
+    val byId = t("repositories").collect().sortBy(_.getAs[Long]("repo_id")).map(_.getAs[String]("name")).toSeq
+    assert(byId == Seq("\uFF41", "\uD83D\uDE00"))
+    assert(rep.analyzed == byId)
+    assert(rep.commitsPerRepo == byId.map(_ -> 1L))
+    t("events").unpersist()
+  }
+
+  test("extraction names git's stderr when git log fails") {
     val r = Files.createTempDirectory("etl-corrupt")
     val repo = Files.createDirectory(r.resolve("corrupt"))
     git(repo, "init", "-q", "-b", "main")
@@ -160,10 +169,8 @@ class GitEtlSpec extends AnyFunSuite {
     // HEAD still resolves (validation passes) but the walk cannot read
     // the root commit
     Files.delete(repo.resolve(".git/objects").resolve(rootHash.take(2)).resolve(rootHash.drop(2)))
-    val err = intercept[RuntimeException] {
-      (0 until 2).foreach(sh => GitLogSource.extractRepo(repo, shard = sh, shards = 2).foreach(_ => ()))
-    }
-    assert(err.getMessage.contains("git rev-list exited with"), err.getMessage)
+    val err = intercept[RuntimeException](GitLogSource.extractRepo(repo).foreach(_ => ()))
+    assert(err.getMessage.contains("git log exited with"), err.getMessage)
     assert(err.getMessage.contains(rootHash), err.getMessage)
   }
 
@@ -372,26 +379,6 @@ class GitEtlSpec extends AnyFunSuite {
     }
   }
 
-  test("sharded extraction equals unsharded (giant-repo straggler path)") {
-    val plain = GitEtl.dataframes(spark, root, config, maxDepth = 1)
-    val sharded = GitEtl.dataframes(spark, root, config, maxDepth = 1, shardsPerRepo = 3)
-    def logsKey(t: Map[String, org.apache.spark.sql.DataFrame]) =
-      t("logs").collect().map(r =>
-        (r.getAs[Long]("repository_id"), r.getAs[String]("commit_hash"),
-          r.getAs[Long]("insertions"), r.getAs[Long]("deletions"),
-          r.getAs[String]("message"))).toSet
-    def filesKey(t: Map[String, org.apache.spark.sql.DataFrame]) =
-      t("changed_files").collect().map(r =>
-        (r.getAs[Long]("repository_id"), r.getAs[String]("commit_hash"),
-          r.getAs[String]("file_path"))).toSet
-    assert(logsKey(sharded) == logsKey(plain))
-    assert(filesKey(sharded) == filesKey(plain))
-    assert(sharded("repositories").collect().map(_.toString).sorted.toSeq ==
-      plain("repositories").collect().map(_.toString).sorted.toSeq)
-    assert(GitEtl.report(sharded).analyzed == GitEtl.report(plain).analyzed)
-    sharded("events").unpersist(); plain("events").unpersist()
-  }
-
   test("diff-less commits with empty messages parse (root and non-root)") {
     // The -z stream can end right after %ct's NUL (no summary byte) —
     // must yield the "(no commit summary)" sentinel, not a crash.
@@ -459,10 +446,10 @@ class GitEtlSpec extends AnyFunSuite {
     assert(evs.count(_.kind == "commit") == 1)
   }
 
-  test("sharded extraction streams a 3000-commit history (rev-list output exceeds one pipe buffer)") {
-    // fast-import builds the history in one subprocess; 3000 hashes ≈
-    // 123KB of rev-list output, so the feeder thread must stream across
-    // pipe-buffer boundaries (the regime the tiny fixtures never hit)
+  test("extraction streams a 3000-commit history across many pipe buffers") {
+    // fast-import builds the history in one subprocess; 3000 commits of
+    // `git log` output span many pipe buffers, so the walk must stream
+    // across their boundaries (the regime the tiny fixtures never hit)
     val r = Files.createTempDirectory("etl-big")
     val repo = Files.createDirectory(r.resolve("big"))
     git(repo, "init", "-q", "-b", "main")
@@ -478,26 +465,20 @@ class GitEtlSpec extends AnyFunSuite {
     val fiFile = r.resolve("fi.txt")
     Files.writeString(fiFile, fi.toString)
     Process(Seq("bash", "-c", s"git fast-import --quiet < $fiFile"), repo.toFile).!!
-    val plain = GitLogSource.extractRepo(repo).filter(_.kind == "commit")
-      .map(_.commit.commit_hash).toSet
-    assert(plain.size == 3000)
-    val shards = 3
-    val sharded = (0 until shards).flatMap(sh =>
-      GitLogSource.extractRepo(repo, shard = sh, shards = shards).filter(_.kind == "commit")
-        .map(_.commit.commit_hash)).toSet
-    assert(sharded == plain, "sharded union must equal the full walk")
-    // shard slices are disjoint by construction (hash-partitioned)
-    val sizes = (0 until shards).map(sh =>
-      GitLogSource.extractRepo(repo, shard = sh, shards = shards).count(_.kind == "commit"))
-    assert(sizes.sum == 3000 && sizes.forall(_ > 0), sizes.toString)
+    val evs = GitLogSource.extractRepo(repo).toVector
+    assert(evs.filter(_.kind == "commit").map(_.commit.commit_hash).toSet.size == 3000)
+    assert(evs.last.kind == "repo" && evs.last.commits == 3000)
   }
 
-  test("extractRepo: repo event precedes commits; non-repos yield a single error event") {
+  test("extractRepo: the repo event comes last with its counts; non-repos yield an error") {
     val repo1 = root.resolve("repo1")
     val evs = GitLogSource.extractRepo(repo1).toVector
-    assert(evs.head.kind == "repo" && evs.head.repo_url == "(no remote url)")
-    assert(evs.tail.forall(_.kind == "commit"))
-    assert(evs.count(_.kind == "commit") == 7) // C1..C7, merge excluded
+    val repo = evs.last
+    assert(repo.kind == "repo" && repo.repo_url == "(no remote url)")
+    assert(evs.init.forall(_.kind == "commit"))
+    val commits = evs.init.map(_.commit)
+    assert(commits.size == 7) // C1..C7, merge excluded
+    assert(repo.commits == 7 && repo.files == commits.map(_.changed_files.size).sum)
     val bad = GitLogSource.extractRepo(root.resolve("data")).toVector
     assert(bad.map(_.kind) == Vector("error"))
     assert(bad.head.error.contains("not a git repository"))

@@ -72,7 +72,10 @@ class SinksSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("fp-index").resolve("fp").toString
     val existing = Tables.documents(spark, d).filter(col("source") === "src0")
     Sinks.writeFpIndex(existing, tmp)
-    val idx = Sinks.readFpIndex(spark, tmp)
+    // the read takes the footer schema: the inferred one, and no job
+    val (idx, readJobs) = JobCount(spark)(Sinks.readFpIndex(spark, tmp))
+    assert(readJobs == 0, s"readFpIndex ran $readJobs jobs")
+    assert(idx.schema == spark.read.parquet(tmp).schema)
     // round-trip: the index IS the distinct non-null fp set
     assert(idx.columns.toSeq == Seq("fp"))
     val expectedFps = existing

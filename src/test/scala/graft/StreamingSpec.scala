@@ -248,9 +248,9 @@ class StreamingSpec extends AnyFunSuite {
     // term depends only on the bucket, so the corpus totals decompose
     // over buckets exactly)
     val tmp = java.nio.file.Files.createTempDirectory("dsirm").resolve("m").toString
-    graft.sources.Sinks.writeDsirModel(
+    graft.sources.Sinks.writeModel(
       graft.queries.SampleOps.dsirModel(spark, TestSpark.sf), tmp)
-    val model = graft.sources.Sinks.readDsirModel(spark, tmp)
+    val model = graft.sources.Sinks.readModel(spark, tmp)
     val docs = Tables.documents(spark, TestSpark.sf)
       .select("doc_id", "lang", "text").collect()
       .map(r => Doc(ts("2024-01-01 10:00:00"), r.getAs[Long]("doc_id"),

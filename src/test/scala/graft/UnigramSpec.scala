@@ -164,9 +164,9 @@ class UnigramSpec extends AnyFunSuite {
   test("encodeWithModel on a persisted model table equals the composed q_unigram_encode") {
     val tmp = java.nio.file.Files.createTempDirectory("unimodel").toString
     val trained = graft.queries.UnigramOps.q_unigram_train(spark, fixtureDir)
-    graft.sources.Sinks.writeUnigramModel(
+    graft.sources.Sinks.writeModel(
       trained.select("piece", "score_fp"), s"$tmp/unigram_model.parquet")
-    val model = graft.sources.Sinks.readUnigramModel(
+    val model = graft.sources.Sinks.readModel(
       spark, s"$tmp/unigram_model.parquet")
     val viaModel = graft.queries.UnigramOps.encodeWithModel(spark, fixtureDir, model)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
