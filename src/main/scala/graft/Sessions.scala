@@ -10,7 +10,9 @@ object Sessions {
 
   /** `local[cores]` with shuffle partitions = cores, UTC session time
     * zone (timestamp-literal filters must not shift with the machine's
-    * zone), no UI and WARN logs. `extraConf` is applied over those
+    * zone), `nanosAsLong` (a TIMESTAMP(NANOS) column reads as the
+    * int64 [[Tables.events]] converts; Spark refuses it otherwise), no
+    * UI and WARN logs. `extraConf` is applied over those
     * defaults, and `SPARK_GRAFT_CONF="k=v;k=v"` over both — e.g.
     * `spark.sql.adaptive.enabled=false` for an AQE-off sweep, or
     * `spark.graft.hashFamily=xxh64` to A/B the dedup hash families.
@@ -20,6 +22,7 @@ object Sessions {
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
     val envConf = sys.env.get("SPARK_GRAFT_CONF").map(parseConf).getOrElse(Nil)
     (extraConf ++ envConf).foreach { case (k, v) => builder.config(k, v) }

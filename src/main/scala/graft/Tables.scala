@@ -1,18 +1,20 @@
 package graft
 
+import graft.sources.Sinks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, TimestampNTZType, TimestampType}
 
 /** Parquet table loaders for the driver testdata star schema
-  * (TESTDATA.md). Scans are plain `spark.read.parquet` so Catalyst
-  * pushes filters/projections into the parquet reader (SURVEY.md §2.1
-  * S8); at cluster scale the same call reads a partitioned directory
-  * tree, so nothing here assumes single-file inputs.
+  * (TESTDATA.md). Scans are [[Sinks.readParquet]], with the table's
+  * footer schema (no job), so Catalyst pushes filters/projections
+  * into the parquet reader (SURVEY.md §2.1 S8); at cluster scale the
+  * same call reads a table directory, so nothing here assumes
+  * single-file inputs.
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Sinks.readParquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
@@ -23,10 +25,10 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame  = table(s, d, "lineitem")
   /** Schema-adaptive events reader. The driver has shipped `events.ts`
     * in two physical forms so far: TIMESTAMP(NANOS) parquet (rounds 1–6;
-    * Spark 4 rejects it outright with PARQUET_TYPE_ILLEGAL, so we read
-    * it as a raw nanos long and rebuild a µs timestamp) and plain
-    * `timestamp[us]` NTZ (round 7+). Branch on the type Spark actually
-    * observes rather than hard-coding either era:
+    * read as a raw nanos long under [[Sessions.local]]'s nanosAsLong,
+    * and we rebuild a µs timestamp) and plain `timestamp[us]` NTZ
+    * (round 7+). Branch on the type Spark actually observes rather
+    * than hard-coding either era:
     *
     *   - LongType (nanosAsLong read of TIMESTAMP(NANOS)): integral
     *     `div 1000` — not `/` — because epoch-nanos (~1.7e18) exceeds
@@ -39,7 +41,6 @@ object Tables {
     *   - TimestampType: already what downstream queries expect.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = table(s, d, "events")
     df.schema("ts").dataType match {
       case LongType            =>

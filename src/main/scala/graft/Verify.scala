@@ -18,14 +18,11 @@ object Verify {
     // era it ran against, so a future drift is visible in the
     // driver's own artifacts rather than reconstructed from mtimes.
     try {
-      // nanosAsLong first, so the probe itself reads cleanly in the
-      // TIMESTAMP(NANOS) era instead of throwing PARQUET_TYPE_ILLEGAL
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$sfDir/events.parquet")
+      val ts = graft.sources.Sinks.parquetSchema(spark, s"$sfDir/events.parquet")("ts")
       val mtime = java.nio.file.Files.getLastModifiedTime(
         java.nio.file.Paths.get(s"$sfDir/events.parquet"))
       System.err.println(
-        s"[verify] env: events.ts physical=${raw.schema("ts").dataType.simpleString} " +
+        s"[verify] env: events.ts physical=${ts.dataType.simpleString} " +
           s"mtime=$mtime dir=$sfDir")
     } catch { case e: Throwable =>
       System.err.println(s"[verify] env probe failed: ${e.getMessage}")

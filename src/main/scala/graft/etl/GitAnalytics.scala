@@ -3,7 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.sources.Sinks
+import graft.Tables
 
 /** The downstream analytics a git-log-to-sqlite user runs over the
   * produced schema (README.md:51-78 documents the tables for exactly
@@ -12,22 +12,17 @@ import graft.sources.Sinks
   * would port 1:1.
   *
   * All inputs are the ETL output tables (read from `tablesDir` as
-  * written by [[GitEtl.write]]).
+  * written by [[GitEtl.write]]) through [[graft.Tables.table]], whose
+  * footer schema means constructing a query runs no job.
   */
 object GitAnalytics {
-
-  // the schema comes from one footer: constructing a query runs no job
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    s.read.schema(Sinks.parquetSchema(s, path)).parquet(path)
-  }
 
   /** Top-k most-changed files per repository — the canonical query the
     * schema exists for. Windowed rank with per-partition pruning
     * (WindowGroupLimit), joined back to repository names.
     */
   def topFilesPerRepo(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val counts = t(s, dir, "changed_files")
+    val counts = Tables.table(s, dir, "changed_files")
       .groupBy("repository_id", "file_path")
       .agg(count(lit(1)).as("n_changes"))
     val w = Window.partitionBy(col("repository_id"))
@@ -35,14 +30,14 @@ object GitAnalytics {
     counts
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
-      .join(broadcast(t(s, dir, "repositories")), col("repository_id") === col("repo_id"))
+      .join(broadcast(Tables.table(s, dir, "repositories")), col("repository_id") === col("repo_id"))
       .select(col("name").as("repo"), col("file_path"), col("n_changes"), col("rank"))
       .orderBy("repo", "rank")
   }
 
   /** Commit counts and churn per author per month. */
   def authorActivity(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "logs")
+    Tables.table(s, dir, "logs")
       .groupBy(
         col("author_name"),
         date_trunc("month", col("commit_datetime")).as("month"))
@@ -59,7 +54,7 @@ object GitAnalytics {
     val w = Window.partitionBy(col("repository_id"))
       .orderBy(col("commit_epoch"), col("commit_hash"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    t(s, dir, "logs")
+    Tables.table(s, dir, "logs")
       .select(
         col("repository_id"),
         col("commit_hash"),
@@ -72,7 +67,7 @@ object GitAnalytics {
   def commitCadence(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("repository_id"))
       .orderBy(col("commit_epoch"), col("commit_hash"))
-    t(s, dir, "logs")
+    Tables.table(s, dir, "logs")
       .select(
         col("repository_id"),
         (col("commit_epoch") - lag(col("commit_epoch"), 1).over(w)).as("gap_s"))
@@ -97,7 +92,7 @@ object GitAnalytics {
   def coChangedFiles(
       s: SparkSession, dir: String,
       minPairCount: Long = 2, maxFilesPerCommit: Int = 50): DataFrame = {
-    val cf = t(s, dir, "changed_files")
+    val cf = Tables.table(s, dir, "changed_files")
     val small = cf
       .groupBy("repository_id", "commit_hash")
       .agg(count(lit(1)).as("n_files"))
@@ -124,9 +119,9 @@ object GitAnalytics {
     * query), with their file lists aggregated back into arrays.
     */
   def searchCommits(s: SparkSession, dir: String, pattern: String): DataFrame =
-    t(s, dir, "logs")
+    Tables.table(s, dir, "logs")
       .filter(col("message").rlike(pattern))
-      .join(t(s, dir, "changed_files"), Seq("commit_hash", "repository_id"), "left")
+      .join(Tables.table(s, dir, "changed_files"), Seq("commit_hash", "repository_id"), "left")
       .groupBy("commit_hash", "repository_id", "message", "author_name", "commit_epoch")
       .agg(sort_array(collect_list(col("file_path"))).as("files"))
       .orderBy("commit_epoch", "commit_hash")

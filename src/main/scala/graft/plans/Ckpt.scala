@@ -22,18 +22,24 @@ import org.apache.spark.sql.functions.col
   * Audit hook (ADVICE r11 — the eager checkpoint truncates the
   * logical plan to a LogicalRDD, so any plan rule is BLIND to the
   * entire subtree beneath each checkpoint site, including every
-  * GlobalRank caller's upstream): with `spark.graft.ckptCapture=true`
-  * checkpoints still happen (so constructors that collect model
-  * tables keep their truncated, recompute-free lineage), but each
-  * site FIRST records its pre-checkpoint physical plan segment in
-  * [[drainCaptured]]'s queue. PlanAudit runs every rule over the
-  * final plan PLUS all captured segments — piecewise-complete
-  * coverage: every operator appears in exactly the segment between
-  * its two nearest checkpoints.
+  * GlobalRank caller's upstream): inside [[capturing]] checkpoints
+  * still happen (so constructors that collect model tables keep their
+  * truncated, recompute-free lineage), but each site FIRST records its
+  * pre-checkpoint physical plan segment in [[drainCaptured]]'s queue.
+  * PlanAudit runs every rule over the final plan PLUS all captured
+  * segments — piecewise-complete coverage: every operator appears in
+  * exactly the segment between its two nearest checkpoints.
   */
 object Ckpt {
   private val captured =
     new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+
+  private val capture = new scala.util.DynamicVariable(false)
+  private[graft] def isCapturing: Boolean = capture.value
+
+  /** Runs `body` with capture on, on this thread and threads it starts:
+    * [[maybe]] records each segment, [[SharedState]] bypasses its cache. */
+  def capturing[T](body: => T): T = capture.withValue(true)(body)
 
   /** Remove and return every plan segment captured since the last
     * drain. Single audit thread assumed — segments captured during
@@ -48,8 +54,7 @@ object Ckpt {
 
   /** The one checkpoint body: capture hook, then checkpoint. */
   def maybe(df: DataFrame): DataFrame = {
-    if (df.sparkSession.conf.get("spark.graft.ckptCapture", "false").toBoolean)
-      captured.add(df.queryExecution.sparkPlan)
+    if (isCapturing) captured.add(df.queryExecution.sparkPlan)
     df.localCheckpoint()
   }
 

@@ -73,10 +73,10 @@ object GlobalRank {
     * AUDIT HOOK: the checkpoint goes through [[Ckpt.maybe]], because
     * the eager localCheckpoint truncates lineage to a LogicalRDD —
     * any plan inspection of a caller's query is then BLIND to
-    * everything upstream of the rank. Under
-    * `spark.graft.ckptCapture=true` the pre-checkpoint segment (the
-    * caller's upstream plus the range exchange and sort) is queued
-    * for [[Ckpt.drainCaptured]], which is what PlanAudit scans.
+    * everything upstream of the rank. Inside [[Ckpt.capturing]] the
+    * pre-checkpoint segment (the caller's upstream plus the range
+    * exchange and sort) is queued for [[Ckpt.drainCaptured]], which
+    * is what PlanAudit scans.
     */
   def globalRowNumber(df: DataFrame, rankCol: String, sortCols: Column*): DataFrame = {
     val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt

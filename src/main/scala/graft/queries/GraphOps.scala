@@ -487,8 +487,8 @@ object GraphOps {
     * [[graft.plans.Ckpt.maybe]] is the same persist-once contract
     * with the session's lifetime as the retention policy.
     *
-    * Bypassed (recompute per key) under the audit axis
-    * `spark.graft.ckptCapture`: every key must capture its OWN full
+    * Bypassed (recompute per key) inside the audit's capture scope
+    * ([[graft.plans.Ckpt.capturing]]): every key must capture its OWN full
     * pre-checkpoint segment chain — a cache hit would leave PlanAudit
     * blind to the subtree for keys 2..n.
     */

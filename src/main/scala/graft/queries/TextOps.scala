@@ -663,7 +663,7 @@ object TextOps {
       documents(s, d).filter(col("source") === "src0"), idxPath)
     dedupIncrAgainst(
       documents(s, d).filter(col("source") =!= "src0"),
-      graft.sources.Sinks.readFpIndex(s, idxPath))
+      graft.sources.Sinks.readParquet(s, idxPath))
   }
 
   /** BPE merge-step — the inner loop of byte-pair-encoding tokenizer

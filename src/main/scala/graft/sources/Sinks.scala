@@ -2,21 +2,23 @@ package graft.sources
 
 import java.nio.file.{FileAlreadyExistsException, Files, Paths}
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
 /** Source/sink surface (SURVEY.md §2.1 S5-S8). The reference's only
   * sink is SQLite (analyzer.rs:146-346); the distributed equivalents:
   *
   *  - parquet (primary, columnar, pushdown-capable) — plain,
-  *    z-ordered, and snapshot-versioned; its own files are read back
-  *    with the schema of one footer ([[parquetSchema]]), so a read
-  *    runs no schema-inference job;
+  *    z-ordered, and snapshot-versioned; every parquet read goes
+  *    through [[readParquet]] with the schema of one footer
+  *    ([[parquetSchema]]), whoever wrote the file, so a read runs no
+  *    schema-inference job;
   *  - JDBC (the literal SQLite analog) — runnable and round-trip
   *    tested against embedded Derby (the JDBC driver that ships with
   *    Spark); SQLite itself is a url/driver swap away.
@@ -65,13 +67,13 @@ object Sinks {
     try r.getFooter finally r.close()
   }
 
-  /** The schema Spark's parquet writer stores in every file footer
-    * (key `org.apache.spark.sql.parquet.row.metadata`), read on the
-    * driver from ONE file: `path` itself, or the first `.parquet` file of a
-    * table directory. Passed to `spark.read.schema`, it replaces the
-    * schema-inference job of a plain `spark.read.parquet`. Every field
-    * is nullable, as inference gives it; a path without that footer
-    * key (not written by Spark) falls back to inference.
+  /** The schema of `path` (a file, or a directory's first `.parquet`
+    * file) from that ONE footer, on the driver, by Spark's own
+    * `readSchemaFromFooter`: Spark's row-metadata key if present, else
+    * the parquet schema converted as inference does under the session
+    * conf (`nanosAsLong`, `inferTimestampNTZ`, binary-as-string), all
+    * nullable. A path with no `.parquet` file goes to inference, so
+    * Spark raises its own error there.
     */
   def parquetSchema(spark: SparkSession, path: String): StructType = {
     val p = new HPath(path)
@@ -80,17 +82,17 @@ object Sinks {
       if (!st.isDirectory) Some(p)
       else fs.listStatus(p).map(_.getPath).filter(_.getName.endsWith(".parquet")).sortBy(_.getName).headOption
     }
-    def nullable(t: DataType): DataType = t match {
-      case s: StructType => StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
-      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
-      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
-      case other => other
-    }
-    file.flatMap(f => Option(footer(spark, f).getFileMetaData.getKeyValueMetaData
-        .get("org.apache.spark.sql.parquet.row.metadata")))
-      .map(json => nullable(DataType.fromJson(json)).asInstanceOf[StructType])
-      .getOrElse(spark.read.parquet(path).schema)
+    file.map { f =>
+      val conf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+      ParquetFileFormat.readSchemaFromFooter(new Footer(f, footer(spark, f)),
+        new ParquetToSparkSchemaConverter(conf)).toNullable
+    }.getOrElse(spark.read.parquet(path).schema)
   }
+
+  /** The one parquet reader: `paths` with the first one's footer
+    * schema ([[parquetSchema]]), so the read runs no job. */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.schema(parquetSchema(spark, paths.head)).parquet(paths: _*)
 
   /** Embedded Derby — the one JDBC engine whose driver ships in
     * /opt/spark/jars; the integration-test target for the SQLite-shaped
@@ -143,7 +145,8 @@ object Sinks {
     * whole corpus for a batch-sized question. Write this once, append
     * each batch's admitted fingerprints (`SaveMode.Append`), and each
     * increment's cost is O(batch + index scan), never O(corpus).
-    * Read path: [[graft.queries.TextOps.dedupIncrAgainst]].
+    * Read it back with [[readParquet]]; the read path is
+    * [[graft.queries.TextOps.dedupIncrAgainst]].
     */
   def writeFpIndex(
       corpus: DataFrame, out: String,
@@ -151,9 +154,6 @@ object Sinks {
     corpus.select(graft.queries.TextOps.normalizedFp(col("text")).as("fp"))
       .filter(col("fp").isNotNull).distinct()
       .write.mode(mode).parquet(out)
-
-  def readFpIndex(spark: SparkSession, path: String): DataFrame =
-    readModel(spark, path)
 
   /** Persist a trained model table — the train-once side of a
     * train-once/apply-often split: a BPE merge table
@@ -163,15 +163,10 @@ object Sinks {
     * segments without re-running EM), or a DSIR bucket model
     * ([[graft.queries.SampleOps.dsirModel]]; scored by
     * [[graft.streaming.StreamingOps.streamingDsirScore]]). A model is
-    * small, so it is one parquet file; read it back with [[readModel]].
+    * small, so it is one parquet file; read it back with [[readParquet]].
     */
   def writeModel(model: DataFrame, out: String): Unit =
     model.coalesce(1).write.mode(SaveMode.Overwrite).parquet(out)
-
-  /** A table this object wrote, read with its footer schema
-    * ([[parquetSchema]]): no schema-inference job. */
-  def readModel(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(parquetSchema(spark, path)).parquet(path)
 
   /** The reference's full `.db` contract: repositories / logs /
     * changed_files written into one embedded database
@@ -315,7 +310,7 @@ object Sinks {
     * `readSnapshot(spark, dir, v)` for any version whose manifest
     * survives. Only manifest-named files are opened; uncommitted
     * data directories are never visible. The schema is the first
-    * named file's footer ([[parquetSchema]]), so the read runs no job.
+    * named file's footer ([[readParquet]]), so the read runs no job.
     */
   def readSnapshot(spark: SparkSession, dir: String,
                    version: Long = -1L): DataFrame = {
@@ -324,7 +319,6 @@ object Sinks {
     val v = if (version < 0) versions.last else version
     require(versions.contains(v),
       s"version $v not committed at $dir (have ${versions.mkString(",")})")
-    val files = manifestFiles(dir, v)
-    spark.read.schema(parquetSchema(spark, files.head)).parquet(files: _*)
+    readParquet(spark, manifestFiles(dir, v): _*)
   }
 }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.execution.SparkPlan
   * from whole-stage codegen (q_sim_ivf's E-step silently ran
   * interpreted, ~5× slower).
   *
-  * The audit plans with `spark.graft.ckptCapture=true` (round 12,
+  * The audit plans inside [[graft.plans.Ckpt.capturing]] (round 12,
   * ADVICE r11): every query-side `localCheckpoint` routes through
   * [[graft.plans.Ckpt.maybe]], and the eager checkpoint truncates
   * the audited tree to a LogicalRDD — the round-11 rules were blind
@@ -131,8 +131,8 @@ object PlanAudit {
     * making an executedPlan-based scan vacuous for nearly every real
     * query. (The CartesianProduct check uses the same plan for
     * consistency; AQE never introduces a cartesian product that the
-    * static plan lacks.) Runs with `spark.graft.ckptCapture=true`
-    * (restored after): rules scan the final plan plus every
+    * static plan lacks.) Runs inside [[graft.plans.Ckpt.capturing]],
+    * which writes no session conf: rules scan the final plan plus every
     * pre-checkpoint segment captured during the query's construction,
     * so checkpoint lineage truncation cannot hide a subtree. NOT
     * execution-free — eager checkpoints and constructor collects run
@@ -141,10 +141,8 @@ object PlanAudit {
     * (main() sets it; the spec sets and restores it).
     */
   def auditPlans(spark: SparkSession, sfDir: String): Audit = {
-    val saved = spark.conf.getOption("spark.graft.ckptCapture")
-    spark.conf.set("spark.graft.ckptCapture", "true")
-    try {
-      val per = graft.SparkEntry.keys.map { case graft.SparkEntry.Key(name, run, _) =>
+    val per = graft.plans.Ckpt.capturing {
+      graft.SparkEntry.keys.map { case graft.SparkEntry.Key(name, run, _) =>
         graft.plans.Ckpt.drainCaptured() // drop stale segments
         val plan = run(spark, sfDir).queryExecution.sparkPlan
         val segs = plan +: graft.plans.Ckpt.drainCaptured()
@@ -153,20 +151,15 @@ object PlanAudit {
           segs.flatMap(fallbackClassesOf).toSet,
           segs.map(unpartitionedWindows).sum)
       }
-      Audit(
-        per.collect { case (n, true, _, _) => n },
-        per.collect { case (n, _, fb, _) if fb.nonEmpty => n -> fb }.toMap,
-        per.collect {
-          case (n, _, _, w)
-              if w > globalWindowAllowlist.get(n).map(_._1).getOrElse(0) => n
-        },
-        per.collect { case (n, _, _, w) if w > 0 => n -> w }.toMap)
-    } finally {
-      saved match {
-        case Some(v) => spark.conf.set("spark.graft.ckptCapture", v)
-        case None => spark.conf.unset("spark.graft.ckptCapture")
-      }
     }
+    Audit(
+      per.collect { case (n, true, _, _) => n },
+      per.collect { case (n, _, fb, _) if fb.nonEmpty => n -> fb }.toMap,
+      per.collect {
+        case (n, _, _, w)
+            if w > globalWindowAllowlist.get(n).map(_._1).getOrElse(0) => n
+      },
+      per.collect { case (n, _, _, w) if w > 0 => n -> w }.toMap)
   }
 
   /** Names of queries whose physical plan contains a CartesianProduct

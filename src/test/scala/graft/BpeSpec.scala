@@ -135,7 +135,7 @@ class BpeSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("bpe_merges").toString
     val trained = graft.queries.BpeOps.q_bpe_train(spark, TestSpark.sf)
     graft.sources.Sinks.writeModel(trained, s"$dir/merges")
-    val persisted = graft.sources.Sinks.readModel(spark, s"$dir/merges")
+    val persisted = graft.sources.Sinks.readParquet(spark, s"$dir/merges")
     val viaTable = graft.queries.BpeOps.encodeWith(spark, TestSpark.sf, persisted)
       .collect().toSeq
     val composed = SparkEntry.queries("q_bpe_encode")(spark, TestSpark.sf)
@@ -202,7 +202,7 @@ class BpeSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("fert_merges").toString
     val trained = graft.queries.BpeOps.q_bpe_train(spark, TestSpark.sf)
     graft.sources.Sinks.writeModel(trained, s"$dir/merges")
-    val persisted = graft.sources.Sinks.readModel(spark, s"$dir/merges")
+    val persisted = graft.sources.Sinks.readParquet(spark, s"$dir/merges")
     val viaTable = graft.queries.BpeOps.fertilityWith(spark, TestSpark.sf, persisted)
       .collect().toSeq
     val composed = SparkEntry.queries("q_tok_fertility")(spark, TestSpark.sf)

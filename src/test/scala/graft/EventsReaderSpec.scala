@@ -52,6 +52,38 @@ class EventsReaderSpec extends AnyFunSuite {
     assert(readMicros(dir) === micros)
   }
 
+  test("TIMESTAMP(NANOS) parquet without Spark metadata (rounds 1-6) rebuilds identical micros") {
+    // written by parquet-mr itself, as pyarrow wrote the old testdata:
+    // the footer has no Spark schema key, so the reader converts the
+    // parquet type, and only the session's nanosAsLong (set by
+    // Sessions.local, not by Tables) makes the column readable
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    val dir = writeDir("events-nanos-parquet")
+    val schema = MessageTypeParser.parseMessageType(
+      """message schema {
+        |  optional int64 event_id;
+        |  optional int64 ts (TIMESTAMP(NANOS,false));
+        |  optional int64 user_id;
+        |  optional binary event_type (STRING);
+        |  optional double value;
+        |  optional binary props (STRING);
+        |}""".stripMargin)
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
+    val groups = new SimpleGroupFactory(schema)
+    try baseRows((us, _) => us * 1000L).foreach { r =>
+      writer.write(groups.newGroup().append("event_id", r.getLong(0)).append("ts", r.getLong(1))
+        .append("user_id", r.getLong(2)).append("event_type", r.getString(3))
+        .append("value", r.getDouble(4)).append("props", r.getString(5)))
+    } finally writer.close()
+    assert(graft.sources.Sinks.parquetSchema(spark, s"$dir/events.parquet")("ts").dataType === LongType)
+    assert(readMicros(dir) === micros)
+  }
+
   test("timestamp[us] NTZ era (round 7+ regenerated testdata) passes through identical micros") {
     val dir = writeDir("events-ntz")
     writeEvents(dir, TimestampNTZType,

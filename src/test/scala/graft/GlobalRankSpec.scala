@@ -122,13 +122,11 @@ class GlobalRankSpec extends AnyFunSuite {
       "unbounded-fact window wrongly accepted via the dim side's limit")
   }
 
-  /** Runs `body` under `spark.graft.ckptCapture=true` and returns the
+  /** Runs `body` inside the capture scope and returns the
     * pre-checkpoint plan segments its checkpoints captured. */
   private def captured(body: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
     graft.plans.Ckpt.drainCaptured()
-    spark.conf.set("spark.graft.ckptCapture", "true")
-    try body
-    finally spark.conf.unset("spark.graft.ckptCapture")
+    graft.plans.Ckpt.capturing(body)
     graft.plans.Ckpt.drainCaptured()
   }
 
@@ -168,7 +166,7 @@ class GlobalRankSpec extends AnyFunSuite {
     }
   }
 
-  test("audit hook: ckptCapture exposes the plan beneath GlobalRank") {
+  test("audit hook: the capture scope exposes the plan beneath GlobalRank") {
     import org.apache.spark.sql.expressions.Window
     // a scale-killer UPSTREAM of the rank: running sum over an
     // unpartitioned window feeding globalRowNumber

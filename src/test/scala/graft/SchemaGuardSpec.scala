@@ -14,13 +14,15 @@ import org.scalatest.funsuite.AnyFunSuite
 class SchemaGuardSpec extends AnyFunSuite {
   import TestSpark._
 
+  private def loader(name: String) = name match {
+    case "events"     => Tables.events(spark, sf)
+    case "documents"  => Tables.documents(spark, sf)
+    case "embeddings" => Tables.embeddings(spark, sf)
+    case t            => Tables.table(spark, sf, t)
+  }
+
   private def fields(name: String): Map[String, DataType] =
-    (name match {
-      case "events"     => Tables.events(spark, sf)
-      case "documents"  => Tables.documents(spark, sf)
-      case "embeddings" => Tables.embeddings(spark, sf)
-      case t            => Tables.table(spark, sf, t)
-    }).schema.fields.map(f => f.name -> f.dataType).toMap
+    loader(name).schema.fields.map(f => f.name -> f.dataType).toMap
 
   test("events normalizes to the contract schema under any physical era") {
     val f = fields("events")
@@ -63,5 +65,30 @@ class SchemaGuardSpec extends AnyFunSuite {
     // implicit widening in joins, so pin the current width
     assert(fields("nation")("n_nationkey") === IntegerType)
     assert(fields("region")("r_regionkey") === IntegerType)
+  }
+
+  test("every loader's footer schema equals the inferred one after the era adaptations") {
+    // the testdata is pyarrow-written: no Spark row metadata in any
+    // footer, so this is the parquet-schema conversion path
+    def adapted(name: String, t: StructType) = StructType(t.fields.map { f =>
+      (name, f.name) match {
+        case ("events", "ts") => f.copy(dataType = TimestampType)
+        case ("embeddings", "embedding") => f.copy(dataType = ArrayType(FloatType))
+        case _ => f
+      }
+    })
+    for (name <- Seq("region", "nation", "customer", "supplier", "part",
+        "orders", "lineitem", "events", "documents", "embeddings")) {
+      val inferred = spark.read.parquet(s"$sf/$name.parquet").schema
+      assert(Tables.table(spark, sf, name).schema === inferred, name)
+      assert(loader(name).schema === adapted(name, inferred), name)
+    }
+  }
+
+  test("constructing a query that only reads tables runs no job") {
+    for (key <- Seq("q_agg_hash", "q_join_inner", "q_sample_hash", "q_sketch_kmv", "q_window_rank")) {
+      val (_, jobs) = JobCount(spark)(SparkEntry.queries(key)(spark, sf))
+      assert(jobs == 0, s"$key ran $jobs jobs while constructed")
+    }
   }
 }

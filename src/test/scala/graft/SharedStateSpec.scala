@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The SharedState artifact cache's contract is audit-critical: a
-  * cache hit under `spark.graft.ckptCapture` would leave PlanAudit
+  * cache hit inside the capture scope (`Ckpt.capturing`) would leave PlanAudit
   * blind to the shared subtree for every consumer after the first.
   * Pin the bypass, the hit path, and the test-reset hook
   * (ConcurrencySpec pins the one-build-per-key contract).
@@ -25,16 +25,15 @@ class SharedStateSpec extends AnyFunSuite {
     assert(!(c eq a), "different name must build its own artifact")
   }
 
-  test("ckptCapture bypasses the cache (audit axis)") {
+  test("the capture scope bypasses the cache (audit axis)") {
     graft.plans.SharedState.reset()
     val warm = graft.plans.SharedState.cached(spark, "spec.x", "/d")(build("warm"))
-    spark.conf.set("spark.graft.ckptCapture", "true")
-    try {
+    graft.plans.Ckpt.capturing {
       val fresh = graft.plans.SharedState.cached(spark, "spec.x", "/d")(build("f"))
-      assert(!(fresh eq warm), "cache hit under the audit axis")
+      assert(!(fresh eq warm), "cache hit inside the capture scope")
       val fresh2 = graft.plans.SharedState.cached(spark, "spec.x", "/d")(build("f2"))
-      assert(!(fresh2 eq fresh), "memoized under the audit axis")
-    } finally spark.conf.unset("spark.graft.ckptCapture")
+      assert(!(fresh2 eq fresh), "memoized inside the capture scope")
+    }
     // the warm entry is untouched by the bypassed calls
     val again = graft.plans.SharedState.cached(spark, "spec.x", "/d")(build("z"))
     assert(again eq warm, "bypass must not evict or replace cached entries")

@@ -73,8 +73,8 @@ class SinksSpec extends AnyFunSuite {
     val existing = Tables.documents(spark, d).filter(col("source") === "src0")
     Sinks.writeFpIndex(existing, tmp)
     // the read takes the footer schema: the inferred one, and no job
-    val (idx, readJobs) = JobCount(spark)(Sinks.readFpIndex(spark, tmp))
-    assert(readJobs == 0, s"readFpIndex ran $readJobs jobs")
+    val (idx, readJobs) = JobCount(spark)(Sinks.readParquet(spark, tmp))
+    assert(readJobs == 0, s"readParquet ran $readJobs jobs")
     assert(idx.schema == spark.read.parquet(tmp).schema)
     // round-trip: the index IS the distinct non-null fp set
     assert(idx.columns.toSeq == Seq("fp"))
@@ -92,7 +92,7 @@ class SinksSpec extends AnyFunSuite {
     Sinks.writeFpIndex(
       Tables.documents(spark, d).filter(col("source") =!= "src0"),
       tmp, org.apache.spark.sql.SaveMode.Append)
-    assert(Sinks.readFpIndex(spark, tmp).count() >= expectedFps)
+    assert(Sinks.readParquet(spark, tmp).count() >= expectedFps)
   }
 
   test("salted join equals plain join on a skewed key") {

@@ -57,7 +57,7 @@ class StreamingSpec extends AnyFunSuite {
     val tmpIdx = java.nio.file.Files.createTempDirectory("sidx").resolve("fp").toString
     graft.sources.Sinks.writeFpIndex(
       Seq((0L, known)).toDF("doc_id", "text"), tmpIdx)
-    val index = graft.sources.Sinks.readFpIndex(spark, tmpIdx)
+    val index = graft.sources.Sinks.readParquet(spark, tmpIdx)
     val input = MemoryStream[Doc]
     input.addData(
       Doc(ts("2024-01-01 10:00:00"), 1L, "en", known),                 // blocked by index
@@ -250,7 +250,7 @@ class StreamingSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("dsirm").resolve("m").toString
     graft.sources.Sinks.writeModel(
       graft.queries.SampleOps.dsirModel(spark, TestSpark.sf), tmp)
-    val model = graft.sources.Sinks.readModel(spark, tmp)
+    val model = graft.sources.Sinks.readParquet(spark, tmp)
     val docs = Tables.documents(spark, TestSpark.sf)
       .select("doc_id", "lang", "text").collect()
       .map(r => Doc(ts("2024-01-01 10:00:00"), r.getAs[Long]("doc_id"),

@@ -166,7 +166,7 @@ class UnigramSpec extends AnyFunSuite {
     val trained = graft.queries.UnigramOps.q_unigram_train(spark, fixtureDir)
     graft.sources.Sinks.writeModel(
       trained.select("piece", "score_fp"), s"$tmp/unigram_model.parquet")
-    val model = graft.sources.Sinks.readModel(
+    val model = graft.sources.Sinks.readParquet(
       spark, s"$tmp/unigram_model.parquet")
     val viaModel = graft.queries.UnigramOps.encodeWithModel(spark, fixtureDir, model)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
